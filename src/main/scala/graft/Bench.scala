@@ -1,44 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE inside persisted subplans (off by default): without it every
-      // persist() materializes its exchanges at the raw shuffle.partitions
-      // width — the iterative operators (closures, CC, trainers) cache per
-      // round and were paying hundreds of near-empty tasks per query
-      // (q_tree_rollup: 2825 tasks at sf0.1). Scale-independent: this only
-      // lets AQE size cached-plan shuffles like it already sizes uncached
-      // ones.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
     // Warm the JVM/codegen/parquet-reader paths once so the first measured
     // query doesn't absorb ~4s of one-time startup cost. Best-effort: a
     // broken sf dir should still fall through to the per-query try/catch.
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => () }
-    // Then compile every query's plan shapes once against the smallest
-    // fixture (janino codegen + JIT, driver-side planning): measured runs
-    // then reflect steady-state data throughput, not one-time compilation.
-    // Skipped when the tiny fixture is absent or SPARK_GRAFT_NOWARM is set.
     // Min-of-2 by default: single-shot timings on a shared host swing 2-4x
     // on unlucky queries (observed: a 0.6s scan-only query reading 4.0s in
     // one run). The cache is cleared BETWEEN reps, so every rep does the
@@ -46,17 +16,7 @@ object Bench {
     // SPARK_GRAFT_REPS overrides.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val selected = SparkEntry.selectedQueries
-    val warmDir = "/root/testdata/sf0.001"
-    def canon(p: String) = try new java.io.File(p).getCanonicalPath
-      catch { case _: Throwable => p }
-    if (!sys.env.contains("SPARK_GRAFT_NOWARM") &&
-        new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir)) {
-      selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    SparkEntry.warm(spark, selected, sfDir)
     // Reps are INTERLEAVED, not consecutive: sweep every query once, then
     // repeat the whole sweep, and take the per-query min ACROSS sweeps. A
     // sustained host-contention window (minutes long) then lands on one
@@ -65,6 +25,9 @@ object Bench {
     // identity. (Consecutive min-of-2 only defends against point spikes.)
     val names = selected.keys.toSeq
     val best = scala.collection.mutable.Map.empty[String, Double]
+    // A query that throws in any sweep is named under "failed", kept out
+    // of best/total and skipped in later sweeps; the run then exits 1.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // Per-sweep wall-clock stamps: when a round's numbers drift uniformly,
     // these let the reader attribute it to a host-contention window (one
     // slow sweep, one normal) instead of re-litigating per-query deltas.
@@ -72,28 +35,23 @@ object Bench {
       s"""{"metric":"sweep","event":"$tag","epoch_ms":${System.currentTimeMillis()}}""")
     for (rep <- 1 to reps) {
       stamp(s"start_$rep")
-      for (name <- names) {
-        val fn = selected(name)
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Cleared after EVERY measurement, for two reasons: a later sweep
-        // must not reuse an earlier sweep's persisted blocks (min-of-reps
-        // would then measure warm-cache work, overstating throughput), and
-        // persist-heavy queries must not evict a neighbor's blocks under
-        // storage pressure mid-measurement. The RDD sweep additionally
-        // frees localCheckpoint blocks (invisible to the cacheManager) so
-        // iterative queries don't accumulate |V|-row block sets per sweep.
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        best(name) = best.get(name).fold(dt)(math.min(_, dt))
-      }
+      for (name <- names if !failed(name))
+        SparkEntry.timed(spark, selected(name), sfDir) match {
+          case Right(dt) => best(name) = best.get(name).fold(dt)(math.min(_, dt))
+          case Left(e) =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            failed += name; best -= name
+        }
       stamp(s"end_$rep")
     }
     def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = names.map(k => s"\"" + k + "\":" + fmt(best(k))).mkString("{", ",", "}")
+    val qs = names.filter(best.contains).map(k => s"\"" + k + "\":" + fmt(best(k)))
+      .mkString("{", ",", "}")
     val total = if (best.nonEmpty) best.values.sum else 0.0
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    // present only when something failed: a green run's lines are unchanged
+    val failedKey = if (failed.isEmpty) ""
+      else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$failedKey,"sf":"$sfDir"}"""
     // Full per-query detail: one line on stdout AND a file, for humans and
     // local tooling.
     println(full)
@@ -117,6 +75,7 @@ object Bench {
     // per-query map stay visible from the artifact alone.
     val slowest = best.toSeq.sortBy { case (k, v) => (-v, k) }.take(20)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${best.size},"slowest":$slowest,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${best.size},"slowest":$slowest$failedKey,"sf":"$sfDir"}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

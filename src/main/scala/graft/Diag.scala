@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -7,41 +7,24 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
  * Optimization-round diagnostic harness (guide §1): per declared query,
  * wall time (min of SPARK_GRAFT_REPS, default 2), Spark job/stage/task
  * counts and total shuffle read/write bytes from a listener, plus
- * `.explain("formatted")` dumped to a file. Same session shape and timed
- * action as graft.Bench (count on the query frame, cache cleared between
- * measurements) so numbers are comparable with the bench board. Never
- * run by the driver; local tooling only.
+ * `.explain("formatted")` dumped to a file. Same session, warm-up and
+ * timed run as graft.Bench (SparkEntry's board loop), so numbers are
+ * comparable with the bench board. A query that throws is named under
+ * "failed" and the run exits 1. Never run by the driver; local tooling
+ * only.
  *
  * Usage: tools/run.sh graft.Diag <outDir> [suffix]
  *   SPARK_GRAFT_ONLY selects queries; suffix names the plan files
- *   (<outDir>/<query>_<suffix>.txt, default "before").
+ *   (<outDir>/<query>_<suffix>.txt, default "before"). Two dumps compare
+ *   with tools/plandiff.py.
  */
 object Diag {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "plans/r17"
     val suffix = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE for persisted subplans — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-diag")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val shR = new AtomicLong; val shW = new AtomicLong
@@ -81,20 +64,9 @@ object Diag {
     })
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.selectedQueries
-    // warm codegen/JIT on the tiny fixture, as Bench does
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    def clear(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    val rows = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    SparkEntry.warm(spark, selected, sfDir)
+    val failed = Seq.newBuilder[String]
+    val rows = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
       // plan dump (pre-execution; AQE initial plan)
       try {
@@ -105,34 +77,44 @@ object Diag {
       } catch { case e: Throwable =>
         System.err.println(s"[diag] explain $name failed: ${e.getMessage}")
       }
-      clear()
+      SparkEntry.clear(spark)
       var best = Double.MaxValue
+      var err: Option[Throwable] = None
       var (bj, bs, bt, br, bw, bsp) = (0, 0, 0, 0L, 0L, 0L)
-      for (rep <- 1 to reps) {
+      for (rep <- 1 to reps if err.isEmpty) {
         jobs.set(0); stages.set(0); tasks.set(0)
         shR.set(0); shW.set(0); spillD.set(0)
         if (jobLogEnv) { println(s"  -- $name rep $rep"); jobLog.set(true) }
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val r = SparkEntry.timed(spark, fn, sfDir)
         jobLog.set(false)
-        clear()
-        // listener events are async; give the bus a moment on first use
-        Thread.sleep(30)
-        if (dt < best) {
-          best = dt
-          bj = jobs.get; bs = stages.get; bt = tasks.get
-          br = shR.get; bw = shW.get; bsp = spillD.get
+        // listener events are async: drain the bus before reading counters
+        GraftListenerBridge.waitForListeners(spark.sparkContext)
+        r match {
+          case Left(e) => err = Some(e)
+          case Right(dt) => if (dt < best) {
+            best = dt
+            bj = jobs.get; bs = stages.get; bt = tasks.get
+            br = shR.get; bw = shW.get; bsp = spillD.get
+          }
         }
       }
-      val line = f"$name%-28s ${best}%8.3f s  jobs=$bj%-3d stages=$bs%-3d " +
-        f"tasks=$bt%-5d shufR=${br / 1024}%8d KiB shufW=${bw / 1024}%8d KiB " +
-        f"spill=${bsp / 1024}%d KiB"
-      println(line)
-      (name, best, bj, bs, bt, br, bw)
+      err match {
+        case Some(e) =>
+          println(f"$name%-28s FAILED: ${e.getMessage}")
+          failed += name
+          None
+        case None =>
+          println(f"$name%-28s ${best}%8.3f s  jobs=$bj%-3d stages=$bs%-3d " +
+            f"tasks=$bt%-5d shufR=${br / 1024}%8d KiB shufW=${bw / 1024}%8d KiB " +
+            f"spill=${bsp / 1024}%d KiB")
+          Some((name, best, bj, bs, bt, br, bw))
+      }
     }
     val total = rows.map(_._2).sum
     println(f"TOTAL ${total}%.3f s over ${rows.size} queries")
+    val failedNames = failed.result()
+    if (failedNames.nonEmpty)
+      println(failedNames.map("\"" + _ + "\"").mkString("""{"failed":[""", ",", "]}"))
     // machine-readable summary for diffing
     val pw = new java.io.PrintWriter(s"$outDir/diag_$suffix.tsv")
     try {
@@ -142,5 +124,6 @@ object Diag {
       }
     } finally pw.close()
     spark.stop()
+    if (failedNames.nonEmpty) sys.exit(1)
   }
 }

@@ -16,7 +16,7 @@ object SparkEntry {
     graft.queries.Core.oracles ++ graft.queries.Relational.oracles ++
       graft.queries.Events.oracles ++ graft.queries.Pipeline.oracles ++
       graft.queries.Privacy.oracles
-  /** Local-iteration subset filter shared by Verify and Bench:
+  /** Local-iteration subset filter shared by Verify, Bench and Diag:
     * SPARK_GRAFT_ONLY="q_a, q_b" selects just those queries (whitespace
     * tolerated). The driver never sets it, so its runs stay exhaustive. */
   def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
@@ -26,4 +26,51 @@ object SparkEntry {
         queries.filter { case (k, _) => set(k) }
       case None => queries
     }
+
+  // ------------------------------------------------ the board loop
+  // Shared by Bench, Diag and Verify: one clear, one warm-up, one timed run.
+
+  /** Frees every cached block after a query: a later run must not reuse
+    * an earlier run's persisted blocks (min-of-reps would then measure
+    * warm-cache work), and persist-heavy queries must not evict a
+    * neighbor's blocks mid-measurement. `clearCache` frees the
+    * cacheManager's persists; the RDD sweep frees the blocks it cannot
+    * see — localCheckpoint'ed frames of the iterative operators. */
+  def clear(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  /** Warms codegen, the JIT and planning before a timed board: every
+    * query once against the smallest fixture, so measured runs reflect
+    * steady-state work, not one-time compilation. Skipped when the tiny
+    * fixture is absent or is `sfDir` itself, or SPARK_GRAFT_NOWARM is set.
+    * Best-effort: a broken query surfaces in its timed run, not here. */
+  def warm(spark: SparkSession,
+      selected: Map[String, (SparkSession, String) => DataFrame],
+      sfDir: String): Unit = {
+    val warmDir = "/root/testdata/sf0.001"
+    def canon(p: String) = try new java.io.File(p).getCanonicalPath
+      catch { case _: Throwable => p }
+    if (!sys.env.contains("SPARK_GRAFT_NOWARM") &&
+        new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir)) {
+      selected.foreach { case (_, fn) =>
+        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      }
+      clear(spark)
+    }
+  }
+
+  /** One timed run: builds the query's frame and counts it, then clears
+    * the cache outside the timed region. The wall seconds, or the
+    * exception: a failed query has no duration, so no harness can record
+    * a crash as a fast query. */
+  def timed(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      sfDir: String): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val r = try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) }
+    clear(spark)
+    r
+  }
 }

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // AQE for persisted subplans — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.selectedQueries
     selected.foreach { case (name, fn) =>
@@ -35,12 +16,8 @@ object Verify {
       }
       // queries that persist an internal stage (q_tfidf's tokenize+tf,
       // the dedup signature stages) must not leak cached blocks into the
-      // ~100 queries that follow in this shared session. clearCache frees
-      // cacheManager-tracked persists; the second sweep frees RDD-level
-      // blocks it cannot see — localCheckpoint'ed frames (an iterative
-      // algorithm's final label table outlives its query otherwise).
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // ~100 queries that follow in this shared session
+      SparkEntry.clear(spark)
     }
     // JSON string escape (shared with ConfigIO's report writer): a tab or
     // CR in builder-authored SQL would otherwise make the driver's

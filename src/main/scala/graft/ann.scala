@@ -1187,35 +1187,38 @@ object Ann {
     "rotate-pca", "rotate-pca2", "rotate-auto", "probe-sample",
     "topk", "nprobe", "no-self-filter", "refine", "raw", "asym")
 
-  def main(args: Array[String]): Unit = {
+  private def opt(args: Array[String], name: String): Option[String] = {
+    val i = args.indexOf(s"--$name")
+    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
+  }
+
+  /** Rejects, before any session is built, an unknown flag, a missing
+    * mode, or a mode's missing path flag (named, as Anonymize does). */
+  private[graft] def checkArgs(args: Array[String]): Unit = {
+    def fail(msg: String) = throw new IllegalArgumentException(msg)
     val flags = args.filter(_.startsWith("--")).map(_.drop(2)).toSet
     val unknown = flags -- KnownFlags
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"unknown argument(s): ${unknown.map("--" + _).mkString(" ")}")
+    if (unknown.nonEmpty)
+      fail(s"unknown argument(s): ${unknown.map("--" + _).mkString(" ")}")
+    val required =
+      if (flags("build")) Seq("data" -> "<parquetDir>", "out" -> "<indexDir>")
+      else if (flags("search") || flags("append"))
+        Seq("index" -> "<indexDir>", "data" -> "<parquetDir>")
+      else fail("usage: graft.Ann --build|--search|--append ... (see scaladoc)")
+    required.foreach { case (name, what) =>
+      if (opt(args, name).isEmpty) fail(s"--$name $what required")
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    try checkArgs(args) catch { case e: IllegalArgumentException =>
+      System.err.println(e.getMessage)
       sys.exit(2)
     }
-    def opt(name: String): Option[String] = {
-      val i = args.indexOf(s"--$name")
-      if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-    }
+    val flags = args.filter(_.startsWith("--")).map(_.drop(2)).toSet
+    def opt(name: String): Option[String] = Ann.opt(args, name)
     def intOpt(name: String, dflt: Int) = opt(name).map(_.toInt).getOrElse(dflt)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // AQE for persisted subplans — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-ann")
     try {
       if (flags("build")) {
         val n = build(spark, opt("data").get, opt("out").get,
@@ -1240,14 +1243,10 @@ object Ann {
           selfFilter = !flags("no-self-filter"), refine = refine,
           asym = flags("asym"))
         println(s"""{"results":${res.count()}}""")
-      } else if (flags("append")) {
+      } else {
         val n = append(spark, opt("index").get, opt("data").get,
           opt("vec").getOrElse("embedding"))
         println(s"""{"appended":$n,"index":"${opt("index").get}"}""")
-      } else {
-        System.err.println(
-          "usage: graft.Ann --build|--search|--append ... (see scaladoc)")
-        sys.exit(2)
       }
     } finally spark.stop()
   }

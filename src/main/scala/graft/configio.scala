@@ -352,22 +352,7 @@ object Anonymize {
     "--rehearse", "--audit", "--validate")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-anonymize")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE for persisted subplans — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-anonymize")
     try run(spark, args) finally spark.stop()
   }
 
@@ -410,7 +395,6 @@ object Anonymize {
     new java.io.File(outDir).mkdirs()
     val configPath = opt("--config").getOrElse(s"$outDir/$ConfigFile")
 
-    spark.sparkContext.setLogLevel("WARN")
     val catalog = Tables.catalogFromDir(spark, dataDir)
     mode match {
         case "configGen" =>

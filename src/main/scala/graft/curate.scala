@@ -842,22 +842,7 @@ object Curate {
   private val boolFlags = Set("--configGen", "--run", "--audit")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-curate")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE for persisted subplans — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-curate")
     try cli(spark, args) finally spark.stop()
   }
 
@@ -885,7 +870,6 @@ object Curate {
     val outDir = opt("--out").getOrElse(".")
     new java.io.File(outDir).mkdirs()
     val configPath = opt("--config").getOrElse(s"$outDir/$ConfigFile")
-    spark.sparkContext.setLogLevel("WARN")
     modes.head match {
       case "--configGen" =>
         writeConfig(configPath, DefaultConfig)

@@ -151,30 +151,34 @@ object Prepare {
     Report(nDocs, nGated, nPacked, nOversize, nSeq, pad, nF, nW)
   }
 
+  /** Every flag the CLI accepts; each takes a value. */
+  private val Flags = Set("data", "out", "minTokens", "pieceLen", "wordLen",
+    "minCount", "keepPieces", "window", "shards", "capacity", "salt",
+    "order", "dim", "orderK")
+
+  /** Flag name → value, checked before any session is built. An unknown
+    * flag fails (the strict policy of Anonymize/Curate/Ann: `--minToken 5`
+    * must not quietly run with the default 20), and a missing --data or
+    * --out is named. */
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
+    val unknown = args.filter(_.startsWith("--")).filterNot(a => Flags(a.drop(2)))
+    if (unknown.nonEmpty)
+      sys.error(s"unknown argument(s): ${unknown.mkString(" ")}")
+    val opts = args.sliding(2).collect {
+      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+    }.toMap
+    if (!opts.contains("data")) sys.error("--data <parquetDir> required")
+    if (!opts.contains("out")) sys.error("--out <dir> required")
+    opts
+  }
+
   def main(args: Array[String]): Unit = {
-    def opt(name: String): Option[String] = {
-      val i = args.indexOf(s"--$name")
-      if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-    }
+    val opts = parseArgs(args)
+    def opt(name: String): Option[String] = opts.get(name)
     def intOpt(n: String, d: Int) = opt(n).map(_.toInt).getOrElse(d)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // AQE for persisted subplans — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Janino class cache (STATIC conf, default 100 entries): a session
-      // running hundreds of distinct query plans generates thousands of
-      // codegen fragments, so a 100-entry LRU recompiles nearly every
-      // fragment on every reuse (janino ~10-50 ms per fragment, pure
-      // driver time). 4096 keeps a full board's fragments resident;
-      // scale-independent (driver-side JVM cache, bounded by entry count).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-prepare")
     try {
-      val r = run(spark, opt("data").get, opt("out").get,
+      val r = run(spark, opts("data"), opts("out"),
         minTokens = intOpt("minTokens", 20),
         pieceLen = intOpt("pieceLen", 3), wordLen = intOpt("wordLen", 8),
         minCount = intOpt("minCount", 2).toLong,

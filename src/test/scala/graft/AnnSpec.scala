@@ -9,6 +9,20 @@ class AnnSpec extends SparkSpec {
   private def tmp(tag: String) =
     java.nio.file.Files.createTempDirectory(s"graft_ann_$tag").toString
 
+  test("Ann CLI: unknown flags, a missing mode and a missing path flag " +
+      "fail before any session is built, naming the flag") {
+    def msg(args: String*) =
+      intercept[IllegalArgumentException](Ann.checkArgs(args.toArray)).getMessage
+    assert(msg("--build", "--data", "d", "--out", "o", "--rotate-pca1") ==
+      "unknown argument(s): --rotate-pca1")
+    assert(msg("--data", "d").startsWith("usage: graft.Ann"))
+    assert(msg("--build", "--out", "o") == "--data <parquetDir> required")
+    assert(msg("--build", "--data", "d") == "--out <indexDir> required")
+    assert(msg("--search", "--data", "d") == "--index <indexDir> required")
+    assert(msg("--append", "--index", "i") == "--data <parquetDir> required")
+    Ann.checkArgs(Array("--search", "--index", "i", "--data", "d"))
+  }
+
   test("served results from the persisted index are bit-identical to the " +
       "fused ivfAdcTopK path, and the index holds codes, not vectors") {
     val data = "/root/testdata/sf0.001/embeddings.parquet"

@@ -11,6 +11,18 @@ class ContractSpec extends SparkSpec {
     * and ScalaTest owns their semantics. */
   private val rowsOnly = Set.empty[String]
 
+  test("board loop: a throwing query yields its failure and no duration") {
+    val dir = "/root/testdata/sf0.001"
+    val boom = new IllegalStateException("boom")
+    assert(SparkEntry.timed(spark, (_, _) => throw boom, dir) == Left(boom))
+    // a failure inside the timed count, not the frame build, is caught too
+    val late = SparkEntry.timed(spark,
+      (s, _) => s.range(3).toDF().filter("assert_true(id < 0) is null"), dir)
+    assert(late.isLeft)
+    assert(SparkEntry.timed(spark, (s, _) => s.range(3).toDF(), dir)
+      .exists(_ >= 0.0))
+  }
+
   test("every oracle key names a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")

@@ -5,6 +5,21 @@ import org.apache.spark.sql.functions._
 /** graft.Prepare CLI: artifacts written, funnel exact, order stable. */
 class PrepareSpec extends SparkSpec {
 
+  test("Prepare CLI: an unknown flag fails before any session is built") {
+    val e = intercept[RuntimeException](Prepare.parseArgs(
+      Array("--data", "d", "--out", "o", "--minToken", "5")))
+    assert(e.getMessage == "unknown argument(s): --minToken")
+    assert(Prepare.parseArgs(Array("--data", "d", "--out", "o",
+      "--minTokens", "5")) == Map("data" -> "d", "out" -> "o", "minTokens" -> "5"))
+  }
+
+  test("Prepare CLI: a missing --data or --out is named") {
+    assert(intercept[RuntimeException](Prepare.parseArgs(Array("--out", "o")))
+      .getMessage == "--data <parquetDir> required")
+    assert(intercept[RuntimeException](Prepare.parseArgs(Array("--data", "d")))
+      .getMessage == "--out <dir> required")
+  }
+
   test("Prepare.run writes model/assignments/sequences, the funnel " +
       "accounts for every doc, and the consumption order is a valid " +
       "shard interleave") {

@@ -302,8 +302,7 @@ class ScaleSpec extends SparkSpec {
       "the caller's action completes (full releaseAfterUse migration)") {
     import spark.implicits._
     def assertNoBlocks(label: String)(run: => Unit): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      SparkEntry.clear(spark)
       run
       org.apache.spark.GraftListenerBridge.waitForListeners(spark.sparkContext)
       val deadline = System.currentTimeMillis() + 10000
@@ -380,8 +379,7 @@ class ScaleSpec extends SparkSpec {
         Row(3L, Seq(0.1, 0.9))),
       StructType(Seq(StructField("vec_id", LongType),
         StructField("emb", ArrayType(DoubleType)))))
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    SparkEntry.clear(spark)
     val out = Dedup.semanticDedup(df, "vec_id", "emb",
       Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), 0.95)
     assert(out.count() == 2)

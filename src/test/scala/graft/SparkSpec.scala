@@ -3,16 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (UTC, small shuffle fan-out). */
+/** Shared local session for specs: the engine's own session, 2 cores wide. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session("graft-test", cores = 2)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch experiment (driver-side doubles, NOT the exact-integer
   * operator): does the Ge-et-al-style alternation — fixed first-8
   * codebook C-step, min-eigenvector-Householder R-step over
@@ -188,8 +186,7 @@ object OpqAlt {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val alts = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.Session("graft-opq-alt")
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.VectorOps
     import org.apache.spark.sql.functions._

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.functions.VectorOps
 import graft.operators.{Ivf, Opq, Pca, Pq, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -18,10 +18,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val nq = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-recall-probe")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
       .persist()
