@@ -211,8 +211,14 @@ object ConfigIO {
         m.map { case (k, x) => s"${render(k)}: ${render(x)}" }.mkString("{", ", ", "}")
       case other => String.valueOf(other)
     }
-    val preview = tables.map { case (name, df) =>
-      val rows = df.limit(sampleLimit).collect()
+    // the ≤sampleLimit-row previews are independent jobs: take them on the
+    // engine's job pool (results stay in table-name order)
+    val samples = Jobs.inParallel(tables) { case (name, df) =>
+      Jobs.named(df.sparkSession, s"ConfigIO.generateConfig $schema.$name") {
+        df.limit(sampleLimit).collect()
+      }
+    }
+    val preview = tables.zip(samples).map { case ((name, df), rows) =>
       val cols = df.schema.fields.toSeq.map { f =>
         val values = rows.toSeq.map(_.getAs[Any](f.name))
           .filter(_ != null).take(sampleLimit).map(render)

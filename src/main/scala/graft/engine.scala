@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{col, count, lit}
+
+import graft.operators.Scale
 
 /**
  * Plan execution (reference `src/executor/executor.ts:87-147`, re-expressed
@@ -12,7 +14,8 @@ import org.apache.spark.sql.functions.col
  *  - one `select` per table fuses every column transform into a single
  *    whole-stage-codegen pass (the reference's one-UPDATE-per-table fusion,
  *    `query-builder.ts:14-61`);
- *  - nothing is collected to the driver; dry-run is a distributed `count()`;
+ *  - nothing is collected to the driver; dry-run is a distributed `count()`,
+ *    apply observes its counts on the write, validation is one job;
  *  - a table whose plan leaves every column untouched is skipped entirely and
  *    reported with count 0 (`executor.ts:120-124`) — at 100 TB that skip is
  *    the difference between a metadata no-op and a full rewrite.
@@ -76,29 +79,6 @@ object Engine {
       s"planned table not found in catalog: ${pt.table}"))
 
   /**
-   * Per-table count/write jobs are independent, so submit them concurrently:
-   * the scheduler then pipelines tables instead of idling the cluster on
-   * each table's straggler tasks before starting the next. Spark job
-   * submission is thread-safe; results keep per-table identity via the map
-   * key, and a failure in any job surfaces with its original exception.
-   */
-  private lazy val jobPool = java.util.concurrent.Executors.newFixedThreadPool(
-    8, (r: Runnable) => { val t = new Thread(r, "graft-engine-job"); t.setDaemon(true); t })
-  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(jobPool)
-    // Each job is wrapped in Try so a failure does NOT fail the traverse
-    // early: every submitted job runs to completion before the first
-    // failure is rethrown (in item order). Fail-fast would return while
-    // sibling Spark jobs are still writing — callers that clean up after
-    // an error (dryRunRehearsed's finally-delete) would then race
-    // in-flight writers.
-    Await.result(Future.traverse(items)(a => Future(scala.util.Try(f(a)))),
-      Duration.Inf).map(_.get)
-  }
-
-  /**
    * Transform every planned table; catalog maps bare table name → DataFrame.
    * No-op tables are excluded (the caller reports them as 0 rows); a planned
    * table absent from the catalog throws, matching the reference's failing
@@ -119,29 +99,37 @@ object Engine {
    * reported as 0 (`executor.ts:120-124`).
    */
   def dryRun(plan: Plan, catalog: Map[String, DataFrame]): Map[String, Long] =
-    inParallel(plan.tables) { pt =>
+    Jobs.inParallel(plan.tables) { pt =>
       val df = dfFor(catalog, pt)
       if (isNoop(df, pt.columns)) pt.table -> 0L
-      else pt.table -> df.select(compileTable(df, pt.columns): _*).count()
+      else Jobs.named(df.sparkSession, s"Engine.dryRun ${pt.table}") {
+        pt.table -> df.select(compileTable(df, pt.columns): _*).count()
+      }
     }.toMap
 
   /**
    * Apply: write each transformed table as parquet under `outDir/<name>`.
-   * Row counts are read back from parquet footers (metadata-only scan) so the
-   * transform runs exactly once — no second pass over the data. No-op tables
-   * are not rewritten (reported 0, as the reference skips empty-SET tables).
+   * Each row count is observed on the write itself (an [[Observation]]
+   * riding the write's own job), so the transform runs exactly once and
+   * nothing is read back: one job per table. No-op tables are not
+   * rewritten (reported 0, as the reference skips empty-SET tables).
    */
   def apply(plan: Plan, catalog: Map[String, DataFrame], outDir: String): Map[String, Long] =
-    inParallel(plan.tables) { pt =>
+    Jobs.inParallel(plan.tables) { pt =>
       val df = dfFor(catalog, pt)
       if (isNoop(df, pt.columns)) pt.table -> 0L
-      else {
-        val out = df.select(compileTable(df, pt.columns): _*)
-        val path = s"$outDir/${pt.table.replace('.', '_')}"
-        out.write.mode("overwrite").parquet(path)
-        pt.table -> out.sparkSession.read.parquet(path).count()
+      else Jobs.named(df.sparkSession, s"Engine.apply ${pt.table}") {
+        val rows = Observation()
+        df.select(compileTable(df, pt.columns): _*)
+          .observe(rows, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(outPath(outDir, pt))
+        // read only after the write returned: the metrics are then complete
+        pt.table -> rows.get("n").asInstanceOf[Long]
       }
     }.toMap
+
+  private def outPath(outDir: String, pt: PlannedTable): String =
+    s"$outDir/${pt.table.replace('.', '_')}"
 
   /**
    * Rehearsed dry run: executes the FULL apply path — transform and write —
@@ -188,26 +176,49 @@ object Engine {
    * order-independent checksum (see [[graft.operators.Scale.tableChecksum]])
    * of the UNTOUCHED columns must match between source and output — the
    * transform may not corrupt what it was not asked to change. Throws on
-   * the first mismatch; returns per-table digests for the report. Two
-   * scans per table (source + written output), each reduced to one scalar
-   * row — nothing but digests reach the driver, so validating a 100 TB
-   * apply costs bandwidth, not memory.
+   * the first mismatch in plan order; returns per-table digests for the
+   * report. One job for all tables: every table's source and written
+   * output, each tagged `(table, side)`, are row-hashed in one union and
+   * reduced by one grouped sum (the checksum is additively mergeable), so
+   * nothing but two digests per table reach the driver — validating a
+   * 100 TB apply costs bandwidth, not memory. The outputs are read with
+   * schema inference (their footer jobs run concurrently): a dropped
+   * untouched column must fail to resolve, not read back as nulls.
    */
   def validateApply(plan: Plan, catalog: Map[String, DataFrame],
-      outDir: String): Map[String, String] =
-    inParallel(plan.tables.filter(pt => !isNoop(dfFor(catalog, pt), pt.columns))) { pt =>
-      val src = dfFor(catalog, pt)
-      val cols = untouchedColumns(src, pt.columns)
-      val out = src.sparkSession.read
-        .parquet(s"$outDir/${pt.table.replace('.', '_')}")
-      def digest(df: DataFrame): String =
-        graft.operators.Scale.tableChecksum(df, cols).head() match {
-          case r => s"${r.get(0)}:${r.getLong(1)}"
-        }
-      val (a, b) = (digest(src), digest(out))
+      outDir: String): Map[String, String] = {
+    val tables = plan.tables.map(pt => (pt, dfFor(catalog, pt)))
+      .filter { case (pt, src) => !isNoop(src, pt.columns) }
+    if (tables.isEmpty) return Map.empty
+    val spark = tables.head._2.sparkSession
+    val outs = Jobs.inParallel(tables) { case (pt, _) =>
+      Jobs.named(spark, s"Engine.validateApply ${pt.table}") {
+        spark.read.parquet(outPath(outDir, pt))
+      }
+    }
+    val untouched = tables.map { case (pt, src) => untouchedColumns(src, pt.columns) }
+    val hashed = tables.zip(outs).zip(untouched).flatMap { case (((pt, src), out), cols) =>
+      Seq("source" -> src, "output" -> out).map { case (side, df) =>
+        df.select(lit(pt.table).as("table"), lit(side).as("side"),
+          Scale.rowChecksum(cols).as("h"))
+      }
+    }
+    val rows = Jobs.named(spark, "Engine.validateApply") {
+      Scale.checksumBy(hashed.reduce(_ union _), Seq("table", "side"), col("h"))
+        .collect()
+    }
+    val digests = rows.map(r =>
+      (r.getString(0), r.getString(1)) -> s"${r.get(2)}:${r.getLong(3)}").toMap
+    // an empty side forms no group; tableChecksum's one global row over
+    // it renders its null sum as "null"
+    def digest(table: String, side: String) =
+      digests.getOrElse((table, side), "null:0")
+    tables.zip(untouched).map { case ((pt, _), cols) =>
+      val (a, b) = (digest(pt.table, "source"), digest(pt.table, "output"))
       if (a != b) throw new IllegalStateException(
         s"integrity check failed for ${pt.table}: untouched columns " +
           s"${cols.mkString(",")} changed ($a -> $b)")
       pt.table -> a
     }.toMap
+  }
 }

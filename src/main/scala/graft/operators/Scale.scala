@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.PortableHash
 
 /**
  * Scale-engineering operators: skew mitigation and co-located joins — the
@@ -477,30 +479,51 @@ object Scale {
 
   /**
    * Order-independent, engine-portable table checksum: per row, the 56-bit
-   * portable hash of the '|'-joined column renderings (NULL → a sentinel no
-   * value can produce), summed as decimal(38,0) — commutative, so ANY
-   * partitioning/ordering of the same rows gives the same digest, and any
-   * engine with md5 reproduces it. The migration/anonymization validation
-   * primitive: checksum source and copy (or pre/post-anonymization on the
-   * KEEP columns) and compare two scalars instead of shipping 100 TB twice.
+   * portable hash of the '|'-joined column renderings ([[rowChecksum]]),
+   * summed as decimal(38,0) — commutative, so ANY partitioning/ordering of
+   * the same rows gives the same digest, and any engine with md5
+   * reproduces it. The migration/anonymization validation primitive:
+   * checksum source and copy (or pre/post-anonymization on the KEEP
+   * columns) and compare two scalars instead of shipping 100 TB twice.
    * One scan + a partial-aggregating sum; nothing but the digest moves.
    * Additively mergeable like [[mergeCounts]]: checksum(A ∪ B) =
    * checksum(A) + checksum(B), so per-shard / per-day digests maintain a
    * corpus digest incrementally without rescanning history.
    */
-  def tableChecksum(df: DataFrame, cols: Seq[String]): DataFrame = {
+  def tableChecksum(df: DataFrame, cols: Seq[String]): DataFrame =
+    checksumBy(df, Nil, rowChecksum(cols))
+
+  /**
+   * The row hash [[tableChecksum]] sums: the first 14 hex digits of md5
+   * over an injective rendering of `cols`, as a long — computed by the
+   * codegen'd [[graft.functions.PortableHash]] kernel, bit-identical to
+   * the composed `conv(substring(md5(x), 1, 14), 16, 10)` (ScaleSpec pins
+   * it on nulls, unicode, doubles, timestamps and decimals).
+   */
+  def rowChecksum(cols: Seq[String]): Column = {
     // Injective row rendering: NULL -> "0"; value v -> "1" + len(v) + ":"
     // + v. The length prefix makes field boundaries unambiguous — without
     // it, ("a|1b","c") and ("a","b|1c") would concatenate identically and
     // a corruption that shifts bytes between adjacent columns would pass
-    // validation.
+    // validation. Written as coalesce, not CASE WHEN: a cast to string is
+    // null exactly when its input is, and an always-evaluated branch lets
+    // subexpression elimination render each value once, not twice.
     val rendered = cols.map { c =>
       val v = col(c).cast("string")
-      when(col(c).isNull, lit("0"))
-        .otherwise(concat(lit("1"), length(v).cast("string"), lit(":"), v))
+      coalesce(concat(lit("1"), length(v).cast("string"), lit(":"), v), lit("0"))
     }
-    val rowHash = conv(substring(md5(concat_ws("|", rendered: _*)), 1, 14), 16, 10)
-      .cast("decimal(38,0)")
+    GraftBridge.column(PortableHash(
+      GraftBridge.expression(concat_ws("|", rendered: _*)), 14))
+  }
+
+  /**
+   * Sums the row hash `rowHash` ([[rowChecksum]]) per group of `keys`
+   * (none: one row for the whole frame, also when it is empty) into
+   * `keys…, checksum, n_rows` — the digest format of [[tableChecksum]],
+   * so many tables' digests can come out of one job.
+   */
+  private[graft] def checksumBy(df: DataFrame, keys: Seq[String],
+      rowHash: Column): DataFrame =
     // The digest leaves the engine as a FIXED-WIDTH STRING: the decimal sum
     // exceeds int64 (2^56 per row × row count), the one numeric class whose
     // rendering diverges across engines' compare layers (exact Decimal vs
@@ -509,10 +532,12 @@ object Scale {
     // would silently drop low-order digits past ~10^13 rows — exactly the
     // collision a checksum exists to catch); zero-padding keeps string
     // order = numeric order. The sum itself stays decimal(38,0).
-    df.agg(sum(rowHash).as("__sum"), count(lit(1)).as("n_rows"))
-      .select(lpad(col("__sum").cast("string"), 38, "0").as("checksum"),
-        col("n_rows"))
-  }
+    df.groupBy(keys.map(col): _*)
+      .agg(sum(rowHash.cast("decimal(38,0)")).as("__sum"),
+        count(lit(1)).as("n_rows"))
+      .select(keys.map(col) ++ Seq(
+        lpad(col("__sum").cast("string"), 38, "0").as("checksum"),
+        col("n_rows")): _*)
 
   /**
    * Distributed column profile in long format: per column — non-null count,

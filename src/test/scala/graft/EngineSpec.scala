@@ -158,6 +158,79 @@ class EngineSpec extends SparkSpec {
     assertThrows[Exception](Engine.validateApply(plan, catalog, out))
   }
 
+  // two tables, both transformed: c hashes name, d redacts name
+  private def twoTables = Plan("t", Seq(
+    PlannedTable("public.c", "public", "c",
+      Seq(PlannedColumn("name", Strategy.HashSha256))),
+    PlannedTable("public.d", "public", "d",
+      Seq(PlannedColumn("name", Strategy.Redact)))))
+
+  private def overwrite(path: String,
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = s"$path-tmp"
+    f(spark.read.parquet(path)).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+  }
+
+  test("validateApply's one-job digests equal tableChecksum over each source's untouched columns") {
+    import org.apache.spark.sql.functions.col
+    val out = java.nio.file.Files.createTempDirectory("graft-validate2").toString
+    val catalog = Map("c" -> customers,
+      "d" -> customers.withColumn("id", col("id") + 10))
+    Engine.apply(twoTables, catalog, out)
+    val digests = Engine.validateApply(twoTables, catalog, out)
+    val want = twoTables.tables.map { pt =>
+      val src = catalog(pt.name)
+      val r = graft.operators.Scale.tableChecksum(src,
+        Engine.untouchedColumns(src, pt.columns)).head()
+      pt.table -> s"${r.get(0)}:${r.getLong(1)}"
+    }.toMap
+    assert(digests == want)
+    assert(digests("public.c") != digests("public.d"))
+  }
+
+  test("an empty source table: apply observes 0 rows and validateApply passes") {
+    val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val plan = Plan("t", Seq(PlannedTable("public.c", "public", "c",
+      Seq(PlannedColumn("name", Strategy.HashSha256)))))
+    // a local relation and an empty parquet scan
+    val local = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      customers.schema)
+    customers.limit(0).write.mode("overwrite").parquet(s"$out/src_empty")
+    for (empty <- Seq(local, spark.read.parquet(s"$out/src_empty"))) {
+      val catalog = Map("c" -> empty)
+      assert(Engine.apply(plan, catalog, out) == Map("public.c" -> 0L))
+      val r = graft.operators.Scale.tableChecksum(empty, Seq("id", "bal")).head()
+      assert(Engine.validateApply(plan, catalog, out) ==
+        Map("public.c" -> s"${r.get(0)}:${r.getLong(1)}"))
+    }
+  }
+
+  test("validateApply names the corrupted table when it is the second of two") {
+    import org.apache.spark.sql.functions.{col, when}
+    val out = java.nio.file.Files.createTempDirectory("graft-validate3").toString
+    val catalog = Map("c" -> customers, "d" -> customers)
+    Engine.apply(twoTables, catalog, out)
+    overwrite(s"$out/public_d",
+      _.withColumn("bal", when(col("id") === 2, 0.0).otherwise(col("bal"))))
+    val e = intercept[IllegalStateException](
+      Engine.validateApply(twoTables, catalog, out))
+    assert(e.getMessage.contains("integrity check failed for public.d"))
+    assert(!e.getMessage.contains("public.c"))
+  }
+
+  test("validateApply fails loudly when an output lost an untouched column") {
+    val out = java.nio.file.Files.createTempDirectory("graft-validate4").toString
+    val plan = Plan("t", Seq(PlannedTable("public.c", "public", "c",
+      Seq(PlannedColumn("name", Strategy.HashSha256)))))
+    val catalog = Map("c" -> customers)
+    Engine.apply(plan, catalog, out)
+    overwrite(s"$out/public_c", _.drop("bal"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Engine.validateApply(plan, catalog, out))
+    assert(e.getMessage.contains("bal"))
+  }
+
   test("CLI --audit writes a k-anonymity/l-diversity report over a table") {
     val out = java.nio.file.Files.createTempDirectory("graft-audit").toString
     Anonymize.run(spark, Array("--audit", "--data", "/root/testdata/sf0.001",

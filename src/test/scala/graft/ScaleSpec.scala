@@ -105,6 +105,43 @@ class ScaleSpec extends SparkSpec {
     assert(fast.distinct.length == fast.length)
   }
 
+  test("rowChecksum's PortableHash kernel equals the composed md5/conv form " +
+      "on nulls, unicode, doubles, timestamps and decimals") {
+    val schema = StructType(Seq(StructField("s", StringType),
+      StructField("d", DoubleType), StructField("ts", TimestampType),
+      StructField("m", DecimalType(18, 2)), StructField("n", LongType)))
+    val ts = java.sql.Timestamp.valueOf("2024-02-29 23:59:59.123456")
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row("plain", 1.5, ts, new java.math.BigDecimal("12.34"), 7L),
+      Row(null, null, null, null, null),
+      Row("héllo wörld ✓ 日本語 🚀", -0.0, ts, new java.math.BigDecimal("-0.01"), -1L),
+      Row("a|1b", Double.NaN, null, new java.math.BigDecimal("9999999999999999.99"), Long.MaxValue),
+      Row("", 1e300, new java.sql.Timestamp(0L), null, Long.MinValue),
+      Row("0", Double.NegativeInfinity, ts, new java.math.BigDecimal("0.00"), 0L)),
+      schema)
+    val cols = schema.fieldNames.toSeq
+    // the composed form (CASE WHEN rendering, md5/conv hash) tableChecksum
+    // summed before the kernel
+    val rendered = cols.map { c =>
+      val v = col(c).cast("string")
+      when(col(c).isNull, lit("0"))
+        .otherwise(concat(lit("1"), length(v).cast("string"), lit(":"), v))
+    }
+    val composed = conv(substring(md5(concat_ws("|", rendered: _*)), 1, 14), 16, 10)
+      .cast("long")
+    val rows = df.select(Scale.rowChecksum(cols).as("k"), composed.as("c"))
+      .collect()
+    assert(rows.length == 6)
+    rows.foreach(r => assert(!r.isNullAt(0) && r.getLong(0) == r.getLong(1)))
+    // every subset of the columns too (null-only and single-column rows)
+    for (c <- cols) {
+      val one = df.select(Scale.rowChecksum(Seq(c)).as("k"),
+        conv(substring(md5(concat_ws("|", rendered(cols.indexOf(c)))), 1, 14),
+          16, 10).cast("long").as("c")).collect()
+      one.foreach(r => assert(r.getLong(0) == r.getLong(1), s"column $c"))
+    }
+  }
+
   test("tableChecksum: partitioning-invariant, null-safe, change-sensitive") {
     import graft.operators.Scale
     import spark.implicits._

@@ -10,17 +10,19 @@ temp paths `local-1792290122337`) and prints the changed lines of the
 rest. It exits 1 on any differing plan or on a plan present in one dump
 only, else 0. Compare dumps taken with the same SPARK_GRAFT_CPUS and
 driver heap: the heap sets the memory page size that broadcast stages
-report. One difference is not normalized: Spark's rewrite of several
-DISTINCT aggregates orders its Expand groups by expression-id hashes, so
-such a query (q_agg_distinct, q_golden_record, q_profile) can differ
-between two runs of the same code; check it against a second baseline
-run.
+report. Spark's rewrite of several DISTINCT aggregates orders its Expand
+groups by expression-id hashes, so such a query (q_agg_distinct,
+q_golden_record, q_profile) would differ between two runs of the same
+code; the tool puts that Expand into a canonical order first (distinct
+groups sorted by column name, their `gid` numbers renumbered to match,
+and the same reordering applied to the lists after the Expand), so only
+a real plan change shows.
 
 Usage:
   tools/plandiff.py <dirA> <dirB>                 pair files by name
   tools/plandiff.py <dirA> <dirB> --suffix a,b    pair <q>_a.txt with <q>_b.txt
                                                   (dirA may equal dirB)
-  tools/plandiff.py --selftest                    check itself on plans/r18
+  tools/plandiff.py --selftest                    check itself on plans/r17, r18
 """
 import difflib
 import os
@@ -36,7 +38,104 @@ VOLATILE = [(re.compile(p), r) for p, r in (
 def normalize(text):
     for pat, repl in VOLATILE:
         text = pat.sub(repl, text)
-    return text.splitlines()
+    return canonical_expand(text.splitlines())
+
+
+def split_items(s):
+    """Top-level comma-separated items of `s` (brackets and parentheses
+    nest)."""
+    items, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif c == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+GID = "gid#N"
+GID_TEST = re.compile(r"gid#N = (\d+)")
+
+
+def distinct_expand(line):
+    """For the Arguments line of a distinct-aggregate Expand (projections
+    plus an output list holding `gid`), returns (projections, output, gid
+    position, distinct-column positions), else None."""
+    if not line.startswith("Arguments: [["):
+        return None
+    top = split_items(line[len("Arguments: "):])
+    if len(top) != 2:
+        return None
+    projs = [split_items(p[1:-1]) for p in split_items(top[0][1:-1])]
+    out = split_items(top[1][1:-1])
+    if GID not in out or any(len(p) != len(out) for p in projs):
+        return None
+    g = out.index(GID)
+    if not all(p[g].isdigit() for p in projs):
+        return None
+    cols = [i for i in range(g) if any(p[i] == "null" for p in projs)]
+    return projs, out, g, cols
+
+
+def canonical_expand(lines):
+    """Puts each distinct-aggregate Expand into one canonical order: its
+    distinct groups sorted by their column names, the `gid` literals
+    renumbered to that order, and the run of distinct columns reordered the
+    same way on the Expand line and on every later list that carries gid."""
+    found = {n: e for n, e in ((n, distinct_expand(l))
+                               for n, l in enumerate(lines)) if e}
+    for n, (projs, out, g, cols) in found.items():
+        group = {}  # distinct column position -> the gid that selects it
+        for p in projs:
+            for i in cols:
+                if p[i] != "null":
+                    group[i] = int(p[g])
+        names = {}
+        for i in cols:
+            names.setdefault(group.get(i, 0), []).append(out[i])
+        old_gids = sorted(names)
+        order = sorted(old_gids, key=lambda v: sorted(names[v]))
+        renum = dict(zip(order, old_gids))
+        perm = sorted(cols, key=lambda i: (order.index(group.get(i, 0)),
+                                           out[i], i))
+
+        def permute(items):
+            return [items[perm[cols.index(i)]] if i in cols else item
+                    for i, item in enumerate(items)]
+
+        new_projs = []
+        for p in projs:
+            q = permute(p)
+            q[g] = str(renum.get(int(p[g]), int(p[g])))
+            new_projs.append(q)
+        new_projs.sort(key=lambda q: int(q[g]))
+        lines[n] = "Arguments: [%s], [%s]" % (
+            ", ".join("[" + ", ".join(q) + "]" for q in new_projs),
+            ", ".join(permute(out)))
+        # the same run of columns on the later lists (Input, Keys, Results,
+        # hashpartitioning, sort orders), suffixes such as " ASC NULLS
+        # FIRST" travelling with their column
+        run = re.compile(r"(?<=[\[(, ])" + ", ".join(
+            re.escape(out[i]) + r"((?: [A-Z][A-Z ]*)?)" for i in cols)
+            + r"(?=[,\])])")
+        new_run = [cols.index(i) for i in perm]
+
+        def reorder(m):
+            return ", ".join(out[cols[k]] + m.group(k + 1) for k in new_run)
+        for k in range(n + 1, len(lines)):
+            if GID in lines[k] and k not in found:
+                lines[k] = run.sub(reorder, lines[k], count=1)
+        if len(found) == 1:  # several Expands may number their gids alike
+            lines[:] = [GID_TEST.sub(
+                lambda m: "gid#N = %d" % renum.get(int(m.group(1)),
+                                                   int(m.group(1))), l)
+                if GID in l and k != n else l
+                for k, l in enumerate(lines)]
+    return lines
 
 
 def diff(path_a, path_b):
@@ -79,15 +178,23 @@ def compare(dir_a, dir_b, suffixes=(None, None), out=print):
 
 def selftest():
     """The committed round-18 before/after pairs: two plans the round left
-    unchanged (modulo ids) and two it changed, with known diff sizes."""
-    r18 = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       "..", "plans", "r18")
-    counts, _ = compare(r18, r18, ("before", "after"), out=lambda _: None)
-    want = {"q_pq_search": 0, "q_ivf_pq_search": 0,
-            "q_sq8_search": 4, "q_opq_balance": 16}
-    got = {q: counts.get(q) for q in want}
-    print(f"selftest: {got}")
-    return 0 if got == want else 1
+    unchanged (modulo ids) and two it changed, with known diff sizes. And
+    two round-17 pairs whose distinct-aggregate Expands came out in
+    different orders: q_profile differs in nothing else, q_golden_record
+    only in one localCheckpoint source line."""
+    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "..", "plans")
+    want = {"r18": {"q_pq_search": 0, "q_ivf_pq_search": 0,
+                    "q_sq8_search": 4, "q_opq_balance": 16},
+            "r17": {"q_profile": 0, "q_golden_record": 2}}
+    ok = True
+    for rnd, cases in want.items():
+        d = os.path.join(plans_dir, rnd)
+        counts, _ = compare(d, d, ("before", "after"), out=lambda _: None)
+        got = {q: counts.get(q) for q in cases}
+        print(f"selftest {rnd}: {got}")
+        ok = ok and got == cases
+    return 0 if ok else 1
 
 
 def main(argv):
