@@ -5,17 +5,17 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_anonymize_full")(spark, "/root/testdata/sf0.001")
+  /** Every registered query, one entry each, in family order. */
+  lazy val defs: Seq[graft.queries.QueryDef] = {
+    import graft.queries._
+    Core.defs ++ Relational.defs ++ Events.defs ++ Pipeline.defs ++ Privacy.defs
+  }
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Core.queries ++ graft.queries.Relational.queries ++
-      graft.queries.Events.queries ++ graft.queries.Pipeline.queries ++
-      graft.queries.Privacy.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.build).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Core.oracles ++ graft.queries.Relational.oracles ++
-      graft.queries.Events.oracles ++ graft.queries.Pipeline.oracles ++
-      graft.queries.Privacy.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = defs.map(d => d.name -> d.oracle).toMap
   /** Local-iteration subset filter shared by Verify, Bench and Diag:
     * SPARK_GRAFT_ONLY="q_a, q_b" selects just those queries (whitespace
     * tolerated). The driver never sets it, so its runs stay exhaustive. */

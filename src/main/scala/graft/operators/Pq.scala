@@ -395,13 +395,7 @@ object Pq {
     val cb = fixedCodebook(assigned, idCol, "__res", m, k, d)
     val subs = assigned.select(col(idCol), col("__cell"),
       subvectors(col("__res"), m, d).as(Seq("j", "__s")))
-    val codes = subs.join(broadcast(cb), "j")
-      .withColumn("__key",
-        lit(-2.0) * dot(col("__s"), col("__cw")) + col("__cwn2"))
-      .groupBy(col(idCol), col("j"))
-      .agg(min(struct(col("__key").as("k"), col("__c").as("c"))).as("__m"),
-        max(col("__cell")).as("__cell")) // constant within the group
-      .select(col(idCol), col("__cell"), col("j"), col("__m.c").as("code"))
+    val codes = encodeSubs(subs, cb, idCol)
     // query side: the residual is PER PROBED CELL, so the distance
     // table carries the cell key
     val probes = queries.select(col(qIdCol), col(qEmbCol).as("__qv"))
@@ -415,17 +409,9 @@ object Pq {
       .select(col(qIdCol), col("__cell"), col("j"), col("__c").as("code"),
         (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
           col("__cwn2")).as("__dq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qIdCol).orderBy(col("__ad"), col(idCol))
     Scale.releaseAfterUse(
-      codes.join(broadcast(dtab), Seq("__cell", "j", "code"))
-        .filter(if (selfFilter) col(idCol) =!= col(qIdCol) else lit(true))
-        .groupBy(col(qIdCol), col(idCol))
-        .agg(sum(col("__dq").cast("decimal(28,10)")).as("__ad"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= topK)
-        .select(col(qIdCol), col(idCol), col("rn"),
-          round(col("__ad").cast("double"), 6).as("adist")),
+      adcRank(codes.join(broadcast(dtab), Seq("__cell", "j", "code")),
+        topK, idCol, qIdCol, selfFilter),
       Seq(assigned))
   }
 
@@ -448,13 +434,7 @@ object Pq {
       .withColumn("__cell", Ivf.nearestCentroid(col(embCol), centroids))
       .select(col(idCol), col("__cell"),
         subvectors(col(embCol), m, d).as(Seq("j", "__s")))
-    val codes = subs.join(broadcast(cb), "j")
-      .withColumn("__key",
-        lit(-2.0) * dot(col("__s"), col("__cw")) + col("__cwn2"))
-      .groupBy(col(idCol), col("j"))
-      .agg(min(struct(col("__key").as("k"), col("__c").as("c"))).as("__m"),
-        max(col("__cell")).as("__cell")) // constant within the group
-      .select(col(idCol), col("__cell"), col("j"), col("__m.c").as("code"))
+    val codes = encodeSubs(subs, cb, idCol)
     (codes, cb)
   }
 
@@ -478,13 +458,7 @@ object Pq {
           col(cellCol).as("__cell")), col(idCol))
       .select(col(idCol), col("__cell"),
         subvectors(col(embCol), m, d).as(Seq("j", "__s")))
-    val codes = subs.join(broadcast(cb), "j")
-      .withColumn("__key",
-        lit(-2.0) * dot(col("__s"), col("__cw")) + col("__cwn2"))
-      .groupBy(col(idCol), col("j"))
-      .agg(min(struct(col("__key").as("k"), col("__c").as("c"))).as("__m"),
-        max(col("__cell")).as("__cell")) // constant within the group
-      .select(col(idCol), col("__cell"), col("j"), col("__m.c").as("code"))
+    val codes = encodeSubs(subs, cb, idCol)
     (codes, cb)
   }
 
@@ -501,8 +475,16 @@ object Pq {
       cellCol: String): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val d = dim / m
-    val subs = corpus.select(col(idCol), col(cellCol).as("__cell"),
-      subvectors(col(embCol), m, d).as(Seq("j", "__s")))
+    encodeSubs(corpus.select(col(idCol), col(cellCol).as("__cell"),
+      subvectors(col(embCol), m, d).as(Seq("j", "__s"))), cb, idCol)
+  }
+
+  /** The encode step of every cell-carrying PQ index: subvectors `subs`
+    * (idCol, __cell, j, __s) against the broadcast codebook (j, __c,
+    * __cw, __cwn2), nearest codeword by the -2·dot + |cw|² key with the
+    * (key, code) tie-break; returns (idCol, __cell, j, code). */
+  private def encodeSubs(subs: DataFrame, cb: DataFrame,
+      idCol: String): DataFrame =
     subs.join(broadcast(cb), "j")
       .withColumn("__key",
         lit(-2.0) * dot(col("__s"), col("__cw")) + col("__cwn2"))
@@ -510,6 +492,23 @@ object Pq {
       .agg(min(struct(col("__key").as("k"), col("__c").as("c"))).as("__m"),
         max(col("__cell")).as("__cell")) // constant within the group
       .select(col(idCol), col("__cell"), col("j"), col("__m.c").as("code"))
+
+  /** The ADC tail of every search over `joined` (codes ⋈ distance table,
+    * one __dq per matched subspace): the optional self-filter, the
+    * decimal(28,10) ADC sum, the per-query (distance, id) rank cut at
+    * topK; returns (qIdCol, idCol, rn, adist). */
+  private def adcRank(joined: DataFrame, topK: Int, idCol: String,
+      qIdCol: String, selfFilter: Boolean): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(qIdCol).orderBy(col("__ad"), col(idCol))
+    joined
+      .filter(if (selfFilter) col(idCol) =!= col(qIdCol) else lit(true))
+      .groupBy(col(qIdCol), col(idCol))
+      .agg(sum(col("__dq").cast("decimal(28,10)")).as("__ad"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= topK)
+      .select(col(qIdCol), col(idCol), col("rn"),
+        round(col("__ad").cast("double"), 6).as("adist"))
   }
 
   /**
@@ -550,16 +549,8 @@ object Pq {
       .select(col(qIdCol), col("__cell"), col("j"), col("__c").as("code"),
         (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
           col("__cwn2")).as("__dq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qIdCol).orderBy(col("__ad"), col(idCol))
-    codes.join(broadcast(dtab), Seq("__cell", "j", "code"))
-      .filter(if (selfFilter) col(idCol) =!= col(qIdCol) else lit(true))
-      .groupBy(col(qIdCol), col(idCol))
-      .agg(sum(col("__dq").cast("decimal(28,10)")).as("__ad"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= topK)
-      .select(col(qIdCol), col(idCol), col("rn"),
-        round(col("__ad").cast("double"), 6).as("adist"))
+    adcRank(codes.join(broadcast(dtab), Seq("__cell", "j", "code")),
+      topK, idCol, qIdCol, selfFilter)
   }
 
   /**
@@ -601,16 +592,8 @@ object Pq {
         (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
           col("__cwn2")).as("__dq"))
     val probeTab = probes.join(dtab, qIdCol)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qIdCol).orderBy(col("__ad"), col(idCol))
-    codes.join(broadcast(probeTab), Seq("__cell", "j", "code"))
-      .filter(if (selfFilter) col(idCol) =!= col(qIdCol) else lit(true))
-      .groupBy(col(qIdCol), col(idCol))
-      .agg(sum(col("__dq").cast("decimal(28,10)")).as("__ad"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= topK)
-      .select(col(qIdCol), col(idCol), col("rn"),
-        round(col("__ad").cast("double"), 6).as("adist"))
+    adcRank(codes.join(broadcast(probeTab), Seq("__cell", "j", "code")),
+      topK, idCol, qIdCol, selfFilter)
   }
 
   def adcTopK(corpus: DataFrame, queries: DataFrame, topK: Int,
@@ -634,17 +617,9 @@ object Pq {
         col("__c").as("code"),
         (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
           col("__cwn2")).as("__dq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qIdCol).orderBy(col("__ad"), col(idCol))
     Scale.releaseAfterUse(
-      codes.join(broadcast(dtab), Seq("j", "code"))
-        .filter(col(idCol) =!= col(qIdCol))
-        .groupBy(col(qIdCol), col(idCol))
-        .agg(sum(col("__dq").cast("decimal(28,10)")).as("__ad"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= topK)
-        .select(col(qIdCol), col(idCol), col("rn"),
-          round(col("__ad").cast("double"), 6).as("adist")),
+      adcRank(codes.join(broadcast(dtab), Seq("j", "code")), topK, idCol,
+        qIdCol, selfFilter = true),
       Seq(cb))
   }
 }

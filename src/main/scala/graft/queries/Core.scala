@@ -35,6 +35,11 @@ object Q {
     c.cast("decimal(18,2)")
 }
 
+/** One registered query: the frame it builds over a table directory, and
+  * the DuckDB SQL over the same parquet tables that must return its rows. */
+final case class QueryDef(
+    name: String, build: (SparkSession, String) => DataFrame, oracle: String)
+
 /**
  * Core-parity queries: the reference's six anonymization strategies, sample
  * masking, type safety, planner denylist, counts and schema introspection
@@ -75,29 +80,48 @@ object Core {
       .orderBy("c_custkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_anonymize_full" -> ((s, dir) => {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_anonymize_full", (s, dir) => {
       val plan = Planner.buildPlan(fixtureConfig, "fixture")
       Engine.transform(plan, Map(
         "customer" -> t(s, dir, "customer"),
         "orders" -> t(s, dir, "orders")))("public.customer")
         .orderBy("c_custkey")
-    }),
-    "q_keep" -> strategyDemo(Strategy.Keep) _,
-    "q_set_null" -> strategyDemo(Strategy.SetNull) _,
-    "q_redact" -> strategyDemo(Strategy.Redact) _,
-    "q_hash" -> strategyDemo(Strategy.HashSha256) _,
-    "q_truncate" -> strategyDemo(Strategy.Truncate) _, // default n=4
-    "q_truncate_param" -> strategyDemo(Strategy.Truncate, StrategyParams(Some(7))) _,
-    "q_email_fake" -> strategyDemo(Strategy.EmailFake) _,
-    "q_unknown_noop" -> strategyDemo(Strategy.Unknown("SCRAMBLE")) _,
-    "q_mask_sample" -> ((s, dir) => {
+    },
+      """SELECT c_custkey,
+         md5(coalesce(c_name, '')) || '@example.com' AS c_name,
+         c_nationkey, c_acctbal,
+         left(coalesce(c_mktsegment, ''), 2) AS c_mktsegment
+         FROM customer ORDER BY c_custkey"""),
+    QueryDef("q_keep", strategyDemo(Strategy.Keep) _,
+      "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_set_null", strategyDemo(Strategy.SetNull) _,
+      "SELECT c_custkey, cast(NULL AS varchar) AS c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_redact", strategyDemo(Strategy.Redact) _,
+      "SELECT c_custkey, '***' AS c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_hash", strategyDemo(Strategy.HashSha256) _,
+      "SELECT c_custkey, md5(coalesce(c_name, '')) AS c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_truncate", strategyDemo(Strategy.Truncate) _, // default n=4
+      "SELECT c_custkey, left(coalesce(c_name, ''), 4) AS c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_truncate_param", strategyDemo(Strategy.Truncate, StrategyParams(Some(7))) _,
+      "SELECT c_custkey, left(coalesce(c_name, ''), 7) AS c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_email_fake", strategyDemo(Strategy.EmailFake) _,
+      """SELECT c_custkey, md5(coalesce(c_name, '')) || '@example.com' AS c_name
+         FROM customer ORDER BY c_custkey"""),
+    QueryDef("q_unknown_noop", strategyDemo(Strategy.Unknown("SCRAMBLE")) _,
+      "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey"),
+    QueryDef("q_mask_sample", (s, dir) => {
       t(s, dir, "customer")
         .select(col("c_custkey"),
           Strategies.maskSample(col("c_name")).as("c_name_masked"))
         .orderBy("c_custkey")
-    }),
-    "q_type_safety" -> ((s, dir) => {
+    },
+      """SELECT c_custkey,
+         CASE WHEN c_name IS NULL OR c_name = '' THEN c_name
+              WHEN length(c_name) <= 6 THEN '***'
+              ELSE left(c_name, 2) || '***' || right(c_name, 2) END AS c_name_masked
+         FROM customer ORDER BY c_custkey"""),
+    QueryDef("q_type_safety", (s, dir) => {
       // HASH on NUMBER and REDACT on NUMBER downgrade to KEEP; TRUNCATE on
       // STRING applies (executor.ts:45-85).
       val df = t(s, dir, "customer")
@@ -106,8 +130,11 @@ object Core {
         PlannedColumn("c_name", Strategy.Truncate, StrategyParams(Some(3))),
         PlannedColumn("c_acctbal", Strategy.Redact))
       df.select(Engine.compileTable(df, planned): _*).orderBy("c_custkey")
-    }),
-    "q_filter_denylist" -> ((s, dir) => {
+    },
+      """SELECT c_custkey, left(coalesce(c_name, ''), 3) AS c_name,
+         c_nationkey, c_acctbal, c_mktsegment
+         FROM customer ORDER BY c_custkey"""),
+    QueryDef("q_filter_denylist", (s, dir) => {
       import s.implicits._
       val cfg = fixtureConfig.copy(rules = fixtureConfig.rules ++ Seq(
         TableRule("public.region", enabled = true,
@@ -118,8 +145,10 @@ object Core {
           Seq(ColumnRule("p_name", Some("REDACT")))))) // disabled
       Planner.buildPlan(cfg, "fixture").tables.map(_.table)
         .toDF("table_name").orderBy("table_name")
-    }),
-    "q_count" -> ((s, dir) => {
+    },
+      """SELECT * FROM (VALUES ('public.customer'), ('public.orders'))
+         AS t(table_name) ORDER BY table_name"""),
+    QueryDef("q_count", (s, dir) => {
       import s.implicits._
       val plan = Plan("fixture", Seq(
         PlannedTable("public.customer", "public", "customer",
@@ -133,8 +162,12 @@ object Core {
         "nation" -> t(s, dir, "nation"),
         "orders" -> t(s, dir, "orders")))
       counts.toSeq.toDF("table_name", "n_rows").orderBy("table_name")
-    }),
-    "q_anonymize_catalog" -> ((s, dir) => {
+    },
+      """SELECT 'public.customer' AS table_name, (SELECT count(*) FROM customer) AS n_rows
+         UNION ALL SELECT 'public.nation', cast(0 AS bigint)
+         UNION ALL SELECT 'public.orders', (SELECT count(*) FROM orders)
+         ORDER BY table_name"""),
+    QueryDef("q_anonymize_catalog", (s, dir) => {
       import s.implicits._
       // full workflow over a wider catalog: global map + overrides, one
       // denylisted table, one disabled, one all-KEEP no-op
@@ -156,77 +189,33 @@ object Core {
         "customer" -> t(s, dir, "customer"), "supplier" -> t(s, dir, "supplier"),
         "orders" -> t(s, dir, "orders"), "nation" -> t(s, dir, "nation")))
       counts.toSeq.toDF("table_name", "n_rows").orderBy("table_name")
-    }),
-    "q_sample_limit" -> ((s, dir) =>
+    },
+      """SELECT 'public.customer' AS table_name, (SELECT count(*) FROM customer) AS n_rows
+         UNION ALL SELECT 'public.nation', cast(0 AS bigint)
+         UNION ALL SELECT 'public.orders', (SELECT count(*) FROM orders)
+         UNION ALL SELECT 'public.supplier', (SELECT count(*) FROM supplier)
+         ORDER BY table_name"""),
+    QueryDef("q_sample_limit", (s, dir) =>
       t(s, dir, "customer").select("c_custkey", "c_name")
-        .orderBy("c_custkey").limit(3)),
-    "q_schema_tables" -> ((s, dir) => {
+        .orderBy("c_custkey").limit(3),
+      "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey LIMIT 3"),
+    QueryDef("q_schema_tables", (s, dir) => {
       import s.implicits._
       Tables.names.toDF("table_name").orderBy("table_name")
-    }),
-    "q_schema_columns" -> ((s, dir) => {
+    },
+      """SELECT * FROM (VALUES ('customer'), ('documents'), ('embeddings'),
+         ('events'), ('lineitem'), ('nation'), ('orders'), ('part'),
+         ('region'), ('supplier')) AS t(table_name) ORDER BY table_name"""),
+    QueryDef("q_schema_columns", (s, dir) => {
       import s.implicits._
       val fields = t(s, dir, "customer").schema.fields.toSeq
       fields.zipWithIndex.map { case (f, i) =>
         (i + 1, f.name, TypeMap.groupName(TypeMap.group(f.dataType)))
       }.toDF("ordinal", "column_name", "type_group").orderBy("ordinal")
-    }))
-
-  val oracles: Map[String, String] = Map(
-    "q_anonymize_full" ->
-      """SELECT c_custkey,
-         md5(coalesce(c_name, '')) || '@example.com' AS c_name,
-         c_nationkey, c_acctbal,
-         left(coalesce(c_mktsegment, ''), 2) AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-    "q_keep" -> "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey",
-    "q_set_null" ->
-      "SELECT c_custkey, cast(NULL AS varchar) AS c_name FROM customer ORDER BY c_custkey",
-    "q_redact" -> "SELECT c_custkey, '***' AS c_name FROM customer ORDER BY c_custkey",
-    "q_hash" ->
-      "SELECT c_custkey, md5(coalesce(c_name, '')) AS c_name FROM customer ORDER BY c_custkey",
-    "q_truncate" ->
-      "SELECT c_custkey, left(coalesce(c_name, ''), 4) AS c_name FROM customer ORDER BY c_custkey",
-    "q_truncate_param" ->
-      "SELECT c_custkey, left(coalesce(c_name, ''), 7) AS c_name FROM customer ORDER BY c_custkey",
-    "q_email_fake" ->
-      """SELECT c_custkey, md5(coalesce(c_name, '')) || '@example.com' AS c_name
-         FROM customer ORDER BY c_custkey""",
-    "q_unknown_noop" -> "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey",
-    "q_mask_sample" ->
-      """SELECT c_custkey,
-         CASE WHEN c_name IS NULL OR c_name = '' THEN c_name
-              WHEN length(c_name) <= 6 THEN '***'
-              ELSE left(c_name, 2) || '***' || right(c_name, 2) END AS c_name_masked
-         FROM customer ORDER BY c_custkey""",
-    "q_type_safety" ->
-      """SELECT c_custkey, left(coalesce(c_name, ''), 3) AS c_name,
-         c_nationkey, c_acctbal, c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-    "q_filter_denylist" ->
-      """SELECT * FROM (VALUES ('public.customer'), ('public.orders'))
-         AS t(table_name) ORDER BY table_name""",
-    "q_count" ->
-      """SELECT 'public.customer' AS table_name, (SELECT count(*) FROM customer) AS n_rows
-         UNION ALL SELECT 'public.nation', cast(0 AS bigint)
-         UNION ALL SELECT 'public.orders', (SELECT count(*) FROM orders)
-         ORDER BY table_name""",
-    "q_anonymize_catalog" ->
-      """SELECT 'public.customer' AS table_name, (SELECT count(*) FROM customer) AS n_rows
-         UNION ALL SELECT 'public.nation', cast(0 AS bigint)
-         UNION ALL SELECT 'public.orders', (SELECT count(*) FROM orders)
-         UNION ALL SELECT 'public.supplier', (SELECT count(*) FROM supplier)
-         ORDER BY table_name""",
-    "q_sample_limit" ->
-      "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey LIMIT 3",
-    "q_schema_tables" ->
-      """SELECT * FROM (VALUES ('customer'), ('documents'), ('embeddings'),
-         ('events'), ('lineitem'), ('nation'), ('orders'), ('part'),
-         ('region'), ('supplier')) AS t(table_name) ORDER BY table_name""",
-    "q_schema_columns" ->
+    },
       """SELECT * FROM (VALUES
          (1, 'c_custkey', 'NUMBER'), (2, 'c_name', 'STRING'),
          (3, 'c_nationkey', 'NUMBER'), (4, 'c_acctbal', 'NUMBER'),
          (5, 'c_mktsegment', 'STRING')) AS t(ordinal, column_name, type_group)
-         ORDER BY ordinal""")
+         ORDER BY ordinal"""))
 }

@@ -20,9 +20,39 @@ import org.apache.spark.sql.functions._
 object Events {
   import Q._
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The attribution queries' touches: every view/click inside the hour
+    * before its user's NEXT purchase, that purchase in `__cv` (t, e, c =
+    * its value in cents) — q_attribution's one-window conversion lookup. */
+  private def purchaseTouches(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val horizonNs = 3600000000000L // 1 hour in nanos
+    val wDesc = Window.partitionBy("user_id")
+      .orderBy(col("ts").desc, col("event_id").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    t(s, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"), (dec2(col("value")) * 100).cast("long").as("__c"))
+      .withColumn("__cv", last(
+        when(col("event_type") === "purchase",
+          struct(col("ts").as("t"), col("event_id").as("e"),
+            col("__c").as("c"))), ignoreNulls = true).over(wDesc))
+      .filter(col("event_type").isin("view", "click") &&
+        col("__cv").isNotNull &&
+        col("__cv.t") - col("ts") <= horizonNs)
+  }
+
+  /** Per-channel touch count and attributed value from integer
+    * micro-cent credits `__micro`. */
+  private def creditByChannel(credits: DataFrame): DataFrame =
+    credits.groupBy("channel")
+      .agg(count(lit(1)).as("n_touches"), sum(col("__micro")).as("__m"))
+      .select(col("channel"), col("n_touches"),
+        round(col("__m").cast("double") / 1e8, 6).as("attributed"))
+      .orderBy("channel")
+
+  val defs: Seq[QueryDef] = Seq(
     // T1 — 5-minute tumbling window per event type (native window()).
-    "q_stream_tumbling" -> ((s, dir) => {
+    QueryDef("q_stream_tumbling", (s, dir) => {
       t(s, dir, "events")
         .groupBy(window(tsCol("ts"), "5 minutes").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -30,10 +60,14 @@ object Events {
         .select(col("w.start").cast("long").as("bucket_start"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy("bucket_start", "event_type")
-    }),
+    },
+      """SELECT (epoch_ns(ts) // 300000000000) * 300 AS bucket_start,
+         event_type, count(*) AS n_events,
+         cast(sum(cast(value AS decimal(18,2))) AS double) AS sum_value
+         FROM events GROUP BY 1, 2 ORDER BY bucket_start, event_type"""),
     // T2 — 10-minute window sliding every 5 minutes (each event lands in
     // exactly two windows).
-    "q_stream_sliding" -> ((s, dir) => {
+    QueryDef("q_stream_sliding", (s, dir) => {
       t(s, dir, "events")
         .groupBy(window(tsCol("ts"), "10 minutes", "5 minutes").as("w"),
           col("event_type"))
@@ -41,13 +75,20 @@ object Events {
         .select(col("w.start").cast("long").as("bucket_start"),
           col("event_type"), col("n_events"))
         .orderBy("bucket_start", "event_type")
-    }),
+    },
+      """SELECT bucket_start, event_type, count(*) AS n_events FROM (
+           SELECT (epoch_ns(ts) // 300000000000) * 300 AS bucket_start,
+                  event_type FROM events
+           UNION ALL
+           SELECT (epoch_ns(ts) // 300000000000) * 300 - 300, event_type
+           FROM events)
+         GROUP BY 1, 2 ORDER BY bucket_start, event_type"""),
     // Funnel — ordered milestone progression per user (view → click →
     // purchase, each strictly after the previous stage's first hit).
     // Three hash aggregates keyed on user_id + two co-partitioned joins:
     // no windows over global order, so the 100 TB path shuffles on
     // user_id only. Timestamps compare as raw nanos-longs (exact).
-    "q_funnel" -> ((s, dir) => {
+    QueryDef("q_funnel", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"))
       // tv and tc each feed two consumers (their stage count + the next
@@ -67,10 +108,26 @@ object Events {
         .unionByName(tp.agg(count(lit(1)).as("n_users"))
           .select(lit("3_purchase").as("stage"), col("n_users")))
         .orderBy("stage")
-    }),
+    },
+      """WITH tv AS (
+           SELECT user_id, min(epoch_ns(ts)) AS t FROM events
+           WHERE event_type = 'view' GROUP BY 1),
+         tc AS (
+           SELECT e.user_id, min(epoch_ns(e.ts)) AS t FROM events e
+           JOIN tv ON e.user_id = tv.user_id
+           WHERE e.event_type = 'click' AND epoch_ns(e.ts) > tv.t GROUP BY 1),
+         tp AS (
+           SELECT e.user_id, min(epoch_ns(e.ts)) AS t FROM events e
+           JOIN tc ON e.user_id = tc.user_id
+           WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) > tc.t GROUP BY 1)
+         SELECT stage, n_users FROM (
+           SELECT '1_view' AS stage, count(*) AS n_users FROM tv
+           UNION ALL SELECT '2_click', count(*) FROM tc
+           UNION ALL SELECT '3_purchase', count(*) FROM tp)
+         ORDER BY stage"""),
     // W-extra — unpivot (melt): the wide per-type value-band counts fold
     // back to long format — the inverse of q_pivot, via Dataset.unpivot.
-    "q_unpivot" -> ((s, dir) => {
+    QueryDef("q_unpivot", (s, dir) => {
       val wide = t(s, dir, "events")
         .groupBy("event_type")
         .agg(expr("count_if(value < 10)").as("low"),
@@ -79,13 +136,26 @@ object Events {
       wide.unpivot(Array(col("event_type")),
           Array(col("low"), col("mid"), col("high")), "band", "n")
         .orderBy("event_type", "band")
-    }),
+    },
+      """SELECT event_type, band, n FROM (
+           SELECT event_type, 'low' AS band,
+             cast(count_if(value < 10) AS bigint) AS n
+           FROM events GROUP BY 1
+           UNION ALL
+           SELECT event_type, 'mid',
+             cast(count_if(value >= 10 AND value < 100) AS bigint)
+           FROM events GROUP BY 1
+           UNION ALL
+           SELECT event_type, 'high',
+             cast(count_if(value >= 100) AS bigint)
+           FROM events GROUP BY 1)
+         ORDER BY event_type, band"""),
     // Gap-filling: a generated 5-minute scaffold between the observed
     // bounds left-joins the sparse purchase counts, so every bucket
     // appears (0 when silent). The scaffold derives from a one-row bounds
     // aggregate; at 100 TB you'd widen it by generating per-range slices
     // distributed, but its size is (hi-lo)/step regardless of input rows.
-    "q_gapfill" -> ((s, dir) => {
+    QueryDef("q_gapfill", (s, dir) => {
       val b = t(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .groupBy(expr("((ts div 1000000000) div 300) * 300").as("bucket"))
@@ -95,12 +165,22 @@ object Events {
       scaffold.join(b, Seq("bucket"), "left")
         .select(col("bucket"), coalesce(col("n"), lit(0L)).as("n"))
         .orderBy("bucket")
-    }),
+    },
+      """WITH b AS (
+           SELECT (epoch_ns(ts) // 1000000000 // 300) * 300 AS bucket,
+             count(*) AS n
+           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+         bounds AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM b),
+         scaffold AS (
+           SELECT unnest(generate_series(lo, hi, 300)) AS bucket FROM bounds)
+         SELECT s.bucket, cast(coalesce(n, 0) AS bigint) AS n
+         FROM scaffold s LEFT JOIN b USING (bucket)
+         ORDER BY bucket"""),
     // Cohort retention matrix: users grouped by the epoch-week of their
     // first event × the weeks they were active; exact integer week
     // arithmetic on the nanos-long, so any engine reproduces the buckets.
     // Two hash aggregates + one co-partitioned join on user_id.
-    "q_cohort" -> ((s, dir) => {
+    QueryDef("q_cohort", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("user_id"),
           expr("(ts div 1000000000) div 604800").as("week"))
@@ -109,16 +189,28 @@ object Events {
         .groupBy("cohort_week", "week")
         .agg(countDistinct("user_id").as("n_users"))
         .orderBy("cohort_week", "week")
-    }),
+    },
+      """WITH ev AS (
+           SELECT user_id,
+             (epoch_ns(ts) // 1000000000) // 604800 AS week FROM events),
+         first AS (
+           SELECT user_id, min(week) AS cohort_week FROM ev GROUP BY 1)
+         SELECT cohort_week, week, count(DISTINCT e.user_id) AS n_users
+         FROM (SELECT DISTINCT user_id, week FROM ev) e
+         JOIN first USING (user_id)
+         GROUP BY 1, 2 ORDER BY cohort_week, week"""),
     // Value histogram: fixed-width buckets per event type (exact integer
     // bucket index — a distribution profile in one hash aggregate).
-    "q_histogram" -> ((s, dir) => {
+    QueryDef("q_histogram", (s, dir) => {
       t(s, dir, "events")
         .select(col("event_type"),
           floor(col("value") / 50.0).cast("long").as("bucket"))
         .groupBy("event_type", "bucket").agg(count(lit(1)).as("n"))
         .orderBy("event_type", "bucket")
-    }),
+    },
+      """SELECT event_type, cast(floor(value / 50.0) AS bigint) AS bucket,
+         count(*) AS n FROM events
+         GROUP BY 1, 2 ORDER BY event_type, bucket"""),
     // Observability — seasonal anomaly detection, the time-series twin of
     // q_outlier_mad: cells are (event_type, day, hour) counts; each cell
     // compares against the mean count of its (event_type, hour-of-day)
@@ -130,7 +222,7 @@ object Events {
     // broadcast back) — no windows over global order, so the 100 TB path
     // is two map-side-combining shuffles + a broadcast join. Day/hour come
     // from exact integer division of the raw nanos (UTC).
-    "q_anomaly" -> ((s, dir) => {
+    QueryDef("q_anomaly", (s, dir) => {
       val cells = t(s, dir, "events")
         .select(col("event_type"),
           expr("ts div 86400000000000").as("day"),
@@ -138,7 +230,22 @@ object Events {
         .groupBy("event_type", "day", "hour").agg(count(lit(1)).as("n"))
       graft.operators.Quality.seasonalAnomalyFromCells(cells)
         .orderBy("event_type", "day", "hour")
-    }),
+    },
+      """WITH cells AS (
+           SELECT event_type,
+             epoch_ns(ts) // 86400000000000 AS day,
+             (epoch_ns(ts) % 86400000000000) // 3600000000000 AS hour,
+             count(*) AS n
+           FROM events GROUP BY 1, 2, 3),
+         slots AS (
+           SELECT event_type, hour, count(*) AS slot_cells,
+             sum(n) AS slot_sum
+           FROM cells GROUP BY 1, 2)
+         SELECT c.event_type, c.day, c.hour, c.n,
+           c.n * s.slot_cells > 2 * s.slot_sum AS is_anomaly
+         FROM cells c JOIN slots s
+           ON c.event_type = s.event_type AND c.hour = s.hour
+         ORDER BY c.event_type, c.day, c.hour"""),
     // Cleaning — percentile winsorization audit: per event type, the
     // p5/p95 clip bounds (exact percentile interpolation over cents-longs
     // — identical IEEE doubles in any engine, the q_agg_percentile
@@ -147,7 +254,7 @@ object Events {
     // aggregate — no window, no global sort; the 100 TB path shuffles
     // twice on the (tiny) type key. The clip COUNTS are exact longs; the
     // bounds are rounded to 6dp like every interpolated output.
-    "q_winsorize" -> ((s, dir) => {
+    QueryDef("q_winsorize", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_type"),
           (dec2(col("value")) * 100).cast("long").as("cents"))
@@ -162,7 +269,23 @@ object Events {
           round(max(col("p05")) / 100.0, 6).as("clip_lo"),
           round(max(col("p95")) / 100.0, 6).as("clip_hi"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH ev AS (
+           SELECT event_type,
+             cast(cast(value AS decimal(18,2)) * 100 AS BIGINT) AS cents
+           FROM events),
+         bounds AS (
+           SELECT event_type,
+             percentile_cont(0.05) WITHIN GROUP (ORDER BY cents) AS p05,
+             percentile_cont(0.95) WITHIN GROUP (ORDER BY cents) AS p95
+           FROM ev GROUP BY event_type)
+         SELECT ev.event_type, count(*) AS n,
+           count(*) FILTER (WHERE cents < p05) AS n_lo,
+           count(*) FILTER (WHERE cents > p95) AS n_hi,
+           round(max(p05) / 100.0, 6) AS clip_lo,
+           round(max(p95) / 100.0, 6) AS clip_hi
+         FROM ev JOIN bounds ON ev.event_type = bounds.event_type
+         GROUP BY ev.event_type ORDER BY ev.event_type"""),
     // Preflight — join-explosion diagnostic: the top-10 key-degree
     // PRODUCTS for a planned events⋈orders join on the customer key. A
     // shuffled join's output is Σ d_left(k)·d_right(k); its hot keys are
@@ -171,7 +294,7 @@ object Events {
     // between a plain join, a salted join (q_join_skew), or a key-split
     // BEFORE burning a 100 TB shuffle. Complements q_skew_report (single-
     // table degrees).
-    "q_join_degree" -> ((s, dir) => {
+    QueryDef("q_join_degree", (s, dir) => {
       val dl = t(s, dir, "events").groupBy(col("user_id").as("key"))
         .agg(count(lit(1)).as("d_events"))
       val dr = t(s, dir, "orders").groupBy(col("o_custkey").as("key"))
@@ -180,11 +303,21 @@ object Events {
         .select(col("key"), col("d_events"), col("d_orders"),
           (col("d_events") * col("d_orders")).as("pairs"))
         .orderBy(col("pairs").desc, col("key")).limit(10)
-    }),
+    },
+      """WITH dl AS (
+           SELECT user_id AS key, count(*) AS d_events
+           FROM events GROUP BY 1),
+         dr AS (
+           SELECT o_custkey AS key, count(*) AS d_orders
+           FROM orders GROUP BY 1)
+         SELECT dl.key, d_events, d_orders,
+           d_events * d_orders AS pairs
+         FROM dl JOIN dr ON dl.key = dr.key
+         ORDER BY pairs DESC, dl.key LIMIT 10"""),
     // T3 — 30-minute-gap session windows per user. A session's end extends
     // with each event; a new one opens when the gap from the last event is
     // >= 30 minutes (session_window semantics).
-    "q_sessionize" -> ((s, dir) => {
+    QueryDef("q_sessionize", (s, dir) => {
       t(s, dir, "events")
         .groupBy(session_window(tsCol("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -192,13 +325,30 @@ object Events {
         .select(col("user_id"), col("w.start").cast("long").as("session_start"),
           col("n_events"), col("first_event"))
         .orderBy("user_id", "session_start")
-    }),
+    },
+      """WITH flagged AS (
+           SELECT user_id, event_id, epoch_ns(ts) AS tns,
+             CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL THEN 1
+                  WHEN epoch_ns(ts) - lag(epoch_ns(ts)) OVER w
+                       >= 1800000000000 THEN 1
+                  ELSE 0 END AS new_session
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         numbered AS (
+           SELECT user_id, event_id, tns,
+             sum(new_session) OVER (PARTITION BY user_id ORDER BY tns, event_id
+               ROWS UNBOUNDED PRECEDING) AS sid
+           FROM flagged)
+         SELECT user_id, min(tns) // 1000000000 AS session_start,
+           count(*) AS n_events, min(event_id) AS first_event
+         FROM numbered GROUP BY user_id, sid
+         ORDER BY user_id, session_start"""),
     // W4-extension — rolling 7-row per-user average (ts order, event_id
     // tiebreak). Decimal-cast per-row values make the frame sum exact and
     // shuffle-order-independent; the final divide is a single IEEE op on
     // identical operands in both engines. Scale: partitioned by user_id —
     // no global sort, the 100 TB path shuffles once on the user key.
-    "q_rolling" -> ((s, dir) => {
+    QueryDef("q_rolling", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-6, Window.currentRow)
@@ -208,7 +358,14 @@ object Events {
           (sum(dec2(col("value"))).over(w).cast("double") /
             count(lit(1)).over(w)).as("roll_avg"))
         .orderBy("user_id", "event_id")
-    }),
+    },
+      """SELECT user_id, event_id, count(*) OVER w AS n_win,
+         cast(sum(cast(value AS decimal(18,2))) OVER w AS DOUBLE)
+           / (count(*) OVER w) AS roll_avg
+         FROM events
+         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+         ORDER BY user_id, event_id"""),
     // W4-extension — exponentially-weighted moving value per user, exact:
     // α = ½ over the last 8 events (zero-padded), so the weights are the
     // dyadic 128/256 … 1/256. Values become exact cents (decimal cast →
@@ -222,248 +379,14 @@ object Events {
     // exact teleport) → bit-identical ranks across engines, partitionings
     // and re-runs; 3 synchronous iterations, each ONE rank⋈edges join +
     // ONE aggregate on dst — the canonical distributed PR shape.
-    "q_pagerank" -> ((s, dir) => {
+    QueryDef("q_pagerank", (s, dir) => {
       val edges = graft.operators.Graph.transitionEdges(
         t(s, dir, "events"), "user_id", "event_type",
         Seq(col("ts"), col("event_id")))
       graft.operators.Graph.pageRank(edges, 3)
         .select(col("node").as("event_type"), col("rank"))
         .orderBy("event_type")
-    }),
-    "q_ewma" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val cents = (dec2(col("value")) * 100).cast("long")
-      val num = (0 until 8).map { i =>
-        val x = if (i == 0) cents else lag(cents, i).over(w)
-        coalesce(x, lit(0L)) * lit(1L << (7 - i))
-      }.reduce(_ + _)
-      t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          (num / lit(25600.0)).as("ewma"))
-        .orderBy("user_id", "event_id")
-    }),
-    // SCD Type-2 history build: collapse each user's event stream into
-    // state-change intervals (state = event_type), the
-    // slowly-changing-dimension shape every warehouse keeps for
-    // point-in-time joins. Gaps-and-islands: keep rows where the state
-    // differs from its predecessor, then valid_to = the NEXT kept row's
-    // timestamp (lead over the filtered set), NULL marking the current
-    // version. Both windows share one partitioning (user_id) and one
-    // ordering, so Spark shuffles once and reuses the sort — per-user
-    // work, no global order, the 100 TB shape.
-    "q_scd2" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val changed = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type").as("state"),
-          lag(col("event_type"), 1).over(w).as("__prev"))
-        .filter(col("__prev").isNull || col("__prev") =!= col("state"))
-      changed
-        .select(col("user_id"), col("state"),
-          row_number().over(w).as("version"),
-          // micros, not nanos: DuckDB reads parquet TIMESTAMP_NANOS at
-          // microsecond precision, so sub-µs digits can't oracle-check.
-          // `div` keeps the conversion exact (see Q.tsCol).
-          expr("ts div 1000").as("valid_from_us"),
-          expr("lead(ts div 1000, 1) OVER (PARTITION BY user_id " +
-            "ORDER BY ts, event_id)").as("valid_to_us"))
-        .withColumn("is_current", col("valid_to_us").isNull)
-        .orderBy("user_id", "version")
-    }),
-    // Triangle enumeration on the event-transition graph: which triples of
-    // event types mutually precede one another — the graph-analytics
-    // staple (clustering coefficient, community seeds). Edges are the
-    // distinct consecutive-type transitions; see Graph.triangles for the
-    // wedge-join shape and the degree-orientation scale note.
-    "q_triangles" -> ((s, dir) => {
-      val edges = graft.operators.Graph.transitionEdges(
-        t(s, dir, "events"), "user_id", "event_type",
-        Seq(col("ts"), col("event_id")))
-      graft.operators.Graph.triangles(edges)
-        .orderBy("a", "b", "c")
-    }),
-    // Bounded-radius harmonic centrality on the same transition graph —
-    // the Common Crawl host-ranking signal (Boldi & Vigna 2014), radius 3,
-    // exact lcm-scaled integers (h_scaled = 6n1 + 3n2 + 2n3) so ranks are
-    // bit-portable. Three reverse-BFS rounds, each one frontier⋈edges join
-    // + distinct + visited anti-join, all keyed on the node.
-    "q_harmonic" -> ((s, dir) => {
-      val edges = graft.operators.Graph.transitionEdges(
-        t(s, dir, "events"), "user_id", "event_type",
-        Seq(col("ts"), col("event_id")))
-      graft.operators.Graph.harmonicCentrality(edges, 3)
-        .select(col("node").as("event_type"), col("n1"), col("n2"),
-          col("n3"), col("h_scaled"))
-        .orderBy("event_type")
-    }),
-    // Funnel latency — minutes from a user's FIRST view to their first
-    // purchase at-or-after it, bucketed into a distributed histogram
-    // (exact integer nanos div, no global order statistics): the
-    // time-to-convert distribution next to q_funnel's conversion counts.
-    "q_conversion_latency" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min(col("ts")).as("__v"))
-      ev.filter(col("event_type") === "purchase")
-        .join(v, "user_id")
-        .filter(col("ts") >= col("__v"))
-        .groupBy("user_id")
-        .agg(min(col("ts")).as("__p"), min(col("__v")).as("__fv"))
-        .select(expr("(__p - __fv) div 60000000000").as("latency_min"))
-        .groupBy("latency_min").agg(count(lit(1)).as("n_users"))
-        .orderBy("latency_min")
-    }),
-    // Attribution — linear multi-touch: every view/click inside the hour
-    // before a user's NEXT purchase shares that purchase's value equally
-    // (credit = value·10⁶ div n in exact integer micro-cents, remainder
-    // dropped — engine-portable, no decimal-division dialect). The
-    // conversion lookup is ONE descending per-user window carrying the
-    // last-seen purchase (ignoreNulls last over strictly-later rows), so
-    // there is no touch×purchase join anywhere — the 100 TB shape.
-    "q_attribution" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val horizonNs = 3600000000000L // 1 hour in nanos
-      val wDesc = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), (dec2(col("value")) * 100).cast("long").as("__c"))
-      val touches = ev
-        .withColumn("__cv", last(
-          when(col("event_type") === "purchase",
-            struct(col("ts").as("t"), col("event_id").as("e"),
-              col("__c").as("c"))), ignoreNulls = true).over(wDesc))
-        .filter(col("event_type").isin("view", "click") &&
-          col("__cv").isNotNull &&
-          col("__cv.t") - col("ts") <= horizonNs)
-        .select(col("event_type").as("channel"),
-          col("__cv.e").as("__conv"), col("__cv.c").as("__cc"))
-      val perConv = touches.groupBy("__conv").agg(count(lit(1)).as("__n"))
-      touches.join(perConv, "__conv")
-        .select(col("channel"),
-          expr("__cc * 1000000L div __n").as("__micro"))
-        .groupBy("channel")
-        .agg(count(lit(1)).as("n_touches"), sum(col("__micro")).as("__m"))
-        .select(col("channel"), col("n_touches"),
-          round(col("__m").cast("double") / 1e8, 6).as("attributed"))
-        .orderBy("channel")
-    }),
-    // Attribution, time-decay variant: the 8 most recent touches before
-    // the conversion carry dyadic weights 2^(8−rank) (most recent
-    // heaviest — the EWMA trick), credit = value·10⁶·w div Σw in exact
-    // integers, so even the decay schedule oracle-checks. Same
-    // no-pair-join conversion lookup as q_attribution.
-    "q_attribution_decay" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val horizonNs = 3600000000000L
-      val wDesc = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), (dec2(col("value")) * 100).cast("long").as("__c"))
-      val touches = ev
-        .withColumn("__cv", last(
-          when(col("event_type") === "purchase",
-            struct(col("ts").as("t"), col("event_id").as("e"),
-              col("__c").as("c"))), ignoreNulls = true).over(wDesc))
-        .filter(col("event_type").isin("view", "click") &&
-          col("__cv").isNotNull &&
-          col("__cv.t") - col("ts") <= horizonNs)
-        .select(col("event_type").as("channel"), col("ts"),
-          col("event_id"), col("__cv.e").as("__conv"),
-          col("__cv.c").as("__cc"))
-      val wConv = Window.partitionBy("__conv")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val ranked = touches
-        .withColumn("__rn", row_number().over(wConv))
-        .filter(col("__rn") <= 8)
-        .withColumn("__w", expr("CAST(1 AS BIGINT) << (8 - __rn)"))
-      val tot = ranked.groupBy("__conv").agg(sum(col("__w")).as("__tw"))
-      ranked.join(tot, "__conv")
-        .select(col("channel"),
-          expr("__cc * 1000000L * __w div __tw").as("__micro"))
-        .groupBy("channel")
-        .agg(count(lit(1)).as("n_touches"), sum(col("__micro")).as("__m"))
-        .select(col("channel"), col("n_touches"),
-          round(col("__m").cast("double") / 1e8, 6).as("attributed"))
-        .orderBy("channel")
-    }),
-    // Paths — top-20 most-travelled 3-step event paths: two lags over the
-    // per-user ordered stream (ONE shuffle + shared sort), count per
-    // (a, b, c), TakeOrderedAndProject — the product-analytics "common
-    // journeys" table next to q_funnel/q_pagerank.
-    "q_paths" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("c"),
-          lag(col("event_type"), 1).over(w).as("b"),
-          lag(col("event_type"), 2).over(w).as("a"))
-        .filter(col("a").isNotNull)
-        .groupBy("a", "b", "c").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"), col("c"))
-        .limit(20)
-    }),
-    // Bursts — buckets whose count crosses 2× the trailing-3-bucket mean,
-    // flagged by exact integer cross-multiplication (n·3 > prev3·2 — no
-    // division, engine-portable), only where a full 3-bucket history
-    // exists. Per-type windows over ALREADY-AGGREGATED bucket counts —
-    // the anomaly row a rate monitor alerts on.
-    "q_burst" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val buckets = t(s, dir, "events")
-        .groupBy(expr("(ts div 300000000000) * 300").as("bucket_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("bucket_start")
-        .rowsBetween(-3, -1)
-      buckets
-        .withColumn("prev3", sum(col("n")).over(w))
-        .withColumn("prev_cnt", count(col("n")).over(w))
-        .filter(col("prev_cnt") === 3 && col("n") * 3 > col("prev3") * 2)
-        .select(col("event_type"), col("bucket_start"), col("n"),
-          col("prev3"))
-        .orderBy("event_type", "bucket_start")
-    }),
-    // Hierarchy — bounded ancestor closure by pointer doubling (Spark has
-    // no recursive CTE; the oracle runs DuckDB's WITH RECURSIVE over the
-    // same parent table). The hierarchy is the dense binary referral tree
-    // parent(u) = u div 2 over the event user population — derived from
-    // real ids, deterministic, max depth ≈ log₂|users|. log₂(depth)
-    // closure self-joins instead of depth-many recursive rounds.
-    "q_tree_paths" -> ((s, dir) => {
-      val parents = t(s, dir, "events").select(col("user_id")).distinct()
-        .select(col("user_id").as("node"),
-          when(col("user_id") > 0, expr("user_id div 2")).as("parent"))
-      graft.operators.Hierarchy.ancestors(parents, "node", "parent", 16)
-        .orderBy("node", "dist")
-    }),
-    // Hierarchy — subtree rollup over the same tree: per node, the number
-    // of subtree users that produced events and their total event count —
-    // the org-chart/category-tree aggregate every warehouse builds with a
-    // recursive CTE, here ONE closure + ONE hash aggregate on the
-    // ancestor. Self included; users without events still report a row.
-    "q_tree_rollup" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val parents = ev.select(col("user_id")).distinct()
-        .select(col("user_id").as("node"),
-          when(col("user_id") > 0, expr("user_id div 2")).as("parent"))
-      val perUser = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-      graft.operators.Hierarchy.subtreeAgg(parents, "node", "parent",
-          perUser, "user_id", "n_events", 16)
-        .select(col("node"), col("n_desc"), col("sum_value").as("subtree_events"))
-        .orderBy("node")
-    }))
-
-  val oracles: Map[String, String] = Map(
-    "q_pagerank" ->
+    },
       """WITH seq AS (
            SELECT event_type,
              lag(event_type) OVER (PARTITION BY user_id
@@ -506,8 +429,20 @@ object Events {
          SELECT n.node AS event_type,
            cast(150000000000 + coalesce(c3.s, 0) AS BIGINT) AS rank
          FROM nodes n LEFT JOIN c3 ON n.node = c3.node
-         ORDER BY event_type""",
-    "q_ewma" ->
+         ORDER BY event_type"""),
+    QueryDef("q_ewma", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      val cents = (dec2(col("value")) * 100).cast("long")
+      val num = (0 until 8).map { i =>
+        val x = if (i == 0) cents else lag(cents, i).over(w)
+        coalesce(x, lit(0L)) * lit(1L << (7 - i))
+      }.reduce(_ + _)
+      t(s, dir, "events")
+        .select(col("user_id"), col("event_id"),
+          (num / lit(25600.0)).as("ewma"))
+        .orderBy("user_id", "event_id")
+    },
       """WITH e AS (
            SELECT user_id, event_id, ts,
              cast(cast(value AS decimal(18,2)) * 100 AS BIGINT) AS cents
@@ -523,147 +458,36 @@ object Events {
             + coalesce(lag(cents, 7) OVER w, 0)) :: DOUBLE / 25600 AS ewma
          FROM e
          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         ORDER BY user_id, event_id""",
-    "q_rolling" ->
-      """SELECT user_id, event_id, count(*) OVER w AS n_win,
-         cast(sum(cast(value AS decimal(18,2))) OVER w AS DOUBLE)
-           / (count(*) OVER w) AS roll_avg
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, event_id""",
-    "q_unpivot" ->
-      """SELECT event_type, band, n FROM (
-           SELECT event_type, 'low' AS band,
-             cast(count_if(value < 10) AS bigint) AS n
-           FROM events GROUP BY 1
-           UNION ALL
-           SELECT event_type, 'mid',
-             cast(count_if(value >= 10 AND value < 100) AS bigint)
-           FROM events GROUP BY 1
-           UNION ALL
-           SELECT event_type, 'high',
-             cast(count_if(value >= 100) AS bigint)
-           FROM events GROUP BY 1)
-         ORDER BY event_type, band""",
-    "q_gapfill" ->
-      """WITH b AS (
-           SELECT (epoch_ns(ts) // 1000000000 // 300) * 300 AS bucket,
-             count(*) AS n
-           FROM events WHERE event_type = 'purchase' GROUP BY 1),
-         bounds AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM b),
-         scaffold AS (
-           SELECT unnest(generate_series(lo, hi, 300)) AS bucket FROM bounds)
-         SELECT s.bucket, cast(coalesce(n, 0) AS bigint) AS n
-         FROM scaffold s LEFT JOIN b USING (bucket)
-         ORDER BY bucket""",
-    "q_cohort" ->
-      """WITH ev AS (
-           SELECT user_id,
-             (epoch_ns(ts) // 1000000000) // 604800 AS week FROM events),
-         first AS (
-           SELECT user_id, min(week) AS cohort_week FROM ev GROUP BY 1)
-         SELECT cohort_week, week, count(DISTINCT e.user_id) AS n_users
-         FROM (SELECT DISTINCT user_id, week FROM ev) e
-         JOIN first USING (user_id)
-         GROUP BY 1, 2 ORDER BY cohort_week, week""",
-    "q_histogram" ->
-      """SELECT event_type, cast(floor(value / 50.0) AS bigint) AS bucket,
-         count(*) AS n FROM events
-         GROUP BY 1, 2 ORDER BY event_type, bucket""",
-    "q_winsorize" ->
-      """WITH ev AS (
-           SELECT event_type,
-             cast(cast(value AS decimal(18,2)) * 100 AS BIGINT) AS cents
-           FROM events),
-         bounds AS (
-           SELECT event_type,
-             percentile_cont(0.05) WITHIN GROUP (ORDER BY cents) AS p05,
-             percentile_cont(0.95) WITHIN GROUP (ORDER BY cents) AS p95
-           FROM ev GROUP BY event_type)
-         SELECT ev.event_type, count(*) AS n,
-           count(*) FILTER (WHERE cents < p05) AS n_lo,
-           count(*) FILTER (WHERE cents > p95) AS n_hi,
-           round(max(p05) / 100.0, 6) AS clip_lo,
-           round(max(p95) / 100.0, 6) AS clip_hi
-         FROM ev JOIN bounds ON ev.event_type = bounds.event_type
-         GROUP BY ev.event_type ORDER BY ev.event_type""",
-    "q_join_degree" ->
-      """WITH dl AS (
-           SELECT user_id AS key, count(*) AS d_events
-           FROM events GROUP BY 1),
-         dr AS (
-           SELECT o_custkey AS key, count(*) AS d_orders
-           FROM orders GROUP BY 1)
-         SELECT dl.key, d_events, d_orders,
-           d_events * d_orders AS pairs
-         FROM dl JOIN dr ON dl.key = dr.key
-         ORDER BY pairs DESC, dl.key LIMIT 10""",
-    "q_anomaly" ->
-      """WITH cells AS (
-           SELECT event_type,
-             epoch_ns(ts) // 86400000000000 AS day,
-             (epoch_ns(ts) % 86400000000000) // 3600000000000 AS hour,
-             count(*) AS n
-           FROM events GROUP BY 1, 2, 3),
-         slots AS (
-           SELECT event_type, hour, count(*) AS slot_cells,
-             sum(n) AS slot_sum
-           FROM cells GROUP BY 1, 2)
-         SELECT c.event_type, c.day, c.hour, c.n,
-           c.n * s.slot_cells > 2 * s.slot_sum AS is_anomaly
-         FROM cells c JOIN slots s
-           ON c.event_type = s.event_type AND c.hour = s.hour
-         ORDER BY c.event_type, c.day, c.hour""",
-    "q_funnel" ->
-      """WITH tv AS (
-           SELECT user_id, min(epoch_ns(ts)) AS t FROM events
-           WHERE event_type = 'view' GROUP BY 1),
-         tc AS (
-           SELECT e.user_id, min(epoch_ns(e.ts)) AS t FROM events e
-           JOIN tv ON e.user_id = tv.user_id
-           WHERE e.event_type = 'click' AND epoch_ns(e.ts) > tv.t GROUP BY 1),
-         tp AS (
-           SELECT e.user_id, min(epoch_ns(e.ts)) AS t FROM events e
-           JOIN tc ON e.user_id = tc.user_id
-           WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) > tc.t GROUP BY 1)
-         SELECT stage, n_users FROM (
-           SELECT '1_view' AS stage, count(*) AS n_users FROM tv
-           UNION ALL SELECT '2_click', count(*) FROM tc
-           UNION ALL SELECT '3_purchase', count(*) FROM tp)
-         ORDER BY stage""",
-    "q_stream_tumbling" ->
-      """SELECT (epoch_ns(ts) // 300000000000) * 300 AS bucket_start,
-         event_type, count(*) AS n_events,
-         cast(sum(cast(value AS decimal(18,2))) AS double) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY bucket_start, event_type""",
-    "q_stream_sliding" ->
-      """SELECT bucket_start, event_type, count(*) AS n_events FROM (
-           SELECT (epoch_ns(ts) // 300000000000) * 300 AS bucket_start,
-                  event_type FROM events
-           UNION ALL
-           SELECT (epoch_ns(ts) // 300000000000) * 300 - 300, event_type
-           FROM events)
-         GROUP BY 1, 2 ORDER BY bucket_start, event_type""",
-    "q_sessionize" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, epoch_ns(ts) AS tns,
-             CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL THEN 1
-                  WHEN epoch_ns(ts) - lag(epoch_ns(ts)) OVER w
-                       >= 1800000000000 THEN 1
-                  ELSE 0 END AS new_session
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         numbered AS (
-           SELECT user_id, event_id, tns,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY tns, event_id
-               ROWS UNBOUNDED PRECEDING) AS sid
-           FROM flagged)
-         SELECT user_id, min(tns) // 1000000000 AS session_start,
-           count(*) AS n_events, min(event_id) AS first_event
-         FROM numbered GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-    "q_scd2" ->
+         ORDER BY user_id, event_id"""),
+    // SCD Type-2 history build: collapse each user's event stream into
+    // state-change intervals (state = event_type), the
+    // slowly-changing-dimension shape every warehouse keeps for
+    // point-in-time joins. Gaps-and-islands: keep rows where the state
+    // differs from its predecessor, then valid_to = the NEXT kept row's
+    // timestamp (lead over the filtered set), NULL marking the current
+    // version. Both windows share one partitioning (user_id) and one
+    // ordering, so Spark shuffles once and reuses the sort — per-user
+    // work, no global order, the 100 TB shape.
+    QueryDef("q_scd2", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      val changed = t(s, dir, "events")
+        .select(col("user_id"), col("event_id"), col("ts"),
+          col("event_type").as("state"),
+          lag(col("event_type"), 1).over(w).as("__prev"))
+        .filter(col("__prev").isNull || col("__prev") =!= col("state"))
+      changed
+        .select(col("user_id"), col("state"),
+          row_number().over(w).as("version"),
+          // micros, not nanos: DuckDB reads parquet TIMESTAMP_NANOS at
+          // microsecond precision, so sub-µs digits can't oracle-check.
+          // `div` keeps the conversion exact (see Q.tsCol).
+          expr("ts div 1000").as("valid_from_us"),
+          expr("lead(ts div 1000, 1) OVER (PARTITION BY user_id " +
+            "ORDER BY ts, event_id)").as("valid_to_us"))
+        .withColumn("is_current", col("valid_to_us").isNull)
+        .orderBy("user_id", "version")
+    },
       """WITH changed AS (
            SELECT user_id, event_id, epoch_ns(ts) AS tns,
              event_type AS state,
@@ -680,8 +504,19 @@ object Events {
            lead(tns) OVER w2 IS NULL AS is_current
          FROM kept
          WINDOW w2 AS (PARTITION BY user_id ORDER BY tns, event_id)
-         ORDER BY user_id, version""",
-    "q_triangles" ->
+         ORDER BY user_id, version"""),
+    // Triangle enumeration on the event-transition graph: which triples of
+    // event types mutually precede one another — the graph-analytics
+    // staple (clustering coefficient, community seeds). Edges are the
+    // distinct consecutive-type transitions; see Graph.triangles for the
+    // wedge-join shape and the degree-orientation scale note.
+    QueryDef("q_triangles", (s, dir) => {
+      val edges = graft.operators.Graph.transitionEdges(
+        t(s, dir, "events"), "user_id", "event_type",
+        Seq(col("ts"), col("event_id")))
+      graft.operators.Graph.triangles(edges)
+        .orderBy("a", "b", "c")
+    },
       """WITH seq AS (
            SELECT event_type AS dst,
              lag(event_type) OVER (PARTITION BY user_id
@@ -695,12 +530,25 @@ object Events {
            FROM und e1 JOIN und e2 ON e1.a = e2.a AND e1.b < e2.b)
          SELECT w.a, w.b, w.c FROM wedge w
          WHERE EXISTS (SELECT 1 FROM und u WHERE u.a = w.b AND u.b = w.c)
-         ORDER BY a, b, c""",
+         ORDER BY a, b, c"""),
+    // Bounded-radius harmonic centrality on the same transition graph —
+    // the Common Crawl host-ranking signal (Boldi & Vigna 2014), radius 3,
+    // exact lcm-scaled integers (h_scaled = 6n1 + 3n2 + 2n3) so ranks are
+    // bit-portable. Three reverse-BFS rounds, each one frontier⋈edges join
+    // + distinct + visited anti-join, all keyed on the node.
+    QueryDef("q_harmonic", (s, dir) => {
+      val edges = graft.operators.Graph.transitionEdges(
+        t(s, dir, "events"), "user_id", "event_type",
+        Seq(col("ts"), col("event_id")))
+      graft.operators.Graph.harmonicCentrality(edges, 3)
+        .select(col("node").as("event_type"), col("n1"), col("n2"),
+          col("n3"), col("h_scaled"))
+        .orderBy("event_type")
+    },
     // Harmonic centrality re-run as three unrolled reverse-BFS rounds:
     // distance-r node sets via EXCEPT against earlier rounds and the
     // identity, exact integer lcm(1..3)-scaled sum — Graph.harmonic-
     // Centrality verbatim.
-    "q_harmonic" ->
       """WITH seq AS (
            SELECT event_type AS dst,
              lag(event_type) OVER (PARTITION BY user_id
@@ -736,8 +584,25 @@ object Events {
          LEFT JOIN c1 ON c1.v = n.node
          LEFT JOIN c2 ON c2.v = n.node
          LEFT JOIN c3 ON c3.v = n.node
-         ORDER BY event_type""",
-    "q_conversion_latency" ->
+         ORDER BY event_type"""),
+    // Funnel latency — minutes from a user's FIRST view to their first
+    // purchase at-or-after it, bucketed into a distributed histogram
+    // (exact integer nanos div, no global order statistics): the
+    // time-to-convert distribution next to q_funnel's conversion counts.
+    QueryDef("q_conversion_latency", (s, dir) => {
+      val ev = t(s, dir, "events")
+        .select(col("user_id"), col("ts"), col("event_type"))
+      val v = ev.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min(col("ts")).as("__v"))
+      ev.filter(col("event_type") === "purchase")
+        .join(v, "user_id")
+        .filter(col("ts") >= col("__v"))
+        .groupBy("user_id")
+        .agg(min(col("ts")).as("__p"), min(col("__v")).as("__fv"))
+        .select(expr("(__p - __fv) div 60000000000").as("latency_min"))
+        .groupBy("latency_min").agg(count(lit(1)).as("n_users"))
+        .orderBy("latency_min")
+    },
       """WITH v AS (
            SELECT user_id, min(epoch_ns(ts)) AS fv FROM events
            WHERE event_type = 'view' GROUP BY user_id),
@@ -748,8 +613,24 @@ object Events {
            GROUP BY e.user_id)
          SELECT cast((fp - fv) // 60000000000 AS BIGINT) AS latency_min,
            cast(count(*) AS BIGINT) AS n_users
-         FROM p GROUP BY 1 ORDER BY latency_min""",
-    "q_attribution" ->
+         FROM p GROUP BY 1 ORDER BY latency_min"""),
+    // Attribution — linear multi-touch: every view/click inside the hour
+    // before a user's NEXT purchase shares that purchase's value equally
+    // (credit = value·10⁶ div n in exact integer micro-cents, remainder
+    // dropped — engine-portable, no decimal-division dialect). The
+    // conversion lookup is ONE descending per-user window carrying the
+    // last-seen purchase (ignoreNulls last over strictly-later rows), so
+    // there is no touch×purchase join anywhere — the 100 TB shape.
+    QueryDef("q_attribution", (s, dir) => {
+      val touches = purchaseTouches(s, dir)
+        .select(col("event_type").as("channel"),
+          col("__cv.e").as("__conv"), col("__cv.c").as("__cc"))
+      val perConv = touches.groupBy("__conv").agg(count(lit(1)).as("__n"))
+      touches.join(perConv, "__conv")
+        .select(col("channel"),
+          expr("__cc * 1000000L div __n").as("__micro"))
+        .transform(creditByChannel)
+    },
       """WITH ev AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id, event_type,
              cast(cast(value AS decimal(18,2)) * 100 AS BIGINT) AS c
@@ -773,8 +654,30 @@ object Events {
            FROM touch t JOIN n USING (conv))
          SELECT channel, cast(count(*) AS BIGINT) AS n_touches,
            round(cast(sum(micro) AS DOUBLE) / 100000000.0, 6) AS attributed
-         FROM cr GROUP BY 1 ORDER BY channel""",
-    "q_attribution_decay" ->
+         FROM cr GROUP BY 1 ORDER BY channel"""),
+    // Attribution, time-decay variant: the 8 most recent touches before
+    // the conversion carry dyadic weights 2^(8−rank) (most recent
+    // heaviest — the EWMA trick), credit = value·10⁶·w div Σw in exact
+    // integers, so even the decay schedule oracle-checks. Same
+    // no-pair-join conversion lookup as q_attribution.
+    QueryDef("q_attribution_decay", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val touches = purchaseTouches(s, dir)
+        .select(col("event_type").as("channel"), col("ts"),
+          col("event_id"), col("__cv.e").as("__conv"),
+          col("__cv.c").as("__cc"))
+      val wConv = Window.partitionBy("__conv")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      val ranked = touches
+        .withColumn("__rn", row_number().over(wConv))
+        .filter(col("__rn") <= 8)
+        .withColumn("__w", expr("CAST(1 AS BIGINT) << (8 - __rn)"))
+      val tot = ranked.groupBy("__conv").agg(sum(col("__w")).as("__tw"))
+      ranked.join(tot, "__conv")
+        .select(col("channel"),
+          expr("__cc * 1000000L * __w div __tw").as("__micro"))
+        .transform(creditByChannel)
+    },
       """WITH ev AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id, event_type,
              cast(cast(value AS decimal(18,2)) * 100 AS BIGINT) AS c
@@ -805,8 +708,24 @@ object Events {
            FROM rk r JOIN tw t USING (conv))
          SELECT channel, cast(count(*) AS BIGINT) AS n_touches,
            round(cast(sum(micro) AS DOUBLE) / 100000000.0, 6) AS attributed
-         FROM cr GROUP BY 1 ORDER BY channel""",
-    "q_paths" ->
+         FROM cr GROUP BY 1 ORDER BY channel"""),
+    // Paths — top-20 most-travelled 3-step event paths: two lags over the
+    // per-user ordered stream (ONE shuffle + shared sort), count per
+    // (a, b, c), TakeOrderedAndProject — the product-analytics "common
+    // journeys" table next to q_funnel/q_pagerank.
+    QueryDef("q_paths", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      t(s, dir, "events")
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type").as("c"),
+          lag(col("event_type"), 1).over(w).as("b"),
+          lag(col("event_type"), 2).over(w).as("a"))
+        .filter(col("a").isNotNull)
+        .groupBy("a", "b", "c").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("a"), col("b"), col("c"))
+        .limit(20)
+    },
       """WITH s AS (
            SELECT event_type AS c,
              lag(event_type, 1) OVER (PARTITION BY user_id
@@ -816,8 +735,28 @@ object Events {
            FROM events)
          SELECT a, b, c, cast(count(*) AS BIGINT) AS n
          FROM s WHERE a IS NOT NULL GROUP BY 1, 2, 3
-         ORDER BY n DESC, a, b, c LIMIT 20""",
-    "q_burst" ->
+         ORDER BY n DESC, a, b, c LIMIT 20"""),
+    // Bursts — buckets whose count crosses 2× the trailing-3-bucket mean,
+    // flagged by exact integer cross-multiplication (n·3 > prev3·2 — no
+    // division, engine-portable), only where a full 3-bucket history
+    // exists. Per-type windows over ALREADY-AGGREGATED bucket counts —
+    // the anomaly row a rate monitor alerts on.
+    QueryDef("q_burst", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val buckets = t(s, dir, "events")
+        .groupBy(expr("(ts div 300000000000) * 300").as("bucket_start"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      val w = Window.partitionBy("event_type").orderBy("bucket_start")
+        .rowsBetween(-3, -1)
+      buckets
+        .withColumn("prev3", sum(col("n")).over(w))
+        .withColumn("prev_cnt", count(col("n")).over(w))
+        .filter(col("prev_cnt") === 3 && col("n") * 3 > col("prev3") * 2)
+        .select(col("event_type"), col("bucket_start"), col("n"),
+          col("prev3"))
+        .orderBy("event_type", "bucket_start")
+    },
       """WITH b AS (
            SELECT (epoch_ns(ts) // 300000000000) * 300 AS bucket_start,
              event_type, cast(count(*) AS BIGINT) AS n
@@ -832,8 +771,20 @@ object Events {
          SELECT event_type, cast(bucket_start AS BIGINT) AS bucket_start,
            n, cast(prev3 AS BIGINT) AS prev3
          FROM t WHERE prev_cnt = 3 AND n * 3 > prev3 * 2
-         ORDER BY event_type, bucket_start""",
-    "q_tree_paths" ->
+         ORDER BY event_type, bucket_start"""),
+    // Hierarchy — bounded ancestor closure by pointer doubling (Spark has
+    // no recursive CTE; the oracle runs DuckDB's WITH RECURSIVE over the
+    // same parent table). The hierarchy is the dense binary referral tree
+    // parent(u) = u div 2 over the event user population — derived from
+    // real ids, deterministic, max depth ≈ log₂|users|. log₂(depth)
+    // closure self-joins instead of depth-many recursive rounds.
+    QueryDef("q_tree_paths", (s, dir) => {
+      val parents = t(s, dir, "events").select(col("user_id")).distinct()
+        .select(col("user_id").as("node"),
+          when(col("user_id") > 0, expr("user_id div 2")).as("parent"))
+      graft.operators.Hierarchy.ancestors(parents, "node", "parent", 16)
+        .orderBy("node", "dist")
+    },
       """WITH RECURSIVE parents AS (
            SELECT DISTINCT user_id AS node,
              CASE WHEN user_id > 0 THEN user_id // 2 END AS parent
@@ -845,8 +796,24 @@ object Events {
            SELECT a.node, p.parent, a.dist + 1
            FROM anc a JOIN parents p ON p.node = a.anc
            WHERE p.parent IS NOT NULL AND a.dist < 16)
-         SELECT node, anc, dist FROM anc ORDER BY node, dist""",
-    "q_tree_rollup" ->
+         SELECT node, anc, dist FROM anc ORDER BY node, dist"""),
+    // Hierarchy — subtree rollup over the same tree: per node, the number
+    // of subtree users that produced events and their total event count —
+    // the org-chart/category-tree aggregate every warehouse builds with a
+    // recursive CTE, here ONE closure + ONE hash aggregate on the
+    // ancestor. Self included; users without events still report a row.
+    QueryDef("q_tree_rollup", (s, dir) => {
+      val ev = t(s, dir, "events")
+      val parents = ev.select(col("user_id")).distinct()
+        .select(col("user_id").as("node"),
+          when(col("user_id") > 0, expr("user_id div 2")).as("parent"))
+      val perUser = ev.groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+      graft.operators.Hierarchy.subtreeAgg(parents, "node", "parent",
+          perUser, "user_id", "n_events", 16)
+        .select(col("node"), col("n_desc"), col("sum_value").as("subtree_events"))
+        .orderBy("node")
+    },
       """WITH RECURSIVE parents AS (
            SELECT DISTINCT user_id AS node,
              CASE WHEN user_id > 0 THEN user_id // 2 END AS parent
@@ -869,5 +836,5 @@ object Events {
          SELECT p.node, cast(count(u.n_events) AS BIGINT) AS n_desc,
            cast(sum(u.n_events) AS BIGINT) AS subtree_events
          FROM pairs p LEFT JOIN per_user u ON u.user_id = p.descn
-         GROUP BY 1 ORDER BY p.node""")
+         GROUP BY 1 ORDER BY p.node"""))
 }

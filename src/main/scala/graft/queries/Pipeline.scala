@@ -277,6 +277,34 @@ object Pipeline {
                    FROM x JOIN dir2 ON dir2.i = x.pos GROUP BY x.vec_id)
          $select"""
 
+  /** The decoded embeddings (vec_id, emb) every vector query reads. */
+  private def embFrame(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings")
+      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
+
+  /** The vec_id < 5 query set (q_id, q_emb) of a vector frame. */
+  private def queriesOf(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+
+  /** The fixed first-16 coarse quantizer of a vector frame (Ivf.train,
+    * iters = 0: the 16 smallest vec_ids' vectors, one collect). */
+  private def ivfSeeds(emb: DataFrame): Seq[Seq[Double]] =
+    graft.operators.Ivf.train(emb, "vec_id", "emb", k = 16, iters = 0)
+
+  /** recall@10 per query of an approximate top-10 over `emb`: `approx`
+    * maps (corpus, vec_id < 5 queries) to its (q_id, vec_id) picks,
+    * scored against the exact cosine top-10 by Similarity.recallAtK
+    * (a left join, so a query with zero overlap still reports its row). */
+  private def annRecall(emb: DataFrame)(
+      approx: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val qs = queriesOf(emb)
+    val exact = Similarity.exactTopK(emb, qs, 10)
+      .select(col("q_id"), col("vec_id"))
+    Similarity.recallAtK(exact,
+      approx(emb, qs).select(col("q_id"), col("vec_id")), 10)
+  }
+
   /**
    * The shared IVF-PQ recall@10 downstream (q_ivf_pq_recall and the
    * three rotated variants): queries = vec_id < 5, fixed first-16
@@ -297,18 +325,11 @@ object Pipeline {
     // plain-decode caller's consumers are codegen'd dot products cheap
     // enough that adding an exchange + 32-task stages measured WORSE
     // (q_ivf_pq_recall 0.33 → 0.96 s with a spread here, reverted).
-    val emb = embIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val qs = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-      k = 16, iters = 0)
-    val exact = Similarity.exactTopK(emb, qs, 10)
-      .select(col("q_id"), col("vec_id"))
-    val adc = graft.operators.Pq.ivfAdcTopK(emb, qs, centroids, nprobe = 4,
-      topK = 10, m = 4, k = 8, dim = 64)
-      .select(col("q_id"), col("vec_id"))
-    Similarity.recallAtK(exact, adc, 10)
+    annRecall(embIn
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Pq.ivfAdcTopK(emb, qs, ivfSeeds(emb),
+        nprobe = 4, topK = 10, m = 4, k = 8, dim = 64)
+    }
   }
 
   /** One rotation mode's exact-integer PQ-error block for the
@@ -523,6 +544,59 @@ object Pipeline {
          FROM seg GROUP BY piece),
        tot1 AS (SELECT cast(sum(n) AS BIGINT) AS t FROM n1)"""
   }
+
+  /** Trained piece costs `head` (piece, n, cost) from the recounts `n`
+    * over their total `tot` — the `cost` recipe over hard-EM counts. */
+  private def uniTcostCte(head: String, n: String, tot: String): String =
+    s"""$head (
+           SELECT piece, n,
+             cast(round((cast(ln(t) AS decimal(17,10))
+               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
+               AS cost
+           FROM $n, $tot)"""
+
+  /** Unigram.pruneVocab over the trained costs `tcost`: each multi-char
+    * piece's loss n·(Σ char costs − cost) against the candidate-stage
+    * char costs `ccost`, the top 10 kept in `kept_multi<sfx>`. */
+  private def uniPruneCtes(tcost: String, sfx: String): String =
+    s"""multiexp$sfx AS (
+           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
+           FROM $tcost t, generate_series(1, $UniPieceLen) AS gs(s)
+           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
+         multi$sfx AS (
+           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
+             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
+               cast(sum(cc.ccost) AS BIGINT) AS alt
+             FROM multiexp$sfx m JOIN ccost cc ON cc.c = m.c
+             GROUP BY m.piece)),
+         kept_multi$sfx AS (
+           SELECT piece, n, cost, loss FROM multi$sfx
+           ORDER BY loss DESC, piece LIMIT 10)"""
+
+  /** The pruned model as reported: every char piece (null loss) beside
+    * the kept multi-char pieces, highest loss first. */
+  private def uniPruneSelect(tcost: String, sfx: String): String =
+    s"""SELECT piece, n, cost, loss FROM (
+           SELECT piece, n, cost, cast(NULL AS BIGINT) AS loss
+           FROM $tcost WHERE len(piece) = 1
+           UNION ALL
+           SELECT piece, n, cost, loss FROM kept_multi$sfx)
+         ORDER BY loss DESC NULLS LAST, piece"""
+
+  /** [[unigramCtes]] + one Kudo prune, ending in the pruned model `cost2`
+    * (piece, cost): the char pieces and the kept multi-char pieces at
+    * their trained costs. */
+  private def UniCost2Ctes: String =
+    s"""$unigramCtes,
+         ${uniTcostCte("tcost AS MATERIALIZED", "n1", "tot1")},
+         ccost AS (
+           SELECT piece AS c, cost AS ccost FROM cost
+           WHERE len(piece) = 1),
+         ${uniPruneCtes("tcost", "")},
+         cost2 AS MATERIALIZED (
+           SELECT piece, cost FROM tcost WHERE len(piece) = 1
+           UNION ALL
+           SELECT piece, cost FROM kept_multi)"""
 
   /** Shared KMV oracle prelude: distinct per-source fingerprint hashes
     * (portable md5-of-md5), per-source rank, the ≤ k sketch rows, and the
@@ -752,3175 +826,107 @@ object Pipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // L1 — per-source corpus-health report: the dashboard row a pipeline
-    // publishes after each ingest. One scan, one hash aggregate; every
-    // metric is either an exact integer or ONE division of exact longs
-    // (bit-portable without rounding).
-    "q_quality_report" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      docs.select(col("source"), col("lang"), col("n_chars"),
-          size(split(col("text"), "\\s+")).cast("long").as("__tok"),
-          (TA.hasEmail(col("text")) || TA.hasPhone(col("text"))).as("__pii"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("__tok")).as("n_tokens"),
-          (sum(col("__tok")).cast("double") / count(lit(1)))
-            .as("avg_tokens"),
-          countDistinct(col("lang")).as("n_langs"),
-          sum(when(col("__tok") < 20, 1L).otherwise(0L)).as("n_short"),
-          sum(when(col("__pii"), 1L).otherwise(0L)).as("n_pii"),
-          min(col("n_chars")).as("min_chars"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy("source")
-    }),
-    // L1/Scale — drift report: exact total-variation distance of each
-    // source's doc-length distribution from the corpus-wide one. The scan
-    // collapses map-side to a (source × bin) cell table; everything after
-    // is arithmetic over that tiny frame, and the single final division
-    // keeps the score bit-portable.
-    "q_drift_tvd" -> ((s, dir) => {
-      Quality.driftTvd(t(s, dir, "documents"), "source",
-          least(floor(col("n_chars") / lit(64)).cast("long"), lit(8L)))
-        .orderBy("source")
-    }),
-    // L1 — corpus stats per language (exact integer sums).
-    "q_text_stats" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(TA.tokenCountWs(col("text"))).as("sum_tokens"),
-          (sum(col("n_chars")) / count(lit(1))).as("avg_chars"))
-        .orderBy("lang")
-    }),
-    // L1 — whitespace vs BPE-ish regex token counts per document.
-    "q_token_count" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TA.tokenCountWs(col("text")).as("n_tokens_ws"),
-          TA.tokenCountRe(col("text")).as("n_tokens_re"))
-        .orderBy("doc_id")
-    }),
-    // L1 — heuristic quality scoring.
-    "q_text_quality" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TA.tokenCountWs(col("text")).as("n_tokens"),
-          TA.avgTokenLen(col("text")).as("avg_token_len"),
-          TA.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-    // L1 — intra-document repetition (Gopher-style repeated-3-gram
-    // fraction): high values flag boilerplate/spam before training.
-    "q_rep_ratio" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), "\\s+").as("__words"))
-        .select(col("doc_id"),
-          size(Dedup.rawShinglesFromWords(col("__words"), 3)).as("n_grams"),
-          round(TA.repetitionRatio(col("__words"), 3), 6).as("rep_ratio"))
-        .orderBy("doc_id")
-    }),
-    // L1 — marker-word language ID (argmax of stopword-mass scores).
-    "q_lang_id" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TA.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    }),
-    // A6 — canonical-text fingerprint for exact near-identical dedup.
-    "q_doc_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    }),
-    // A6 — rolling-hash fingerprint (Rabin-Karp): exact cross-engine
-    // integer fold, complementing the md5 canonical fingerprint.
-    "q_doc_rollhash" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TA.rollingHash(col("text")).as("rollhash"))
-        .orderBy("doc_id")
-    }),
-    // L4 — PII pattern scan: per-source hit counts.
-    // Scale — deterministic md5-gated sample (~1/8): reproducible across
-    // engines, runs, and partitionings, unlike df.sample().
-    "q_sample_hash" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .filter(Sampling.keepHex(col("doc_id"), "split1", "2000"))
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-    // Scale — deterministic k-per-group sample (5 docs per source): quota
-    // sampling for eval sets / per-source spot checks, reproducible across
-    // engines and re-runs because the rank order is the portable md5.
-    "q_sample_group" -> ((s, dir) => {
-      Sampling.groupSample(t(s, dir, "documents"), Seq("source"), "doc_id",
-        "gs1", 5)
-        .select("source", "doc_id", "sample_rank")
-        .orderBy("source", "doc_id")
-    }),
-    // Scale — weighted deterministic sample: keep probability ∝ doc length
-    // (longer docs sampled at a higher rate — a training-mix lever).
-    "q_sample_weighted" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .filter(Sampling.keepWeighted(col("doc_id"), "w1",
-          col("n_chars") * 50))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
-    }),
-    // Scale — stable train/val/test assignment (~80/10/10) by hash range;
-    // every doc lands in exactly one split, forever.
-    "q_sample_split" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("lang"),
-          Sampling.splitLabel(col("doc_id"), "corpusv1").as("split"))
-        .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
-        .orderBy("lang", "split")
-    }),
-    // Scale — deterministic repeat-upsampling (the "epochs per source"
-    // mix lever): en docs repeat 2.5× in expectation (exactly 2 or 3,
-    // hash-gated), others 1.25× — the Wikipedia-gets-4-epochs recipe
-    // primitive, reproducible forever. Scan-local explode, no shuffle.
-    "q_repeat_upsample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Sampling.repeatUpsample(docs, "doc_id", "rep1",
-        when(col("lang") === "en", lit(2.5)).otherwise(lit(1.25)))
-        .select(col("doc_id"), col("lang"), col("copy"))
-        .orderBy("doc_id", "copy")
-    }),
-    // Scale — deterministic global shuffle into training shards: shard =
-    // portable hash mod 8, position = in-shard rank of the full hash.
-    // Shards-in-order ∘ positions-in-order is a reproducible pseudo-
-    // random permutation of the corpus, built from ONE hash shuffle + a
-    // per-shard sort — never a global orderBy (see
-    // Sampling.shuffleShards). The full (doc_id, shard, pos) mapping is
-    // emitted so the oracle hash-checks the exact permutation.
-    "q_shuffle_shards" -> ((s, dir) => {
-      Sampling.shuffleShards(t(s, dir, "documents"), "doc_id", "shuf1", 8)
-        .select(col("doc_id"), col("shard"), col("pos"))
-        .orderBy("shard", "pos")
-    }),
-    // L5h — length-bucketed sequence packing (Sampling.packSequences):
-    // the no-split training-batch packer — token counts round up to
-    // power-of-two buckets, so each (shard, bucket) packs exactly
-    // capacity/bucket docs per sequence via ONE row_number window;
-    // exact padding accounting, deterministic portable-hash shards,
-    // no sequential first-fit fold. Per-sequence report with padding.
-    "q_seq_pack" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          TA.tokenCountWs(col("text")).as("n_tokens"))
-      graft.operators.Sampling.packSequences(docs, "doc_id", "n_tokens",
-          "pack1", nShards = 4, capacity = 128)
-        .groupBy("shard", "bucket", "seq_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("used_tokens"))
-        .withColumn("padding", lit(128L) - col("used_tokens"))
-        .orderBy("shard", "bucket", "seq_id")
-    }),
-    // L5h — the packing-capacity TUNING CURVE (the q_minhash_band_curve
-    // convention): q_seq_pack reports padding at ONE capacity; this
-    // sweeps capacity ∈ {64, 128, 256} over the SAME token counts and
-    // reports BOTH sides of the trade per capacity — sequences emitted,
-    // padding waste (absolute and as a fraction of the token budget),
-    // and the docs too long to pack at all (counted, never silently
-    // dropped — the q_prepare_e2e funnel rule). Larger capacity admits
-    // more docs (n_oversize falls) but rounds lengths into coarser
-    // power-of-two buckets (pad_frac typically rises): the curve is
-    // what picks the batch shape. One persisted token-count scan feeds
-    // all three sweeps; each is the q_seq_pack plan at its capacity.
-    "q_pack_curve" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          TA.tokenCountWs(col("text")).as("n_tokens"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Seq(64, 128, 256).map { cap =>
-        val seqs = graft.operators.Sampling.packSequences(docs, "doc_id",
-            "n_tokens", "pack1", nShards = 4, capacity = cap)
-          .groupBy("shard", "bucket", "seq_id")
-          .agg(sum(col("n_tokens")).as("used"))
-          .agg(count(lit(1)).as("n_seqs"),
-            coalesce(sum(col("used")), lit(0L)).as("used_tokens"),
-            coalesce(sum(lit(cap.toLong) - col("used")), lit(0L))
-              .as("padding_tokens"))
-        val over = docs.filter(col("n_tokens") > cap || col("n_tokens") < 1)
-          .agg(count(lit(1)).as("n_oversize"))
-        seqs.crossJoin(over)
-          .select(lit(cap.toLong).as("capacity"), col("n_seqs"),
-            col("used_tokens"), col("padding_tokens"), col("n_oversize"),
-            when(col("n_seqs") > 0,
-              col("padding_tokens").cast("double") /
-                (col("n_seqs") * cap).cast("double"))
-              .otherwise(lit(0.0)).as("pad_frac"))
-      }.reduce(_ union _).orderBy("capacity")
-    }),
-    // L5c — deterministic source-INTERLEAVED epoch ordering: docs rank
-    // within their source by the portable md5 permutation, then take the
-    // round-robin global position (rank−1)·n_src + src_idx — the
-    // stratified complement to q_shuffle_shards' global permutation:
-    // every n_src consecutive positions touch each source at most once,
-    // so a training run sees a stable source mix at ANY batch size
-    // (unequal sources leave gaps once exhausted; positions stay unique).
-    // One window per source partition (never global); the source index
-    // comes from a source-count-sized dim that broadcasts back; n_src
-    // arrives via a one-row broadcast cross join.
-    "q_interleave" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val srcs = docs.select(col("source")).distinct()
-      // global window DELIBERATE: srcs is the distinct source set
-      // (source-count-sized, single digits on any corpus cut)
-      val dim = srcs.withColumn("src_idx",
-        row_number().over(Window.orderBy("source")).cast("long") - 1)
-      val n = srcs.agg(count(lit(1)).as("n_src"))
-      val wIn = Window.partitionBy("source").orderBy(col("__h"), col("doc_id"))
-      docs.select(col("doc_id"), col("source"))
-        .withColumn("__h", Sampling.hashHexFull(col("doc_id"), "il1"))
-        .withColumn("src_rank", row_number().over(wIn).cast("long"))
-        .join(broadcast(dim), "source")
-        .crossJoin(broadcast(n))
-        .withColumn("pos",
-          (col("src_rank") - 1) * col("n_src") + col("src_idx"))
-        .select("doc_id", "source", "src_rank", "pos")
-        .orderBy("pos")
-    }),
-    // L5d — fixed-length training-WINDOW emission with document carryover:
-    // the step after q_pack_sequences' whole-doc binning — pretraining
-    // actually slices the concatenated token stream into fixed L-token
-    // windows, and a document crossing a boundary CONTINUES in the next
-    // window. Each source's stream is laid out in doc_id order (one
-    // per-source window pass, never global); a doc at [st, st+n) emits
-    // one row per overlapped window via a bounded sequence explode
-    // (⌈n/L⌉+1 rows max), with its offset and token count inside each.
-    // Pure integer arithmetic → engine-portable with no rounding at all.
-    "q_token_windows" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents").filter(col("text").isNotNull)
-        .select(col("source"), col("doc_id"),
-          TA.tokenCountWs(col("text")).as("n_tok"))
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      docs.withColumn("st", sum(col("n_tok")).over(w) - col("n_tok"))
-        .filter(col("n_tok") > 0)
-        .withColumn("window_id", explode(sequence(
-          expr("st div 128"), expr("(st + n_tok - 1) div 128"))))
-        .select(col("source"), col("window_id"), col("doc_id"),
-          (greatest(col("st"), col("window_id") * 128)
-            - col("window_id") * 128).as("w_start"),
-          (least(col("st") + col("n_tok"), (col("window_id") + 1) * 128)
-            - greatest(col("st"), col("window_id") * 128)).as("n_in_window"))
-        .orderBy("source", "window_id", "doc_id")
-    }),
-    // End-to-end training-mix pipeline: quality-filter → exact dedup by
-    // canonical fingerprint (min-doc_id survivor) → per-language hash
-    // downsample (keep 1/2 of dominant 'en', 3/4 of the rest) → token
-    // budget per language. Every stage is a deterministic, shuffle-
-    // bounded operator — the whole mix is re-derivable at 100 TB.
-    "q_train_mix" -> ((s, dir) => {
-      // Each regex over `text` is materialized exactly once, then quality
-      // derives from the columns — same values as TA.qualityScore, without
-      // re-splitting the text per sub-expression.
-      val base = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TA.tokenCountWs(col("text")).as("n_tokens"),
-          length(regexp_replace(col("text"), "\\s+", "")).cast("double")
-            .as("n_nonspace"),
-          Dedup.fingerprint(col("text")).as("fp"))
-      val scored = base.select(col("doc_id"), col("lang"), col("n_tokens"),
-        (when(col("n_tokens").between(20, 10000), 0.5).otherwise(0.0) +
-          when((col("n_nonspace") / col("n_tokens")).between(3.0, 8.0), 0.5)
-            .otherwise(0.0)).as("quality"),
-        col("fp"))
-      val deduped = Dedup.exactByKey(
-        scored.filter(col("quality") >= 1.0), Seq("fp"), Seq(col("doc_id")))
-      // stratified threshold: downsample the dominant language harder
-      val mixed = deduped.filter(Sampling.hashHex4(col("doc_id"), "mixv1") <
-        when(col("lang") === "en", lit("8000")).otherwise(lit("c000")))
-      mixed.groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-        .orderBy("lang")
-    }),
-    "q_pii_scan" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(TA.hasEmail(col("text")), 1L).otherwise(0L)).as("n_email"),
-          sum(when(TA.hasPhone(col("text")), 1L).otherwise(0L)).as("n_phone"))
-        .orderBy("source")
-    }),
-    // L4 — in-text PII REDACTION (the transform on top of q_pii_scan's
-    // detector): the fixture corpus carries no real PII, so the query
-    // first seeds each document with deterministic synthetic PII derived
-    // from its own key — that makes the scrub provably fire (the oracle
-    // checks the replaced text span-for-span, not a no-op passthrough).
-    // Scan-local codegen'd projection, zero shuffles.
-    "q_pii_redact" -> ((s, dir) => {
-      val seeded = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@mail.example.com or "),
-          format_string("555-%03d-%04d",
-            col("doc_id") % 1000, col("doc_id") % 10000)).as("text"))
-      seeded.select(col("doc_id"),
-          size(regexp_extract_all(col("text"), lit(TA.emailPattern), lit(0)))
-            .cast("long").as("n_email"),
-          size(regexp_extract_all(col("text"), lit(TA.phonePattern), lit(0)))
-            .cast("long").as("n_phone"),
-          TA.redactPii(col("text")).as("redacted"))
-        .orderBy("doc_id")
-    }),
-    // L1 — URL extraction + canonical host stats (the C4/RefinedWeb
-    // domain-filter primitive): pull every URL out of the text, canonicalize
-    // the host (lowercase, strip a leading www.), and count docs/urls per
-    // domain — the table a domain allow/deny policy filters against. The
-    // fixture text carries no URLs, so the query seeds two deterministic
-    // ones per doc (a sharded CDN host exercising the case-fold and a
-    // www. host exercising the strip) before extracting.
-    "q_url_stats" -> ((s, dir) => {
-      val seeded = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("see https://CDN"), (col("doc_id") % 7).cast("string"),
-          lit(".Example.org/p/"), col("doc_id").cast("string"),
-          lit("?ref=x and http://www.example.com/about "),
-          col("text")).as("text"))
-      seeded
-        .select(col("doc_id"), explode(TA.extractUrls(col("text"))).as("url"))
-        .select(col("doc_id"), TA.canonicalHost(col("url")).as("host"))
-        .groupBy("host")
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_urls"))
-        .orderBy("host")
-    }),
-    // L1 — HTML → text extraction (the stage every web corpus starts
-    // from; C4/RefinedWeb §"text extraction"). The fixture text carries no
-    // markup, so the query first wraps each document in a deterministic
-    // HTML shell — script/style elements with bodies (the script body
-    // contains a raw `<` so the lazy close-tag match is actually
-    // exercised), attributes, entities incl. the &amp;lt; double-escape
-    // case — then strips it back to text. Five fused regexp/replace
-    // passes, scan-local, zero shuffles; the pattern and entity constants
-    // are shared verbatim with the oracle SQL.
-    "q_strip_html" -> ((s, dir) => {
-      val seeded = t(s, dir, "documents").select(col("doc_id"),
-        concat(
-          lit("<html><head><title>D"), col("doc_id").cast("string"),
-          lit("</title><style type=\"text/css\">p { color: red; }</style>"),
-          lit("</head><body><h1 class=\"hd\">Doc &#39;"),
-          col("doc_id").cast("string"),
-          lit("&#39; &amp;lt;still escaped&amp;gt;</h1>\n<p>"), col("text"),
-          lit(" &amp; more &lt;tags&gt;&nbsp;end.</p>"),
-          lit("<script>var x = 1; if (x < 2) { x = 3; }</script>"),
-          lit("</body></html>")).as("html"))
-      seeded
-        .select(col("doc_id"), TA.stripHtml(col("html")).as("text"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .orderBy("doc_id")
-    }),
-    // L1 — C4-style line-level filtering (Raffel et al. 2020 §2.2): keep
-    // only lines ending in terminal punctuation with ≥5 words and no
-    // javascript/cookie boilerplate phrase, reassemble survivors in order.
-    // The fixture text is a single punctuation-free line, so the query
-    // seeds a deterministic five-line page per doc: a first sentence whose
-    // word count varies by doc_id (so keep counts differ across rows), a
-    // banned-phrase line, a punctuation-less fragment, a too-short line,
-    // and a long closing sentence. One scan-local higher-order filter over
-    // the split array — zero shuffles, zero explodes.
-    "q_line_filter" -> ((s, dir) => {
-      // concat, not concat_ws: `||` in the oracle propagates NULL text and
-      // concat matches that; concat_ws would silently skip the null slot.
-      val seeded = t(s, dir, "documents").select(col("doc_id"),
-        concat(
-          lit("Document "), col("doc_id").cast("string"),
-          when(col("doc_id") % 3 === 0, lit(" short."))
-            .otherwise(lit(" begins with a plain first sentence.")),
-          lit("\nPlease enable JavaScript and accept our cookie policy to continue.\n"),
-          substring(col("text"), 1, 40),
-          lit("\nToo short.\n"),
-          col("text"), lit(" and that is the end.")).as("text"))
-      val lines = split(col("text"), "\n")
-      seeded.select(col("doc_id"),
-          size(lines).cast("long").as("n_lines"),
-          size(filter(lines, l => Curation.keepLine(l, LineFilterMinWords)))
-            .cast("long").as("n_kept"),
-          Curation.filterLines(col("text"), LineFilterMinWords).as("clean"))
-        .orderBy("doc_id")
-    }),
-    // L1 — Gopher document-shape rules (Rae et al. 2021, Table A1): the
-    // document-level complement to q_line_filter (C4 line rules) and
-    // q_rep_ratio (Gopher's repetition section). The fixture text is one
-    // clean line, so doc_id mod-6 classes seed each failure mode — hash
-    // spam, ellipsis spam, bullet walls, ellipsis-ended lines,
-    // numeric-word floods — and every rule provably fires on some docs.
-    // One codegen'd projection, integer cross-multiplied thresholds.
-    "q_gopher_rules" -> ((s, dir) => {
-      val seeded = t(s, dir, "documents").select(col("doc_id"), concat(
-        col("text"),
-        when(col("doc_id") % 6 === 0, concat(lit(" "), repeat(lit("# "), 8)))
-          .when(col("doc_id") % 6 === 1,
-            concat(lit(" "), repeat(lit("... "), 8)))
-          .when(col("doc_id") % 6 === 2, repeat(lit("\n- bullet item"), 12))
-          .when(col("doc_id") % 6 === 3,
-            repeat(lit("\ntrailing thought..."), 9))
-          .when(col("doc_id") % 6 === 4,
-            concat(lit(" "), repeat(lit("12345 "), 60)))
-          .otherwise(lit(""))).as("text"))
-      Curation.gopherFlags(seeded, "doc_id", "text").orderBy("doc_id")
-    }),
-    // L1 — inverted-index build (term → bounded postings + df/total_tf):
-    // the retrieval-side structure BM25 serves from, materialized as a
-    // table. One tokenize explode feeds ONE (term, doc) hash aggregate
-    // (map-side combine; persisted — it feeds both the term-stats
-    // aggregate and the postings window, and exchange reuse cannot dedupe
-    // the pruned branches); term-level df/total_tf is a second aggregate
-    // off that (vocabulary-sized, broadcast back); postings are capped at
-    // 3 docs per term via a per-term window over the ALREADY-AGGREGATED
-    // (term, doc) rows — the window's partition is at most corpus-doc
-    // sized per term and never sees raw token occurrences.
-    "q_inverted_index" -> ((s, dir) => {
-      TA.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-        maxPostings = 3).orderBy("term", "doc_id")
-    }),
-    // L1/Scale — INCREMENTAL index maintenance (TextAnalysis.indexDelta,
-    // the retrieval twin of q_merge_counts): the corpus splits at the
-    // doc-id midpoint, the old half is indexed, the new half folds in
-    // WITHOUT re-tokenizing the old corpus — and the oracle is a FULL
-    // REBUILD over everything, so the merge ≡ rebuild equivalence is the
-    // thing being checked, not just the merge's own arithmetic.
-    "q_index_delta" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val old = TA.invertedIndex(docs.filter(col("doc_id") < 250),
-        "doc_id", "text", maxPostings = 3)
-      TA.indexDelta(old, docs.filter(col("doc_id") >= 250),
-        "doc_id", "text", maxPostings = 3)
-        .orderBy("term", "doc_id")
-    }),
-    // A6 — exact dedup by key with deterministic survivor (window-rank; the
-    // dropDuplicates equivalent with a defined choice).
-    "q_dedup_exact" -> ((s, dir) => {
-      // (l_orderkey, l_linenumber) is NOT unique in the fixture data — the
-      // survivor order must cover every output column to be deterministic.
-      Dedup.exactByKey(t(s, dir, "lineitem"), Seq("l_orderkey"),
-        Seq(col("l_linenumber"), col("l_partkey"), col("l_quantity")))
-        .select("l_orderkey", "l_partkey", "l_quantity")
-        .orderBy("l_orderkey")
-    }),
-    // A7 — MinHash-banded fuzzy dedup; verified Jaccard pairs. Runs the
-    // portable md5 hash family so the entire banded pipeline — shingle
-    // hash, 16 minhash families, band signatures, candidate join, Jaccard
-    // verify — is oracle-checked end-to-end. The operator's scale default
-    // stays xxhash64 (same plan shape, ~3x cheaper hashing; DedupSpec
-    // asserts both families recover the planted near-dups).
-    "q_dedup_fuzzy" -> ((s, dir) => {
-      Dedup.nearDuplicatesPortable(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
-        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("a", "b")
-    }),
-    // A7 — incremental dedup: the day's delta (doc_id % 10 == 0) bands
-    // against the corpus's signatures only — the corpus is never
-    // self-paired, so dedup cost stays O(|delta| + collisions) as the
-    // corpus grows to 100 TB. Same portable md5 MinHash family as
-    // q_dedup_fuzzy → fully oracle-checked.
-    "q_dedup_delta" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.nearDuplicatesDeltaPortable(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4,
-        threshold = 0.5)
-        .select(col("delta_id"), col("corpus_id"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("delta_id", "corpus_id")
-    }),
-    // A7 — banded-LSH recall evaluation (the dedup twin of q_pq_recall):
-    // for the doc_id < 100 query subset, exact-Jaccard ground truth at
-    // J ≥ 0.5 via the shingle-hash inverted index (never all-pairs), then
-    // per query doc the fraction of true neighbors the 16-hash/4-band
-    // candidate generation surfaces — the measurement that sizes
-    // (numHashes, bands) before a 100 TB dedup run. Portable md5 family
-    // throughout, so truth, candidates, and recall all oracle-check.
-    "q_minhash_recall" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.bandedRecallPortable(docs, docs.filter(col("doc_id") < 100),
-          "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4,
-          threshold = 0.5)
-        .orderBy("q_id")
-    }),
-    // A7 — banding TUNING CURVE: q_minhash_recall swept over bands ∈
-    // {2, 4, 8} of the SAME 16 minhashes (the q_ivf_recall_curve
-    // pattern) — signatures and exact-Jaccard truth compute once, each
-    // configuration pays only its candidate self-join. The recall side
-    // of the bands trade that sizes the banding before a 100 TB run.
-    "q_minhash_band_curve" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.bandedRecallCurvePortable(docs,
-          docs.filter(col("doc_id") < 100), "doc_id", "text",
-          shingleN = 3, numHashes = 16, bandsList = Seq(2, 4, 8),
-          threshold = 0.5)
-        .orderBy("bands", "q_id")
-    }),
-    // A7 — n-gram Jaccard similarity over blocked candidate pairs: docs
-    // sharing a (lang, n_chars) block compare word-3-gram shingle sets —
-    // the verify stage of fuzzy dedup, fully oracle-checkable since the
-    // shingling uses no engine-specific hashing.
-    "q_dedup_ngram" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          split(col("text"), "\\s+").as("__words"))
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          Dedup.shinglesFromWords(col("__words"), 3).as("sh"))
-      val a = d.select(col("doc_id").as("a"), col("lang"), col("n_chars"),
-        col("sh").as("sh_a"))
-      val b = d.select(col("doc_id").as("b"), col("lang"), col("n_chars"),
-        col("sh").as("sh_b"))
-      a.join(b, Seq("lang", "n_chars")).filter(col("a") < col("b"))
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("a", "b")
-    }),
-    // L1 — n-gram novelty: the fraction of a doc's distinct 3-grams found
-    // in NO other document — the inverse memorization-risk signal (high
-    // novelty = unique content worth keeping; low = boilerplate/duplicated
-    // phrasing). One tokenize pass, a gram-document-frequency hash
-    // aggregate, one shuffle join back; ratios are int/int divisions so
-    // both engines produce identical doubles.
-    "q_novelty" -> ((s, dir) => {
-      val g = Scale.spreadForCompute(
-        t(s, dir, "documents").filter(col("text").isNotNull), col("doc_id"))
-        .select(col("doc_id"), split(col("text"), "\\s+").as("__words"))
-        .select(col("doc_id"),
-          explode(Dedup.shinglesFromWords(col("__words"), 3)).as("gram"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val gramDocs = g.groupBy("gram").agg(count(lit(1)).as("nd"))
-      g.join(gramDocs, "gram")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          round(sum(when(col("nd") === 1, 1L).otherwise(0L)).cast("double") /
-            count(lit(1)), 6).as("novelty"))
-        .orderBy("doc_id")
-    }),
-    // A7 — containment near-dups: |A∩B| / min(|A|,|B|) over shingle sets,
-    // the asymmetric measure that catches quote/subset relations (high
-    // containment, tiny Jaccard — invisible to MinHash). Candidates block
-    // on each doc's 3 smallest shingles; see Dedup.containmentPairs.
-    "q_dedup_contain" -> ((s, dir) => {
-      Dedup.containmentPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, kBlock = 3, minCont = 0.5)
-        .orderBy("a", "b")
-    }),
-    // A7/L1 — exact-substring duplicate SPANS (RefinedWeb modality): every
-    // maximal cross-doc duplicated word run of ≥ 8 words, located by
-    // anchored shingles + run grouping — no doc-pair join anywhere. See
-    // Dedup.duplicatedSpans.
-    "q_dedup_substring" -> ((s, dir) => {
-      Dedup.duplicatedSpans(t(s, dir, "documents"), "doc_id", "text", 8)
-        .select(col("doc_id"), col("span_start").cast("long").as("span_start"),
-          col("span_end").cast("long").as("span_end"), col("n_anchors"))
-        .orderBy("doc_id", "span_start")
-    }),
-    // A7/L1 — the REMOVAL transform over the same spans: drop every word a
-    // cross-doc duplicated span covers, reassemble survivors in order.
-    "q_dedup_substring_clean" -> ((s, dir) => {
-      Dedup.removeDuplicatedSpans(t(s, dir, "documents"), "doc_id", "text", 8)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          col("clean_text"))
-        .orderBy("doc_id")
-    }),
-    // A7/L1 — winnowed fingerprints (the MOSS local-fingerprint modality):
-    // each doc's window-min gram hashes with positions. Selection is
-    // entirely scan-local (higher-order array functions over the portable
-    // md5 gram hashes — zero shuffle before the dump); any ≥39-char shared
-    // substring is guaranteed a shared fingerprint. See Winnow.
-    "q_winnow_fp" -> ((s, dir) => {
-      graft.operators.Winnow.fingerprints(
-          t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id", "pos", "fp")
-    }),
-    // A7/L1 — MOSS overlap detection over those fingerprints: pairs
-    // sharing ≥ 3, via a capped census join on the fingerprint value
-    // (boilerplate fps census-dropped at 64 docs) — never all-pairs.
-    "q_winnow_overlap" -> ((s, dir) => {
-      graft.operators.Winnow.overlapPairs(
-          t(s, dir, "documents"), "doc_id", "text",
-          minShared = WinnowMinShared, maxBlock = WinnowMaxBlock)
-        .orderBy("id_a", "id_b")
-    }),
-    // A7/L1 — incremental winnow screening: a delta batch (doc_id >= 400)
-    // against the standing corpus — delta-fps joined onto the (reusable)
-    // corpus fingerprint index, O(delta + collisions), the
-    // nearDuplicatesDeltaPortable shape for the local-fingerprint
-    // modality. See Winnow.deltaOverlap.
-    "q_winnow_delta" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Winnow.deltaOverlap(
-          docs.filter(col("doc_id") < WinnowDeltaSplit),
-          docs.filter(col("doc_id") >= WinnowDeltaSplit),
-          "doc_id", "text",
-          minShared = WinnowMinShared, maxBlock = WinnowMaxBlock)
-        .orderBy("delta_id", "corpus_id")
-    }),
-    // A7/L1 — winnow near-dup CLUSTERS: the overlap pairs close into
-    // components with the shared min-label CC (the q_dedup_cluster
-    // composition over the local-fingerprint modality).
-    "q_winnow_cluster" -> ((s, dir) => {
-      val pairs = graft.operators.Winnow.overlapPairs(
-        t(s, dir, "documents"), "doc_id", "text",
-        minShared = WinnowMinShared, maxBlock = WinnowMaxBlock)
-      Dedup.connectedComponents(
-          pairs.select(col("id_a").as("a"), col("id_b").as("b")), "a", "b")
-        .orderBy("id")
-    }),
-    // A7/L1 — the winnowing DENSITY claim measured: selected fingerprints
-    // per gram in ppm vs the paper's 2/(w+1) expectation (≈117,647 at
-    // w=16) — the q_minhash_recall analog for the local-fingerprint
-    // modality. Density sizes the fp index and the overlap join fan-in
-    // before a run; integer floor-div arithmetic only, one row.
-    "q_winnow_density" -> ((s, dir) => {
-      graft.operators.Winnow.densityReport(
-        t(s, dir, "documents"), "doc_id", "text")
-    }),
-    // L1 — TF-IDF: top-3 terms per doc. tf and df are two hash aggregates
-    // off one tokenize pass; N arrives via a broadcast one-row cross join
-    // (no driver collect); ranking is a per-doc window. Ties break on the
-    // token, and identical (tf, df) pairs produce identical doubles in any
-    // IEEE engine, so the ranking is engine-portable.
-    "q_tfidf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      // One tokenize pass: tf has one row per (doc, token), so df is just
-      // the per-token row count. Computed as groupBy(token)+join, NOT a
-      // window over token: a window has no partial aggregation, so at
-      // corpus scale a stopword's partition holds one row per containing
-      // document and sorts corpus-sized skewed keys; the hash aggregate
-      // keeps map-side combine. tf is persisted because it feeds BOTH join
-      // sides — unpersisted, each branch would re-scan and re-tokenize the
-      // corpus (column pruning makes the branches non-identical, so
-      // exchange reuse cannot dedupe them); the same persist-the-expensive-
-      // stage move the MinHash signature pipeline makes. dfCounts is
-      // vocabulary-sized, so the join broadcasts it — the corpus side
-      // never reshuffles. N arrives via a broadcast one-row cross join
-      // (no driver collect).
-      // repartition before the tokenize: one scan partition would run the
-      // explode + map-side partial aggregation in a single task
-      val tf = Scale.spreadForCompute(docs, col("doc_id"))
-        .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dfCounts = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      // explicit hint: dfCounts' STATIC size estimate derives from the
-      // un-materialized cache's child and can exceed the broadcast
-      // threshold, which would sort-merge-shuffle the corpus-sized tf side
-      val withDf = tf.join(broadcast(dfCounts), "token")
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      // ranking keys off the ROUNDED score: ln() is not correctly-rounded
-      // in IEEE 754, so raw doubles can differ by an ulp across engines and
-      // flip a top-3 boundary; at 6 decimals both engines agree.
-      val w = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("token"))
-      withDf.crossJoin(broadcast(n))
-        .withColumn("tfidf", round(
-          col("tf") * log(col("n_docs").cast("double") / col("df")), 6))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .select(col("doc_id"), col("token"), col("tf"), col("tfidf"))
-        .orderBy("doc_id", "token")
-    }),
-    // L1 — Gopher-style repetition rules: the fraction of a document's
-    // (non-space) characters covered by its most frequent word unigram
-    // and bigram — the "fraction of characters in most common n-gram"
-    // prefilter from the Gopher curation rules, complementing
-    // q_text_quality's distinct-gram repetitionRatio (which sees HOW MUCH
-    // repeats, not how concentrated the repetition is: a doc looping one
-    // slogan and a doc with many scattered repeats score alike there but
-    // differ sharply here). Per n: one explode → hash aggregate on
-    // (doc_id, gram) → per-doc window (partitioned by doc_id, never
-    // global). Coverage = count·len(gram chars)/len(doc chars): all-
-    // integer numerator/denominator, one rounded IEEE division, so the
-    // fractions are engine-portable. Ties break toward the
-    // lexicographically smallest gram (same rule as q_tfidf).
-    "q_rep_topgram" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // wc > 0 also guards the coverage division (ANSI divide-by-zero on
-      // an all-space doc); a doc with no non-space chars has no rating.
-      // persisted: BOTH n-gram branches (top1/top2) consume the tokenized
-      // frame; without it each branch re-scans and re-splits the corpus
-      val words = Scale.spreadForCompute(
-          t(s, dir, "documents").filter(col("text").isNotNull), col("doc_id"))
-        .select(col("doc_id"),
-          length(regexp_replace(col("text"), " ", "")).as("__wc"),
-          split(col("text"), " ").as("__w"))
-        .filter(col("__wc") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      def top(n: Int, p: String): DataFrame = {
-        val w = Window.partitionBy("doc_id").orderBy(col("__c").desc, col("g"))
-        words.select(col("doc_id"), col("__wc"),
-            explode(Dedup.rawShinglesFromWords(col("__w"), n)).as("g"))
-          .groupBy("doc_id", "__wc", "g").agg(count(lit(1)).as("__c"))
-          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-          .select(col("doc_id"), col("g").as(s"${p}_gram"),
-            col("__c").as(s"${p}_n"),
-            round(col("__c") * length(regexp_replace(col("g"), " ", ""))
-              / col("__wc"), 6).as(s"${p}_frac"))
-      }
-      top(1, "top1").join(top(2, "top2"), "doc_id").orderBy("doc_id")
-    }),
-    // L1 — BPE tokenizer training, count stage: the frequency-weighted
-    // adjacent character-pair counts over the word vocabulary — the exact
-    // quantity each merge round of byte-pair-encoding argmaxes over
-    // (operators/Bpe.scala; the iterative trainer itself is BpeSpec-pinned
-    // — its argmax+fold rounds are driver-looped, so the SQL oracle checks
-    // the distributed aggregate the loop is built from). Corpus → word
-    // frequencies (one hash aggregate — corpus size exits the problem) →
-    // explode pairs weighted by freq → top-20, ties lexicographic, plans
-    // as TakeOrderedAndProject.
-    "q_bpe_pairs" -> ((s, dir) => {
-      graft.operators.Bpe.pairCounts(
-        graft.operators.Bpe.vocab(t(s, dir, "documents"), "text"))
-        .orderBy(col("n").desc, col("pair")).limit(20)
-    }),
-    // L1 — model-based quality gate: hashing-trick linear classifier
-    // (fastText-style serving shape — the filter class DCLM/FineWeb-Edu
-    // run after rule-based gates). Weights are a deterministic 64-bucket
-    // integer vector (j % 13 - 6) so the margin sum is exact and the
-    // whole scorer — bucket hash, margin, score, verdict — oracle-checks
-    // bit-for-bit; a trained model would swap ONLY the literal array.
-    "q_quality_classifier" -> ((s, dir) => {
-      graft.operators.TextAnalysis.linearClassifierScore(
-        t(s, dir, "documents"), "doc_id", "text",
-        (0 until 64).map(j => (j % 13 - 6).toLong))
-        .orderBy("doc_id")
-    }),
-    // L1 — classifier TRAINING: naive-Bayes log-odds token weights over a
-    // fixture-derived label (lang='en' as the "quality" class — any
-    // boolean label column works). ln of integers + exact decimal
-    // combination makes the trained weights themselves oracle-checkable,
-    // the way q_bpe_pairs oracles BPE training. Top-30 by weight
-    // (rounded-weight desc, token tiebreak).
-    "q_quality_train" -> ((s, dir) => {
-      graft.operators.TextAnalysis.trainTokenLogOdds(
-        t(s, dir, "documents").withColumn("__y", col("lang") === "en"),
-        "doc_id", "text", "__y")
-        .select(col("token"), col("n_pos"), col("n_neg"),
-          round(col("weight").cast("double"), 6).as("weight"))
-        .orderBy(col("weight").desc, col("token")).limit(30)
-    }),
-    // L1 — train + SERVE composed: the trained weights table (never
-    // collected — it stays a broadcast-joined frame) scores every doc;
-    // exact decimal margins keep the score shuffle-order-independent.
-    "q_quality_train_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val w = graft.operators.TextAnalysis.trainTokenLogOdds(
-        docs.withColumn("__y", col("lang") === "en"),
-        "doc_id", "text", "__y")
-      graft.operators.TextAnalysis.scoreWithTokenWeights(
-        docs, "doc_id", "text", w)
-        .orderBy("doc_id")
-    }),
-    // L1 — tokenizer APPLY (Bpe.applyMerges): an already-learned merge
-    // list folded over the corpus vocabulary — the serving half of BPE,
-    // run where it belongs at scale (on the vocab, not the corpus; the
-    // corpus re-joins by word). The fixed 3-merge list ends with a
-    // merged-symbol merge ("er"+"s") so the fold exercises multi-char
-    // symbols. Oracle trick: map each merged pair to a UNIQUE placeholder
-    // char (fixture words are a-z only, so digits are free) — every
-    // symbol is then exactly one character, chained leftmost replace()
-    // replicates the greedy scan-local array merge EXACTLY, and string
-    // length equals the symbol count.
-    "q_bpe_encode" -> ((s, dir) => {
-      val v = graft.operators.Bpe.vocab(t(s, dir, "documents"), "text")
-      graft.operators.Bpe.applyMerges(v,
-          Seq(("e", "r"), ("i", "n"), ("er", "s")))
-        .select(col("word"), col("freq"),
-          size(col("syms")).cast("long").as("n_syms"))
-        .orderBy("word")
-    }),
-    // L1 — tokenizer FERTILITY (tokens-per-word, per language): the
-    // measurement that drives vocabulary design — a language whose
-    // fertility runs high is under-served by the merge list and pays more
-    // context budget per word. Corpus words join the vocab's encoded
-    // symbol counts (vocabulary-sized → broadcast; the corpus side never
-    // shuffles before its per-lang partial aggregate), so the whole
-    // report costs one explode + one broadcast join + one hash aggregate.
-    // Same fixed merge list and placeholder-char oracle as q_bpe_encode.
-    "q_bpe_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val enc = graft.operators.Bpe.applyMerges(
-          graft.operators.Bpe.vocab(docs, "text"),
-          Seq(("e", "r"), ("i", "n"), ("er", "s")))
-        .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
-      Scale.spreadForCompute(docs.filter(col("text").isNotNull),
-          col("doc_id"))
-        .select(col("lang"), explode(split(col("text"), "\\s+")).as("word"))
-        .filter(length(col("word")) > 0)
-        .join(broadcast(enc), "word")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n_syms")).as("n_syms"))
-        .withColumn("fertility",
-          round(col("n_syms").cast("double") / col("n_words"), 6))
-        .orderBy("lang")
-    }),
-    // L1x — unigram-LM tokenizer training (Unigram.trainOnce): one
-    // hard-EM round — candidate substring counts, integer micro-nat
-    // costs, bounded Viterbi segmentation (8 forward + 8 backward
-    // vocabulary-scale rounds), piece recount, updated scores. Top-30
-    // pieces by trained count; every step exact-integer or
-    // once-rounded-decimal, so the whole trainer oracle-checks against
-    // the unrolled-DP SQL.
-    "q_unigram_lm" -> ((s, dir) => {
-      graft.operators.Unigram.trainOnce(t(s, dir, "documents"), "text",
-          maxPieceLen = UniPieceLen, maxWordLen = UniWordLen,
-          minCount = UniMinCount)
-        .orderBy(col("n").desc, col("piece"))
-        .limit(30)
-    }),
-    // L1x — the tokenizer's actual serving OUTPUT: the ordered piece
-    // sequence (word, freq, k, piece) of the 50 most frequent words
-    // under the candidate model — what an encode() call returns, with
-    // the position exposed so the oracle pins the exact segmentation
-    // order, not just the piece multiset. Bounded head (TakeOrdered),
-    // vocabulary-scale DP.
-    "q_unigram_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
-          UniWordLen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = graft.operators.Unigram.candidatePieces(voc,
-        UniPieceLen, UniMinCount)
-      val top = voc.orderBy(col("freq").desc, col("word")).limit(50)
-      graft.operators.Scale.releaseAfterUse(
-        graft.operators.Unigram.viterbiEncode(top,
-            graft.operators.Unigram.pieceCosts(cand),
-            UniPieceLen, UniWordLen)
-          .orderBy("word", "k"),
-        Seq(voc))
-    }),
-    // L1x — trained-unigram fertility per language, the q_bpe_fertility
-    // shape so the two tokenizer families compare row-for-row (pieces
-    // per word, frequency-weighted through the word join).
-    "q_unigram_fertility" -> ((s, dir) => {
-      graft.operators.Unigram.fertility(t(s, dir, "documents"),
-        "doc_id", "text", "lang", maxPieceLen = UniPieceLen,
-        maxWordLen = UniWordLen, minCount = UniMinCount)
-    }),
-    // L1y — unigram vocabulary pruning (Unigram.pruneVocab, the Kudo
-    // shrink step): every trained multi-char piece scored by the exact
-    // integer loss bound n·(Σ char costs − cost) — the corpus-cost
-    // increase if its occurrences fall back to single characters — and
-    // the top 10 kept beside ALL single chars (the segmentability
-    // floor). One scan + one broadcast char-cost join; no per-piece DP.
-    "q_unigram_prune" -> ((s, dir) => {
-      graft.operators.Unigram.trainAndPrune(t(s, dir, "documents"),
-          "text", UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10)
-        .orderBy(col("loss").desc_nulls_last, col("piece"))
-    }),
-    // L1y — the Kudo loop ITERATED (Unigram.kudoStep round two): the
-    // round-1 pruned model re-segments the same vocabulary, pieces
-    // recount and re-score under the shrunk model, and the prune
-    // re-ranks — the SentencePiece trainer's actual fixed point search.
-    // Read against q_unigram_prune: survivors that persist across
-    // rounds are the vocabulary the loop is converging to. Candidate
-    // stage and vocabulary compute ONCE (shared persists); char
-    // fallback costs stay the candidate-stage model (the documented
-    // segmentability floor) in both rounds.
-    "q_unigram_kudo2" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
-          UniWordLen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = graft.operators.Unigram.candidatePieces(voc,
-          UniPieceLen, UniMinCount)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cc = graft.operators.Unigram.pieceCosts(cand)
-      val round1 = graft.operators.Unigram.kudoStep(voc, cc, cc,
-          UniPieceLen, UniWordLen, keepPieces = 10)
-        .select(col("piece"), col("cost"))
-      graft.operators.Scale.releaseAfterUse(
-        graft.operators.Unigram.kudoStep(voc, round1, cc,
-            UniPieceLen, UniWordLen, keepPieces = 10)
-          .orderBy(col("loss").desc_nulls_last, col("piece")),
-        Seq(voc, cand))
-    }),
-    // L1y — the Kudo loop CLOSED: per-language fertility under the
-    // PRUNED vocabulary (Unigram.fertilityUnder over trainAndPrune's
-    // survivors) — read row-for-row against q_unigram_fertility, the
-    // delta is what the shrink step costs in pieces-per-word. Same
-    // bounded DP, pruned cost model.
-    "q_unigram_retrain" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // ONE persisted vocabulary feeds both the trainer and the
-      // re-segmentation — the Kudo loop touches the corpus word-agg once
-      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
-          UniWordLen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pruned = graft.operators.Unigram.trainAndPrune(docs, "text",
-          UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10,
-          vocab = Some(voc))
-        .select(col("piece"), col("cost"))
-      graft.operators.Scale.releaseAfterUse(
-        graft.operators.Unigram.fertilityUnder(docs, "doc_id", "text",
-          "lang", pruned, UniPieceLen, UniWordLen, vocab = Some(voc)),
-        Seq(voc))
-    }),
-    // L1y — TOTAL serving fertility with the OOV char fallback
-    // (Unigram.fertilityOov): the PRUNED model served at a window
-    // (UniOovWordLen) below the training window, so both fallback
-    // classes fire — out-of-window words AND words the pruned
-    // vocabulary can no longer segment — each counted as its character
-    // sequence (n_pieces = len, the SentencePiece char-fallback
-    // convention). n_fallback measures how much of the corpus the
-    // bounded window actually covers; no word ever drops.
-    "q_unigram_oov" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // ONE persisted training-window vocabulary serves both the trainer
-      // and the window-6 serving DP (superset-vocab contract)
-      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
-          UniWordLen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pruned = graft.operators.Unigram.trainAndPrune(docs, "text",
-          UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10,
-          vocab = Some(voc))
-        .select(col("piece"), col("cost"))
-      graft.operators.Scale.releaseAfterUse(
-        graft.operators.Unigram.fertilityOov(docs, "doc_id", "text",
-          "lang", pruned, UniPieceLen, UniOovWordLen, vocab = Some(voc)),
-        Seq(voc))
-    }),
-    // L1 — deflate-compressibility curation signal (Quality.
-    // compressionStats): repetitive text compresses far below prose,
-    // near-random text barely at all — the cheap filter word-level rules
-    // miss. deflate bytes are engine-specific (no SQL engine exposes
-    // zlib), so this follows the sketch-verdict pattern (q_agg_approx):
-    // raw_len oracle-checks exactly; deflate_len is asserted against the
-    // format's worst-case bound (≤5 bytes per started 16 KiB block + the
-    // terminating empty block) as a boolean both engines can hash. The
-    // ratio's curation semantics are QualitySpec-pinned (planted
-    // repetitive vs incompressible text).
-    "q_compress_ratio" -> ((s, dir) => {
-      Quality.compressionStats(
-        Scale.spreadForCompute(
-          t(s, dir, "documents").filter(col("text").isNotNull),
-          col("doc_id")),
-        "doc_id", "text")
-        .select(col("doc_id"), col("raw_len"),
-          (col("deflate_len") >= 1 && col("deflate_len") <=
-            col("raw_len") + lit(5L) * (expr("raw_len div 16384") + 1) + 6)
-            .as("deflate_in_bounds"))
-        .orderBy("doc_id")
-    }),
-    // A7 — dedup clustering: min-shingle blocking (lexicographic min — no
-    // engine hashing, so fully oracle-checkable) → exact Jaccard ≥ 0.5
-    // verify → connected components. Pairwise matches become canonical
-    // groups; the component label (min doc_id) is the survivor.
-    "q_dedup_cluster" -> ((s, dir) => {
-      Dedup.connectedComponents(nearDupEdges3(t(s, dir, "documents")),
-        "a", "b").orderBy("id")
-    }),
-    // A7 — SOFT dedup: downweighting instead of removal. Every document
-    // stays in the corpus with training weight 1/|cluster| over the SAME
-    // near-dup CC labels q_dedup_cluster derives, so a near-dup cluster
-    // contributes exactly ONE document's worth of training mass while
-    // keeping its within-cluster variation (what hard dedup's
-    // keep-lowest-id survivor throws away — the downweight alternative
-    // pipelines reach for when duplicates carry paraphrase signal).
-    // Singletons weigh 1. One labels join + one cluster-size aggregate
-    // on top of the shared CC pipeline; per-doc rows stream to the sink.
-    "q_dedup_soft" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val lbl = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
-        .withColumnRenamed("id", "doc_id")
-      val withLbl = docs.select(col("doc_id"))
-        .join(lbl, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster"))
-      val sizes = withLbl.groupBy("cluster")
-        .agg(count(lit(1)).as("n_members"))
-      withLbl.join(sizes, Seq("cluster"))
-        .select(col("doc_id"), col("cluster"), col("n_members"),
-          round(lit(1.0) / col("n_members"), 6).as("w"))
-        .orderBy("doc_id")
-    }),
-    // L1 — TRAINED char-trigram naive-Bayes language ID, trained + served
-    // + self-evaluated in one query (TextAnalysis.langIdNaiveBayes): the
-    // unseen-gram decomposition makes the whole multiclass scorer exact
-    // ln-of-integers decimal, so even the per-language accuracy table
-    // oracle-checks bit-for-bit.
-    "q_langid_nb" -> ((s, dir) => {
-      TA.langIdNaiveBayes(t(s, dir, "documents"), "doc_id", "text", "lang")
-        .groupBy(col("actual").as("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("predicted") === col("actual"), 1L).otherwise(0L))
-            .as("n_correct"))
-        .orderBy("lang")
-    }),
-    // L1 — the NB identifier's CONFUSION MATRIX (actual × predicted doc
-    // counts) — the eval artifact a model card actually shows; only
-    // observed pairs appear (sparse form). Same trained scorer as
-    // q_langid_nb, different final aggregate.
-    "q_langid_confusion" -> ((s, dir) => {
-      TA.langIdNaiveBayes(t(s, dir, "documents"), "doc_id", "text", "lang")
-        .groupBy(col("actual"), col("predicted"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("actual", "predicted")
-    }),
-    // L1 — per-language character-trigram profile: the table a char-ngram
-    // language identifier trains on (the production successor to
-    // q_lang_id's marker-word heuristic). Sliding substring transform →
-    // explode → (lang, gram) hash aggregate → per-lang top-5 window (the
-    // window partitions by lang, never global; the aggregate combines
-    // map-side). Short texts contribute their whole remainder as one
-    // gram — the shinglesFromWords convention, mirrored in the oracle.
-    "q_char_ngrams" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val grams = graft.operators.TextAnalysis.explodeTrigrams(
-        Scale.spreadForCompute(
-          t(s, dir, "documents").filter(col("text").isNotNull),
-          col("doc_id")).select(col("lang"), col("text")),
-        Seq("lang"), "text", "gram")
-      val counts = grams.groupBy("lang", "gram").agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy("lang").orderBy(col("c").desc, col("gram"))
-      counts.withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("lang", "rn")
-    }),
-    // L1 — PMI collocation mining (Curation.pmiTopK): the phrase-detection
-    // table (word2vec-style "new_york" merging starts here). Exact
-    // ln-of-integer-counts decimal arithmetic — the bigramLmScore recipe —
-    // so the scores are a pure function of the counts and the whole
-    // top-30 oracle-checks; TakeOrderedAndProject, never a global sort.
-    "q_pmi" -> ((s, dir) => {
-      Curation.pmiTopK(t(s, dir, "documents"), "doc_id", "text",
-        minCount = 5, k = 30)
-    }),
-    // L1 — TextRank keywords (TextAnalysis.textrankKeywords): PageRank
-    // over the token co-occurrence graph — the unsupervised keyword table
-    // (Mihalcea & Tarau 2004). Integer-exact ranks via Graph.pageRank, so
-    // the full pipeline (tokenize → strip → adjacency → 2 PR rounds →
-    // top-20) oracle-checks bit-for-bit.
-    "q_textrank" -> ((s, dir) => {
-      graft.operators.TextAnalysis.textrankKeywords(
-          t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("rank").desc, col("term"))
-    }),
-    // L1 — Zipf power-law fit (TextAnalysis.zipfFit): OLS of ln(freq) on
-    // ln(rank) over the top-200 token ranks — the one-row corpus-health
-    // report (natural text ≈ slope −1). Integer-micro-unit ln (the PCA
-    // quantize recipe) makes the five OLS sums exact, so the fit
-    // oracle-checks to the last rounded digit.
-    "q_zipf_slope" -> ((s, dir) => {
-      graft.operators.TextAnalysis.zipfFit(
-        t(s, dir, "documents"), "doc_id", "text", topRanks = 200)
-    }),
-    // L1 — Flesch reading ease (TextAnalysis.fleschCounts/fleschScore):
-    // exact integer word/sentence/vowel-group counts + one fixed-order
-    // double formula per doc — scan-only codegen'd readability, the gate
-    // signal next to q_gopher_rules/q_text_quality.
-    "q_readability" -> ((s, dir) => {
-      import graft.operators.TextAnalysis._
-      val (w, sn, sy) = fleschCounts(col("text"))
-      // spread: the per-doc word/sentence/vowel-group counting is the
-      // whole query and would otherwise run inside the single-file scan
-      // task (the spreadForCompute contract; no-op on a wide corpus)
-      Scale.spreadForCompute(
-          t(s, dir, "documents").filter(col("text").isNotNull),
-          col("doc_id"))
-        .select(col("doc_id"), w.as("n_words"), sn.as("n_sents"),
-          sy.as("n_syll"))
-        .withColumn("flesch",
-          fleschScore(col("n_words"), col("n_sents"), col("n_syll")))
-        .orderBy("doc_id")
-    }),
-    // L1 — source-fair curation gate (Curation.fairGate): keep each
-    // source's top half by readability — the per-source quantile
-    // threshold (FineWeb-style) that trims a weak source without erasing
-    // it and stops a strong one crowding out the mix. One per-source
-    // window, exact percent_rank, fully oracle-checked.
-    "q_fair_gate" -> ((s, dir) => {
-      import graft.operators.TextAnalysis._
-      val (w, sn, sy) = fleschCounts(col("text"))
-      // spread: same rationale as q_readability — the flesch projection
-      // is the query's CPU and must not serialize into one scan task
-      val scored = Scale.spreadForCompute(
-          t(s, dir, "documents").filter(col("text").isNotNull),
-          col("doc_id"))
-        .select(col("source"), col("doc_id"),
-          fleschScore(w, sn, sy).as("flesch"))
-      Curation.fairGate(scored, "source", "flesch", "doc_id", 0.5)
-        .select(col("source"), col("doc_id"), col("flesch"),
-          round(col("pr"), 6).as("pr"))
-        .orderBy("source", "doc_id")
-    }),
-    // A7 — near-dup cluster size HISTOGRAM: how much of the corpus sits
-    // in duplicate clusters of what size — the report that decides
-    // whether dedup is worth a full run (mass in size-2 pairs vs a few
-    // giant boilerplate clusters ⇒ different strategies). Singletons are
-    // docs with no edge (cluster size 1). Two hash aggregates over the
-    // shared CC labels; the heavy work (edges + CC) is the same shared
-    // stage every dedup query uses.
-    "q_cluster_hist" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
-      val sizes = docs.select(col("doc_id"))
-        .join(labels, col("doc_id") === col("id"), "left")
-        .select(coalesce(col("comp"), col("doc_id")).as("cluster"))
-        .groupBy("cluster").agg(count(lit(1)).as("sz"))
-      sizes.groupBy("sz")
-        .agg(count(lit(1)).as("n_clusters"),
-          (count(lit(1)) * col("sz")).as("n_docs"))
-        .orderBy("sz")
-    }),
-    // Curation — leakage-aware train/val split: documents gate on the md5
-    // of their near-dup CLUSTER label (singletons: their own id), not
-    // their own id, so a near-duplicate of a held-out doc can never land
-    // in train — the split-level twin of decontamination (a plain
-    // per-doc split leaks eval data through duplicates). Composes the
-    // shared dedup edge list + connected components with the
-    // deterministic md5 gate; ~1/8 of CLUSTERS (not docs) go to val.
-    "q_split_leakfree" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
-      docs.select(col("doc_id"))
-        .join(labels, col("doc_id") === col("id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster"))
-        .withColumn("split",
-          when(graft.operators.Sampling.keepHex(col("cluster"), "lfs1", "2000"),
-            lit("val")).otherwise(lit("train")))
-        .orderBy("doc_id")
-    }),
-    // Curation — split-leakage AUDIT, the measurement companion to
-    // q_split_leakfree: assign the split BOTH ways (naive per-doc md5
-    // gate vs the cluster-label gate) and count, per method, the val docs
-    // with a near-dup edge into train. The cluster gate's count is zero
-    // BY CONSTRUCTION (an edge's two ends share a component, hence a gate
-    // key); the naive gate leaks wherever a near-dup pair straddles the
-    // hash boundary — this query turns that design claim into a number
-    // both engines must agree on. One edge list + one CC, shared by both
-    // methods; the audit joins are edge-scale, never doc×doc.
-    "q_split_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val edges = nearDupEdges3(docs).select("a", "b")
-      val labels = Dedup.connectedComponents(edges, "a", "b")
-      def gate(key: org.apache.spark.sql.Column) =
-        when(graft.operators.Sampling.keepHex(key, "lfs1", "2000"),
-          lit("val")).otherwise(lit("train"))
-      val assigned = docs.select(col("doc_id"))
-        .join(labels, col("doc_id") === col("id"), "left")
-        .select(col("doc_id"),
-          gate(col("doc_id")).as("naive"),
-          gate(coalesce(col("comp"), col("doc_id"))).as("leakfree"))
-      val long = assigned.select(col("doc_id"), explode(array(
-          struct(lit("naive").as("method"), col("naive").as("split")),
-          struct(lit("leakfree").as("method"), col("leakfree").as("split"))))
-          .as("m"))
-        .select(col("doc_id"), col("m.method").as("method"),
-          col("m.split").as("split"))
-      val valCounts = long.filter(col("split") === "val")
-        .groupBy("method").agg(count(lit(1)).as("n_val"))
-      val sym = edges.select(col("a").as("x"), col("b").as("y"))
-        .unionByName(edges.select(col("b").as("x"), col("a").as("y")))
-      val leaky = sym
-        .join(long.select(col("doc_id").as("x"), col("method"),
-          col("split").as("sx")), "x")
-        .join(long.select(col("doc_id").as("y"), col("method"),
-          col("split").as("sy")), Seq("y", "method"))
-        .filter(col("sx") === "val" && col("sy") === "train")
-        .groupBy("method").agg(countDistinct(col("x")).as("n_leaky"))
-      valCounts.join(leaky, Seq("method"), "left")
-        .na.fill(0L, Seq("n_leaky"))
-        .orderBy("method")
-    }),
-    // A7 end-to-end — dedup survivor selection: each near-dup cluster
-    // keeps its best document (longest n_chars, then min doc_id);
-    // singletons keep themselves. Clusters + one argmax max(struct)
-    // aggregate — partial aggregation map-side, no corpus-wide window.
-    // A7 — golden-record construction (the MDM merge step after dedup):
-    // per near-dup cluster, ONE merged record — canonical id (min),
-    // richest text length (max), member count, and the distinct
-    // lang/source spread (a >1 spread flags cross-source duplication the
-    // mix planner must know about). Shares the dedup family's CC labels;
-    // one hash aggregate over label-joined docs, singletons merge with
-    // themselves via the label coalesce.
-    "q_golden_record" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
-      val d = docs.select(col("doc_id"), col("n_chars"), col("lang"),
-        col("source"))
-      d.join(labels, d("doc_id") === labels("id"), "left")
-        .select(coalesce(col("comp"), col("doc_id")).as("grp"),
-          col("doc_id"), col("n_chars"), col("lang"), col("source"))
-        .groupBy("grp")
-        .agg(min(col("doc_id")).as("canonical_id"),
-          count(lit(1)).as("n_members"),
-          max(col("n_chars")).as("best_n_chars"),
-          countDistinct(col("lang")).as("n_langs"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy("grp")
-    }),
-    "q_dedup_survivor" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
-      val dq = docs.select(col("doc_id"), col("n_chars"))
-      dq.join(labels, dq("doc_id") === labels("id"), "left")
-        .select(coalesce(col("comp"), col("doc_id")).as("grp"),
-          col("doc_id"), col("n_chars"))
-        .groupBy("grp")
-        .agg(max(struct(col("n_chars").as("nc"), (-col("doc_id")).as("nd")))
-          .as("m"))
-        .select(col("grp"), (-col("m.nd")).as("doc_id"),
-          col("m.nc").as("n_chars"))
-        .orderBy("grp")
-    }),
-    // A7 — SimHash signatures over the portable md5 hash family: every
-    // token hash, bit vote, and the final 16-bit signature reproduce
-    // exactly in the oracle engine. xxhash64 variant stays the operator
-    // default for scale (asserted in DedupSpec).
-    "q_dedup_simhash" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          Dedup.simHash16Portable(col("text")).as("simhash"))
-        .orderBy("doc_id")
-    }),
-    // Curation — SEMANTIC benchmark decontamination: the embedding-space
-    // twin of the n-gram screens (q_decontaminate catches verbatim
-    // overlap; paraphrased eval leakage needs the vector side). Every
-    // corpus vector reports its nearest benchmark vector (vec_id % 50 ==
-    // 0 slice) and whether the cosine crosses the contamination bar (0.4, the
-    // q_semdedup near-dup band — the fixture's planted geometry). The
-    // benchmark side broadcasts (eval suites are tiny); the |corpus| ×
-    // |bench| scored pairs flow straight into a map-side-combining argmax
-    // — the corpus never shuffles at pair scale. Per-pair cosines are
-    // bit-portable (the q_sim_exact argument), max/argmax are
-    // order-independent with a b_id tiebreak, so the whole screen
-    // oracle-checks.
-    "q_decontaminate_semantic" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val bench = emb.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
-      val corpus = emb.filter(col("vec_id") % 50 =!= 0)
-      corpus.crossJoin(broadcast(bench))
-        .select(col("vec_id"), col("b_id"),
-          graft.functions.VectorOps.cosine(col("emb"), col("b_emb"))
-            .as("cos"))
-        .groupBy("vec_id")
-        .agg(max(struct(col("cos").as("c"), (-col("b_id")).as("nb"))).as("m"))
-        .select(col("vec_id"), (-col("m.nb")).as("b_id"),
-          round(col("m.c"), 6).as("max_cos"),
-          (col("m.c") >= 0.4).as("contaminated"))
-        .orderBy("vec_id")
-    }),
-    // Curation — benchmark decontamination: training docs sharing any
-    // word 4-gram with the held-out benchmark slice (doc_id % 50 == 0).
-    // The benchmark gram set is broadcast; the corpus side never shuffles.
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.contaminated(
-        docs.filter(col("doc_id") % 50 =!= 0),
-        docs.filter(col("doc_id") % 50 === 0),
-        "doc_id", "text", n = 4)
-        .orderBy("doc_id")
-    }),
-    // Curation — same decontamination through the Bloom-prefiltered scale
-    // path: corpus grams are pruned by a 64-Kbit bitmap of the benchmark
-    // grams inside the scan, then exact-verified, so the answer is
-    // bit-identical to q_decontaminate (and shares its oracle SQL).
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.contaminatedBloom(
-        docs.filter(col("doc_id") % 50 =!= 0),
-        docs.filter(col("doc_id") % 50 === 0),
-        "doc_id", "text", n = 4)
-        .orderBy("doc_id")
-    }),
-    // Curation — the semantic screen as a per-language FUNNEL
-    // (Curation.semanticContamination): every train doc's max cosine to
-    // any src19 benchmark embedding, thresholded into per-lang counts —
-    // the reporting twin of q_decontaminate_semantic's per-vector rows
-    // (that query keeps the %50 bench slice and the nearest-b_id
-    // verdict; this one keys the funnel on the q_curate_e2e src19
-    // eval-suite convention). τ = 0.40 is calibrated to the
-    // fixture's similarity range (max cross-source cosine ≈ 0.44; a
-    // production run against true duplicates sits at ≥ 0.95); the
-    // benchmark side broadcasts, max-cos is order-free, and the cosine
-    // is the bit-portable sequential dot, so the verdict oracle-checks.
-    "q_decontaminate_funnel" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("doc_id"),
-          VectorOps.asDouble(col("embedding")).as("emb"))
-      val bench = docs.filter(col("source") === "src19").join(emb, "doc_id")
-      val train = docs.filter(col("source") =!= "src19").join(emb, "doc_id")
-      val mc = Curation.semanticContamination(train, bench, "doc_id", "emb")
-      train.select("doc_id", "lang").join(mc, Seq("doc_id"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_train"),
-          sum(when(col("max_cos") >= 0.40, 1L).otherwise(0L))
-            .as("n_contaminated"),
-          round(max(col("max_cos")), 6).as("max_cos"))
-        .withColumn("n_clean", col("n_train") - col("n_contaminated"))
-        .orderBy("lang")
-    }),
-    // Curation — cross-document boilerplate: 10-word chunks occurring in
-    // more than one distinct doc (headers/footers/license blocks).
-    "q_dedup_chunk" -> ((s, dir) => {
-      Curation.boilerplateChunks(t(s, dir, "documents"),
-        "doc_id", "text", w = 10)
-        .orderBy("chunk")
-    }),
-    // Curation — boilerplate REMOVAL: the cleaning transform on top of the
-    // q_dedup_chunk census (drop cross-doc-repeated chunks, reassemble the
-    // doc in original order). Output carries the cleaned text's md5 so the
-    // whole reconstruction is hash-checked without shipping the text.
-    "q_clean_boilerplate" -> ((s, dir) => {
-      Curation.removeBoilerplate(t(s, dir, "documents"), "doc_id", "text",
-        w = 10)
-        .select(col("doc_id"), col("n_chunks"), col("n_kept"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // Curation — source-overlap matrix: pairwise shingle Jaccard between
-    // sources (bounded G² rows per shingle, no doc-pair explosion); the
-    // mix-design question "which sources duplicate each other" answered
-    // before any doc-level dedup. Jaccard = one division of exact longs —
-    // emitted unrounded (bit-identical in any IEEE engine).
-    "q_source_overlap" -> ((s, dir) => {
-      Curation.sourceOverlap(t(s, dir, "documents"), "source", "text", 3)
-        .orderBy("src_a", "src_b")
-    }),
-    // L1/§2.9 — KMV distinct sketches, the ESTIMATION path beside
-    // q_source_overlap's exact shingle join: per-source k-minimum-value
-    // sketch (bounded MinKAgg state, map-side capped at k) + the unbiased
-    // (k−1)·2⁶⁰/h₍ₖ₎ cardinality estimate next to the exact count. A
-    // sketch is a pure function of the set — bit-portable, unlike HLL
-    // registers — so the whole estimator oracle-checks.
-    "q_kmv_card" -> ((s, dir) => {
-      val h = graft.operators.Sketch.fingerprintHashes(
-        t(s, dir, "documents"), "source", "text")
-      graft.operators.Sketch.kmv(h, "source", KmvK)
-        .select(col("source"), col("n_distinct"),
-          graft.operators.Sketch.kmvEstimate(col("sketch"), KmvK)
-            .as("kmv_est"))
-        .orderBy("source")
-    }),
-    // L1/§2.9 — every pairwise source-overlap estimate from O(k) state
-    // per source: merged sketches rebuilt relationally (per-pair rank),
-    // shared counts via semi-joins, Jaccard = shared/merged — the
-    // 100 TB answer to "which sources duplicate each other" without
-    // touching the corpus twice.
-    "q_kmv_overlap" -> ((s, dir) => {
-      val h = graft.operators.Sketch.fingerprintHashes(
-        t(s, dir, "documents"), "source", "text")
-      val sk = graft.operators.Sketch.kmv(h, "source", KmvK)
-      graft.operators.Sketch.kmvJaccardPairs(sk, "source", KmvK)
-        .orderBy("src_a", "src_b")
-    }),
-    // L1/§2.9 — KMV set algebra (Sketch.kmvSetPairs): pairwise union and
-    // intersection CARDINALITY estimates from the same O(k) sketches —
-    // the numbers a mix planner needs ("how many NEW docs does adding
-    // source B bring") that jaccard alone doesn't give.
-    "q_kmv_union" -> ((s, dir) => {
-      val h = graft.operators.Sketch.fingerprintHashes(
-        t(s, dir, "documents"), "source", "text")
-      val sk = graft.operators.Sketch.kmv(h, "source", KmvK)
-      graft.operators.Sketch.kmvSetPairs(sk, "source", KmvK)
-        .orderBy("src_a", "src_b")
-    }),
-    // S9-extension — the non-parquet format layer, oracle-checked END-TO-
-    // END: the documents corpus round-trips parquet → {csv, jsonl, orc} →
-    // back, and each format's re-read is digested with the order-free
-    // portable checksum over every column (Scale.tableChecksum) — any
-    // quoting, escaping, null-vs-empty, or type mangling in a format path
-    // breaks the hash. The oracle computes the same digest straight from
-    // parquet, so the three formats pass iff they preserved the corpus
-    // bit-for-bit. Scratch output lives at a FIXED path under the JVM
-    // temp dir and every write is mode=overwrite, so repeated
-    // invocations (bench sweeps, verify reruns) reuse the same
-    // corpus-sized footprint instead of accumulating tmp copies.
-    "q_format_roundtrip" -> ((s, dir) => {
-      import graft.sources.Sources
-      val cols = Seq("doc_id", "lang", "n_chars", "text")
-      val docs = t(s, dir, "documents").select(cols.map(col): _*)
-      // keyed by applicationId: per-session unique (no cross-process or
-      // cross-user /tmp collision), constant within a session (bench
-      // sweeps overwrite instead of accumulating)
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_fmt_${s.sparkContext.applicationId}").toString
-      Sources.writeCsv(docs, s"$base/csv")
-      Sources.writeJsonLines(docs, s"$base/jsonl")
-      Sources.writeOrc(docs, s"$base/orc")
-      def digest(df: DataFrame, fmt: String) =
-        Scale.tableChecksum(df, cols)
-          .select(lit(fmt).as("format"), col("checksum"), col("n_rows"))
-      digest(Sources.csv(s, s"$base/csv", docs.schema), "csv")
-        .unionByName(
-          digest(Sources.jsonLines(s, s"$base/jsonl", docs.schema), "jsonl"))
-        .unionByName(digest(Sources.orc(s, s"$base/orc"), "orc"))
-        .orderBy("format")
-    }),
-    // Curation — the end-to-end pipeline: quality gate (≥20 tokens) →
-    // exact dedup on the canonical-text fingerprint (min doc_id survives)
-    // → benchmark decontamination (4-gram overlap vs the held-out src19
-    // "eval suite") → per-language funnel counts. Each stage is an
-    // already-oracle-checked operator; this query pins their COMPOSITION.
-    "q_curate_e2e" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.filter(col("source") === "src19")
-      val train = docs.filter(col("source") =!= "src19")
-      val q = train.filter(size(split(col("text"), "\\s+")) >= 20)
-      // persisted: uniq feeds the contamination scan, the anti join's left
-      // side, AND its own stage count
-      val uniq = Dedup.exactByKey(
-        q.withColumn("__fp", Dedup.fingerprint(col("text"))),
-        Seq("__fp"), Seq(col("doc_id").asc))
-        .drop("__fp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val clean = uniq.join(
-        Curation.contaminated(uniq, bench, "doc_id", "text", 4),
-        Seq("doc_id"), "left_anti")
-      def stage(df: DataFrame, alias: String) =
-        df.groupBy("lang").agg(count(lit(1)).as(alias))
-      stage(train, "n_raw")
-        .join(stage(q, "n_quality"), Seq("lang"), "left")
-        .join(stage(uniq, "n_unique"), Seq("lang"), "left")
-        .join(stage(clean, "n_clean"), Seq("lang"), "left")
-        .na.fill(0L, Seq("n_quality", "n_unique", "n_clean"))
-        .orderBy("lang")
-    }),
-    // Pipeline — per-document funnel ATTRIBUTION, the debugging twin of
-    // q_curate_e2e's per-language counts: for EVERY candidate doc, the
-    // FIRST stage that dropped it — low_quality | duplicate (with the
-    // surviving doc's id) | contaminated | kept. The "why was my
-    // document removed" table a pipeline operator actually gets asked
-    // for; attribution reuses each stage's own predicate (no second
-    // algorithm to drift): quality is the scan-local token gate, the
-    // duplicate verdict is one fingerprint-survivor join, contamination
-    // is the same n-gram screen — all corpus-scale-shaped (per-doc rows
-    // stream to the sink; nothing gathers).
-    "q_curate_explain" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.filter(col("source") === "src19")
-      val train = docs.filter(col("source") =!= "src19")
-        .select(col("doc_id"), col("lang"), col("text"),
-          (size(split(col("text"), "\\s+")) >= 20).as("__q"))
-      val q = train.filter(col("__q"))
-        .withColumn("__fp", Dedup.fingerprint(col("text")))
-      val surv = q.groupBy("__fp").agg(min("doc_id").as("__surv"))
-      // (doc_id → its fingerprint's survivor) for every quality-passing
-      // doc; persisted — the survivor filter and the final attribution
-      // both consume it
-      val keepMap = q.join(surv, Seq("__fp"))
-        .select(col("doc_id"), col("__surv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val uniq = q.join(
-        keepMap.filter(col("doc_id") === col("__surv")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      val contam = Curation.contaminated(uniq, bench, "doc_id", "text", 4)
-        .select(col("doc_id"), lit(true).as("__cont"))
-      val out = train.select(col("doc_id"), col("lang"), col("__q"))
-        .join(keepMap, Seq("doc_id"), "left")
-        .join(contam, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("lang"),
-          // NULL text gives a NULL gate verdict — it is quality-dropped
-          // (q_curate_e2e excludes it from n_quality), so the null must
-          // land on low_quality, not fall through to 'kept'
-          when(col("__q").isNull || !col("__q"), lit("low_quality"))
-            .when(col("__surv") =!= col("doc_id"), lit("duplicate"))
-            .when(col("__cont"), lit("contaminated"))
-            .otherwise(lit("kept")).as("outcome"),
-          when(col("__surv") =!= col("doc_id"), col("__surv"))
-            .as("survivor"))
-        .orderBy("doc_id")
-      // keepMap backs both consumers of one action — freed once the
-      // caller's materialization completes, so repeated runs in one
-      // session don't accumulate MEMORY_AND_DISK blocks
-      Scale.releaseAfterUse(out, Seq(keepMap))
-    }),
-    // Pipeline — the end-to-end training-data PREPARE composition
-    // (q_curate_e2e's sibling for the mechanics half): quality gate
-    // (≥ 20 ws tokens) → unigram TOKENIZE under the trained+pruned
-    // model with the OOV char fallback (total — every gated doc gets a
-    // count) → length-bucketed sequence PACKING (4 shards, capacity
-    // 128) → shard-INTERLEAVED consumption order (sequences rank
-    // within their shard by (bucket, seq_id); global pos round-robins
-    // shards — the q_interleave formula with shards as sources). Each
-    // stage is an already-oracle-checked operator; this query pins
-    // their COMPOSITION end to end, one row per packed sequence in
-    // consumption order. The tokenizer trains on the FULL corpus (a
-    // tokenizer is an upstream artifact shared across data cuts);
-    // the gate decides only which docs get packed.
-    "q_prepare_e2e" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val gated = docs.filter(col("text").isNotNull &&
-        size(split(col("text"), "\\s+")) >= 20)
-      // the trainer's full-corpus vocabulary is a SUPERSET of the gated
-      // corpus' words, so the serving DP reuses it (one corpus word-agg)
-      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
-          UniWordLen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pruned = graft.operators.Unigram.trainAndPrune(docs, "text",
-          UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10,
-          vocab = Some(voc))
-        .select(col("piece"), col("cost"))
-      val counts = graft.operators.Unigram.tokenCountsOov(gated,
-        "doc_id", "text", pruned, UniPieceLen, UniOovWordLen,
-        vocab = Some(voc))
-      val seqs = graft.operators.Sampling.packSequences(counts, "doc_id",
-          "n_tokens", "prep1", nShards = 4, capacity = 128)
-        .groupBy("shard", "bucket", "seq_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("used_tokens"))
-        .withColumn("padding", lit(128L) - col("used_tokens"))
-      val w = Window.partitionBy("shard").orderBy("bucket", "seq_id")
-      graft.operators.Scale.releaseAfterUse(
-        seqs.withColumn("srank", row_number().over(w).cast("long"))
-          .withColumn("pos", (col("srank") - 1) * 4 + col("shard"))
-          .select("pos", "shard", "bucket", "seq_id", "n_docs",
-            "used_tokens", "padding")
-          .orderBy("pos"),
-        Seq(voc))
-    }),
-    // Curation — the TRAINED model gate composed into the funnel: NB
-    // log-odds weights (trained in-plan, never collected) gate docs at
-    // margin ≥ 0, survivors dedup by canonical fingerprint, per-lang
-    // stage counts — q_curate_e2e's shape with the rule-based length
-    // gate swapped for the trained classifier.
-    "q_curate_trained" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val w = graft.operators.TextAnalysis.trainTokenLogOdds(
-        docs.withColumn("__y", col("lang") === "en"),
-        "doc_id", "text", "__y")
-      val gate = graft.operators.TextAnalysis.scoreWithTokenWeights(
-        docs, "doc_id", "text", w)
-        .filter(col("pass")).select(col("doc_id"))
-      val passed = docs.join(gate, Seq("doc_id"), "left_semi")
-      val uniq = Dedup.exactByKey(
-        passed.withColumn("__fp", Dedup.fingerprint(col("text"))),
-        Seq("__fp"), Seq(col("doc_id").asc)).drop("__fp")
-      def stage(df: DataFrame, alias: String) =
-        df.groupBy("lang").agg(count(lit(1)).as(alias))
-      stage(docs, "n_raw")
-        .join(stage(passed, "n_pass"), Seq("lang"), "left")
-        .join(stage(uniq, "n_unique"), Seq("lang"), "left")
-        .na.fill(0L, Seq("n_pass", "n_unique"))
-        .orderBy("lang")
-    }),
-    // Curation — fixed-size token chunking with overlap (size 50, stride
-    // 40): the split step between cleaning and packing, so long documents
-    // become training-window-sized pieces with 10-token continuity overlap.
-    // One explode of ~n_tokens/stride chunk starts per doc, scan-local;
-    // slice clamps the tail chunk. No shuffle until the output sort.
-    "q_chunk_docs" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), "\\s+").as("w"))
-        .select(col("doc_id"), col("w"),
-          explode(sequence(lit(0L),
-            floor((size(col("w")) - 1) / 40.0).cast("long"))).as("chunk_id"))
-        .select(col("doc_id"), col("chunk_id"),
-          size(slice(col("w"), (col("chunk_id") * 40 + 1).cast("int"),
-            lit(50))).as("n_chunk_tokens"),
-          array_join(slice(col("w"), (col("chunk_id") * 40 + 1).cast("int"),
-            lit(50)), " ").as("chunk"))
-        .orderBy("doc_id", "chunk_id")
-    }),
-    // Curation — token-budget sequence packing (512-token sequences,
-    // first-fit by running offset within each language).
-    "q_pack_sequences" -> ((s, dir) => {
-      Curation.packSequences(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("lang"),
-            TA.tokenCountWs(col("text")).as("n_tokens")),
-        "lang", "doc_id", "n_tokens", budget = 512)
-        .orderBy("lang", "seq_id")
-    }),
-    // Curation — int8 embedding quantization with per-vector range and
-    // mean absolute reconstruction error.
-    "q_embed_quantize" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("mn", array_min(col("v")))
-        .withColumn("mx", array_max(col("v")))
-      e.withColumn("qv", Curation.quantizeInt8(col("v"), col("mn"), col("mx")))
-        .select(col("vec_id"),
-          array_min(col("qv")).as("qmin"),
-          array_max(col("qv")).as("qmax"),
-          round(Curation.meanAbsDequantError(
-            col("v"), col("qv"), col("mn"), col("mx")), 6).as("mean_abs_err"))
-        .orderBy("vec_id")
-    }),
-    // L2 — exact brute-force cosine top-10 for 5 query vectors.
-    "q_sim_exact" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"), col("rn"),
-          round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — SQ8 scalar-quantized serving (operators/Sq.scala — the FAISS
-    // IndexScalarQuantizer QT_8bit shape): per-DIMENSION affine int8
-    // codes trained on the corpus, asymmetric query-vs-reconstruction
-    // scoring, EXACT-INTEGER end to end in the shared micro-int frame
-    // (one round per element, then integer scales / half-up integer-
-    // division codes / long-dot scores — the q_opq_balance discipline,
-    // so the oracle replays every step in BIGINT).
-    "q_sq8_search" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      graft.operators.Sq.sq8TopK(emb, qs, topK = 10, dim = 64)
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — and its measured recall@10 against the exact cosine truth:
-    // the third point on the compression/recall curve (exact 1.0 at
-    // 512 B/vec, SQ8 at 64 B, IVF-PQ at ~5 B) — read beside
-    // q_ivf_pq_recall to price each byte of index. The corpus frame
-    // persists once for its three consumers (the ivfPqRecallOver
-    // convention).
-    "q_sq8_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val approx = graft.operators.Sq.sq8TopK(emb, qs, topK = 10, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, approx, 10)
-    }),
-    // L2 — SQ8 composed with IVF cells (Sq.sq8IvfTopK): the production
-    // layout — SQ8 codes per cell, nprobe=4 probing, scoring touches only
-    // the probed cells — measured against the same exact truth, so the
-    // flat-SQ8 vs IVF-SQ8 recall delta IS the price of cell pruning at
-    // this nprobe (read beside q_ivf_pq_recall for the PQ point).
-    "q_sq8_ivf_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val approx = graft.operators.Sq.sq8IvfTopK(emb, qs, centroids,
-          topK = 10, nprobe = 4, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, approx, 10)
-    }),
-    // L2 — BINARY (1-bit) quantization serving (operators/Bq.scala — the
-    // FAISS IndexBinaryFlat shape): sign bits packed 32/long (MSB-first
-    // integer fold — no bit-63/2^63 hazards in either engine), Hamming =
-    // Σ popcount(XOR), ties on vec_id. The oracle scores by DIRECT
-    // sign-disagreement counting with no packing, so the pack/XOR/
-    // popcount path is cross-proved (the q_media_info parser/synth
-    // convention).
-    "q_bq_search" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      graft.operators.Bq.bqTopK(emb, qs, topK = 10, dim = 64)
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — binary codes-only recall@10 vs the exact cosine truth: the
-    // FOURTH point on the compression/recall curve (exact 512 B/vec →
-    // SQ8 64 B → PQ ~5 B → sign bits 8 B) — read beside q_sq8_recall /
-    // q_ivf_pq_recall to price each byte of index.
-    "q_bq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val approx = graft.operators.Bq.bqTopK(emb, qs, topK = 10, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, approx, 10)
-    }),
-    // L2 — binary codes composed with IVF cells (Bq.bqIvfTopK): sign
-    // words per cell, nprobe=4 probing, Hamming touches only the probed
-    // cells — the IndexBinaryIVF production layout, measured against the
-    // same exact truth (read beside q_sq8_ivf_recall / q_ivf_pq_recall
-    // for the compression×probe grid). Measured INVERSION at sf0.01:
-    // 0.46 here vs flat q_bq_recall's 0.32 — dim-64 Hamming has only 65
-    // possible values, so the flat search loses true neighbors inside
-    // corpus-wide tie groups to the id tie-break, while cell-bounding
-    // shrinks each tie pool to co-located vectors; for 1-bit codes the
-    // coarse quantizer is a RANKING signal, not just a pruning lever.
-    "q_bq_ivf_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val approx = graft.operators.Bq.bqIvfTopK(emb, qs, centroids,
-          topK = 10, nprobe = 4, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, approx, 10)
-    }),
-    // L2 — Johnson–Lindenstrauss random-projection recall: the
-    // DIMENSIONALITY axis of the compression grid (the quantization
-    // axis is SQ8/PQ/BQ) — project dim 64 → 16 through the seeded
-    // Gaussian plane basis (Similarity.hyperplanes, the sign-LSH basis
-    // WITHOUT the sign: JL says random projections preserve pairwise
-    // geometry in expectation), rank by exact cosine IN THE PROJECTED
-    // space, measure recall@10 vs the full-dimension truth, as a CURVE
-    // over proj_dim ∈ {16, 32}. 2-4× fewer bytes AND cheaper dots per
-    // candidate; the projection is one scan-local select of codegen'd
-    // graft_dot literals. Both engines compute the identical sequential
-    // double dots, so the whole row hash-checks (the q_sim_lsh_topk
-    // plane convention). Measured: 0.10 at BOTH dims on the harness
-    // fixtures — the synthetic embeddings are near-isotropic
-    // (q_pca_variance), so top-10 margins sit inside projection noise;
-    // the row exists to MEASURE that trade per corpus (on real
-    // embeddings with decaying spectra the curve rises toward 1), the
-    // same role the rotation probe plays for quantizer modes.
-    "q_jl_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      JlDims.map { d =>
-        val planes = Similarity.hyperplanes(d, 64)
-        def proj(c: org.apache.spark.sql.Column) =
-          array(planes.map(p => VectorOps.dot(c, typedlit(p))): _*)
-        val approx = Similarity.exactTopK(
-            emb.select(col("vec_id"), proj(col("emb")).as("emb")),
-            qs.select(col("q_id"), proj(col("q_emb")).as("q_emb")), 10)
-          .select(col("q_id"), col("vec_id"))
-        Similarity.recallAtK(exact, approx, 10)
-          .select(lit(d.toLong).as("proj_dim"), col("q_id"),
-            col("n_hit"), col("recall"))
-      }.reduce(_ unionByName _).orderBy("proj_dim", "q_id")
-    }),
-    // L2 — IVF-Flat search in the RAW space (Similarity.ivfTopK — FAISS
-    // IndexIVFFlat): first-16-seed coarse quantizer, probe 4 cells,
-    // exact cosine over only the probed candidates — the uncompressed
-    // middle of the accuracy/cost curve (full recall fidelity within
-    // the probed cells, 4/16 of the scan). The corpus never shuffles:
-    // cell assignment is scan-local, the query side explodes to nprobe
-    // rows and broadcasts into the cell join.
-    "q_ivf_flat" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      Similarity.ivfTopK(emb, qs, centroids, topK = 10, nprobe = 4)
-        .select(col("q_id"), col("rn"), col("vec_id"),
-          round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — MATRYOSHKA-style prefix-truncation recall: the LEARNED-prefix
-    // dimensionality axis beside q_jl_recall's random-mix one — truncate
-    // each embedding to its first D coordinates (array slice, zero
-    // arithmetic), rank by exact cosine in the truncated space, measure
-    // recall@10 vs the full-dim truth over D ∈ {16, 32}. On MRL-trained
-    // embeddings the prefix carries the information and this curve stays
-    // near 1 (the reason serving stacks truncate before they quantize).
-    // Measured here: 0.32/0.22 at D=32 (sf0.01/sf0.1) vs JL's 0.10 —
-    // even on near-isotropic fixtures the prefix keeps D exact
-    // coordinates where the random mix dilutes all 64, so truncation
-    // dominates projection at equal D. The row is the axis-family
-    // chooser a corpus runs before flipping --proj-dim on.
-    "q_mrl_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      JlDims.map { d =>
-        val approx = Similarity.exactTopK(
-            emb.select(col("vec_id"), slice(col("emb"), 1, d).as("emb")),
-            qs.select(col("q_id"), slice(col("q_emb"), 1, d).as("q_emb")),
-            10)
-          .select(col("q_id"), col("vec_id"))
-        Similarity.recallAtK(exact, approx, 10)
-          .select(lit(d.toLong).as("proj_dim"), col("q_id"),
-            col("n_hit"), col("recall"))
-      }.reduce(_ unionByName _).orderBy("proj_dim", "q_id")
-    }),
-    // L2 — the JL-PROJECTED IVF-Flat pipeline (what `graft.Ann
-    // --proj-dim` builds and serves, qt=3): project dim 64 → 16 through
-    // the seeded planes, first-16-seed IVF in the PROJECTED space,
-    // probe 4 cells, exact projected cosine over the probed candidates
-    // (Similarity.ivfTopK — FAISS IndexIVFFlat in the projected space);
-    // recall vs the full-dimension truth. Reads beside q_jl_recall
-    // (projected exact): the gap between the two rows is what cell
-    // probing costs ON TOP of the projection's own loss.
-    "q_jl_ivf_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val d = JlDims.head
-      val planes = Similarity.hyperplanes(d, 64)
-      def proj(c: org.apache.spark.sql.Column) =
-        array(planes.map(p => VectorOps.dot(c, typedlit(p))): _*)
-      val pemb = emb.select(col("vec_id"), proj(col("emb")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pqs = qs.select(col("q_id"), proj(col("q_emb")).as("q_emb"))
-      val centroids = graft.operators.Ivf.train(pemb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val approx = Similarity.ivfTopK(pemb, pqs, centroids,
-          topK = 10, nprobe = 4)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, approx, 10)
-    }),
-    // L2 — ASYMMETRIC binary recall (Bq.bqAsymTopK): same 8 B/vec index,
-    // query kept at full precision, score = Σ sign(x_i)·q̂_i — the
-    // asymmetric-hashing upgrade over symmetric Hamming (which throws
-    // away query magnitudes and collapses ranking into ≤ 65 tie-heavy
-    // values). Read the 3 binary rows together: symmetric 0.32 <
-    // cell-bounded 0.46 < asymmetric (this row) at identical storage.
-    "q_bq_asym_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val approx = graft.operators.Bq.bqAsymTopK(emb, qs, topK = 10,
-          dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, approx, 10)
-    }),
-    // L2 — the production composition: binary top-40 candidates → exact
-    // cosine refine to 10 (Similarity.refineTopK — the FAISS
-    // IndexBinaryFlat + IndexRefine recipe). The recall lift over
-    // q_bq_recall is what the 4x candidate over-fetch buys back from the
-    // 1-bit codes; refine cost is |q|·40 vector fetches, corpus-size
-    // independent.
-    "q_bq_refine_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val cands = graft.operators.Bq.bqTopK(emb, qs, topK = 40, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      val refined = Similarity.refineTopK(cands, emb, qs, topK = 10)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, refined, 10)
-    }),
-    // L2 — hard-negative mining: the top-10 most-similar vectors per query
-    // EXCLUDING the near-duplicate band (cos >= 0.35, just under the
-    // fixture's 0.4 dedup threshold — the same band q_dedup_embed treats
-    // as redundant). The contrastive-training sampler: rank what is close
-    // but provably not a duplicate.
-    "q_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      Similarity.hardNegatives(emb, qs, 10, dupThreshold = 0.35)
-        .select(col("q_id"), col("vec_id"), col("rn"),
-          round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — MMR diversified selection (Similarity.mmrSelect): 3 greedy
-    // picks from each query's top-10 candidates at λ=0.7/μ=0.3 — the
-    // retrieval re-rank that stops the result set being k near-copies of
-    // the best hit. Candidate cosines, the pairwise diversity penalty,
-    // and all three argmax rounds oracle-check at full double precision
-    // (same portable dot-product argument as q_sim_exact); only the
-    // reported score rounds.
-    "q_mmr" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      Similarity.mmrSelect(emb, qs, candK = 10, k = 3)
-        .select(col("q_id"), col("pick"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("q_id", "pick")
-    }),
-    // L2 — sign-LSH bucket histogram: the scale path's candidate profile.
-    // Oracle-checked: the seeded hyperplane basis is part of the operator
-    // definition, so the oracle SQL carries the same plane literals and
-    // both engines compute bit-identical projections (sequential
-    // double-sum both sides — same argument as q_sim_exact).
-    "q_sim_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      Similarity.lshBuckets(emb, "emb", Similarity.hyperplanes(8, 64))
-        .orderBy("bucket")
-    }),
-    // A7 — embedding near-dup at scale: candidates meet only inside a
-    // sign-LSH bucket (equi-join, no O(n²) pair explosion), exact cosine
-    // verifies. The bucketed twin of q_dedup_embed, oracle-checked the
-    // same way as q_sim_lsh.
-    "q_dedup_embed_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      Dedup.embeddingNearDupsLsh(emb, "vec_id", "emb", 0.4,
-        Similarity.hyperplanes(4, 64))
-        .select(col("a"), col("b"), round(col("cos"), 6).as("cosine"))
-        .orderBy("a", "b")
-    }),
-    // L2 — product quantization (fixed codebook): the vector-compression
-    // half of ANN at scale — 64 floats become m=4 codeword indexes, and
-    // the per-subspace reconstruction error is the m/k quality dial. The
-    // codebook is declared (subvectors of vec_id < 8), so assignment,
-    // tiebreak, and error are bit-portable arithmetic the oracle mirrors,
-    // exactly like q_sim_ivf_fixed.
-    "q_pq_encode" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      graft.operators.Pq.encodeFixed(emb, "vec_id", "emb",
-        m = 4, k = 8, dim = 64)
-        .orderBy("vec_id", "j")
-    }),
-    // L2 — PQ/ADC search: top-10 by asymmetric distance over the m=4
-    // codes — the corpus side is ONLY its compressed codes; the query's
-    // m·k distance table broadcasts. Term-wise decimal(28,10) casts make
-    // the cross-subspace float sum order-independent, so ranking and
-    // distances oracle-check exactly.
-    "q_pq_search" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      graft.operators.Pq.adcTopK(emb, qs, 10, m = 4, k = 8, dim = 64)
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — ANN quality evaluation AS a query: recall@10 of the PQ/ADC
-    // search against the exact cosine top-10, per query vector — the
-    // eval loop a pipeline runs before trusting an index. Overlap counts
-    // are exact integers; recall is one int division (bit-portable).
-    "q_pq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val adc = graft.operators.Pq.adcTopK(emb, qs, 10, m = 4, k = 8, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      // left join, not semi (inside recallAtK): a query with ZERO overlap
-      // must still report its (humiliating) recall row
-      Similarity.recallAtK(exact, adc, 10)
-    }),
-    // L2 — IVF-ADC composed search (Pq.ivfAdcTopK): the FAISS-IVFPQ
-    // production ANN shape — the coarse quantizer bounds CANDIDATES (each
-    // query scores only its nprobe=4 of 16 cells) and PQ bounds BYTES (the
-    // corpus side of the scoring join is m=4 codes + a cell id). The fixed
-    // first-16 quantizer and first-8 codebook keep every step — cell
-    // assignment, probe ranking, per-subspace argmin, the decimal ADC
-    // sum — bit-portable, so the full composition oracle-checks, not just
-    // its halves (q_sim_ivf_fixed, q_pq_search).
-    "q_ivf_pq_search" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      graft.operators.Pq.ivfAdcTopK(emb, qs, centroids, nprobe = 4,
-        topK = 10, m = 4, k = 8, dim = 64)
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — recall@10 of the composed IVF-ADC search against the exact
-    // cosine top-10 (the q_pq_recall recipe): the number that shows what
-    // probe-bounding costs ON TOP of quantization — reading it next to
-    // q_pq_recall separates the two loss sources before picking nprobe.
-    "q_ivf_pq_recall" -> ((s, dir) =>
-      ivfPqRecallOver(t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          VectorOps.asDouble(col("embedding")).as("emb")))),
-    // L2 — RESIDUAL IVF-PQ recall (Pq.ivfAdcResidualTopK — FAISS
-    // IndexIVFPQ's by_residual=true default): the PQ encodes x − c(cell)
-    // instead of x, spending its bytes on within-cell geometry. Read
-    // beside q_ivf_pq_recall: identical m/k/nprobe/seeds, the residual
-    // form is the whole difference. MEASURED on these fixtures: 0.24 vs
-    // plain 0.36 at sf0.01, 0.06 vs 0.26 at sf0.1 — an honest NEGATIVE
-    // result (the q_jl_recall convention): residual encoding presumes
-    // the coarse cells capture real cluster structure, and on
-    // near-isotropic synthetic embeddings they are arbitrary Voronoi
-    // shards, so subtracting a per-cell centroid only decorrelates the
-    // fixed first-8 codebook from both sides. On corpora with genuine
-    // structure (where production FAISS defaults to by_residual) the
-    // sign flips — this row is the per-corpus decision number, and the
-    // hash-matched oracle proves the pipeline faithful either way.
-    "q_ivf_pq_residual_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val adc = graft.operators.Pq.ivfAdcResidualTopK(emb, qs, centroids,
-          nprobe = 4, topK = 10, m = 4, k = 8, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, adc, 10)
-    }),
-    // L2 — OPQ-STYLE ROTATED IVF-PQ recall (Opq.rotate ∘ the
-    // q_ivf_pq_recall pipeline): the Walsh–Hadamard rotation spreads
-    // the corpus' dominant-direction energy evenly across the m=4 PQ
-    // subspaces BEFORE the codebooks see it — the standard recall lift
-    // at equal code budget (measured: mean recall@10 0.36 → 0.42 at
-    // sf0.01, 0.26 → 0.30 at sf0.1, same nprobe=4). Exact-integer WHT
-    // over micro-quantized vectors keeps the whole rotated pipeline
-    // bit-portable; the exact-cosine truth is computed in the rotated
-    // space, which the isometry law (OpqSpec) pins equal to the
-    // original space's ranking.
-    "q_opq_recall" -> ((s, dir) =>
-      // spread BELOW the rotation: the WHT butterfly is per-row compute
-      // that would otherwise evaluate inside the single scan task
-      // upstream of ivfPqRecallOver's exchange (a spread above a
-      // projection parallelizes its CONSUMERS, never the projection)
-      ivfPqRecallOver(graft.operators.Scale.spreadForCompute(
-          t(s, dir, "embeddings")
-            .select(col("vec_id"),
-              VectorOps.asDouble(col("embedding")).as("__raw")),
-          col("vec_id"))
-        .select(col("vec_id"),
-          graft.operators.Opq.rotate(col("__raw"), 64).as("emb")))),
-    // L2 — the rotation's effect as a per-subspace number
-    // (q_opq_recall's measurement twin): total PQ quantization error
-    // per subspace, plain vs rotated. PQ quantizes subspaces
-    // independently, so this row shows how the rotation REDISTRIBUTES
-    // error across them (total energy is preserved — the isometry law;
-    // at sf0.01 the redistribution drops 3 of 4 subspaces and the
-    // recall lift follows). EXACT-INTEGER accounting end to end
-    // (Pq.encodeFixedLong): both paths are expressed in the SAME
-    // integer frame — eighth-micro units, 1/(√64·10⁶) of the float
-    // scale — plain as 8·round(x·10⁶), rotated as the RAW integer WHT
-    // (already √64·10⁶-scaled), so every dot, argmin key, per-row err
-    // and cross-row total is an exact integer with zero double rounding
-    // anywhere. History of the board's one recurring red row: the r12
-    // double-rounding theory was DISPROVED by the r13 judge (no sf0.01
-    // quantization input is within 3e-5 of a .5 boundary); the real
-    // r13 root cause was DECIMAL(38,0) outputs above 2^53, which the
-    // driver's compare coerces lossily while BIGINT survives — hence
-    // the final .cast("long") on both engine and oracle sides.
-    "q_opq_balance" -> ((s, dir) => {
-      val embP = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qP = embP.select(col("vec_id"),
-        transform(col("emb"),
-          x => round(x * 1e6, 0).cast("long") * 8).as("emb"))
-      val qR = embP.select(col("vec_id"),
-        graft.operators.Opq.rotateInt(col("emb"), 64).as("emb"))
-      def byJ(e: DataFrame, out: String) =
-        graft.operators.Pq.encodeFixedLong(e, "vec_id", "emb",
-            m = 4, k = 8, dim = 64)
-          .groupBy("j")
-          // sum in DECIMAL (no wrap), ship as BIGINT: err totals reach
-          // ~1.1e16 — above 2^53, where DECIMAL survives our local
-          // DuckDB compare but not the driver's (r13 verdict: the two
-          // DECIMAL>2^53 rows were the board's only reds while BIGINTs
-          // up to 6.7e17 passed). Standing convention (SURVEY §5): no
-          // DECIMAL output column may exceed 2^53.
-          .agg(sum(col("err").cast("decimal(28,0)")).cast("long").as(out))
-      byJ(qP, "err_plain").join(byJ(qR, "err_rot"), Seq("j"))
-        .orderBy("j")
-    }),
-    // L2 — the balance comparison ACROSS all four rotation modes
-    // (plain / oblivious WHT / learned rank-1 / learned rank-2): the
-    // per-subspace exact-integer PQ error totals in ONE shared
-    // eighth-micro frame — the OPQ objective itself as a measurement,
-    // answering directly whether each rotation actually equalized
-    // subspace error (the property the recall lifts ride on). Same
-    // Pq.encodeFixedLong algebra as q_opq_balance; the learned frames
-    // re-quantize the reflected doubles (8·round(rv·10⁶), one rounding
-    // per element, oracle-replayed); WHT uses the raw integer butterfly.
-    "q_opq_balance2" -> ((s, dir) => {
-      // spread before the persist: four encode passes read this cache,
-      // and r1's interpreted Householder reflection materializes through
-      // it — at scan width all of that serialized into single tasks
-      val embP = graft.operators.Scale.spreadForCompute(
-          t(s, dir, "embeddings")
-            .select(col("vec_id"),
-              VectorOps.asDouble(col("embedding")).as("emb")),
-          col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val q8 = (c: org.apache.spark.sql.Column) =>
-        transform(c, x => round(x * 1e6, 0).cast("long") * 8)
-      val (d1, d2) = graft.operators.Pca.topDirections2(embP, "emb", 64)
-      val u1 = graft.operators.Opq.householderFromPca(d1)
-      val u2 = graft.operators.Opq.householder2FromPca(d2, u1)
-      // r1 feeds BOTH its own balance pass and the second reflection
-      val r1 = graft.operators.Opq.rotateHouseholder(embP, "emb", u1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val r2 = graft.operators.Opq.rotateHouseholder(r1, "emb", u2)
-      def byJ(e: DataFrame, mode: String) =
-        graft.operators.Pq.encodeFixedLong(e, "vec_id", "emb",
-            m = 4, k = 8, dim = 64)
-          .groupBy("j")
-          // DECIMAL sum → BIGINT output: same >2^53 driver-compare
-          // convention as q_opq_balance (SURVEY §5).
-          .agg(sum(col("err").cast("decimal(28,0)")).cast("long").as("err"))
-          .select(lit(mode).as("mode"), col("j"), col("err"))
-      byJ(embP.select(col("vec_id"), q8(col("emb")).as("emb")), "plain")
-        .union(byJ(embP.select(col("vec_id"),
-          graft.operators.Opq.rotateInt(col("emb"), 64).as("emb")), "wht"))
-        .union(byJ(r1.select(col("vec_id"), q8(col("emb")).as("emb")),
-          "pca1"))
-        .union(byJ(r2.select(col("vec_id"), q8(col("emb")).as("emb")),
-          "pca2"))
-        .orderBy("mode", "j")
-    }),
-    // L2 — the LEARNED rotation (the PCA-derived counterpart of
-    // q_opq_recall's oblivious WHT): a Householder reflection built
-    // from the corpus' top principal direction (Opq.householderFromPca
-    // over Pca.topDirection) maps the dominant-variance axis onto the
-    // all-ones diagonal, spreading its energy across all m subspaces —
-    // the actual OPQ objective, data-driven. Exactly orthogonal for the
-    // exact integer u, bit-portable end to end (the oracle re-derives
-    // the direction from its own PCA CTEs and replays the reflection in
-    // exact decimals), and the measured lift at equal nprobe=4: mean
-    // recall@10 0.36 → 0.40 at sf0.01, 0.26 → 0.30 at sf0.1.
-    "q_opq_pca_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val u = graft.operators.Opq.householderFromPca(
-        graft.operators.Pca.topDirection(emb, "emb", 64))
-      // spread BELOW the reflection (the q_opq_recall rationale): the
-      // interpreted Householder HOF is the per-row cost to parallelize
-      ivfPqRecallOver(graft.operators.Opq.rotateHouseholder(
-        graft.operators.Scale.spreadForCompute(emb, col("vec_id")),
-        "emb", u))
-    }),
-    // L2 — the RANK-2 learned rotation (the verdict-4 upgrade): compose
-    // TWO Householders — H₁ maps the top principal direction onto the
-    // all-ones diagonal (as q_opq_pca_recall), H₂ maps the second
-    // direction's image onto the ALTERNATING ±1 diagonal, which is
-    // orthogonal to H₁'s target so the composition spreads BOTH top
-    // directions' energy across the m subspaces instead of undoing one.
-    // Exactly orthogonal for the exact-integer axes, bit-portable end to
-    // end: the oracle re-derives q₂ from its own deflation CTEs (dir2),
-    // replays v = H₁q₂ and both reflections in exact decimals.
-    // Measured (recall@10, nprobe=4, vs plain 0.36/0.26 and WHT
-    // 0.42/0.30 at sf0.01/sf0.1): rank-1 0.40/0.30, rank-2 0.32/0.34 —
-    // at the larger SF the learned rotations beat the oblivious WHT.
-    // A 40-query probe (tools/RecallProbe) confirms the direction at
-    // sf0.1 (pca1 0.1025 / pca2 0.10 vs wht 0.0875, plain 0.09) and
-    // shows the sf0.01 rank-2 dip is a real small-corpus effect, not
-    // 5-query noise (wht 0.18 > pca1 0.16 > pca2 0.14 > plain 0.1375
-    // there): with few vectors per cell the second reflection's axis is
-    // estimated from a deflated spectrum too noisy to help.
-    "q_opq_pca2_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val (d1, d2) = graft.operators.Pca.topDirections2(emb, "emb", 64)
-      val u1 = graft.operators.Opq.householderFromPca(d1)
-      val u2 = graft.operators.Opq.householder2FromPca(d2, u1)
-      // spread BELOW the reflections (the q_opq_recall rationale)
-      ivfPqRecallOver(graft.operators.Opq.rotateHouseholder(
-        graft.operators.Opq.rotateHouseholder(
-          graft.operators.Scale.spreadForCompute(emb, col("vec_id")),
-          "emb", u1), "emb", u2))
-    }),
-    // L2 — the full OPQ ALTERNATION's measured row (Ge et al. 2013,
-    // non-parametric): R-step = the measured-best Householder rotation
-    // (rank-2, q_opq_balance2's winner), C-step = Lloyd-RETRAINED
-    // per-subspace codebooks in that space (Pq.ivfAdcTrainedTopK) —
-    // one full alternation, which on this corpus is also the
-    // CONVERGED one: the Householder-constrained Procrustes R-step
-    // from any start space has a PSD gain form (sym(X·Cᵀ) ⪰ 0 once C
-    // tracks X), i.e. identity is the alternation's fixed point, so
-    // further rounds are measured no-ops (tools/OpqAlt: quad form
-    // +0.32 from plain, +0.87 from pca2; recall 0.34→0.32 on the one
-    // accepted-by-err candidate). The codebook half is where the
-    // remaining gain lives: measured at sf0.1 this row reads 0.36
-    // vs the best fixed mode's 0.34 (and the same trained-vs-fixed
-    // comparison is what --rotate-auto --trained now probes).
-    "q_opq_train_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val (d1, d2) = graft.operators.Pca.topDirections2(emb, "emb", 64)
-      val u1 = graft.operators.Opq.householderFromPca(d1)
-      val u2 = graft.operators.Opq.householder2FromPca(d2, u1)
-      // spread BELOW the double reflection, persist above it: the
-      // interpreted Householder HOFs were materializing the cache in
-      // ONE 1.2-1.3 s task (job-log measured) and the 1-partition cache
-      // then serialized every consumer; spreading the INPUT runs the
-      // reflections 32-wide and caches them wide
-      val rot = graft.operators.Opq.rotateHouseholder(
-          graft.operators.Opq.rotateHouseholder(
-            graft.operators.Scale.spreadForCompute(emb, col("vec_id")),
-            "emb", u1), "emb", u2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = rot.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(rot, "vec_id", "emb",
-        k = 16, iters = 0)
-      val exact = Similarity.exactTopK(rot, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val adc = graft.operators.Pq.ivfAdcTrainedTopK(rot, qs, centroids,
-          nprobe = 4, topK = 10, m = 4, k = 8, dim = 64, iters = 2)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, adc, 10)
-    }),
-    // L2 — IVF-PQ + exact refine (Similarity.refineTopK): the FULL FAISS
-    // serving shape — ADC proposes top-20 per query from codes only, the
-    // refine stage fetches JUST those 20 vectors (one candidate-scale
-    // broadcast probe into embeddings) and re-ranks by exact cosine to
-    // top-10. Corpus full-precision vectors are read once at index build
-    // and once per candidate here — never per (query, corpus) pair. The
-    // ADC distance each candidate arrived with rides through (adist),
-    // like retrieveRerank's bm25.
-    "q_ivf_pq_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val cands = graft.operators.Pq.ivfAdcTopK(emb, qs, centroids,
-          nprobe = 4, topK = 20, m = 4, k = 8, dim = 64)
-        .select(col("q_id"), col("vec_id"), col("adist"))
-      Similarity.refineTopK(cands, emb, qs, topK = 10)
-        .select(col("q_id"), col("rn"), col("vec_id"), col("adist"),
-          round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — recall@10 of the refined IVF-PQ search vs exact cosine top-10
-    // (the q_ivf_pq_recall recipe): read next to q_ivf_pq_recall at the
-    // same nprobe, the delta IS the refine stage's lift — quantization
-    // error stops costing rank order once the top-20 candidates are
-    // re-scored exactly; only neighbours ADC missed entirely still hurt.
-    "q_ivf_pq_rerank_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      val cands = graft.operators.Pq.ivfAdcTopK(emb, qs, centroids,
-          nprobe = 4, topK = 20, m = 4, k = 8, dim = 64)
-        .select(col("q_id"), col("vec_id"))
-      val refined = Similarity.refineTopK(cands, emb, qs, topK = 10)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, refined, 10)
-    }),
-    // L2 — IVF TUNING CURVE: recall@10 per query at nprobe ∈ {1, 2, 4}
-    // against exact top-10 — the number that picks nprobe before a
-    // production ANN run (the measurement twin of q_ivf_balance). Fixed
-    // first-16 quantizer, so every probe ranking reproduces in SQL and
-    // the whole curve oracle-checks; per-query aggregation keeps the
-    // verdict distributed.
-    "q_ivf_recall_curve" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val exact = Similarity.exactTopK(emb, qs, 10)
-        .select(col("q_id"), col("vec_id"))
-      Seq(1, 2, 4).map { np =>
-        val ivf = graft.operators.Ivf.topK(emb, qs, centroids, k = 10,
-            nprobe = np)
-          .select(col("q_id"), col("vec_id"))
-        Similarity.recallAtK(exact, ivf, 10)
-          .select(lit(np.toLong).as("nprobe"), col("q_id"), col("n_hit"),
-            col("recall"))
-      }.reduce(_.unionByName(_)).orderBy("nprobe", "q_id")
-    }),
-    // L2 — LSH-bucketed approximate top-k: exactTopK's broadcast crossJoin
-    // replaced by an equi-join on the sign-LSH bucket, so per-query work is
-    // proportional to its bucket's size, not |corpus| — the scale path when
-    // the query set itself is large. Oracle-checked with the same unrolled
-    // hyperplane literals as q_sim_lsh; the cosine ranking is portable by
-    // the q_sim_exact argument.
-    "q_sim_lsh_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      Similarity.lshTopK(emb, qs, 10, Similarity.hyperplanes(4, 64))
-        .select(col("q_id"), col("vec_id"), col("rn"),
-          round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L1 — vocabulary coverage: what fraction of all token OCCURRENCES the
-    // top-k tokens cover — the first question of tokenizer/vocab design.
-    // The top-20 is taken FIRST via orderBy+limit, which plans as
-    // TakeOrderedAndProject (per-partition 20-row heaps + one merge) — a
-    // web-scale vocabulary (10^8–10^9 tokens) never funnels through a
-    // single-task global sort. The rank/cumsum window then runs over the
-    // 20-row result, which under the same total ordering IS the global
-    // prefix, so the answer is unchanged; cnt/cum stay exact longs so the
-    // coverage division is engine-portable.
-    "q_vocab_coverage" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val toks = t(s, dir, "documents")
-        .select(explode(split(col("text"), "\\s+")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-      val total = toks.agg(sum(col("cnt")).as("total"))
-      val top = toks.orderBy(col("cnt").desc, col("token")).limit(20)
-      // global window DELIBERATE: bounded to 20 rows by the limit
-      val ord = Window.orderBy(col("cnt").desc, col("token"))
-      top.crossJoin(broadcast(total))
-        .withColumn("rn", row_number().over(ord).cast("long"))
-        .withColumn("cum", sum(col("cnt"))
-          .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .select(col("rn"), col("token"), col("cnt"),
-          round(col("cum").cast("double") / col("total"), 6).as("coverage"))
-        .orderBy("rn")
-    }),
-    // L1 — per-document token entropy (Shannon, nats): low entropy flags
-    // repetitive/templated docs, a standard curation quality signal.
-    // entropy = ln(n) - sum(c·ln c)/n over in-doc token counts; each
-    // c·ln(c) term is cast to a fixed-scale decimal BEFORE the sum, so the
-    // aggregate adds exactly (order-independent under shuffle) and both
-    // engines hash-match — a raw double sum would vary run to run.
-    "q_doc_entropy" -> ((s, dir) => {
-      val tf = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("c"))
-      tf.groupBy("doc_id").agg(
-          sum(col("c")).as("n_tokens"),
-          sum((col("c").cast("double") * log(col("c").cast("double")))
-            .cast("decimal(28,10)")).as("sclc"))
-        .select(col("doc_id"), col("n_tokens"),
-          round(log(col("n_tokens").cast("double")) -
-            col("sclc").cast("double") / col("n_tokens"), 6).as("entropy"))
-        .orderBy("doc_id")
-    }),
-    // Scale — temperature-balanced language mix (α = 0.5): per-language
-    // keep rate sqrt(n_min / n_lang) — the XLM-R/mT5-style rebalance that
-    // downsamples high-resource languages toward the rare ones. α = 0.5
-    // keeps the rate bit-portable: n_min/n_lang is an exact bigint ratio
-    // and IEEE sqrt/mul are correctly rounded, so floor(rate·65536) is
-    // identical in any engine — no epsilon between Spark and the oracle.
-    // Curation — token-BUDGET mixing: per language, admit documents in
-    // quality order (rule-based score, doc_id tiebreak) until the
-    // language's token budget is spent. The pretraining-recipe primitive:
-    // a data mix is specified in tokens, not document ratios — this is
-    // the operator that turns "N tokens of lang X" into a concrete keep
-    // set. One scan → per-language running-total window → filter; the
-    // window rides one hash-partitioned exchange on lang.
-    "q_token_budget" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val scored = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        TA.tokenCountWs(col("text")).as("n_tokens"),
-        TA.qualityScore(col("text")).as("quality"))
-      val w = Window.partitionBy("lang")
-        .orderBy(col("quality").desc, col("doc_id"))
-      scored.withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-        .filter(col("cum_tokens") <= 1500)
-        .select("doc_id", "lang", "n_tokens", "quality", "cum_tokens")
-        .orderBy("lang", "doc_id")
-    }),
-    // L5 — mixture PLANNING table: given a 26k-token budget and α=0.5
-    // temperature weighting, the per-language sampling rates a mixing run
-    // would execute — the knob-setting artifact reviewed before the
-    // pipeline spends anything (dominant 'en' is down-rated below 1 while
-    // small languages clip at 1.0, so both branches of the cap are
-    // oracle-exercised). Portability trick: each weight quantizes to an
-    // integer FIRST (floor(sqrt·1000)), so the cross-language total is an
-    // exact long sum and every share/rate is a fixed tree of IEEE-exact
-    // operations on deterministic operands — no float ever sums across
-    // rows. One aggregate + a one-row broadcast total.
-    "q_mix_plan" -> ((s, dir) => {
-      val per = t(s, dir, "documents")
-        .select(col("lang"), TA.tokenCountWs(col("text")).as("__tok"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum(col("__tok")).as("n_tokens"))
-        .withColumn("wq",
-          floor(sqrt(col("n_tokens").cast("double")) * 1000).cast("long"))
-      val tot = per.agg(sum(col("wq")).as("wsum"))
-      per.crossJoin(broadcast(tot))
-        .withColumn("share", round(col("wq").cast("double") / col("wsum"), 6))
-        .withColumn("target_tokens",
-          floor(lit(26000.0) * col("wq").cast("double") / col("wsum"))
-            .cast("long"))
-        .withColumn("rate", round(least(lit(1.0),
-          lit(26000.0) * col("wq").cast("double") / col("wsum")
-            / col("n_tokens")), 6))
-        .select("lang", "n_docs", "n_tokens", "share", "target_tokens",
-          "rate")
-        .orderBy("lang")
-    }),
-    "q_temperature_mix" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-      val nmin = counts.agg(min(col("n_docs")).as("n_min"))
-      val rates = counts.crossJoin(broadcast(nmin))
-        .withColumn("w",
-          floor(sqrt(col("n_min").cast("double") / col("n_docs")) * 65536))
-      docs.join(broadcast(rates), Seq("lang"))
-        .filter(Sampling.keepWeighted(col("doc_id"), "tmix", col("w")))
-        .groupBy("lang")
-        .agg(max(col("n_docs")).as("n_docs"), count(lit(1)).as("n_kept"))
-        .orderBy("lang")
-    }),
-    // Scale — mergeable HLL distinct sketches: per-(lang, source) token
-    // sketches union down to per-lang estimates without re-reading data —
-    // the incremental-maintenance shape for distinct counts. The estimate
-    // is engine-specific, so the ORACLE-checked columns are the exact
-    // distinct count and a within-tolerance boolean (deterministic: the
-    // sketch binary is seed-fixed, lgK=12 error ~1.6% « the 5% gate).
-    "q_distinct_sketch" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), col("source"),
-          explode(split(col("text"), "\\s+")).as("token"))
-      val merged = Scale.mergeDistinct(
-        Scale.sketchDistinct(toks, Seq("lang", "source"), "token"),
-        Seq("lang"))
-      toks.groupBy("lang").agg(countDistinct(col("token")).as("n_exact"))
-        .join(merged, Seq("lang"))
-        .select(col("lang"), col("n_exact"),
-          (abs(col("approx_distinct") - col("n_exact")) <
-            col("n_exact").cast("double") * 0.05).as("within_5pct"))
-        .orderBy("lang")
-    }),
-    // Scale — Count-Min frequency sketch, fully oracle-checked: the 4×256
-    // cell grid uses the portable md5 bucket family, so cells, estimates,
-    // AND the per-key overestimate are bit-identical in any engine (unlike
-    // HLL, whose binary is engine-specific). est ≥ exact by construction;
-    // the build collapses to ≤1024 cells map-side, the estimate join
-    // broadcasts the cell table — the corpus is scanned once per side.
-    "q_cms_freq" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val cells = CountMin.sketch(li, col("l_suppkey"))
-      val cand = t(s, dir, "supplier").filter(col("s_suppkey") <= 10)
-        .select(col("s_suppkey").as("suppkey"))
-      val exact = li.filter(col("l_suppkey") <= 10)
-        .select(col("l_suppkey").as("suppkey"))
-        .groupBy("suppkey").agg(count(lit(1)).as("exact_n"))
-      CountMin.estimate(cells, cand, "suppkey")
-        .join(exact, "suppkey")
-        .select(col("suppkey"), col("cms_est"), col("exact_n"),
-          (col("cms_est") - col("exact_n")).as("overest"))
-        .orderBy("suppkey")
-    }),
-    // Curation — bigram-LM quality score (the CCNet-style perplexity
-    // filter): the corpus is the LM; each doc scores the add-one-smoothed
-    // avg log-prob of its own bigrams. ln of integers only, decimal-summed
-    // → bit-reproducible across engines.
-    "q_lm_score" -> ((s, dir) => {
-      Curation.bigramLmScore(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // Curation — interpolated Kneser-Ney bigram score (d=0.75): the
-    // stronger perplexity-filter signal (continuation counts, not raw
-    // frequency, drive the backoff — "san francisco" vs "the francisco").
-    // The ×4 integerization keeps every ln over an integer, so the whole
-    // smoothed model oracle-checks like q_lm_score does.
-    "q_lm_kn" -> ((s, dir) => {
-      Curation.knBigramScore(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // Curation — DSIR importance-weighted data selection (hashed unigram
-    // + bigram features, Laplace-smoothed target-vs-raw bucket models,
-    // target = the English subcorpus): the top-50 docs by log importance
-    // weight. Exact decimal ln arithmetic over the portable bucket hash →
-    // the whole selection oracle-checks; TakeOrderedAndProject, never a
-    // global sort.
-    "q_dsir" -> ((s, dir) => {
-      Curation.dsirWeights(t(s, dir, "documents"), "doc_id", "text",
-        col("lang") === lit("en"), nBuckets = 1024)
-        .orderBy(col("log_w").desc, col("doc_id")).limit(50)
-    }),
-    // Curation — the DSIR RESAMPLER (Sampling.gumbelTopK over the same
-    // weights): Gumbel-top-k = a without-replacement draw with
-    // p ∝ exp(log_w), seeded so the training subset re-derives forever.
-    "q_dsir_resample" -> ((s, dir) => {
-      Sampling.gumbelTopK(
-        Curation.dsirWeights(t(s, dir, "documents"), "doc_id", "text",
-          col("lang") === lit("en"), nBuckets = 1024),
-        "doc_id", col("log_w"), salt = "dsir-draw", k = 50)
-        .select("doc_id", "n_feats", "log_w", "gumbel_key")
-        .orderBy(col("gumbel_key").desc, col("doc_id"))
-    }),
-    // Curation — CCNet-style perplexity bucketing: per language, rank docs
-    // by LM score and split into head/middle/tail tertiles (ntile), then
-    // report each bucket's population and exact score mass. The bucket
-    // label is what a curation policy samples against (keep head, drop
-    // tail). Score sums run in decimal(18,6) so the per-bucket totals are
-    // shuffle-order independent; min/max are order-free by construction.
-    "q_ppl_bucket" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val lm = Curation.bigramLmScore(docs, "doc_id", "text")
-      val w = Window.partitionBy("lang")
-        .orderBy(col("avg_logp").desc, col("doc_id"))
-      lm.join(docs.select("doc_id", "lang"), "doc_id")
-        .withColumn("bucket", ntile(3).over(w).cast("long"))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          (sum(col("avg_logp").cast("decimal(18,6)")).cast("double"))
-            .as("sum_logp"),
-          min(col("avg_logp")).as("min_logp"),
-          max(col("avg_logp")).as("max_logp"))
-        .orderBy("lang", "bucket")
-    }),
-    // L1 — token frequency via explode (the Generate operator): top-20
-    // corpus-wide tokens with deterministic tiebreak.
-    "q_explode" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(20)
-    }),
-    // SQL surface: the same engine through spark.sql over temp views —
-    // revenue of the top shipping-priority orders (TPC-H Q3 shape).
-    "q_sql_join" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("v_customer")
-      t(s, dir, "orders").createOrReplaceTempView("v_orders")
-      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-      s.sql("""
-        SELECT o_orderkey,
-          cast(sum(cast(l_extendedprice AS decimal(18,2))
-            * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
-          count(*) AS n_items
-        FROM v_customer
-        JOIN v_orders ON c_custkey = o_custkey
-        JOIN v_lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-        GROUP BY o_orderkey
-        ORDER BY revenue DESC, o_orderkey
-        LIMIT 10""")
-    }),
-    // SQL surface: TPC-H Q5 shape — six-table star join with region filter
-    // and date-range pruning, revenue per nation. Exercises the SQL entry
-    // path over dimension broadcasts + a fact-fact join; all money math in
-    // exact decimals so the shuffle-order sum matches the oracle.
-    "q_sql_revenue" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("v_customer")
-      t(s, dir, "orders").createOrReplaceTempView("v_orders")
-      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-      t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-      t(s, dir, "nation").createOrReplaceTempView("v_nation")
-      t(s, dir, "region").createOrReplaceTempView("v_region")
-      s.sql("""
-        SELECT n_name,
-          cast(sum(cast(l_extendedprice AS decimal(18,2))
-            * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
-          count(*) AS n_items
-        FROM v_customer
-        JOIN v_orders ON c_custkey = o_custkey
-        JOIN v_lineitem ON l_orderkey = o_orderkey
-        JOIN v_supplier ON l_suppkey = s_suppkey
-          AND s_nationkey = c_nationkey
-        JOIN v_nation ON c_nationkey = n_nationkey
-        JOIN v_region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY n_name
-        ORDER BY revenue DESC, n_name""")
-    }),
-    // SQL surface for the curation kit: the graft_* functions registered
-    // through SparkSessionExtensions compose into a pure-SQL gate →
-    // fingerprint-dedup → per-language rollup — the identical Catalyst
-    // trees the Column API builds (zero UDFs), so the whole statement
-    // oracle-checks. A SQL-only user gets the curation pipeline without
-    // touching the Scala API.
-    "q_sql_curate" -> ((s, dir) => {
-      t(s, dir, "documents").createOrReplaceTempView("v_documents")
-      s.sql("""
-        WITH scored AS (
-          SELECT doc_id, lang, graft_quality(text) AS q,
-                 graft_fingerprint(text) AS fp, graft_clean_text(text) AS clean
-          FROM v_documents WHERE text IS NOT NULL),
-        deduped AS (
-          SELECT * FROM (
-            SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-            FROM scored WHERE q >= 1.0)
-          WHERE rn = 1)
-        SELECT lang, count(*) AS n_docs,
-               cast(sum(length(clean)) AS bigint) AS sum_clean_chars
-        FROM deduped GROUP BY lang ORDER BY lang""")
-    }),
-    // L1 — text normalization (the cleaning stage ahead of dedup/dedup
-    // fingerprints): lowercase, strip non-alphanumerics, collapse runs of
-    // whitespace, trim. Scan-local codegen'd projection, zero shuffles.
-    "q_clean_text" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TA.cleanText(col("text")).as("clean"))
-        .select(col("doc_id"), col("clean"),
-          length(col("clean")).cast("long").as("n_clean_chars"))
-        .orderBy("doc_id")
-    }),
-    // A7 — embedding-cosine near-dup, exact pair scan (oracle-checked; the
-    // LSH-bucketed scale path is Dedup.embeddingNearDupsLsh, test-asserted).
-    "q_dedup_embed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      Dedup.embeddingNearDupsExact(emb, "vec_id", "emb", 0.4)
-        .select(col("a"), col("b"), round(col("cos"), 6).as("cosine"))
-        .orderBy("a", "b")
-    }),
-    // A7/L2 — SemDeDup: semantic near-dup REMOVAL with candidates bounded
-    // by IVF cells (never corpus×corpus) — the embedding twin of banded
-    // MinHash, and the modern curation shape for web-scale corpora. The
-    // fixed first-16 coarse quantizer keeps assignment, cosine, and the
-    // keep-lowest-id survivor rule bit-portable, exactly like
-    // q_sim_ivf_fixed; cells surface in the output so the oracle checks
-    // the assignment too (vec_ids are 0-based, so centroid index == the
-    // seed's vec_id). maxCell=24 is deliberately BELOW the fixture's
-    // ~31-row cells so the hot-cell subsplit guard (portable-hash mod
-    // ceil-div, Dedup.semanticCells) is itself oracle-exercised, not just
-    // spec-asserted; the trained-quantizer variant at realistic k is
-    // q_semdedup_trained.
-    "q_semdedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      Dedup.semanticDedup(emb, "vec_id", "emb", centroids, 0.4, maxCell = 24)
-        .select(col("vec_id"), col("cell").cast("long").as("cell"))
-        .orderBy("vec_id")
-    }),
-    // L2 — SSL-prototype pruning (Ivf.prototypePrune): per cell, keep the
-    // hardest half by exact micro-unit centroid distance. Fixed
-    // quantizer → assignment, distance, rank, and quota all
-    // oracle-check; the margin row (kept flag, not a filtered set) makes
-    // the cut itself verifiable.
-    "q_prototype_prune" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      graft.operators.Ivf.prototypePrune(emb, "vec_id", "emb", centroids,
-        keepFrac = 0.5).orderBy("vec_id")
-    }),
-    // L2 — the D4 pipeline (Tirumala et al. 2023: de-duplication +
-    // diversification): SemDeDup survivors re-scored by SSL-prototype
-    // pruning — the two-stage embedding-space curation a production
-    // pretraining mix runs. Same fixed quantizer for both stages; the
-    // oracle chains the q_semdedup CTEs with the q_prototype_prune rank.
-    "q_d4" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val survivors = Dedup.semanticDedup(emb, "vec_id", "emb", centroids,
-        0.4, maxCell = 24)
-      graft.operators.Ivf.prototypePrune(
-        emb.join(survivors.select("vec_id"), Seq("vec_id")),
-        "vec_id", "emb", centroids, keepFrac = 0.5)
-        .orderBy("vec_id")
-    }),
-    // A7/L2 — the maxCell recall price, MEASURED (the q_minhash_recall
-    // analog for the subsplit guard): capped (maxCell=24) vs uncapped
-    // survivors per cell under the same fixed quantizer. n_missed counts
-    // survivors the cap KEEPS that the uncapped rule would drop — the
-    // (ns−1)/ns straddling-pair miss from Dedup.semanticCells' scaladoc
-    // turned into an oracle-checked number (subsplitting only ever misses
-    // drops, so capped ⊇ uncapped and the left join covers both sets).
-    "q_semdedup_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      val capped = Dedup.semanticDedup(emb, "vec_id", "emb", centroids,
-        0.4, maxCell = 24)
-      val uncapped = Dedup.semanticDedup(emb, "vec_id", "emb", centroids,
-        0.4) // DefaultMaxCell=4096 ≫ any fixture cell ⇒ subsplit count 1
-      capped
-        .join(uncapped.select(col("vec_id"), lit(1L).as("__u")),
-          Seq("vec_id"), "left")
-        .groupBy(col("cell").cast("long").as("cell"))
-        .agg(count(lit(1)).as("n_capped"),
-          sum(coalesce(col("__u"), lit(0L))).as("n_uncapped"),
-          sum(when(col("__u").isNull, 1L).otherwise(0L)).as("n_missed"))
-        .orderBy("cell")
-    }),
-    // L2b — SemDeDup with a TRAINED coarse quantizer at realistic k: the
-    // production composition (Ivf.train's exact-decimal Lloyd means → cell
-    // assignment → within-cell cosine survivor rule). k=64 on the 500-row
-    // fixture keeps cells ~8 rows — the properly-sized-k regime where the
-    // maxCell guard never fires (subsplit count 1 everywhere, so the
-    // oracle mirrors the plain within-cell join; the capped path is
-    // oracle-exercised by q_semdedup). The oracle re-runs the full
-    // 2-iteration training in SQL, the technique proven on q_sim_ivf.
-    "q_semdedup_trained" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 64, iters = 2)
-      Dedup.semanticDedup(emb, "vec_id", "emb", centroids, 0.4)
-        .select(col("vec_id"), col("cell").cast("long").as("cell"))
-        .orderBy("vec_id")
-    }),
-    // F10 — map functions over JSON-derived maps (events.props).
-    "q_map_ops" -> ((s, dir) => {
-      val m = from_json(col("props"), org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.LongType))
-      t(s, dir, "events")
-        .select(col("event_id"), map_keys(m).getItem(0).as("first_key"),
-          map_values(m).getItem(0).as("first_val"),
-          size(map_keys(m)).cast("long").as("n_keys"))
-        .orderBy("event_id")
-    }),
-    // L2 — IVF cell-balance audit (Ivf.cellBalance): per-cell population
-    // and mean assignment distance — the report run before deploying an
-    // ANN index at scale (a hot cell makes every probe touching it pay
-    // that cell's scan; the vector twin of q_skew_report). Fixed first-16
-    // quantizer so assignment AND the micro-unit decimal distance sums
-    // are bit-portable — the whole report oracle-checks.
-    "q_ivf_balance" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
-        k = 16, iters = 0)
-      graft.operators.Ivf.cellBalance(emb, "emb", centroids)
-        .orderBy("cell")
-    }),
-    // L2 — distributed PCA projection (Pca.projectPc1): each vector's
-    // coordinate along the corpus's first principal direction — the linear
-    // pre-transform FAISS runs before PQ, and curation's cheap dominant-
-    // direction outlier score. Vectors micro-quantize once, then ONE
-    // exploded-moments pass (striped long sums, no per-row BigDecimal) →
-    // micro-unit integer covariance frame → two exact integer power steps
-    // as metadata-scale joins (no driver matrix anywhere) → broadcast-
-    // direction exact-long projection. The single IEEE decision per value
-    // is the quantization round, so the whole pipeline oracle-checks.
-    "q_embed_pca" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      graft.operators.Pca.projectPc1(emb, "vec_id", "emb", dim = 64)
-        .orderBy("vec_id")
-    }),
-    // L2 — top-2 PCA scatter (Pca.projectTop2): one Hotelling deflation
-    // + a second power run; both component dots come out of ONE corpus
-    // scan. pc1 is bit-identical to q_embed_pca's (same direction math).
-    "q_pca_top2" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      graft.operators.Pca.projectTop2(emb, "vec_id", "emb", dim = 64)
-        .orderBy("vec_id")
-    }),
-    // L2 — SEMANTIC consumption ordering (Curation.semanticOrder): the
-    // "in-context pretraining" layout (Shi et al. 2023) — documents
-    // placed so packed long-context windows carry RELATED material:
-    // coarse locality from the fixed-quantizer IVF cell, fine locality
-    // from the pc1 sweep within it (Z-ordering's locality-by-sort-key
-    // idea with the embedding replacing scalar columns). Cell and pc1
-    // compute in ONE scan; ranks are per-cell windows; global positions
-    // come from the k-row census offsets. Fully oracle-checked: fixed
-    // quantizer + exact-integer PCA make every step bit-portable.
-    "q_semantic_order" -> ((s, dir) => {
-      Curation.semanticOrder(t(s, dir, "embeddings")
-          .select(col("vec_id"),
-            VectorOps.asDouble(col("embedding")).as("emb")),
-        "vec_id", "emb", dim = 64, k = 16)
-    }),
-    // L2/L5d — the semantic order FEEDING long-context window
-    // construction (the composition that is the point of in-context
-    // pretraining): the q_token_windows slicing keyed on the SEMANTIC
-    // stream offset instead of per-source doc_id order, so each
-    // 128-token window carries adjacent-by-meaning documents. The
-    // global token offset is built WITHOUT a global window: within-cell
-    // token prefix (one cell-partitioned window over unique positions)
-    // + per-cell token-total prefix sums (k-row census collected and
-    // broadcast back — the semanticOrder offset pattern). vec_id ≡
-    // doc_id in the harness (TESTDATA), so the embedding order maps
-    // 1:1 onto the documents it packs.
-    "q_semantic_windows" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val order = Curation.semanticOrder(t(s, dir, "embeddings")
-          .select(col("vec_id"),
-            VectorOps.asDouble(col("embedding")).as("emb")),
-        "vec_id", "emb", dim = 64, k = 16)
-      val toks = t(s, dir, "documents").filter(col("text").isNotNull)
-        .select(col("doc_id"), TA.tokenCountWs(col("text")).as("n_tok"))
-      val j = order.join(toks, col("vec_id") === col("doc_id"))
-        .filter(col("n_tok") > 0)
-        .select(col("doc_id"), col("cell"), col("pos"), col("n_tok"))
-      val w = Window.partitionBy("cell").orderBy("pos")
-      val withIn = j
-        .withColumn("__cst", sum(col("n_tok")).over(w) - col("n_tok"))
-      val census = j.groupBy("cell").agg(sum(col("n_tok")).as("t"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      val offs = census.map(_._2).scanLeft(0L)(_ + _).dropRight(1)
-      val offMap = map(census.map(_._1).zip(offs).flatMap { case (c, o) =>
-        Seq(lit(c), lit(o)) }.toSeq: _*)
-      withIn
-        .withColumn("st", col("__cst") + element_at(offMap, col("cell")))
-        .withColumn("window_id", explode(sequence(
-          expr("st div 128"), expr("(st + n_tok - 1) div 128"))))
-        .select(col("window_id"), col("doc_id"),
-          (greatest(col("st"), col("window_id") * 128)
-            - col("window_id") * 128).as("w_start"),
-          (least(col("st") + col("n_tok"), (col("window_id") + 1) * 128)
-            - greatest(col("st"), col("window_id") * 128))
-            .as("n_in_window"))
-        .orderBy("window_id", "doc_id")
-    }),
-    // L2 — PCA spectrum report (Pca.varianceExplained): Rayleigh estimate
-    // of the top eigenvalue, total variance, and the explained fraction —
-    // the one-row audit that decides whether a PCA/whitening pre-transform
-    // is worth running before PQ (a near-isotropic spectrum says no).
-    "q_pca_variance" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      graft.operators.Pca.varianceExplained(emb, "emb", dim = 64)
-    }),
-    // L2 — IVF approximate top-k: coarse-quantizer cells, nprobe=4 of k=16.
-    // Fully oracle-checked since Ivf.train's Lloyd means became exact
-    // decimal sums: the oracle SQL re-runs the whole 2-iteration training
-    // (IvfSpec additionally asserts recall and probe-all ≡ exact).
-    "q_sim_ivf" -> ((s, dir) => {
-      // persisted: Lloyd's 2 iterations + the probe path re-scan the
-      // decoded frame ~5×; caching the float→double decode once is the
-      // same releaseAfterUse convention as ivfPqRecallOver
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), graft.functions.VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb", k = 16, iters = 2)
-      graft.operators.Ivf.topK(emb, qs, centroids, k = 10, nprobe = 4)
-        .select(col("q_id"), col("vec_id"), col("rn"), round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L2 — the same IVF probe path with a FIXED coarse quantizer (iters=0
-    // ⇒ centroids are literally the first 16 vectors): unlike the trained
-    // variant (whose Lloyd means are engine-specific float reductions),
-    // every step here — the -2·dot+|c|² assignment key, the nprobe cell
-    // ranking, the in-cell cosine top-k — reproduces bit-for-bit in SQL,
-    // so the probe machinery itself is oracle-checked, not just row-counted.
-    "q_sim_ivf_fixed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), graft.functions.VectorOps.asDouble(col("embedding")).as("emb"))
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb", k = 16, iters = 0)
-      graft.operators.Ivf.topK(emb, qs, centroids, k = 10, nprobe = 4)
-        .select(col("q_id"), col("vec_id"), col("rn"), round(col("cos"), 6).as("cosine"))
-        .orderBy("q_id", "rn")
-    }),
-    // L3 — array function kit over token arrays: sort/contains/position/
-    // distinct-count/slice-join.
-    "q_array_kit" -> ((s, dir) => {
-      val toks = split(col("text"), " ")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          array_contains(toks, "the").as("has_the"),
-          array_position(toks, "data").cast("long").as("first_data_pos"),
-          size(array_distinct(toks)).cast("long").as("n_unique_tokens"),
-          concat_ws("|", slice(sort_array(toks), 1, 3)).as("first3_sorted"))
-        .orderBy("doc_id")
-    }),
-    // L3 — array<float> passthrough + element/norm access.
-    "q_array_ops" -> ((s, dir) => {
-      val emb = col("embedding")
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), size(emb).cast("long").as("dim"),
-          element_at(emb, 1).cast("double").as("first_val"),
-          VectorOps.l2Norm(VectorOps.asDouble(emb)).as("l2_norm"),
-          col("label"))
-        .orderBy("vec_id")
-    }),
-    // Multimodal frame decode: the typed mapPartitions stub (see
-    // operators.Multimodal.decodeStub) over documents-as-blobs, cross-
-    // checked against pure SQL byte arithmetic — verifying the Dataset
-    // codepath agrees with the declarative one on the same fake features.
-    "q_multimodal_frames" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val media = t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          encode(col("text"), "UTF-8").as("payload"))
-      Multimodal.decodeStub(media, framesPerItem = 2)
-        .toDF("media_id", "frame_no", "feature")
-        .orderBy("media_id", "frame_no")
-    }),
-    // L3 — image near-duplicate detection, END TO END through the real
-    // codec: deterministic md5-pixel BMPs (every 10th doc also emits a
-    // +8-on-one-byte twin) are ENCODED (writeBmp24), DECODED back
-    // (parseBmp24), perceptually hashed (8×8 luma grid → 56-bit dHash)
-    // and banded-Hamming joined — pairs meet only inside a shared 14-bit
-    // band bucket, which is EXACT for dist ≤ 3 (pigeonhole). The oracle
-    // reproduces the pixel bytes, luma doubles, hash, and pair set
-    // arithmetically (the BMP round-trip is pixel-identity), so the
-    // whole multimodal path oracle-checks bit-for-bit.
-    "q_image_neardup" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val media = Multimodal.synthBmp8x8(
-        t(s, dir, "documents").select(col("doc_id")), "doc_id")
-      Multimodal.imageNearDups(media, maxDist = 3).orderBy("a", "b")
-    }),
-    // Multimodal metadata over an opaque byte payload (documents.text bytes
-    // stand in for image/audio blobs; see operators.Multimodal).
-    "q_multimodal_meta" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          octet_length(encode(col("text"), "UTF-8")).cast("long").as("n_bytes"),
-          md5(col("text")).as("content_md5"))
-        .orderBy("doc_id")
-    }),
-    // L3 — REAL compressed-A/V CONTAINER metadata (Multimodal.mediaInfo):
-    // FLAC STREAMINFO and MP4 mvhd parsed with plain byte-buffer
-    // arithmetic — the duration/rate/channels filter a 100 TB curation
-    // pass runs BEFORE paying for any frame decode (the one step of
-    // "compressed audio/video" that needs no codec). Round-trip oracle:
-    // synthMedia writes real container bytes with id-derived parameters,
-    // mediaInfo parses them back, and the SQL recomputes the expected
-    // fields from the id arithmetic — a parser/synth bug on either side
-    // breaks the hash. Spec-side, the parsers are additionally pinned
-    // against hand-built canonical headers (44.1 kHz stereo FLAC,
-    // timescale-600 QuickTime mvhd, a canonical 0xFFFB9000 CBR MP3
-    // frame) so the pair can't be self-consistently wrong.
-    "q_media_info" -> ((s, dir) => {
-      graft.operators.Multimodal.mediaInfo(
-          graft.operators.Multimodal.synthMedia(
-            t(s, dir, "documents").select(col("doc_id")), "doc_id"))
-        .toDF()
-        .orderBy("media_id")
-    }),
-    // L3 — the per-container AUDIT over q_media_info's parse (the
-    // q_url_stats convention): joint (container, rate, duration-second)
-    // histogram with per-cell duration extremes — the table a media
-    // gate's [minMs, maxMs] thresholds are DERIVED from instead of
-    // guessed (MultimodalSpec pins that derivation: gate thresholds read
-    // off this table admit exactly the expected corpus slice). One scan
-    // + one hash aggregate over metadata-width rows; the histogram is
-    // k-cells-scale however big the corpus.
-    "q_media_stats" -> ((s, dir) => {
-      graft.operators.Multimodal.mediaInfo(
-          graft.operators.Multimodal.synthMedia(
-            t(s, dir, "documents").select(col("doc_id")), "doc_id"))
-        .toDF()
-        .groupBy(col("container"),
-          coalesce(col("sample_rate_hz"), lit(0L)).as("rate_hz"),
-          // exact integer floor-div, matching the oracle's duration_ms
-          // // 1000 — double division then cast would diverge once
-          // duration_ms exceeds 2^53 (the repo's exact-integer discipline)
-          expr("duration_ms div 1000").as("dur_s"))
-        .agg(count(lit(1)).as("n"),
-          min("duration_ms").as("min_ms"),
-          max("duration_ms").as("max_ms"))
-        .orderBy("container", "rate_hz", "dur_s")
-    }),
-    // L1 — BM25 retrieval: top-10 documents for a fixed 3-term query, the
-    // relevance-ranking primitive for pulling topic subsets out of a
-    // corpus. One scan + ONE one-row global aggregate broadcast; the
-    // per-term score sum is a fixed-order expression tree, so no float
-    // result depends on shuffle order (see TextAnalysis.bm25TopK).
-    "q_bm25" -> ((s, dir) => {
-      TA.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        Bm25Terms, topK = 10, k1 = Bm25K1, b = Bm25B)
-    }),
-    // L1 — TABLE-driven BM25 (TextAnalysis.bm25BatchTopK): a query TABLE
-    // scored against the corpus through the inverted-index core — each
-    // query's candidates are exactly the docs sharing ≥1 term (broadcast
-    // term semi-join, never corpus × queries), term scores sum as exact
-    // decimals, and the per-query top-k is TopKAgg (map-side capped at k,
-    // so the final shuffle is O(k·queries·partitions)). Query 0 is
-    // q_bm25's term set, so its top-10 cross-checks that query.
-    "q_bm25_batch" -> ((s, dir) => {
-      import s.implicits._
-      val qs = Bm25BatchQueries.toDF("q_id", "qtext")
-      TA.bm25BatchTopK(t(s, dir, "documents"), "doc_id", "text",
-        qs, "q_id", "qtext", topK = 10, k1 = Bm25K1, b = Bm25B)
-        .orderBy("q_id", "rnk")
-    }),
-    // L1/L2 — two-stage retrieval (TextAnalysis.retrieveRerank): BM25
-    // recall capped at candK per query, exact embedding-cosine rerank of
-    // ONLY those candidates — the production RAG shape. Queries are the
-    // first three documents (their own text as the query, their vec_id
-    // embedding as the rerank anchor); self-retrieval masked after the
-    // cap. Corpus touched twice (term aggregate + one embeddings probe);
-    // everything between is candidate-scale broadcasts.
-    "q_retrieve_rerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
-        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      TA.retrieveRerank(docs, "doc_id", "text", qs, "q_id", "qtext",
-        emb, "vec_id", "emb", candK = RerankCandK, topK = RerankTopK,
-        k1 = Bm25K1, b = Bm25B)
-        .orderBy("q_id", "rnk")
-    }),
-    // L1/L2 — reciprocal-rank fusion (TextAnalysis.rrfFuse): the HYBRID
-    // alternative to q_retrieve_rerank's cascade over the SAME two
-    // rankers — BM25 top-candK (self-masked after the cap, rank gaps
-    // preserved, the cand convention) and exact-cosine top-candK
-    // (Similarity.exactTopK), fused by Σ 1/(60+rank) per doc. Each term
-    // is one IEEE division, the fuse one two-term left-to-right sum —
-    // oracle-reproducible bit-for-bit; fuse cost is candidate-scale
-    // (the corpus is touched only by the two upstream rankers).
-    "q_rrf" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
-        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val sparse = TA.bm25BatchTopK(docs, "doc_id", "text", qs, "q_id",
-          "qtext", topK = RerankCandK, k1 = Bm25K1, b = Bm25B)
-        .filter(col("doc_id") =!= col("q_id"))
-        .select(col("q_id"), col("doc_id"), col("rnk"))
-      val dense = Similarity.exactTopK(emb,
-          emb.filter(col("vec_id") < 3)
-            .select(col("vec_id").as("q_id"), col("emb").as("q_emb")),
-          RerankCandK)
-        .select(col("q_id"), col("vec_id").as("doc_id"), col("rn").as("rnk"))
-      TA.rrfFuse(sparse, dense, "q_id", "doc_id", "rnk",
-          topK = RerankTopK)
-        .orderBy("q_id", "rnk")
-    }),
-    // L1/L2 — recall@RerankTopK of the RRF fusion vs the exact cosine
-    // truth — q_rerank_recall's twin for the HYBRID retriever: read the
-    // two rows together to compare the cascade (dense re-orders sparse
-    // survivors) against the fusion (both rankings vote) at identical
-    // candidate budgets. On this fixture text and embeddings are
-    // independent, so the fused recall is bounded by how many dense
-    // top-candK docs survive the sparse noise votes — the row measures
-    // exactly that trade; on a real corpus it is the fusion-vs-cascade
-    // sizing number.
-    "q_rrf_recall" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
-        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qsE = emb.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val sparse = TA.bm25BatchTopK(docs, "doc_id", "text", qs, "q_id",
-          "qtext", topK = RerankCandK, k1 = Bm25K1, b = Bm25B)
-        .filter(col("doc_id") =!= col("q_id"))
-        .select(col("q_id"), col("doc_id"), col("rnk"))
-      val dense = Similarity.exactTopK(emb, qsE, RerankCandK)
-        .select(col("q_id"), col("vec_id").as("doc_id"), col("rn").as("rnk"))
-      val picked = TA.rrfFuse(sparse, dense, "q_id", "doc_id", "rnk",
-          topK = RerankTopK)
-        .select(col("q_id"), col("doc_id").as("vec_id"))
-      val exact = Similarity.exactTopK(emb, qsE, RerankTopK)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, picked, RerankTopK)
-    }),
-    // L1/L2 — recall@RerankTopK of the two-stage retriever vs the exact
-    // cosine top-RerankTopK per query — the quality row every other
-    // approximate stage already has (q_pq_recall, q_minhash_recall,
-    // q_ivf_recall_curve): the number that sizes candK. The rerank
-    // cosine is exact, so any miss is BM25 candidate generation failing
-    // to surface a true semantic neighbour within candK; raise candK
-    // until this plateaus. Truth and pipeline share the embedding id
-    // space (queries are docs 0..2 anchored at their vec_id). On THIS
-    // fixture text and embeddings are independently synthesized, so the
-    // expected value is the chance-overlap floor ≈ topK·candK/N ≈ 0 —
-    // the row measures exactly that (and the oracle agrees); on a real
-    // corpus, where lexical and semantic neighbours correlate, the same
-    // row is the candK-sizing curve.
-    "q_rerank_recall" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val qsD = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
-        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val picked = TA.retrieveRerank(docs, "doc_id", "text", qsD, "q_id",
-          "qtext", emb, "vec_id", "emb", candK = RerankCandK,
-          topK = RerankTopK, k1 = Bm25K1, b = Bm25B)
-        .select(col("q_id"), col("doc_id").as("vec_id"))
-      val qsE = emb.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val exact = Similarity.exactTopK(emb, qsE, RerankTopK)
-        .select(col("q_id"), col("vec_id"))
-      Similarity.recallAtK(exact, picked, RerankTopK)
-    }),
-    // L1/L2 — nDCG@10 of BM25 candidate ordering, graded by the exact
-    // cosine to the query's embedding (gain = (cos+1)/2): the GRADED
-    // retrieval-quality row beside q_rerank_recall's binary one — how
-    // close stage-1 ordering already is to the semantic ideal over the
-    // same candidate pool. Discounts are 1/log2(pos+1) with each ln
-    // once-rounded to decimal(17,10) (the engine-portability recipe);
-    // per-position terms sum as decimal(28,10), order-independent.
-    "q_retrieval_ndcg" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val qsD = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
-        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
-      val cands = TA.bm25BatchTopK(docs, "doc_id", "text", qsD, "q_id",
-          "qtext", RerankCandK, Bm25K1, Bm25B)
-        .filter(col("doc_id") =!= col("q_id"))
-      val pos = cands.withColumn("pos",
-          row_number().over(Window.partitionBy("q_id").orderBy("rnk")))
-        .filter(col("pos") <= 10)
-        .select(col("q_id"), col("doc_id"), col("pos"))
-      val candE = emb.join(broadcast(pos), col("vec_id") === col("doc_id"))
-        .drop("vec_id")
-      val qe = emb.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("__qe"), col("emb").as("__qemb"))
-      def lnDec10(c: org.apache.spark.sql.Column) =
-        log(c.cast("double")).cast("decimal(17,10)").cast("double")
-      val scored = candE.join(broadcast(qe), col("q_id") === col("__qe"))
-        .withColumn("cos", graft.functions.VectorOps.cosine(col("emb"),
-          col("__qemb")))
-        .withColumn("gain", (col("cos") + lit(1.0)) / lit(2.0))
-        .withColumn("ipos", row_number().over(Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("doc_id"))))
-      def term(p: org.apache.spark.sql.Column) =
-        (col("gain") / (lnDec10(p + lit(1)) / lnDec10(lit(2))))
-          .cast("decimal(28,10)")
-      scored
-        .groupBy("q_id")
-        .agg(sum(term(col("pos"))).as("__dcg"),
-          sum(term(col("ipos"))).as("__idcg"))
-        .select(col("q_id"),
-          round(col("__dcg").cast("double"), 6).as("dcg"),
-          round(col("__idcg").cast("double"), 6).as("idcg"),
-          round(col("__dcg").cast("double") /
-            col("__idcg").cast("double"), 6).as("ndcg"))
-        .orderBy("q_id")
-    }),
-    // L2 — per-dimension embedding statistics (the normalization /
-    // feature-scaling pass before clustering or PQ training): mean and
-    // std of every coordinate. posexplode → ONE hash aggregate on the
-    // dimension index; sums run in exact integer/decimal space —
-    // round(v·10⁶) per value (float→double widening is exact, so both
-    // engines round the same double) summed as long / decimal(38,0) for
-    // the squares — making the aggregate order-independent; the final
-    // mean/variance division happens once per dimension in double.
-    "q_embed_norm" -> ((s, dir) => {
-      val scaled = t(s, dir, "embeddings")
-        .select(posexplode(col("embedding")).as(Seq("dim", "__v")))
-        .select(col("dim"),
-          round(col("__v").cast("double") * 1e6, 0).cast("long").as("__s"))
-      val sumv = col("__ss").cast("double") / 1e6
-      // __s sums as decimal(38,0) too (not plain long): DuckDB's
-      // sum(bigint) promotes to hugeint, and a long sum here would wrap
-      // ~20x before the oracle does at full scale.
-      scaled.groupBy("dim")
-        .agg(count(lit(1)).as("n"),
-          sum(col("__s").cast("decimal(38,0)")).as("__ss"),
-          sum(col("__s").cast("decimal(38,0)") * col("__s")).as("__ss2"))
-        .select(col("dim"), col("n"),
-          round(sumv / col("n"), 6).as("mean"),
-          round(sqrt((col("__ss2").cast("double") / 1e12 -
-            sumv * sumv / col("n")) / col("n")), 6).as("stddev"))
-        .orderBy("dim")
-    }))
+  /** Word-trigram shingle sets `s` (doc_id, sh) as a DuckDB CTE — the
+    * SQL side of Dedup.shinglesFromWords(…, 3) over single-space words. */
+  private def ShingleSetCte: String =
+    """s AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+               i -> array_to_string(w[i:i+2], ' '))) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))"""
+
+  /** Min-label connected components over an edge relation `edges`
+    * (a, b): both directions `sym` (src, dst) and their transitive
+    * closure `reach` — Dedup.connectedComponents in SQL. Needs
+    * `WITH RECURSIVE`. */
+  private def reachCtes(edges: String): String =
+    s"""sym AS (SELECT a AS src, b AS dst FROM $edges
+                 UNION SELECT b, a FROM $edges),
+         reach(src, dst) AS (
+           SELECT src, dst FROM sym
+           UNION
+           SELECT r.src, s2.dst FROM reach r
+           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst)"""
+
+  /** [[nearDupEdges3]] + its components in SQL, after `WITH RECURSIVE`:
+    * shingles, min-shingle blocks capped at Dedup.DefaultMaxBlock (the
+    * QUALIFY mirror of Dedup.capBlocks), exact-Jaccard ≥ 0.5 edges `e`
+    * (a, b), then [[reachCtes]] over them. */
+  private def NearDupReachCtes: String =
+    s"""$ShingleSetCte,
+         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
+         k AS (SELECT * FROM k0
+               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
+         e AS (
+           SELECT x.doc_id AS a, y.doc_id AS b
+           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
+           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
+                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
+                 >= 0.5),
+         ${reachCtes("e")}"""
+
+  /** [[NearDupReachCtes]] closed by the component labels
+    * `labels` (id, comp): each node's minimum reachable id. */
+  private def NearDupLabelCtes: String =
+    s"""$NearDupReachCtes,
+         labels AS (
+           SELECT src AS id, least(src, min(dst)) AS comp FROM reach
+           GROUP BY src)"""
+
+  /** The portable md5 MinHash signatures of Dedup.nearDuplicatesPortable
+    * (shingleN 3, 16 hashes): shingles `s`, shingle hashes `h` (doc_id,
+    * hv), the second hash `h2` and the 16 minhashes `sig` (doc_id, sig). */
+  private def MinHashSigCtes: String =
+    s"""$ShingleSetCte,
+         h AS (SELECT doc_id,
+             list_transform(sh, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
+           FROM s),
+         h2 AS (SELECT doc_id, hv,
+             list_transform(hv, v -> ('0x' || substr(md5(v::VARCHAR), 1, 14))::BIGINT) AS hv2
+           FROM h),
+         sig AS (SELECT doc_id,
+             list_transform(generate_series(1, 16), k ->
+               list_min(list_transform(generate_series(1, len(hv)),
+                 j -> hv[j] + k * hv2[j]))) AS sig
+           FROM h2)"""
+
+  /** `name` (doc_id, b, band_sig): the 16 minhashes cut into `n` bands. */
+  private def minHashBandsCte(name: String, n: Int): String = {
+    val r = 16 / n
+    s"""$name AS (
+           SELECT doc_id, b,
+             array_to_string(sig[(b-1)*$r+1:(b-1)*$r+$r], '|') AS band_sig
+           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, $n)) AS b))"""
+  }
+
+  /** `name` (q_id, c_id): the banded candidates of the doc_id < 100
+    * query docs over band table `bands`. */
+  private def minHashCandCte(name: String, bands: String): String =
+    s"""$name AS (
+           SELECT DISTINCT x.doc_id AS q_id, y.doc_id AS c_id
+           FROM $bands x JOIN $bands y
+             ON x.b = y.b AND x.band_sig = y.band_sig
+           WHERE x.doc_id < 100 AND x.doc_id <> y.doc_id)"""
+
+  /** Exact-Jaccard ≥ 0.5 truth (q_id, c_id) for the doc_id < 100 query
+    * docs from the hv inverted index (hv is distinct by construction, so
+    * the per-pair match count IS the intersection and
+    * |A∪B| = |A|+|B|−|A∩B|); `truth` heads the last CTE (`truth AS` or
+    * `truth AS MATERIALIZED`). */
+  private def minHashTruthCtes(truth: String): String =
+    s"""qh AS (SELECT doc_id AS q_id, unnest(hv) AS hx FROM h
+                WHERE doc_id < 100),
+         ch AS (SELECT doc_id AS c_id, unnest(hv) AS hx FROM h),
+         inter AS (
+           SELECT q_id, c_id, count(*) AS n_int
+           FROM qh JOIN ch USING (hx) WHERE q_id <> c_id
+           GROUP BY q_id, c_id),
+         sz AS (SELECT doc_id, len(hv) AS sz FROM h),
+         $truth (
+           SELECT q_id, c_id FROM inter
+           JOIN sz sq ON sq.doc_id = inter.q_id
+           JOIN sz sc ON sc.doc_id = inter.c_id
+           WHERE cast(n_int AS double) / (sq.sz + sc.sz - n_int) >= 0.5)"""
 
   /**
    * DuckDB expression for the sign-LSH bucket id: the seeded hyperplane
@@ -3979,48 +985,192 @@ object Pipeline {
   private def ivfPqAdcCtes(eDef: String): String =
     s"WITH $eDef,\n" + ivfPqAdcBody("e")
 
-  /** The ADC chain's CTEs with the source relation NAME a parameter, so
-    * a statement that already owns other CTEs (the PCA-learned rotation)
-    * can splice the chain over its own rotated frame. */
-  private def ivfPqAdcBody(src: String): String =
+  /** The fixed IVF quantizer over `src` (vec_id, v): the first-16
+    * centroids `c` (cid, cv, cnorm2) and each vector's nearest cell
+    * `assign` (vec_id, cell) — Ivf.train(k = 16, iters = 0) + assign,
+    * the -2·dot + |c|² rank key with the cid tiebreak. */
+  private def ivfAssignCtes(src: String): String =
     s"""c AS (SELECT vec_id AS cid, v AS cv,
                list_dot_product(v, v) AS cnorm2
              FROM $src WHERE vec_id < 16),
-       assign AS (
+       ${ivfAssignCte(src)}"""
+
+  /** Each `src` vector's nearest centroid of `c`: `assign` (vec_id, cell). */
+  private def ivfAssignCte(src: String): String =
+    s"""assign AS (
          SELECT vec_id, cell FROM (
            SELECT $src.vec_id, c.cid AS cell,
              row_number() OVER (PARTITION BY $src.vec_id
                ORDER BY -2 * list_dot_product($src.v, c.cv) + c.cnorm2, c.cid)
                AS rn
-           FROM $src CROSS JOIN c) WHERE rn = 1),
-       sub AS (
-         SELECT vec_id, j, v[j*16+1 : j*16+16] AS s,
-           list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS sn2
-         FROM $src, generate_series(0, 3) AS g(j)),
-       cb AS (
-         SELECT cast($src.vec_id AS int) AS c, j, v[j*16+1 : j*16+16] AS cw,
-           list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS cwn2
-         FROM $src, generate_series(0, 3) AS g(j)
-         WHERE vec_id < 8),
-       codes AS (
-         SELECT vec_id, j, code FROM (
-           SELECT sub.vec_id, sub.j, cb.c AS code,
-             row_number() OVER (PARTITION BY sub.vec_id, sub.j
-               ORDER BY -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2, cb.c)
+           FROM $src CROSS JOIN c) WHERE rn = 1)"""
+
+  /** [[ivfAssignCtes]]'s centroids `c` read straight off `embeddings`. */
+  private def IvfSeedCte: String =
+    """c AS (
+           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
+             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
+           FROM embeddings WHERE vec_id < 16)"""
+
+  /** One Lloyd iteration of Ivf.train over `e` (vec_id, v): assignment
+    * against c{i-1} by the -2·dot+|c|² key (cid tiebreak; |c|² is a
+    * sequential self-dot both sides), per-cell exact decimal(28,10)
+    * component means with ONE double division, empty cells keeping their
+    * centroid → c{i} (cid, cv). `note` heads the means CTE. */
+  private def ivfLloydStepCtes(i: Int, note: String = ""): String = {
+    val prev = s"c${i - 1}"
+    s"""a$i AS (
+           SELECT vec_id, cell FROM (
+             SELECT e.vec_id, c.cid AS cell,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY -2 * list_dot_product(e.v, c.cv)
+                   + list_dot_product(c.cv, c.cv), c.cid) AS rn
+             FROM e, $prev c) WHERE rn = 1),
+         m$i AS (
+           $note
+           SELECT cell, pos,
+             cast(sum(cast(comp AS decimal(28,10))) AS double)
+               / count(*) AS m
+           FROM (
+             SELECT a.cell, unnest(e.v) AS comp,
+               unnest(generate_series(1, len(e.v))) AS pos
+             FROM a$i a JOIN e ON e.vec_id = a.vec_id)
+           GROUP BY cell, pos),
+         c$i AS (
+           SELECT p.cid, coalesce(mv.cv, p.cv) AS cv FROM $prev p
+           LEFT JOIN (SELECT cell, list(m ORDER BY pos) AS cv
+                      FROM m$i GROUP BY cell) mv ON mv.cell = p.cid)"""
+  }
+
+  /** q_sim_ivf's SQL note on its means CTE. */
+  private def LloydPosNote: String =
+    """-- parallel unnests zip positionally; deriving pos from len(e.v)
+           -- keeps the oracle tracking the fixture dimension (a hardcoded
+           -- dim would silently train over wrong positions after a drift)"""
+
+  /** The IVF probe path's answer over `e`, `assign` and the centroids
+    * `c`: the vec_id < 5 queries' nprobe = 4 cells, the in-cell cosine
+    * top-10 ranked (cos desc, id). */
+  private def IvfProbeTopSelect: String =
+    s"""q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
+         $IvfProbesCte,
+         scored AS (
+           SELECT q.q_id, e.vec_id,
+             list_dot_product(e.v, q.qv) /
+               (sqrt(list_dot_product(e.v, e.v))
+                * sqrt(list_dot_product(q.qv, q.qv))) AS cos
+           FROM probes p
+           JOIN assign a ON a.cell = p.cell
+           JOIN e ON e.vec_id = a.vec_id
+           JOIN q ON q.q_id = p.q_id
+           WHERE e.vec_id <> q.q_id)
+         SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
+           SELECT q_id, vec_id, cos,
+             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
                AS rn
-           FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1),
-       q AS (SELECT vec_id AS q_id, v AS qv FROM $src WHERE vec_id < 5),
-       probes AS (
+           FROM scored)
+         WHERE rn <= 10 ORDER BY q_id, rn"""
+
+  /** SemDeDup's `e` (vec_id, v, nrm): vectors with their L2 norms. */
+  private def SemDedupECte: String =
+    """e AS (
+           SELECT vec_id, embedding::DOUBLE[] AS v,
+             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+               AS nrm
+           FROM embeddings)"""
+
+  /** Dedup.semanticDedup's drop set over `assign` and [[SemDedupECte]]:
+    * the hot-cell subsplit (ns = ceil(|cell|/24), subcell = portable
+    * 60-bit id hash mod ns — Dedup.semanticCells verbatim), then the
+    * higher id of every within-subcell pair at cosine ≥ 0.4 in
+    * `dropped` (vec_id). */
+  private def semDedupDroppedCtes(dropped: String): String =
+    s"""census AS (
+           SELECT cell, (count(*) + 23) // 24 AS ns
+           FROM assign GROUP BY cell),
+         sub AS (
+           SELECT a.vec_id, a.cell,
+             cast(a.cell AS VARCHAR) || '#' || cast(
+               ('0x' || substr(md5(cast(a.vec_id AS VARCHAR)), 1, 15))::BIGINT
+                 % s.ns AS VARCHAR) AS subcell
+           FROM assign a JOIN census s USING (cell)),
+         $dropped AS (
+           SELECT DISTINCT y.vec_id FROM sub x
+           JOIN sub y ON x.subcell = y.subcell AND x.vec_id < y.vec_id
+           JOIN e ex ON ex.vec_id = x.vec_id
+           JOIN e ey ON ey.vec_id = y.vec_id
+           WHERE list_dot_product(ex.v, ey.v) / (ex.nrm * ey.nrm) >= 0.4)"""
+
+  /** Ivf.prototypePrune's verdict over `sc` (vec_id, cell, dist_e6):
+    * per-cell rank by distance (hardest first) against the ceil(n/2)
+    * quota. */
+  private def ProtoPruneSelect: String =
+    """r AS (
+           SELECT vec_id, cell AS ivf_cell, dist_e6,
+             row_number() OVER (PARTITION BY cell
+               ORDER BY dist_e6 DESC, vec_id) AS rn,
+             count(*) OVER (PARTITION BY cell) AS n
+           FROM sc)
+         SELECT vec_id, ivf_cell, dist_e6,
+           rn <= ceil(n * 0.5)::BIGINT AS kept
+         FROM r ORDER BY vec_id"""
+
+  /** The nprobe = 4 nearest cells `probes` (q_id, cell) of each query in
+    * `q` (q_id, qv) over the centroids `c` of [[ivfAssignCtes]]. */
+  private def IvfProbesCte: String =
+    """probes AS (
          SELECT q_id, cell FROM (
            SELECT q.q_id, c.cid AS cell,
              row_number() OVER (PARTITION BY q.q_id
                ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2, c.cid)
                AS rn
-           FROM q CROSS JOIN c) WHERE rn <= 4),
-       dtab AS (
+           FROM q CROSS JOIN c) WHERE rn <= 4)"""
+
+  /** PQ subvectors (m = 4 slices of 16) of `src` (vec_id, v): `head`
+    * (`sub AS` or `sub AS MATERIALIZED`) (vec_id, j, s, sn2). */
+  private def pqSubCte(src: String, head: String = "sub AS"): String =
+    s"""$head (
+         SELECT vec_id, j, v[j*16+1 : j*16+16] AS s,
+           list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS sn2
+         FROM $src, generate_series(0, 3) AS g(j))"""
+
+  /** The fixed PQ codebook `cb` (c, j, cw, cwn2): the first 8 vectors'
+    * slices of `src` — Pq.encodeFixed's k = 8. */
+  private def pqCbCte(src: String): String =
+    s"""cb AS (
+         SELECT cast($src.vec_id AS int) AS c, j, v[j*16+1 : j*16+16] AS cw,
+           list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS cwn2
+         FROM $src, generate_series(0, 3) AS g(j)
+         WHERE vec_id < 8)"""
+
+  /** Each subvector's nearest codeword `codes` (vec_id, j, code) over
+    * `sub` and `cb`, ties to the smaller code. */
+  private def PqCodesCte: String =
+    """codes AS (
+         SELECT vec_id, j, code FROM (
+           SELECT sub.vec_id, sub.j, cb.c AS code,
+             row_number() OVER (PARTITION BY sub.vec_id, sub.j
+               ORDER BY -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2, cb.c)
+               AS rn
+           FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1)"""
+
+  /** The vec_id < 5 queries' ADC distance table `dtab`
+    * (q_id, j, code, dq) over `sub` and `cb`. */
+  private def PqDtabCte: String =
+    """dtab AS (
          SELECT q.vec_id AS q_id, cb.j, cb.c AS code,
            q.sn2 - 2 * list_dot_product(q.s, cb.cw) + cb.cwn2 AS dq
-         FROM sub q JOIN cb ON q.j = cb.j WHERE q.vec_id < 5),
+         FROM sub q JOIN cb ON q.j = cb.j WHERE q.vec_id < 5)"""
+
+  /** The IVF-PQ ADC tail over `src`, `assign`, `sub` and `cb`: codes,
+    * the vec_id < 5 queries' probes and distance table, the decimal ADC
+    * sum over the probed cells, ranked in `adcranked` (q_id, vec_id, ad,
+    * rn). */
+  private def ivfPqAdcTail(src: String): String =
+    s"""$PqCodesCte,
+       q AS (SELECT vec_id AS q_id, v AS qv FROM $src WHERE vec_id < 5),
+       $IvfProbesCte,
+       $PqDtabCte,
        adcscored AS (
          SELECT d.q_id, co.vec_id,
            sum(cast(d.dq AS decimal(28,10))) AS ad
@@ -4033,6 +1183,15 @@ object Pipeline {
        adcranked AS (
          SELECT q_id, vec_id, ad, row_number() OVER (
            PARTITION BY q_id ORDER BY ad, vec_id) AS rn FROM adcscored)"""
+
+  /** The ADC chain's CTEs with the source relation NAME a parameter, so
+    * a statement that already owns other CTEs (the PCA-learned rotation)
+    * can splice the chain over its own rotated frame. */
+  private def ivfPqAdcBody(src: String): String =
+    s"""${ivfAssignCtes(src)},
+       ${pqSubCte(src)},
+       ${pqCbCte(src)},
+       ${ivfPqAdcTail(src)}"""
 
   /** [[ivfPqAdcBody]] with TRAINED per-subspace codebooks — the
     * Pq.ivfAdcTrainedTopK replay (q_opq_train_recall): the fixed
@@ -4068,20 +1227,8 @@ object Pipeline {
                       FROM tm$i GROUP BY j, code) mv
              ON mv.j = p.j AND mv.code = p.c)"""
     }
-    s"""c AS (SELECT vec_id AS cid, v AS cv,
-               list_dot_product(v, v) AS cnorm2
-             FROM $src WHERE vec_id < 16),
-       assign AS (
-         SELECT vec_id, cell FROM (
-           SELECT $src.vec_id, c.cid AS cell,
-             row_number() OVER (PARTITION BY $src.vec_id
-               ORDER BY -2 * list_dot_product($src.v, c.cv) + c.cnorm2, c.cid)
-               AS rn
-           FROM $src CROSS JOIN c) WHERE rn = 1),
-       sub AS MATERIALIZED (
-         SELECT vec_id, j, v[j*16+1 : j*16+16] AS s,
-           list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS sn2
-         FROM $src, generate_series(0, 3) AS g(j)),
+    s"""${ivfAssignCtes(src)},
+       ${pqSubCte(src, "sub AS MATERIALIZED")},
        tcb0 AS (
          SELECT cast($src.vec_id AS int) AS c, j, v[j*16+1 : j*16+16] AS cw
          FROM $src, generate_series(0, 3) AS g(j)
@@ -4089,85 +1236,56 @@ object Pipeline {
        ${(1 to iters).map(step).mkString(",\n")},
        cb AS MATERIALIZED (
          SELECT c, j, cw, list_dot_product(cw, cw) AS cwn2 FROM tcb$iters),
-       codes AS (
-         SELECT vec_id, j, code FROM (
-           SELECT sub.vec_id, sub.j, cb.c AS code,
-             row_number() OVER (PARTITION BY sub.vec_id, sub.j
-               ORDER BY -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2, cb.c)
-               AS rn
-           FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1),
-       q AS (SELECT vec_id AS q_id, v AS qv FROM $src WHERE vec_id < 5),
-       probes AS (
-         SELECT q_id, cell FROM (
-           SELECT q.q_id, c.cid AS cell,
-             row_number() OVER (PARTITION BY q.q_id
-               ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2, c.cid)
-               AS rn
-           FROM q CROSS JOIN c) WHERE rn <= 4),
-       dtab AS (
-         SELECT q.vec_id AS q_id, cb.j, cb.c AS code,
-           q.sn2 - 2 * list_dot_product(q.s, cb.cw) + cb.cwn2 AS dq
-         FROM sub q JOIN cb ON q.j = cb.j WHERE q.vec_id < 5),
-       adcscored AS (
-         SELECT d.q_id, co.vec_id,
-           sum(cast(d.dq AS decimal(28,10))) AS ad
-         FROM codes co
-         JOIN assign a ON a.vec_id = co.vec_id
-         JOIN probes p ON p.cell = a.cell
-         JOIN dtab d ON d.q_id = p.q_id AND d.j = co.j AND d.code = co.code
-         WHERE co.vec_id <> d.q_id
-         GROUP BY d.q_id, co.vec_id),
-       adcranked AS (
-         SELECT q_id, vec_id, ad, row_number() OVER (
-           PARTITION BY q_id ORDER BY ad, vec_id) AS rn FROM adcscored)"""
+       ${ivfPqAdcTail(src)}"""
   }
 
-  /** The exact cosine top-`k` CTE over `e` for queries vec_id < `maxQ` —
-    * the truth side of every recall row (the q_sim_exact formulation). */
-  private def embExactCte(maxQ: Int, k: Int,
-      src: String = "e"): String =
-    s"""exact AS (
+  /** The exact cosine top-`k` CTE `name` (q_id, vec_id) over `src`'s
+    * vector column `v` for queries vec_id < `maxQ` — the truth side of
+    * every recall row (the q_sim_exact formulation), or the ranking of
+    * a projected space. */
+  private def embExactCte(maxQ: Int, k: Int, src: String = "e",
+      name: String = "exact", v: String = "v"): String =
+    s"""$name AS (
          SELECT q_id, vec_id FROM (
            SELECT q_id, vec_id, row_number() OVER (
              PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
            FROM (
              SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
-               list_dot_product(x.v, q.v) /
-                 (sqrt(list_dot_product(x.v, x.v))
-                  * sqrt(list_dot_product(q.v, q.v))) AS cos
+               list_dot_product(x.$v, q.$v) /
+                 (sqrt(list_dot_product(x.$v, x.$v))
+                  * sqrt(list_dot_product(q.$v, q.$v))) AS cos
              FROM $src q JOIN $src x
                ON q.vec_id < $maxQ AND x.vec_id <> q.vec_id))
          WHERE rn <= $k)"""
 
-  /** recall@`k` tail: exact top-k LEFT JOIN the approximate id set
-    * `approx` (q_id, vec_id), overlap counted, one exact int division. */
-  private def recallTailSql(approx: String, k: Int): String =
-    s"""SELECT exact.q_id,
+  /** recall@`k` rows per query: exact top-k LEFT JOIN the approximate id
+    * set `approx` (q_id, vec_id), overlap counted, one exact int
+    * division; `lead` prefixes the select list. */
+  private def recallRowsSql(approx: String, k: Int, lead: String = ""): String =
+    s"""SELECT ${lead}exact.q_id,
          cast(sum(CASE WHEN r.vec_id IS NULL THEN 0 ELSE 1 END)
            AS bigint) AS n_hit,
          cast(sum(CASE WHEN r.vec_id IS NULL THEN 0 ELSE 1 END)
            AS double) / $k AS recall
        FROM exact LEFT JOIN $approx r
          ON exact.q_id = r.q_id AND exact.vec_id = r.vec_id
-       GROUP BY exact.q_id ORDER BY exact.q_id"""
+       GROUP BY exact.q_id"""
 
-  /**
-   * Shared DuckDB CTE chain for the two-stage retriever
-   * (q_retrieve_rerank / q_rerank_recall): the q_bm25_batch candidate
-   * pipeline with queries drawn from documents (doc_id < 3), capped at
-   * RerankCandK with self-retrieval masked after the cap, then the
-   * exact-cosine rerank over embeddings — ending in `rrk`
-   * (q_id, doc_id, bm25, cos, rnk).
-   */
-  private val RerankPipelineCtes: String = {
+  /** [[recallRowsSql]] as a statement's final, ordered select. */
+  private def recallTailSql(approx: String, k: Int): String =
+    recallRowsSql(approx, k) + " ORDER BY exact.q_id"
+
+  /** The inverted-index BM25 core over a query table `q` (q_id, qtext),
+    * TextAnalysis.bm25BatchTopK's arithmetic: the (term, doc, tf, dl)
+    * aggregate, corpus stats off its per-doc collapse, df over the query
+    * terms' postings only, and the k1/b score per (query, doc, term)
+    * summed as decimal(28,10) in `scored` (q_id, doc_id, sc). */
+  private def Bm25ScoredCtes: String = {
     val score = s"ln(1.0 + (s.n - f.df + 0.5) / (f.df + 0.5))" +
       s" * (t.tf * ${Bm25K1 + 1.0})" +
       s" / (t.tf + $Bm25K1 * (${1.0 - Bm25B}" +
       s" + $Bm25B * t.dl / (s.sumdl / s.n)))"
-    s"""WITH q AS (
-         SELECT doc_id AS q_id, text AS qtext FROM documents
-         WHERE doc_id < 3 AND text IS NOT NULL),
-       tf AS (
+    s"""tf AS (
          SELECT term, doc_id, cast(count(*) AS double) AS tf,
            max(dl) AS dl
          FROM (
@@ -4196,7 +1314,22 @@ object Pipeline {
          FROM tf t
          JOIN qt ON qt.term = t.term
          JOIN f ON f.term = t.term, s
-         GROUP BY qt.q_id, t.doc_id),
+         GROUP BY qt.q_id, t.doc_id)"""
+  }
+
+  /**
+   * Shared DuckDB CTE chain for the two-stage retriever
+   * (q_retrieve_rerank / q_rerank_recall): the q_bm25_batch candidate
+   * pipeline with queries drawn from documents (doc_id < 3), capped at
+   * RerankCandK with self-retrieval masked after the cap, then the
+   * exact-cosine rerank over embeddings — ending in `rrk`
+   * (q_id, doc_id, bm25, cos, rnk).
+   */
+  private val RerankPipelineCtes: String =
+    s"""WITH q AS (
+         SELECT doc_id AS q_id, text AS qtext FROM documents
+         WHERE doc_id < 3 AND text IS NOT NULL),
+       $Bm25ScoredCtes,
        cand AS (
          SELECT q_id, doc_id, crnk, round(scd, 6) AS bm25 FROM (
            SELECT q_id, doc_id, cast(sc AS double) AS scd,
@@ -4217,918 +1350,206 @@ object Pipeline {
            row_number() OVER (PARTITION BY q_id
              ORDER BY cos DESC, doc_id) AS rnk
          FROM rr)"""
-  }
 
-  val oracles: Map[String, String] = Map(
-    "q_sim_lsh" -> {
-      val b = lshBucketSql(graft.operators.Similarity.hyperplanes(8, 64), "embedding")
-      s"""WITH bk AS (SELECT $b AS bucket FROM embeddings)
-          SELECT bucket, count(*) AS n_vectors FROM bk
-          GROUP BY bucket ORDER BY bucket"""
-    },
-    "q_dedup_embed_lsh" -> {
-      val b = lshBucketSql(graft.operators.Similarity.hyperplanes(4, 64), "embedding")
-      s"""WITH bk AS (SELECT vec_id, embedding, $b AS bucket FROM embeddings)
-          SELECT a, b, round(cos, 6) AS cosine FROM (
-            SELECT x.vec_id AS a, y.vec_id AS b,
-              list_dot_product(x.embedding::DOUBLE[], y.embedding::DOUBLE[]) /
-                (sqrt(list_dot_product(x.embedding::DOUBLE[], x.embedding::DOUBLE[]))
-                 * sqrt(list_dot_product(y.embedding::DOUBLE[], y.embedding::DOUBLE[]))) AS cos
-            FROM bk x JOIN bk y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
-          WHERE cos >= 0.4 ORDER BY a, b"""
-    },
-    // PQ: per (vector, subspace) nearest-codeword assignment — the same
-    // -2·dot + |cw|² rank key and row_number tiebreak as the IVF oracle,
-    // restricted to each 16-dim slice.
-    "q_pq_encode" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          sub AS (
-            SELECT vec_id, j, v[j*16+1 : j*16+16] AS s,
-              list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS sn2
-            FROM e, generate_series(0, 3) AS g(j)),
-          cb AS (
-            SELECT cast(e.vec_id AS int) AS c, j, v[j*16+1 : j*16+16] AS cw,
-              list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS cwn2
-            FROM e, generate_series(0, 3) AS g(j)
-            WHERE vec_id < 8),
-          scored AS (
-            SELECT sub.vec_id, sub.j, cb.c,
-              -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2 AS key, sub.sn2
-            FROM sub JOIN cb ON sub.j = cb.j),
-          best AS (
-            SELECT vec_id, j, c AS code, sn2 + key AS err,
-              row_number() OVER (PARTITION BY vec_id, j ORDER BY key, c) AS rn
-            FROM scored)
-          SELECT vec_id, j, code, round(err, 6) AS err
-          FROM best WHERE rn = 1 ORDER BY vec_id, j""",
-    // ADC: the q_pq_encode codes joined to the per-query distance table
-    // on (subspace, code); term-wise decimal casts keep the sum exact.
-    "q_pq_search" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          sub AS (
-            SELECT vec_id, j, v[j*16+1 : j*16+16] AS s,
-              list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS sn2
-            FROM e, generate_series(0, 3) AS g(j)),
-          cb AS (
-            SELECT cast(e.vec_id AS int) AS c, j, v[j*16+1 : j*16+16] AS cw,
-              list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS cwn2
-            FROM e, generate_series(0, 3) AS g(j)
-            WHERE vec_id < 8),
-          codes AS (
-            SELECT vec_id, j, code FROM (
-              SELECT sub.vec_id, sub.j, cb.c AS code,
-                row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                  ORDER BY -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2, cb.c)
-                  AS rn
-              FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1),
-          dtab AS (
-            SELECT q.vec_id AS q_id, cb.j, cb.c AS code,
-              q.sn2 - 2 * list_dot_product(q.s, cb.cw) + cb.cwn2 AS dq
-            FROM sub q JOIN cb ON q.j = cb.j WHERE q.vec_id < 5),
-          scored AS (
-            SELECT d.q_id, c.vec_id,
-              sum(cast(d.dq AS decimal(28,10))) AS ad
-            FROM codes c JOIN dtab d ON d.j = c.j AND d.code = c.code
-              AND c.vec_id <> d.q_id
-            GROUP BY d.q_id, c.vec_id)
-          SELECT q_id, vec_id, rn, round(cast(ad AS double), 6) AS adist
-          FROM (SELECT q_id, vec_id, ad, row_number() OVER (
-                  PARTITION BY q_id ORDER BY ad, vec_id) AS rn FROM scored)
-          WHERE rn <= 10 ORDER BY q_id, rn""",
-    // recall@10: the q_sim_exact top-10 left-joined to the q_pq_search
-    // top-10 per query; overlap counted, one exact int division.
-    "q_pq_recall" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          exact AS (
-            SELECT q_id, vec_id FROM (
-              SELECT q_id, vec_id, row_number() OVER (
-                PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-              FROM (
-                SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
-                  list_dot_product(x.v, q.v) /
-                    (sqrt(list_dot_product(x.v, x.v))
-                     * sqrt(list_dot_product(q.v, q.v))) AS cos
-                FROM e q JOIN e x
-                  ON q.vec_id < 5 AND x.vec_id <> q.vec_id))
-            WHERE rn <= 10),
-          sub AS (
-            SELECT vec_id, j, v[j*16+1 : j*16+16] AS s,
-              list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS sn2
-            FROM e, generate_series(0, 3) AS g(j)),
-          cb AS (
-            SELECT cast(e.vec_id AS int) AS c, j, v[j*16+1 : j*16+16] AS cw,
-              list_dot_product(v[j*16+1 : j*16+16], v[j*16+1 : j*16+16]) AS cwn2
-            FROM e, generate_series(0, 3) AS g(j)
-            WHERE vec_id < 8),
-          codes AS (
-            SELECT vec_id, j, code FROM (
-              SELECT sub.vec_id, sub.j, cb.c AS code,
-                row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                  ORDER BY -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2, cb.c)
-                  AS rn
-              FROM sub JOIN cb ON sub.j = cb.j) WHERE rn = 1),
-          dtab AS (
-            SELECT q.vec_id AS q_id, cb.j, cb.c AS code,
-              q.sn2 - 2 * list_dot_product(q.s, cb.cw) + cb.cwn2 AS dq
-            FROM sub q JOIN cb ON q.j = cb.j WHERE q.vec_id < 5),
-          adc AS (
-            SELECT q_id, vec_id FROM (
-              SELECT q_id, vec_id, row_number() OVER (
-                PARTITION BY q_id ORDER BY ad, vec_id) AS rn
-              FROM (
-                SELECT d.q_id, c.vec_id,
-                  sum(cast(d.dq AS decimal(28,10))) AS ad
-                FROM codes c JOIN dtab d ON d.j = c.j AND d.code = c.code
-                  AND c.vec_id <> d.q_id
-                GROUP BY d.q_id, c.vec_id))
-            WHERE rn <= 10)
-          SELECT exact.q_id,
-            cast(sum(CASE WHEN adc.vec_id IS NULL THEN 0 ELSE 1 END)
-              AS bigint) AS n_hit,
-            cast(sum(CASE WHEN adc.vec_id IS NULL THEN 0 ELSE 1 END)
-              AS double) / 10 AS recall
-          FROM exact LEFT JOIN adc
-            ON exact.q_id = adc.q_id AND exact.vec_id = adc.vec_id
-          GROUP BY exact.q_id ORDER BY exact.q_id""",
-    // IVF-ADC: the shared fixed-quantizer CTE chain cut at rn <= 10.
-    "q_ivf_pq_search" ->
-      s"""$IvfPqAdcCtes
-          SELECT q_id, vec_id, rn, round(cast(ad AS double), 6) AS adist
-          FROM adcranked WHERE rn <= 10 ORDER BY q_id, rn""",
-    // recall@10 of the IVF-ADC composition vs the exact cosine top-10 —
-    // the q_pq_recall shape with the probe-bounded search substituted.
-    "q_ivf_pq_recall" ->
-      s"""$IvfPqAdcCtes,
-          ${embExactCte(5, 10)},
-          adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
-          ${recallTailSql("adc", 10)}""",
-    // Residual IVF-PQ: the same e/c/assign/probes chain, with the
-    // codebook, codes, and per-(query, cell) distance table all computed
-    // over r = x − c(cell) (list_transform subtraction — the engine's
-    // zip_with, elementwise, no reassociation).
-    "q_ivf_pq_residual_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings),
-         c AS (SELECT vec_id AS cid, v AS cv,
-             list_dot_product(v, v) AS cnorm2
-           FROM e WHERE vec_id < 16),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         res AS (
-           SELECT e.vec_id, a.cell,
-             list_transform(generate_series(1, 64),
-               i -> e.v[i] - c.cv[i]) AS r
-           FROM e JOIN assign a ON a.vec_id = e.vec_id
-           JOIN c ON c.cid = a.cell),
-         rsub AS (
-           SELECT vec_id, cell, j, r[j*16+1 : j*16+16] AS s,
-             list_dot_product(r[j*16+1 : j*16+16],
-               r[j*16+1 : j*16+16]) AS sn2
-           FROM res, generate_series(0, 3) AS g(j)),
-         rcb AS (
-           SELECT cast(vec_id AS int) AS c, j, s AS cw, sn2 AS cwn2
-           FROM rsub WHERE vec_id < 8),
-         rcodes AS (
-           SELECT vec_id, cell, j, code FROM (
-             SELECT rsub.vec_id, rsub.cell, rsub.j, rcb.c AS code,
-               row_number() OVER (PARTITION BY rsub.vec_id, rsub.j
-                 ORDER BY -2 * list_dot_product(rsub.s, rcb.cw)
-                   + rcb.cwn2, rcb.c) AS rn
-             FROM rsub JOIN rcb ON rsub.j = rcb.j) WHERE rn = 1),
-         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
-         qres AS (
-           SELECT q.q_id, p.cell,
-             list_transform(generate_series(1, 64),
-               i -> q.qv[i] - c.cv[i]) AS qr
-           FROM q JOIN probes p ON p.q_id = q.q_id
-           JOIN c ON c.cid = p.cell),
-         qsub AS (
-           SELECT q_id, cell, j, qr[j*16+1 : j*16+16] AS qs,
-             list_dot_product(qr[j*16+1 : j*16+16],
-               qr[j*16+1 : j*16+16]) AS qn2
-           FROM qres, generate_series(0, 3) AS g(j)),
-         dtab AS (
-           SELECT qsub.q_id, qsub.cell, qsub.j, rcb.c AS code,
-             qsub.qn2 - 2 * list_dot_product(qsub.qs, rcb.cw)
-               + rcb.cwn2 AS dq
-           FROM qsub JOIN rcb ON qsub.j = rcb.j),
-         scored AS (
-           SELECT d.q_id, co.vec_id,
-             sum(cast(d.dq AS decimal(28,10))) AS ad
-           FROM rcodes co
-           JOIN dtab d ON d.cell = co.cell AND d.j = co.j
-             AND d.code = co.code
-           WHERE co.vec_id <> d.q_id
-           GROUP BY d.q_id, co.vec_id),
-         radc AS (
-           SELECT q_id, vec_id FROM (
-             SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-               ORDER BY ad, vec_id) AS rn
-             FROM scored) WHERE rn <= 10),
-         ${embExactCte(5, 10)}
-         ${recallTailSql("radc", 10)}""",
-    // Per-subspace PQ error totals, plain vs rotated — EXACT-INTEGER
-    // replay of Pq.encodeFixedLong over the shared eighth-micro frame:
-    // plain = 8·round(x·10⁶), rotated = the raw integer WHT; every dot,
-    // argmin key and err is an exact BIGINT sum (position-level joins,
-    // no float list ops), so the cross-build 1-ulp rounding divergence
-    // that killed the r12 double version cannot occur.
-    "q_opq_balance" ->
-      s"""WITH qv AS (
-           SELECT vec_id, gs.i AS pos,
-             CAST(round(embedding[gs.i]::DOUBLE * 1000000, 0) AS BIGINT) AS q
-           FROM embeddings, generate_series(1, 64) AS gs(i)),
-         rotl AS (
-           SELECT v.vec_id, i.i AS pos,
-             CAST(sum(CASE WHEN bit_count((i.i - 1) & (v.pos - 1)) % 2 = 0
-                 THEN v.q ELSE -v.q END) AS BIGINT) AS w
-           FROM qv v, generate_series(1, 64) AS i(i)
-           GROUP BY v.vec_id, i.i),
-         up AS (SELECT vec_id, CAST((pos - 1) // 16 AS BIGINT) AS j,
-                  (pos - 1) % 16 AS sp, 8 * q AS x FROM qv),
-         ur AS (SELECT vec_id, CAST((pos - 1) // 16 AS BIGINT) AS j,
-                  (pos - 1) % 16 AS sp, w AS x FROM rotl),
-         np AS (SELECT vec_id, j, CAST(sum(x * x) AS BIGINT) AS n2
-                FROM up GROUP BY vec_id, j),
-         nr AS (SELECT vec_id, j, CAST(sum(x * x) AS BIGINT) AS n2
-                FROM ur GROUP BY vec_id, j),
-         dp AS (SELECT a.vec_id, a.j, b.vec_id AS c,
-                  CAST(sum(a.x * b.x) AS BIGINT) AS sc
-                FROM up a JOIN up b
-                  ON b.vec_id < 8 AND a.j = b.j AND a.sp = b.sp
-                GROUP BY a.vec_id, a.j, b.vec_id),
-         dr AS (SELECT a.vec_id, a.j, b.vec_id AS c,
-                  CAST(sum(a.x * b.x) AS BIGINT) AS sc
-                FROM ur a JOIN ur b
-                  ON b.vec_id < 8 AND a.j = b.j AND a.sp = b.sp
-                GROUP BY a.vec_id, a.j, b.vec_id),
-         encp AS (
-           SELECT vec_id, j, err FROM (
-             SELECT d.vec_id, d.j, sv.n2 - 2 * d.sc + cv.n2 AS err,
-               row_number() OVER (PARTITION BY d.vec_id, d.j
-                 ORDER BY cv.n2 - 2 * d.sc, d.c) AS rn
-             FROM dp d
-             JOIN np sv ON sv.vec_id = d.vec_id AND sv.j = d.j
-             JOIN np cv ON cv.vec_id = d.c AND cv.j = d.j) WHERE rn = 1),
-         encr AS (
-           SELECT vec_id, j, err FROM (
-             SELECT d.vec_id, d.j, sv.n2 - 2 * d.sc + cv.n2 AS err,
-               row_number() OVER (PARTITION BY d.vec_id, d.j
-                 ORDER BY cv.n2 - 2 * d.sc, d.c) AS rn
-             FROM dr d
-             JOIN nr sv ON sv.vec_id = d.vec_id AND sv.j = d.j
-             JOIN nr cv ON cv.vec_id = d.c AND cv.j = d.j) WHERE rn = 1)
-         SELECT p.j, p.err_plain, r.err_rot FROM
-           (SELECT j, CAST(sum(cast(err AS decimal(28,0))) AS BIGINT)
-              AS err_plain
-            FROM encp GROUP BY j) p
-         JOIN
-           (SELECT j, CAST(sum(cast(err AS decimal(28,0))) AS BIGINT)
-              AS err_rot
-            FROM encr GROUP BY j) r
-         USING (j) ORDER BY j""",
-    // Learned-rotation recall: the PCA chain's dir CTE feeds the exact
-    // integer Householder axis (u = round(sqrt(64))*q - round(|q|)),
-    // the reflection replays in exact decimals over the quantized
-    // x rows, and the parameterized ADC body + exact-cosine truth run
-    // over the rotated frame e2.
-    "q_opq_pca_recall" -> PcaSql(
-      s""",
-         $OpqRank1Ctes,
-         e2 AS (SELECT vec_id, list(rv ORDER BY pos) AS v
-                FROM rotv GROUP BY vec_id),
-         ${ivfPqAdcBody("e2")},
-         ${embExactCte(5, 10, "e2")},
-         adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
-         ${recallTailSql("adc", 10)}"""),
-    // Rank-2 learned rotation: the rank-1 chain (uu/rotv) plus the
-    // second axis — v = H₁q₂ from the deflated direction dir2 (exact
-    // decimal numerator, one rounded division), aimed at the
-    // alternating ±1 diagonal (uub), and the second reflection replayed
-    // over the re-quantized first-reflection frame (x2 → rotv2).
-    "q_opq_pca2_recall" -> PcaSql(
-      s""",
-         $OpqRank1Ctes,
-         $OpqRank2Ctes,
-         e2 AS MATERIALIZED (SELECT vec_id, list(rv ORDER BY pos) AS v
-                FROM rotv2 GROUP BY vec_id),
-         ${ivfPqAdcBody("e2")},
-         ${embExactCte(5, 10, "e2")},
-         adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
-         ${recallTailSql("adc", 10)}"""),
-    // The OPQ alternation's measured row: the rank-2 rotated frame (the
-    // R-step — same chain as q_opq_pca2_recall) with Lloyd-RETRAINED
-    // per-subspace codebooks (the C-step): the fixed first-8 codebook
-    // becomes the Lloyd seed, two unrolled assign→exact-decimal-means
-    // rounds, then the identical ADC probe pipeline and recall tail.
-    "q_opq_train_recall" -> PcaSql(
-      s""",
-         $OpqRank1Ctes,
-         $OpqRank2Ctes,
-         e2 AS MATERIALIZED (SELECT vec_id, list(rv ORDER BY pos) AS v
-                FROM rotv2 GROUP BY vec_id),
-         ${ivfPqAdcTrainedBody("e2", 2)},
-         ${embExactCte(5, 10, "e2")},
-         adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
-         ${recallTailSql("adc", 10)}"""),
-    // Four-mode balance: the learned-rotation chain feeds eighth-micro
-    // integer frames for all four spaces (PcaSql's x is 0-based pos),
-    // each run through the exact-integer PQ-error block.
-    "q_opq_balance2" -> PcaSql(
-      s""",
-         $OpqRank1Ctes,
-         $OpqRank2Ctes,
-         tplain AS MATERIALIZED (
-           SELECT vec_id, CAST(pos // 16 AS BIGINT) AS j, pos % 16 AS sp,
-             8 * x AS x
-           FROM x),
-         twht AS MATERIALIZED (
-           SELECT v.vec_id, CAST(i.i // 16 AS BIGINT) AS j, i.i % 16 AS sp,
-             CAST(sum(CASE WHEN bit_count(i.i & v.pos) % 2 = 0
-                 THEN v.x ELSE -v.x END) AS BIGINT) AS x
-           FROM x v, generate_series(0, 63) AS i(i)
-           GROUP BY v.vec_id, i.i),
-         tpca1 AS MATERIALIZED (
-           SELECT vec_id, CAST(pos // 16 AS BIGINT) AS j, pos % 16 AS sp,
-             8 * round(rv * 1000000, 0)::BIGINT AS x
-           FROM rotm),
-         tpca2 AS MATERIALIZED (
-           SELECT vec_id, CAST(pos // 16 AS BIGINT) AS j, pos % 16 AS sp,
-             8 * round(rv * 1000000, 0)::BIGINT AS x
-           FROM rotv2),
-         ${pqErrByJCtes("plain", "plain")},
-         ${pqErrByJCtes("wht", "wht")},
-         ${pqErrByJCtes("pca1", "pca1")},
-         ${pqErrByJCtes("pca2", "pca2")}
-         SELECT mode, j, err FROM (
-           SELECT * FROM splain UNION ALL SELECT * FROM swht
-           UNION ALL SELECT * FROM spca1 UNION ALL SELECT * FROM spca2)
-         ORDER BY mode, j"""),
-    // recall@10 of the SAME pipeline over Walsh–Hadamard-rotated
-    // vectors — read against q_ivf_pq_recall at equal nprobe, the
-    // delta is the OPQ-style rotation's lift.
-    "q_opq_recall" ->
-      s"""${ivfPqAdcCtes(OpqRotatedECtes)},
-          ${embExactCte(5, 10)},
-          adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
-          ${recallTailSql("adc", 10)}""",
-    // IVF-PQ + exact refine: ADC top-20 candidates re-scored by the
-    // exact cosine (the q_sim_exact formulation) and re-cut to top-10;
-    // the candidate's ADC distance rides through.
-    "q_ivf_pq_rerank" ->
-      s"""$IvfPqAdcCtes,
-          cand AS (
-            SELECT q_id, vec_id, round(cast(ad AS double), 6) AS adist
-            FROM adcranked WHERE rn <= 20),
-          rr AS (
-            SELECT c.q_id, c.vec_id, c.adist,
-              list_dot_product(x.v, g.v) /
-                (sqrt(list_dot_product(x.v, x.v))
-                 * sqrt(list_dot_product(g.v, g.v))) AS cos
-            FROM cand c
-            JOIN e x ON x.vec_id = c.vec_id
-            JOIN e g ON g.vec_id = c.q_id)
-          SELECT q_id, rn, vec_id, adist, round(cos, 6) AS cosine FROM (
-            SELECT q_id, vec_id, adist, cos,
-              row_number() OVER (PARTITION BY q_id
-                ORDER BY cos DESC, vec_id) AS rn
-            FROM rr)
-          WHERE rn <= 10 ORDER BY q_id, rn""",
-    // recall@10 of the refined IVF-PQ search — read against
-    // q_ivf_pq_recall at the same nprobe, the delta is the refine lift.
-    "q_ivf_pq_rerank_recall" ->
-      s"""$IvfPqAdcCtes,
-          ${embExactCte(5, 10)},
-          cand AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 20),
-          refined AS (
-            SELECT q_id, vec_id FROM (
-              SELECT c.q_id, c.vec_id,
-                row_number() OVER (PARTITION BY c.q_id ORDER BY
-                  list_dot_product(x.v, g.v) /
-                    (sqrt(list_dot_product(x.v, x.v))
-                     * sqrt(list_dot_product(g.v, g.v))) DESC,
-                  c.vec_id) AS rn
-              FROM cand c
-              JOIN e x ON x.vec_id = c.vec_id
-              JOIN e g ON g.vec_id = c.q_id)
-            WHERE rn <= 10)
-          ${recallTailSql("refined", 10)}""",
-    // lshTopK = q_sim_exact's scoring/ranking restricted to bucket-equal
-    // candidates: same plane literals as the engine, same cosine and
-    // row_number shape as the q_sim_exact oracle.
-    "q_sim_lsh_topk" -> {
-      val b = lshBucketSql(graft.operators.Similarity.hyperplanes(4, 64), "embedding")
-      s"""WITH bk AS (SELECT vec_id, embedding, $b AS bucket FROM embeddings)
-          SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
-            SELECT q_id, vec_id, cos,
-              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-            FROM (
-              SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-                list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
-                  (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                   * sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))) AS cos
-              FROM bk q JOIN bk e
-                ON q.vec_id < 5 AND e.bucket = q.bucket AND e.vec_id <> q.vec_id))
-          WHERE rn <= 10 ORDER BY q_id, rn"""
-    },
-    // The TRAINED-quantizer IVF: Ivf.train's Lloyd means sum every
-    // component as an exact decimal(28,10) before one double division, so
-    // the trained centroids are a pure function of the data — and this SQL
-    // re-runs the training verbatim: seed = first 16 vectors, assignment
-    // by the same -2·dot+|c|² key (seed-id tiebreak; |c|² is a sequential
-    // self-dot both sides), per-cell exact-decimal component means with
-    // empty cells keeping their centroid, two iterations — then the
-    // identical probe pipeline as q_sim_ivf_fixed over the result.
-    "q_sim_ivf" -> {
-      // one Lloyd iteration: assign against c{i-1}, then exact means → c{i}
-      def step(i: Int) = {
-        val prev = s"c${i - 1}"
-        s"""a$i AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv)
-                   + list_dot_product(c.cv, c.cv), c.cid) AS rn
-             FROM e, $prev c) WHERE rn = 1),
-         m$i AS (
-           -- parallel unnests zip positionally; deriving pos from len(e.v)
-           -- keeps the oracle tracking the fixture dimension (a hardcoded
-           -- dim would silently train over wrong positions after a drift)
-           SELECT cell, pos,
-             cast(sum(cast(comp AS decimal(28,10))) AS double)
-               / count(*) AS m
-           FROM (
-             SELECT a.cell, unnest(e.v) AS comp,
-               unnest(generate_series(1, len(e.v))) AS pos
-             FROM a$i a JOIN e ON e.vec_id = a.vec_id)
-           GROUP BY cell, pos),
-         c$i AS (
-           SELECT p.cid, coalesce(mv.cv, p.cv) AS cv FROM $prev p
-           LEFT JOIN (SELECT cell, list(m ORDER BY pos) AS cv
-                      FROM m$i GROUP BY cell) mv ON mv.cell = p.cid)"""
-      }
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         ${step(1)},
-         ${step(2)},
-         c AS (SELECT cid, cv, list_dot_product(cv, cv) AS cnorm2 FROM c2),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
-         scored AS (
-           SELECT q.q_id, e.vec_id,
-             list_dot_product(e.v, q.qv) /
-               (sqrt(list_dot_product(e.v, e.v))
-                * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-           FROM probes p
-           JOIN assign a ON a.cell = p.cell
-           JOIN e ON e.vec_id = a.vec_id
-           JOIN q ON q.q_id = p.q_id
-           WHERE e.vec_id <> q.q_id)
-         SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
-           SELECT q_id, vec_id, cos,
-             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-               AS rn
-           FROM scored)
-         WHERE rn <= 10 ORDER BY q_id, rn"""
-    },
-    // The fixed-quantizer IVF: centroids are the first 16 vectors, the
-    // assignment key is -2·dot+|c|² with index tiebreak, probes take the 4
-    // nearest cells, and the in-cell cosine top-10 ranks (cos desc, id) —
-    // each step the exact arithmetic the Spark operator runs.
-    "q_sim_ivf_fixed" ->
-      """WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
-         scored AS (
-           SELECT q.q_id, e.vec_id,
-             list_dot_product(e.v, q.qv) /
-               (sqrt(list_dot_product(e.v, e.v))
-                * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-           FROM probes p
-           JOIN assign a ON a.cell = p.cell
-           JOIN e ON e.vec_id = a.vec_id
-           JOIN q ON q.q_id = p.q_id
-           WHERE e.vec_id <> q.q_id)
-         SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
-           SELECT q_id, vec_id, cos,
-             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-               AS rn
-           FROM scored)
-         WHERE rn <= 10 ORDER BY q_id, rn""",
-    // The q_sim_ivf_fixed CTEs shared across three probe widths + the
-    // q_sim_exact truth, hit-joined per query — the whole tuning curve
-    // from one oracle.
-    "q_ivf_recall_curve" -> {
-      val branches = Seq(1, 2, 4).map { np =>
-        s"""s$np AS (
-             SELECT q_id, vec_id FROM (
-               SELECT q_id, vec_id,
-                 row_number() OVER (PARTITION BY q_id
-                   ORDER BY cos DESC, vec_id) AS rn
-               FROM (
-                 SELECT q.q_id, e.vec_id,
-                   list_dot_product(e.v, q.qv) /
-                     (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-                 FROM pr p
-                 JOIN assign a ON a.cell = p.cell
-                 JOIN e ON e.vec_id = a.vec_id
-                 JOIN q ON q.q_id = p.q_id
-                 WHERE p.rn <= $np AND e.vec_id <> q.q_id))
-             WHERE rn <= 10),
-           h$np AS (
-             SELECT ex.q_id, cast($np AS BIGINT) AS nprobe,
-               cast(sum(CASE WHEN s$np.vec_id IS NULL THEN 0 ELSE 1 END)
-                 AS BIGINT) AS n_hit
-             FROM ex LEFT JOIN s$np
-               ON s$np.q_id = ex.q_id AND s$np.vec_id = ex.vec_id
-             GROUP BY ex.q_id)"""
-      }.mkString(",\n")
-      val unions = Seq(1, 2, 4).map(np =>
-        s"SELECT nprobe, q_id, n_hit FROM h$np").mkString(" UNION ALL ")
-      s"""WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         pr AS (
-           SELECT q.q_id, c.cid AS cell,
-             row_number() OVER (PARTITION BY q.q_id
-               ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2, c.cid)
-               AS rn
-           FROM q CROSS JOIN c),
-         ex AS (
-           SELECT q_id, vec_id FROM (
-             SELECT q.q_id, e.vec_id,
-               row_number() OVER (PARTITION BY q.q_id ORDER BY
-                 list_dot_product(e.v, q.qv) /
-                   (sqrt(list_dot_product(e.v, e.v))
-                    * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id)
-                 AS rn
-             FROM e JOIN q ON e.vec_id <> q.q_id) WHERE rn <= 10),
-         $branches
-         SELECT nprobe, q_id, n_hit, n_hit::DOUBLE / 10 AS recall
-         FROM ($unions) ORDER BY nprobe, q_id"""
-    },
-    // Same fixed-quantizer assignment CTE as q_sim_ivf_fixed; the TRUE
-    // squared distance |a|² + (−2a·c + |c|²) — |a|² added back outside
-    // the shifted rank key, the engine's exact operation order — rounds
-    // to micro-units and sums as decimal, mirroring the engine.
-    "q_ivf_balance" ->
-      """WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         assign AS (
-           SELECT vec_id, cell, d FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               list_dot_product(e.v, e.v)
-                 + (-2 * list_dot_product(e.v, c.cv) + c.cnorm2) AS d,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1)
-         SELECT cell::bigint AS cell, count(*)::bigint AS n_vecs,
-           round(sum(round(d * 1000000, 0)::decimal(38,0))::double
-             / 1000000 / count(*), 6) AS mean_dist
-         FROM assign GROUP BY cell ORDER BY cell""",
-    // PCA family: one shared relational re-run (see PcaSql) — the oracle
-    // executes the engine's exact pipeline, deflation included, so all
-    // three queries hash-match bit-for-bit.
-    "q_embed_pca" -> PcaSql(
-      """SELECT p.vec_id,
-           CASE WHEN n2.n2 = 0 THEN 0.0
-                ELSE round(cast(p.s AS double) / 1000000
-                  / sqrt(cast(n2.n2 AS double)), 6)
-           END AS pc1
-         FROM proj p CROSS JOIN n2 ORDER BY p.vec_id"""),
-    // Semantic consumption order: fixed-quantizer assignment over the
-    // DOUBLE frame (the q_sim_ivf_fixed argmin convention), pc1 from
-    // the shared PCA chain, per-cell ranks, census prefix-sum offsets.
-    "q_semantic_order" -> PcaSql(
-      s""",
-         $SemanticOrderCtes
-         SELECT vec_id, cell, pc1, pos FROM sord ORDER BY pos"""),
-    // The composition: the semantic stream sliced into 128-token
-    // windows — q_token_windows' arithmetic keyed on the semantic
-    // offset (one global cumulative sum; the engine builds it
-    // distributed via the cell-prefix trick, values identical).
-    "q_semantic_windows" -> PcaSql(
-      s""",
-         $SemanticOrderCtes,
-         tk AS (SELECT doc_id,
-                  len(string_split_regex(text, '\\s+')) AS n_tok
-                FROM documents WHERE text IS NOT NULL),
-         sj AS MATERIALIZED (
-           SELECT s.vec_id AS doc_id, s.pos, tk.n_tok
-           FROM sord s JOIN tk ON tk.doc_id = s.vec_id
-           WHERE tk.n_tok > 0),
-         stc AS (SELECT doc_id, n_tok,
-                   (sum(n_tok) OVER (ORDER BY pos) - n_tok)::bigint AS st
-                 FROM sj),
-         ee AS (SELECT doc_id, n_tok, st,
-                  unnest(generate_series(st // 128, (st + n_tok - 1) // 128))
-                    AS window_id
-                FROM stc)
-         SELECT window_id::bigint AS window_id, doc_id,
-           (greatest(st, window_id * 128) - window_id * 128)::bigint
-             AS w_start,
-           (least(st + n_tok, (window_id + 1) * 128)
-             - greatest(st, window_id * 128))::bigint AS n_in_window
-         FROM ee ORDER BY window_id, doc_id"""),
-    "q_pca_top2" -> PcaSql(
-      """SELECT p.vec_id,
-           CASE WHEN n2.n2 = 0 THEN 0.0
-                ELSE round(cast(p.s AS double) / 1000000
-                  / sqrt(cast(n2.n2 AS double)), 6)
-           END AS pc1,
-           CASE WHEN n2b.n2b = 0 THEN 0.0
-                ELSE round(cast(p2.s2 AS double) / 1000000
-                  / sqrt(cast(n2b.n2b AS double)), 6)
-           END AS pc2
-         FROM proj p JOIN proj2 p2 ON p2.vec_id = p.vec_id
-         CROSS JOIN n2 CROSS JOIN n2b ORDER BY p.vec_id"""),
-    "q_pca_variance" -> PcaSql(
-      """SELECT
-           CASE WHEN den.den = 0 THEN 0.0
-                ELSE round(cast(num.num AS double) / cast(den.den AS double)
-                  / 1000000, 6) END AS lambda1,
-           round(cast(tr.tr AS double) / 1000000, 6) AS trace,
-           CASE WHEN den.den = 0 OR tr.tr = 0 THEN 0.0
-                ELSE round(cast(num.num AS double) / cast(den.den AS double)
-                  / cast(tr.tr AS double), 6) END AS frac
-         FROM num CROSS JOIN den CROSS JOIN tr ORDER BY lambda1"""),
-    "q_vocab_coverage" ->
-      """WITH tok AS (SELECT unnest(string_split_regex(text, '\s+')) AS token
-                      FROM documents),
-         v AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
-         t AS (SELECT cast(sum(cnt) AS bigint) AS total FROM v),
-         r AS (SELECT token, cnt,
-                 row_number() OVER (ORDER BY cnt DESC, token) AS rn,
-                 cast(sum(cnt) OVER (ORDER BY cnt DESC, token
-                   ROWS UNBOUNDED PRECEDING) AS bigint) AS cum
-               FROM v)
-         SELECT rn, token, cnt, round(cast(cum AS double) / total, 6) AS coverage
-         FROM r, t WHERE rn <= 20 ORDER BY rn""",
-    "q_doc_entropy" ->
-      """WITH tf AS (
-           SELECT doc_id, token, count(*) AS c
-           FROM (SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS token
-                 FROM documents)
-           GROUP BY doc_id, token)
-         SELECT doc_id, n_tokens,
-           round(ln(cast(n_tokens AS double)) - cast(sclc AS double) / n_tokens, 6)
-             AS entropy
-         FROM (SELECT doc_id, cast(sum(c) AS bigint) AS n_tokens,
-                 sum(cast(c * ln(cast(c AS double)) AS decimal(28,10))) AS sclc
-               FROM tf GROUP BY doc_id)
-         ORDER BY doc_id""",
-    "q_token_budget" ->
-      """WITH s AS (
-           SELECT doc_id, lang,
-             cast(len(string_split_regex(text, '\s+')) AS bigint) AS n_tokens,
-             (CASE WHEN len(string_split_regex(text, '\s+'))
-                 BETWEEN 20 AND 10000 THEN 0.5 ELSE 0.0 END +
-              CASE WHEN cast(length(regexp_replace(text, '\s+', '', 'g'))
-                  AS double) / len(string_split_regex(text, '\s+'))
-                 BETWEEN 3.0 AND 8.0 THEN 0.5 ELSE 0.0 END) AS quality
-           FROM documents),
+  /** TextAnalysis.trainTokenLogOdds (label lang = 'en') in SQL, over
+    * per-doc tokens `toks` (doc_id, y, tok): ln-of-integer log-odds, each
+    * term cast decimal(28,10) before combining, in `w` (tok, wt). */
+  private def NbTokenWeightCtes: String =
+    """toks AS (
+           SELECT doc_id, (lang = 'en') AS y, tok FROM (
+             SELECT doc_id, lang,
+               unnest(string_split_regex(text, '\s+')) AS tok
+             FROM documents WHERE text IS NOT NULL)
+           WHERE length(tok) > 0),
+         tot AS (
+           SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS tp,
+             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS tn,
+             count(DISTINCT tok) AS v
+           FROM toks),
          c AS (
-           SELECT doc_id, lang, n_tokens, quality,
-             cast(sum(n_tokens) OVER (PARTITION BY lang
-               ORDER BY quality DESC, doc_id) AS bigint) AS cum_tokens
-           FROM s)
-         SELECT doc_id, lang, n_tokens, quality, cum_tokens FROM c
-         WHERE cum_tokens <= 1500 ORDER BY lang, doc_id""",
-    // Integer-quantized weights (floor(sqrt·1000)) sum exactly; every
-    // share/rate is the same fixed IEEE expression tree as the engine's.
-    "q_mix_plan" ->
-      """WITH per AS (
-           SELECT lang, count(*)::bigint AS n_docs,
-             sum(len(string_split_regex(text, '\s+')))::bigint AS n_tokens
-           FROM documents GROUP BY lang),
-         w AS (SELECT per.*,
-             floor(sqrt(n_tokens::double) * 1000)::bigint AS wq FROM per),
-         tot AS (SELECT sum(wq)::bigint AS wsum FROM w)
-         SELECT lang, n_docs, n_tokens,
-           round(wq::double / wsum, 6) AS share,
-           floor(26000.0 * wq::double / wsum)::bigint AS target_tokens,
-           round(least(1.0, 26000.0 * wq::double / wsum / n_tokens), 6)
-             AS rate
-         FROM w CROSS JOIN tot ORDER BY lang""",
-    "q_temperature_mix" ->
-      """WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
-         m AS (SELECT min(n_docs) AS n_min FROM c),
-         r AS (SELECT lang, n_docs,
-                 cast(floor(sqrt(cast(n_min AS double) / n_docs) * 65536)
-                   AS bigint) AS w
-               FROM c, m)
-         SELECT lang, max(n_docs) AS n_docs, count(*) AS n_kept
-         FROM documents d JOIN r USING (lang)
-         WHERE substring(md5(concat('tmix', '|', cast(doc_id AS VARCHAR))), 1, 4)
-               < lpad(lower(to_hex(least(greatest(w, 0), 65535))), 4, '0')
-         GROUP BY lang ORDER BY lang""",
-    // Only the exact count and the tolerance verdict are asserted — the
-    // HLL binary itself is engine-specific (declared in SURVEY §2.9).
-    "q_distinct_sketch" ->
-      """WITH tok AS (
-           SELECT lang, unnest(string_split_regex(text, '\s+')) AS token
-           FROM documents)
-         SELECT lang, count(DISTINCT token) AS n_exact, true AS within_5pct
-         FROM tok GROUP BY lang ORDER BY lang""",
-    "q_sql_revenue" ->
-      """SELECT n_name,
-         cast(sum(cast(l_extendedprice AS decimal(18,2))
-           * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
-         count(*) AS n_items
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON l_orderkey = o_orderkey
-         JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-         GROUP BY n_name
-         ORDER BY revenue DESC, n_name""",
-    "q_sql_curate" ->
-      """WITH scored AS (
-           SELECT doc_id, lang,
-             (CASE WHEN len(string_split_regex(text, '\s+'))
-                 BETWEEN 20 AND 10000 THEN 0.5 ELSE 0.0 END +
-              CASE WHEN cast(length(regexp_replace(text, '\s+', '', 'g'))
-                  AS double) / len(string_split_regex(text, '\s+'))
-                 BETWEEN 3.0 AND 8.0 THEN 0.5 ELSE 0.0 END) AS q,
-             md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
-             trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', ' ', 'g'), '\s+', ' ', 'g')) AS clean
+           SELECT tok, sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
+             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
+           FROM toks GROUP BY tok),
+         w AS (
+           SELECT c.tok,
+             cast(ln(n_pos + 1) AS decimal(28,10))
+             - cast(ln(tp + v) AS decimal(28,10))
+             - cast(ln(n_neg + 1) AS decimal(28,10))
+             + cast(ln(tn + v) AS decimal(28,10)) AS wt
+           FROM c CROSS JOIN tot)"""
+
+  /** Dedup.duplicatedSpans' anchors in SQL: width-8 shingles per word
+    * position, an anchor duplicated when its shingle spans >1 distinct
+    * doc, and consecutive duplicated anchors grouped (pos − rank) in
+    * `flagged` (doc_id, pos, grp). */
+  private def DupSpanCtes: String =
+    """words AS (
+           SELECT doc_id, string_split_regex(text, '\s+') AS w
            FROM documents WHERE text IS NOT NULL),
-         deduped AS (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-             FROM scored WHERE q >= 1.0)
-           WHERE rn = 1)
-         SELECT lang, count(*) AS n_docs,
-           cast(sum(length(clean)) AS bigint) AS sum_clean_chars
-         FROM deduped GROUP BY lang ORDER BY lang""",
-    "q_clean_text" ->
-      """SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-           '\s+', ' ', 'g')) AS clean,
-         length(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-           '\s+', ' ', 'g'))) AS n_clean_chars
-         FROM documents ORDER BY doc_id""",
-    "q_cms_freq" ->
-      """WITH cells AS (
-           SELECT row, bucket, count(*) AS n FROM (
-             SELECT unnest([0, 1, 2, 3]) AS row,
-               unnest([substring(md5(concat('cms0', '|', cast(l_suppkey AS VARCHAR))), 1, 2),
-                       substring(md5(concat('cms1', '|', cast(l_suppkey AS VARCHAR))), 1, 2),
-                       substring(md5(concat('cms2', '|', cast(l_suppkey AS VARCHAR))), 1, 2),
-                       substring(md5(concat('cms3', '|', cast(l_suppkey AS VARCHAR))), 1, 2)]) AS bucket
-             FROM lineitem)
-           GROUP BY row, bucket),
-         cand AS (
-           SELECT s_suppkey AS suppkey,
-             unnest([0, 1, 2, 3]) AS row,
-             unnest([substring(md5(concat('cms0', '|', cast(s_suppkey AS VARCHAR))), 1, 2),
-                     substring(md5(concat('cms1', '|', cast(s_suppkey AS VARCHAR))), 1, 2),
-                     substring(md5(concat('cms2', '|', cast(s_suppkey AS VARCHAR))), 1, 2),
-                     substring(md5(concat('cms3', '|', cast(s_suppkey AS VARCHAR))), 1, 2)]) AS bucket
-           FROM supplier WHERE s_suppkey <= 10),
-         est AS (
-           SELECT suppkey, min(coalesce(n, 0)) AS cms_est
-           FROM cand LEFT JOIN cells USING (row, bucket) GROUP BY suppkey),
-         exact AS (
-           SELECT l_suppkey AS suppkey, count(*) AS exact_n
-           FROM lineitem WHERE l_suppkey <= 10 GROUP BY 1)
-         SELECT e.suppkey, cms_est, exact_n, cms_est - exact_n AS overest
-         FROM est e JOIN exact USING (suppkey) ORDER BY suppkey""",
-    "q_lm_score" ->
-      s"""WITH $LmScoreCte
-         SELECT doc_id, n_bigrams, avg_logp FROM lm ORDER BY doc_id""",
-    "q_lm_kn" ->
-      s"""WITH w AS (
-           SELECT doc_id, $WsSplitSql AS w FROM documents),
-         occ AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2
+         anchors AS (
+           SELECT doc_id, pos, array_to_string(w[pos:pos+7], ' ') AS sh
            FROM (SELECT doc_id, w,
-                   unnest(generate_series(1, len(w) - 1)) AS i FROM w)),
-         big AS (SELECT w1, w2, count(*) AS cb FROM occ GROUP BY w1, w2),
-         ctx AS (SELECT w1, count(*) AS cc FROM occ GROUP BY w1),
-         np AS (SELECT w1, count(*) AS n1p FROM big GROUP BY w1),
-         nm AS (SELECT w2, count(*) AS n1m FROM big GROUP BY w2),
-         nt AS (SELECT count(*)::HUGEINT AS nt FROM big),
-         t AS (SELECT o.doc_id,
-                 cast(ln(greatest(b.cb * 4 - 3, 0)::HUGEINT * nt.nt
-                   + p.n1p::HUGEINT * m.n1m * 3) AS decimal(28,10))
-                 - cast(ln(c.cc::HUGEINT * 4 * nt.nt) AS decimal(28,10))
-                   AS term
-               FROM occ o JOIN big b USING (w1, w2) JOIN ctx c USING (w1)
-                 JOIN np p USING (w1) JOIN nm m USING (w2), nt),
-         lm AS (
-           SELECT doc_id, count(*) AS n_bigrams,
-             round(cast(sum(term) AS double) / count(*), 6) AS avg_logp
-           FROM t GROUP BY doc_id)
-         SELECT doc_id, n_bigrams, avg_logp FROM lm ORDER BY doc_id""",
-    // Exact decimal end to end (see DsirCte), so the rounded scores and
-    // the top-50 cut match bit-for-bit.
-    "q_dsir" ->
-      s"""WITH $DsirCte
-         SELECT doc_id, n_feats, log_w
-         FROM weights ORDER BY log_w DESC, doc_id LIMIT 50""",
-    // The same weights perturbed by the seeded Gumbel (one dyadic
-    // uniform, two decimal(17,10)-rounded lns in the engine's exact
-    // nesting) — the Gumbel-top-k draw IS sampling without replacement
-    // with p ∝ exp(log_w).
-    "q_dsir_resample" ->
-      s"""WITH $DsirCte,
-         g AS (
-           SELECT doc_id, n_feats, log_w,
-             round(log_w + (-(cast(cast(ln(
-               -(cast(cast(ln(
-                 ((('0x' || substr(md5('dsir-draw' || '|' || doc_id),
-                    1, 15))::BIGINT % 1048576)::DOUBLE + 0.5) / 1048576.0
-               ) AS decimal(17,10)) AS DOUBLE))
-             ) AS decimal(17,10)) AS DOUBLE))), 6) AS gumbel_key
-           FROM weights)
-         SELECT doc_id, n_feats, log_w, gumbel_key FROM g
-         ORDER BY gumbel_key DESC, doc_id LIMIT 50""",
-    "q_ppl_bucket" ->
-      s"""WITH $LmScoreCte,
-         lb AS (
-           SELECT lm.doc_id, avg_logp, d.lang,
-             cast(ntile(3) OVER (PARTITION BY d.lang
-               ORDER BY avg_logp DESC, lm.doc_id) AS bigint) AS bucket
-           FROM lm JOIN documents d ON lm.doc_id = d.doc_id)
-         SELECT lang, bucket, count(*) AS n_docs,
-           cast(sum(cast(avg_logp AS decimal(18,6))) AS double) AS sum_logp,
-           min(avg_logp) AS min_logp, max(avg_logp) AS max_logp
-         FROM lb GROUP BY lang, bucket ORDER BY lang, bucket""",
-    "q_text_stats" ->
+                   unnest(generate_series(1, len(w) - 7)) AS pos
+                 FROM words)),
+         dup AS (
+           SELECT sh FROM anchors
+           GROUP BY sh HAVING count(DISTINCT doc_id) > 1),
+         flagged AS (
+           SELECT a.doc_id, a.pos,
+             a.pos - row_number() OVER (PARTITION BY a.doc_id
+               ORDER BY a.pos) AS grp
+           FROM anchors a JOIN dup USING (sh))"""
+
+  /** Curation.contaminated(n = 4) against the doc_id % 50 = 0 benchmark
+    * slice: the training docs sharing any word 4-gram with it. */
+  private def DecontaminateSql: String =
+    """WITH s AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, greatest(len(w) - 3, 1)),
+               i -> array_to_string(w[i:i+3], ' '))) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
+         bench AS (
+           SELECT DISTINCT unnest(sh) AS gram FROM s WHERE doc_id % 50 = 0),
+         grams AS (
+           SELECT doc_id, unnest(sh) AS gram FROM s WHERE doc_id % 50 <> 0)
+         SELECT DISTINCT doc_id FROM grams
+         WHERE gram IN (SELECT gram FROM bench)
+         ORDER BY doc_id"""
+
+  /** q_rrf's dense ranking: the exact-cosine top-RerankCandK `dense`
+    * (q_id, vec_id, drnk) of the vec_id < 3 queries over `e`. */
+  private def RrfDenseCtes: String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         dense AS (
+           SELECT q_id, vec_id, drnk FROM (
+             SELECT q_id, vec_id, row_number() OVER (
+               PARTITION BY q_id ORDER BY cos DESC, vec_id) AS drnk
+             FROM (
+               SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
+                 list_dot_product(x.v, q.v) /
+                   (sqrt(list_dot_product(x.v, x.v))
+                    * sqrt(list_dot_product(q.v, q.v))) AS cos
+               FROM e q JOIN e x
+                 ON q.vec_id < 3 AND x.vec_id <> q.vec_id))
+           WHERE drnk <= $RerankCandK)"""
+
+  /** TextAnalysis.invertedIndex(maxPostings = 3) over every document:
+    * per-term df and total tf, the first 3 postings by doc_id. */
+  private def InvertedIndexSql: String =
+    s"""WITH toks AS (
+           SELECT doc_id, unnest($WsSplitSql) AS term
+           FROM documents WHERE text IS NOT NULL),
+         tf AS (
+           SELECT term, doc_id, count(*) AS tf FROM toks
+           WHERE length(term) > 0 GROUP BY term, doc_id),
+         stats AS (
+           SELECT term, count(*)::bigint AS df, sum(tf)::bigint AS total_tf
+           FROM tf GROUP BY term),
+         ranked AS (
+           SELECT term, doc_id, tf,
+             row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn
+           FROM tf)
+         SELECT r.term, s.df, s.total_tf, r.doc_id,
+           r.tf::bigint AS tf, r.rn::bigint AS rn
+         FROM ranked r JOIN stats s USING (term)
+         WHERE r.rn <= 3 ORDER BY r.term, r.doc_id"""
+
+  val defs: Seq[QueryDef] = Seq(
+    // L1 — per-source corpus-health report: the dashboard row a pipeline
+    // publishes after each ingest. One scan, one hash aggregate; every
+    // metric is either an exact integer or ONE division of exact longs
+    // (bit-portable without rounding).
+    QueryDef("q_quality_report", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      docs.select(col("source"), col("lang"), col("n_chars"),
+          size(split(col("text"), "\\s+")).cast("long").as("__tok"),
+          (TA.hasEmail(col("text")) || TA.hasPhone(col("text"))).as("__pii"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("__tok")).as("n_tokens"),
+          (sum(col("__tok")).cast("double") / count(lit(1)))
+            .as("avg_tokens"),
+          countDistinct(col("lang")).as("n_langs"),
+          sum(when(col("__tok") < 20, 1L).otherwise(0L)).as("n_short"),
+          sum(when(col("__pii"), 1L).otherwise(0L)).as("n_pii"),
+          min(col("n_chars")).as("min_chars"),
+          max(col("n_chars")).as("max_chars"))
+        .orderBy("source")
+    },
+      """WITH d AS (
+           SELECT source, lang, n_chars,
+             cast(len(string_split_regex(text, '\s+')) AS bigint) AS tok,
+             (regexp_matches(text,
+                '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')
+              OR regexp_matches(text, '\d{3}[-. ]\d{3}[-. ]\d{4}')) AS pii
+           FROM documents)
+         SELECT source, cast(count(*) AS bigint) AS n_docs,
+           cast(sum(tok) AS bigint) AS n_tokens,
+           cast(sum(tok) AS double) / count(*) AS avg_tokens,
+           cast(count(DISTINCT lang) AS bigint) AS n_langs,
+           cast(sum(CASE WHEN tok < 20 THEN 1 ELSE 0 END) AS bigint)
+             AS n_short,
+           cast(sum(CASE WHEN pii THEN 1 ELSE 0 END) AS bigint) AS n_pii,
+           min(n_chars) AS min_chars, max(n_chars) AS max_chars
+         FROM d GROUP BY source ORDER BY source"""),
+    // L1/Scale — drift report: exact total-variation distance of each
+    // source's doc-length distribution from the corpus-wide one. The scan
+    // collapses map-side to a (source × bin) cell table; everything after
+    // is arithmetic over that tiny frame, and the single final division
+    // keeps the score bit-portable.
+    QueryDef("q_drift_tvd", (s, dir) => {
+      Quality.driftTvd(t(s, dir, "documents"), "source",
+          least(floor(col("n_chars") / lit(64)).cast("long"), lit(8L)))
+        .orderBy("source")
+    },
+      """WITH cells AS (
+           SELECT source, least(cast(floor(n_chars / 64) AS BIGINT), 8) AS bin,
+             cast(count(*) AS BIGINT) AS c
+           FROM documents GROUP BY 1, 2),
+         g AS (SELECT source, cast(sum(c) AS BIGINT) AS ns FROM cells GROUP BY 1),
+         b AS (SELECT bin, cast(sum(c) AS BIGINT) AS nb FROM cells GROUP BY 1),
+         t AS (SELECT cast(sum(nb) AS BIGINT) AS N FROM b)
+         SELECT g.source,
+           cast(sum(abs(coalesce(cells.c, 0) * t.N - b.nb * g.ns)) AS DOUBLE)
+             / (2 * t.N * g.ns) AS tvd
+         FROM g CROSS JOIN b CROSS JOIN t
+         LEFT JOIN cells ON cells.source = g.source AND cells.bin = b.bin
+         GROUP BY g.source, g.ns, t.N
+         ORDER BY g.source"""),
+    // L1 — corpus stats per language (exact integer sums).
+    QueryDef("q_text_stats", (s, dir) => {
+      t(s, dir, "documents")
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("sum_chars"),
+          sum(TA.tokenCountWs(col("text"))).as("sum_tokens"),
+          (sum(col("n_chars")) / count(lit(1))).as("avg_chars"))
+        .orderBy("lang")
+    },
       """SELECT lang, count(*) AS n_docs,
          cast(sum(n_chars) AS bigint) AS sum_chars,
          cast(sum(len(string_split_regex(text, '\s+'))) AS bigint) AS sum_tokens,
          cast(sum(n_chars) AS bigint) / count(*) AS avg_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "q_token_count" ->
+         FROM documents GROUP BY lang ORDER BY lang"""),
+    // L1 — whitespace vs BPE-ish regex token counts per document.
+    QueryDef("q_token_count", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), TA.tokenCountWs(col("text")).as("n_tokens_ws"),
+          TA.tokenCountRe(col("text")).as("n_tokens_re"))
+        .orderBy("doc_id")
+    },
       """SELECT doc_id,
          len(string_split_regex(text, '\s+')) AS n_tokens_ws,
          len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_tokens_re
-         FROM documents ORDER BY doc_id""",
-    "q_text_quality" ->
+         FROM documents ORDER BY doc_id"""),
+    // L1 — heuristic quality scoring.
+    QueryDef("q_text_quality", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), TA.tokenCountWs(col("text")).as("n_tokens"),
+          TA.avgTokenLen(col("text")).as("avg_token_len"),
+          TA.qualityScore(col("text")).as("quality"))
+        .orderBy("doc_id")
+    },
       """SELECT doc_id, n_tokens, avg_token_len,
          (CASE WHEN n_tokens BETWEEN 20 AND 10000 THEN 0.5 ELSE 0.0 END +
           CASE WHEN avg_token_len BETWEEN 3.0 AND 8.0 THEN 0.5 ELSE 0.0 END) AS quality
@@ -5138,8 +1559,33 @@ object Pipeline {
              cast(length(regexp_replace(text, '\s+', '', 'g')) AS double)
                / len(string_split_regex(text, '\s+')) AS avg_token_len
            FROM documents)
-         ORDER BY doc_id""",
-    "q_lang_id" ->
+         ORDER BY doc_id"""),
+    // L1 — intra-document repetition (Gopher-style repeated-3-gram
+    // fraction): high values flag boilerplate/spam before training.
+    QueryDef("q_rep_ratio", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), split(col("text"), "\\s+").as("__words"))
+        .select(col("doc_id"),
+          size(Dedup.rawShinglesFromWords(col("__words"), 3)).as("n_grams"),
+          round(TA.repetitionRatio(col("__words"), 3), 6).as("rep_ratio"))
+        .orderBy("doc_id")
+    },
+      """WITH g AS (
+           SELECT doc_id,
+             list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+               i -> array_to_string(w[i:i+2], ' ')) AS grams
+           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
+         SELECT doc_id, cast(len(grams) AS int) AS n_grams,
+           round(1.0 - len(list_distinct(grams))::DOUBLE / len(grams), 6)
+             AS rep_ratio
+         FROM g ORDER BY doc_id"""),
+    // L1 — marker-word language ID (argmax of stopword-mass scores).
+    QueryDef("q_lang_id", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"),
+          TA.langId(col("text")).as("lang_pred"))
+        .orderBy("doc_id")
+    },
       """WITH scores AS (
            SELECT doc_id, lang,
              (length(p) - length(replace(p, ' the ', ''))) / 5
@@ -5158,30 +1604,79 @@ object Pipeline {
                 WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
                 WHEN s_fr = greatest(s_en, s_de, s_es, s_fr) THEN 'fr'
                 ELSE 'unknown' END AS lang_pred
-         FROM scores ORDER BY doc_id""",
-    "q_doc_fingerprint" ->
+         FROM scores ORDER BY doc_id"""),
+    // A6 — canonical-text fingerprint for exact near-identical dedup.
+    QueryDef("q_doc_fingerprint", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), Dedup.fingerprint(col("text")).as("fp"))
+        .orderBy("doc_id")
+    },
       """SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-         FROM documents ORDER BY doc_id""",
-    "q_sample_hash" ->
+         FROM documents ORDER BY doc_id"""),
+    // A6 — rolling-hash fingerprint (Rabin-Karp): exact cross-engine
+    // integer fold, complementing the md5 canonical fingerprint.
+    QueryDef("q_doc_rollhash", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), TA.rollingHash(col("text")).as("rollhash"))
+        .orderBy("doc_id")
+    },
+      """SELECT doc_id, list_reduce(
+           list_prepend(cast(0 AS bigint), list_transform(string_split(text, ''), c -> cast(ascii(c) AS bigint))),
+           (acc, c) -> (acc * 31 + c) % 1000000007) AS rollhash
+         FROM documents ORDER BY doc_id"""),
+    // L4 — PII pattern scan: per-source hit counts.
+    // Scale — deterministic md5-gated sample (~1/8): reproducible across
+    // engines, runs, and partitionings, unlike df.sample().
+    QueryDef("q_sample_hash", (s, dir) => {
+      t(s, dir, "documents")
+        .filter(Sampling.keepHex(col("doc_id"), "split1", "2000"))
+        .select("doc_id", "lang")
+        .orderBy("doc_id")
+    },
       """SELECT doc_id, lang FROM documents
          WHERE substring(md5(concat('split1', '|', cast(doc_id AS VARCHAR))), 1, 4)
                < '2000'
-         ORDER BY doc_id""",
-    "q_sample_group" ->
+         ORDER BY doc_id"""),
+    // Scale — deterministic k-per-group sample (5 docs per source): quota
+    // sampling for eval sets / per-source spot checks, reproducible across
+    // engines and re-runs because the rank order is the portable md5.
+    QueryDef("q_sample_group", (s, dir) => {
+      Sampling.groupSample(t(s, dir, "documents"), Seq("source"), "doc_id",
+        "gs1", 5)
+        .select("source", "doc_id", "sample_rank")
+        .orderBy("source", "doc_id")
+    },
       """SELECT source, doc_id, sample_rank FROM (
            SELECT source, doc_id,
              row_number() OVER (PARTITION BY source
                ORDER BY md5(concat('gs1', '|', cast(doc_id AS VARCHAR))),
                         doc_id) AS sample_rank
            FROM documents)
-         WHERE sample_rank <= 5 ORDER BY source, doc_id""",
-    "q_sample_weighted" ->
+         WHERE sample_rank <= 5 ORDER BY source, doc_id"""),
+    // Scale — weighted deterministic sample: keep probability ∝ doc length
+    // (longer docs sampled at a higher rate — a training-mix lever).
+    QueryDef("q_sample_weighted", (s, dir) => {
+      t(s, dir, "documents")
+        .filter(Sampling.keepWeighted(col("doc_id"), "w1",
+          col("n_chars") * 50))
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .orderBy("lang")
+    },
       """SELECT lang, count(*) AS n_docs,
          cast(sum(n_chars) AS bigint) AS sum_chars FROM documents
          WHERE substring(md5(concat('w1', '|', cast(doc_id AS VARCHAR))), 1, 4)
                < lpad(lower(to_hex(least(n_chars * 50, 65535))), 4, '0')
-         GROUP BY lang ORDER BY lang""",
-    "q_sample_split" ->
+         GROUP BY lang ORDER BY lang"""),
+    // Scale — stable train/val/test assignment (~80/10/10) by hash range;
+    // every doc lands in exactly one split, forever.
+    QueryDef("q_sample_split", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("lang"),
+          Sampling.splitLabel(col("doc_id"), "corpusv1").as("split"))
+        .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
+        .orderBy("lang", "split")
+    },
       """SELECT lang, split, count(*) AS n_docs FROM (
            SELECT lang,
              CASE WHEN h < 'cccc' THEN 'train'
@@ -5191,8 +1686,18 @@ object Pipeline {
                    substring(md5(concat('corpusv1', '|',
                      cast(doc_id AS VARCHAR))), 1, 4) AS h
                  FROM documents))
-         GROUP BY lang, split ORDER BY lang, split""",
-    "q_repeat_upsample" ->
+         GROUP BY lang, split ORDER BY lang, split"""),
+    // Scale — deterministic repeat-upsampling (the "epochs per source"
+    // mix lever): en docs repeat 2.5× in expectation (exactly 2 or 3,
+    // hash-gated), others 1.25× — the Wikipedia-gets-4-epochs recipe
+    // primitive, reproducible forever. Scan-local explode, no shuffle.
+    QueryDef("q_repeat_upsample", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Sampling.repeatUpsample(docs, "doc_id", "rep1",
+        when(col("lang") === "en", lit(2.5)).otherwise(lit(1.25)))
+        .select(col("doc_id"), col("lang"), col("copy"))
+        .orderBy("doc_id", "copy")
+    },
       """WITH w AS (
            SELECT doc_id, lang,
              CASE WHEN lang = 'en' THEN 2.5 ELSE 1.25 END AS wt
@@ -5208,8 +1713,19 @@ object Pipeline {
            FROM w)
          SELECT doc_id, lang, unnest(generate_series(1, n)) AS copy
          FROM g WHERE n >= 1
-         ORDER BY doc_id, copy""",
-    "q_shuffle_shards" ->
+         ORDER BY doc_id, copy"""),
+    // Scale — deterministic global shuffle into training shards: shard =
+    // portable hash mod 8, position = in-shard rank of the full hash.
+    // Shards-in-order ∘ positions-in-order is a reproducible pseudo-
+    // random permutation of the corpus, built from ONE hash shuffle + a
+    // per-shard sort — never a global orderBy (see
+    // Sampling.shuffleShards). The full (doc_id, shard, pos) mapping is
+    // emitted so the oracle hash-checks the exact permutation.
+    QueryDef("q_shuffle_shards", (s, dir) => {
+      Sampling.shuffleShards(t(s, dir, "documents"), "doc_id", "shuf1", 8)
+        .select(col("doc_id"), col("shard"), col("pos"))
+        .orderBy("shard", "pos")
+    },
       """WITH h AS (
            SELECT doc_id,
              md5(concat('shuf1', '|', cast(doc_id AS VARCHAR))) AS hh
@@ -5220,8 +1736,25 @@ object Pipeline {
            FROM h)
          SELECT doc_id, shard,
            row_number() OVER (PARTITION BY shard ORDER BY hh, doc_id) AS pos
-         FROM s ORDER BY shard, pos""",
-    "q_seq_pack" ->
+         FROM s ORDER BY shard, pos"""),
+    // L5h — length-bucketed sequence packing (Sampling.packSequences):
+    // the no-split training-batch packer — token counts round up to
+    // power-of-two buckets, so each (shard, bucket) packs exactly
+    // capacity/bucket docs per sequence via ONE row_number window;
+    // exact padding accounting, deterministic portable-hash shards,
+    // no sequential first-fit fold. Per-sequence report with padding.
+    QueryDef("q_seq_pack", (s, dir) => {
+      val docs = t(s, dir, "documents").filter(col("text").isNotNull)
+        .select(col("doc_id"),
+          TA.tokenCountWs(col("text")).as("n_tokens"))
+      graft.operators.Sampling.packSequences(docs, "doc_id", "n_tokens",
+          "pack1", nShards = 4, capacity = 128)
+        .groupBy("shard", "bucket", "seq_id")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("used_tokens"))
+        .withColumn("padding", lit(128L) - col("used_tokens"))
+        .orderBy("shard", "bucket", "seq_id")
+    },
       """WITH d AS (
            SELECT doc_id,
              len(string_split_regex(text, '\s+')) AS n_tokens,
@@ -5245,12 +1778,47 @@ object Pipeline {
            cast(sum(n_tokens) AS BIGINT) AS used_tokens,
            cast(128 - sum(n_tokens) AS BIGINT) AS padding
          FROM r GROUP BY shard, bucket, (rn * bucket) // 128
-         ORDER BY shard, bucket, seq_id""",
+         ORDER BY shard, bucket, seq_id"""),
+    // L5h — the packing-capacity TUNING CURVE (the q_minhash_band_curve
+    // convention): q_seq_pack reports padding at ONE capacity; this
+    // sweeps capacity ∈ {64, 128, 256} over the SAME token counts and
+    // reports BOTH sides of the trade per capacity — sequences emitted,
+    // padding waste (absolute and as a fraction of the token budget),
+    // and the docs too long to pack at all (counted, never silently
+    // dropped — the q_prepare_e2e funnel rule). Larger capacity admits
+    // more docs (n_oversize falls) but rounds lengths into coarser
+    // power-of-two buckets (pad_frac typically rises): the curve is
+    // what picks the batch shape. One persisted token-count scan feeds
+    // all three sweeps; each is the q_seq_pack plan at its capacity.
+    QueryDef("q_pack_curve", (s, dir) => {
+      val docs = t(s, dir, "documents").filter(col("text").isNotNull)
+        .select(col("doc_id"),
+          TA.tokenCountWs(col("text")).as("n_tokens"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Seq(64, 128, 256).map { cap =>
+        val seqs = graft.operators.Sampling.packSequences(docs, "doc_id",
+            "n_tokens", "pack1", nShards = 4, capacity = cap)
+          .groupBy("shard", "bucket", "seq_id")
+          .agg(sum(col("n_tokens")).as("used"))
+          .agg(count(lit(1)).as("n_seqs"),
+            coalesce(sum(col("used")), lit(0L)).as("used_tokens"),
+            coalesce(sum(lit(cap.toLong) - col("used")), lit(0L))
+              .as("padding_tokens"))
+        val over = docs.filter(col("n_tokens") > cap || col("n_tokens") < 1)
+          .agg(count(lit(1)).as("n_oversize"))
+        seqs.crossJoin(over)
+          .select(lit(cap.toLong).as("capacity"), col("n_seqs"),
+            col("used_tokens"), col("padding_tokens"), col("n_oversize"),
+            when(col("n_seqs") > 0,
+              col("padding_tokens").cast("double") /
+                (col("n_seqs") * cap).cast("double"))
+              .otherwise(lit(0.0)).as("pad_frac"))
+      }.reduce(_ union _).orderBy("capacity")
+    },
     // Packing-capacity curve: the q_seq_pack chain at three capacities
     // over ONE materialized token-count scan, each reduced to its
     // one-row trade summary; the pad fraction is one fixed-order double
     // division of exact integers.
-    "q_pack_curve" ->
       s"""WITH d AS MATERIALIZED (
            SELECT doc_id,
              len(string_split_regex(text, '\\s+')) AS n_tokens,
@@ -5265,8 +1833,37 @@ object Pipeline {
              ELSE 0.0 END AS pad_frac
          FROM (SELECT * FROM c64 UNION ALL SELECT * FROM c128
                UNION ALL SELECT * FROM c256)
-         ORDER BY capacity""",
-    "q_interleave" ->
+         ORDER BY capacity"""),
+    // L5c — deterministic source-INTERLEAVED epoch ordering: docs rank
+    // within their source by the portable md5 permutation, then take the
+    // round-robin global position (rank−1)·n_src + src_idx — the
+    // stratified complement to q_shuffle_shards' global permutation:
+    // every n_src consecutive positions touch each source at most once,
+    // so a training run sees a stable source mix at ANY batch size
+    // (unequal sources leave gaps once exhausted; positions stay unique).
+    // One window per source partition (never global); the source index
+    // comes from a source-count-sized dim that broadcasts back; n_src
+    // arrives via a one-row broadcast cross join.
+    QueryDef("q_interleave", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents")
+      val srcs = docs.select(col("source")).distinct()
+      // global window DELIBERATE: srcs is the distinct source set
+      // (source-count-sized, single digits on any corpus cut)
+      val dim = srcs.withColumn("src_idx",
+        row_number().over(Window.orderBy("source")).cast("long") - 1)
+      val n = srcs.agg(count(lit(1)).as("n_src"))
+      val wIn = Window.partitionBy("source").orderBy(col("__h"), col("doc_id"))
+      docs.select(col("doc_id"), col("source"))
+        .withColumn("__h", Sampling.hashHexFull(col("doc_id"), "il1"))
+        .withColumn("src_rank", row_number().over(wIn).cast("long"))
+        .join(broadcast(dim), "source")
+        .crossJoin(broadcast(n))
+        .withColumn("pos",
+          (col("src_rank") - 1) * col("n_src") + col("src_idx"))
+        .select("doc_id", "source", "src_rank", "pos")
+        .orderBy("pos")
+    },
       """WITH d AS (
            SELECT doc_id, source,
              md5(concat('il1', '|', cast(doc_id AS VARCHAR))) AS h
@@ -5284,10 +1881,35 @@ object Pipeline {
          SELECT r.doc_id, r.source, r.src_rank::bigint AS src_rank,
            ((r.src_rank - 1) * n.n_src + dim.src_idx)::bigint AS pos
          FROM r JOIN dim USING (source) CROSS JOIN n
-         ORDER BY pos""",
+         ORDER BY pos"""),
+    // L5d — fixed-length training-WINDOW emission with document carryover:
+    // the step after q_pack_sequences' whole-doc binning — pretraining
+    // actually slices the concatenated token stream into fixed L-token
+    // windows, and a document crossing a boundary CONTINUES in the next
+    // window. Each source's stream is laid out in doc_id order (one
+    // per-source window pass, never global); a doc at [st, st+n) emits
+    // one row per overlapped window via a bounded sequence explode
+    // (⌈n/L⌉+1 rows max), with its offset and token count inside each.
+    // Pure integer arithmetic → engine-portable with no rounding at all.
+    QueryDef("q_token_windows", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents").filter(col("text").isNotNull)
+        .select(col("source"), col("doc_id"),
+          TA.tokenCountWs(col("text")).as("n_tok"))
+      val w = Window.partitionBy("source").orderBy("doc_id")
+      docs.withColumn("st", sum(col("n_tok")).over(w) - col("n_tok"))
+        .filter(col("n_tok") > 0)
+        .withColumn("window_id", explode(sequence(
+          expr("st div 128"), expr("(st + n_tok - 1) div 128"))))
+        .select(col("source"), col("window_id"), col("doc_id"),
+          (greatest(col("st"), col("window_id") * 128)
+            - col("window_id") * 128).as("w_start"),
+          (least(col("st") + col("n_tok"), (col("window_id") + 1) * 128)
+            - greatest(col("st"), col("window_id") * 128)).as("n_in_window"))
+        .orderBy("source", "window_id", "doc_id")
+    },
     // Token counts via the same \s+ splitter; window ids by integer
     // division (// in DuckDB, div in Spark — both floor on non-negatives).
-    "q_token_windows" ->
       """WITH d AS (
            SELECT source, doc_id,
              len(string_split_regex(text, '\s+'))::bigint AS n_tok
@@ -5307,8 +1929,36 @@ object Pipeline {
              AS w_start,
            (least(st + n_tok, (window_id + 1) * 128)
              - greatest(st, window_id * 128))::bigint AS n_in_window
-         FROM e ORDER BY source, window_id, doc_id""",
-    "q_train_mix" ->
+         FROM e ORDER BY source, window_id, doc_id"""),
+    // End-to-end training-mix pipeline: quality-filter → exact dedup by
+    // canonical fingerprint (min-doc_id survivor) → per-language hash
+    // downsample (keep 1/2 of dominant 'en', 3/4 of the rest) → token
+    // budget per language. Every stage is a deterministic, shuffle-
+    // bounded operator — the whole mix is re-derivable at 100 TB.
+    QueryDef("q_train_mix", (s, dir) => {
+      // Each regex over `text` is materialized exactly once, then quality
+      // derives from the columns — same values as TA.qualityScore, without
+      // re-splitting the text per sub-expression.
+      val base = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"),
+          TA.tokenCountWs(col("text")).as("n_tokens"),
+          length(regexp_replace(col("text"), "\\s+", "")).cast("double")
+            .as("n_nonspace"),
+          Dedup.fingerprint(col("text")).as("fp"))
+      val scored = base.select(col("doc_id"), col("lang"), col("n_tokens"),
+        (when(col("n_tokens").between(20, 10000), 0.5).otherwise(0.0) +
+          when((col("n_nonspace") / col("n_tokens")).between(3.0, 8.0), 0.5)
+            .otherwise(0.0)).as("quality"),
+        col("fp"))
+      val deduped = Dedup.exactByKey(
+        scored.filter(col("quality") >= 1.0), Seq("fp"), Seq(col("doc_id")))
+      // stratified threshold: downsample the dominant language harder
+      val mixed = deduped.filter(Sampling.hashHex4(col("doc_id"), "mixv1") <
+        when(col("lang") === "en", lit("8000")).otherwise(lit("c000")))
+      mixed.groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
+        .orderBy("lang")
+    },
       """WITH scored AS (
            SELECT doc_id, lang,
              len(string_split_regex(text, '\s+')) AS n_tokens,
@@ -5330,56 +1980,46 @@ object Pipeline {
                  < CASE WHEN lang = 'en' THEN '8000' ELSE 'c000' END)
          SELECT lang, count(*) AS n_docs,
            cast(sum(n_tokens) AS bigint) AS sum_tokens
-         FROM mixed GROUP BY lang ORDER BY lang""",
-    "q_doc_rollhash" ->
-      """SELECT doc_id, list_reduce(
-           list_prepend(cast(0 AS bigint), list_transform(string_split(text, ''), c -> cast(ascii(c) AS bigint))),
-           (acc, c) -> (acc * 31 + c) % 1000000007) AS rollhash
-         FROM documents ORDER BY doc_id""",
-    "q_drift_tvd" ->
-      """WITH cells AS (
-           SELECT source, least(cast(floor(n_chars / 64) AS BIGINT), 8) AS bin,
-             cast(count(*) AS BIGINT) AS c
-           FROM documents GROUP BY 1, 2),
-         g AS (SELECT source, cast(sum(c) AS BIGINT) AS ns FROM cells GROUP BY 1),
-         b AS (SELECT bin, cast(sum(c) AS BIGINT) AS nb FROM cells GROUP BY 1),
-         t AS (SELECT cast(sum(nb) AS BIGINT) AS N FROM b)
-         SELECT g.source,
-           cast(sum(abs(coalesce(cells.c, 0) * t.N - b.nb * g.ns)) AS DOUBLE)
-             / (2 * t.N * g.ns) AS tvd
-         FROM g CROSS JOIN b CROSS JOIN t
-         LEFT JOIN cells ON cells.source = g.source AND cells.bin = b.bin
-         GROUP BY g.source, g.ns, t.N
-         ORDER BY g.source""",
-    "q_quality_report" ->
-      """WITH d AS (
-           SELECT source, lang, n_chars,
-             cast(len(string_split_regex(text, '\s+')) AS bigint) AS tok,
-             (regexp_matches(text,
-                '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')
-              OR regexp_matches(text, '\d{3}[-. ]\d{3}[-. ]\d{4}')) AS pii
-           FROM documents)
-         SELECT source, cast(count(*) AS bigint) AS n_docs,
-           cast(sum(tok) AS bigint) AS n_tokens,
-           cast(sum(tok) AS double) / count(*) AS avg_tokens,
-           cast(count(DISTINCT lang) AS bigint) AS n_langs,
-           cast(sum(CASE WHEN tok < 20 THEN 1 ELSE 0 END) AS bigint)
-             AS n_short,
-           cast(sum(CASE WHEN pii THEN 1 ELSE 0 END) AS bigint) AS n_pii,
-           min(n_chars) AS min_chars, max(n_chars) AS max_chars
-         FROM d GROUP BY source ORDER BY source""",
-    "q_pii_scan" ->
+         FROM mixed GROUP BY lang ORDER BY lang"""),
+    QueryDef("q_pii_scan", (s, dir) => {
+      t(s, dir, "documents")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(TA.hasEmail(col("text")), 1L).otherwise(0L)).as("n_email"),
+          sum(when(TA.hasPhone(col("text")), 1L).otherwise(0L)).as("n_phone"))
+        .orderBy("source")
+    },
       """SELECT source, count(*) AS n_docs,
          cast(sum(CASE WHEN regexp_matches(text,
            '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}') THEN 1 ELSE 0 END)
            AS bigint) AS n_email,
          cast(sum(CASE WHEN regexp_matches(text,
            '\d{3}[-. ]\d{3}[-. ]\d{4}') THEN 1 ELSE 0 END) AS bigint) AS n_phone
-         FROM documents GROUP BY source ORDER BY source""",
+         FROM documents GROUP BY source ORDER BY source"""),
+    // L4 — in-text PII REDACTION (the transform on top of q_pii_scan's
+    // detector): the fixture corpus carries no real PII, so the query
+    // first seeds each document with deterministic synthetic PII derived
+    // from its own key — that makes the scrub provably fire (the oracle
+    // checks the replaced text span-for-span, not a no-op passthrough).
+    // Scan-local codegen'd projection, zero shuffles.
+    QueryDef("q_pii_redact", (s, dir) => {
+      val seeded = t(s, dir, "documents").select(col("doc_id"),
+        concat(col("text"),
+          lit(" contact user"), col("doc_id").cast("string"),
+          lit("@mail.example.com or "),
+          format_string("555-%03d-%04d",
+            col("doc_id") % 1000, col("doc_id") % 10000)).as("text"))
+      seeded.select(col("doc_id"),
+          size(regexp_extract_all(col("text"), lit(TA.emailPattern), lit(0)))
+            .cast("long").as("n_email"),
+          size(regexp_extract_all(col("text"), lit(TA.phonePattern), lit(0)))
+            .cast("long").as("n_phone"),
+          TA.redactPii(col("text")).as("redacted"))
+        .orderBy("doc_id")
+    },
     // Patterns interpolated from TextAnalysis so engine and oracle cannot
     // desynchronize (both dialects read them identically: ASCII classes,
     // no engine-specific syntax).
-    "q_pii_redact" ->
       s"""WITH seeded AS (
            SELECT doc_id, text || ' contact user' || doc_id::varchar ||
              '@mail.example.com or ' ||
@@ -5393,8 +2033,28 @@ object Pipeline {
            regexp_replace(regexp_replace(text,
              '${TA.emailPattern}', '[EMAIL]', 'g'),
              '${TA.phonePattern}', '[PHONE]', 'g') AS redacted
-         FROM seeded ORDER BY doc_id""",
-    "q_url_stats" ->
+         FROM seeded ORDER BY doc_id"""),
+    // L1 — URL extraction + canonical host stats (the C4/RefinedWeb
+    // domain-filter primitive): pull every URL out of the text, canonicalize
+    // the host (lowercase, strip a leading www.), and count docs/urls per
+    // domain — the table a domain allow/deny policy filters against. The
+    // fixture text carries no URLs, so the query seeds two deterministic
+    // ones per doc (a sharded CDN host exercising the case-fold and a
+    // www. host exercising the strip) before extracting.
+    QueryDef("q_url_stats", (s, dir) => {
+      val seeded = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("see https://CDN"), (col("doc_id") % 7).cast("string"),
+          lit(".Example.org/p/"), col("doc_id").cast("string"),
+          lit("?ref=x and http://www.example.com/about "),
+          col("text")).as("text"))
+      seeded
+        .select(col("doc_id"), explode(TA.extractUrls(col("text"))).as("url"))
+        .select(col("doc_id"), TA.canonicalHost(col("url")).as("host"))
+        .groupBy("host")
+        .agg(countDistinct(col("doc_id")).as("n_docs"),
+          count(lit(1)).as("n_urls"))
+        .orderBy("host")
+    },
       """WITH seeded AS (
            SELECT doc_id, 'see https://CDN' || (doc_id % 7)::varchar ||
              '.Example.org/p/' || doc_id::varchar ||
@@ -5410,12 +2070,36 @@ object Pipeline {
              '^www\.', '') AS host
            FROM u)
          SELECT host, count(DISTINCT doc_id) AS n_docs, count(*) AS n_urls
-         FROM h GROUP BY host ORDER BY host""",
+         FROM h GROUP BY host ORDER BY host"""),
+    // L1 — HTML → text extraction (the stage every web corpus starts
+    // from; C4/RefinedWeb §"text extraction"). The fixture text carries no
+    // markup, so the query first wraps each document in a deterministic
+    // HTML shell — script/style elements with bodies (the script body
+    // contains a raw `<` so the lazy close-tag match is actually
+    // exercised), attributes, entities incl. the &amp;lt; double-escape
+    // case — then strips it back to text. Five fused regexp/replace
+    // passes, scan-local, zero shuffles; the pattern and entity constants
+    // are shared verbatim with the oracle SQL.
+    QueryDef("q_strip_html", (s, dir) => {
+      val seeded = t(s, dir, "documents").select(col("doc_id"),
+        concat(
+          lit("<html><head><title>D"), col("doc_id").cast("string"),
+          lit("</title><style type=\"text/css\">p { color: red; }</style>"),
+          lit("</head><body><h1 class=\"hd\">Doc &#39;"),
+          col("doc_id").cast("string"),
+          lit("&#39; &amp;lt;still escaped&amp;gt;</h1>\n<p>"), col("text"),
+          lit(" &amp; more &lt;tags&gt;&nbsp;end.</p>"),
+          lit("<script>var x = 1; if (x < 2) { x = 3; }</script>"),
+          lit("</body></html>")).as("html"))
+      seeded
+        .select(col("doc_id"), TA.stripHtml(col("html")).as("text"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .orderBy("doc_id")
+    },
     // Patterns and the entity-decode chain interpolated from TextAnalysis
     // (scriptPattern/stylePattern/tagPattern/htmlEntities) — both dialects
     // read the inline (?is) flags identically, and RE2's missing
     // backreferences are exactly why the engine uses two element patterns.
-    "q_strip_html" ->
       s"""WITH seeded AS (
            SELECT doc_id, '<html><head><title>D' || doc_id::varchar ||
              '</title><style type="text/css">p { color: red; }</style>' ||
@@ -5439,8 +2123,36 @@ object Pipeline {
              '^\\s+|\\s+$$', '', 'g') AS text
            FROM seeded)
          SELECT doc_id, text, length(text)::bigint AS n_chars
-         FROM stripped ORDER BY doc_id""",
-    "q_line_filter" ->
+         FROM stripped ORDER BY doc_id"""),
+    // L1 — C4-style line-level filtering (Raffel et al. 2020 §2.2): keep
+    // only lines ending in terminal punctuation with ≥5 words and no
+    // javascript/cookie boilerplate phrase, reassemble survivors in order.
+    // The fixture text is a single punctuation-free line, so the query
+    // seeds a deterministic five-line page per doc: a first sentence whose
+    // word count varies by doc_id (so keep counts differ across rows), a
+    // banned-phrase line, a punctuation-less fragment, a too-short line,
+    // and a long closing sentence. One scan-local higher-order filter over
+    // the split array — zero shuffles, zero explodes.
+    QueryDef("q_line_filter", (s, dir) => {
+      // concat, not concat_ws: `||` in the oracle propagates NULL text and
+      // concat matches that; concat_ws would silently skip the null slot.
+      val seeded = t(s, dir, "documents").select(col("doc_id"),
+        concat(
+          lit("Document "), col("doc_id").cast("string"),
+          when(col("doc_id") % 3 === 0, lit(" short."))
+            .otherwise(lit(" begins with a plain first sentence.")),
+          lit("\nPlease enable JavaScript and accept our cookie policy to continue.\n"),
+          substring(col("text"), 1, 40),
+          lit("\nToo short.\n"),
+          col("text"), lit(" and that is the end.")).as("text"))
+      val lines = split(col("text"), "\n")
+      seeded.select(col("doc_id"),
+          size(lines).cast("long").as("n_lines"),
+          size(filter(lines, l => Curation.keepLine(l, LineFilterMinWords)))
+            .cast("long").as("n_kept"),
+          Curation.filterLines(col("text"), LineFilterMinWords).as("clean"))
+        .orderBy("doc_id")
+    },
       s"""WITH seeded AS (
            SELECT doc_id,
              'Document ' || doc_id::varchar ||
@@ -5459,11 +2171,31 @@ object Pipeline {
            array_to_string(
              list_filter(ls, l -> ${KeepLineSql(LineFilterMinWords)}), chr(10))
              AS clean
-         FROM f ORDER BY doc_id""",
+         FROM f ORDER BY doc_id"""),
+    // L1 — Gopher document-shape rules (Rae et al. 2021, Table A1): the
+    // document-level complement to q_line_filter (C4 line rules) and
+    // q_rep_ratio (Gopher's repetition section). The fixture text is one
+    // clean line, so doc_id mod-6 classes seed each failure mode — hash
+    // spam, ellipsis spam, bullet walls, ellipsis-ended lines,
+    // numeric-word floods — and every rule provably fires on some docs.
+    // One codegen'd projection, integer cross-multiplied thresholds.
+    QueryDef("q_gopher_rules", (s, dir) => {
+      val seeded = t(s, dir, "documents").select(col("doc_id"), concat(
+        col("text"),
+        when(col("doc_id") % 6 === 0, concat(lit(" "), repeat(lit("# "), 8)))
+          .when(col("doc_id") % 6 === 1,
+            concat(lit(" "), repeat(lit("... "), 8)))
+          .when(col("doc_id") % 6 === 2, repeat(lit("\n- bullet item"), 12))
+          .when(col("doc_id") % 6 === 3,
+            repeat(lit("\ntrailing thought..."), 9))
+          .when(col("doc_id") % 6 === 4,
+            concat(lit(" "), repeat(lit("12345 "), 60)))
+          .otherwise(lit(""))).as("text"))
+      Curation.gopherFlags(seeded, "doc_id", "text").orderBy("doc_id")
+    },
     // Gopher rules re-run relationally: the same mod-6 seeding, the same
     // integer cross-multiplied thresholds, the stop-word set interpolated
     // from the shared constant so the two sides cannot desync.
-    "q_gopher_rules" ->
       s"""WITH seeded AS (
            SELECT doc_id, text ||
              CASE doc_id % 6
@@ -5505,54 +2237,2268 @@ object Pipeline {
              AND wchars <= nw * 10 AND nhash * 10 <= nw AND nell * 10 <= nw
              AND nbullet * 10 <= nl * 9 AND nellend * 10 <= nl * 3
              AND nalpha * 5 >= nw * 4 AND shits >= 2 AS keep
-         FROM m ORDER BY doc_id""",
-    "q_inverted_index" ->
-      s"""WITH toks AS (
-           SELECT doc_id, unnest($WsSplitSql) AS term
-           FROM documents WHERE text IS NOT NULL),
-         tf AS (
-           SELECT term, doc_id, count(*) AS tf FROM toks
-           WHERE length(term) > 0 GROUP BY term, doc_id),
-         stats AS (
-           SELECT term, count(*)::bigint AS df, sum(tf)::bigint AS total_tf
-           FROM tf GROUP BY term),
-         ranked AS (
-           SELECT term, doc_id, tf,
-             row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn
-           FROM tf)
-         SELECT r.term, s.df, s.total_tf, r.doc_id,
-           r.tf::bigint AS tf, r.rn::bigint AS rn
-         FROM ranked r JOIN stats s USING (term)
-         WHERE r.rn <= 3 ORDER BY r.term, r.doc_id""",
+         FROM m ORDER BY doc_id"""),
+    // L1 — inverted-index build (term → bounded postings + df/total_tf):
+    // the retrieval-side structure BM25 serves from, materialized as a
+    // table. One tokenize explode feeds ONE (term, doc) hash aggregate
+    // (map-side combine; persisted — it feeds both the term-stats
+    // aggregate and the postings window, and exchange reuse cannot dedupe
+    // the pruned branches); term-level df/total_tf is a second aggregate
+    // off that (vocabulary-sized, broadcast back); postings are capped at
+    // 3 docs per term via a per-term window over the ALREADY-AGGREGATED
+    // (term, doc) rows — the window's partition is at most corpus-doc
+    // sized per term and never sees raw token occurrences.
+    QueryDef("q_inverted_index", (s, dir) => {
+      TA.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
+        maxPostings = 3).orderBy("term", "doc_id")
+    },
+      InvertedIndexSql),
+    // L1/Scale — INCREMENTAL index maintenance (TextAnalysis.indexDelta,
+    // the retrieval twin of q_merge_counts): the corpus splits at the
+    // doc-id midpoint, the old half is indexed, the new half folds in
+    // WITHOUT re-tokenizing the old corpus — and the oracle is a FULL
+    // REBUILD over everything, so the merge ≡ rebuild equivalence is the
+    // thing being checked, not just the merge's own arithmetic.
+    QueryDef("q_index_delta", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val old = TA.invertedIndex(docs.filter(col("doc_id") < 250),
+        "doc_id", "text", maxPostings = 3)
+      TA.indexDelta(old, docs.filter(col("doc_id") >= 250),
+        "doc_id", "text", maxPostings = 3)
+        .orderBy("term", "doc_id")
+    },
     // Deliberately the FULL-REBUILD query over all documents: the engine
     // side merges an old index with the delta batch, so a green row here
     // proves indexDelta(index(old), new) ≡ index(old ∪ new) bit-for-bit.
-    "q_index_delta" ->
-      s"""WITH toks AS (
-           SELECT doc_id, unnest($WsSplitSql) AS term
-           FROM documents WHERE text IS NOT NULL),
-         tf AS (
-           SELECT term, doc_id, count(*) AS tf FROM toks
-           WHERE length(term) > 0 GROUP BY term, doc_id),
-         stats AS (
-           SELECT term, count(*)::bigint AS df, sum(tf)::bigint AS total_tf
-           FROM tf GROUP BY term),
-         ranked AS (
-           SELECT term, doc_id, tf,
-             row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn
-           FROM tf)
-         SELECT r.term, s.df, s.total_tf, r.doc_id,
-           r.tf::bigint AS tf, r.rn::bigint AS rn
-         FROM ranked r JOIN stats s USING (term)
-         WHERE r.rn <= 3 ORDER BY r.term, r.doc_id""",
-    "q_dedup_exact" ->
+      InvertedIndexSql),
+    // A6 — exact dedup by key with deterministic survivor (window-rank; the
+    // dropDuplicates equivalent with a defined choice).
+    QueryDef("q_dedup_exact", (s, dir) => {
+      // (l_orderkey, l_linenumber) is NOT unique in the fixture data — the
+      // survivor order must cover every output column to be deterministic.
+      Dedup.exactByKey(t(s, dir, "lineitem"), Seq("l_orderkey"),
+        Seq(col("l_linenumber"), col("l_partkey"), col("l_quantity")))
+        .select("l_orderkey", "l_partkey", "l_quantity")
+        .orderBy("l_orderkey")
+    },
       """SELECT l_orderkey, l_partkey, l_quantity FROM (
            SELECT l_orderkey, l_partkey, l_quantity,
              row_number() OVER (PARTITION BY l_orderkey
                ORDER BY l_linenumber, l_partkey, l_quantity) AS rn
            FROM lineitem)
-         WHERE rn = 1 ORDER BY l_orderkey""",
-    "q_sim_exact" ->
+         WHERE rn = 1 ORDER BY l_orderkey"""),
+    // A7 — MinHash-banded fuzzy dedup; verified Jaccard pairs. Runs the
+    // portable md5 hash family so the entire banded pipeline — shingle
+    // hash, 16 minhash families, band signatures, candidate join, Jaccard
+    // verify — is oracle-checked end-to-end. The operator's scale default
+    // stays xxhash64 (same plan shape, ~3x cheaper hashing; DedupSpec
+    // asserts both families recover the planted near-dups).
+    QueryDef("q_dedup_fuzzy", (s, dir) => {
+      Dedup.nearDuplicatesPortable(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("a", "b")
+    },
+      s"""WITH $MinHashSigCtes,
+         ${minHashBandsCte("bands", 4)},
+         cand AS (
+           SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+           FROM bands x JOIN bands y ON x.b = y.b AND x.band_sig = y.band_sig
+           WHERE x.doc_id < y.doc_id),
+         jac AS (
+           SELECT c.a, c.b,
+             cast(len(list_intersect(ha.hv, hb.hv)) AS double) /
+               len(list_distinct(ha.hv || hb.hv)) AS jaccard
+           FROM cand c JOIN h ha ON ha.doc_id = c.a
+                       JOIN h hb ON hb.doc_id = c.b)
+         SELECT a, b, round(jaccard, 6) AS jaccard FROM jac
+         WHERE jaccard >= 0.5 ORDER BY a, b"""),
+    // A7 — incremental dedup: the day's delta (doc_id % 10 == 0) bands
+    // against the corpus's signatures only — the corpus is never
+    // self-paired, so dedup cost stays O(|delta| + collisions) as the
+    // corpus grows to 100 TB. Same portable md5 MinHash family as
+    // q_dedup_fuzzy → fully oracle-checked.
+    QueryDef("q_dedup_delta", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Dedup.nearDuplicatesDeltaPortable(
+        docs.filter(col("doc_id") % 10 =!= 0),
+        docs.filter(col("doc_id") % 10 === 0),
+        "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4,
+        threshold = 0.5)
+        .select(col("delta_id"), col("corpus_id"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("delta_id", "corpus_id")
+    },
+    // Same portable MinHash CTE as q_dedup_fuzzy; candidates pair a delta
+    // doc with a corpus doc only (never corpus × corpus).
+      s"""WITH $MinHashSigCtes,
+         ${minHashBandsCte("bands", 4)},
+         cand AS (
+           SELECT DISTINCT d.doc_id AS delta_id, c.doc_id AS corpus_id
+           FROM bands d JOIN bands c ON d.b = c.b AND d.band_sig = c.band_sig
+           WHERE d.doc_id % 10 = 0 AND c.doc_id % 10 <> 0),
+         jac AS (
+           SELECT cd.delta_id, cd.corpus_id,
+             cast(len(list_intersect(hd.hv, hc.hv)) AS double) /
+               len(list_distinct(hd.hv || hc.hv)) AS jaccard
+           FROM cand cd JOIN h hd ON hd.doc_id = cd.delta_id
+                        JOIN h hc ON hc.doc_id = cd.corpus_id)
+         SELECT delta_id, corpus_id, round(jaccard, 6) AS jaccard FROM jac
+         WHERE jaccard >= 0.5 ORDER BY delta_id, corpus_id"""),
+    // A7 — banded-LSH recall evaluation (the dedup twin of q_pq_recall):
+    // for the doc_id < 100 query subset, exact-Jaccard ground truth at
+    // J ≥ 0.5 via the shingle-hash inverted index (never all-pairs), then
+    // per query doc the fraction of true neighbors the 16-hash/4-band
+    // candidate generation surfaces — the measurement that sizes
+    // (numHashes, bands) before a 100 TB dedup run. Portable md5 family
+    // throughout, so truth, candidates, and recall all oracle-check.
+    QueryDef("q_minhash_recall", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Dedup.bandedRecallPortable(docs, docs.filter(col("doc_id") < 100),
+          "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4,
+          threshold = 0.5)
+        .orderBy("q_id")
+    },
+    // Same portable MinHash CTE; ground truth from the hv inverted index
+    // (hv is distinct by construction, so the per-pair match count IS the
+    // intersection and |A∪B| = |A|+|B|−|A∩B|).
+      s"""WITH $MinHashSigCtes,
+         ${minHashBandsCte("bands", 4)},
+         ${minHashTruthCtes("truth AS")},
+         ${minHashCandCte("cand", "bands")}
+         SELECT t.q_id, count(*)::bigint AS n_true,
+           sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::bigint
+             AS n_caught,
+           round(sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::double
+             / count(*), 6) AS recall
+         FROM truth t
+         LEFT JOIN cand c ON t.q_id = c.q_id AND t.c_id = c.c_id
+         GROUP BY t.q_id ORDER BY t.q_id"""),
+    // A7 — banding TUNING CURVE: q_minhash_recall swept over bands ∈
+    // {2, 4, 8} of the SAME 16 minhashes (the q_ivf_recall_curve
+    // pattern) — signatures and exact-Jaccard truth compute once, each
+    // configuration pays only its candidate self-join. The recall side
+    // of the bands trade that sizes the banding before a 100 TB run.
+    QueryDef("q_minhash_band_curve", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Dedup.bandedRecallCurvePortable(docs,
+          docs.filter(col("doc_id") < 100), "doc_id", "text",
+          shingleN = 3, numHashes = 16, bandsList = Seq(2, 4, 8),
+          threshold = 0.5)
+        .orderBy("bands", "q_id")
+    },
+    {
+      val bands = Seq(2, 4, 8)
+      val cands = bands.map(n => minHashBandsCte(s"bands$n", n) + ",\n" +
+        minHashCandCte(s"cand$n", s"bands$n"))
+      val rows = bands.map(n =>
+        s"""SELECT $n AS bands, t.q_id, count(*)::bigint AS n_true,
+           sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::bigint
+             AS n_caught,
+           round(sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::double
+             / count(*), 6) AS recall,
+           coalesce(any_value(nc.n_cand), 0)::bigint AS n_cand
+         FROM truth t
+         LEFT JOIN cand$n c ON t.q_id = c.q_id AND t.c_id = c.c_id
+         LEFT JOIN (SELECT q_id, count(*)::bigint AS n_cand
+                    FROM cand$n GROUP BY q_id) nc ON nc.q_id = t.q_id
+         GROUP BY t.q_id""")
+      s"""WITH $MinHashSigCtes,
+         ${minHashTruthCtes("truth AS MATERIALIZED")},
+         ${cands.mkString(",\n")}
+         SELECT * FROM (
+         ${rows.mkString("\n UNION ALL \n")})
+         ORDER BY bands, q_id"""
+    }),
+    // A7 — n-gram Jaccard similarity over blocked candidate pairs: docs
+    // sharing a (lang, n_chars) block compare word-3-gram shingle sets —
+    // the verify stage of fuzzy dedup, fully oracle-checkable since the
+    // shingling uses no engine-specific hashing.
+    QueryDef("q_dedup_ngram", (s, dir) => {
+      val d = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          split(col("text"), "\\s+").as("__words"))
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          Dedup.shinglesFromWords(col("__words"), 3).as("sh"))
+      val a = d.select(col("doc_id").as("a"), col("lang"), col("n_chars"),
+        col("sh").as("sh_a"))
+      val b = d.select(col("doc_id").as("b"), col("lang"), col("n_chars"),
+        col("sh").as("sh_b"))
+      a.join(b, Seq("lang", "n_chars")).filter(col("a") < col("b"))
+        .withColumn("jaccard",
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("a", "b")
+    },
+      """WITH s AS (
+           SELECT doc_id, lang, n_chars,
+             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+               i -> array_to_string(w[i:i+2], ' '))) AS sh
+           FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS w
+                 FROM documents))
+         SELECT a, b, round(jac, 6) AS jaccard FROM (
+           SELECT x.doc_id AS a, y.doc_id AS b,
+             cast(len(list_intersect(x.sh, y.sh)) AS double) /
+               (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) AS jac
+           FROM s x JOIN s y
+             ON x.lang = y.lang AND x.n_chars = y.n_chars AND x.doc_id < y.doc_id)
+         ORDER BY a, b"""),
+    // L1 — n-gram novelty: the fraction of a doc's distinct 3-grams found
+    // in NO other document — the inverse memorization-risk signal (high
+    // novelty = unique content worth keeping; low = boilerplate/duplicated
+    // phrasing). One tokenize pass, a gram-document-frequency hash
+    // aggregate, one shuffle join back; ratios are int/int divisions so
+    // both engines produce identical doubles.
+    QueryDef("q_novelty", (s, dir) => {
+      val g = Scale.spreadForCompute(
+        t(s, dir, "documents").filter(col("text").isNotNull), col("doc_id"))
+        .select(col("doc_id"), split(col("text"), "\\s+").as("__words"))
+        .select(col("doc_id"),
+          explode(Dedup.shinglesFromWords(col("__words"), 3)).as("gram"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val gramDocs = g.groupBy("gram").agg(count(lit(1)).as("nd"))
+      g.join(gramDocs, "gram")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_grams"),
+          round(sum(when(col("nd") === 1, 1L).otherwise(0L)).cast("double") /
+            count(lit(1)), 6).as("novelty"))
+        .orderBy("doc_id")
+    },
+      """WITH g AS (
+           SELECT doc_id,
+             unnest(list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+               i -> array_to_string(w[i:i+2], ' ')))) AS gram
+           FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
+                 FROM documents)),
+         d AS (SELECT gram, count(*) AS nd FROM g GROUP BY gram)
+         SELECT doc_id, count(*) AS n_grams,
+           round(cast(sum(CASE WHEN nd = 1 THEN 1 ELSE 0 END) AS double)
+             / count(*), 6) AS novelty
+         FROM g JOIN d USING (gram) GROUP BY doc_id ORDER BY doc_id"""),
+    // A7 — containment near-dups: |A∩B| / min(|A|,|B|) over shingle sets,
+    // the asymmetric measure that catches quote/subset relations (high
+    // containment, tiny Jaccard — invisible to MinHash). Candidates block
+    // on each doc's 3 smallest shingles; see Dedup.containmentPairs.
+    QueryDef("q_dedup_contain", (s, dir) => {
+      Dedup.containmentPairs(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, kBlock = 3, minCont = 0.5)
+        .orderBy("a", "b")
+    },
+      """WITH s AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+               i -> array_to_string(w[i:i+2], ' '))) AS sh
+           FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
+                 FROM documents)),
+         blk0 AS (
+           SELECT doc_id, unnest(list_sort(sh)[1:3]) AS b FROM s),
+         blk AS (SELECT * FROM blk0
+                 QUALIFY count(*) OVER (PARTITION BY b) <= 4096),
+         cand AS (
+           SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+           FROM blk x JOIN blk y ON x.b = y.b AND x.doc_id < y.doc_id)
+         SELECT a, b, round(cont, 6) AS containment FROM (
+           SELECT a, b,
+             cast(len(list_intersect(sa.sh, sb.sh)) AS double)
+               / least(len(sa.sh), len(sb.sh)) AS cont
+           FROM cand JOIN s sa ON sa.doc_id = cand.a
+                     JOIN s sb ON sb.doc_id = cand.b)
+         WHERE cont >= 0.5 ORDER BY a, b"""),
+    // A7/L1 — exact-substring duplicate SPANS (RefinedWeb modality): every
+    // maximal cross-doc duplicated word run of ≥ 8 words, located by
+    // anchored shingles + run grouping — no doc-pair join anywhere. See
+    // Dedup.duplicatedSpans.
+    QueryDef("q_dedup_substring", (s, dir) => {
+      Dedup.duplicatedSpans(t(s, dir, "documents"), "doc_id", "text", 8)
+        .select(col("doc_id"), col("span_start").cast("long").as("span_start"),
+          col("span_end").cast("long").as("span_end"), col("n_anchors"))
+        .orderBy("doc_id", "span_start")
+    },
+    // Anchored width-8 shingles; an anchor is duplicated when its shingle
+    // spans >1 distinct doc; consecutive duplicated anchors (pos − rank
+    // run grouping) fold into maximal spans covering the last anchor's
+    // full 8 words — Dedup.duplicatedSpans verbatim.
+      "WITH " + DupSpanCtes + """
+         SELECT doc_id, min(pos) AS span_start, max(pos) + 7 AS span_end,
+           count(*) AS n_anchors
+         FROM flagged GROUP BY doc_id, grp
+         ORDER BY doc_id, span_start"""),
+    // A7/L1 — the REMOVAL transform over the same spans: drop every word a
+    // cross-doc duplicated span covers, reassemble survivors in order.
+    QueryDef("q_dedup_substring_clean", (s, dir) => {
+      Dedup.removeDuplicatedSpans(t(s, dir, "documents"), "doc_id", "text", 8)
+        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
+          col("clean_text"))
+        .orderBy("doc_id")
+    },
+    // Same spans, then removal: every covered word position anti-joins
+    // out of the token list and survivors reassemble in position order.
+      "WITH " + DupSpanCtes + """,
+         spans AS (
+           SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
+           FROM flagged GROUP BY doc_id, grp),
+         covered AS (
+           SELECT DISTINCT doc_id, pos FROM (
+             SELECT doc_id, unnest(generate_series(s, e)) AS pos
+             FROM spans)),
+         toks AS (
+           SELECT doc_id, pos, word FROM (
+             SELECT doc_id, unnest(w) AS word,
+               unnest(generate_series(1, len(w))) AS pos
+             FROM words)),
+         kept AS (
+           SELECT t.doc_id, string_agg(t.word, ' ' ORDER BY t.pos)
+             AS clean_text
+           FROM toks t LEFT JOIN covered c
+             ON c.doc_id = t.doc_id AND c.pos = t.pos
+           WHERE c.pos IS NULL GROUP BY t.doc_id),
+         rem AS (
+           SELECT doc_id, count(*) AS n_removed
+           FROM covered GROUP BY doc_id)
+         SELECT wo.doc_id, cast(len(wo.w) AS BIGINT) AS n_tokens,
+           coalesce(r.n_removed, 0) AS n_removed,
+           coalesce(k.clean_text, '') AS clean_text
+         FROM words wo
+         LEFT JOIN rem r ON r.doc_id = wo.doc_id
+         LEFT JOIN kept k ON k.doc_id = wo.doc_id
+         ORDER BY wo.doc_id"""),
+    // A7/L1 — winnowed fingerprints (the MOSS local-fingerprint modality):
+    // each doc's window-min gram hashes with positions. Selection is
+    // entirely scan-local (higher-order array functions over the portable
+    // md5 gram hashes — zero shuffle before the dump); any ≥39-char shared
+    // substring is guaranteed a shared fingerprint. See Winnow.
+    QueryDef("q_winnow_fp", (s, dir) => {
+      graft.operators.Winnow.fingerprints(
+          t(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id", "pos", "fp")
+    },
+    // Winnowing re-run relationally: per-doc k-grams with the portable
+    // md5 hash, window minima via a (doc, window) x (doc, gram) range
+    // join with rightmost tie-break recovered as max(pos) among the
+    // window's min-hash grams — the same selected set the engine's
+    // scan-local array_min produces. Parameters interpolate from the
+    // Winnow constants so the two sides cannot desync.
+      WinnowSql(
+      """SELECT DISTINCT doc_id, h AS fp, pos::BIGINT AS pos FROM fp0
+         ORDER BY doc_id, pos, fp""")),
+    // A7/L1 — MOSS overlap detection over those fingerprints: pairs
+    // sharing ≥ 3, via a capped census join on the fingerprint value
+    // (boilerplate fps census-dropped at 64 docs) — never all-pairs.
+    QueryDef("q_winnow_overlap", (s, dir) => {
+      graft.operators.Winnow.overlapPairs(
+          t(s, dir, "documents"), "doc_id", "text",
+          minShared = WinnowMinShared, maxBlock = WinnowMaxBlock)
+        .orderBy("id_a", "id_b")
+    },
+      WinnowSql(
+      s"""SELECT id_a, id_b, n_shared FROM pairs
+          WHERE n_shared >= $WinnowMinShared ORDER BY id_a, id_b""")),
+    // A7/L1 — incremental winnow screening: a delta batch (doc_id >= 400)
+    // against the standing corpus — delta-fps joined onto the (reusable)
+    // corpus fingerprint index, O(delta + collisions), the
+    // nearDuplicatesDeltaPortable shape for the local-fingerprint
+    // modality. See Winnow.deltaOverlap.
+    QueryDef("q_winnow_delta", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.operators.Winnow.deltaOverlap(
+          docs.filter(col("doc_id") < WinnowDeltaSplit),
+          docs.filter(col("doc_id") >= WinnowDeltaSplit),
+          "doc_id", "text",
+          minShared = WinnowMinShared, maxBlock = WinnowMaxBlock)
+        .orderBy("delta_id", "corpus_id")
+    },
+    // Delta screening: per-doc fingerprints split by the shared doc_id
+    // threshold; census cap on the CORPUS side only, then one equi-join.
+      WinnowSql(
+      s""", cd AS (SELECT doc_id, h FROM fps WHERE doc_id < $WinnowDeltaSplit),
+          dd AS (SELECT doc_id, h FROM fps WHERE doc_id >= $WinnowDeltaSplit),
+          cen2 AS (SELECT h FROM cd GROUP BY h
+                   HAVING count(*) <= $WinnowMaxBlock),
+          p2 AS (SELECT dd.doc_id AS delta_id, cd.doc_id AS corpus_id,
+                   count(*) AS n_shared
+                 FROM dd JOIN cen2 USING (h) JOIN cd USING (h)
+                 GROUP BY 1, 2)
+          SELECT delta_id, corpus_id, n_shared FROM p2
+          WHERE n_shared >= $WinnowMinShared
+          ORDER BY delta_id, corpus_id""")),
+    // A7/L1 — winnow near-dup CLUSTERS: the overlap pairs close into
+    // components with the shared min-label CC (the q_dedup_cluster
+    // composition over the local-fingerprint modality).
+    QueryDef("q_winnow_cluster", (s, dir) => {
+      val pairs = graft.operators.Winnow.overlapPairs(
+        t(s, dir, "documents"), "doc_id", "text",
+        minShared = WinnowMinShared, maxBlock = WinnowMaxBlock)
+      Dedup.connectedComponents(
+          pairs.select(col("id_a").as("a"), col("id_b").as("b")), "a", "b")
+        .orderBy("id")
+    },
+    // Overlap pairs closed into components by the recursive-reach CTE
+    // (the q_dedup_cluster recipe).
+      WinnowSql(
+      s""", ge AS (SELECT id_a AS a, id_b AS b FROM pairs
+                   WHERE n_shared >= $WinnowMinShared),
+          ${reachCtes("ge")}
+          SELECT src AS id, least(src, min(dst)) AS comp FROM reach
+          GROUP BY src ORDER BY id""")),
+    // A7/L1 — the winnowing DENSITY claim measured: selected fingerprints
+    // per gram in ppm vs the paper's 2/(w+1) expectation (≈117,647 at
+    // w=16) — the q_minhash_recall analog for the local-fingerprint
+    // modality. Density sizes the fp index and the overlap join fan-in
+    // before a run; integer floor-div arithmetic only, one row.
+    QueryDef("q_winnow_density", (s, dir) => {
+      graft.operators.Winnow.densityReport(
+        t(s, dir, "documents"), "doc_id", "text")
+    },
+    // The density measurement off the same selection CTEs: distinct
+    // selected (h, pos) per doc over the doc's gram count, ppm floor-div.
+      WinnowSql(
+      """, fpd AS (SELECT DISTINCT doc_id, h, pos FROM fp0),
+          perdoc AS (
+            SELECT f.doc_id, count(*)::BIGINT AS nfp, max(d2.m)::BIGINT AS m
+            FROM fpd f JOIN dk d2 USING (doc_id) GROUP BY f.doc_id)
+          SELECT count(*)::BIGINT AS n_docs, sum(nfp)::BIGINT AS total_fps,
+            sum(m)::BIGINT AS total_grams,
+            ((sum(nfp) * 1000000) // sum(m))::BIGINT AS density_ppm,
+            min((nfp * 1000000) // m)::BIGINT AS min_ppm,
+            max((nfp * 1000000) // m)::BIGINT AS max_ppm
+          FROM perdoc ORDER BY n_docs""")),
+    // L1 — TF-IDF: top-3 terms per doc. tf and df are two hash aggregates
+    // off one tokenize pass; N arrives via a broadcast one-row cross join
+    // (no driver collect); ranking is a per-doc window. Ties break on the
+    // token, and identical (tf, df) pairs produce identical doubles in any
+    // IEEE engine, so the ranking is engine-portable.
+    QueryDef("q_tfidf", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents")
+      // One tokenize pass: tf has one row per (doc, token), so df is just
+      // the per-token row count. Computed as groupBy(token)+join, NOT a
+      // window over token: a window has no partial aggregation, so at
+      // corpus scale a stopword's partition holds one row per containing
+      // document and sorts corpus-sized skewed keys; the hash aggregate
+      // keeps map-side combine. tf is persisted because it feeds BOTH join
+      // sides — unpersisted, each branch would re-scan and re-tokenize the
+      // corpus (column pruning makes the branches non-identical, so
+      // exchange reuse cannot dedupe them); the same persist-the-expensive-
+      // stage move the MinHash signature pipeline makes. dfCounts is
+      // vocabulary-sized, so the join broadcasts it — the corpus side
+      // never reshuffles. N arrives via a broadcast one-row cross join
+      // (no driver collect).
+      // repartition before the tokenize: one scan partition would run the
+      // explode + map-side partial aggregation in a single task
+      val tf = Scale.spreadForCompute(docs, col("doc_id"))
+        .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dfCounts = tf.groupBy("token").agg(count(lit(1)).as("df"))
+      // explicit hint: dfCounts' STATIC size estimate derives from the
+      // un-materialized cache's child and can exceed the broadcast
+      // threshold, which would sort-merge-shuffle the corpus-sized tf side
+      val withDf = tf.join(broadcast(dfCounts), "token")
+      val n = docs.agg(count(lit(1)).as("n_docs"))
+      // ranking keys off the ROUNDED score: ln() is not correctly-rounded
+      // in IEEE 754, so raw doubles can differ by an ulp across engines and
+      // flip a top-3 boundary; at 6 decimals both engines agree.
+      val w = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("token"))
+      withDf.crossJoin(broadcast(n))
+        .withColumn("tfidf", round(
+          col("tf") * log(col("n_docs").cast("double") / col("df")), 6))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .select(col("doc_id"), col("token"), col("tf"), col("tfidf"))
+        .orderBy("doc_id", "token")
+    },
+      """WITH toks AS (
+           SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS token
+           FROM documents),
+         tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
+         dfreq AS (SELECT token, count(DISTINCT doc_id) AS df FROM toks
+                   GROUP BY 1),
+         n AS (SELECT count(*) AS n_docs FROM documents),
+         scored AS (
+           SELECT tf.doc_id, tf.token, tf.tf,
+             round(tf.tf * ln(cast(n_docs AS double) / df), 6) AS tfidf
+           FROM tf JOIN dfreq USING (token) CROSS JOIN n)
+         SELECT doc_id, token, tf, tfidf FROM (
+           SELECT *, row_number() OVER (PARTITION BY doc_id
+             ORDER BY tfidf DESC, token) AS rn FROM scored)
+         WHERE rn <= 3 ORDER BY doc_id, token"""),
+    // L1 — Gopher-style repetition rules: the fraction of a document's
+    // (non-space) characters covered by its most frequent word unigram
+    // and bigram — the "fraction of characters in most common n-gram"
+    // prefilter from the Gopher curation rules, complementing
+    // q_text_quality's distinct-gram repetitionRatio (which sees HOW MUCH
+    // repeats, not how concentrated the repetition is: a doc looping one
+    // slogan and a doc with many scattered repeats score alike there but
+    // differ sharply here). Per n: one explode → hash aggregate on
+    // (doc_id, gram) → per-doc window (partitioned by doc_id, never
+    // global). Coverage = count·len(gram chars)/len(doc chars): all-
+    // integer numerator/denominator, one rounded IEEE division, so the
+    // fractions are engine-portable. Ties break toward the
+    // lexicographically smallest gram (same rule as q_tfidf).
+    QueryDef("q_rep_topgram", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      // wc > 0 also guards the coverage division (ANSI divide-by-zero on
+      // an all-space doc); a doc with no non-space chars has no rating.
+      // persisted: BOTH n-gram branches (top1/top2) consume the tokenized
+      // frame; without it each branch re-scans and re-splits the corpus
+      val words = Scale.spreadForCompute(
+          t(s, dir, "documents").filter(col("text").isNotNull), col("doc_id"))
+        .select(col("doc_id"),
+          length(regexp_replace(col("text"), " ", "")).as("__wc"),
+          split(col("text"), " ").as("__w"))
+        .filter(col("__wc") > 0)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def top(n: Int, p: String): DataFrame = {
+        val w = Window.partitionBy("doc_id").orderBy(col("__c").desc, col("g"))
+        words.select(col("doc_id"), col("__wc"),
+            explode(Dedup.rawShinglesFromWords(col("__w"), n)).as("g"))
+          .groupBy("doc_id", "__wc", "g").agg(count(lit(1)).as("__c"))
+          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+          .select(col("doc_id"), col("g").as(s"${p}_gram"),
+            col("__c").as(s"${p}_n"),
+            round(col("__c") * length(regexp_replace(col("g"), " ", ""))
+              / col("__wc"), 6).as(s"${p}_frac"))
+      }
+      top(1, "top1").join(top(2, "top2"), "doc_id").orderBy("doc_id")
+    },
+      """WITH w AS (
+           SELECT doc_id, length(replace(text, ' ', '')) AS wc,
+             string_split(text, ' ') AS ws
+           FROM documents
+           WHERE text IS NOT NULL AND length(replace(text, ' ', '')) > 0),
+         g1 AS (
+           SELECT doc_id, wc,
+             unnest(list_transform(
+               generate_series(1, greatest(len(ws) - 1 + 1, 1)),
+               i -> array_to_string(ws[i:i], ' '))) AS g
+           FROM w),
+         g2 AS (
+           SELECT doc_id, wc,
+             unnest(list_transform(
+               generate_series(1, greatest(len(ws) - 2 + 1, 1)),
+               i -> array_to_string(ws[i:i+1], ' '))) AS g
+           FROM w),
+         t1 AS (
+           SELECT doc_id, g AS top1_gram, c AS top1_n,
+             round(c * length(replace(g, ' ', '')) / wc, 6) AS top1_frac
+           FROM (SELECT doc_id, wc, g, count(*) AS c,
+                   row_number() OVER (PARTITION BY doc_id
+                     ORDER BY count(*) DESC, g) AS rn
+                 FROM g1 GROUP BY doc_id, wc, g)
+           WHERE rn = 1),
+         t2 AS (
+           SELECT doc_id, g AS top2_gram, c AS top2_n,
+             round(c * length(replace(g, ' ', '')) / wc, 6) AS top2_frac
+           FROM (SELECT doc_id, wc, g, count(*) AS c,
+                   row_number() OVER (PARTITION BY doc_id
+                     ORDER BY count(*) DESC, g) AS rn
+                 FROM g2 GROUP BY doc_id, wc, g)
+           WHERE rn = 1)
+         SELECT t1.doc_id, top1_gram, top1_n, top1_frac,
+           top2_gram, top2_n, top2_frac
+         FROM t1 JOIN t2 ON t1.doc_id = t2.doc_id
+         ORDER BY t1.doc_id"""),
+    // L1 — BPE tokenizer training, count stage: the frequency-weighted
+    // adjacent character-pair counts over the word vocabulary — the exact
+    // quantity each merge round of byte-pair-encoding argmaxes over
+    // (operators/Bpe.scala; the iterative trainer itself is BpeSpec-pinned
+    // — its argmax+fold rounds are driver-looped, so the SQL oracle checks
+    // the distributed aggregate the loop is built from). Corpus → word
+    // frequencies (one hash aggregate — corpus size exits the problem) →
+    // explode pairs weighted by freq → top-20, ties lexicographic, plans
+    // as TakeOrderedAndProject.
+    QueryDef("q_bpe_pairs", (s, dir) => {
+      graft.operators.Bpe.pairCounts(
+        graft.operators.Bpe.vocab(t(s, dir, "documents"), "text"))
+        .orderBy(col("n").desc, col("pair")).limit(20)
+    },
+      """WITH vocab AS (
+           SELECT w, count(*) AS f FROM (
+             SELECT unnest(string_split_regex(text, '\s+')) AS w
+             FROM documents WHERE text IS NOT NULL)
+           WHERE length(w) > 0 GROUP BY w),
+         p AS (
+           SELECT f, unnest(list_transform(generate_series(1, length(w) - 1),
+             i -> w[i:i] || ' ' || w[i+1:i+1])) AS pair
+           FROM vocab WHERE length(w) >= 2)
+         SELECT pair, cast(sum(f) AS BIGINT) AS n
+         FROM p GROUP BY pair
+         ORDER BY n DESC, pair LIMIT 20"""),
+    // L1 — model-based quality gate: hashing-trick linear classifier
+    // (fastText-style serving shape — the filter class DCLM/FineWeb-Edu
+    // run after rule-based gates). Weights are a deterministic 64-bucket
+    // integer vector (j % 13 - 6) so the margin sum is exact and the
+    // whole scorer — bucket hash, margin, score, verdict — oracle-checks
+    // bit-for-bit; a trained model would swap ONLY the literal array.
+    QueryDef("q_quality_classifier", (s, dir) => {
+      graft.operators.TextAnalysis.linearClassifierScore(
+        t(s, dir, "documents"), "doc_id", "text",
+        (0 until 64).map(j => (j % 13 - 6).toLong))
+        .orderBy("doc_id")
+    },
+    // same 64-bucket j%13-6 weight vector as the engine literal; the
+    // bucket is the portable md5 hash mod 64
+      """WITH toks AS (
+           SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
+           FROM documents WHERE text IS NOT NULL),
+         w AS (
+           SELECT doc_id,
+             (('0x' || substr(md5(tok), 1, 15))::BIGINT % 64) % 13 - 6 AS wt
+           FROM toks WHERE length(tok) > 0)
+         SELECT doc_id, cast(count(*) AS bigint) AS n_tokens,
+           cast(sum(wt) AS bigint) AS margin,
+           round(sum(wt)::DOUBLE / count(*), 6) AS score,
+           (sum(wt) >= 0) AS pass
+         FROM w GROUP BY doc_id ORDER BY doc_id"""),
+    // L1 — classifier TRAINING: naive-Bayes log-odds token weights over a
+    // fixture-derived label (lang='en' as the "quality" class — any
+    // boolean label column works). ln of integers + exact decimal
+    // combination makes the trained weights themselves oracle-checkable,
+    // the way q_bpe_pairs oracles BPE training. Top-30 by weight
+    // (rounded-weight desc, token tiebreak).
+    QueryDef("q_quality_train", (s, dir) => {
+      graft.operators.TextAnalysis.trainTokenLogOdds(
+        t(s, dir, "documents").withColumn("__y", col("lang") === "en"),
+        "doc_id", "text", "__y")
+        .select(col("token"), col("n_pos"), col("n_neg"),
+          round(col("weight").cast("double"), 6).as("weight"))
+        .orderBy(col("weight").desc, col("token")).limit(30)
+    },
+    // NB log-odds training re-run in SQL: ln of integers only, each term
+    // cast decimal(28,10) before combining — TextAnalysis.trainTokenLogOdds
+    // verbatim (label: lang='en').
+      """WITH toks AS (
+           SELECT (lang = 'en') AS y, tok FROM (
+             SELECT lang, unnest(string_split_regex(text, '\s+')) AS tok
+             FROM documents WHERE text IS NOT NULL)
+           WHERE length(tok) > 0),
+         tot AS (
+           SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS tp,
+             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS tn,
+             count(DISTINCT tok) AS v
+           FROM toks),
+         c AS (
+           SELECT tok, sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
+             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
+           FROM toks GROUP BY tok)
+         SELECT c.tok AS token,
+           cast(n_pos AS bigint) AS n_pos, cast(n_neg AS bigint) AS n_neg,
+           round(cast(
+             cast(ln(n_pos + 1) AS decimal(28,10))
+             - cast(ln(tp + v) AS decimal(28,10))
+             - cast(ln(n_neg + 1) AS decimal(28,10))
+             + cast(ln(tn + v) AS decimal(28,10)) AS double), 6) AS weight
+         FROM c CROSS JOIN tot
+         ORDER BY weight DESC, token LIMIT 30"""),
+    // L1 — train + SERVE composed: the trained weights table (never
+    // collected — it stays a broadcast-joined frame) scores every doc;
+    // exact decimal margins keep the score shuffle-order-independent.
+    QueryDef("q_quality_train_score", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val w = graft.operators.TextAnalysis.trainTokenLogOdds(
+        docs.withColumn("__y", col("lang") === "en"),
+        "doc_id", "text", "__y")
+      graft.operators.TextAnalysis.scoreWithTokenWeights(
+        docs, "doc_id", "text", w)
+        .orderBy("doc_id")
+    },
+    // …and the composed serve: every corpus token is in the trained
+    // vocabulary, so the operator's left-join-plus-zero equals this inner
+    // join; exact decimal margin, one row per doc.
+      "WITH " + NbTokenWeightCtes + """
+         SELECT t.doc_id, cast(count(*) AS bigint) AS n_tokens,
+           round(cast(sum(w.wt) AS double) / count(*), 6) AS score,
+           (sum(w.wt) >= 0) AS pass
+         FROM toks t JOIN w ON w.tok = t.tok
+         GROUP BY t.doc_id ORDER BY t.doc_id"""),
+    // L1 — tokenizer APPLY (Bpe.applyMerges): an already-learned merge
+    // list folded over the corpus vocabulary — the serving half of BPE,
+    // run where it belongs at scale (on the vocab, not the corpus; the
+    // corpus re-joins by word). The fixed 3-merge list ends with a
+    // merged-symbol merge ("er"+"s") so the fold exercises multi-char
+    // symbols. Oracle trick: map each merged pair to a UNIQUE placeholder
+    // char (fixture words are a-z only, so digits are free) — every
+    // symbol is then exactly one character, chained leftmost replace()
+    // replicates the greedy scan-local array merge EXACTLY, and string
+    // length equals the symbol count.
+    QueryDef("q_bpe_encode", (s, dir) => {
+      val v = graft.operators.Bpe.vocab(t(s, dir, "documents"), "text")
+      graft.operators.Bpe.applyMerges(v,
+          Seq(("e", "r"), ("i", "n"), ("er", "s")))
+        .select(col("word"), col("freq"),
+          size(col("syms")).cast("long").as("n_syms"))
+        .orderBy("word")
+    },
+    // placeholder-encoded merges: 'er'->1, 'in'->2, then the merged-symbol
+    // merge er+s as '1s'->3; every symbol is one char, so length = n_syms
+      """WITH vocab AS (
+           SELECT w AS word, count(*) AS freq FROM (
+             SELECT unnest(string_split_regex(text, '\s+')) AS w
+             FROM documents WHERE text IS NOT NULL)
+           WHERE length(w) > 0 GROUP BY w)
+         SELECT word, freq,
+           cast(length(replace(replace(replace(word, 'er', '1'), 'in', '2'),
+             '1s', '3')) AS bigint) AS n_syms
+         FROM vocab ORDER BY word"""),
+    // L1 — tokenizer FERTILITY (tokens-per-word, per language): the
+    // measurement that drives vocabulary design — a language whose
+    // fertility runs high is under-served by the merge list and pays more
+    // context budget per word. Corpus words join the vocab's encoded
+    // symbol counts (vocabulary-sized → broadcast; the corpus side never
+    // shuffles before its per-lang partial aggregate), so the whole
+    // report costs one explode + one broadcast join + one hash aggregate.
+    // Same fixed merge list and placeholder-char oracle as q_bpe_encode.
+    QueryDef("q_bpe_fertility", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val enc = graft.operators.Bpe.applyMerges(
+          graft.operators.Bpe.vocab(docs, "text"),
+          Seq(("e", "r"), ("i", "n"), ("er", "s")))
+        .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
+      Scale.spreadForCompute(docs.filter(col("text").isNotNull),
+          col("doc_id"))
+        .select(col("lang"), explode(split(col("text"), "\\s+")).as("word"))
+        .filter(length(col("word")) > 0)
+        .join(broadcast(enc), "word")
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_words"),
+          sum(col("n_syms")).as("n_syms"))
+        .withColumn("fertility",
+          round(col("n_syms").cast("double") / col("n_words"), 6))
+        .orderBy("lang")
+    },
+    // Same placeholder-char merge chain as q_bpe_encode, weighted by
+    // per-language word occurrences.
+      """WITH vocab AS (
+           SELECT w AS word FROM (
+             SELECT unnest(string_split_regex(text, '\s+')) AS w
+             FROM documents WHERE text IS NOT NULL)
+           WHERE length(w) > 0 GROUP BY w),
+         enc AS (
+           SELECT word,
+             cast(length(replace(replace(replace(word, 'er', '1'),
+               'in', '2'), '1s', '3')) AS bigint) AS n_syms
+           FROM vocab),
+         wrds AS (
+           SELECT lang, unnest(string_split_regex(text, '\s+')) AS word
+           FROM documents WHERE text IS NOT NULL)
+         SELECT lang, count(*)::bigint AS n_words,
+           sum(n_syms)::bigint AS n_syms,
+           round(sum(n_syms)::double / count(*), 6) AS fertility
+         FROM wrds JOIN enc USING (word)
+         WHERE length(word) > 0
+         GROUP BY lang ORDER BY lang"""),
+    // L1x — unigram-LM tokenizer training (Unigram.trainOnce): one
+    // hard-EM round — candidate substring counts, integer micro-nat
+    // costs, bounded Viterbi segmentation (8 forward + 8 backward
+    // vocabulary-scale rounds), piece recount, updated scores. Top-30
+    // pieces by trained count; every step exact-integer or
+    // once-rounded-decimal, so the whole trainer oracle-checks against
+    // the unrolled-DP SQL.
+    QueryDef("q_unigram_lm", (s, dir) => {
+      graft.operators.Unigram.trainOnce(t(s, dir, "documents"), "text",
+          maxPieceLen = UniPieceLen, maxWordLen = UniWordLen,
+          minCount = UniMinCount)
+        .orderBy(col("n").desc, col("piece"))
+        .limit(30)
+    },
+      s"""$unigramCtes
+         SELECT piece, n,
+           cast(round((cast(ln(t) AS decimal(17,10))
+             - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
+             AS cost
+         FROM n1, tot1 ORDER BY n DESC, piece LIMIT 30"""),
+    // L1x — the tokenizer's actual serving OUTPUT: the ordered piece
+    // sequence (word, freq, k, piece) of the 50 most frequent words
+    // under the candidate model — what an encode() call returns, with
+    // the position exposed so the oracle pins the exact segmentation
+    // order, not just the piece multiset. Bounded head (TakeOrdered),
+    // vocabulary-scale DP.
+    QueryDef("q_unigram_encode", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
+          UniWordLen)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cand = graft.operators.Unigram.candidatePieces(voc,
+        UniPieceLen, UniMinCount)
+      val top = voc.orderBy(col("freq").desc, col("word")).limit(50)
+      graft.operators.Scale.releaseAfterUse(
+        graft.operators.Unigram.viterbiEncode(top,
+            graft.operators.Unigram.pieceCosts(cand),
+            UniPieceLen, UniWordLen)
+          .orderBy("word", "k"),
+        Seq(voc))
+    },
+    // Encode rows: the backward-walk CTEs re-unioned WITH their hop
+    // index; k counts from the word start (np − r + 1).
+      s"""$unigramCtes,
+         topw AS (
+           SELECT word FROM voc ORDER BY freq DESC, word LIMIT 50),
+         hops AS (
+           ${(1 to UniWordLen).map(r =>
+             s"SELECT word, freq, $r AS r, piece FROM p$r")
+             .mkString("\n UNION ALL ")}),
+         np AS (SELECT word, cast(count(*) AS int) AS n
+                FROM hops GROUP BY word)
+         SELECT h.word, h.freq, n.n - h.r + 1 AS k, h.piece
+         FROM hops h JOIN np n USING (word) JOIN topw USING (word)
+         ORDER BY word, k"""),
+    // L1x — trained-unigram fertility per language, the q_bpe_fertility
+    // shape so the two tokenizer families compare row-for-row (pieces
+    // per word, frequency-weighted through the word join).
+    QueryDef("q_unigram_fertility", (s, dir) => {
+      graft.operators.Unigram.fertility(t(s, dir, "documents"),
+        "doc_id", "text", "lang", maxPieceLen = UniPieceLen,
+        maxWordLen = UniWordLen, minCount = UniMinCount)
+    },
+      s"""$unigramCtes,
+         pw AS (
+           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
+           FROM seg GROUP BY word),
+         wl AS (
+           SELECT lang, word FROM (
+             SELECT lang, unnest($WsSplitSql) AS word
+             FROM documents WHERE text IS NOT NULL)
+           WHERE len(word) > 0 AND len(word) <= $UniWordLen)
+         SELECT lang, cast(count(*) AS BIGINT) AS n_words,
+           cast(sum(p.n_pieces) AS BIGINT) AS n_pieces,
+           round(cast(sum(p.n_pieces) AS double) / count(*), 6)
+             AS fertility
+         FROM wl JOIN pw p USING (word)
+         GROUP BY lang ORDER BY lang"""),
+    // L1y — unigram vocabulary pruning (Unigram.pruneVocab, the Kudo
+    // shrink step): every trained multi-char piece scored by the exact
+    // integer loss bound n·(Σ char costs − cost) — the corpus-cost
+    // increase if its occurrences fall back to single characters — and
+    // the top 10 kept beside ALL single chars (the segmentability
+    // floor). One scan + one broadcast char-cost join; no per-piece DP.
+    QueryDef("q_unigram_prune", (s, dir) => {
+      graft.operators.Unigram.trainAndPrune(t(s, dir, "documents"),
+          "text", UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10)
+        .orderBy(col("loss").desc_nulls_last, col("piece"))
+    },
+      s"""$unigramCtes,
+         ${uniTcostCte("tcost AS", "n1", "tot1")},
+         ccost AS (
+           SELECT piece AS c, cost AS ccost FROM cost
+           WHERE len(piece) = 1),
+         ${uniPruneCtes("tcost", "")}
+         ${uniPruneSelect("tcost", "")}"""),
+    // L1y — the Kudo loop ITERATED (Unigram.kudoStep round two): the
+    // round-1 pruned model re-segments the same vocabulary, pieces
+    // recount and re-score under the shrunk model, and the prune
+    // re-ranks — the SentencePiece trainer's actual fixed point search.
+    // Read against q_unigram_prune: survivors that persist across
+    // rounds are the vocabulary the loop is converging to. Candidate
+    // stage and vocabulary compute ONCE (shared persists); char
+    // fallback costs stay the candidate-stage model (the documented
+    // segmentability floor) in both rounds.
+    QueryDef("q_unigram_kudo2", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
+          UniWordLen)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cand = graft.operators.Unigram.candidatePieces(voc,
+          UniPieceLen, UniMinCount)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cc = graft.operators.Unigram.pieceCosts(cand)
+      val round1 = graft.operators.Unigram.kudoStep(voc, cc, cc,
+          UniPieceLen, UniWordLen, keepPieces = 10)
+        .select(col("piece"), col("cost"))
+      graft.operators.Scale.releaseAfterUse(
+        graft.operators.Unigram.kudoStep(voc, round1, cc,
+            UniPieceLen, UniWordLen, keepPieces = 10)
+          .orderBy(col("loss").desc_nulls_last, col("piece")),
+        Seq(voc, cand))
+    },
+    // Kudo round two: the retrain chain's cost2 model re-segments the
+    // vocabulary (the v-prefixed DP block), pieces recount/re-score
+    // (n2/tcost2 — the tcost recipe again), and the prune tail re-runs
+    // against the candidate-stage char floor (the same ccost CTE).
+      s"""$UniCost2Ctes,
+         ${unigramDpCtes("v", "cost2")},
+         n2 AS (
+           SELECT piece, cast(sum(freq) AS BIGINT) AS n
+           FROM vseg GROUP BY piece),
+         tot2 AS (SELECT cast(sum(n) AS BIGINT) AS t FROM n2),
+         ${uniTcostCte("tcost2 AS MATERIALIZED", "n2", "tot2")},
+         ${uniPruneCtes("tcost2", "2")}
+         ${uniPruneSelect("tcost2", "2")}"""),
+    // L1y — the Kudo loop CLOSED: per-language fertility under the
+    // PRUNED vocabulary (Unigram.fertilityUnder over trainAndPrune's
+    // survivors) — read row-for-row against q_unigram_fertility, the
+    // delta is what the shrink step costs in pieces-per-word. Same
+    // bounded DP, pruned cost model.
+    QueryDef("q_unigram_retrain", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      // ONE persisted vocabulary feeds both the trainer and the
+      // re-segmentation — the Kudo loop touches the corpus word-agg once
+      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
+          UniWordLen)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pruned = graft.operators.Unigram.trainAndPrune(docs, "text",
+          UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10,
+          vocab = Some(voc))
+        .select(col("piece"), col("cost"))
+      graft.operators.Scale.releaseAfterUse(
+        graft.operators.Unigram.fertilityUnder(docs, "doc_id", "text",
+          "lang", pruned, UniPieceLen, UniWordLen, vocab = Some(voc)),
+        Seq(voc))
+    },
+    // Retrain fertility: the prune CTEs produce cost2 (chars + kept
+    // multi at their TRAINED costs), a second prefixed DP block
+    // re-segments, and the per-language report mirrors
+    // q_unigram_fertility.
+      s"""$UniCost2Ctes,
+         ${unigramDpCtes("r", "cost2")},
+         pw AS (
+           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
+           FROM rseg GROUP BY word),
+         wl AS (
+           SELECT lang, word FROM (
+             SELECT lang, unnest($WsSplitSql) AS word
+             FROM documents WHERE text IS NOT NULL)
+           WHERE len(word) > 0 AND len(word) <= $UniWordLen)
+         SELECT lang, cast(count(*) AS BIGINT) AS n_words,
+           cast(sum(p.n_pieces) AS BIGINT) AS n_pieces,
+           round(cast(sum(p.n_pieces) AS double) / count(*), 6)
+             AS fertility
+         FROM wl JOIN pw p USING (word)
+         GROUP BY lang ORDER BY lang"""),
+    // L1y — TOTAL serving fertility with the OOV char fallback
+    // (Unigram.fertilityOov): the PRUNED model served at a window
+    // (UniOovWordLen) below the training window, so both fallback
+    // classes fire — out-of-window words AND words the pruned
+    // vocabulary can no longer segment — each counted as its character
+    // sequence (n_pieces = len, the SentencePiece char-fallback
+    // convention). n_fallback measures how much of the corpus the
+    // bounded window actually covers; no word ever drops.
+    QueryDef("q_unigram_oov", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      // ONE persisted training-window vocabulary serves both the trainer
+      // and the window-6 serving DP (superset-vocab contract)
+      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
+          UniWordLen)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pruned = graft.operators.Unigram.trainAndPrune(docs, "text",
+          UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10,
+          vocab = Some(voc))
+        .select(col("piece"), col("cost"))
+      graft.operators.Scale.releaseAfterUse(
+        graft.operators.Unigram.fertilityOov(docs, "doc_id", "text",
+          "lang", pruned, UniPieceLen, UniOovWordLen, vocab = Some(voc)),
+        Seq(voc))
+    },
+    // OOV serving fertility: the retrain chain's pruned model (cost2)
+    // re-segmented through a SHORTER DP window (UniOovWordLen), then a
+    // LEFT join + char-count coalesce — words missing from the DP
+    // output (too long for the window, or unsegmentable under the
+    // pruned vocabulary) fall back to len(word) pieces.
+      s"""$UniCost2Ctes,
+         ${unigramDpCtes("v", "cost2", UniOovWordLen)},
+         pw AS (
+           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
+           FROM vseg GROUP BY word),
+         wl AS (
+           SELECT lang, word FROM (
+             SELECT lang, unnest($WsSplitSql) AS word
+             FROM documents WHERE text IS NOT NULL)
+           WHERE len(word) > 0)
+         SELECT lang, cast(count(*) AS BIGINT) AS n_words,
+           cast(sum(coalesce(p.n_pieces, len(word))) AS BIGINT)
+             AS n_pieces,
+           cast(sum(CASE WHEN p.n_pieces IS NULL THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_fallback,
+           round(cast(sum(coalesce(p.n_pieces, len(word))) AS double)
+             / count(*), 6) AS fertility
+         FROM wl LEFT JOIN pw p USING (word)
+         GROUP BY lang ORDER BY lang"""),
+    // L1 — deflate-compressibility curation signal (Quality.
+    // compressionStats): repetitive text compresses far below prose,
+    // near-random text barely at all — the cheap filter word-level rules
+    // miss. deflate bytes are engine-specific (no SQL engine exposes
+    // zlib), so this follows the sketch-verdict pattern (q_agg_approx):
+    // raw_len oracle-checks exactly; deflate_len is asserted against the
+    // format's worst-case bound (≤5 bytes per started 16 KiB block + the
+    // terminating empty block) as a boolean both engines can hash. The
+    // ratio's curation semantics are QualitySpec-pinned (planted
+    // repetitive vs incompressible text).
+    QueryDef("q_compress_ratio", (s, dir) => {
+      Quality.compressionStats(
+        Scale.spreadForCompute(
+          t(s, dir, "documents").filter(col("text").isNotNull),
+          col("doc_id")),
+        "doc_id", "text")
+        .select(col("doc_id"), col("raw_len"),
+          (col("deflate_len") >= 1 && col("deflate_len") <=
+            col("raw_len") + lit(5L) * (expr("raw_len div 16384") + 1) + 6)
+            .as("deflate_in_bounds"))
+        .orderBy("doc_id")
+    },
+      """SELECT doc_id, strlen(text) AS raw_len,
+         true AS deflate_in_bounds
+         FROM documents WHERE text IS NOT NULL ORDER BY doc_id"""),
+    // A7 — dedup clustering: min-shingle blocking (lexicographic min — no
+    // engine hashing, so fully oracle-checkable) → exact Jaccard ≥ 0.5
+    // verify → connected components. Pairwise matches become canonical
+    // groups; the component label (min doc_id) is the survivor.
+    QueryDef("q_dedup_cluster", (s, dir) => {
+      Dedup.connectedComponents(nearDupEdges3(t(s, dir, "documents")),
+        "a", "b").orderBy("id")
+    },
+      s"""WITH RECURSIVE $NearDupReachCtes
+         SELECT src AS id, least(src, min(dst)) AS comp FROM reach
+         GROUP BY src ORDER BY id"""),
+    // A7 — SOFT dedup: downweighting instead of removal. Every document
+    // stays in the corpus with training weight 1/|cluster| over the SAME
+    // near-dup CC labels q_dedup_cluster derives, so a near-dup cluster
+    // contributes exactly ONE document's worth of training mass while
+    // keeping its within-cluster variation (what hard dedup's
+    // keep-lowest-id survivor throws away — the downweight alternative
+    // pipelines reach for when duplicates carry paraphrase signal).
+    // Singletons weigh 1. One labels join + one cluster-size aggregate
+    // on top of the shared CC pipeline; per-doc rows stream to the sink.
+    QueryDef("q_dedup_soft", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val lbl = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
+        .withColumnRenamed("id", "doc_id")
+      val withLbl = docs.select(col("doc_id"))
+        .join(lbl, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("comp"), col("doc_id")).as("cluster"))
+      val sizes = withLbl.groupBy("cluster")
+        .agg(count(lit(1)).as("n_members"))
+      withLbl.join(sizes, Seq("cluster"))
+        .select(col("doc_id"), col("cluster"), col("n_members"),
+          round(lit(1.0) / col("n_members"), 6).as("w"))
+        .orderBy("doc_id")
+    },
+    // Same component CTEs, then the per-doc 1/|cluster| weight with
+    // singletons (docs in no cluster) defaulting to their own id / w=1.
+      s"""WITH RECURSIVE $NearDupReachCtes,
+         lab AS (SELECT src AS id, least(src, min(dst)) AS comp FROM reach
+                 GROUP BY src),
+         allm AS (SELECT d.doc_id, coalesce(l.comp, d.doc_id) AS cluster
+                  FROM documents d LEFT JOIN lab l ON d.doc_id = l.id),
+         sz AS (SELECT cluster, cast(count(*) AS bigint) AS n_members
+                FROM allm GROUP BY cluster)
+         SELECT a.doc_id, a.cluster, sz.n_members,
+           round(1.0 / sz.n_members, 6) AS w
+         FROM allm a JOIN sz USING (cluster) ORDER BY a.doc_id"""),
+    // L1 — TRAINED char-trigram naive-Bayes language ID, trained + served
+    // + self-evaluated in one query (TextAnalysis.langIdNaiveBayes): the
+    // unseen-gram decomposition makes the whole multiclass scorer exact
+    // ln-of-integers decimal, so even the per-language accuracy table
+    // oracle-checks bit-for-bit.
+    QueryDef("q_langid_nb", (s, dir) => {
+      TA.langIdNaiveBayes(t(s, dir, "documents"), "doc_id", "text", "lang")
+        .groupBy(col("actual").as("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("predicted") === col("actual"), 1L).otherwise(0L))
+            .as("n_correct"))
+        .orderBy("lang")
+    },
+    // Same decomposition as the engine: first term over (gram ⋈ lang
+    // counts) only — unseen grams are ln(1) = 0 — penalty in closed form.
+      s"""WITH $LangIdNbCte
+         SELECT d.lang, count(*)::bigint AS n_docs,
+           sum(CASE WHEN p.predicted = d.lang THEN 1 ELSE 0 END)::bigint
+             AS n_correct
+         FROM documents d JOIN pred p ON p.doc_id = d.doc_id
+         WHERE d.text IS NOT NULL
+         GROUP BY d.lang ORDER BY lang"""),
+    // L1 — the NB identifier's CONFUSION MATRIX (actual × predicted doc
+    // counts) — the eval artifact a model card actually shows; only
+    // observed pairs appear (sparse form). Same trained scorer as
+    // q_langid_nb, different final aggregate.
+    QueryDef("q_langid_confusion", (s, dir) => {
+      TA.langIdNaiveBayes(t(s, dir, "documents"), "doc_id", "text", "lang")
+        .groupBy(col("actual"), col("predicted"))
+        .agg(count(lit(1)).as("n_docs"))
+        .orderBy("actual", "predicted")
+    },
+      s"""WITH $LangIdNbCte
+         SELECT d.lang AS actual, p.predicted, count(*)::bigint AS n_docs
+         FROM documents d JOIN pred p ON p.doc_id = d.doc_id
+         WHERE d.text IS NOT NULL
+         GROUP BY 1, 2 ORDER BY actual, predicted"""),
+    // L1 — per-language character-trigram profile: the table a char-ngram
+    // language identifier trains on (the production successor to
+    // q_lang_id's marker-word heuristic). Sliding substring transform →
+    // explode → (lang, gram) hash aggregate → per-lang top-5 window (the
+    // window partitions by lang, never global; the aggregate combines
+    // map-side). Short texts contribute their whole remainder as one
+    // gram — the shinglesFromWords convention, mirrored in the oracle.
+    QueryDef("q_char_ngrams", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val grams = graft.operators.TextAnalysis.explodeTrigrams(
+        Scale.spreadForCompute(
+          t(s, dir, "documents").filter(col("text").isNotNull),
+          col("doc_id")).select(col("lang"), col("text")),
+        Seq("lang"), "text", "gram")
+      val counts = grams.groupBy("lang", "gram").agg(count(lit(1)).as("c"))
+      val w = Window.partitionBy("lang").orderBy(col("c").desc, col("gram"))
+      counts.withColumn("rn", row_number().over(w).cast("long"))
+        .filter(col("rn") <= 5)
+        .orderBy("lang", "rn")
+    },
+      """WITH g AS (
+           SELECT lang, unnest(list_transform(
+             generate_series(1, greatest(length(text) - 2, 1)),
+             i -> substr(text, i, 3))) AS gram
+           FROM documents WHERE text IS NOT NULL),
+         c AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY lang, gram)
+         SELECT lang, gram, c::bigint AS c, rn::bigint AS rn FROM (
+           SELECT lang, gram, c,
+             row_number() OVER (PARTITION BY lang ORDER BY c DESC, gram)
+               AS rn
+           FROM c) WHERE rn <= 5 ORDER BY lang, rn"""),
+    // L1 — PMI collocation mining (Curation.pmiTopK): the phrase-detection
+    // table (word2vec-style "new_york" merging starts here). Exact
+    // ln-of-integer-counts decimal arithmetic — the bigramLmScore recipe —
+    // so the scores are a pure function of the counts and the whole
+    // top-30 oracle-checks; TakeOrderedAndProject, never a global sort.
+    QueryDef("q_pmi", (s, dir) => {
+      Curation.pmiTopK(t(s, dir, "documents"), "doc_id", "text",
+        minCount = 5, k = 30)
+    },
+    // Exact ln-of-integers decimal combination in the SAME fixed order as
+    // the engine expression; totals derive from the aggregates.
+      """WITH ws AS (
+           SELECT string_split_regex(text, '\s+') AS w
+           FROM documents WHERE text IS NOT NULL),
+         toks AS (SELECT unnest(w) AS w FROM ws),
+         uni AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
+         occ AS (
+           SELECT w[i] AS w1, w[i + 1] AS w2
+           FROM (SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
+                 FROM ws)),
+         big AS (SELECT w1, w2, count(*) AS c12 FROM occ GROUP BY w1, w2),
+         nu AS (SELECT sum(c)::bigint AS nu FROM uni),
+         nb AS (SELECT sum(c12)::bigint AS nb FROM big),
+         scored AS (
+           SELECT b.w1, b.w2, b.c12,
+             round((cast(ln(b.c12) AS decimal(28,10))
+               + cast(ln(nu.nu) AS decimal(28,10))
+               + cast(ln(nu.nu) AS decimal(28,10))
+               - cast(ln(nb.nb) AS decimal(28,10))
+               - cast(ln(u1.c) AS decimal(28,10))
+               - cast(ln(u2.c) AS decimal(28,10)))::double, 6) AS pmi
+           FROM big b
+           JOIN uni u1 ON u1.w = b.w1
+           JOIN uni u2 ON u2.w = b.w2, nu, nb
+           WHERE b.c12 >= 5)
+         SELECT w1, w2, c12::bigint AS c12, pmi FROM scored
+         ORDER BY pmi DESC, w1, w2 LIMIT 30"""),
+    // L1 — TextRank keywords (TextAnalysis.textrankKeywords): PageRank
+    // over the token co-occurrence graph — the unsupervised keyword table
+    // (Mihalcea & Tarau 2004). Integer-exact ranks via Graph.pageRank, so
+    // the full pipeline (tokenize → strip → adjacency → 2 PR rounds →
+    // top-20) oracle-checks bit-for-bit.
+    QueryDef("q_textrank", (s, dir) => {
+      graft.operators.TextAnalysis.textrankKeywords(
+          t(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("rank").desc, col("term"))
+    },
+    // TextRank = the q_pagerank oracle's integer PR rounds over a
+    // co-occurrence edge list built from surviving-token adjacency.
+      """WITH t0 AS (
+           SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
+           FROM documents WHERE text IS NOT NULL),
+         tok AS (
+           SELECT doc_id, pos, regexp_replace(tk, '[^a-z0-9]', '', 'g') AS t
+           FROM (SELECT doc_id, unnest(w) AS tk,
+                   unnest(generate_series(1, len(w))) AS pos FROM t0)),
+         ft AS (SELECT doc_id, pos, t FROM tok WHERE length(t) >= 3),
+         seq AS (SELECT t AS dst,
+             lag(t) OVER (PARTITION BY doc_id ORDER BY pos) AS src
+           FROM ft),
+         p AS (SELECT src, dst FROM seq
+               WHERE src IS NOT NULL AND src <> dst),
+         edges AS (SELECT src, dst, cast(count(*) AS BIGINT) AS w
+           FROM (SELECT src, dst FROM p
+                 UNION ALL SELECT dst AS src, src AS dst FROM p)
+           GROUP BY 1, 2),
+         outw AS (SELECT src, cast(sum(w) AS BIGINT) AS outw
+           FROM edges GROUP BY 1),
+         nodes AS (SELECT src AS node FROM edges
+           UNION SELECT dst FROM edges),
+         r0 AS (SELECT node, cast(1000000000000 AS BIGINT) AS rank
+           FROM nodes),
+         c1 AS (
+           SELECT e.dst AS node, cast(sum(
+             (r.rank::HUGEINT * 85 * e.w) // (100 * o.outw::HUGEINT)
+             ) AS BIGINT) AS s
+           FROM edges e JOIN outw o ON e.src = o.src
+             JOIN r0 r ON r.node = e.src GROUP BY 1),
+         r1 AS (SELECT n.node,
+             cast(150000000000 + coalesce(c1.s, 0) AS BIGINT) AS rank
+           FROM nodes n LEFT JOIN c1 ON n.node = c1.node),
+         c2 AS (
+           SELECT e.dst AS node, cast(sum(
+             (r.rank::HUGEINT * 85 * e.w) // (100 * o.outw::HUGEINT)
+             ) AS BIGINT) AS s
+           FROM edges e JOIN outw o ON e.src = o.src
+             JOIN r1 r ON r.node = e.src GROUP BY 1),
+         r2 AS (SELECT n.node,
+             cast(150000000000 + coalesce(c2.s, 0) AS BIGINT) AS rank
+           FROM nodes n LEFT JOIN c2 ON n.node = c2.node)
+         SELECT node AS term, rank FROM r2
+         ORDER BY rank DESC, term LIMIT 20"""),
+    // L1 — Zipf power-law fit (TextAnalysis.zipfFit): OLS of ln(freq) on
+    // ln(rank) over the top-200 token ranks — the one-row corpus-health
+    // report (natural text ≈ slope −1). Integer-micro-unit ln (the PCA
+    // quantize recipe) makes the five OLS sums exact, so the fit
+    // oracle-checks to the last rounded digit.
+    QueryDef("q_zipf_slope", (s, dir) => {
+      graft.operators.TextAnalysis.zipfFit(
+        t(s, dir, "documents"), "doc_id", "text", topRanks = 200)
+    },
+      """WITH toks AS (
+           SELECT unnest(string_split_regex(lower(text), '\s+')) AS t
+           FROM documents WHERE text IS NOT NULL),
+         freq AS (
+           SELECT t, count(*) AS c FROM toks WHERE length(t) > 0 GROUP BY t),
+         head AS (
+           SELECT c, row_number() OVER (ORDER BY c DESC, t) AS r
+           FROM freq QUALIFY r <= 200),
+         xy AS (
+           SELECT round(ln(r::DOUBLE) * 1000000, 0)::BIGINT AS x,
+             round(ln(c::DOUBLE) * 1000000, 0)::BIGINT AS y
+           FROM head),
+         s AS (
+           SELECT cast(count(*) AS BIGINT) AS n_ranks,
+             cast(sum(x) AS BIGINT) AS sx, cast(sum(y) AS BIGINT) AS sy,
+             cast(sum(x * y) AS BIGINT) AS sxy,
+             cast(sum(x * x) AS BIGINT) AS sxx
+           FROM xy),
+         f AS (
+           SELECT n_ranks, sx, sy,
+             (n_ranks::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+               / (n_ranks::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
+               AS slope
+           FROM s)
+         SELECT n_ranks, round(slope, 6) AS slope,
+           round((sy::DOUBLE - slope * sx::DOUBLE) / n_ranks::DOUBLE
+             / 1000000.0, 6) AS intercept
+         FROM f"""),
+    // L1 — Flesch reading ease (TextAnalysis.fleschCounts/fleschScore):
+    // exact integer word/sentence/vowel-group counts + one fixed-order
+    // double formula per doc — scan-only codegen'd readability, the gate
+    // signal next to q_gopher_rules/q_text_quality.
+    QueryDef("q_readability", (s, dir) => {
+      import graft.operators.TextAnalysis._
+      val (w, sn, sy) = fleschCounts(col("text"))
+      // spread: the per-doc word/sentence/vowel-group counting is the
+      // whole query and would otherwise run inside the single-file scan
+      // task (the spreadForCompute contract; no-op on a wide corpus)
+      Scale.spreadForCompute(
+          t(s, dir, "documents").filter(col("text").isNotNull),
+          col("doc_id"))
+        .select(col("doc_id"), w.as("n_words"), sn.as("n_sents"),
+          sy.as("n_syll"))
+        .withColumn("flesch",
+          fleschScore(col("n_words"), col("n_sents"), col("n_syll")))
+        .orderBy("doc_id")
+    },
+      """WITH c AS (
+           SELECT doc_id,
+             cast(len(list_filter(string_split_regex(text, '\s+'),
+               w -> length(w) > 0)) AS BIGINT) AS n_words,
+             cast(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
+               AS BIGINT) AS n_sents,
+             cast(len(regexp_extract_all(lower(text), '[aeiouy]+'))
+               AS BIGINT) AS n_syll
+           FROM documents WHERE text IS NOT NULL)
+         SELECT doc_id, n_words, n_sents, n_syll,
+           CASE WHEN n_words = 0 THEN NULL
+                ELSE round(206.835
+                  - 1.015 * (n_words::DOUBLE / n_sents::DOUBLE)
+                  - 84.6 * (n_syll::DOUBLE / n_words::DOUBLE), 6)
+           END AS flesch
+         FROM c ORDER BY doc_id"""),
+    // L1 — source-fair curation gate (Curation.fairGate): keep each
+    // source's top half by readability — the per-source quantile
+    // threshold (FineWeb-style) that trims a weak source without erasing
+    // it and stops a strong one crowding out the mix. One per-source
+    // window, exact percent_rank, fully oracle-checked.
+    QueryDef("q_fair_gate", (s, dir) => {
+      import graft.operators.TextAnalysis._
+      val (w, sn, sy) = fleschCounts(col("text"))
+      // spread: same rationale as q_readability — the flesch projection
+      // is the query's CPU and must not serialize into one scan task
+      val scored = Scale.spreadForCompute(
+          t(s, dir, "documents").filter(col("text").isNotNull),
+          col("doc_id"))
+        .select(col("source"), col("doc_id"),
+          fleschScore(w, sn, sy).as("flesch"))
+      Curation.fairGate(scored, "source", "flesch", "doc_id", 0.5)
+        .select(col("source"), col("doc_id"), col("flesch"),
+          round(col("pr"), 6).as("pr"))
+        .orderBy("source", "doc_id")
+    },
+      """WITH c AS (
+           SELECT source, doc_id,
+             CASE WHEN len(list_filter(string_split_regex(text, '\s+'),
+                    w -> length(w) > 0)) = 0 THEN NULL
+                  ELSE round(206.835
+                    - 1.015 * (len(list_filter(string_split_regex(text, '\s+'),
+                        w -> length(w) > 0))::DOUBLE
+                      / greatest(len(regexp_extract_all(text, '[.!?]+')), 1)::DOUBLE)
+                    - 84.6 * (len(regexp_extract_all(lower(text), '[aeiouy]+'))::DOUBLE
+                      / len(list_filter(string_split_regex(text, '\s+'),
+                          w -> length(w) > 0))::DOUBLE), 6)
+             END AS flesch
+           FROM documents WHERE text IS NOT NULL),
+         r AS (
+           SELECT source, doc_id, flesch,
+             percent_rank() OVER (PARTITION BY source
+               ORDER BY flesch DESC NULLS LAST, doc_id) AS pr
+           FROM c)
+         SELECT source, doc_id, flesch, round(pr, 6) AS pr
+         FROM r WHERE pr <= 0.5 ORDER BY source, doc_id"""),
+    // A7 — near-dup cluster size HISTOGRAM: how much of the corpus sits
+    // in duplicate clusters of what size — the report that decides
+    // whether dedup is worth a full run (mass in size-2 pairs vs a few
+    // giant boilerplate clusters ⇒ different strategies). Singletons are
+    // docs with no edge (cluster size 1). Two hash aggregates over the
+    // shared CC labels; the heavy work (edges + CC) is the same shared
+    // stage every dedup query uses.
+    QueryDef("q_cluster_hist", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
+      val sizes = docs.select(col("doc_id"))
+        .join(labels, col("doc_id") === col("id"), "left")
+        .select(coalesce(col("comp"), col("doc_id")).as("cluster"))
+        .groupBy("cluster").agg(count(lit(1)).as("sz"))
+      sizes.groupBy("sz")
+        .agg(count(lit(1)).as("n_clusters"),
+          (count(lit(1)) * col("sz")).as("n_docs"))
+        .orderBy("sz")
+    },
+    // Same edge + component CTEs as q_split_leakfree; singleton docs form
+    // size-1 clusters via the coalesce.
+      s"""WITH RECURSIVE $NearDupLabelCtes,
+         sizes AS (
+           SELECT coalesce(l.comp, d.doc_id) AS cluster,
+             count(*)::bigint AS sz
+           FROM documents d LEFT JOIN labels l ON d.doc_id = l.id
+           GROUP BY 1)
+         SELECT sz, count(*)::bigint AS n_clusters,
+           (count(*) * sz)::bigint AS n_docs
+         FROM sizes GROUP BY sz ORDER BY sz"""),
+    // Curation — leakage-aware train/val split: documents gate on the md5
+    // of their near-dup CLUSTER label (singletons: their own id), not
+    // their own id, so a near-duplicate of a held-out doc can never land
+    // in train — the split-level twin of decontamination (a plain
+    // per-doc split leaks eval data through duplicates). Composes the
+    // shared dedup edge list + connected components with the
+    // deterministic md5 gate; ~1/8 of CLUSTERS (not docs) go to val.
+    QueryDef("q_split_leakfree", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
+      docs.select(col("doc_id"))
+        .join(labels, col("doc_id") === col("id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("comp"), col("doc_id")).as("cluster"))
+        .withColumn("split",
+          when(graft.operators.Sampling.keepHex(col("cluster"), "lfs1", "2000"),
+            lit("val")).otherwise(lit("train")))
+        .orderBy("doc_id")
+    },
+    // Same component CTE as q_dedup_cluster, then the md5 split gate on
+    // the cluster label (q_sample_hash's portable convention).
+      s"""WITH RECURSIVE $NearDupLabelCtes
+         SELECT d.doc_id, coalesce(l.comp, d.doc_id) AS cluster,
+           CASE WHEN substring(md5(concat('lfs1', '|',
+                  cast(coalesce(l.comp, d.doc_id) AS VARCHAR))), 1, 4)
+                < '2000'
+                THEN 'val' ELSE 'train' END AS split
+         FROM documents d LEFT JOIN labels l ON d.doc_id = l.id
+         ORDER BY d.doc_id"""),
+    // Curation — split-leakage AUDIT, the measurement companion to
+    // q_split_leakfree: assign the split BOTH ways (naive per-doc md5
+    // gate vs the cluster-label gate) and count, per method, the val docs
+    // with a near-dup edge into train. The cluster gate's count is zero
+    // BY CONSTRUCTION (an edge's two ends share a component, hence a gate
+    // key); the naive gate leaks wherever a near-dup pair straddles the
+    // hash boundary — this query turns that design claim into a number
+    // both engines must agree on. One edge list + one CC, shared by both
+    // methods; the audit joins are edge-scale, never doc×doc.
+    QueryDef("q_split_audit", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val edges = nearDupEdges3(docs).select("a", "b")
+      val labels = Dedup.connectedComponents(edges, "a", "b")
+      def gate(key: org.apache.spark.sql.Column) =
+        when(graft.operators.Sampling.keepHex(key, "lfs1", "2000"),
+          lit("val")).otherwise(lit("train"))
+      val assigned = docs.select(col("doc_id"))
+        .join(labels, col("doc_id") === col("id"), "left")
+        .select(col("doc_id"),
+          gate(col("doc_id")).as("naive"),
+          gate(coalesce(col("comp"), col("doc_id"))).as("leakfree"))
+      val long = assigned.select(col("doc_id"), explode(array(
+          struct(lit("naive").as("method"), col("naive").as("split")),
+          struct(lit("leakfree").as("method"), col("leakfree").as("split"))))
+          .as("m"))
+        .select(col("doc_id"), col("m.method").as("method"),
+          col("m.split").as("split"))
+      val valCounts = long.filter(col("split") === "val")
+        .groupBy("method").agg(count(lit(1)).as("n_val"))
+      val sym = edges.select(col("a").as("x"), col("b").as("y"))
+        .unionByName(edges.select(col("b").as("x"), col("a").as("y")))
+      val leaky = sym
+        .join(long.select(col("doc_id").as("x"), col("method"),
+          col("split").as("sx")), "x")
+        .join(long.select(col("doc_id").as("y"), col("method"),
+          col("split").as("sy")), Seq("y", "method"))
+        .filter(col("sx") === "val" && col("sy") === "train")
+        .groupBy("method").agg(countDistinct(col("x")).as("n_leaky"))
+      valCounts.join(leaky, Seq("method"), "left")
+        .na.fill(0L, Seq("n_leaky"))
+        .orderBy("method")
+    },
+    // Same edge + component CTEs as q_split_leakfree, then both gates
+    // side by side and the per-method leaky-val-doc census.
+      s"""WITH RECURSIVE $NearDupLabelCtes,
+         assigned AS (
+           SELECT d.doc_id,
+             CASE WHEN substring(md5(concat('lfs1', '|',
+                    cast(d.doc_id AS VARCHAR))), 1, 4) < '2000'
+                  THEN 'val' ELSE 'train' END AS naive,
+             CASE WHEN substring(md5(concat('lfs1', '|',
+                    cast(coalesce(l.comp, d.doc_id) AS VARCHAR))), 1, 4)
+                  < '2000'
+                  THEN 'val' ELSE 'train' END AS leakfree
+           FROM documents d LEFT JOIN labels l ON d.doc_id = l.id),
+         lng AS (
+           SELECT doc_id, 'naive' AS method, naive AS split FROM assigned
+           UNION ALL
+           SELECT doc_id, 'leakfree', leakfree FROM assigned),
+         valc AS (
+           SELECT method, count(*)::bigint AS n_val FROM lng
+           WHERE split = 'val' GROUP BY method),
+         leaky AS (
+           SELECT lx.method, count(DISTINCT sym.src)::bigint AS n_leaky
+           FROM sym
+           JOIN lng lx ON lx.doc_id = sym.src
+           JOIN lng ly ON ly.doc_id = sym.dst AND ly.method = lx.method
+           WHERE lx.split = 'val' AND ly.split = 'train'
+           GROUP BY lx.method)
+         SELECT v.method, v.n_val,
+           coalesce(kk.n_leaky, 0)::bigint AS n_leaky
+         FROM valc v LEFT JOIN leaky kk USING (method)
+         ORDER BY method"""),
+    // A7 end-to-end — dedup survivor selection: each near-dup cluster
+    // keeps its best document (longest n_chars, then min doc_id);
+    // singletons keep themselves. Clusters + one argmax max(struct)
+    // aggregate — partial aggregation map-side, no corpus-wide window.
+    // A7 — golden-record construction (the MDM merge step after dedup):
+    // per near-dup cluster, ONE merged record — canonical id (min),
+    // richest text length (max), member count, and the distinct
+    // lang/source spread (a >1 spread flags cross-source duplication the
+    // mix planner must know about). Shares the dedup family's CC labels;
+    // one hash aggregate over label-joined docs, singletons merge with
+    // themselves via the label coalesce.
+    QueryDef("q_golden_record", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
+      val d = docs.select(col("doc_id"), col("n_chars"), col("lang"),
+        col("source"))
+      d.join(labels, d("doc_id") === labels("id"), "left")
+        .select(coalesce(col("comp"), col("doc_id")).as("grp"),
+          col("doc_id"), col("n_chars"), col("lang"), col("source"))
+        .groupBy("grp")
+        .agg(min(col("doc_id")).as("canonical_id"),
+          count(lit(1)).as("n_members"),
+          max(col("n_chars")).as("best_n_chars"),
+          countDistinct(col("lang")).as("n_langs"),
+          countDistinct(col("source")).as("n_sources"))
+        .orderBy("grp")
+    },
+    // Same cluster CTEs; the merge aggregates instead of the argmax pick.
+      s"""WITH RECURSIVE $NearDupLabelCtes
+         SELECT coalesce(l.comp, d.doc_id) AS grp,
+           cast(min(d.doc_id) AS BIGINT) AS canonical_id,
+           cast(count(*) AS BIGINT) AS n_members,
+           cast(max(d.n_chars) AS BIGINT) AS best_n_chars,
+           cast(count(DISTINCT d.lang) AS BIGINT) AS n_langs,
+           cast(count(DISTINCT d.source) AS BIGINT) AS n_sources
+         FROM documents d LEFT JOIN labels l ON d.doc_id = l.id
+         GROUP BY 1 ORDER BY grp"""),
+    QueryDef("q_dedup_survivor", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val labels = Dedup.connectedComponents(nearDupEdges3(docs), "a", "b")
+      val dq = docs.select(col("doc_id"), col("n_chars"))
+      dq.join(labels, dq("doc_id") === labels("id"), "left")
+        .select(coalesce(col("comp"), col("doc_id")).as("grp"),
+          col("doc_id"), col("n_chars"))
+        .groupBy("grp")
+        .agg(max(struct(col("n_chars").as("nc"), (-col("doc_id")).as("nd")))
+          .as("m"))
+        .select(col("grp"), (-col("m.nd")).as("doc_id"),
+          col("m.nc").as("n_chars"))
+        .orderBy("grp")
+    },
+    // Same component CTE as q_dedup_cluster, then one survivor per
+    // component (max n_chars, min doc_id tiebreak); singletons survive.
+      s"""WITH RECURSIVE $NearDupLabelCtes
+         SELECT grp, doc_id, n_chars FROM (
+           SELECT coalesce(l.comp, d.doc_id) AS grp, d.doc_id, d.n_chars,
+             row_number() OVER (PARTITION BY coalesce(l.comp, d.doc_id)
+               ORDER BY d.n_chars DESC, d.doc_id) AS rn
+           FROM documents d LEFT JOIN labels l ON d.doc_id = l.id)
+         WHERE rn = 1 ORDER BY grp"""),
+    // A7 — SimHash signatures over the portable md5 hash family: every
+    // token hash, bit vote, and the final 16-bit signature reproduce
+    // exactly in the oracle engine. xxhash64 variant stays the operator
+    // default for scale (asserted in DedupSpec).
+    QueryDef("q_dedup_simhash", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          Dedup.simHash16Portable(col("text")).as("simhash"))
+        .orderBy("doc_id")
+    },
+      """WITH h AS (
+           SELECT doc_id, list_transform(string_split(text, ' '),
+             x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
+           FROM documents),
+         bits AS (
+           SELECT doc_id, i,
+             CASE WHEN list_sum(list_transform(hv, v ->
+                 CASE WHEN (v >> i) & 1 = 1 THEN 1 ELSE -1 END)) >= 0
+               THEN (1::BIGINT << i) ELSE 0 END AS bit
+           FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i))
+         SELECT doc_id, cast(sum(bit) AS bigint) AS simhash FROM bits
+         GROUP BY doc_id ORDER BY doc_id"""),
+    // Curation — SEMANTIC benchmark decontamination: the embedding-space
+    // twin of the n-gram screens (q_decontaminate catches verbatim
+    // overlap; paraphrased eval leakage needs the vector side). Every
+    // corpus vector reports its nearest benchmark vector (vec_id % 50 ==
+    // 0 slice) and whether the cosine crosses the contamination bar (0.4, the
+    // q_semdedup near-dup band — the fixture's planted geometry). The
+    // benchmark side broadcasts (eval suites are tiny); the |corpus| ×
+    // |bench| scored pairs flow straight into a map-side-combining argmax
+    // — the corpus never shuffles at pair scale. Per-pair cosines are
+    // bit-portable (the q_sim_exact argument), max/argmax are
+    // order-independent with a b_id tiebreak, so the whole screen
+    // oracle-checks.
+    QueryDef("q_decontaminate_semantic", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val bench = emb.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
+      val corpus = emb.filter(col("vec_id") % 50 =!= 0)
+      corpus.crossJoin(broadcast(bench))
+        .select(col("vec_id"), col("b_id"),
+          graft.functions.VectorOps.cosine(col("emb"), col("b_emb"))
+            .as("cos"))
+        .groupBy("vec_id")
+        .agg(max(struct(col("cos").as("c"), (-col("b_id")).as("nb"))).as("m"))
+        .select(col("vec_id"), (-col("m.nb")).as("b_id"),
+          round(col("m.c"), 6).as("max_cos"),
+          (col("m.c") >= 0.4).as("contaminated"))
+        .orderBy("vec_id")
+    },
+    // Cosines via the same list_dot_product form every similarity oracle
+    // uses; argmax as row_number (cos desc, b_id) — the struct-max twin.
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         b AS (SELECT vec_id AS b_id, v AS bv FROM e WHERE vec_id % 50 = 0),
+         c AS (SELECT vec_id, v FROM e WHERE vec_id % 50 <> 0),
+         scored AS (
+           SELECT c.vec_id, b.b_id,
+             list_dot_product(c.v, b.bv) /
+               (sqrt(list_dot_product(c.v, c.v))
+                * sqrt(list_dot_product(b.bv, b.bv))) AS cos
+           FROM c CROSS JOIN b),
+         best AS (
+           SELECT vec_id, b_id, cos FROM (
+             SELECT vec_id, b_id, cos,
+               row_number() OVER (PARTITION BY vec_id
+                 ORDER BY cos DESC, b_id) AS rn
+             FROM scored) WHERE rn = 1)
+         SELECT vec_id, b_id, round(cos, 6) AS max_cos,
+           cos >= 0.4 AS contaminated
+         FROM best ORDER BY vec_id"""),
+    // Curation — benchmark decontamination: training docs sharing any
+    // word 4-gram with the held-out benchmark slice (doc_id % 50 == 0).
+    // The benchmark gram set is broadcast; the corpus side never shuffles.
+    QueryDef("q_decontaminate", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Curation.contaminated(
+        docs.filter(col("doc_id") % 50 =!= 0),
+        docs.filter(col("doc_id") % 50 === 0),
+        "doc_id", "text", n = 4)
+        .orderBy("doc_id")
+    },
+      DecontaminateSql),
+    // Curation — same decontamination through the Bloom-prefiltered scale
+    // path: corpus grams are pruned by a 64-Kbit bitmap of the benchmark
+    // grams inside the scan, then exact-verified, so the answer is
+    // bit-identical to q_decontaminate (and shares its oracle SQL).
+    QueryDef("q_decontaminate_bloom", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Curation.contaminatedBloom(
+        docs.filter(col("doc_id") % 50 =!= 0),
+        docs.filter(col("doc_id") % 50 === 0),
+        "doc_id", "text", n = 4)
+        .orderBy("doc_id")
+    },
+    // Bloom path is exact after its verify join → same oracle as the
+    // broadcast-semi variant.
+      DecontaminateSql),
+    // Curation — the semantic screen as a per-language FUNNEL
+    // (Curation.semanticContamination): every train doc's max cosine to
+    // any src19 benchmark embedding, thresholded into per-lang counts —
+    // the reporting twin of q_decontaminate_semantic's per-vector rows
+    // (that query keeps the %50 bench slice and the nearest-b_id
+    // verdict; this one keys the funnel on the q_curate_e2e src19
+    // eval-suite convention). τ = 0.40 is calibrated to the
+    // fixture's similarity range (max cross-source cosine ≈ 0.44; a
+    // production run against true duplicates sits at ≥ 0.95); the
+    // benchmark side broadcasts, max-cos is order-free, and the cosine
+    // is the bit-portable sequential dot, so the verdict oracle-checks.
+    QueryDef("q_decontaminate_funnel", (s, dir) => {
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("source"))
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id").as("doc_id"),
+          VectorOps.asDouble(col("embedding")).as("emb"))
+      val bench = docs.filter(col("source") === "src19").join(emb, "doc_id")
+      val train = docs.filter(col("source") =!= "src19").join(emb, "doc_id")
+      val mc = Curation.semanticContamination(train, bench, "doc_id", "emb")
+      train.select("doc_id", "lang").join(mc, Seq("doc_id"))
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_train"),
+          sum(when(col("max_cos") >= 0.40, 1L).otherwise(0L))
+            .as("n_contaminated"),
+          round(max(col("max_cos")), 6).as("max_cos"))
+        .withColumn("n_clean", col("n_train") - col("n_contaminated"))
+        .orderBy("lang")
+    },
+    // Semantic-decontamination funnel: exact cosine vs the broadcast
+    // src19 benchmark side, max per train doc, per-lang counts at τ = 0.40.
+      """WITH e AS (
+           SELECT vec_id AS doc_id, embedding::DOUBLE[] AS v
+           FROM embeddings),
+         d AS (SELECT doc_id, lang, source FROM documents),
+         b AS (SELECT e.v FROM e JOIN d USING (doc_id)
+               WHERE d.source = 'src19'),
+         tr AS (SELECT e.doc_id, d.lang, e.v FROM e JOIN d USING (doc_id)
+                WHERE d.source <> 'src19'),
+         mc AS (
+           SELECT tr.doc_id, tr.lang,
+             max(list_dot_product(tr.v, b.v)
+               / (sqrt(list_dot_product(tr.v, tr.v))
+                  * sqrt(list_dot_product(b.v, b.v)))) AS m
+           FROM tr CROSS JOIN b GROUP BY tr.doc_id, tr.lang)
+         SELECT lang, cast(count(*) AS BIGINT) AS n_train,
+           cast(sum(CASE WHEN m >= 0.40 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_contaminated,
+           round(max(m), 6) AS max_cos,
+           cast(count(*) - sum(CASE WHEN m >= 0.40 THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_clean
+         FROM mc GROUP BY lang ORDER BY lang"""),
+    // Curation — cross-document boilerplate: 10-word chunks occurring in
+    // more than one distinct doc (headers/footers/license blocks).
+    QueryDef("q_dedup_chunk", (s, dir) => {
+      Curation.boilerplateChunks(t(s, dir, "documents"),
+        "doc_id", "text", w = 10)
+        .orderBy("chunk")
+    },
+      """WITH c AS (
+           SELECT doc_id,
+             unnest(list_transform(generate_series(0, (len(w) - 1) // 10),
+               i -> array_to_string(w[i*10+1:i*10+10], ' '))) AS chunk
+           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
+         SELECT chunk, cast(count(DISTINCT doc_id) AS bigint) AS n_docs,
+           cast(count(*) AS bigint) AS n_occurrences
+         FROM c GROUP BY chunk
+         HAVING count(DISTINCT doc_id) > 1
+         ORDER BY chunk"""),
+    // Curation — boilerplate REMOVAL: the cleaning transform on top of the
+    // q_dedup_chunk census (drop cross-doc-repeated chunks, reassemble the
+    // doc in original order). Output carries the cleaned text's md5 so the
+    // whole reconstruction is hash-checked without shipping the text.
+    QueryDef("q_clean_boilerplate", (s, dir) => {
+      Curation.removeBoilerplate(t(s, dir, "documents"), "doc_id", "text",
+        w = 10)
+        .select(col("doc_id"), col("n_chunks"), col("n_kept"),
+          md5(col("clean_text")).as("clean_md5"))
+        .orderBy("doc_id")
+    },
+      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
+                    FROM documents),
+         c AS (
+           SELECT doc_id, u['pos'] AS pos, u['chunk'] AS chunk FROM (
+             SELECT doc_id,
+               unnest(list_transform(generate_series(0, (len(w) - 1) // 10),
+                 i -> {'pos': i,
+                       'chunk': array_to_string(w[i*10+1:i*10+10], ' ')}))
+                 AS u
+             FROM t)),
+         b AS (SELECT chunk FROM c GROUP BY chunk
+               HAVING count(DISTINCT doc_id) > 1),
+         k AS (SELECT doc_id, cast(count(*) AS bigint) AS n_kept,
+                 string_agg(chunk, ' ' ORDER BY pos) AS clean_text
+               FROM c WHERE chunk NOT IN (SELECT chunk FROM b)
+               GROUP BY doc_id),
+         tot AS (SELECT doc_id, cast(count(*) AS bigint) AS n_chunks
+                 FROM c GROUP BY doc_id)
+         SELECT tot.doc_id, n_chunks,
+           coalesce(n_kept, cast(0 AS bigint)) AS n_kept,
+           md5(coalesce(clean_text, '')) AS clean_md5
+         FROM tot LEFT JOIN k USING (doc_id) ORDER BY tot.doc_id"""),
+    // Curation — source-overlap matrix: pairwise shingle Jaccard between
+    // sources (bounded G² rows per shingle, no doc-pair explosion); the
+    // mix-design question "which sources duplicate each other" answered
+    // before any doc-level dedup. Jaccard = one division of exact longs —
+    // emitted unrounded (bit-identical in any IEEE engine).
+    QueryDef("q_source_overlap", (s, dir) => {
+      Curation.sourceOverlap(t(s, dir, "documents"), "source", "text", 3)
+        .orderBy("src_a", "src_b")
+    },
+      """WITH s AS (
+           SELECT DISTINCT g, sh FROM (
+             SELECT source AS g,
+               unnest(list_distinct(list_transform(
+                 generate_series(1, greatest(len(w) - 2, 1)),
+                 i -> array_to_string(w[i:i+2], ' ')))) AS sh
+             FROM (SELECT source, string_split_regex(text, '\s+') AS w
+                   FROM documents WHERE text IS NOT NULL))),
+         tot AS (SELECT g, cast(count(*) AS bigint) AS n FROM s GROUP BY g),
+         p AS (SELECT x.g AS src_a, y.g AS src_b,
+                 cast(count(*) AS bigint) AS n_shared
+               FROM s x JOIN s y ON x.sh = y.sh AND x.g < y.g
+               GROUP BY x.g, y.g)
+         SELECT src_a, src_b, n_shared, ta.n AS n_a, tb.n AS n_b,
+           cast(n_shared AS double) / (ta.n + tb.n - n_shared) AS jaccard
+         FROM p JOIN tot ta ON ta.g = src_a JOIN tot tb ON tb.g = src_b
+         ORDER BY src_a, src_b"""),
+    // L1/§2.9 — KMV distinct sketches, the ESTIMATION path beside
+    // q_source_overlap's exact shingle join: per-source k-minimum-value
+    // sketch (bounded MinKAgg state, map-side capped at k) + the unbiased
+    // (k−1)·2⁶⁰/h₍ₖ₎ cardinality estimate next to the exact count. A
+    // sketch is a pure function of the set — bit-portable, unlike HLL
+    // registers — so the whole estimator oracle-checks.
+    QueryDef("q_kmv_card", (s, dir) => {
+      val h = graft.operators.Sketch.fingerprintHashes(
+        t(s, dir, "documents"), "source", "text")
+      graft.operators.Sketch.kmv(h, "source", KmvK)
+        .select(col("source"), col("n_distinct"),
+          graft.operators.Sketch.kmvEstimate(col("sketch"), KmvK)
+            .as("kmv_est"))
+        .orderBy("source")
+    },
+    // KMV: the sketch is the k smallest distinct hashes — re-derivable by
+    // a plain rank, so the oracle re-runs the estimator end-to-end. The
+    // 2^60 literal is a power of two: exactly representable, and
+    // 15.0 * 2^60 / h is one fixed-order double expression both engines
+    // evaluate identically.
+      KmvSql(
+      s"""SELECT source, max(nd)::BIGINT AS n_distinct,
+            CASE WHEN max(nd) < $KmvK THEN max(nd)::DOUBLE
+                 ELSE round(${KmvK - 1}.0 * 1152921504606846976.0
+                   / max(CASE WHEN rn = $KmvK THEN h END)::DOUBLE, 6)
+            END AS kmv_est
+          FROM sk GROUP BY source ORDER BY source""")),
+    // L1/§2.9 — every pairwise source-overlap estimate from O(k) state
+    // per source: merged sketches rebuilt relationally (per-pair rank),
+    // shared counts via semi-joins, Jaccard = shared/merged — the
+    // 100 TB answer to "which sources duplicate each other" without
+    // touching the corpus twice.
+    QueryDef("q_kmv_overlap", (s, dir) => {
+      val h = graft.operators.Sketch.fingerprintHashes(
+        t(s, dir, "documents"), "source", "text")
+      val sk = graft.operators.Sketch.kmv(h, "source", KmvK)
+      graft.operators.Sketch.kmvJaccardPairs(sk, "source", KmvK)
+        .orderBy("src_a", "src_b")
+    },
+      KmvSql(
+      """SELECT g.src_a, g.src_b, g.n_merged,
+           coalesce(sh.n_shared, 0)::BIGINT AS n_shared,
+           round(coalesce(sh.n_shared, 0)::DOUBLE
+             / g.n_merged::DOUBLE, 6) AS jaccard_est
+         FROM (SELECT src_a, src_b, count(*) AS n_merged
+               FROM mk GROUP BY 1, 2) g
+         LEFT JOIN (
+           SELECT m.src_a, m.src_b, count(*) AS n_shared
+           FROM mk m
+           WHERE EXISTS (SELECT 1 FROM sk x
+                         WHERE x.source = m.src_a AND x.h = m.h)
+             AND EXISTS (SELECT 1 FROM sk y
+                         WHERE y.source = m.src_b AND y.h = m.h)
+           GROUP BY 1, 2) sh USING (src_a, src_b)
+         ORDER BY src_a, src_b""")),
+    // L1/§2.9 — KMV set algebra (Sketch.kmvSetPairs): pairwise union and
+    // intersection CARDINALITY estimates from the same O(k) sketches —
+    // the numbers a mix planner needs ("how many NEW docs does adding
+    // source B bring") that jaccard alone doesn't give.
+    QueryDef("q_kmv_union", (s, dir) => {
+      val h = graft.operators.Sketch.fingerprintHashes(
+        t(s, dir, "documents"), "source", "text")
+      val sk = graft.operators.Sketch.kmv(h, "source", KmvK)
+      graft.operators.Sketch.kmvSetPairs(sk, "source", KmvK)
+        .orderBy("src_a", "src_b")
+    },
+      KmvSql(
+      s"""SELECT src_a, src_b, union_est,
+            round(ns / nm * union_est, 6) AS inter_est
+          FROM (
+            SELECT g.src_a, g.src_b,
+              CASE WHEN g.n_merged < $KmvK THEN g.n_merged::DOUBLE
+                   ELSE round(${KmvK - 1}.0 * 1152921504606846976.0
+                     / g.hk::DOUBLE, 6) END AS union_est,
+              coalesce(sh.n_shared, 0)::DOUBLE AS ns,
+              g.n_merged::DOUBLE AS nm
+            FROM (SELECT src_a, src_b, count(*) AS n_merged,
+                    max(CASE WHEN rn = $KmvK THEN h END) AS hk
+                  FROM mg WHERE rn <= $KmvK GROUP BY 1, 2) g
+            LEFT JOIN (
+              SELECT m.src_a, m.src_b, count(*) AS n_shared
+              FROM mk m
+              WHERE EXISTS (SELECT 1 FROM sk x
+                            WHERE x.source = m.src_a AND x.h = m.h)
+                AND EXISTS (SELECT 1 FROM sk y
+                            WHERE y.source = m.src_b AND y.h = m.h)
+              GROUP BY 1, 2) sh USING (src_a, src_b))
+          ORDER BY src_a, src_b""")),
+    // S9-extension — the non-parquet format layer, oracle-checked END-TO-
+    // END: the documents corpus round-trips parquet → {csv, jsonl, orc} →
+    // back, and each format's re-read is digested with the order-free
+    // portable checksum over every column (Scale.tableChecksum) — any
+    // quoting, escaping, null-vs-empty, or type mangling in a format path
+    // breaks the hash. The oracle computes the same digest straight from
+    // parquet, so the three formats pass iff they preserved the corpus
+    // bit-for-bit. Scratch output lives at a FIXED path under the JVM
+    // temp dir and every write is mode=overwrite, so repeated
+    // invocations (bench sweeps, verify reruns) reuse the same
+    // corpus-sized footprint instead of accumulating tmp copies.
+    QueryDef("q_format_roundtrip", (s, dir) => {
+      import graft.sources.Sources
+      val cols = Seq("doc_id", "lang", "n_chars", "text")
+      val docs = t(s, dir, "documents").select(cols.map(col): _*)
+      // keyed by applicationId: per-session unique (no cross-process or
+      // cross-user /tmp collision), constant within a session (bench
+      // sweeps overwrite instead of accumulating)
+      val base = new java.io.File(
+        System.getProperty("java.io.tmpdir"),
+        s"graft_fmt_${s.sparkContext.applicationId}").toString
+      Sources.writeCsv(docs, s"$base/csv")
+      Sources.writeJsonLines(docs, s"$base/jsonl")
+      Sources.writeOrc(docs, s"$base/orc")
+      def digest(df: DataFrame, fmt: String) =
+        Scale.tableChecksum(df, cols)
+          .select(lit(fmt).as("format"), col("checksum"), col("n_rows"))
+      digest(Sources.csv(s, s"$base/csv", docs.schema), "csv")
+        .unionByName(
+          digest(Sources.jsonLines(s, s"$base/jsonl", docs.schema), "jsonl"))
+        .unionByName(digest(Sources.orc(s, s"$base/orc"), "orc"))
+        .orderBy("format")
+    },
+    // The round-trip is correct iff every format's digest equals the one
+    // computed straight from parquet — so the oracle is that digest,
+    // cross-joined onto the three format labels.
+      """WITH d AS (
+           SELECT lpad(cast(cast(sum(('0x' || substring(md5(concat_ws('|',
+               CASE WHEN doc_id IS NULL THEN '0' ELSE '1' || length(cast(doc_id AS VARCHAR)) || ':' || cast(doc_id AS VARCHAR) END,
+               CASE WHEN lang IS NULL THEN '0' ELSE '1' || length(lang) || ':' || lang END,
+               CASE WHEN n_chars IS NULL THEN '0' ELSE '1' || length(cast(n_chars AS VARCHAR)) || ':' || cast(n_chars AS VARCHAR) END,
+               CASE WHEN text IS NULL THEN '0' ELSE '1' || length(text) || ':' || text END
+             )), 1, 14))::BIGINT) AS DECIMAL(38,0)) AS VARCHAR), 38, '0')
+               AS checksum,
+             count(*) AS n_rows
+           FROM documents)
+         SELECT f.format, d.checksum, d.n_rows
+         FROM (VALUES ('csv'), ('jsonl'), ('orc')) f(format) CROSS JOIN d
+         ORDER BY f.format"""),
+    // Curation — the end-to-end pipeline: quality gate (≥20 tokens) →
+    // exact dedup on the canonical-text fingerprint (min doc_id survives)
+    // → benchmark decontamination (4-gram overlap vs the held-out src19
+    // "eval suite") → per-language funnel counts. Each stage is an
+    // already-oracle-checked operator; this query pins their COMPOSITION.
+    QueryDef("q_curate_e2e", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val bench = docs.filter(col("source") === "src19")
+      val train = docs.filter(col("source") =!= "src19")
+      val q = train.filter(size(split(col("text"), "\\s+")) >= 20)
+      // persisted: uniq feeds the contamination scan, the anti join's left
+      // side, AND its own stage count
+      val uniq = Dedup.exactByKey(
+        q.withColumn("__fp", Dedup.fingerprint(col("text"))),
+        Seq("__fp"), Seq(col("doc_id").asc))
+        .drop("__fp")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val clean = uniq.join(
+        Curation.contaminated(uniq, bench, "doc_id", "text", 4),
+        Seq("doc_id"), "left_anti")
+      def stage(df: DataFrame, alias: String) =
+        df.groupBy("lang").agg(count(lit(1)).as(alias))
+      stage(train, "n_raw")
+        .join(stage(q, "n_quality"), Seq("lang"), "left")
+        .join(stage(uniq, "n_unique"), Seq("lang"), "left")
+        .join(stage(clean, "n_clean"), Seq("lang"), "left")
+        .na.fill(0L, Seq("n_quality", "n_unique", "n_clean"))
+        .orderBy("lang")
+    },
+      """WITH train AS (SELECT * FROM documents WHERE source <> 'src19'),
+         bench AS (SELECT * FROM documents WHERE source = 'src19'),
+         q AS (SELECT * FROM train
+               WHERE len(string_split_regex(text, '\s+')) >= 20),
+         u AS (SELECT doc_id, text, lang FROM (
+             SELECT doc_id, text, lang, row_number() OVER (
+               PARTITION BY regexp_replace(lower(text), '\s+', ' ', 'g')
+               ORDER BY doc_id) AS rn
+             FROM q) WHERE rn = 1),
+         bg AS (SELECT DISTINCT gram FROM (
+             SELECT unnest(list_distinct(list_transform(
+               generate_series(1, greatest(len(w) - 3, 1)),
+               i -> array_to_string(w[i:i+3], ' ')))) AS gram
+             FROM (SELECT string_split_regex(text, '\s+') AS w FROM bench))),
+         contam AS (SELECT DISTINCT doc_id FROM (
+             SELECT doc_id, unnest(list_distinct(list_transform(
+               generate_series(1, greatest(len(w) - 3, 1)),
+               i -> array_to_string(w[i:i+3], ' ')))) AS gram
+             FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
+                   FROM u))
+           WHERE gram IN (SELECT gram FROM bg)),
+         clean AS (SELECT * FROM u
+                   WHERE doc_id NOT IN (SELECT doc_id FROM contam))
+         SELECT r.lang, r.n_raw,
+           coalesce(qq.n_quality, cast(0 AS bigint)) AS n_quality,
+           coalesce(uu.n_unique, cast(0 AS bigint)) AS n_unique,
+           coalesce(cc.n_clean, cast(0 AS bigint)) AS n_clean
+         FROM (SELECT lang, cast(count(*) AS bigint) AS n_raw
+               FROM train GROUP BY lang) r
+         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_quality
+                    FROM q GROUP BY lang) qq USING (lang)
+         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_unique
+                    FROM u GROUP BY lang) uu USING (lang)
+         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_clean
+                    FROM clean GROUP BY lang) cc USING (lang)
+         ORDER BY r.lang"""),
+    // Pipeline — per-document funnel ATTRIBUTION, the debugging twin of
+    // q_curate_e2e's per-language counts: for EVERY candidate doc, the
+    // FIRST stage that dropped it — low_quality | duplicate (with the
+    // surviving doc's id) | contaminated | kept. The "why was my
+    // document removed" table a pipeline operator actually gets asked
+    // for; attribution reuses each stage's own predicate (no second
+    // algorithm to drift): quality is the scan-local token gate, the
+    // duplicate verdict is one fingerprint-survivor join, contamination
+    // is the same n-gram screen — all corpus-scale-shaped (per-doc rows
+    // stream to the sink; nothing gathers).
+    QueryDef("q_curate_explain", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val bench = docs.filter(col("source") === "src19")
+      val train = docs.filter(col("source") =!= "src19")
+        .select(col("doc_id"), col("lang"), col("text"),
+          (size(split(col("text"), "\\s+")) >= 20).as("__q"))
+      val q = train.filter(col("__q"))
+        .withColumn("__fp", Dedup.fingerprint(col("text")))
+      val surv = q.groupBy("__fp").agg(min("doc_id").as("__surv"))
+      // (doc_id → its fingerprint's survivor) for every quality-passing
+      // doc; persisted — the survivor filter and the final attribution
+      // both consume it
+      val keepMap = q.join(surv, Seq("__fp"))
+        .select(col("doc_id"), col("__surv"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val uniq = q.join(
+        keepMap.filter(col("doc_id") === col("__surv")).select("doc_id"),
+        Seq("doc_id"), "left_semi")
+      val contam = Curation.contaminated(uniq, bench, "doc_id", "text", 4)
+        .select(col("doc_id"), lit(true).as("__cont"))
+      val out = train.select(col("doc_id"), col("lang"), col("__q"))
+        .join(keepMap, Seq("doc_id"), "left")
+        .join(contam, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("lang"),
+          // NULL text gives a NULL gate verdict — it is quality-dropped
+          // (q_curate_e2e excludes it from n_quality), so the null must
+          // land on low_quality, not fall through to 'kept'
+          when(col("__q").isNull || !col("__q"), lit("low_quality"))
+            .when(col("__surv") =!= col("doc_id"), lit("duplicate"))
+            .when(col("__cont"), lit("contaminated"))
+            .otherwise(lit("kept")).as("outcome"),
+          when(col("__surv") =!= col("doc_id"), col("__surv"))
+            .as("survivor"))
+        .orderBy("doc_id")
+      // keepMap backs both consumers of one action — freed once the
+      // caller's materialization completes, so repeated runs in one
+      // session don't accumulate MEMORY_AND_DISK blocks
+      Scale.releaseAfterUse(out, Seq(keepMap))
+    },
+    // Per-doc attribution: the q_curate_e2e CTE chain re-read per
+    // document — survivor map from the normalized-text partition,
+    // contamination from the same 4-gram screen, outcomes by funnel
+    // order.
+      """WITH train AS (SELECT doc_id, lang, text,
+             len(string_split_regex(text, '\s+')) >= 20 AS q
+           FROM documents WHERE source <> 'src19'),
+         bench AS (SELECT * FROM documents WHERE source = 'src19'),
+         qd AS (SELECT doc_id, lang, text FROM train WHERE q),
+         surv AS (SELECT regexp_replace(lower(text), '\s+', ' ', 'g')
+               AS fp, min(doc_id) AS survivor
+             FROM qd GROUP BY 1),
+         keepmap AS (SELECT qd.doc_id, s.survivor
+             FROM qd JOIN surv s
+               ON regexp_replace(lower(qd.text), '\s+', ' ', 'g') = s.fp),
+         u AS (SELECT qd.* FROM qd JOIN keepmap k ON qd.doc_id = k.doc_id
+               WHERE k.doc_id = k.survivor),
+         bg AS (SELECT DISTINCT gram FROM (
+             SELECT unnest(list_distinct(list_transform(
+               generate_series(1, greatest(len(w) - 3, 1)),
+               i -> array_to_string(w[i:i+3], ' ')))) AS gram
+             FROM (SELECT string_split_regex(text, '\s+') AS w FROM bench))),
+         contam AS (SELECT DISTINCT doc_id FROM (
+             SELECT doc_id, unnest(list_distinct(list_transform(
+               generate_series(1, greatest(len(w) - 3, 1)),
+               i -> array_to_string(w[i:i+3], ' ')))) AS gram
+             FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
+                   FROM u))
+           WHERE gram IN (SELECT gram FROM bg))
+         SELECT t.doc_id, t.lang,
+           CASE WHEN t.q IS NOT TRUE THEN 'low_quality'
+             WHEN k.survivor <> t.doc_id THEN 'duplicate'
+             WHEN t.doc_id IN (SELECT doc_id FROM contam)
+               THEN 'contaminated'
+             ELSE 'kept' END AS outcome,
+           CASE WHEN t.q AND k.survivor <> t.doc_id THEN k.survivor
+             END AS survivor
+         FROM train t LEFT JOIN keepmap k ON t.doc_id = k.doc_id
+         ORDER BY t.doc_id"""),
+    // Pipeline — the end-to-end training-data PREPARE composition
+    // (q_curate_e2e's sibling for the mechanics half): quality gate
+    // (≥ 20 ws tokens) → unigram TOKENIZE under the trained+pruned
+    // model with the OOV char fallback (total — every gated doc gets a
+    // count) → length-bucketed sequence PACKING (4 shards, capacity
+    // 128) → shard-INTERLEAVED consumption order (sequences rank
+    // within their shard by (bucket, seq_id); global pos round-robins
+    // shards — the q_interleave formula with shards as sources). Each
+    // stage is an already-oracle-checked operator; this query pins
+    // their COMPOSITION end to end, one row per packed sequence in
+    // consumption order. The tokenizer trains on the FULL corpus (a
+    // tokenizer is an upstream artifact shared across data cuts);
+    // the gate decides only which docs get packed.
+    QueryDef("q_prepare_e2e", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents")
+      val gated = docs.filter(col("text").isNotNull &&
+        size(split(col("text"), "\\s+")) >= 20)
+      // the trainer's full-corpus vocabulary is a SUPERSET of the gated
+      // corpus' words, so the serving DP reuses it (one corpus word-agg)
+      val voc = graft.operators.Unigram.boundedVocab(docs, "text",
+          UniWordLen)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pruned = graft.operators.Unigram.trainAndPrune(docs, "text",
+          UniPieceLen, UniWordLen, UniMinCount, keepPieces = 10,
+          vocab = Some(voc))
+        .select(col("piece"), col("cost"))
+      val counts = graft.operators.Unigram.tokenCountsOov(gated,
+        "doc_id", "text", pruned, UniPieceLen, UniOovWordLen,
+        vocab = Some(voc))
+      val seqs = graft.operators.Sampling.packSequences(counts, "doc_id",
+          "n_tokens", "prep1", nShards = 4, capacity = 128)
+        .groupBy("shard", "bucket", "seq_id")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("used_tokens"))
+        .withColumn("padding", lit(128L) - col("used_tokens"))
+      val w = Window.partitionBy("shard").orderBy("bucket", "seq_id")
+      graft.operators.Scale.releaseAfterUse(
+        seqs.withColumn("srank", row_number().over(w).cast("long"))
+          .withColumn("pos", (col("srank") - 1) * 4 + col("shard"))
+          .select("pos", "shard", "bucket", "seq_id", "n_docs",
+            "used_tokens", "padding")
+          .orderBy("pos"),
+        Seq(voc))
+    },
+    // Prepare composition: the q_unigram_oov model+serving CTEs feed a
+    // per-DOC token count over the gated corpus, then the q_seq_pack
+    // packing formulas (salt 'prep1') and the q_interleave position
+    // formula with shards as sources.
+      s"""$UniCost2Ctes,
+         ${unigramDpCtes("v", "cost2", UniOovWordLen)},
+         pw AS (
+           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
+           FROM vseg GROUP BY word),
+         gated AS (
+           SELECT doc_id, text FROM documents
+           WHERE text IS NOT NULL
+             AND len(string_split_regex(text, '\\s+')) >= 20),
+         dw AS (
+           SELECT doc_id, word FROM (
+             SELECT doc_id, unnest(string_split_regex(text, '\\s+'))
+               AS word
+             FROM gated)
+           WHERE len(word) > 0),
+         tc AS (
+           SELECT doc_id,
+             cast(sum(coalesce(p.n_pieces, len(word))) AS BIGINT)
+               AS n_tokens
+           FROM dw LEFT JOIN pw p USING (word)
+           GROUP BY doc_id),
+         pk AS (
+           SELECT doc_id, n_tokens,
+             ('0x' || substr(md5(concat('prep1', '|',
+               cast(doc_id AS VARCHAR))), 1, 15))::BIGINT % 4 AS shard,
+             CASE WHEN n_tokens <= 1 THEN 1 WHEN n_tokens <= 2 THEN 2
+               WHEN n_tokens <= 4 THEN 4 WHEN n_tokens <= 8 THEN 8
+               WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
+               WHEN n_tokens <= 64 THEN 64 ELSE 128 END AS bucket
+           FROM tc WHERE n_tokens >= 1 AND n_tokens <= 128),
+         pr AS (
+           SELECT shard, bucket, n_tokens,
+             row_number() OVER (PARTITION BY shard, bucket
+               ORDER BY n_tokens DESC, doc_id) - 1 AS rn
+           FROM pk),
+         sq AS (
+           SELECT shard, bucket, (rn * bucket) // 128 AS seq_id,
+             cast(count(*) AS BIGINT) AS n_docs,
+             cast(sum(n_tokens) AS BIGINT) AS used_tokens,
+             cast(128 - sum(n_tokens) AS BIGINT) AS padding
+           FROM pr GROUP BY shard, bucket, (rn * bucket) // 128)
+         SELECT ((srank - 1) * 4 + shard)::bigint AS pos, shard, bucket,
+           seq_id, n_docs, used_tokens, padding FROM (
+           SELECT shard, bucket, seq_id, n_docs, used_tokens, padding,
+             row_number() OVER (PARTITION BY shard
+               ORDER BY bucket, seq_id) AS srank
+           FROM sq)
+         ORDER BY pos"""),
+    // Curation — the TRAINED model gate composed into the funnel: NB
+    // log-odds weights (trained in-plan, never collected) gate docs at
+    // margin ≥ 0, survivors dedup by canonical fingerprint, per-lang
+    // stage counts — q_curate_e2e's shape with the rule-based length
+    // gate swapped for the trained classifier.
+    QueryDef("q_curate_trained", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val w = graft.operators.TextAnalysis.trainTokenLogOdds(
+        docs.withColumn("__y", col("lang") === "en"),
+        "doc_id", "text", "__y")
+      val gate = graft.operators.TextAnalysis.scoreWithTokenWeights(
+        docs, "doc_id", "text", w)
+        .filter(col("pass")).select(col("doc_id"))
+      val passed = docs.join(gate, Seq("doc_id"), "left_semi")
+      val uniq = Dedup.exactByKey(
+        passed.withColumn("__fp", Dedup.fingerprint(col("text"))),
+        Seq("__fp"), Seq(col("doc_id").asc)).drop("__fp")
+      def stage(df: DataFrame, alias: String) =
+        df.groupBy("lang").agg(count(lit(1)).as(alias))
+      stage(docs, "n_raw")
+        .join(stage(passed, "n_pass"), Seq("lang"), "left")
+        .join(stage(uniq, "n_unique"), Seq("lang"), "left")
+        .na.fill(0L, Seq("n_pass", "n_unique"))
+        .orderBy("lang")
+    },
+    // NB training CTEs as in q_quality_train_score, then the funnel:
+    // margin-gated docs → fingerprint dedup → per-lang stage counts.
+      "WITH " + NbTokenWeightCtes + """,
+         pass AS (
+           SELECT t.doc_id FROM toks t JOIN w ON w.tok = t.tok
+           GROUP BY t.doc_id HAVING sum(w.wt) >= 0),
+         p AS (SELECT * FROM documents
+               WHERE doc_id IN (SELECT doc_id FROM pass)),
+         u AS (SELECT doc_id, lang FROM (
+             SELECT doc_id, lang, row_number() OVER (
+               PARTITION BY md5(regexp_replace(lower(text), '\s+', ' ', 'g'))
+               ORDER BY doc_id) AS rn
+             FROM p) WHERE rn = 1)
+         SELECT r.lang, r.n_raw,
+           coalesce(pp.n_pass, cast(0 AS bigint)) AS n_pass,
+           coalesce(uu.n_unique, cast(0 AS bigint)) AS n_unique
+         FROM (SELECT lang, cast(count(*) AS bigint) AS n_raw
+               FROM documents GROUP BY lang) r
+         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_pass
+                    FROM p GROUP BY lang) pp USING (lang)
+         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_unique
+                    FROM u GROUP BY lang) uu USING (lang)
+         ORDER BY r.lang"""),
+    // Curation — fixed-size token chunking with overlap (size 50, stride
+    // 40): the split step between cleaning and packing, so long documents
+    // become training-window-sized pieces with 10-token continuity overlap.
+    // One explode of ~n_tokens/stride chunk starts per doc, scan-local;
+    // slice clamps the tail chunk. No shuffle until the output sort.
+    QueryDef("q_chunk_docs", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"), split(col("text"), "\\s+").as("w"))
+        .select(col("doc_id"), col("w"),
+          explode(sequence(lit(0L),
+            floor((size(col("w")) - 1) / 40.0).cast("long"))).as("chunk_id"))
+        .select(col("doc_id"), col("chunk_id"),
+          size(slice(col("w"), (col("chunk_id") * 40 + 1).cast("int"),
+            lit(50))).as("n_chunk_tokens"),
+          array_join(slice(col("w"), (col("chunk_id") * 40 + 1).cast("int"),
+            lit(50)), " ").as("chunk"))
+        .orderBy("doc_id", "chunk_id")
+    },
+      """WITH t AS (
+           SELECT doc_id, string_split_regex(text, '\s+') AS w
+           FROM documents),
+         nums AS (SELECT unnest(generate_series(0,
+           (SELECT coalesce(max((len(w) - 1) // 40), 0) FROM t))) AS chunk_id)
+         SELECT doc_id, chunk_id,
+           len(w[(chunk_id * 40 + 1):(chunk_id * 40 + 50)]) AS n_chunk_tokens,
+           array_to_string(w[(chunk_id * 40 + 1):(chunk_id * 40 + 50)], ' ')
+             AS chunk
+         FROM t JOIN nums ON chunk_id <= (len(w) - 1) // 40
+         ORDER BY doc_id, chunk_id"""),
+    // Curation — token-budget sequence packing (512-token sequences,
+    // first-fit by running offset within each language).
+    QueryDef("q_pack_sequences", (s, dir) => {
+      Curation.packSequences(
+        t(s, dir, "documents")
+          .select(col("doc_id"), col("lang"),
+            TA.tokenCountWs(col("text")).as("n_tokens")),
+        "lang", "doc_id", "n_tokens", budget = 512)
+        .orderBy("lang", "seq_id")
+    },
+      """WITH d AS (
+           SELECT doc_id, lang,
+             len(string_split(text, ' ')) AS n_tokens FROM documents),
+         c AS (
+           SELECT lang, n_tokens,
+             sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id) AS cum
+           FROM d)
+         SELECT lang, cast((cum - n_tokens) // 512 AS bigint) AS seq_id,
+           cast(count(*) AS bigint) AS n_docs,
+           cast(sum(n_tokens) AS bigint) AS sum_tokens
+         FROM c GROUP BY lang, (cum - n_tokens) // 512
+         ORDER BY lang, seq_id"""),
+    // Curation — int8 embedding quantization with per-vector range and
+    // mean absolute reconstruction error.
+    QueryDef("q_embed_quantize", (s, dir) => {
+      val e = t(s, dir, "embeddings")
+        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
+        .withColumn("mn", array_min(col("v")))
+        .withColumn("mx", array_max(col("v")))
+      e.withColumn("qv", Curation.quantizeInt8(col("v"), col("mn"), col("mx")))
+        .select(col("vec_id"),
+          array_min(col("qv")).as("qmin"),
+          array_max(col("qv")).as("qmax"),
+          round(Curation.meanAbsDequantError(
+            col("v"), col("qv"), col("mn"), col("mx")), 6).as("mean_abs_err"))
+        .orderBy("vec_id")
+    },
+      """WITH e AS (
+           SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         p AS (
+           SELECT vec_id, v, list_min(v) AS mn, list_max(v) AS mx FROM e),
+         q AS (
+           SELECT vec_id, v, mn, mx,
+             list_transform(v, x ->
+               floor((x - mn) * 255.0 / (mx - mn) + 0.5)::INT - 128) AS qv
+           FROM p)
+         SELECT vec_id,
+           list_min(qv) AS qmin, list_max(qv) AS qmax,
+           round(list_reduce(
+               list_prepend(0.0, list_transform(generate_series(1, len(v)),
+                 i -> abs(v[i] - ((qv[i] + 128)::DOUBLE * (mx - mn) / 255.0 + mn)))),
+               (acc, e2) -> acc + e2) / len(v), 6) AS mean_abs_err
+         FROM q ORDER BY vec_id"""),
+    // L2 — exact brute-force cosine top-10 for 5 query vectors.
+    QueryDef("q_sim_exact", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      Similarity.exactTopK(emb, qs, 10)
+        .select(col("q_id"), col("vec_id"), col("rn"),
+          round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
+    },
       """SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
            SELECT q_id, vec_id, cos,
              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
@@ -5563,45 +4509,60 @@ object Pipeline {
                   * sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))) AS cos
              FROM embeddings q JOIN embeddings e
                ON q.vec_id < 5 AND e.vec_id <> q.vec_id))
-         WHERE rn <= 10 ORDER BY q_id, rn""",
+         WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — SQ8 scalar-quantized serving (operators/Sq.scala — the FAISS
+    // IndexScalarQuantizer QT_8bit shape): per-DIMENSION affine int8
+    // codes trained on the corpus, asymmetric query-vs-reconstruction
+    // scoring, EXACT-INTEGER end to end in the shared micro-int frame
+    // (one round per element, then integer scales / half-up integer-
+    // division codes / long-dot scores — the q_opq_balance discipline,
+    // so the oracle replays every step in BIGINT).
+    QueryDef("q_sq8_search", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      graft.operators.Sq.sq8TopK(emb, qs, topK = 10, dim = 64)
+        .orderBy("q_id", "rn")
+    },
     // SQ8 replay: micro-int frame → per-dim (min, max−min) scales →
     // half-up integer-division codes (BIGINT //) → 255-scaled integer
     // reconstruction → exact long dot per (query, vector) — every step
     // after the shared round(·,0) is BIGINT arithmetic on both engines.
-    "q_sq8_search" ->
       s"""WITH $Sq8Ctes
          SELECT q_id, vec_id, rn, score FROM sqranked
-         WHERE rn <= 10 ORDER BY q_id, rn""",
-    "q_sq8_recall" ->
+         WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — and its measured recall@10 against the exact cosine truth:
+    // the third point on the compression/recall curve (exact 1.0 at
+    // 512 B/vec, SQ8 at 64 B, IVF-PQ at ~5 B) — read beside
+    // q_ivf_pq_recall to price each byte of index. The corpus frame
+    // persists once for its three consumers (the ivfPqRecallOver
+    // convention).
+    QueryDef("q_sq8_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Sq.sq8TopK(emb, qs, topK = 10, dim = 64)
+    },
       s"""WITH $Sq8Ctes,
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          ${embExactCte(5, 10)},
          sqtop AS (SELECT q_id, vec_id FROM sqranked WHERE rn <= 10)
-         ${recallTailSql("sqtop", 10)}""",
+         ${recallTailSql("sqtop", 10)}"""),
+    // L2 — SQ8 composed with IVF cells (Sq.sq8IvfTopK): the production
+    // layout — SQ8 codes per cell, nprobe=4 probing, scoring touches only
+    // the probed cells — measured against the same exact truth, so the
+    // flat-SQ8 vs IVF-SQ8 recall delta IS the price of cell pruning at
+    // this nprobe (read beside q_ivf_pq_recall for the PQ point).
+    QueryDef("q_sq8_ivf_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Sq.sq8IvfTopK(emb, qs, ivfSeeds(emb),
+        topK = 10, nprobe = 4, dim = 64)
+    },
     // IVF-composed SQ8: the fixed-first-16 assignment/probe CTEs (the
     // q_ivf_pq_recall quantizer) restrict the SQ8 long-dot scoring to
     // the probed cells; same exact truth, same recall tail.
-    "q_sq8_ivf_recall" ->
       s"""WITH $Sq8Ctes,
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         c AS (SELECT vec_id AS cid, v AS cv,
-                 list_dot_product(v, v) AS cnorm2
-               FROM e WHERE vec_id < 16),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
+         ${ivfAssignCtes("e")},
          q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
+         $IvfProbesCte,
          sqivfs AS (
            SELECT p.q_id, r.vec_id,
              CAST(sum(qx.xq * r.r) AS BIGINT) AS score
@@ -5616,42 +4577,60 @@ object Pipeline {
                PARTITION BY q_id ORDER BY score DESC, vec_id) AS rn
              FROM sqivfs) WHERE rn <= 10),
          ${embExactCte(5, 10)}
-         ${recallTailSql("sqivftop", 10)}""",
+         ${recallTailSql("sqivftop", 10)}"""),
+    // L2 — BINARY (1-bit) quantization serving (operators/Bq.scala — the
+    // FAISS IndexBinaryFlat shape): sign bits packed 32/long (MSB-first
+    // integer fold — no bit-63/2^63 hazards in either engine), Hamming =
+    // Σ popcount(XOR), ties on vec_id. The oracle scores by DIRECT
+    // sign-disagreement counting with no packing, so the pack/XOR/
+    // popcount path is cross-proved (the q_media_info parser/synth
+    // convention).
+    QueryDef("q_bq_search", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      graft.operators.Bq.bqTopK(emb, qs, topK = 10, dim = 64)
+        .orderBy("q_id", "rn")
+    },
     // Binary quantization replay: the oracle ranks by DIRECT per-position
     // sign-disagreement counts (no packing), so the engine's pack-32-bits
     // /XOR/popcount path is proved faithful by the hash compare — a
     // packing bug breaks it (the parser/synth pair convention).
-    "q_bq_search" ->
       s"""WITH $BqCtes
          SELECT q_id, vec_id, rn, ham AS hamming FROM branked
-         WHERE rn <= 10 ORDER BY q_id, rn""",
-    "q_bq_recall" ->
+         WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — binary codes-only recall@10 vs the exact cosine truth: the
+    // FOURTH point on the compression/recall curve (exact 512 B/vec →
+    // SQ8 64 B → PQ ~5 B → sign bits 8 B) — read beside q_sq8_recall /
+    // q_ivf_pq_recall to price each byte of index.
+    QueryDef("q_bq_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Bq.bqTopK(emb, qs, topK = 10, dim = 64)
+    },
       s"""WITH $BqCtes,
          ${embExactCte(5, 10)},
          bqtop AS (SELECT q_id, vec_id FROM branked WHERE rn <= 10)
-         ${recallTailSql("bqtop", 10)}""",
+         ${recallTailSql("bqtop", 10)}"""),
+    // L2 — binary codes composed with IVF cells (Bq.bqIvfTopK): sign
+    // words per cell, nprobe=4 probing, Hamming touches only the probed
+    // cells — the IndexBinaryIVF production layout, measured against the
+    // same exact truth (read beside q_sq8_ivf_recall / q_ivf_pq_recall
+    // for the compression×probe grid). Measured INVERSION at sf0.01:
+    // 0.46 here vs flat q_bq_recall's 0.32 — dim-64 Hamming has only 65
+    // possible values, so the flat search loses true neighbors inside
+    // corpus-wide tie groups to the id tie-break, while cell-bounding
+    // shrinks each tie pool to co-located vectors; for 1-bit codes the
+    // coarse quantizer is a RANKING signal, not just a pruning lever.
+    QueryDef("q_bq_ivf_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Bq.bqIvfTopK(emb, qs, ivfSeeds(emb),
+        topK = 10, nprobe = 4, dim = 64)
+    },
     // IVF-composed binary: the fixed-first-16 assignment/probe CTEs
     // restrict the sign-count ranking to the probed cells; same exact
     // truth, same recall tail.
-    "q_bq_ivf_recall" ->
       s"""WITH $BqCtes,
-         c AS (SELECT vec_id AS cid, v AS cv,
-                 list_dot_product(v, v) AS cnorm2
-               FROM e WHERE vec_id < 16),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
+         ${ivfAssignCtes("e")},
+         $IvfProbesCte,
          bivf AS (
            SELECT b.q_id, b.vec_id, b.ham FROM bham b
            JOIN assign a ON a.vec_id = b.vec_id
@@ -5662,36 +4641,54 @@ object Pipeline {
                PARTITION BY q_id ORDER BY ham, vec_id) AS rn
              FROM bivf) WHERE rn <= 10),
          ${embExactCte(5, 10)}
-         ${recallTailSql("bivftop", 10)}""",
+         ${recallTailSql("bivftop", 10)}"""),
+    // L2 — Johnson–Lindenstrauss random-projection recall: the
+    // DIMENSIONALITY axis of the compression grid (the quantization
+    // axis is SQ8/PQ/BQ) — project dim 64 → 16 through the seeded
+    // Gaussian plane basis (Similarity.hyperplanes, the sign-LSH basis
+    // WITHOUT the sign: JL says random projections preserve pairwise
+    // geometry in expectation), rank by exact cosine IN THE PROJECTED
+    // space, measure recall@10 vs the full-dimension truth, as a CURVE
+    // over proj_dim ∈ {16, 32}. 2-4× fewer bytes AND cheaper dots per
+    // candidate; the projection is one scan-local select of codegen'd
+    // graft_dot literals. Both engines compute the identical sequential
+    // double dots, so the whole row hash-checks (the q_sim_lsh_topk
+    // plane convention). Measured: 0.10 at BOTH dims on the harness
+    // fixtures — the synthetic embeddings are near-isotropic
+    // (q_pca_variance), so top-10 margins sit inside projection noise;
+    // the row exists to MEASURE that trade per corpus (on real
+    // embeddings with decaying spectra the curve rises toward 1), the
+    // same role the rotation probe plays for quantizer modes.
+    QueryDef("q_jl_recall", (s, dir) => {
+      val emb = embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qs = queriesOf(emb)
+      val exact = Similarity.exactTopK(emb, qs, 10)
+        .select(col("q_id"), col("vec_id"))
+      JlDims.map { d =>
+        val planes = Similarity.hyperplanes(d, 64)
+        def proj(c: org.apache.spark.sql.Column) =
+          array(planes.map(p => VectorOps.dot(c, typedlit(p))): _*)
+        val approx = Similarity.exactTopK(
+            emb.select(col("vec_id"), proj(col("emb")).as("emb")),
+            qs.select(col("q_id"), proj(col("q_emb")).as("q_emb")), 10)
+          .select(col("q_id"), col("vec_id"))
+        Similarity.recallAtK(exact, approx, 10)
+          .select(lit(d.toLong).as("proj_dim"), col("q_id"),
+            col("n_hit"), col("recall"))
+      }.reduce(_ unionByName _).orderBy("proj_dim", "q_id")
+    },
     // JL projection: project through the same seeded plane literals the
     // engine unrolls, exact cosine in the 16-dim space, recall vs the
     // full-dimension truth.
-    "q_jl_recall" -> {
+      {
       val blocks = JlDims.map { d =>
         val proj = jlProjSql(
           graft.operators.Similarity.hyperplanes(d, 64), "embedding")
         s"""pe$d AS (SELECT vec_id, $proj AS pv FROM embeddings),
-           ptop$d AS (
-             SELECT q_id, vec_id FROM (
-               SELECT q_id, vec_id, row_number() OVER (
-                 PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-               FROM (
-                 SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
-                   list_dot_product(x.pv, q.pv) /
-                     (sqrt(list_dot_product(x.pv, x.pv))
-                      * sqrt(list_dot_product(q.pv, q.pv))) AS cos
-                 FROM pe$d q JOIN pe$d x
-                   ON q.vec_id < 5 AND x.vec_id <> q.vec_id))
-             WHERE rn <= 10),
+           ${embExactCte(5, 10, s"pe$d", s"ptop$d", "pv")},
            rec$d AS (
-             SELECT CAST($d AS BIGINT) AS proj_dim, exact.q_id,
-               cast(sum(CASE WHEN r.vec_id IS NULL THEN 0 ELSE 1 END)
-                 AS bigint) AS n_hit,
-               cast(sum(CASE WHEN r.vec_id IS NULL THEN 0 ELSE 1 END)
-                 AS double) / 10 AS recall
-             FROM exact LEFT JOIN ptop$d r
-               ON exact.q_id = r.q_id AND exact.vec_id = r.vec_id
-             GROUP BY exact.q_id)"""
+             ${recallRowsSql(s"ptop$d", 10, s"CAST($d AS BIGINT) AS proj_dim, ")})"""
       }.mkString(",\n")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                    FROM embeddings),
@@ -5700,10 +4697,26 @@ object Pipeline {
          SELECT * FROM (${JlDims.map(d => s"SELECT * FROM rec$d")
            .mkString(" UNION ALL ")})
          ORDER BY proj_dim, q_id"""
+    }),
+    // L2 — IVF-Flat search in the RAW space (Similarity.ivfTopK — FAISS
+    // IndexIVFFlat): first-16-seed coarse quantizer, probe 4 cells,
+    // exact cosine over only the probed candidates — the uncompressed
+    // middle of the accuracy/cost curve (full recall fidelity within
+    // the probed cells, 4/16 of the scan). The corpus never shuffles:
+    // cell assignment is scan-local, the query side explodes to nprobe
+    // rows and broadcasts into the cell join.
+    QueryDef("q_ivf_flat", (s, dir) => {
+      val emb = embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qs = queriesOf(emb)
+      val centroids = ivfSeeds(emb)
+      Similarity.ivfTopK(emb, qs, centroids, topK = 10, nprobe = 4)
+        .select(col("q_id"), col("rn"), col("vec_id"),
+          round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
     },
     // IVF-Flat in the raw space: first-16 seeds, -2·dot+|c|² probe key,
     // exact cosine over the probed candidates with id tie-breaks.
-    "q_ivf_flat" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                    FROM embeddings),
          c AS (
@@ -5718,13 +4731,7 @@ object Pipeline {
                  ORDER BY -2 * list_dot_product(x.v, c.cv) + c.cnorm2,
                    c.cid) AS rn
              FROM e x CROSS JOIN c) WHERE rn = 1),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
+         $IvfProbesCte,
          cand AS (
            SELECT q.q_id, x.vec_id,
              list_dot_product(x.v, q.qv) /
@@ -5738,33 +4745,44 @@ object Pipeline {
          SELECT q_id, rn, vec_id, round(cos, 6) AS cosine FROM (
            SELECT q_id, vec_id, cos, row_number() OVER (
              PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-           FROM cand) WHERE rn <= 10 ORDER BY q_id, rn""",
+           FROM cand) WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — MATRYOSHKA-style prefix-truncation recall: the LEARNED-prefix
+    // dimensionality axis beside q_jl_recall's random-mix one — truncate
+    // each embedding to its first D coordinates (array slice, zero
+    // arithmetic), rank by exact cosine in the truncated space, measure
+    // recall@10 vs the full-dim truth over D ∈ {16, 32}. On MRL-trained
+    // embeddings the prefix carries the information and this curve stays
+    // near 1 (the reason serving stacks truncate before they quantize).
+    // Measured here: 0.32/0.22 at D=32 (sf0.01/sf0.1) vs JL's 0.10 —
+    // even on near-isotropic fixtures the prefix keeps D exact
+    // coordinates where the random mix dilutes all 64, so truncation
+    // dominates projection at equal D. The row is the axis-family
+    // chooser a corpus runs before flipping --proj-dim on.
+    QueryDef("q_mrl_recall", (s, dir) => {
+      val emb = embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qs = queriesOf(emb)
+      val exact = Similarity.exactTopK(emb, qs, 10)
+        .select(col("q_id"), col("vec_id"))
+      JlDims.map { d =>
+        val approx = Similarity.exactTopK(
+            emb.select(col("vec_id"), slice(col("emb"), 1, d).as("emb")),
+            qs.select(col("q_id"), slice(col("q_emb"), 1, d).as("q_emb")),
+            10)
+          .select(col("q_id"), col("vec_id"))
+        Similarity.recallAtK(exact, approx, 10)
+          .select(lit(d.toLong).as("proj_dim"), col("q_id"),
+            col("n_hit"), col("recall"))
+      }.reduce(_ unionByName _).orderBy("proj_dim", "q_id")
+    },
     // Matryoshka prefix truncation: DuckDB list slicing v[1:D], exact
     // cosine in the truncated space, the shared recall tail per D.
-    "q_mrl_recall" -> {
+      {
       val blocks = JlDims.map { d =>
         s"""me$d AS (SELECT vec_id, v[1:$d] AS pv FROM e),
-           mtop$d AS (
-             SELECT q_id, vec_id FROM (
-               SELECT q_id, vec_id, row_number() OVER (
-                 PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-               FROM (
-                 SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
-                   list_dot_product(x.pv, q.pv) /
-                     (sqrt(list_dot_product(x.pv, x.pv))
-                      * sqrt(list_dot_product(q.pv, q.pv))) AS cos
-                 FROM me$d q JOIN me$d x
-                   ON q.vec_id < 5 AND x.vec_id <> q.vec_id))
-             WHERE rn <= 10),
+           ${embExactCte(5, 10, s"me$d", s"mtop$d", "pv")},
            mrec$d AS (
-             SELECT CAST($d AS BIGINT) AS proj_dim, exact.q_id,
-               cast(sum(CASE WHEN r.vec_id IS NULL THEN 0 ELSE 1 END)
-                 AS bigint) AS n_hit,
-               cast(sum(CASE WHEN r.vec_id IS NULL THEN 0 ELSE 1 END)
-                 AS double) / 10 AS recall
-             FROM exact LEFT JOIN mtop$d r
-               ON exact.q_id = r.q_id AND exact.vec_id = r.vec_id
-             GROUP BY exact.q_id)"""
+             ${recallRowsSql(s"mtop$d", 10, s"CAST($d AS BIGINT) AS proj_dim, ")})"""
       }.mkString(",\n")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                    FROM embeddings),
@@ -5773,12 +4791,30 @@ object Pipeline {
          SELECT * FROM (${JlDims.map(d => s"SELECT * FROM mrec$d")
            .mkString(" UNION ALL ")})
          ORDER BY proj_dim, q_id"""
+    }),
+    // L2 — the JL-PROJECTED IVF-Flat pipeline (what `graft.Ann
+    // --proj-dim` builds and serves, qt=3): project dim 64 → 16 through
+    // the seeded planes, first-16-seed IVF in the PROJECTED space,
+    // probe 4 cells, exact projected cosine over the probed candidates
+    // (Similarity.ivfTopK — FAISS IndexIVFFlat in the projected space);
+    // recall vs the full-dimension truth. Reads beside q_jl_recall
+    // (projected exact): the gap between the two rows is what cell
+    // probing costs ON TOP of the projection's own loss.
+    QueryDef("q_jl_ivf_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { (emb, qs) =>
+      val planes = Similarity.hyperplanes(JlDims.head, 64)
+      def proj(c: org.apache.spark.sql.Column) =
+        array(planes.map(p => VectorOps.dot(c, typedlit(p))): _*)
+      val pemb = emb.select(col("vec_id"), proj(col("emb")).as("emb"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pqs = qs.select(col("q_id"), proj(col("q_emb")).as("q_emb"))
+      Similarity.ivfTopK(pemb, pqs, ivfSeeds(pemb), topK = 10, nprobe = 4)
     },
     // JL-projected IVF-Flat: projection through the same plane literals,
     // first-16 projected seeds as centroids (iters=0, cell i = vec i —
     // dense-id convention), the −2·dot+|c|² probe key, exact projected
     // cosine over probed candidates.
-    "q_jl_ivf_recall" -> {
+      {
       val proj = jlProjSql(
         graft.operators.Similarity.hyperplanes(JlDims.head, 64),
         "embedding")
@@ -5798,13 +4834,7 @@ object Pipeline {
                  ORDER BY -2 * list_dot_product(x.pv, c.cv) + c.cnorm2,
                    c.cid) AS rn
              FROM pe x CROSS JOIN c) WHERE rn = 1),
-         probes AS (
-           SELECT q_id, cell FROM (
-             SELECT q.q_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY q.q_id
-                 ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2,
-                   c.cid) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 4),
+         $IvfProbesCte,
          cand AS (
            SELECT q.q_id, x.vec_id,
              list_dot_product(x.pv, q.qv) /
@@ -5821,12 +4851,21 @@ object Pipeline {
                PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
              FROM cand) WHERE rn <= 10)
          ${recallTailSql("ptop", 10)}"""
+    }),
+    // L2 — ASYMMETRIC binary recall (Bq.bqAsymTopK): same 8 B/vec index,
+    // query kept at full precision, score = Σ sign(x_i)·q̂_i — the
+    // asymmetric-hashing upgrade over symmetric Hamming (which throws
+    // away query magnitudes and collapses ranking into ≤ 65 tie-heavy
+    // values). Read the 3 binary rows together: symmetric 0.32 <
+    // cell-bounded 0.46 < asymmetric (this row) at identical storage.
+    QueryDef("q_bq_asym_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Bq.bqAsymTopK(emb, qs, topK = 10, dim = 64)
     },
     // Asymmetric binary: the oracle scores the query's micro-ints
     // against the ±1 sign of each corpus coordinate directly (no
     // packing) — the engine's packed bitwiseAND sign extraction is
     // cross-proved by the hash compare.
-    "q_bq_asym_recall" ->
       s"""WITH $BqCtes,
          ${embExactCte(5, 10)},
          qx AS (
@@ -5844,8 +4883,19 @@ object Pipeline {
              SELECT q_id, vec_id, row_number() OVER (
                PARTITION BY q_id ORDER BY score DESC, vec_id) AS rn
              FROM asc0) WHERE rn <= 10)
-         ${recallTailSql("asctop", 10)}""",
-    "q_bq_refine_recall" ->
+         ${recallTailSql("asctop", 10)}"""),
+    // L2 — the production composition: binary top-40 candidates → exact
+    // cosine refine to 10 (Similarity.refineTopK — the FAISS
+    // IndexBinaryFlat + IndexRefine recipe). The recall lift over
+    // q_bq_recall is what the 4x candidate over-fetch buys back from the
+    // 1-bit codes; refine cost is |q|·40 vector fetches, corpus-size
+    // independent.
+    QueryDef("q_bq_refine_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { (emb, qs) =>
+      val cands = graft.operators.Bq.bqTopK(emb, qs, topK = 40, dim = 64)
+        .select(col("q_id"), col("vec_id"))
+      Similarity.refineTopK(cands, emb, qs, topK = 10)
+    },
       s"""WITH $BqCtes,
          ${embExactCte(5, 10)},
          cands AS (SELECT q_id, vec_id FROM branked WHERE rn <= 40),
@@ -5860,8 +4910,20 @@ object Pipeline {
              FROM cands cd
              JOIN e x ON x.vec_id = cd.vec_id
              JOIN q ON q.q_id = cd.q_id) WHERE rn <= 10)
-         ${recallTailSql("refined", 10)}""",
-    "q_hard_negatives" ->
+         ${recallTailSql("refined", 10)}"""),
+    // L2 — hard-negative mining: the top-10 most-similar vectors per query
+    // EXCLUDING the near-duplicate band (cos >= 0.35, just under the
+    // fixture's 0.4 dedup threshold — the same band q_dedup_embed treats
+    // as redundant). The contrastive-training sampler: rank what is close
+    // but provably not a duplicate.
+    QueryDef("q_hard_negatives", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      Similarity.hardNegatives(emb, qs, 10, dupThreshold = 0.35)
+        .select(col("q_id"), col("vec_id"), col("rn"),
+          round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
+    },
       """SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
            SELECT q_id, vec_id, cos,
              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
@@ -5873,10 +4935,24 @@ object Pipeline {
              FROM embeddings q JOIN embeddings e
                ON q.vec_id < 5 AND e.vec_id <> q.vec_id)
            WHERE cos < 0.35)
-         WHERE rn <= 10 ORDER BY q_id, rn""",
+         WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — MMR diversified selection (Similarity.mmrSelect): 3 greedy
+    // picks from each query's top-10 candidates at λ=0.7/μ=0.3 — the
+    // retrieval re-rank that stops the result set being k near-copies of
+    // the best hit. Candidate cosines, the pairwise diversity penalty,
+    // and all three argmax rounds oracle-check at full double precision
+    // (same portable dot-product argument as q_sim_exact); only the
+    // reported score rounds.
+    QueryDef("q_mmr", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      Similarity.mmrSelect(emb, qs, candK = 10, k = 3)
+        .select(col("q_id"), col("pick"), col("vec_id"),
+          round(col("score"), 6).as("score"))
+        .orderBy("q_id", "pick")
+    },
     // MMR: the q_sim_exact candidate CTE + three unrolled greedy rounds.
     // λ/μ are written as the exact literals the Spark side uses.
-    "q_mmr" ->
       """WITH cand AS (
            SELECT q_id, vec_id, cos, rn FROM (
              SELECT q_id, vec_id, cos,
@@ -5932,1677 +5008,1154 @@ object Pipeline {
            SELECT q_id, cast(2 AS BIGINT), vec_id, score FROM s2
            UNION ALL
            SELECT q_id, cast(3 AS BIGINT), vec_id, score FROM s3)
-         ORDER BY q_id, pick""",
-    "q_dedup_ngram" ->
-      """WITH s AS (
-           SELECT doc_id, lang, n_chars,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS w
-                 FROM documents))
-         SELECT a, b, round(jac, 6) AS jaccard FROM (
-           SELECT x.doc_id AS a, y.doc_id AS b,
-             cast(len(list_intersect(x.sh, y.sh)) AS double) /
-               (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) AS jac
-           FROM s x JOIN s y
-             ON x.lang = y.lang AND x.n_chars = y.n_chars AND x.doc_id < y.doc_id)
-         ORDER BY a, b""",
-    "q_novelty" ->
-      """WITH g AS (
-           SELECT doc_id,
-             unnest(list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' ')))) AS gram
-           FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
-                 FROM documents)),
-         d AS (SELECT gram, count(*) AS nd FROM g GROUP BY gram)
-         SELECT doc_id, count(*) AS n_grams,
-           round(cast(sum(CASE WHEN nd = 1 THEN 1 ELSE 0 END) AS double)
-             / count(*), 6) AS novelty
-         FROM g JOIN d USING (gram) GROUP BY doc_id ORDER BY doc_id""",
-    "q_dedup_contain" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
-                 FROM documents)),
-         blk0 AS (
-           SELECT doc_id, unnest(list_sort(sh)[1:3]) AS b FROM s),
-         blk AS (SELECT * FROM blk0
-                 QUALIFY count(*) OVER (PARTITION BY b) <= 4096),
-         cand AS (
-           SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-           FROM blk x JOIN blk y ON x.b = y.b AND x.doc_id < y.doc_id)
-         SELECT a, b, round(cont, 6) AS containment FROM (
-           SELECT a, b,
-             cast(len(list_intersect(sa.sh, sb.sh)) AS double)
-               / least(len(sa.sh), len(sb.sh)) AS cont
-           FROM cand JOIN s sa ON sa.doc_id = cand.a
-                     JOIN s sb ON sb.doc_id = cand.b)
-         WHERE cont >= 0.5 ORDER BY a, b""",
-    // Anchored width-8 shingles; an anchor is duplicated when its shingle
-    // spans >1 distinct doc; consecutive duplicated anchors (pos − rank
-    // run grouping) fold into maximal spans covering the last anchor's
-    // full 8 words — Dedup.duplicatedSpans verbatim.
-    "q_dedup_substring" ->
-      """WITH words AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS w
-           FROM documents WHERE text IS NOT NULL),
-         anchors AS (
-           SELECT doc_id, pos, array_to_string(w[pos:pos+7], ' ') AS sh
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(1, len(w) - 7)) AS pos
-                 FROM words)),
-         dup AS (
-           SELECT sh FROM anchors
-           GROUP BY sh HAVING count(DISTINCT doc_id) > 1),
-         flagged AS (
-           SELECT a.doc_id, a.pos,
-             a.pos - row_number() OVER (PARTITION BY a.doc_id
-               ORDER BY a.pos) AS grp
-           FROM anchors a JOIN dup USING (sh))
-         SELECT doc_id, min(pos) AS span_start, max(pos) + 7 AS span_end,
-           count(*) AS n_anchors
-         FROM flagged GROUP BY doc_id, grp
-         ORDER BY doc_id, span_start""",
-    // Winnowing re-run relationally: per-doc k-grams with the portable
-    // md5 hash, window minima via a (doc, window) x (doc, gram) range
-    // join with rightmost tie-break recovered as max(pos) among the
-    // window's min-hash grams — the same selected set the engine's
-    // scan-local array_min produces. Parameters interpolate from the
-    // Winnow constants so the two sides cannot desync.
-    "q_winnow_fp" -> WinnowSql(
-      """SELECT DISTINCT doc_id, h AS fp, pos::BIGINT AS pos FROM fp0
-         ORDER BY doc_id, pos, fp"""),
-    "q_winnow_overlap" -> WinnowSql(
-      s"""SELECT id_a, id_b, n_shared FROM pairs
-          WHERE n_shared >= $WinnowMinShared ORDER BY id_a, id_b"""),
-    // Delta screening: per-doc fingerprints split by the shared doc_id
-    // threshold; census cap on the CORPUS side only, then one equi-join.
-    "q_winnow_delta" -> WinnowSql(
-      s""", cd AS (SELECT doc_id, h FROM fps WHERE doc_id < $WinnowDeltaSplit),
-          dd AS (SELECT doc_id, h FROM fps WHERE doc_id >= $WinnowDeltaSplit),
-          cen2 AS (SELECT h FROM cd GROUP BY h
-                   HAVING count(*) <= $WinnowMaxBlock),
-          p2 AS (SELECT dd.doc_id AS delta_id, cd.doc_id AS corpus_id,
-                   count(*) AS n_shared
-                 FROM dd JOIN cen2 USING (h) JOIN cd USING (h)
-                 GROUP BY 1, 2)
-          SELECT delta_id, corpus_id, n_shared FROM p2
-          WHERE n_shared >= $WinnowMinShared
-          ORDER BY delta_id, corpus_id"""),
-    // Overlap pairs closed into components by the recursive-reach CTE
-    // (the q_dedup_cluster recipe).
-    "q_winnow_cluster" -> WinnowSql(
-      s""", ge AS (SELECT id_a AS a, id_b AS b FROM pairs
-                   WHERE n_shared >= $WinnowMinShared),
-          sym AS (SELECT a AS src, b AS dst FROM ge
-                  UNION SELECT b, a FROM ge),
-          reach(src, dst) AS (
-            SELECT src, dst FROM sym
-            UNION
-            SELECT r.src, s2.dst FROM reach r
-            JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst)
-          SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-          GROUP BY src ORDER BY id"""),
-    // The density measurement off the same selection CTEs: distinct
-    // selected (h, pos) per doc over the doc's gram count, ppm floor-div.
-    "q_winnow_density" -> WinnowSql(
-      """, fpd AS (SELECT DISTINCT doc_id, h, pos FROM fp0),
-          perdoc AS (
-            SELECT f.doc_id, count(*)::BIGINT AS nfp, max(d2.m)::BIGINT AS m
-            FROM fpd f JOIN dk d2 USING (doc_id) GROUP BY f.doc_id)
-          SELECT count(*)::BIGINT AS n_docs, sum(nfp)::BIGINT AS total_fps,
-            sum(m)::BIGINT AS total_grams,
-            ((sum(nfp) * 1000000) // sum(m))::BIGINT AS density_ppm,
-            min((nfp * 1000000) // m)::BIGINT AS min_ppm,
-            max((nfp * 1000000) // m)::BIGINT AS max_ppm
-          FROM perdoc ORDER BY n_docs"""),
-    // Same spans, then removal: every covered word position anti-joins
-    // out of the token list and survivors reassemble in position order.
-    "q_dedup_substring_clean" ->
-      """WITH words AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS w
-           FROM documents WHERE text IS NOT NULL),
-         anchors AS (
-           SELECT doc_id, pos, array_to_string(w[pos:pos+7], ' ') AS sh
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(1, len(w) - 7)) AS pos
-                 FROM words)),
-         dup AS (
-           SELECT sh FROM anchors
-           GROUP BY sh HAVING count(DISTINCT doc_id) > 1),
-         flagged AS (
-           SELECT a.doc_id, a.pos,
-             a.pos - row_number() OVER (PARTITION BY a.doc_id
-               ORDER BY a.pos) AS grp
-           FROM anchors a JOIN dup USING (sh)),
-         spans AS (
-           SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
-           FROM flagged GROUP BY doc_id, grp),
-         covered AS (
-           SELECT DISTINCT doc_id, pos FROM (
-             SELECT doc_id, unnest(generate_series(s, e)) AS pos
-             FROM spans)),
-         toks AS (
-           SELECT doc_id, pos, word FROM (
-             SELECT doc_id, unnest(w) AS word,
-               unnest(generate_series(1, len(w))) AS pos
-             FROM words)),
-         kept AS (
-           SELECT t.doc_id, string_agg(t.word, ' ' ORDER BY t.pos)
-             AS clean_text
-           FROM toks t LEFT JOIN covered c
-             ON c.doc_id = t.doc_id AND c.pos = t.pos
-           WHERE c.pos IS NULL GROUP BY t.doc_id),
-         rem AS (
-           SELECT doc_id, count(*) AS n_removed
-           FROM covered GROUP BY doc_id)
-         SELECT wo.doc_id, cast(len(wo.w) AS BIGINT) AS n_tokens,
-           coalesce(r.n_removed, 0) AS n_removed,
-           coalesce(k.clean_text, '') AS clean_text
-         FROM words wo
-         LEFT JOIN rem r ON r.doc_id = wo.doc_id
-         LEFT JOIN kept k ON k.doc_id = wo.doc_id
-         ORDER BY wo.doc_id""",
-    "q_rep_ratio" ->
-      """WITH g AS (
-           SELECT doc_id,
-             list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' ')) AS grams
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-         SELECT doc_id, cast(len(grams) AS int) AS n_grams,
-           round(1.0 - len(list_distinct(grams))::DOUBLE / len(grams), 6)
-             AS rep_ratio
-         FROM g ORDER BY doc_id""",
-    // Cosines via the same list_dot_product form every similarity oracle
-    // uses; argmax as row_number (cos desc, b_id) — the struct-max twin.
-    "q_decontaminate_semantic" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         b AS (SELECT vec_id AS b_id, v AS bv FROM e WHERE vec_id % 50 = 0),
-         c AS (SELECT vec_id, v FROM e WHERE vec_id % 50 <> 0),
+         ORDER BY q_id, pick"""),
+    // L2 — sign-LSH bucket histogram: the scale path's candidate profile.
+    // Oracle-checked: the seeded hyperplane basis is part of the operator
+    // definition, so the oracle SQL carries the same plane literals and
+    // both engines compute bit-identical projections (sequential
+    // double-sum both sides — same argument as q_sim_exact).
+    QueryDef("q_sim_lsh", (s, dir) => {
+      val emb = embFrame(s, dir)
+      Similarity.lshBuckets(emb, "emb", Similarity.hyperplanes(8, 64))
+        .orderBy("bucket")
+    },
+      {
+      val b = lshBucketSql(graft.operators.Similarity.hyperplanes(8, 64), "embedding")
+      s"""WITH bk AS (SELECT $b AS bucket FROM embeddings)
+          SELECT bucket, count(*) AS n_vectors FROM bk
+          GROUP BY bucket ORDER BY bucket"""
+    }),
+    // A7 — embedding near-dup at scale: candidates meet only inside a
+    // sign-LSH bucket (equi-join, no O(n²) pair explosion), exact cosine
+    // verifies. The bucketed twin of q_dedup_embed, oracle-checked the
+    // same way as q_sim_lsh.
+    QueryDef("q_dedup_embed_lsh", (s, dir) => {
+      val emb = embFrame(s, dir)
+      Dedup.embeddingNearDupsLsh(emb, "vec_id", "emb", 0.4,
+        Similarity.hyperplanes(4, 64))
+        .select(col("a"), col("b"), round(col("cos"), 6).as("cosine"))
+        .orderBy("a", "b")
+    },
+      {
+      val b = lshBucketSql(graft.operators.Similarity.hyperplanes(4, 64), "embedding")
+      s"""WITH bk AS (SELECT vec_id, embedding, $b AS bucket FROM embeddings)
+          SELECT a, b, round(cos, 6) AS cosine FROM (
+            SELECT x.vec_id AS a, y.vec_id AS b,
+              list_dot_product(x.embedding::DOUBLE[], y.embedding::DOUBLE[]) /
+                (sqrt(list_dot_product(x.embedding::DOUBLE[], x.embedding::DOUBLE[]))
+                 * sqrt(list_dot_product(y.embedding::DOUBLE[], y.embedding::DOUBLE[]))) AS cos
+            FROM bk x JOIN bk y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
+          WHERE cos >= 0.4 ORDER BY a, b"""
+    }),
+    // L2 — product quantization (fixed codebook): the vector-compression
+    // half of ANN at scale — 64 floats become m=4 codeword indexes, and
+    // the per-subspace reconstruction error is the m/k quality dial. The
+    // codebook is declared (subvectors of vec_id < 8), so assignment,
+    // tiebreak, and error are bit-portable arithmetic the oracle mirrors,
+    // exactly like q_sim_ivf_fixed.
+    QueryDef("q_pq_encode", (s, dir) => {
+      val emb = embFrame(s, dir)
+      graft.operators.Pq.encodeFixed(emb, "vec_id", "emb",
+        m = 4, k = 8, dim = 64)
+        .orderBy("vec_id", "j")
+    },
+    // PQ: per (vector, subspace) nearest-codeword assignment — the same
+    // -2·dot + |cw|² rank key and row_number tiebreak as the IVF oracle,
+    // restricted to each 16-dim slice.
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          ${pqSubCte("e")},
+          ${pqCbCte("e")},
+          scored AS (
+            SELECT sub.vec_id, sub.j, cb.c,
+              -2 * list_dot_product(sub.s, cb.cw) + cb.cwn2 AS key, sub.sn2
+            FROM sub JOIN cb ON sub.j = cb.j),
+          best AS (
+            SELECT vec_id, j, c AS code, sn2 + key AS err,
+              row_number() OVER (PARTITION BY vec_id, j ORDER BY key, c) AS rn
+            FROM scored)
+          SELECT vec_id, j, code, round(err, 6) AS err
+          FROM best WHERE rn = 1 ORDER BY vec_id, j"""),
+    // L2 — PQ/ADC search: top-10 by asymmetric distance over the m=4
+    // codes — the corpus side is ONLY its compressed codes; the query's
+    // m·k distance table broadcasts. Term-wise decimal(28,10) casts make
+    // the cross-subspace float sum order-independent, so ranking and
+    // distances oracle-check exactly.
+    QueryDef("q_pq_search", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      graft.operators.Pq.adcTopK(emb, qs, 10, m = 4, k = 8, dim = 64)
+        .orderBy("q_id", "rn")
+    },
+    // ADC: the q_pq_encode codes joined to the per-query distance table
+    // on (subspace, code); term-wise decimal casts keep the sum exact.
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          ${pqSubCte("e")},
+          ${pqCbCte("e")},
+          $PqCodesCte,
+          $PqDtabCte,
+          scored AS (
+            SELECT d.q_id, c.vec_id,
+              sum(cast(d.dq AS decimal(28,10))) AS ad
+            FROM codes c JOIN dtab d ON d.j = c.j AND d.code = c.code
+              AND c.vec_id <> d.q_id
+            GROUP BY d.q_id, c.vec_id)
+          SELECT q_id, vec_id, rn, round(cast(ad AS double), 6) AS adist
+          FROM (SELECT q_id, vec_id, ad, row_number() OVER (
+                  PARTITION BY q_id ORDER BY ad, vec_id) AS rn FROM scored)
+          WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — ANN quality evaluation AS a query: recall@10 of the PQ/ADC
+    // search against the exact cosine top-10, per query vector — the
+    // eval loop a pipeline runs before trusting an index. Overlap counts
+    // are exact integers; recall is one int division (bit-portable).
+    QueryDef("q_pq_recall", (s, dir) => annRecall(embFrame(s, dir)) {
+      (emb, qs) => graft.operators.Pq.adcTopK(emb, qs, 10, m = 4, k = 8, dim = 64)
+    },
+    // recall@10: the q_sim_exact top-10 left-joined to the q_pq_search
+    // top-10 per query; overlap counted, one exact int division.
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          ${embExactCte(5, 10)},
+          ${pqSubCte("e")},
+          ${pqCbCte("e")},
+          $PqCodesCte,
+          $PqDtabCte,
+          adc AS (
+            SELECT q_id, vec_id FROM (
+              SELECT q_id, vec_id, row_number() OVER (
+                PARTITION BY q_id ORDER BY ad, vec_id) AS rn
+              FROM (
+                SELECT d.q_id, c.vec_id,
+                  sum(cast(d.dq AS decimal(28,10))) AS ad
+                FROM codes c JOIN dtab d ON d.j = c.j AND d.code = c.code
+                  AND c.vec_id <> d.q_id
+                GROUP BY d.q_id, c.vec_id))
+            WHERE rn <= 10)
+          SELECT exact.q_id,
+            cast(sum(CASE WHEN adc.vec_id IS NULL THEN 0 ELSE 1 END)
+              AS bigint) AS n_hit,
+            cast(sum(CASE WHEN adc.vec_id IS NULL THEN 0 ELSE 1 END)
+              AS double) / 10 AS recall
+          FROM exact LEFT JOIN adc
+            ON exact.q_id = adc.q_id AND exact.vec_id = adc.vec_id
+          GROUP BY exact.q_id ORDER BY exact.q_id"""),
+    // L2 — IVF-ADC composed search (Pq.ivfAdcTopK): the FAISS-IVFPQ
+    // production ANN shape — the coarse quantizer bounds CANDIDATES (each
+    // query scores only its nprobe=4 of 16 cells) and PQ bounds BYTES (the
+    // corpus side of the scoring join is m=4 codes + a cell id). The fixed
+    // first-16 quantizer and first-8 codebook keep every step — cell
+    // assignment, probe ranking, per-subspace argmin, the decimal ADC
+    // sum — bit-portable, so the full composition oracle-checks, not just
+    // its halves (q_sim_ivf_fixed, q_pq_search).
+    QueryDef("q_ivf_pq_search", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      val centroids = ivfSeeds(emb)
+      graft.operators.Pq.ivfAdcTopK(emb, qs, centroids, nprobe = 4,
+        topK = 10, m = 4, k = 8, dim = 64)
+        .orderBy("q_id", "rn")
+    },
+    // IVF-ADC: the shared fixed-quantizer CTE chain cut at rn <= 10.
+      s"""$IvfPqAdcCtes
+          SELECT q_id, vec_id, rn, round(cast(ad AS double), 6) AS adist
+          FROM adcranked WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — recall@10 of the composed IVF-ADC search against the exact
+    // cosine top-10 (the q_pq_recall recipe): the number that shows what
+    // probe-bounding costs ON TOP of quantization — reading it next to
+    // q_pq_recall separates the two loss sources before picking nprobe.
+    QueryDef("q_ivf_pq_recall", (s, dir) => ivfPqRecallOver(embFrame(s, dir)),
+    // recall@10 of the IVF-ADC composition vs the exact cosine top-10 —
+    // the q_pq_recall shape with the probe-bounded search substituted.
+      s"""$IvfPqAdcCtes,
+          ${embExactCte(5, 10)},
+          adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
+          ${recallTailSql("adc", 10)}"""),
+    // L2 — RESIDUAL IVF-PQ recall (Pq.ivfAdcResidualTopK — FAISS
+    // IndexIVFPQ's by_residual=true default): the PQ encodes x − c(cell)
+    // instead of x, spending its bytes on within-cell geometry. Read
+    // beside q_ivf_pq_recall: identical m/k/nprobe/seeds, the residual
+    // form is the whole difference. MEASURED on these fixtures: 0.24 vs
+    // plain 0.36 at sf0.01, 0.06 vs 0.26 at sf0.1 — an honest NEGATIVE
+    // result (the q_jl_recall convention): residual encoding presumes
+    // the coarse cells capture real cluster structure, and on
+    // near-isotropic synthetic embeddings they are arbitrary Voronoi
+    // shards, so subtracting a per-cell centroid only decorrelates the
+    // fixed first-8 codebook from both sides. On corpora with genuine
+    // structure (where production FAISS defaults to by_residual) the
+    // sign flips — this row is the per-corpus decision number, and the
+    // hash-matched oracle proves the pipeline faithful either way.
+    QueryDef("q_ivf_pq_residual_recall", (s, dir) => annRecall(embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+      (emb, qs) => graft.operators.Pq.ivfAdcResidualTopK(emb, qs,
+        ivfSeeds(emb), nprobe = 4, topK = 10, m = 4, k = 8, dim = 64)
+    },
+    // Residual IVF-PQ: the same e/c/assign/probes chain, with the
+    // codebook, codes, and per-(query, cell) distance table all computed
+    // over r = x − c(cell) (list_transform subtraction — the engine's
+    // zip_with, elementwise, no reassociation).
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+                   FROM embeddings),
+         ${ivfAssignCtes("e")},
+         res AS (
+           SELECT e.vec_id, a.cell,
+             list_transform(generate_series(1, 64),
+               i -> e.v[i] - c.cv[i]) AS r
+           FROM e JOIN assign a ON a.vec_id = e.vec_id
+           JOIN c ON c.cid = a.cell),
+         rsub AS (
+           SELECT vec_id, cell, j, r[j*16+1 : j*16+16] AS s,
+             list_dot_product(r[j*16+1 : j*16+16],
+               r[j*16+1 : j*16+16]) AS sn2
+           FROM res, generate_series(0, 3) AS g(j)),
+         rcb AS (
+           SELECT cast(vec_id AS int) AS c, j, s AS cw, sn2 AS cwn2
+           FROM rsub WHERE vec_id < 8),
+         rcodes AS (
+           SELECT vec_id, cell, j, code FROM (
+             SELECT rsub.vec_id, rsub.cell, rsub.j, rcb.c AS code,
+               row_number() OVER (PARTITION BY rsub.vec_id, rsub.j
+                 ORDER BY -2 * list_dot_product(rsub.s, rcb.cw)
+                   + rcb.cwn2, rcb.c) AS rn
+             FROM rsub JOIN rcb ON rsub.j = rcb.j) WHERE rn = 1),
+         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
+         $IvfProbesCte,
+         qres AS (
+           SELECT q.q_id, p.cell,
+             list_transform(generate_series(1, 64),
+               i -> q.qv[i] - c.cv[i]) AS qr
+           FROM q JOIN probes p ON p.q_id = q.q_id
+           JOIN c ON c.cid = p.cell),
+         qsub AS (
+           SELECT q_id, cell, j, qr[j*16+1 : j*16+16] AS qs,
+             list_dot_product(qr[j*16+1 : j*16+16],
+               qr[j*16+1 : j*16+16]) AS qn2
+           FROM qres, generate_series(0, 3) AS g(j)),
+         dtab AS (
+           SELECT qsub.q_id, qsub.cell, qsub.j, rcb.c AS code,
+             qsub.qn2 - 2 * list_dot_product(qsub.qs, rcb.cw)
+               + rcb.cwn2 AS dq
+           FROM qsub JOIN rcb ON qsub.j = rcb.j),
          scored AS (
-           SELECT c.vec_id, b.b_id,
-             list_dot_product(c.v, b.bv) /
-               (sqrt(list_dot_product(c.v, c.v))
-                * sqrt(list_dot_product(b.bv, b.bv))) AS cos
-           FROM c CROSS JOIN b),
-         best AS (
-           SELECT vec_id, b_id, cos FROM (
-             SELECT vec_id, b_id, cos,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY cos DESC, b_id) AS rn
-             FROM scored) WHERE rn = 1)
-         SELECT vec_id, b_id, round(cos, 6) AS max_cos,
-           cos >= 0.4 AS contaminated
-         FROM best ORDER BY vec_id""",
-    "q_decontaminate" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 3, 1)),
-               i -> array_to_string(w[i:i+3], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         bench AS (
-           SELECT DISTINCT unnest(sh) AS gram FROM s WHERE doc_id % 50 = 0),
-         grams AS (
-           SELECT doc_id, unnest(sh) AS gram FROM s WHERE doc_id % 50 <> 0)
-         SELECT DISTINCT doc_id FROM grams
-         WHERE gram IN (SELECT gram FROM bench)
-         ORDER BY doc_id""",
-    // Bloom path is exact after its verify join → same oracle as the
-    // broadcast-semi variant.
-    "q_decontaminate_bloom" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 3, 1)),
-               i -> array_to_string(w[i:i+3], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         bench AS (
-           SELECT DISTINCT unnest(sh) AS gram FROM s WHERE doc_id % 50 = 0),
-         grams AS (
-           SELECT doc_id, unnest(sh) AS gram FROM s WHERE doc_id % 50 <> 0)
-         SELECT DISTINCT doc_id FROM grams
-         WHERE gram IN (SELECT gram FROM bench)
-         ORDER BY doc_id""",
-    // Semantic-decontamination funnel: exact cosine vs the broadcast
-    // src19 benchmark side, max per train doc, per-lang counts at τ = 0.40.
-    "q_decontaminate_funnel" ->
-      """WITH e AS (
-           SELECT vec_id AS doc_id, embedding::DOUBLE[] AS v
-           FROM embeddings),
-         d AS (SELECT doc_id, lang, source FROM documents),
-         b AS (SELECT e.v FROM e JOIN d USING (doc_id)
-               WHERE d.source = 'src19'),
-         tr AS (SELECT e.doc_id, d.lang, e.v FROM e JOIN d USING (doc_id)
-                WHERE d.source <> 'src19'),
-         mc AS (
-           SELECT tr.doc_id, tr.lang,
-             max(list_dot_product(tr.v, b.v)
-               / (sqrt(list_dot_product(tr.v, tr.v))
-                  * sqrt(list_dot_product(b.v, b.v)))) AS m
-           FROM tr CROSS JOIN b GROUP BY tr.doc_id, tr.lang)
-         SELECT lang, cast(count(*) AS BIGINT) AS n_train,
-           cast(sum(CASE WHEN m >= 0.40 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_contaminated,
-           round(max(m), 6) AS max_cos,
-           cast(count(*) - sum(CASE WHEN m >= 0.40 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_clean
-         FROM mc GROUP BY lang ORDER BY lang""",
-    "q_dedup_chunk" ->
-      """WITH c AS (
-           SELECT doc_id,
-             unnest(list_transform(generate_series(0, (len(w) - 1) // 10),
-               i -> array_to_string(w[i*10+1:i*10+10], ' '))) AS chunk
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-         SELECT chunk, cast(count(DISTINCT doc_id) AS bigint) AS n_docs,
-           cast(count(*) AS bigint) AS n_occurrences
-         FROM c GROUP BY chunk
-         HAVING count(DISTINCT doc_id) > 1
-         ORDER BY chunk""",
-    "q_clean_boilerplate" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
-                    FROM documents),
-         c AS (
-           SELECT doc_id, u['pos'] AS pos, u['chunk'] AS chunk FROM (
-             SELECT doc_id,
-               unnest(list_transform(generate_series(0, (len(w) - 1) // 10),
-                 i -> {'pos': i,
-                       'chunk': array_to_string(w[i*10+1:i*10+10], ' ')}))
-                 AS u
-             FROM t)),
-         b AS (SELECT chunk FROM c GROUP BY chunk
-               HAVING count(DISTINCT doc_id) > 1),
-         k AS (SELECT doc_id, cast(count(*) AS bigint) AS n_kept,
-                 string_agg(chunk, ' ' ORDER BY pos) AS clean_text
-               FROM c WHERE chunk NOT IN (SELECT chunk FROM b)
-               GROUP BY doc_id),
-         tot AS (SELECT doc_id, cast(count(*) AS bigint) AS n_chunks
-                 FROM c GROUP BY doc_id)
-         SELECT tot.doc_id, n_chunks,
-           coalesce(n_kept, cast(0 AS bigint)) AS n_kept,
-           md5(coalesce(clean_text, '')) AS clean_md5
-         FROM tot LEFT JOIN k USING (doc_id) ORDER BY tot.doc_id""",
-    "q_source_overlap" ->
-      """WITH s AS (
-           SELECT DISTINCT g, sh FROM (
-             SELECT source AS g,
-               unnest(list_distinct(list_transform(
-                 generate_series(1, greatest(len(w) - 2, 1)),
-                 i -> array_to_string(w[i:i+2], ' ')))) AS sh
-             FROM (SELECT source, string_split_regex(text, '\s+') AS w
-                   FROM documents WHERE text IS NOT NULL))),
-         tot AS (SELECT g, cast(count(*) AS bigint) AS n FROM s GROUP BY g),
-         p AS (SELECT x.g AS src_a, y.g AS src_b,
-                 cast(count(*) AS bigint) AS n_shared
-               FROM s x JOIN s y ON x.sh = y.sh AND x.g < y.g
-               GROUP BY x.g, y.g)
-         SELECT src_a, src_b, n_shared, ta.n AS n_a, tb.n AS n_b,
-           cast(n_shared AS double) / (ta.n + tb.n - n_shared) AS jaccard
-         FROM p JOIN tot ta ON ta.g = src_a JOIN tot tb ON tb.g = src_b
-         ORDER BY src_a, src_b""",
-    // KMV: the sketch is the k smallest distinct hashes — re-derivable by
-    // a plain rank, so the oracle re-runs the estimator end-to-end. The
-    // 2^60 literal is a power of two: exactly representable, and
-    // 15.0 * 2^60 / h is one fixed-order double expression both engines
-    // evaluate identically.
-    "q_kmv_card" -> KmvSql(
-      s"""SELECT source, max(nd)::BIGINT AS n_distinct,
-            CASE WHEN max(nd) < $KmvK THEN max(nd)::DOUBLE
-                 ELSE round(${KmvK - 1}.0 * 1152921504606846976.0
-                   / max(CASE WHEN rn = $KmvK THEN h END)::DOUBLE, 6)
-            END AS kmv_est
-          FROM sk GROUP BY source ORDER BY source"""),
-    "q_kmv_overlap" -> KmvSql(
-      """SELECT g.src_a, g.src_b, g.n_merged,
-           coalesce(sh.n_shared, 0)::BIGINT AS n_shared,
-           round(coalesce(sh.n_shared, 0)::DOUBLE
-             / g.n_merged::DOUBLE, 6) AS jaccard_est
-         FROM (SELECT src_a, src_b, count(*) AS n_merged
-               FROM mk GROUP BY 1, 2) g
-         LEFT JOIN (
-           SELECT m.src_a, m.src_b, count(*) AS n_shared
-           FROM mk m
-           WHERE EXISTS (SELECT 1 FROM sk x
-                         WHERE x.source = m.src_a AND x.h = m.h)
-             AND EXISTS (SELECT 1 FROM sk y
-                         WHERE y.source = m.src_b AND y.h = m.h)
-           GROUP BY 1, 2) sh USING (src_a, src_b)
-         ORDER BY src_a, src_b"""),
-    "q_kmv_union" -> KmvSql(
-      s"""SELECT src_a, src_b, union_est,
-            round(ns / nm * union_est, 6) AS inter_est
-          FROM (
-            SELECT g.src_a, g.src_b,
-              CASE WHEN g.n_merged < $KmvK THEN g.n_merged::DOUBLE
-                   ELSE round(${KmvK - 1}.0 * 1152921504606846976.0
-                     / g.hk::DOUBLE, 6) END AS union_est,
-              coalesce(sh.n_shared, 0)::DOUBLE AS ns,
-              g.n_merged::DOUBLE AS nm
-            FROM (SELECT src_a, src_b, count(*) AS n_merged,
-                    max(CASE WHEN rn = $KmvK THEN h END) AS hk
-                  FROM mg WHERE rn <= $KmvK GROUP BY 1, 2) g
-            LEFT JOIN (
-              SELECT m.src_a, m.src_b, count(*) AS n_shared
-              FROM mk m
-              WHERE EXISTS (SELECT 1 FROM sk x
-                            WHERE x.source = m.src_a AND x.h = m.h)
-                AND EXISTS (SELECT 1 FROM sk y
-                            WHERE y.source = m.src_b AND y.h = m.h)
-              GROUP BY 1, 2) sh USING (src_a, src_b))
-          ORDER BY src_a, src_b"""),
-    // The round-trip is correct iff every format's digest equals the one
-    // computed straight from parquet — so the oracle is that digest,
-    // cross-joined onto the three format labels.
-    "q_format_roundtrip" ->
-      """WITH d AS (
-           SELECT lpad(cast(cast(sum(('0x' || substring(md5(concat_ws('|',
-               CASE WHEN doc_id IS NULL THEN '0' ELSE '1' || length(cast(doc_id AS VARCHAR)) || ':' || cast(doc_id AS VARCHAR) END,
-               CASE WHEN lang IS NULL THEN '0' ELSE '1' || length(lang) || ':' || lang END,
-               CASE WHEN n_chars IS NULL THEN '0' ELSE '1' || length(cast(n_chars AS VARCHAR)) || ':' || cast(n_chars AS VARCHAR) END,
-               CASE WHEN text IS NULL THEN '0' ELSE '1' || length(text) || ':' || text END
-             )), 1, 14))::BIGINT) AS DECIMAL(38,0)) AS VARCHAR), 38, '0')
-               AS checksum,
-             count(*) AS n_rows
-           FROM documents)
-         SELECT f.format, d.checksum, d.n_rows
-         FROM (VALUES ('csv'), ('jsonl'), ('orc')) f(format) CROSS JOIN d
-         ORDER BY f.format""",
-    "q_curate_e2e" ->
-      """WITH train AS (SELECT * FROM documents WHERE source <> 'src19'),
-         bench AS (SELECT * FROM documents WHERE source = 'src19'),
-         q AS (SELECT * FROM train
-               WHERE len(string_split_regex(text, '\s+')) >= 20),
-         u AS (SELECT doc_id, text, lang FROM (
-             SELECT doc_id, text, lang, row_number() OVER (
-               PARTITION BY regexp_replace(lower(text), '\s+', ' ', 'g')
-               ORDER BY doc_id) AS rn
-             FROM q) WHERE rn = 1),
-         bg AS (SELECT DISTINCT gram FROM (
-             SELECT unnest(list_distinct(list_transform(
-               generate_series(1, greatest(len(w) - 3, 1)),
-               i -> array_to_string(w[i:i+3], ' ')))) AS gram
-             FROM (SELECT string_split_regex(text, '\s+') AS w FROM bench))),
-         contam AS (SELECT DISTINCT doc_id FROM (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-               generate_series(1, greatest(len(w) - 3, 1)),
-               i -> array_to_string(w[i:i+3], ' ')))) AS gram
-             FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
-                   FROM u))
-           WHERE gram IN (SELECT gram FROM bg)),
-         clean AS (SELECT * FROM u
-                   WHERE doc_id NOT IN (SELECT doc_id FROM contam))
-         SELECT r.lang, r.n_raw,
-           coalesce(qq.n_quality, cast(0 AS bigint)) AS n_quality,
-           coalesce(uu.n_unique, cast(0 AS bigint)) AS n_unique,
-           coalesce(cc.n_clean, cast(0 AS bigint)) AS n_clean
-         FROM (SELECT lang, cast(count(*) AS bigint) AS n_raw
-               FROM train GROUP BY lang) r
-         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_quality
-                    FROM q GROUP BY lang) qq USING (lang)
-         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_unique
-                    FROM u GROUP BY lang) uu USING (lang)
-         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_clean
-                    FROM clean GROUP BY lang) cc USING (lang)
-         ORDER BY r.lang""",
-    // Per-doc attribution: the q_curate_e2e CTE chain re-read per
-    // document — survivor map from the normalized-text partition,
-    // contamination from the same 4-gram screen, outcomes by funnel
-    // order.
-    "q_curate_explain" ->
-      """WITH train AS (SELECT doc_id, lang, text,
-             len(string_split_regex(text, '\s+')) >= 20 AS q
-           FROM documents WHERE source <> 'src19'),
-         bench AS (SELECT * FROM documents WHERE source = 'src19'),
-         qd AS (SELECT doc_id, lang, text FROM train WHERE q),
-         surv AS (SELECT regexp_replace(lower(text), '\s+', ' ', 'g')
-               AS fp, min(doc_id) AS survivor
-             FROM qd GROUP BY 1),
-         keepmap AS (SELECT qd.doc_id, s.survivor
-             FROM qd JOIN surv s
-               ON regexp_replace(lower(qd.text), '\s+', ' ', 'g') = s.fp),
-         u AS (SELECT qd.* FROM qd JOIN keepmap k ON qd.doc_id = k.doc_id
-               WHERE k.doc_id = k.survivor),
-         bg AS (SELECT DISTINCT gram FROM (
-             SELECT unnest(list_distinct(list_transform(
-               generate_series(1, greatest(len(w) - 3, 1)),
-               i -> array_to_string(w[i:i+3], ' ')))) AS gram
-             FROM (SELECT string_split_regex(text, '\s+') AS w FROM bench))),
-         contam AS (SELECT DISTINCT doc_id FROM (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-               generate_series(1, greatest(len(w) - 3, 1)),
-               i -> array_to_string(w[i:i+3], ' ')))) AS gram
-             FROM (SELECT doc_id, string_split_regex(text, '\s+') AS w
-                   FROM u))
-           WHERE gram IN (SELECT gram FROM bg))
-         SELECT t.doc_id, t.lang,
-           CASE WHEN t.q IS NOT TRUE THEN 'low_quality'
-             WHEN k.survivor <> t.doc_id THEN 'duplicate'
-             WHEN t.doc_id IN (SELECT doc_id FROM contam)
-               THEN 'contaminated'
-             ELSE 'kept' END AS outcome,
-           CASE WHEN t.q AND k.survivor <> t.doc_id THEN k.survivor
-             END AS survivor
-         FROM train t LEFT JOIN keepmap k ON t.doc_id = k.doc_id
-         ORDER BY t.doc_id""",
-    // NB training CTEs as in q_quality_train_score, then the funnel:
-    // margin-gated docs → fingerprint dedup → per-lang stage counts.
-    "q_curate_trained" ->
-      """WITH toks AS (
-           SELECT doc_id, (lang = 'en') AS y, tok FROM (
-             SELECT doc_id, lang,
-               unnest(string_split_regex(text, '\s+')) AS tok
-             FROM documents WHERE text IS NOT NULL)
-           WHERE length(tok) > 0),
-         tot AS (
-           SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS tp,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS tn,
-             count(DISTINCT tok) AS v
-           FROM toks),
-         c AS (
-           SELECT tok, sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
-           FROM toks GROUP BY tok),
-         w AS (
-           SELECT c.tok,
-             cast(ln(n_pos + 1) AS decimal(28,10))
-             - cast(ln(tp + v) AS decimal(28,10))
-             - cast(ln(n_neg + 1) AS decimal(28,10))
-             + cast(ln(tn + v) AS decimal(28,10)) AS wt
-           FROM c CROSS JOIN tot),
-         pass AS (
-           SELECT t.doc_id FROM toks t JOIN w ON w.tok = t.tok
-           GROUP BY t.doc_id HAVING sum(w.wt) >= 0),
-         p AS (SELECT * FROM documents
-               WHERE doc_id IN (SELECT doc_id FROM pass)),
-         u AS (SELECT doc_id, lang FROM (
-             SELECT doc_id, lang, row_number() OVER (
-               PARTITION BY md5(regexp_replace(lower(text), '\s+', ' ', 'g'))
-               ORDER BY doc_id) AS rn
-             FROM p) WHERE rn = 1)
-         SELECT r.lang, r.n_raw,
-           coalesce(pp.n_pass, cast(0 AS bigint)) AS n_pass,
-           coalesce(uu.n_unique, cast(0 AS bigint)) AS n_unique
-         FROM (SELECT lang, cast(count(*) AS bigint) AS n_raw
-               FROM documents GROUP BY lang) r
-         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_pass
-                    FROM p GROUP BY lang) pp USING (lang)
-         LEFT JOIN (SELECT lang, cast(count(*) AS bigint) AS n_unique
-                    FROM u GROUP BY lang) uu USING (lang)
-         ORDER BY r.lang""",
-    "q_chunk_docs" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS w
-           FROM documents),
-         nums AS (SELECT unnest(generate_series(0,
-           (SELECT coalesce(max((len(w) - 1) // 40), 0) FROM t))) AS chunk_id)
-         SELECT doc_id, chunk_id,
-           len(w[(chunk_id * 40 + 1):(chunk_id * 40 + 50)]) AS n_chunk_tokens,
-           array_to_string(w[(chunk_id * 40 + 1):(chunk_id * 40 + 50)], ' ')
-             AS chunk
-         FROM t JOIN nums ON chunk_id <= (len(w) - 1) // 40
-         ORDER BY doc_id, chunk_id""",
-    "q_pack_sequences" ->
-      """WITH d AS (
-           SELECT doc_id, lang,
-             len(string_split(text, ' ')) AS n_tokens FROM documents),
-         c AS (
-           SELECT lang, n_tokens,
-             sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id) AS cum
-           FROM d)
-         SELECT lang, cast((cum - n_tokens) // 512 AS bigint) AS seq_id,
-           cast(count(*) AS bigint) AS n_docs,
-           cast(sum(n_tokens) AS bigint) AS sum_tokens
-         FROM c GROUP BY lang, (cum - n_tokens) // 512
-         ORDER BY lang, seq_id""",
-    "q_embed_quantize" ->
-      """WITH e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         p AS (
-           SELECT vec_id, v, list_min(v) AS mn, list_max(v) AS mx FROM e),
-         q AS (
-           SELECT vec_id, v, mn, mx,
-             list_transform(v, x ->
-               floor((x - mn) * 255.0 / (mx - mn) + 0.5)::INT - 128) AS qv
-           FROM p)
-         SELECT vec_id,
-           list_min(qv) AS qmin, list_max(qv) AS qmax,
-           round(list_reduce(
-               list_prepend(0.0, list_transform(generate_series(1, len(v)),
-                 i -> abs(v[i] - ((qv[i] + 128)::DOUBLE * (mx - mn) / 255.0 + mn)))),
-               (acc, e2) -> acc + e2) / len(v), 6) AS mean_abs_err
-         FROM q ORDER BY vec_id""",
-    "q_dedup_fuzzy" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         h AS (SELECT doc_id,
-             list_transform(sh, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
-           FROM s),
-         h2 AS (SELECT doc_id, hv,
-             list_transform(hv, v -> ('0x' || substr(md5(v::VARCHAR), 1, 14))::BIGINT) AS hv2
-           FROM h),
-         sig AS (SELECT doc_id,
-             list_transform(generate_series(1, 16), k ->
-               list_min(list_transform(generate_series(1, len(hv)),
-                 j -> hv[j] + k * hv2[j]))) AS sig
-           FROM h2),
-         bands AS (
-           SELECT doc_id, b,
-             array_to_string(sig[(b-1)*4+1:(b-1)*4+4], '|') AS band_sig
-           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS b)),
-         cand AS (
-           SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-           FROM bands x JOIN bands y ON x.b = y.b AND x.band_sig = y.band_sig
-           WHERE x.doc_id < y.doc_id),
-         jac AS (
-           SELECT c.a, c.b,
-             cast(len(list_intersect(ha.hv, hb.hv)) AS double) /
-               len(list_distinct(ha.hv || hb.hv)) AS jaccard
-           FROM cand c JOIN h ha ON ha.doc_id = c.a
-                       JOIN h hb ON hb.doc_id = c.b)
-         SELECT a, b, round(jaccard, 6) AS jaccard FROM jac
-         WHERE jaccard >= 0.5 ORDER BY a, b""",
-    // Same portable MinHash CTE as q_dedup_fuzzy; candidates pair a delta
-    // doc with a corpus doc only (never corpus × corpus).
-    "q_dedup_delta" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         h AS (SELECT doc_id,
-             list_transform(sh, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
-           FROM s),
-         h2 AS (SELECT doc_id, hv,
-             list_transform(hv, v -> ('0x' || substr(md5(v::VARCHAR), 1, 14))::BIGINT) AS hv2
-           FROM h),
-         sig AS (SELECT doc_id,
-             list_transform(generate_series(1, 16), k ->
-               list_min(list_transform(generate_series(1, len(hv)),
-                 j -> hv[j] + k * hv2[j]))) AS sig
-           FROM h2),
-         bands AS (
-           SELECT doc_id, b,
-             array_to_string(sig[(b-1)*4+1:(b-1)*4+4], '|') AS band_sig
-           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS b)),
-         cand AS (
-           SELECT DISTINCT d.doc_id AS delta_id, c.doc_id AS corpus_id
-           FROM bands d JOIN bands c ON d.b = c.b AND d.band_sig = c.band_sig
-           WHERE d.doc_id % 10 = 0 AND c.doc_id % 10 <> 0),
-         jac AS (
-           SELECT cd.delta_id, cd.corpus_id,
-             cast(len(list_intersect(hd.hv, hc.hv)) AS double) /
-               len(list_distinct(hd.hv || hc.hv)) AS jaccard
-           FROM cand cd JOIN h hd ON hd.doc_id = cd.delta_id
-                        JOIN h hc ON hc.doc_id = cd.corpus_id)
-         SELECT delta_id, corpus_id, round(jaccard, 6) AS jaccard FROM jac
-         WHERE jaccard >= 0.5 ORDER BY delta_id, corpus_id""",
-    // Same portable MinHash CTE; ground truth from the hv inverted index
-    // (hv is distinct by construction, so the per-pair match count IS the
-    // intersection and |A∪B| = |A|+|B|−|A∩B|).
-    "q_minhash_recall" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         h AS (SELECT doc_id,
-             list_transform(sh, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
-           FROM s),
-         h2 AS (SELECT doc_id, hv,
-             list_transform(hv, v -> ('0x' || substr(md5(v::VARCHAR), 1, 14))::BIGINT) AS hv2
-           FROM h),
-         sig AS (SELECT doc_id,
-             list_transform(generate_series(1, 16), k ->
-               list_min(list_transform(generate_series(1, len(hv)),
-                 j -> hv[j] + k * hv2[j]))) AS sig
-           FROM h2),
-         bands AS (
-           SELECT doc_id, b,
-             array_to_string(sig[(b-1)*4+1:(b-1)*4+4], '|') AS band_sig
-           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS b)),
-         qh AS (SELECT doc_id AS q_id, unnest(hv) AS hx FROM h
-                WHERE doc_id < 100),
-         ch AS (SELECT doc_id AS c_id, unnest(hv) AS hx FROM h),
-         inter AS (
-           SELECT q_id, c_id, count(*) AS n_int
-           FROM qh JOIN ch USING (hx) WHERE q_id <> c_id
-           GROUP BY q_id, c_id),
-         sz AS (SELECT doc_id, len(hv) AS sz FROM h),
-         truth AS (
-           SELECT q_id, c_id FROM inter
-           JOIN sz sq ON sq.doc_id = inter.q_id
-           JOIN sz sc ON sc.doc_id = inter.c_id
-           WHERE cast(n_int AS double) / (sq.sz + sc.sz - n_int) >= 0.5),
-         cand AS (
-           SELECT DISTINCT x.doc_id AS q_id, y.doc_id AS c_id
-           FROM bands x JOIN bands y ON x.b = y.b AND x.band_sig = y.band_sig
-           WHERE x.doc_id < 100 AND x.doc_id <> y.doc_id)
-         SELECT t.q_id, count(*)::bigint AS n_true,
-           sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::bigint
-             AS n_caught,
-           round(sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::double
-             / count(*), 6) AS recall
-         FROM truth t
-         LEFT JOIN cand c ON t.q_id = c.q_id AND t.c_id = c.c_id
-         GROUP BY t.q_id ORDER BY t.q_id""",
-    "q_minhash_band_curve" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         h AS (SELECT doc_id,
-             list_transform(sh, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
-           FROM s),
-         h2 AS (SELECT doc_id, hv,
-             list_transform(hv, v -> ('0x' || substr(md5(v::VARCHAR), 1, 14))::BIGINT) AS hv2
-           FROM h),
-         sig AS (SELECT doc_id,
-             list_transform(generate_series(1, 16), k ->
-               list_min(list_transform(generate_series(1, len(hv)),
-                 j -> hv[j] + k * hv2[j]))) AS sig
-           FROM h2),
-         qh AS (SELECT doc_id AS q_id, unnest(hv) AS hx FROM h
-                WHERE doc_id < 100),
-         ch AS (SELECT doc_id AS c_id, unnest(hv) AS hx FROM h),
-         inter AS (
-           SELECT q_id, c_id, count(*) AS n_int
-           FROM qh JOIN ch USING (hx) WHERE q_id <> c_id
-           GROUP BY q_id, c_id),
-         sz AS (SELECT doc_id, len(hv) AS sz FROM h),
-         truth AS MATERIALIZED (
-           SELECT q_id, c_id FROM inter
-           JOIN sz sq ON sq.doc_id = inter.q_id
-           JOIN sz sc ON sc.doc_id = inter.c_id
-           WHERE cast(n_int AS double) / (sq.sz + sc.sz - n_int) >= 0.5),
-         bands2 AS (
-           SELECT doc_id, b,
-             array_to_string(sig[(b-1)*8+1:(b-1)*8+8], '|') AS band_sig
-           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, 2)) AS b)),
-         cand2 AS (
-           SELECT DISTINCT x.doc_id AS q_id, y.doc_id AS c_id
-           FROM bands2 x JOIN bands2 y
-             ON x.b = y.b AND x.band_sig = y.band_sig
-           WHERE x.doc_id < 100 AND x.doc_id <> y.doc_id),
-         bands4 AS (
-           SELECT doc_id, b,
-             array_to_string(sig[(b-1)*4+1:(b-1)*4+4], '|') AS band_sig
-           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS b)),
-         cand4 AS (
-           SELECT DISTINCT x.doc_id AS q_id, y.doc_id AS c_id
-           FROM bands4 x JOIN bands4 y
-             ON x.b = y.b AND x.band_sig = y.band_sig
-           WHERE x.doc_id < 100 AND x.doc_id <> y.doc_id),
-         bands8 AS (
-           SELECT doc_id, b,
-             array_to_string(sig[(b-1)*2+1:(b-1)*2+2], '|') AS band_sig
-           FROM sig CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS b)),
-         cand8 AS (
-           SELECT DISTINCT x.doc_id AS q_id, y.doc_id AS c_id
-           FROM bands8 x JOIN bands8 y
-             ON x.b = y.b AND x.band_sig = y.band_sig
-           WHERE x.doc_id < 100 AND x.doc_id <> y.doc_id)
-         SELECT * FROM (
-         SELECT 2 AS bands, t.q_id, count(*)::bigint AS n_true,
-           sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::bigint
-             AS n_caught,
-           round(sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::double
-             / count(*), 6) AS recall,
-           coalesce(any_value(nc.n_cand), 0)::bigint AS n_cand
-         FROM truth t
-         LEFT JOIN cand2 c ON t.q_id = c.q_id AND t.c_id = c.c_id
-         LEFT JOIN (SELECT q_id, count(*)::bigint AS n_cand
-                    FROM cand2 GROUP BY q_id) nc ON nc.q_id = t.q_id
-         GROUP BY t.q_id
- UNION ALL 
-         SELECT 4 AS bands, t.q_id, count(*)::bigint AS n_true,
-           sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::bigint
-             AS n_caught,
-           round(sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::double
-             / count(*), 6) AS recall,
-           coalesce(any_value(nc.n_cand), 0)::bigint AS n_cand
-         FROM truth t
-         LEFT JOIN cand4 c ON t.q_id = c.q_id AND t.c_id = c.c_id
-         LEFT JOIN (SELECT q_id, count(*)::bigint AS n_cand
-                    FROM cand4 GROUP BY q_id) nc ON nc.q_id = t.q_id
-         GROUP BY t.q_id
- UNION ALL 
-         SELECT 8 AS bands, t.q_id, count(*)::bigint AS n_true,
-           sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::bigint
-             AS n_caught,
-           round(sum(CASE WHEN c.q_id IS NOT NULL THEN 1 ELSE 0 END)::double
-             / count(*), 6) AS recall,
-           coalesce(any_value(nc.n_cand), 0)::bigint AS n_cand
-         FROM truth t
-         LEFT JOIN cand8 c ON t.q_id = c.q_id AND t.c_id = c.c_id
-         LEFT JOIN (SELECT q_id, count(*)::bigint AS n_cand
-                    FROM cand8 GROUP BY q_id) nc ON nc.q_id = t.q_id
-         GROUP BY t.q_id)
-         ORDER BY bands, q_id""",
-    "q_dedup_simhash" ->
-      """WITH h AS (
-           SELECT doc_id, list_transform(string_split(text, ' '),
-             x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS hv
-           FROM documents),
-         bits AS (
-           SELECT doc_id, i,
-             CASE WHEN list_sum(list_transform(hv, v ->
-                 CASE WHEN (v >> i) & 1 = 1 THEN 1 ELSE -1 END)) >= 0
-               THEN (1::BIGINT << i) ELSE 0 END AS bit
-           FROM h CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i))
-         SELECT doc_id, cast(sum(bit) AS bigint) AS simhash FROM bits
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_tfidf" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS token
-           FROM documents),
-         tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-         dfreq AS (SELECT token, count(DISTINCT doc_id) AS df FROM toks
-                   GROUP BY 1),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         scored AS (
-           SELECT tf.doc_id, tf.token, tf.tf,
-             round(tf.tf * ln(cast(n_docs AS double) / df), 6) AS tfidf
-           FROM tf JOIN dfreq USING (token) CROSS JOIN n)
-         SELECT doc_id, token, tf, tfidf FROM (
-           SELECT *, row_number() OVER (PARTITION BY doc_id
-             ORDER BY tfidf DESC, token) AS rn FROM scored)
-         WHERE rn <= 3 ORDER BY doc_id, token""",
-    "q_compress_ratio" ->
-      """SELECT doc_id, strlen(text) AS raw_len,
-         true AS deflate_in_bounds
-         FROM documents WHERE text IS NOT NULL ORDER BY doc_id""",
-    "q_bpe_pairs" ->
-      """WITH vocab AS (
-           SELECT w, count(*) AS f FROM (
-             SELECT unnest(string_split_regex(text, '\s+')) AS w
-             FROM documents WHERE text IS NOT NULL)
-           WHERE length(w) > 0 GROUP BY w),
-         p AS (
-           SELECT f, unnest(list_transform(generate_series(1, length(w) - 1),
-             i -> w[i:i] || ' ' || w[i+1:i+1])) AS pair
-           FROM vocab WHERE length(w) >= 2)
-         SELECT pair, cast(sum(f) AS BIGINT) AS n
-         FROM p GROUP BY pair
-         ORDER BY n DESC, pair LIMIT 20""",
-    // same 64-bucket j%13-6 weight vector as the engine literal; the
-    // bucket is the portable md5 hash mod 64
-    "q_quality_classifier" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-           FROM documents WHERE text IS NOT NULL),
-         w AS (
-           SELECT doc_id,
-             (('0x' || substr(md5(tok), 1, 15))::BIGINT % 64) % 13 - 6 AS wt
-           FROM toks WHERE length(tok) > 0)
-         SELECT doc_id, cast(count(*) AS bigint) AS n_tokens,
-           cast(sum(wt) AS bigint) AS margin,
-           round(sum(wt)::DOUBLE / count(*), 6) AS score,
-           (sum(wt) >= 0) AS pass
-         FROM w GROUP BY doc_id ORDER BY doc_id""",
-    // NB log-odds training re-run in SQL: ln of integers only, each term
-    // cast decimal(28,10) before combining — TextAnalysis.trainTokenLogOdds
-    // verbatim (label: lang='en').
-    "q_quality_train" ->
-      """WITH toks AS (
-           SELECT (lang = 'en') AS y, tok FROM (
-             SELECT lang, unnest(string_split_regex(text, '\s+')) AS tok
-             FROM documents WHERE text IS NOT NULL)
-           WHERE length(tok) > 0),
-         tot AS (
-           SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS tp,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS tn,
-             count(DISTINCT tok) AS v
-           FROM toks),
-         c AS (
-           SELECT tok, sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
-           FROM toks GROUP BY tok)
-         SELECT c.tok AS token,
-           cast(n_pos AS bigint) AS n_pos, cast(n_neg AS bigint) AS n_neg,
-           round(cast(
-             cast(ln(n_pos + 1) AS decimal(28,10))
-             - cast(ln(tp + v) AS decimal(28,10))
-             - cast(ln(n_neg + 1) AS decimal(28,10))
-             + cast(ln(tn + v) AS decimal(28,10)) AS double), 6) AS weight
-         FROM c CROSS JOIN tot
-         ORDER BY weight DESC, token LIMIT 30""",
-    // …and the composed serve: every corpus token is in the trained
-    // vocabulary, so the operator's left-join-plus-zero equals this inner
-    // join; exact decimal margin, one row per doc.
-    "q_quality_train_score" ->
-      """WITH toks AS (
-           SELECT doc_id, (lang = 'en') AS y, tok FROM (
-             SELECT doc_id, lang,
-               unnest(string_split_regex(text, '\s+')) AS tok
-             FROM documents WHERE text IS NOT NULL)
-           WHERE length(tok) > 0),
-         tot AS (
-           SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS tp,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS tn,
-             count(DISTINCT tok) AS v
-           FROM toks),
-         c AS (
-           SELECT tok, sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
-           FROM toks GROUP BY tok),
-         w AS (
-           SELECT c.tok,
-             cast(ln(n_pos + 1) AS decimal(28,10))
-             - cast(ln(tp + v) AS decimal(28,10))
-             - cast(ln(n_neg + 1) AS decimal(28,10))
-             + cast(ln(tn + v) AS decimal(28,10)) AS wt
-           FROM c CROSS JOIN tot)
-         SELECT t.doc_id, cast(count(*) AS bigint) AS n_tokens,
-           round(cast(sum(w.wt) AS double) / count(*), 6) AS score,
-           (sum(w.wt) >= 0) AS pass
-         FROM toks t JOIN w ON w.tok = t.tok
-         GROUP BY t.doc_id ORDER BY t.doc_id""",
-    // placeholder-encoded merges: 'er'->1, 'in'->2, then the merged-symbol
-    // merge er+s as '1s'->3; every symbol is one char, so length = n_syms
-    "q_bpe_encode" ->
-      """WITH vocab AS (
-           SELECT w AS word, count(*) AS freq FROM (
-             SELECT unnest(string_split_regex(text, '\s+')) AS w
-             FROM documents WHERE text IS NOT NULL)
-           WHERE length(w) > 0 GROUP BY w)
-         SELECT word, freq,
-           cast(length(replace(replace(replace(word, 'er', '1'), 'in', '2'),
-             '1s', '3')) AS bigint) AS n_syms
-         FROM vocab ORDER BY word""",
-    // Same placeholder-char merge chain as q_bpe_encode, weighted by
-    // per-language word occurrences.
-    "q_bpe_fertility" ->
-      """WITH vocab AS (
-           SELECT w AS word FROM (
-             SELECT unnest(string_split_regex(text, '\s+')) AS w
-             FROM documents WHERE text IS NOT NULL)
-           WHERE length(w) > 0 GROUP BY w),
-         enc AS (
-           SELECT word,
-             cast(length(replace(replace(replace(word, 'er', '1'),
-               'in', '2'), '1s', '3')) AS bigint) AS n_syms
-           FROM vocab),
-         wrds AS (
-           SELECT lang, unnest(string_split_regex(text, '\s+')) AS word
-           FROM documents WHERE text IS NOT NULL)
-         SELECT lang, count(*)::bigint AS n_words,
-           sum(n_syms)::bigint AS n_syms,
-           round(sum(n_syms)::double / count(*), 6) AS fertility
-         FROM wrds JOIN enc USING (word)
-         WHERE length(word) > 0
-         GROUP BY lang ORDER BY lang""",
-    "q_unigram_lm" ->
-      s"""$unigramCtes
-         SELECT piece, n,
-           cast(round((cast(ln(t) AS decimal(17,10))
-             - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-             AS cost
-         FROM n1, tot1 ORDER BY n DESC, piece LIMIT 30""",
-    // Encode rows: the backward-walk CTEs re-unioned WITH their hop
-    // index; k counts from the word start (np − r + 1).
-    "q_unigram_encode" ->
-      s"""$unigramCtes,
-         topw AS (
-           SELECT word FROM voc ORDER BY freq DESC, word LIMIT 50),
-         hops AS (
-           ${(1 to UniWordLen).map(r =>
-             s"SELECT word, freq, $r AS r, piece FROM p$r")
-             .mkString("\n UNION ALL ")}),
-         np AS (SELECT word, cast(count(*) AS int) AS n
-                FROM hops GROUP BY word)
-         SELECT h.word, h.freq, n.n - h.r + 1 AS k, h.piece
-         FROM hops h JOIN np n USING (word) JOIN topw USING (word)
-         ORDER BY word, k""",
-    "q_unigram_fertility" ->
-      s"""$unigramCtes,
-         pw AS (
-           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
-           FROM seg GROUP BY word),
-         wl AS (
-           SELECT lang, word FROM (
-             SELECT lang, unnest($WsSplitSql) AS word
-             FROM documents WHERE text IS NOT NULL)
-           WHERE len(word) > 0 AND len(word) <= $UniWordLen)
-         SELECT lang, cast(count(*) AS BIGINT) AS n_words,
-           cast(sum(p.n_pieces) AS BIGINT) AS n_pieces,
-           round(cast(sum(p.n_pieces) AS double) / count(*), 6)
-             AS fertility
-         FROM wl JOIN pw p USING (word)
-         GROUP BY lang ORDER BY lang""",
-    "q_unigram_prune" ->
-      s"""$unigramCtes,
-         tcost AS (
-           SELECT piece, n,
-             cast(round((cast(ln(t) AS decimal(17,10))
-               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-               AS cost
-           FROM n1, tot1),
-         ccost AS (
-           SELECT piece AS c, cost AS ccost FROM cost
-           WHERE len(piece) = 1),
-         multiexp AS (
-           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
-           FROM tcost t, generate_series(1, $UniPieceLen) AS gs(s)
-           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
-         multi AS (
-           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
-             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
-               cast(sum(cc.ccost) AS BIGINT) AS alt
-             FROM multiexp m JOIN ccost cc ON cc.c = m.c
-             GROUP BY m.piece)),
-         kept_multi AS (
-           SELECT piece, n, cost, loss FROM multi
-           ORDER BY loss DESC, piece LIMIT 10)
-         SELECT piece, n, cost, loss FROM (
-           SELECT piece, n, cost, cast(NULL AS BIGINT) AS loss
-           FROM tcost WHERE len(piece) = 1
-           UNION ALL
-           SELECT piece, n, cost, loss FROM kept_multi)
-         ORDER BY loss DESC NULLS LAST, piece""",
-    // Kudo round two: the retrain chain's cost2 model re-segments the
-    // vocabulary (the v-prefixed DP block), pieces recount/re-score
-    // (n2/tcost2 — the tcost recipe again), and the prune tail re-runs
-    // against the candidate-stage char floor (the same ccost CTE).
-    "q_unigram_kudo2" ->
-      s"""$unigramCtes,
-         tcost AS MATERIALIZED (
-           SELECT piece, n,
-             cast(round((cast(ln(t) AS decimal(17,10))
-               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-               AS cost
-           FROM n1, tot1),
-         ccost AS (
-           SELECT piece AS c, cost AS ccost FROM cost
-           WHERE len(piece) = 1),
-         multiexp AS (
-           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
-           FROM tcost t, generate_series(1, $UniPieceLen) AS gs(s)
-           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
-         multi AS (
-           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
-             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
-               cast(sum(cc.ccost) AS BIGINT) AS alt
-             FROM multiexp m JOIN ccost cc ON cc.c = m.c
-             GROUP BY m.piece)),
-         kept_multi AS (
-           SELECT piece, n, cost, loss FROM multi
-           ORDER BY loss DESC, piece LIMIT 10),
-         cost2 AS MATERIALIZED (
-           SELECT piece, cost FROM tcost WHERE len(piece) = 1
-           UNION ALL
-           SELECT piece, cost FROM kept_multi),
-         ${unigramDpCtes("v", "cost2")},
-         n2 AS (
-           SELECT piece, cast(sum(freq) AS BIGINT) AS n
-           FROM vseg GROUP BY piece),
-         tot2 AS (SELECT cast(sum(n) AS BIGINT) AS t FROM n2),
-         tcost2 AS MATERIALIZED (
-           SELECT piece, n,
-             cast(round((cast(ln(t) AS decimal(17,10))
-               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-               AS cost
-           FROM n2, tot2),
-         multiexp2 AS (
-           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
-           FROM tcost2 t, generate_series(1, $UniPieceLen) AS gs(s)
-           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
-         multi2 AS (
-           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
-             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
-               cast(sum(cc.ccost) AS BIGINT) AS alt
-             FROM multiexp2 m JOIN ccost cc ON cc.c = m.c
-             GROUP BY m.piece)),
-         kept_multi2 AS (
-           SELECT piece, n, cost, loss FROM multi2
-           ORDER BY loss DESC, piece LIMIT 10)
-         SELECT piece, n, cost, loss FROM (
-           SELECT piece, n, cost, cast(NULL AS BIGINT) AS loss
-           FROM tcost2 WHERE len(piece) = 1
-           UNION ALL
-           SELECT piece, n, cost, loss FROM kept_multi2)
-         ORDER BY loss DESC NULLS LAST, piece""",
-    // Retrain fertility: the prune CTEs produce cost2 (chars + kept
-    // multi at their TRAINED costs), a second prefixed DP block
-    // re-segments, and the per-language report mirrors
-    // q_unigram_fertility.
-    "q_unigram_retrain" ->
-      s"""$unigramCtes,
-         tcost AS MATERIALIZED (
-           SELECT piece, n,
-             cast(round((cast(ln(t) AS decimal(17,10))
-               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-               AS cost
-           FROM n1, tot1),
-         ccost AS (
-           SELECT piece AS c, cost AS ccost FROM cost
-           WHERE len(piece) = 1),
-         multiexp AS (
-           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
-           FROM tcost t, generate_series(1, $UniPieceLen) AS gs(s)
-           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
-         multi AS (
-           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
-             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
-               cast(sum(cc.ccost) AS BIGINT) AS alt
-             FROM multiexp m JOIN ccost cc ON cc.c = m.c
-             GROUP BY m.piece)),
-         kept_multi AS (
-           SELECT piece, n, cost, loss FROM multi
-           ORDER BY loss DESC, piece LIMIT 10),
-         cost2 AS MATERIALIZED (
-           SELECT piece, cost FROM tcost WHERE len(piece) = 1
-           UNION ALL
-           SELECT piece, cost FROM kept_multi),
-         ${unigramDpCtes("r", "cost2")},
-         pw AS (
-           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
-           FROM rseg GROUP BY word),
-         wl AS (
-           SELECT lang, word FROM (
-             SELECT lang, unnest($WsSplitSql) AS word
-             FROM documents WHERE text IS NOT NULL)
-           WHERE len(word) > 0 AND len(word) <= $UniWordLen)
-         SELECT lang, cast(count(*) AS BIGINT) AS n_words,
-           cast(sum(p.n_pieces) AS BIGINT) AS n_pieces,
-           round(cast(sum(p.n_pieces) AS double) / count(*), 6)
-             AS fertility
-         FROM wl JOIN pw p USING (word)
-         GROUP BY lang ORDER BY lang""",
-    // OOV serving fertility: the retrain chain's pruned model (cost2)
-    // re-segmented through a SHORTER DP window (UniOovWordLen), then a
-    // LEFT join + char-count coalesce — words missing from the DP
-    // output (too long for the window, or unsegmentable under the
-    // pruned vocabulary) fall back to len(word) pieces.
-    "q_unigram_oov" ->
-      s"""$unigramCtes,
-         tcost AS MATERIALIZED (
-           SELECT piece, n,
-             cast(round((cast(ln(t) AS decimal(17,10))
-               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-               AS cost
-           FROM n1, tot1),
-         ccost AS (
-           SELECT piece AS c, cost AS ccost FROM cost
-           WHERE len(piece) = 1),
-         multiexp AS (
-           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
-           FROM tcost t, generate_series(1, $UniPieceLen) AS gs(s)
-           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
-         multi AS (
-           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
-             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
-               cast(sum(cc.ccost) AS BIGINT) AS alt
-             FROM multiexp m JOIN ccost cc ON cc.c = m.c
-             GROUP BY m.piece)),
-         kept_multi AS (
-           SELECT piece, n, cost, loss FROM multi
-           ORDER BY loss DESC, piece LIMIT 10),
-         cost2 AS MATERIALIZED (
-           SELECT piece, cost FROM tcost WHERE len(piece) = 1
-           UNION ALL
-           SELECT piece, cost FROM kept_multi),
-         ${unigramDpCtes("v", "cost2", UniOovWordLen)},
-         pw AS (
-           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
-           FROM vseg GROUP BY word),
-         wl AS (
-           SELECT lang, word FROM (
-             SELECT lang, unnest($WsSplitSql) AS word
-             FROM documents WHERE text IS NOT NULL)
-           WHERE len(word) > 0)
-         SELECT lang, cast(count(*) AS BIGINT) AS n_words,
-           cast(sum(coalesce(p.n_pieces, len(word))) AS BIGINT)
-             AS n_pieces,
-           cast(sum(CASE WHEN p.n_pieces IS NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_fallback,
-           round(cast(sum(coalesce(p.n_pieces, len(word))) AS double)
-             / count(*), 6) AS fertility
-         FROM wl LEFT JOIN pw p USING (word)
-         GROUP BY lang ORDER BY lang""",
-    // Prepare composition: the q_unigram_oov model+serving CTEs feed a
-    // per-DOC token count over the gated corpus, then the q_seq_pack
-    // packing formulas (salt 'prep1') and the q_interleave position
-    // formula with shards as sources.
-    "q_prepare_e2e" ->
-      s"""$unigramCtes,
-         tcost AS MATERIALIZED (
-           SELECT piece, n,
-             cast(round((cast(ln(t) AS decimal(17,10))
-               - cast(ln(n) AS decimal(17,10))) * 1000000, 0) AS BIGINT)
-               AS cost
-           FROM n1, tot1),
-         ccost AS (
-           SELECT piece AS c, cost AS ccost FROM cost
-           WHERE len(piece) = 1),
-         multiexp AS (
-           SELECT t.piece, t.n, t.cost, substr(t.piece, s, 1) AS c
-           FROM tcost t, generate_series(1, $UniPieceLen) AS gs(s)
-           WHERE len(t.piece) > 1 AND s <= len(t.piece)),
-         multi AS (
-           SELECT piece, n, cost, n * (alt - cost) AS loss FROM (
-             SELECT m.piece, max(m.n) AS n, max(m.cost) AS cost,
-               cast(sum(cc.ccost) AS BIGINT) AS alt
-             FROM multiexp m JOIN ccost cc ON cc.c = m.c
-             GROUP BY m.piece)),
-         kept_multi AS (
-           SELECT piece, n, cost, loss FROM multi
-           ORDER BY loss DESC, piece LIMIT 10),
-         cost2 AS MATERIALIZED (
-           SELECT piece, cost FROM tcost WHERE len(piece) = 1
-           UNION ALL
-           SELECT piece, cost FROM kept_multi),
-         ${unigramDpCtes("v", "cost2", UniOovWordLen)},
-         pw AS (
-           SELECT word, cast(count(*) AS BIGINT) AS n_pieces
-           FROM vseg GROUP BY word),
-         gated AS (
-           SELECT doc_id, text FROM documents
-           WHERE text IS NOT NULL
-             AND len(string_split_regex(text, '\\s+')) >= 20),
-         dw AS (
-           SELECT doc_id, word FROM (
-             SELECT doc_id, unnest(string_split_regex(text, '\\s+'))
-               AS word
-             FROM gated)
-           WHERE len(word) > 0),
-         tc AS (
-           SELECT doc_id,
-             cast(sum(coalesce(p.n_pieces, len(word))) AS BIGINT)
-               AS n_tokens
-           FROM dw LEFT JOIN pw p USING (word)
-           GROUP BY doc_id),
-         pk AS (
-           SELECT doc_id, n_tokens,
-             ('0x' || substr(md5(concat('prep1', '|',
-               cast(doc_id AS VARCHAR))), 1, 15))::BIGINT % 4 AS shard,
-             CASE WHEN n_tokens <= 1 THEN 1 WHEN n_tokens <= 2 THEN 2
-               WHEN n_tokens <= 4 THEN 4 WHEN n_tokens <= 8 THEN 8
-               WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
-               WHEN n_tokens <= 64 THEN 64 ELSE 128 END AS bucket
-           FROM tc WHERE n_tokens >= 1 AND n_tokens <= 128),
+           SELECT d.q_id, co.vec_id,
+             sum(cast(d.dq AS decimal(28,10))) AS ad
+           FROM rcodes co
+           JOIN dtab d ON d.cell = co.cell AND d.j = co.j
+             AND d.code = co.code
+           WHERE co.vec_id <> d.q_id
+           GROUP BY d.q_id, co.vec_id),
+         radc AS (
+           SELECT q_id, vec_id FROM (
+             SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
+               ORDER BY ad, vec_id) AS rn
+             FROM scored) WHERE rn <= 10),
+         ${embExactCte(5, 10)}
+         ${recallTailSql("radc", 10)}"""),
+    // L2 — OPQ-STYLE ROTATED IVF-PQ recall (Opq.rotate ∘ the
+    // q_ivf_pq_recall pipeline): the Walsh–Hadamard rotation spreads
+    // the corpus' dominant-direction energy evenly across the m=4 PQ
+    // subspaces BEFORE the codebooks see it — the standard recall lift
+    // at equal code budget (measured: mean recall@10 0.36 → 0.42 at
+    // sf0.01, 0.26 → 0.30 at sf0.1, same nprobe=4). Exact-integer WHT
+    // over micro-quantized vectors keeps the whole rotated pipeline
+    // bit-portable; the exact-cosine truth is computed in the rotated
+    // space, which the isometry law (OpqSpec) pins equal to the
+    // original space's ranking.
+    QueryDef("q_opq_recall", (s, dir) =>
+      // spread BELOW the rotation: the WHT butterfly is per-row compute
+      // that would otherwise evaluate inside the single scan task
+      // upstream of ivfPqRecallOver's exchange (a spread above a
+      // projection parallelizes its CONSUMERS, never the projection)
+      ivfPqRecallOver(graft.operators.Scale.spreadForCompute(
+          t(s, dir, "embeddings")
+            .select(col("vec_id"),
+              VectorOps.asDouble(col("embedding")).as("__raw")),
+          col("vec_id"))
+        .select(col("vec_id"),
+          graft.operators.Opq.rotate(col("__raw"), 64).as("emb"))),
+    // recall@10 of the SAME pipeline over Walsh–Hadamard-rotated
+    // vectors — read against q_ivf_pq_recall at equal nprobe, the
+    // delta is the OPQ-style rotation's lift.
+      s"""${ivfPqAdcCtes(OpqRotatedECtes)},
+          ${embExactCte(5, 10)},
+          adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
+          ${recallTailSql("adc", 10)}"""),
+    // L2 — the rotation's effect as a per-subspace number
+    // (q_opq_recall's measurement twin): total PQ quantization error
+    // per subspace, plain vs rotated. PQ quantizes subspaces
+    // independently, so this row shows how the rotation REDISTRIBUTES
+    // error across them (total energy is preserved — the isometry law;
+    // at sf0.01 the redistribution drops 3 of 4 subspaces and the
+    // recall lift follows). EXACT-INTEGER accounting end to end
+    // (Pq.encodeFixedLong): both paths are expressed in the SAME
+    // integer frame — eighth-micro units, 1/(√64·10⁶) of the float
+    // scale — plain as 8·round(x·10⁶), rotated as the RAW integer WHT
+    // (already √64·10⁶-scaled), so every dot, argmin key, per-row err
+    // and cross-row total is an exact integer with zero double rounding
+    // anywhere. History of the board's one recurring red row: the r12
+    // double-rounding theory was DISPROVED by the r13 judge (no sf0.01
+    // quantization input is within 3e-5 of a .5 boundary); the real
+    // r13 root cause was DECIMAL(38,0) outputs above 2^53, which the
+    // driver's compare coerces lossily while BIGINT survives — hence
+    // the final .cast("long") on both engine and oracle sides.
+    QueryDef("q_opq_balance", (s, dir) => {
+      val embP = embFrame(s, dir)
+      val qP = embP.select(col("vec_id"),
+        transform(col("emb"),
+          x => round(x * 1e6, 0).cast("long") * 8).as("emb"))
+      val qR = embP.select(col("vec_id"),
+        graft.operators.Opq.rotateInt(col("emb"), 64).as("emb"))
+      def byJ(e: DataFrame, out: String) =
+        graft.operators.Pq.encodeFixedLong(e, "vec_id", "emb",
+            m = 4, k = 8, dim = 64)
+          .groupBy("j")
+          // sum in DECIMAL (no wrap), ship as BIGINT: err totals reach
+          // ~1.1e16 — above 2^53, where DECIMAL survives our local
+          // DuckDB compare but not the driver's (r13 verdict: the two
+          // DECIMAL>2^53 rows were the board's only reds while BIGINTs
+          // up to 6.7e17 passed). Standing convention (SURVEY §5): no
+          // DECIMAL output column may exceed 2^53.
+          .agg(sum(col("err").cast("decimal(28,0)")).cast("long").as(out))
+      byJ(qP, "err_plain").join(byJ(qR, "err_rot"), Seq("j"))
+        .orderBy("j")
+    },
+    // Per-subspace PQ error totals, plain vs rotated — EXACT-INTEGER
+    // replay of Pq.encodeFixedLong over the shared eighth-micro frame:
+    // plain = 8·round(x·10⁶), rotated = the raw integer WHT; every dot,
+    // argmin key and err is an exact BIGINT sum (position-level joins,
+    // no float list ops), so the cross-build 1-ulp rounding divergence
+    // that killed the r12 double version cannot occur.
+      s"""WITH qv AS (
+           SELECT vec_id, gs.i AS pos,
+             CAST(round(embedding[gs.i]::DOUBLE * 1000000, 0) AS BIGINT) AS q
+           FROM embeddings, generate_series(1, 64) AS gs(i)),
+         rotl AS (
+           SELECT v.vec_id, i.i AS pos,
+             CAST(sum(CASE WHEN bit_count((i.i - 1) & (v.pos - 1)) % 2 = 0
+                 THEN v.q ELSE -v.q END) AS BIGINT) AS w
+           FROM qv v, generate_series(1, 64) AS i(i)
+           GROUP BY v.vec_id, i.i),
+         up AS (SELECT vec_id, CAST((pos - 1) // 16 AS BIGINT) AS j,
+                  (pos - 1) % 16 AS sp, 8 * q AS x FROM qv),
+         ur AS (SELECT vec_id, CAST((pos - 1) // 16 AS BIGINT) AS j,
+                  (pos - 1) % 16 AS sp, w AS x FROM rotl),
+         np AS (SELECT vec_id, j, CAST(sum(x * x) AS BIGINT) AS n2
+                FROM up GROUP BY vec_id, j),
+         nr AS (SELECT vec_id, j, CAST(sum(x * x) AS BIGINT) AS n2
+                FROM ur GROUP BY vec_id, j),
+         dp AS (SELECT a.vec_id, a.j, b.vec_id AS c,
+                  CAST(sum(a.x * b.x) AS BIGINT) AS sc
+                FROM up a JOIN up b
+                  ON b.vec_id < 8 AND a.j = b.j AND a.sp = b.sp
+                GROUP BY a.vec_id, a.j, b.vec_id),
+         dr AS (SELECT a.vec_id, a.j, b.vec_id AS c,
+                  CAST(sum(a.x * b.x) AS BIGINT) AS sc
+                FROM ur a JOIN ur b
+                  ON b.vec_id < 8 AND a.j = b.j AND a.sp = b.sp
+                GROUP BY a.vec_id, a.j, b.vec_id),
+         encp AS (
+           SELECT vec_id, j, err FROM (
+             SELECT d.vec_id, d.j, sv.n2 - 2 * d.sc + cv.n2 AS err,
+               row_number() OVER (PARTITION BY d.vec_id, d.j
+                 ORDER BY cv.n2 - 2 * d.sc, d.c) AS rn
+             FROM dp d
+             JOIN np sv ON sv.vec_id = d.vec_id AND sv.j = d.j
+             JOIN np cv ON cv.vec_id = d.c AND cv.j = d.j) WHERE rn = 1),
+         encr AS (
+           SELECT vec_id, j, err FROM (
+             SELECT d.vec_id, d.j, sv.n2 - 2 * d.sc + cv.n2 AS err,
+               row_number() OVER (PARTITION BY d.vec_id, d.j
+                 ORDER BY cv.n2 - 2 * d.sc, d.c) AS rn
+             FROM dr d
+             JOIN nr sv ON sv.vec_id = d.vec_id AND sv.j = d.j
+             JOIN nr cv ON cv.vec_id = d.c AND cv.j = d.j) WHERE rn = 1)
+         SELECT p.j, p.err_plain, r.err_rot FROM
+           (SELECT j, CAST(sum(cast(err AS decimal(28,0))) AS BIGINT)
+              AS err_plain
+            FROM encp GROUP BY j) p
+         JOIN
+           (SELECT j, CAST(sum(cast(err AS decimal(28,0))) AS BIGINT)
+              AS err_rot
+            FROM encr GROUP BY j) r
+         USING (j) ORDER BY j"""),
+    // L2 — the balance comparison ACROSS all four rotation modes
+    // (plain / oblivious WHT / learned rank-1 / learned rank-2): the
+    // per-subspace exact-integer PQ error totals in ONE shared
+    // eighth-micro frame — the OPQ objective itself as a measurement,
+    // answering directly whether each rotation actually equalized
+    // subspace error (the property the recall lifts ride on). Same
+    // Pq.encodeFixedLong algebra as q_opq_balance; the learned frames
+    // re-quantize the reflected doubles (8·round(rv·10⁶), one rounding
+    // per element, oracle-replayed); WHT uses the raw integer butterfly.
+    QueryDef("q_opq_balance2", (s, dir) => {
+      // spread before the persist: four encode passes read this cache,
+      // and r1's interpreted Householder reflection materializes through
+      // it — at scan width all of that serialized into single tasks
+      val embP = graft.operators.Scale.spreadForCompute(
+          t(s, dir, "embeddings")
+            .select(col("vec_id"),
+              VectorOps.asDouble(col("embedding")).as("emb")),
+          col("vec_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val q8 = (c: org.apache.spark.sql.Column) =>
+        transform(c, x => round(x * 1e6, 0).cast("long") * 8)
+      val (d1, d2) = graft.operators.Pca.topDirections2(embP, "emb", 64)
+      val u1 = graft.operators.Opq.householderFromPca(d1)
+      val u2 = graft.operators.Opq.householder2FromPca(d2, u1)
+      // r1 feeds BOTH its own balance pass and the second reflection
+      val r1 = graft.operators.Opq.rotateHouseholder(embP, "emb", u1)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val r2 = graft.operators.Opq.rotateHouseholder(r1, "emb", u2)
+      def byJ(e: DataFrame, mode: String) =
+        graft.operators.Pq.encodeFixedLong(e, "vec_id", "emb",
+            m = 4, k = 8, dim = 64)
+          .groupBy("j")
+          // DECIMAL sum → BIGINT output: same >2^53 driver-compare
+          // convention as q_opq_balance (SURVEY §5).
+          .agg(sum(col("err").cast("decimal(28,0)")).cast("long").as("err"))
+          .select(lit(mode).as("mode"), col("j"), col("err"))
+      byJ(embP.select(col("vec_id"), q8(col("emb")).as("emb")), "plain")
+        .union(byJ(embP.select(col("vec_id"),
+          graft.operators.Opq.rotateInt(col("emb"), 64).as("emb")), "wht"))
+        .union(byJ(r1.select(col("vec_id"), q8(col("emb")).as("emb")),
+          "pca1"))
+        .union(byJ(r2.select(col("vec_id"), q8(col("emb")).as("emb")),
+          "pca2"))
+        .orderBy("mode", "j")
+    },
+    // Four-mode balance: the learned-rotation chain feeds eighth-micro
+    // integer frames for all four spaces (PcaSql's x is 0-based pos),
+    // each run through the exact-integer PQ-error block.
+      PcaSql(
+      s""",
+         $OpqRank1Ctes,
+         $OpqRank2Ctes,
+         tplain AS MATERIALIZED (
+           SELECT vec_id, CAST(pos // 16 AS BIGINT) AS j, pos % 16 AS sp,
+             8 * x AS x
+           FROM x),
+         twht AS MATERIALIZED (
+           SELECT v.vec_id, CAST(i.i // 16 AS BIGINT) AS j, i.i % 16 AS sp,
+             CAST(sum(CASE WHEN bit_count(i.i & v.pos) % 2 = 0
+                 THEN v.x ELSE -v.x END) AS BIGINT) AS x
+           FROM x v, generate_series(0, 63) AS i(i)
+           GROUP BY v.vec_id, i.i),
+         tpca1 AS MATERIALIZED (
+           SELECT vec_id, CAST(pos // 16 AS BIGINT) AS j, pos % 16 AS sp,
+             8 * round(rv * 1000000, 0)::BIGINT AS x
+           FROM rotm),
+         tpca2 AS MATERIALIZED (
+           SELECT vec_id, CAST(pos // 16 AS BIGINT) AS j, pos % 16 AS sp,
+             8 * round(rv * 1000000, 0)::BIGINT AS x
+           FROM rotv2),
+         ${pqErrByJCtes("plain", "plain")},
+         ${pqErrByJCtes("wht", "wht")},
+         ${pqErrByJCtes("pca1", "pca1")},
+         ${pqErrByJCtes("pca2", "pca2")}
+         SELECT mode, j, err FROM (
+           SELECT * FROM splain UNION ALL SELECT * FROM swht
+           UNION ALL SELECT * FROM spca1 UNION ALL SELECT * FROM spca2)
+         ORDER BY mode, j""")),
+    // L2 — the LEARNED rotation (the PCA-derived counterpart of
+    // q_opq_recall's oblivious WHT): a Householder reflection built
+    // from the corpus' top principal direction (Opq.householderFromPca
+    // over Pca.topDirection) maps the dominant-variance axis onto the
+    // all-ones diagonal, spreading its energy across all m subspaces —
+    // the actual OPQ objective, data-driven. Exactly orthogonal for the
+    // exact integer u, bit-portable end to end (the oracle re-derives
+    // the direction from its own PCA CTEs and replays the reflection in
+    // exact decimals), and the measured lift at equal nprobe=4: mean
+    // recall@10 0.36 → 0.40 at sf0.01, 0.26 → 0.30 at sf0.1.
+    QueryDef("q_opq_pca_recall", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val u = graft.operators.Opq.householderFromPca(
+        graft.operators.Pca.topDirection(emb, "emb", 64))
+      // spread BELOW the reflection (the q_opq_recall rationale): the
+      // interpreted Householder HOF is the per-row cost to parallelize
+      ivfPqRecallOver(graft.operators.Opq.rotateHouseholder(
+        graft.operators.Scale.spreadForCompute(emb, col("vec_id")),
+        "emb", u))
+    },
+    // Learned-rotation recall: the PCA chain's dir CTE feeds the exact
+    // integer Householder axis (u = round(sqrt(64))*q - round(|q|)),
+    // the reflection replays in exact decimals over the quantized
+    // x rows, and the parameterized ADC body + exact-cosine truth run
+    // over the rotated frame e2.
+      PcaSql(
+      s""",
+         $OpqRank1Ctes,
+         e2 AS (SELECT vec_id, list(rv ORDER BY pos) AS v
+                FROM rotv GROUP BY vec_id),
+         ${ivfPqAdcBody("e2")},
+         ${embExactCte(5, 10, "e2")},
+         adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
+         ${recallTailSql("adc", 10)}""")),
+    // L2 — the RANK-2 learned rotation (the verdict-4 upgrade): compose
+    // TWO Householders — H₁ maps the top principal direction onto the
+    // all-ones diagonal (as q_opq_pca_recall), H₂ maps the second
+    // direction's image onto the ALTERNATING ±1 diagonal, which is
+    // orthogonal to H₁'s target so the composition spreads BOTH top
+    // directions' energy across the m subspaces instead of undoing one.
+    // Exactly orthogonal for the exact-integer axes, bit-portable end to
+    // end: the oracle re-derives q₂ from its own deflation CTEs (dir2),
+    // replays v = H₁q₂ and both reflections in exact decimals.
+    // Measured (recall@10, nprobe=4, vs plain 0.36/0.26 and WHT
+    // 0.42/0.30 at sf0.01/sf0.1): rank-1 0.40/0.30, rank-2 0.32/0.34 —
+    // at the larger SF the learned rotations beat the oblivious WHT.
+    // A 40-query probe (tools/RecallProbe) confirms the direction at
+    // sf0.1 (pca1 0.1025 / pca2 0.10 vs wht 0.0875, plain 0.09) and
+    // shows the sf0.01 rank-2 dip is a real small-corpus effect, not
+    // 5-query noise (wht 0.18 > pca1 0.16 > pca2 0.14 > plain 0.1375
+    // there): with few vectors per cell the second reflection's axis is
+    // estimated from a deflated spectrum too noisy to help.
+    QueryDef("q_opq_pca2_recall", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val (d1, d2) = graft.operators.Pca.topDirections2(emb, "emb", 64)
+      val u1 = graft.operators.Opq.householderFromPca(d1)
+      val u2 = graft.operators.Opq.householder2FromPca(d2, u1)
+      // spread BELOW the reflections (the q_opq_recall rationale)
+      ivfPqRecallOver(graft.operators.Opq.rotateHouseholder(
+        graft.operators.Opq.rotateHouseholder(
+          graft.operators.Scale.spreadForCompute(emb, col("vec_id")),
+          "emb", u1), "emb", u2))
+    },
+    // Rank-2 learned rotation: the rank-1 chain (uu/rotv) plus the
+    // second axis — v = H₁q₂ from the deflated direction dir2 (exact
+    // decimal numerator, one rounded division), aimed at the
+    // alternating ±1 diagonal (uub), and the second reflection replayed
+    // over the re-quantized first-reflection frame (x2 → rotv2).
+      PcaSql(
+      s""",
+         $OpqRank1Ctes,
+         $OpqRank2Ctes,
+         e2 AS MATERIALIZED (SELECT vec_id, list(rv ORDER BY pos) AS v
+                FROM rotv2 GROUP BY vec_id),
+         ${ivfPqAdcBody("e2")},
+         ${embExactCte(5, 10, "e2")},
+         adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
+         ${recallTailSql("adc", 10)}""")),
+    // L2 — the full OPQ ALTERNATION's measured row (Ge et al. 2013,
+    // non-parametric): R-step = the measured-best Householder rotation
+    // (rank-2, q_opq_balance2's winner), C-step = Lloyd-RETRAINED
+    // per-subspace codebooks in that space (Pq.ivfAdcTrainedTopK) —
+    // one full alternation, which on this corpus is also the
+    // CONVERGED one: the Householder-constrained Procrustes R-step
+    // from any start space has a PSD gain form (sym(X·Cᵀ) ⪰ 0 once C
+    // tracks X), i.e. identity is the alternation's fixed point, so
+    // further rounds are measured no-ops (tools/OpqAlt: quad form
+    // +0.32 from plain, +0.87 from pca2; recall 0.34→0.32 on the one
+    // accepted-by-err candidate). The codebook half is where the
+    // remaining gain lives: measured at sf0.1 this row reads 0.36
+    // vs the best fixed mode's 0.34 (and the same trained-vs-fixed
+    // comparison is what --rotate-auto --trained now probes).
+    QueryDef("q_opq_train_recall", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val (d1, d2) = graft.operators.Pca.topDirections2(emb, "emb", 64)
+      val u1 = graft.operators.Opq.householderFromPca(d1)
+      val u2 = graft.operators.Opq.householder2FromPca(d2, u1)
+      // spread BELOW the double reflection, persist above it: the
+      // interpreted Householder HOFs were materializing the cache in
+      // ONE 1.2-1.3 s task (job-log measured) and the 1-partition cache
+      // then serialized every consumer; spreading the INPUT runs the
+      // reflections 32-wide and caches them wide
+      annRecall(graft.operators.Opq.rotateHouseholder(
+          graft.operators.Opq.rotateHouseholder(
+            graft.operators.Scale.spreadForCompute(emb, col("vec_id")),
+            "emb", u1), "emb", u2)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+        (rot, qs) => graft.operators.Pq.ivfAdcTrainedTopK(rot, qs,
+          ivfSeeds(rot), nprobe = 4, topK = 10, m = 4, k = 8, dim = 64,
+          iters = 2)
+      }
+    },
+    // The OPQ alternation's measured row: the rank-2 rotated frame (the
+    // R-step — same chain as q_opq_pca2_recall) with Lloyd-RETRAINED
+    // per-subspace codebooks (the C-step): the fixed first-8 codebook
+    // becomes the Lloyd seed, two unrolled assign→exact-decimal-means
+    // rounds, then the identical ADC probe pipeline and recall tail.
+      PcaSql(
+      s""",
+         $OpqRank1Ctes,
+         $OpqRank2Ctes,
+         e2 AS MATERIALIZED (SELECT vec_id, list(rv ORDER BY pos) AS v
+                FROM rotv2 GROUP BY vec_id),
+         ${ivfPqAdcTrainedBody("e2", 2)},
+         ${embExactCte(5, 10, "e2")},
+         adc AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 10)
+         ${recallTailSql("adc", 10)}""")),
+    // L2 — IVF-PQ + exact refine (Similarity.refineTopK): the FULL FAISS
+    // serving shape — ADC proposes top-20 per query from codes only, the
+    // refine stage fetches JUST those 20 vectors (one candidate-scale
+    // broadcast probe into embeddings) and re-ranks by exact cosine to
+    // top-10. Corpus full-precision vectors are read once at index build
+    // and once per candidate here — never per (query, corpus) pair. The
+    // ADC distance each candidate arrived with rides through (adist),
+    // like retrieveRerank's bm25.
+    QueryDef("q_ivf_pq_rerank", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      val centroids = ivfSeeds(emb)
+      val cands = graft.operators.Pq.ivfAdcTopK(emb, qs, centroids,
+          nprobe = 4, topK = 20, m = 4, k = 8, dim = 64)
+        .select(col("q_id"), col("vec_id"), col("adist"))
+      Similarity.refineTopK(cands, emb, qs, topK = 10)
+        .select(col("q_id"), col("rn"), col("vec_id"), col("adist"),
+          round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
+    },
+    // IVF-PQ + exact refine: ADC top-20 candidates re-scored by the
+    // exact cosine (the q_sim_exact formulation) and re-cut to top-10;
+    // the candidate's ADC distance rides through.
+      s"""$IvfPqAdcCtes,
+          cand AS (
+            SELECT q_id, vec_id, round(cast(ad AS double), 6) AS adist
+            FROM adcranked WHERE rn <= 20),
+          rr AS (
+            SELECT c.q_id, c.vec_id, c.adist,
+              list_dot_product(x.v, g.v) /
+                (sqrt(list_dot_product(x.v, x.v))
+                 * sqrt(list_dot_product(g.v, g.v))) AS cos
+            FROM cand c
+            JOIN e x ON x.vec_id = c.vec_id
+            JOIN e g ON g.vec_id = c.q_id)
+          SELECT q_id, rn, vec_id, adist, round(cos, 6) AS cosine FROM (
+            SELECT q_id, vec_id, adist, cos,
+              row_number() OVER (PARTITION BY q_id
+                ORDER BY cos DESC, vec_id) AS rn
+            FROM rr)
+          WHERE rn <= 10 ORDER BY q_id, rn"""),
+    // L2 — recall@10 of the refined IVF-PQ search vs exact cosine top-10
+    // (the q_ivf_pq_recall recipe): read next to q_ivf_pq_recall at the
+    // same nprobe, the delta IS the refine stage's lift — quantization
+    // error stops costing rank order once the top-20 candidates are
+    // re-scored exactly; only neighbours ADC missed entirely still hurt.
+    QueryDef("q_ivf_pq_rerank_recall", (s, dir) => annRecall(embFrame(s, dir)) {
+      (emb, qs) =>
+        val cands = graft.operators.Pq.ivfAdcTopK(emb, qs, ivfSeeds(emb),
+            nprobe = 4, topK = 20, m = 4, k = 8, dim = 64)
+          .select(col("q_id"), col("vec_id"))
+        Similarity.refineTopK(cands, emb, qs, topK = 10)
+    },
+    // recall@10 of the refined IVF-PQ search — read against
+    // q_ivf_pq_recall at the same nprobe, the delta is the refine lift.
+      s"""$IvfPqAdcCtes,
+          ${embExactCte(5, 10)},
+          cand AS (SELECT q_id, vec_id FROM adcranked WHERE rn <= 20),
+          refined AS (
+            SELECT q_id, vec_id FROM (
+              SELECT c.q_id, c.vec_id,
+                row_number() OVER (PARTITION BY c.q_id ORDER BY
+                  list_dot_product(x.v, g.v) /
+                    (sqrt(list_dot_product(x.v, x.v))
+                     * sqrt(list_dot_product(g.v, g.v))) DESC,
+                  c.vec_id) AS rn
+              FROM cand c
+              JOIN e x ON x.vec_id = c.vec_id
+              JOIN e g ON g.vec_id = c.q_id)
+            WHERE rn <= 10)
+          ${recallTailSql("refined", 10)}"""),
+    // L2 — IVF TUNING CURVE: recall@10 per query at nprobe ∈ {1, 2, 4}
+    // against exact top-10 — the number that picks nprobe before a
+    // production ANN run (the measurement twin of q_ivf_balance). Fixed
+    // first-16 quantizer, so every probe ranking reproduces in SQL and
+    // the whole curve oracle-checks; per-query aggregation keeps the
+    // verdict distributed.
+    QueryDef("q_ivf_recall_curve", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      val centroids = ivfSeeds(emb)
+      val exact = Similarity.exactTopK(emb, qs, 10)
+        .select(col("q_id"), col("vec_id"))
+      Seq(1, 2, 4).map { np =>
+        val ivf = graft.operators.Ivf.topK(emb, qs, centroids, k = 10,
+            nprobe = np)
+          .select(col("q_id"), col("vec_id"))
+        Similarity.recallAtK(exact, ivf, 10)
+          .select(lit(np.toLong).as("nprobe"), col("q_id"), col("n_hit"),
+            col("recall"))
+      }.reduce(_.unionByName(_)).orderBy("nprobe", "q_id")
+    },
+    // The q_sim_ivf_fixed CTEs shared across three probe widths + the
+    // q_sim_exact truth, hit-joined per query — the whole tuning curve
+    // from one oracle.
+      {
+      val branches = Seq(1, 2, 4).map { np =>
+        s"""s$np AS (
+             SELECT q_id, vec_id FROM (
+               SELECT q_id, vec_id,
+                 row_number() OVER (PARTITION BY q_id
+                   ORDER BY cos DESC, vec_id) AS rn
+               FROM (
+                 SELECT q.q_id, e.vec_id,
+                   list_dot_product(e.v, q.qv) /
+                     (sqrt(list_dot_product(e.v, e.v))
+                      * sqrt(list_dot_product(q.qv, q.qv))) AS cos
+                 FROM pr p
+                 JOIN assign a ON a.cell = p.cell
+                 JOIN e ON e.vec_id = a.vec_id
+                 JOIN q ON q.q_id = p.q_id
+                 WHERE p.rn <= $np AND e.vec_id <> q.q_id))
+             WHERE rn <= 10),
+           h$np AS (
+             SELECT ex.q_id, cast($np AS BIGINT) AS nprobe,
+               cast(sum(CASE WHEN s$np.vec_id IS NULL THEN 0 ELSE 1 END)
+                 AS BIGINT) AS n_hit
+             FROM ex LEFT JOIN s$np
+               ON s$np.q_id = ex.q_id AND s$np.vec_id = ex.vec_id
+             GROUP BY ex.q_id)"""
+      }.mkString(",\n")
+      val unions = Seq(1, 2, 4).map(np =>
+        s"SELECT nprobe, q_id, n_hit FROM h$np").mkString(" UNION ALL ")
+      s"""WITH $IvfSeedCte,
+         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         ${ivfAssignCte("e")},
+         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
          pr AS (
-           SELECT shard, bucket, n_tokens,
-             row_number() OVER (PARTITION BY shard, bucket
-               ORDER BY n_tokens DESC, doc_id) - 1 AS rn
-           FROM pk),
-         sq AS (
-           SELECT shard, bucket, (rn * bucket) // 128 AS seq_id,
-             cast(count(*) AS BIGINT) AS n_docs,
-             cast(sum(n_tokens) AS BIGINT) AS used_tokens,
-             cast(128 - sum(n_tokens) AS BIGINT) AS padding
-           FROM pr GROUP BY shard, bucket, (rn * bucket) // 128)
-         SELECT ((srank - 1) * 4 + shard)::bigint AS pos, shard, bucket,
-           seq_id, n_docs, used_tokens, padding FROM (
-           SELECT shard, bucket, seq_id, n_docs, used_tokens, padding,
-             row_number() OVER (PARTITION BY shard
-               ORDER BY bucket, seq_id) AS srank
-           FROM sq)
-         ORDER BY pos""",
-    "q_rep_topgram" ->
-      """WITH w AS (
-           SELECT doc_id, length(replace(text, ' ', '')) AS wc,
-             string_split(text, ' ') AS ws
-           FROM documents
-           WHERE text IS NOT NULL AND length(replace(text, ' ', '')) > 0),
-         g1 AS (
-           SELECT doc_id, wc,
-             unnest(list_transform(
-               generate_series(1, greatest(len(ws) - 1 + 1, 1)),
-               i -> array_to_string(ws[i:i], ' '))) AS g
-           FROM w),
-         g2 AS (
-           SELECT doc_id, wc,
-             unnest(list_transform(
-               generate_series(1, greatest(len(ws) - 2 + 1, 1)),
-               i -> array_to_string(ws[i:i+1], ' '))) AS g
-           FROM w),
-         t1 AS (
-           SELECT doc_id, g AS top1_gram, c AS top1_n,
-             round(c * length(replace(g, ' ', '')) / wc, 6) AS top1_frac
-           FROM (SELECT doc_id, wc, g, count(*) AS c,
-                   row_number() OVER (PARTITION BY doc_id
-                     ORDER BY count(*) DESC, g) AS rn
-                 FROM g1 GROUP BY doc_id, wc, g)
-           WHERE rn = 1),
-         t2 AS (
-           SELECT doc_id, g AS top2_gram, c AS top2_n,
-             round(c * length(replace(g, ' ', '')) / wc, 6) AS top2_frac
-           FROM (SELECT doc_id, wc, g, count(*) AS c,
-                   row_number() OVER (PARTITION BY doc_id
-                     ORDER BY count(*) DESC, g) AS rn
-                 FROM g2 GROUP BY doc_id, wc, g)
-           WHERE rn = 1)
-         SELECT t1.doc_id, top1_gram, top1_n, top1_frac,
-           top2_gram, top2_n, top2_frac
-         FROM t1 JOIN t2 ON t1.doc_id = t2.doc_id
-         ORDER BY t1.doc_id""",
-    "q_dedup_cluster" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst)
-         SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-         GROUP BY src ORDER BY id""",
-    // Same component CTEs, then the per-doc 1/|cluster| weight with
-    // singletons (docs in no cluster) defaulting to their own id / w=1.
-    "q_dedup_soft" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst),
-         lab AS (SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-                 GROUP BY src),
-         allm AS (SELECT d.doc_id, coalesce(l.comp, d.doc_id) AS cluster
-                  FROM documents d LEFT JOIN lab l ON d.doc_id = l.id),
-         sz AS (SELECT cluster, cast(count(*) AS bigint) AS n_members
-                FROM allm GROUP BY cluster)
-         SELECT a.doc_id, a.cluster, sz.n_members,
-           round(1.0 / sz.n_members, 6) AS w
-         FROM allm a JOIN sz USING (cluster) ORDER BY a.doc_id""",
-    // Same component CTE as q_dedup_cluster, then the md5 split gate on
-    // the cluster label (q_sample_hash's portable convention).
-    "q_split_leakfree" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst),
-         labels AS (
-           SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-           GROUP BY src)
-         SELECT d.doc_id, coalesce(l.comp, d.doc_id) AS cluster,
-           CASE WHEN substring(md5(concat('lfs1', '|',
-                  cast(coalesce(l.comp, d.doc_id) AS VARCHAR))), 1, 4)
-                < '2000'
-                THEN 'val' ELSE 'train' END AS split
-         FROM documents d LEFT JOIN labels l ON d.doc_id = l.id
-         ORDER BY d.doc_id""",
-    // Same decomposition as the engine: first term over (gram ⋈ lang
-    // counts) only — unseen grams are ln(1) = 0 — penalty in closed form.
-    "q_langid_nb" ->
-      s"""WITH $LangIdNbCte
-         SELECT d.lang, count(*)::bigint AS n_docs,
-           sum(CASE WHEN p.predicted = d.lang THEN 1 ELSE 0 END)::bigint
-             AS n_correct
-         FROM documents d JOIN pred p ON p.doc_id = d.doc_id
-         WHERE d.text IS NOT NULL
-         GROUP BY d.lang ORDER BY lang""",
-    "q_langid_confusion" ->
-      s"""WITH $LangIdNbCte
-         SELECT d.lang AS actual, p.predicted, count(*)::bigint AS n_docs
-         FROM documents d JOIN pred p ON p.doc_id = d.doc_id
-         WHERE d.text IS NOT NULL
-         GROUP BY 1, 2 ORDER BY actual, predicted""",
-    "q_char_ngrams" ->
-      """WITH g AS (
-           SELECT lang, unnest(list_transform(
-             generate_series(1, greatest(length(text) - 2, 1)),
-             i -> substr(text, i, 3))) AS gram
-           FROM documents WHERE text IS NOT NULL),
-         c AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY lang, gram)
-         SELECT lang, gram, c::bigint AS c, rn::bigint AS rn FROM (
-           SELECT lang, gram, c,
-             row_number() OVER (PARTITION BY lang ORDER BY c DESC, gram)
+           SELECT q.q_id, c.cid AS cell,
+             row_number() OVER (PARTITION BY q.q_id
+               ORDER BY -2 * list_dot_product(q.qv, c.cv) + c.cnorm2, c.cid)
                AS rn
-           FROM c) WHERE rn <= 5 ORDER BY lang, rn""",
-    // Exact ln-of-integers decimal combination in the SAME fixed order as
-    // the engine expression; totals derive from the aggregates.
-    "q_pmi" ->
-      """WITH ws AS (
-           SELECT string_split_regex(text, '\s+') AS w
-           FROM documents WHERE text IS NOT NULL),
-         toks AS (SELECT unnest(w) AS w FROM ws),
-         uni AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
-         occ AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2
-           FROM (SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-                 FROM ws)),
-         big AS (SELECT w1, w2, count(*) AS c12 FROM occ GROUP BY w1, w2),
-         nu AS (SELECT sum(c)::bigint AS nu FROM uni),
-         nb AS (SELECT sum(c12)::bigint AS nb FROM big),
-         scored AS (
-           SELECT b.w1, b.w2, b.c12,
-             round((cast(ln(b.c12) AS decimal(28,10))
-               + cast(ln(nu.nu) AS decimal(28,10))
-               + cast(ln(nu.nu) AS decimal(28,10))
-               - cast(ln(nb.nb) AS decimal(28,10))
-               - cast(ln(u1.c) AS decimal(28,10))
-               - cast(ln(u2.c) AS decimal(28,10)))::double, 6) AS pmi
-           FROM big b
-           JOIN uni u1 ON u1.w = b.w1
-           JOIN uni u2 ON u2.w = b.w2, nu, nb
-           WHERE b.c12 >= 5)
-         SELECT w1, w2, c12::bigint AS c12, pmi FROM scored
-         ORDER BY pmi DESC, w1, w2 LIMIT 30""",
-    // TextRank = the q_pagerank oracle's integer PR rounds over a
-    // co-occurrence edge list built from surviving-token adjacency.
-    "q_textrank" ->
-      """WITH t0 AS (
-           SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-           FROM documents WHERE text IS NOT NULL),
-         tok AS (
-           SELECT doc_id, pos, regexp_replace(tk, '[^a-z0-9]', '', 'g') AS t
-           FROM (SELECT doc_id, unnest(w) AS tk,
-                   unnest(generate_series(1, len(w))) AS pos FROM t0)),
-         ft AS (SELECT doc_id, pos, t FROM tok WHERE length(t) >= 3),
-         seq AS (SELECT t AS dst,
-             lag(t) OVER (PARTITION BY doc_id ORDER BY pos) AS src
-           FROM ft),
-         p AS (SELECT src, dst FROM seq
-               WHERE src IS NOT NULL AND src <> dst),
-         edges AS (SELECT src, dst, cast(count(*) AS BIGINT) AS w
-           FROM (SELECT src, dst FROM p
-                 UNION ALL SELECT dst AS src, src AS dst FROM p)
-           GROUP BY 1, 2),
-         outw AS (SELECT src, cast(sum(w) AS BIGINT) AS outw
-           FROM edges GROUP BY 1),
-         nodes AS (SELECT src AS node FROM edges
-           UNION SELECT dst FROM edges),
-         r0 AS (SELECT node, cast(1000000000000 AS BIGINT) AS rank
-           FROM nodes),
-         c1 AS (
-           SELECT e.dst AS node, cast(sum(
-             (r.rank::HUGEINT * 85 * e.w) // (100 * o.outw::HUGEINT)
-             ) AS BIGINT) AS s
-           FROM edges e JOIN outw o ON e.src = o.src
-             JOIN r0 r ON r.node = e.src GROUP BY 1),
-         r1 AS (SELECT n.node,
-             cast(150000000000 + coalesce(c1.s, 0) AS BIGINT) AS rank
-           FROM nodes n LEFT JOIN c1 ON n.node = c1.node),
-         c2 AS (
-           SELECT e.dst AS node, cast(sum(
-             (r.rank::HUGEINT * 85 * e.w) // (100 * o.outw::HUGEINT)
-             ) AS BIGINT) AS s
-           FROM edges e JOIN outw o ON e.src = o.src
-             JOIN r1 r ON r.node = e.src GROUP BY 1),
-         r2 AS (SELECT n.node,
-             cast(150000000000 + coalesce(c2.s, 0) AS BIGINT) AS rank
-           FROM nodes n LEFT JOIN c2 ON n.node = c2.node)
-         SELECT node AS term, rank FROM r2
-         ORDER BY rank DESC, term LIMIT 20""",
-    "q_zipf_slope" ->
-      """WITH toks AS (
-           SELECT unnest(string_split_regex(lower(text), '\s+')) AS t
-           FROM documents WHERE text IS NOT NULL),
-         freq AS (
-           SELECT t, count(*) AS c FROM toks WHERE length(t) > 0 GROUP BY t),
-         head AS (
-           SELECT c, row_number() OVER (ORDER BY c DESC, t) AS r
-           FROM freq QUALIFY r <= 200),
-         xy AS (
-           SELECT round(ln(r::DOUBLE) * 1000000, 0)::BIGINT AS x,
-             round(ln(c::DOUBLE) * 1000000, 0)::BIGINT AS y
-           FROM head),
-         s AS (
-           SELECT cast(count(*) AS BIGINT) AS n_ranks,
-             cast(sum(x) AS BIGINT) AS sx, cast(sum(y) AS BIGINT) AS sy,
-             cast(sum(x * y) AS BIGINT) AS sxy,
-             cast(sum(x * x) AS BIGINT) AS sxx
-           FROM xy),
-         f AS (
-           SELECT n_ranks, sx, sy,
-             (n_ranks::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-               / (n_ranks::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
-               AS slope
+           FROM q CROSS JOIN c),
+         ex AS (
+           SELECT q_id, vec_id FROM (
+             SELECT q.q_id, e.vec_id,
+               row_number() OVER (PARTITION BY q.q_id ORDER BY
+                 list_dot_product(e.v, q.qv) /
+                   (sqrt(list_dot_product(e.v, e.v))
+                    * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id)
+                 AS rn
+             FROM e JOIN q ON e.vec_id <> q.q_id) WHERE rn <= 10),
+         $branches
+         SELECT nprobe, q_id, n_hit, n_hit::DOUBLE / 10 AS recall
+         FROM ($unions) ORDER BY nprobe, q_id"""
+    }),
+    // L2 — LSH-bucketed approximate top-k: exactTopK's broadcast crossJoin
+    // replaced by an equi-join on the sign-LSH bucket, so per-query work is
+    // proportional to its bucket's size, not |corpus| — the scale path when
+    // the query set itself is large. Oracle-checked with the same unrolled
+    // hyperplane literals as q_sim_lsh; the cosine ranking is portable by
+    // the q_sim_exact argument.
+    QueryDef("q_sim_lsh_topk", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      Similarity.lshTopK(emb, qs, 10, Similarity.hyperplanes(4, 64))
+        .select(col("q_id"), col("vec_id"), col("rn"),
+          round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
+    },
+    // lshTopK = q_sim_exact's scoring/ranking restricted to bucket-equal
+    // candidates: same plane literals as the engine, same cosine and
+    // row_number shape as the q_sim_exact oracle.
+      {
+      val b = lshBucketSql(graft.operators.Similarity.hyperplanes(4, 64), "embedding")
+      s"""WITH bk AS (SELECT vec_id, embedding, $b AS bucket FROM embeddings)
+          SELECT q_id, vec_id, rn, round(cos, 6) AS cosine FROM (
+            SELECT q_id, vec_id, cos,
+              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
+            FROM (
+              SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
+                list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
+                  (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
+                   * sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))) AS cos
+              FROM bk q JOIN bk e
+                ON q.vec_id < 5 AND e.bucket = q.bucket AND e.vec_id <> q.vec_id))
+          WHERE rn <= 10 ORDER BY q_id, rn"""
+    }),
+    // L1 — vocabulary coverage: what fraction of all token OCCURRENCES the
+    // top-k tokens cover — the first question of tokenizer/vocab design.
+    // The top-20 is taken FIRST via orderBy+limit, which plans as
+    // TakeOrderedAndProject (per-partition 20-row heaps + one merge) — a
+    // web-scale vocabulary (10^8–10^9 tokens) never funnels through a
+    // single-task global sort. The rank/cumsum window then runs over the
+    // 20-row result, which under the same total ordering IS the global
+    // prefix, so the answer is unchanged; cnt/cum stay exact longs so the
+    // coverage division is engine-portable.
+    QueryDef("q_vocab_coverage", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val toks = t(s, dir, "documents")
+        .select(explode(split(col("text"), "\\s+")).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("cnt"))
+      val total = toks.agg(sum(col("cnt")).as("total"))
+      val top = toks.orderBy(col("cnt").desc, col("token")).limit(20)
+      // global window DELIBERATE: bounded to 20 rows by the limit
+      val ord = Window.orderBy(col("cnt").desc, col("token"))
+      top.crossJoin(broadcast(total))
+        .withColumn("rn", row_number().over(ord).cast("long"))
+        .withColumn("cum", sum(col("cnt"))
+          .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .select(col("rn"), col("token"), col("cnt"),
+          round(col("cum").cast("double") / col("total"), 6).as("coverage"))
+        .orderBy("rn")
+    },
+      """WITH tok AS (SELECT unnest(string_split_regex(text, '\s+')) AS token
+                      FROM documents),
+         v AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
+         t AS (SELECT cast(sum(cnt) AS bigint) AS total FROM v),
+         r AS (SELECT token, cnt,
+                 row_number() OVER (ORDER BY cnt DESC, token) AS rn,
+                 cast(sum(cnt) OVER (ORDER BY cnt DESC, token
+                   ROWS UNBOUNDED PRECEDING) AS bigint) AS cum
+               FROM v)
+         SELECT rn, token, cnt, round(cast(cum AS double) / total, 6) AS coverage
+         FROM r, t WHERE rn <= 20 ORDER BY rn"""),
+    // L1 — per-document token entropy (Shannon, nats): low entropy flags
+    // repetitive/templated docs, a standard curation quality signal.
+    // entropy = ln(n) - sum(c·ln c)/n over in-doc token counts; each
+    // c·ln(c) term is cast to a fixed-scale decimal BEFORE the sum, so the
+    // aggregate adds exactly (order-independent under shuffle) and both
+    // engines hash-match — a raw double sum would vary run to run.
+    QueryDef("q_doc_entropy", (s, dir) => {
+      val tf = t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("c"))
+      tf.groupBy("doc_id").agg(
+          sum(col("c")).as("n_tokens"),
+          sum((col("c").cast("double") * log(col("c").cast("double")))
+            .cast("decimal(28,10)")).as("sclc"))
+        .select(col("doc_id"), col("n_tokens"),
+          round(log(col("n_tokens").cast("double")) -
+            col("sclc").cast("double") / col("n_tokens"), 6).as("entropy"))
+        .orderBy("doc_id")
+    },
+      """WITH tf AS (
+           SELECT doc_id, token, count(*) AS c
+           FROM (SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS token
+                 FROM documents)
+           GROUP BY doc_id, token)
+         SELECT doc_id, n_tokens,
+           round(ln(cast(n_tokens AS double)) - cast(sclc AS double) / n_tokens, 6)
+             AS entropy
+         FROM (SELECT doc_id, cast(sum(c) AS bigint) AS n_tokens,
+                 sum(cast(c * ln(cast(c AS double)) AS decimal(28,10))) AS sclc
+               FROM tf GROUP BY doc_id)
+         ORDER BY doc_id"""),
+    // Scale — temperature-balanced language mix (α = 0.5): per-language
+    // keep rate sqrt(n_min / n_lang) — the XLM-R/mT5-style rebalance that
+    // downsamples high-resource languages toward the rare ones. α = 0.5
+    // keeps the rate bit-portable: n_min/n_lang is an exact bigint ratio
+    // and IEEE sqrt/mul are correctly rounded, so floor(rate·65536) is
+    // identical in any engine — no epsilon between Spark and the oracle.
+    // Curation — token-BUDGET mixing: per language, admit documents in
+    // quality order (rule-based score, doc_id tiebreak) until the
+    // language's token budget is spent. The pretraining-recipe primitive:
+    // a data mix is specified in tokens, not document ratios — this is
+    // the operator that turns "N tokens of lang X" into a concrete keep
+    // set. One scan → per-language running-total window → filter; the
+    // window rides one hash-partitioned exchange on lang.
+    QueryDef("q_token_budget", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val scored = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        TA.tokenCountWs(col("text")).as("n_tokens"),
+        TA.qualityScore(col("text")).as("quality"))
+      val w = Window.partitionBy("lang")
+        .orderBy(col("quality").desc, col("doc_id"))
+      scored.withColumn("cum_tokens", sum(col("n_tokens")).over(w))
+        .filter(col("cum_tokens") <= 1500)
+        .select("doc_id", "lang", "n_tokens", "quality", "cum_tokens")
+        .orderBy("lang", "doc_id")
+    },
+      """WITH s AS (
+           SELECT doc_id, lang,
+             cast(len(string_split_regex(text, '\s+')) AS bigint) AS n_tokens,
+             (CASE WHEN len(string_split_regex(text, '\s+'))
+                 BETWEEN 20 AND 10000 THEN 0.5 ELSE 0.0 END +
+              CASE WHEN cast(length(regexp_replace(text, '\s+', '', 'g'))
+                  AS double) / len(string_split_regex(text, '\s+'))
+                 BETWEEN 3.0 AND 8.0 THEN 0.5 ELSE 0.0 END) AS quality
+           FROM documents),
+         c AS (
+           SELECT doc_id, lang, n_tokens, quality,
+             cast(sum(n_tokens) OVER (PARTITION BY lang
+               ORDER BY quality DESC, doc_id) AS bigint) AS cum_tokens
            FROM s)
-         SELECT n_ranks, round(slope, 6) AS slope,
-           round((sy::DOUBLE - slope * sx::DOUBLE) / n_ranks::DOUBLE
-             / 1000000.0, 6) AS intercept
-         FROM f""",
-    "q_readability" ->
-      """WITH c AS (
-           SELECT doc_id,
-             cast(len(list_filter(string_split_regex(text, '\s+'),
-               w -> length(w) > 0)) AS BIGINT) AS n_words,
-             cast(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-               AS BIGINT) AS n_sents,
-             cast(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-               AS BIGINT) AS n_syll
-           FROM documents WHERE text IS NOT NULL)
-         SELECT doc_id, n_words, n_sents, n_syll,
-           CASE WHEN n_words = 0 THEN NULL
-                ELSE round(206.835
-                  - 1.015 * (n_words::DOUBLE / n_sents::DOUBLE)
-                  - 84.6 * (n_syll::DOUBLE / n_words::DOUBLE), 6)
-           END AS flesch
-         FROM c ORDER BY doc_id""",
-    "q_fair_gate" ->
-      """WITH c AS (
-           SELECT source, doc_id,
-             CASE WHEN len(list_filter(string_split_regex(text, '\s+'),
-                    w -> length(w) > 0)) = 0 THEN NULL
-                  ELSE round(206.835
-                    - 1.015 * (len(list_filter(string_split_regex(text, '\s+'),
-                        w -> length(w) > 0))::DOUBLE
-                      / greatest(len(regexp_extract_all(text, '[.!?]+')), 1)::DOUBLE)
-                    - 84.6 * (len(regexp_extract_all(lower(text), '[aeiouy]+'))::DOUBLE
-                      / len(list_filter(string_split_regex(text, '\s+'),
-                          w -> length(w) > 0))::DOUBLE), 6)
-             END AS flesch
-           FROM documents WHERE text IS NOT NULL),
-         r AS (
-           SELECT source, doc_id, flesch,
-             percent_rank() OVER (PARTITION BY source
-               ORDER BY flesch DESC NULLS LAST, doc_id) AS pr
-           FROM c)
-         SELECT source, doc_id, flesch, round(pr, 6) AS pr
-         FROM r WHERE pr <= 0.5 ORDER BY source, doc_id""",
-    // Same edge + component CTEs as q_split_leakfree; singleton docs form
-    // size-1 clusters via the coalesce.
-    "q_cluster_hist" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst),
-         labels AS (
-           SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-           GROUP BY src),
-         sizes AS (
-           SELECT coalesce(l.comp, d.doc_id) AS cluster,
-             count(*)::bigint AS sz
-           FROM documents d LEFT JOIN labels l ON d.doc_id = l.id
-           GROUP BY 1)
-         SELECT sz, count(*)::bigint AS n_clusters,
-           (count(*) * sz)::bigint AS n_docs
-         FROM sizes GROUP BY sz ORDER BY sz""",
-    // Same edge + component CTEs as q_split_leakfree, then both gates
-    // side by side and the per-method leaky-val-doc census.
-    "q_split_audit" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst),
-         labels AS (
-           SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-           GROUP BY src),
-         assigned AS (
-           SELECT d.doc_id,
-             CASE WHEN substring(md5(concat('lfs1', '|',
-                    cast(d.doc_id AS VARCHAR))), 1, 4) < '2000'
-                  THEN 'val' ELSE 'train' END AS naive,
-             CASE WHEN substring(md5(concat('lfs1', '|',
-                    cast(coalesce(l.comp, d.doc_id) AS VARCHAR))), 1, 4)
-                  < '2000'
-                  THEN 'val' ELSE 'train' END AS leakfree
-           FROM documents d LEFT JOIN labels l ON d.doc_id = l.id),
-         lng AS (
-           SELECT doc_id, 'naive' AS method, naive AS split FROM assigned
-           UNION ALL
-           SELECT doc_id, 'leakfree', leakfree FROM assigned),
-         valc AS (
-           SELECT method, count(*)::bigint AS n_val FROM lng
-           WHERE split = 'val' GROUP BY method),
-         leaky AS (
-           SELECT lx.method, count(DISTINCT sym.src)::bigint AS n_leaky
-           FROM sym
-           JOIN lng lx ON lx.doc_id = sym.src
-           JOIN lng ly ON ly.doc_id = sym.dst AND ly.method = lx.method
-           WHERE lx.split = 'val' AND ly.split = 'train'
-           GROUP BY lx.method)
-         SELECT v.method, v.n_val,
-           coalesce(kk.n_leaky, 0)::bigint AS n_leaky
-         FROM valc v LEFT JOIN leaky kk USING (method)
-         ORDER BY method""",
-    // Same component CTE as q_dedup_cluster, then one survivor per
-    // component (max n_chars, min doc_id tiebreak); singletons survive.
-    "q_dedup_survivor" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst),
-         labels AS (
-           SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-           GROUP BY src)
-         SELECT grp, doc_id, n_chars FROM (
-           SELECT coalesce(l.comp, d.doc_id) AS grp, d.doc_id, d.n_chars,
-             row_number() OVER (PARTITION BY coalesce(l.comp, d.doc_id)
-               ORDER BY d.n_chars DESC, d.doc_id) AS rn
-           FROM documents d LEFT JOIN labels l ON d.doc_id = l.id)
-         WHERE rn = 1 ORDER BY grp""",
-    // Same cluster CTEs; the merge aggregates instead of the argmax pick.
-    "q_golden_record" ->
-      """WITH RECURSIVE s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-               i -> array_to_string(w[i:i+2], ' '))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-         k0 AS (SELECT doc_id, sh, list_aggregate(sh, 'min') AS blk FROM s),
-         k AS (SELECT * FROM k0
-               QUALIFY count(*) OVER (PARTITION BY blk) <= 4096),
-         e AS (
-           SELECT x.doc_id AS a, y.doc_id AS b
-           FROM k x JOIN k y ON x.blk = y.blk AND x.doc_id < y.doc_id
-           WHERE cast(len(list_intersect(x.sh, y.sh)) AS double) /
-                 (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))
-                 >= 0.5),
-         sym AS (SELECT a AS src, b AS dst FROM e
-                 UNION SELECT b, a FROM e),
-         reach(src, dst) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT r.src, s2.dst FROM reach r
-           JOIN sym s2 ON r.dst = s2.src AND r.src <> s2.dst),
-         labels AS (
-           SELECT src AS id, least(src, min(dst)) AS comp FROM reach
-           GROUP BY src)
-         SELECT coalesce(l.comp, d.doc_id) AS grp,
-           cast(min(d.doc_id) AS BIGINT) AS canonical_id,
-           cast(count(*) AS BIGINT) AS n_members,
-           cast(max(d.n_chars) AS BIGINT) AS best_n_chars,
-           cast(count(DISTINCT d.lang) AS BIGINT) AS n_langs,
-           cast(count(DISTINCT d.source) AS BIGINT) AS n_sources
-         FROM documents d LEFT JOIN labels l ON d.doc_id = l.id
-         GROUP BY 1 ORDER BY grp""",
-    "q_explode" ->
+         SELECT doc_id, lang, n_tokens, quality, cum_tokens FROM c
+         WHERE cum_tokens <= 1500 ORDER BY lang, doc_id"""),
+    // L5 — mixture PLANNING table: given a 26k-token budget and α=0.5
+    // temperature weighting, the per-language sampling rates a mixing run
+    // would execute — the knob-setting artifact reviewed before the
+    // pipeline spends anything (dominant 'en' is down-rated below 1 while
+    // small languages clip at 1.0, so both branches of the cap are
+    // oracle-exercised). Portability trick: each weight quantizes to an
+    // integer FIRST (floor(sqrt·1000)), so the cross-language total is an
+    // exact long sum and every share/rate is a fixed tree of IEEE-exact
+    // operations on deterministic operands — no float ever sums across
+    // rows. One aggregate + a one-row broadcast total.
+    QueryDef("q_mix_plan", (s, dir) => {
+      val per = t(s, dir, "documents")
+        .select(col("lang"), TA.tokenCountWs(col("text")).as("__tok"))
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"), sum(col("__tok")).as("n_tokens"))
+        .withColumn("wq",
+          floor(sqrt(col("n_tokens").cast("double")) * 1000).cast("long"))
+      val tot = per.agg(sum(col("wq")).as("wsum"))
+      per.crossJoin(broadcast(tot))
+        .withColumn("share", round(col("wq").cast("double") / col("wsum"), 6))
+        .withColumn("target_tokens",
+          floor(lit(26000.0) * col("wq").cast("double") / col("wsum"))
+            .cast("long"))
+        .withColumn("rate", round(least(lit(1.0),
+          lit(26000.0) * col("wq").cast("double") / col("wsum")
+            / col("n_tokens")), 6))
+        .select("lang", "n_docs", "n_tokens", "share", "target_tokens",
+          "rate")
+        .orderBy("lang")
+    },
+    // Integer-quantized weights (floor(sqrt·1000)) sum exactly; every
+    // share/rate is the same fixed IEEE expression tree as the engine's.
+      """WITH per AS (
+           SELECT lang, count(*)::bigint AS n_docs,
+             sum(len(string_split_regex(text, '\s+')))::bigint AS n_tokens
+           FROM documents GROUP BY lang),
+         w AS (SELECT per.*,
+             floor(sqrt(n_tokens::double) * 1000)::bigint AS wq FROM per),
+         tot AS (SELECT sum(wq)::bigint AS wsum FROM w)
+         SELECT lang, n_docs, n_tokens,
+           round(wq::double / wsum, 6) AS share,
+           floor(26000.0 * wq::double / wsum)::bigint AS target_tokens,
+           round(least(1.0, 26000.0 * wq::double / wsum / n_tokens), 6)
+             AS rate
+         FROM w CROSS JOIN tot ORDER BY lang"""),
+    QueryDef("q_temperature_mix", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
+      val nmin = counts.agg(min(col("n_docs")).as("n_min"))
+      val rates = counts.crossJoin(broadcast(nmin))
+        .withColumn("w",
+          floor(sqrt(col("n_min").cast("double") / col("n_docs")) * 65536))
+      docs.join(broadcast(rates), Seq("lang"))
+        .filter(Sampling.keepWeighted(col("doc_id"), "tmix", col("w")))
+        .groupBy("lang")
+        .agg(max(col("n_docs")).as("n_docs"), count(lit(1)).as("n_kept"))
+        .orderBy("lang")
+    },
+      """WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
+         m AS (SELECT min(n_docs) AS n_min FROM c),
+         r AS (SELECT lang, n_docs,
+                 cast(floor(sqrt(cast(n_min AS double) / n_docs) * 65536)
+                   AS bigint) AS w
+               FROM c, m)
+         SELECT lang, max(n_docs) AS n_docs, count(*) AS n_kept
+         FROM documents d JOIN r USING (lang)
+         WHERE substring(md5(concat('tmix', '|', cast(doc_id AS VARCHAR))), 1, 4)
+               < lpad(lower(to_hex(least(greatest(w, 0), 65535))), 4, '0')
+         GROUP BY lang ORDER BY lang"""),
+    // Scale — mergeable HLL distinct sketches: per-(lang, source) token
+    // sketches union down to per-lang estimates without re-reading data —
+    // the incremental-maintenance shape for distinct counts. The estimate
+    // is engine-specific, so the ORACLE-checked columns are the exact
+    // distinct count and a within-tolerance boolean (deterministic: the
+    // sketch binary is seed-fixed, lgK=12 error ~1.6% « the 5% gate).
+    QueryDef("q_distinct_sketch", (s, dir) => {
+      val toks = t(s, dir, "documents")
+        .select(col("lang"), col("source"),
+          explode(split(col("text"), "\\s+")).as("token"))
+      val merged = Scale.mergeDistinct(
+        Scale.sketchDistinct(toks, Seq("lang", "source"), "token"),
+        Seq("lang"))
+      toks.groupBy("lang").agg(countDistinct(col("token")).as("n_exact"))
+        .join(merged, Seq("lang"))
+        .select(col("lang"), col("n_exact"),
+          (abs(col("approx_distinct") - col("n_exact")) <
+            col("n_exact").cast("double") * 0.05).as("within_5pct"))
+        .orderBy("lang")
+    },
+    // Only the exact count and the tolerance verdict are asserted — the
+    // HLL binary itself is engine-specific (declared in SURVEY §2.9).
+      """WITH tok AS (
+           SELECT lang, unnest(string_split_regex(text, '\s+')) AS token
+           FROM documents)
+         SELECT lang, count(DISTINCT token) AS n_exact, true AS within_5pct
+         FROM tok GROUP BY lang ORDER BY lang"""),
+    // Scale — Count-Min frequency sketch, fully oracle-checked: the 4×256
+    // cell grid uses the portable md5 bucket family, so cells, estimates,
+    // AND the per-key overestimate are bit-identical in any engine (unlike
+    // HLL, whose binary is engine-specific). est ≥ exact by construction;
+    // the build collapses to ≤1024 cells map-side, the estimate join
+    // broadcasts the cell table — the corpus is scanned once per side.
+    QueryDef("q_cms_freq", (s, dir) => {
+      val li = t(s, dir, "lineitem")
+      val cells = CountMin.sketch(li, col("l_suppkey"))
+      val cand = t(s, dir, "supplier").filter(col("s_suppkey") <= 10)
+        .select(col("s_suppkey").as("suppkey"))
+      val exact = li.filter(col("l_suppkey") <= 10)
+        .select(col("l_suppkey").as("suppkey"))
+        .groupBy("suppkey").agg(count(lit(1)).as("exact_n"))
+      CountMin.estimate(cells, cand, "suppkey")
+        .join(exact, "suppkey")
+        .select(col("suppkey"), col("cms_est"), col("exact_n"),
+          (col("cms_est") - col("exact_n")).as("overest"))
+        .orderBy("suppkey")
+    },
+      """WITH cells AS (
+           SELECT row, bucket, count(*) AS n FROM (
+             SELECT unnest([0, 1, 2, 3]) AS row,
+               unnest([substring(md5(concat('cms0', '|', cast(l_suppkey AS VARCHAR))), 1, 2),
+                       substring(md5(concat('cms1', '|', cast(l_suppkey AS VARCHAR))), 1, 2),
+                       substring(md5(concat('cms2', '|', cast(l_suppkey AS VARCHAR))), 1, 2),
+                       substring(md5(concat('cms3', '|', cast(l_suppkey AS VARCHAR))), 1, 2)]) AS bucket
+             FROM lineitem)
+           GROUP BY row, bucket),
+         cand AS (
+           SELECT s_suppkey AS suppkey,
+             unnest([0, 1, 2, 3]) AS row,
+             unnest([substring(md5(concat('cms0', '|', cast(s_suppkey AS VARCHAR))), 1, 2),
+                     substring(md5(concat('cms1', '|', cast(s_suppkey AS VARCHAR))), 1, 2),
+                     substring(md5(concat('cms2', '|', cast(s_suppkey AS VARCHAR))), 1, 2),
+                     substring(md5(concat('cms3', '|', cast(s_suppkey AS VARCHAR))), 1, 2)]) AS bucket
+           FROM supplier WHERE s_suppkey <= 10),
+         est AS (
+           SELECT suppkey, min(coalesce(n, 0)) AS cms_est
+           FROM cand LEFT JOIN cells USING (row, bucket) GROUP BY suppkey),
+         exact AS (
+           SELECT l_suppkey AS suppkey, count(*) AS exact_n
+           FROM lineitem WHERE l_suppkey <= 10 GROUP BY 1)
+         SELECT e.suppkey, cms_est, exact_n, cms_est - exact_n AS overest
+         FROM est e JOIN exact USING (suppkey) ORDER BY suppkey"""),
+    // Curation — bigram-LM quality score (the CCNet-style perplexity
+    // filter): the corpus is the LM; each doc scores the add-one-smoothed
+    // avg log-prob of its own bigrams. ln of integers only, decimal-summed
+    // → bit-reproducible across engines.
+    QueryDef("q_lm_score", (s, dir) => {
+      Curation.bigramLmScore(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id")
+    },
+      s"""WITH $LmScoreCte
+         SELECT doc_id, n_bigrams, avg_logp FROM lm ORDER BY doc_id"""),
+    // Curation — interpolated Kneser-Ney bigram score (d=0.75): the
+    // stronger perplexity-filter signal (continuation counts, not raw
+    // frequency, drive the backoff — "san francisco" vs "the francisco").
+    // The ×4 integerization keeps every ln over an integer, so the whole
+    // smoothed model oracle-checks like q_lm_score does.
+    QueryDef("q_lm_kn", (s, dir) => {
+      Curation.knBigramScore(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id")
+    },
+      s"""WITH w AS (
+           SELECT doc_id, $WsSplitSql AS w FROM documents),
+         occ AS (
+           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2
+           FROM (SELECT doc_id, w,
+                   unnest(generate_series(1, len(w) - 1)) AS i FROM w)),
+         big AS (SELECT w1, w2, count(*) AS cb FROM occ GROUP BY w1, w2),
+         ctx AS (SELECT w1, count(*) AS cc FROM occ GROUP BY w1),
+         np AS (SELECT w1, count(*) AS n1p FROM big GROUP BY w1),
+         nm AS (SELECT w2, count(*) AS n1m FROM big GROUP BY w2),
+         nt AS (SELECT count(*)::HUGEINT AS nt FROM big),
+         t AS (SELECT o.doc_id,
+                 cast(ln(greatest(b.cb * 4 - 3, 0)::HUGEINT * nt.nt
+                   + p.n1p::HUGEINT * m.n1m * 3) AS decimal(28,10))
+                 - cast(ln(c.cc::HUGEINT * 4 * nt.nt) AS decimal(28,10))
+                   AS term
+               FROM occ o JOIN big b USING (w1, w2) JOIN ctx c USING (w1)
+                 JOIN np p USING (w1) JOIN nm m USING (w2), nt),
+         lm AS (
+           SELECT doc_id, count(*) AS n_bigrams,
+             round(cast(sum(term) AS double) / count(*), 6) AS avg_logp
+           FROM t GROUP BY doc_id)
+         SELECT doc_id, n_bigrams, avg_logp FROM lm ORDER BY doc_id"""),
+    // Curation — DSIR importance-weighted data selection (hashed unigram
+    // + bigram features, Laplace-smoothed target-vs-raw bucket models,
+    // target = the English subcorpus): the top-50 docs by log importance
+    // weight. Exact decimal ln arithmetic over the portable bucket hash →
+    // the whole selection oracle-checks; TakeOrderedAndProject, never a
+    // global sort.
+    QueryDef("q_dsir", (s, dir) => {
+      Curation.dsirWeights(t(s, dir, "documents"), "doc_id", "text",
+        col("lang") === lit("en"), nBuckets = 1024)
+        .orderBy(col("log_w").desc, col("doc_id")).limit(50)
+    },
+    // Exact decimal end to end (see DsirCte), so the rounded scores and
+    // the top-50 cut match bit-for-bit.
+      s"""WITH $DsirCte
+         SELECT doc_id, n_feats, log_w
+         FROM weights ORDER BY log_w DESC, doc_id LIMIT 50"""),
+    // Curation — the DSIR RESAMPLER (Sampling.gumbelTopK over the same
+    // weights): Gumbel-top-k = a without-replacement draw with
+    // p ∝ exp(log_w), seeded so the training subset re-derives forever.
+    QueryDef("q_dsir_resample", (s, dir) => {
+      Sampling.gumbelTopK(
+        Curation.dsirWeights(t(s, dir, "documents"), "doc_id", "text",
+          col("lang") === lit("en"), nBuckets = 1024),
+        "doc_id", col("log_w"), salt = "dsir-draw", k = 50)
+        .select("doc_id", "n_feats", "log_w", "gumbel_key")
+        .orderBy(col("gumbel_key").desc, col("doc_id"))
+    },
+    // The same weights perturbed by the seeded Gumbel (one dyadic
+    // uniform, two decimal(17,10)-rounded lns in the engine's exact
+    // nesting) — the Gumbel-top-k draw IS sampling without replacement
+    // with p ∝ exp(log_w).
+      s"""WITH $DsirCte,
+         g AS (
+           SELECT doc_id, n_feats, log_w,
+             round(log_w + (-(cast(cast(ln(
+               -(cast(cast(ln(
+                 ((('0x' || substr(md5('dsir-draw' || '|' || doc_id),
+                    1, 15))::BIGINT % 1048576)::DOUBLE + 0.5) / 1048576.0
+               ) AS decimal(17,10)) AS DOUBLE))
+             ) AS decimal(17,10)) AS DOUBLE))), 6) AS gumbel_key
+           FROM weights)
+         SELECT doc_id, n_feats, log_w, gumbel_key FROM g
+         ORDER BY gumbel_key DESC, doc_id LIMIT 50"""),
+    // Curation — CCNet-style perplexity bucketing: per language, rank docs
+    // by LM score and split into head/middle/tail tertiles (ntile), then
+    // report each bucket's population and exact score mass. The bucket
+    // label is what a curation policy samples against (keep head, drop
+    // tail). Score sums run in decimal(18,6) so the per-bucket totals are
+    // shuffle-order independent; min/max are order-free by construction.
+    QueryDef("q_ppl_bucket", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents")
+      val lm = Curation.bigramLmScore(docs, "doc_id", "text")
+      val w = Window.partitionBy("lang")
+        .orderBy(col("avg_logp").desc, col("doc_id"))
+      lm.join(docs.select("doc_id", "lang"), "doc_id")
+        .withColumn("bucket", ntile(3).over(w).cast("long"))
+        .groupBy("lang", "bucket")
+        .agg(count(lit(1)).as("n_docs"),
+          (sum(col("avg_logp").cast("decimal(18,6)")).cast("double"))
+            .as("sum_logp"),
+          min(col("avg_logp")).as("min_logp"),
+          max(col("avg_logp")).as("max_logp"))
+        .orderBy("lang", "bucket")
+    },
+      s"""WITH $LmScoreCte,
+         lb AS (
+           SELECT lm.doc_id, avg_logp, d.lang,
+             cast(ntile(3) OVER (PARTITION BY d.lang
+               ORDER BY avg_logp DESC, lm.doc_id) AS bigint) AS bucket
+           FROM lm JOIN documents d ON lm.doc_id = d.doc_id)
+         SELECT lang, bucket, count(*) AS n_docs,
+           cast(sum(cast(avg_logp AS decimal(18,6))) AS double) AS sum_logp,
+           min(avg_logp) AS min_logp, max(avg_logp) AS max_logp
+         FROM lb GROUP BY lang, bucket ORDER BY lang, bucket"""),
+    // L1 — token frequency via explode (the Generate operator): top-20
+    // corpus-wide tokens with deterministic tiebreak.
+    QueryDef("q_explode", (s, dir) => {
+      t(s, dir, "documents")
+        .select(explode(split(col("text"), " ")).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("token"))
+        .limit(20)
+    },
       """SELECT token, count(*) AS n FROM (
            SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-         GROUP BY token ORDER BY n DESC, token LIMIT 20""",
-    "q_sql_join" ->
+         GROUP BY token ORDER BY n DESC, token LIMIT 20"""),
+    // SQL surface: the same engine through spark.sql over temp views —
+    // revenue of the top shipping-priority orders (TPC-H Q3 shape).
+    QueryDef("q_sql_join", (s, dir) => {
+      t(s, dir, "customer").createOrReplaceTempView("v_customer")
+      t(s, dir, "orders").createOrReplaceTempView("v_orders")
+      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
+      s.sql("""
+        SELECT o_orderkey,
+          cast(sum(cast(l_extendedprice AS decimal(18,2))
+            * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
+          count(*) AS n_items
+        FROM v_customer
+        JOIN v_orders ON c_custkey = o_custkey
+        JOIN v_lineitem ON l_orderkey = o_orderkey
+        WHERE c_mktsegment = 'BUILDING'
+        GROUP BY o_orderkey
+        ORDER BY revenue DESC, o_orderkey
+        LIMIT 10""")
+    },
       """SELECT o_orderkey,
          cast(sum(cast(l_extendedprice AS decimal(18,2))
            * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
@@ -7613,63 +6166,170 @@ object Pipeline {
          WHERE c_mktsegment = 'BUILDING'
          GROUP BY o_orderkey
          ORDER BY revenue DESC, o_orderkey
-         LIMIT 10""",
-    "q_dedup_embed" ->
+         LIMIT 10"""),
+    // SQL surface: TPC-H Q5 shape — six-table star join with region filter
+    // and date-range pruning, revenue per nation. Exercises the SQL entry
+    // path over dimension broadcasts + a fact-fact join; all money math in
+    // exact decimals so the shuffle-order sum matches the oracle.
+    QueryDef("q_sql_revenue", (s, dir) => {
+      t(s, dir, "customer").createOrReplaceTempView("v_customer")
+      t(s, dir, "orders").createOrReplaceTempView("v_orders")
+      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
+      t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
+      t(s, dir, "nation").createOrReplaceTempView("v_nation")
+      t(s, dir, "region").createOrReplaceTempView("v_region")
+      s.sql("""
+        SELECT n_name,
+          cast(sum(cast(l_extendedprice AS decimal(18,2))
+            * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
+          count(*) AS n_items
+        FROM v_customer
+        JOIN v_orders ON c_custkey = o_custkey
+        JOIN v_lineitem ON l_orderkey = o_orderkey
+        JOIN v_supplier ON l_suppkey = s_suppkey
+          AND s_nationkey = c_nationkey
+        JOIN v_nation ON c_nationkey = n_nationkey
+        JOIN v_region ON n_regionkey = r_regionkey
+        WHERE r_name = 'ASIA'
+          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        GROUP BY n_name
+        ORDER BY revenue DESC, n_name""")
+    },
+      """SELECT n_name,
+         cast(sum(cast(l_extendedprice AS decimal(18,2))
+           * (1 - cast(l_discount AS decimal(18,2)))) AS double) AS revenue,
+         count(*) AS n_items
+         FROM customer
+         JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON l_orderkey = o_orderkey
+         JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
+         JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         WHERE r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+         GROUP BY n_name
+         ORDER BY revenue DESC, n_name"""),
+    // SQL surface for the curation kit: the graft_* functions registered
+    // through SparkSessionExtensions compose into a pure-SQL gate →
+    // fingerprint-dedup → per-language rollup — the identical Catalyst
+    // trees the Column API builds (zero UDFs), so the whole statement
+    // oracle-checks. A SQL-only user gets the curation pipeline without
+    // touching the Scala API.
+    QueryDef("q_sql_curate", (s, dir) => {
+      t(s, dir, "documents").createOrReplaceTempView("v_documents")
+      s.sql("""
+        WITH scored AS (
+          SELECT doc_id, lang, graft_quality(text) AS q,
+                 graft_fingerprint(text) AS fp, graft_clean_text(text) AS clean
+          FROM v_documents WHERE text IS NOT NULL),
+        deduped AS (
+          SELECT * FROM (
+            SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+            FROM scored WHERE q >= 1.0)
+          WHERE rn = 1)
+        SELECT lang, count(*) AS n_docs,
+               cast(sum(length(clean)) AS bigint) AS sum_clean_chars
+        FROM deduped GROUP BY lang ORDER BY lang""")
+    },
+      """WITH scored AS (
+           SELECT doc_id, lang,
+             (CASE WHEN len(string_split_regex(text, '\s+'))
+                 BETWEEN 20 AND 10000 THEN 0.5 ELSE 0.0 END +
+              CASE WHEN cast(length(regexp_replace(text, '\s+', '', 'g'))
+                  AS double) / len(string_split_regex(text, '\s+'))
+                 BETWEEN 3.0 AND 8.0 THEN 0.5 ELSE 0.0 END) AS q,
+             md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
+             trim(regexp_replace(regexp_replace(lower(text),
+               '[^a-z0-9 ]', ' ', 'g'), '\s+', ' ', 'g')) AS clean
+           FROM documents WHERE text IS NOT NULL),
+         deduped AS (
+           SELECT * FROM (
+             SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+             FROM scored WHERE q >= 1.0)
+           WHERE rn = 1)
+         SELECT lang, count(*) AS n_docs,
+           cast(sum(length(clean)) AS bigint) AS sum_clean_chars
+         FROM deduped GROUP BY lang ORDER BY lang"""),
+    // L1 — text normalization (the cleaning stage ahead of dedup/dedup
+    // fingerprints): lowercase, strip non-alphanumerics, collapse runs of
+    // whitespace, trim. Scan-local codegen'd projection, zero shuffles.
+    QueryDef("q_clean_text", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          TA.cleanText(col("text")).as("clean"))
+        .select(col("doc_id"), col("clean"),
+          length(col("clean")).cast("long").as("n_clean_chars"))
+        .orderBy("doc_id")
+    },
+      """SELECT doc_id,
+         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
+           '\s+', ' ', 'g')) AS clean,
+         length(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
+           '\s+', ' ', 'g'))) AS n_clean_chars
+         FROM documents ORDER BY doc_id"""),
+    // A7 — embedding-cosine near-dup, exact pair scan (oracle-checked; the
+    // LSH-bucketed scale path is Dedup.embeddingNearDupsLsh, test-asserted).
+    QueryDef("q_dedup_embed", (s, dir) => {
+      val emb = embFrame(s, dir)
+      Dedup.embeddingNearDupsExact(emb, "vec_id", "emb", 0.4)
+        .select(col("a"), col("b"), round(col("cos"), 6).as("cosine"))
+        .orderBy("a", "b")
+    },
       """SELECT a, b, round(cos, 6) AS cosine FROM (
            SELECT ea.vec_id AS a, eb.vec_id AS b,
              list_dot_product(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) /
                (sqrt(list_dot_product(ea.embedding::DOUBLE[], ea.embedding::DOUBLE[]))
                 * sqrt(list_dot_product(eb.embedding::DOUBLE[], eb.embedding::DOUBLE[]))) AS cos
            FROM embeddings ea JOIN embeddings eb ON ea.vec_id < eb.vec_id)
-         WHERE cos >= 0.4 ORDER BY a, b""",
+         WHERE cos >= 0.4 ORDER BY a, b"""),
+    // A7/L2 — SemDeDup: semantic near-dup REMOVAL with candidates bounded
+    // by IVF cells (never corpus×corpus) — the embedding twin of banded
+    // MinHash, and the modern curation shape for web-scale corpora. The
+    // fixed first-16 coarse quantizer keeps assignment, cosine, and the
+    // keep-lowest-id survivor rule bit-portable, exactly like
+    // q_sim_ivf_fixed; cells surface in the output so the oracle checks
+    // the assignment too (vec_ids are 0-based, so centroid index == the
+    // seed's vec_id). maxCell=24 is deliberately BELOW the fixture's
+    // ~31-row cells so the hot-cell subsplit guard (portable-hash mod
+    // ceil-div, Dedup.semanticCells) is itself oracle-exercised, not just
+    // spec-asserted; the trained-quantizer variant at realistic k is
+    // q_semdedup_trained.
+    QueryDef("q_semdedup", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val centroids = ivfSeeds(emb)
+      Dedup.semanticDedup(emb, "vec_id", "emb", centroids, 0.4, maxCell = 24)
+        .select(col("vec_id"), col("cell").cast("long").as("cell"))
+        .orderBy("vec_id")
+    },
     // Same fixed-quantizer assignment CTE as q_sim_ivf_fixed (cell = seed
     // vec_id = centroid index, -2·dot+|c|² key with cid tiebreak), then
     // the hot-cell subsplit (ns = ceil(|cell|/24), subcell = portable
     // 60-bit id hash mod ns — Dedup.semanticCells verbatim), within-
     // SUBCELL cosine pairs and the keep-lowest-id survivor rule.
-    "q_semdedup" ->
-      """WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
-         e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-               AS nrm
-           FROM embeddings),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         census AS (
-           SELECT cell, (count(*) + 23) // 24 AS ns
-           FROM assign GROUP BY cell),
-         sub AS (
-           SELECT a.vec_id, a.cell,
-             cast(a.cell AS VARCHAR) || '#' || cast(
-               ('0x' || substr(md5(cast(a.vec_id AS VARCHAR)), 1, 15))::BIGINT
-                 % s.ns AS VARCHAR) AS subcell
-           FROM assign a JOIN census s USING (cell)),
-         dropped AS (
-           SELECT DISTINCT y.vec_id FROM sub x
-           JOIN sub y ON x.subcell = y.subcell AND x.vec_id < y.vec_id
-           JOIN e ex ON ex.vec_id = x.vec_id
-           JOIN e ey ON ey.vec_id = y.vec_id
-           WHERE list_dot_product(ex.v, ey.v) / (ex.nrm * ey.nrm) >= 0.4)
+      s"""WITH $IvfSeedCte,
+         $SemDedupECte,
+         ${ivfAssignCte("e")},
+         ${semDedupDroppedCtes("dropped")}
          SELECT a.vec_id, a.cell FROM assign a
          LEFT JOIN dropped d ON d.vec_id = a.vec_id
-         WHERE d.vec_id IS NULL ORDER BY a.vec_id""",
+         WHERE d.vec_id IS NULL ORDER BY a.vec_id"""),
+    // L2 — SSL-prototype pruning (Ivf.prototypePrune): per cell, keep the
+    // hardest half by exact micro-unit centroid distance. Fixed
+    // quantizer → assignment, distance, rank, and quota all
+    // oracle-check; the margin row (kept flag, not a filtered set) makes
+    // the cut itself verifiable.
+    QueryDef("q_prototype_prune", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val centroids = ivfSeeds(emb)
+      graft.operators.Ivf.prototypePrune(emb, "vec_id", "emb", centroids,
+        keepFrac = 0.5).orderBy("vec_id")
+    },
     // Same fixed-quantizer assignment; the distance re-adds |a|² to the
     // shifted key in micro-units (the q_ivf_balance rounding), then a
     // per-cell rank against the ceil(n/2) quota.
-    "q_prototype_prune" ->
-      """WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
+      s"""WITH $IvfSeedCte,
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          sc AS (
            SELECT vec_id, cell, round((vv + d) * 1e6)::BIGINT AS dist_e6
@@ -7681,27 +6341,26 @@ object Pipeline {
                  ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
                  AS rn
              FROM e CROSS JOIN c) WHERE rn = 1),
-         r AS (
-           SELECT vec_id, cell AS ivf_cell, dist_e6,
-             row_number() OVER (PARTITION BY cell
-               ORDER BY dist_e6 DESC, vec_id) AS rn,
-             count(*) OVER (PARTITION BY cell) AS n
-           FROM sc)
-         SELECT vec_id, ivf_cell, dist_e6,
-           rn <= ceil(n * 0.5)::BIGINT AS kept
-         FROM r ORDER BY vec_id""",
+         $ProtoPruneSelect"""),
+    // L2 — the D4 pipeline (Tirumala et al. 2023: de-duplication +
+    // diversification): SemDeDup survivors re-scored by SSL-prototype
+    // pruning — the two-stage embedding-space curation a production
+    // pretraining mix runs. Same fixed quantizer for both stages; the
+    // oracle chains the q_semdedup CTEs with the q_prototype_prune rank.
+    QueryDef("q_d4", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val centroids = ivfSeeds(emb)
+      val survivors = Dedup.semanticDedup(emb, "vec_id", "emb", centroids,
+        0.4, maxCell = 24)
+      graft.operators.Ivf.prototypePrune(
+        emb.join(survivors.select("vec_id"), Seq("vec_id")),
+        "vec_id", "emb", centroids, keepFrac = 0.5)
+        .orderBy("vec_id")
+    },
     // q_semdedup's survivor CTEs feeding q_prototype_prune's rank — the
     // D4 chain end to end.
-    "q_d4" ->
-      """WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
-         e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-               AS nrm
-           FROM embeddings),
+      s"""WITH $IvfSeedCte,
+         $SemDedupECte,
          assign AS (
            SELECT vec_id, cell, vv, d FROM (
              SELECT e.vec_id, c.cid AS cell,
@@ -7711,69 +6370,42 @@ object Pipeline {
                  ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
                  AS rn
              FROM e CROSS JOIN c) WHERE rn = 1),
-         census AS (
-           SELECT cell, (count(*) + 23) // 24 AS ns
-           FROM assign GROUP BY cell),
-         sub AS (
-           SELECT a.vec_id, a.cell,
-             cast(a.cell AS VARCHAR) || '#' || cast(
-               ('0x' || substr(md5(cast(a.vec_id AS VARCHAR)), 1, 15))::BIGINT
-                 % s.ns AS VARCHAR) AS subcell
-           FROM assign a JOIN census s USING (cell)),
-         dropped AS (
-           SELECT DISTINCT y.vec_id FROM sub x
-           JOIN sub y ON x.subcell = y.subcell AND x.vec_id < y.vec_id
-           JOIN e ex ON ex.vec_id = x.vec_id
-           JOIN e ey ON ey.vec_id = y.vec_id
-           WHERE list_dot_product(ex.v, ey.v) / (ex.nrm * ey.nrm) >= 0.4),
+         ${semDedupDroppedCtes("dropped")},
          sc AS (
            SELECT a.vec_id, a.cell, round((a.vv + a.d) * 1e6)::BIGINT AS dist_e6
            FROM assign a
            LEFT JOIN dropped dr ON dr.vec_id = a.vec_id
            WHERE dr.vec_id IS NULL),
-         r AS (
-           SELECT vec_id, cell AS ivf_cell, dist_e6,
-             row_number() OVER (PARTITION BY cell
-               ORDER BY dist_e6 DESC, vec_id) AS rn,
-             count(*) OVER (PARTITION BY cell) AS n
-           FROM sc)
-         SELECT vec_id, ivf_cell, dist_e6,
-           rn <= ceil(n * 0.5)::BIGINT AS kept
-         FROM r ORDER BY vec_id""",
+         $ProtoPruneSelect"""),
+    // A7/L2 — the maxCell recall price, MEASURED (the q_minhash_recall
+    // analog for the subsplit guard): capped (maxCell=24) vs uncapped
+    // survivors per cell under the same fixed quantizer. n_missed counts
+    // survivors the cap KEEPS that the uncapped rule would drop — the
+    // (ns−1)/ns straddling-pair miss from Dedup.semanticCells' scaladoc
+    // turned into an oracle-checked number (subsplitting only ever misses
+    // drops, so capped ⊇ uncapped and the left join covers both sets).
+    QueryDef("q_semdedup_recall", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val centroids = ivfSeeds(emb)
+      val capped = Dedup.semanticDedup(emb, "vec_id", "emb", centroids,
+        0.4, maxCell = 24)
+      val uncapped = Dedup.semanticDedup(emb, "vec_id", "emb", centroids,
+        0.4) // DefaultMaxCell=4096 ≫ any fixture cell ⇒ subsplit count 1
+      capped
+        .join(uncapped.select(col("vec_id"), lit(1L).as("__u")),
+          Seq("vec_id"), "left")
+        .groupBy(col("cell").cast("long").as("cell"))
+        .agg(count(lit(1)).as("n_capped"),
+          sum(coalesce(col("__u"), lit(0L))).as("n_uncapped"),
+          sum(when(col("__u").isNull, 1L).otherwise(0L)).as("n_missed"))
+        .orderBy("cell")
+    },
     // q_semdedup's capped CTEs plus an UNCAPPED dropped set (plain
     // within-cell join); the per-cell diff counts the cap's missed drops.
-    "q_semdedup_recall" ->
-      """WITH c AS (
-           SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
-             list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS cnorm2
-           FROM embeddings WHERE vec_id < 16),
-         e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-               AS nrm
-           FROM embeddings),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         census AS (
-           SELECT cell, (count(*) + 23) // 24 AS ns
-           FROM assign GROUP BY cell),
-         sub AS (
-           SELECT a.vec_id, a.cell,
-             cast(a.cell AS VARCHAR) || '#' || cast(
-               ('0x' || substr(md5(cast(a.vec_id AS VARCHAR)), 1, 15))::BIGINT
-                 % s.ns AS VARCHAR) AS subcell
-           FROM assign a JOIN census s USING (cell)),
-         droppedc AS (
-           SELECT DISTINCT y.vec_id FROM sub x
-           JOIN sub y ON x.subcell = y.subcell AND x.vec_id < y.vec_id
-           JOIN e ex ON ex.vec_id = x.vec_id
-           JOIN e ey ON ey.vec_id = y.vec_id
-           WHERE list_dot_product(ex.v, ey.v) / (ex.nrm * ey.nrm) >= 0.4),
+      s"""WITH $IvfSeedCte,
+         $SemDedupECte,
+         ${ivfAssignCte("e")},
+         ${semDedupDroppedCtes("droppedc")},
          droppedu AS (
            SELECT DISTINCT y.vec_id FROM sub x
            JOIN sub y ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -7794,52 +6426,36 @@ object Pipeline {
            sum(CASE WHEN u.vec_id IS NULL THEN 1 ELSE 0 END)::bigint
              AS n_missed
          FROM capped LEFT JOIN uncapped u ON u.vec_id = capped.vec_id
-         GROUP BY capped.cell ORDER BY cell""",
+         GROUP BY capped.cell ORDER BY cell"""),
+    // L2b — SemDeDup with a TRAINED coarse quantizer at realistic k: the
+    // production composition (Ivf.train's exact-decimal Lloyd means → cell
+    // assignment → within-cell cosine survivor rule). k=64 on the 500-row
+    // fixture keeps cells ~8 rows — the properly-sized-k regime where the
+    // maxCell guard never fires (subsplit count 1 everywhere, so the
+    // oracle mirrors the plain within-cell join; the capped path is
+    // oracle-exercised by q_semdedup). The oracle re-runs the full
+    // 2-iteration training in SQL, the technique proven on q_sim_ivf.
+    QueryDef("q_semdedup_trained", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb",
+        k = 64, iters = 2)
+      Dedup.semanticDedup(emb, "vec_id", "emb", centroids, 0.4)
+        .select(col("vec_id"), col("cell").cast("long").as("cell"))
+        .orderBy("vec_id")
+    },
     // Trained-quantizer SemDeDup: the q_sim_ivf Lloyd-in-SQL technique
     // (seed = first 64 vectors, two exact-decimal-mean iterations) feeding
     // the plain within-cell survivor rule — at k=64 every fixture cell is
     // far below the default maxCell, so subsplit count is 1 everywhere and
     // the plain cell join IS the operator's semantics (the capped path is
     // mirrored in q_semdedup's oracle above).
-    "q_semdedup_trained" -> {
-      // one Lloyd iteration: assign against c{i-1}, then exact means → c{i}
-      // (same CTE body as q_sim_ivf's — k lives only in the c0 seed set)
-      def step(i: Int) = {
-        val prev = s"c${i - 1}"
-        s"""a$i AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv)
-                   + list_dot_product(c.cv, c.cv), c.cid) AS rn
-             FROM e, $prev c) WHERE rn = 1),
-         m$i AS (
-           SELECT cell, pos,
-             cast(sum(cast(comp AS decimal(28,10))) AS double)
-               / count(*) AS m
-           FROM (
-             SELECT a.cell, unnest(e.v) AS comp,
-               unnest(generate_series(1, len(e.v))) AS pos
-             FROM a$i a JOIN e ON e.vec_id = a.vec_id)
-           GROUP BY cell, pos),
-         c$i AS (
-           SELECT p.cid, coalesce(mv.cv, p.cv) AS cv FROM $prev p
-           LEFT JOIN (SELECT cell, list(m ORDER BY pos) AS cv
-                      FROM m$i GROUP BY cell) mv ON mv.cell = p.cid)"""
-      }
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 64),
-         ${step(1)},
-         ${step(2)},
+         ${ivfLloydStepCtes(1)},
+         ${ivfLloydStepCtes(2)},
          c AS (SELECT cid, cv, list_dot_product(cv, cv) AS cnorm2 FROM c2),
          en AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cid AS cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
-                 AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
+         ${ivfAssignCte("e")},
          dropped AS (
            SELECT DISTINCT y.vec_id FROM assign x
            JOIN assign y ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -7848,27 +6464,304 @@ object Pipeline {
            WHERE list_dot_product(ex.v, ey.v) / (ex.nrm * ey.nrm) >= 0.4)
          SELECT a.vec_id, a.cell FROM assign a
          LEFT JOIN dropped d ON d.vec_id = a.vec_id
-         WHERE d.vec_id IS NULL ORDER BY a.vec_id"""
+         WHERE d.vec_id IS NULL ORDER BY a.vec_id"""),
+    // F10 — map functions over JSON-derived maps (events.props).
+    QueryDef("q_map_ops", (s, dir) => {
+      val m = from_json(col("props"), org.apache.spark.sql.types.MapType(
+        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.LongType))
+      t(s, dir, "events")
+        .select(col("event_id"), map_keys(m).getItem(0).as("first_key"),
+          map_values(m).getItem(0).as("first_val"),
+          size(map_keys(m)).cast("long").as("n_keys"))
+        .orderBy("event_id")
     },
-    "q_map_ops" ->
       """SELECT event_id, json_keys(props)[1] AS first_key,
          cast(json_extract_string(props, '$.' || json_keys(props)[1]) AS bigint) AS first_val,
          cast(len(json_keys(props)) AS bigint) AS n_keys
-         FROM events ORDER BY event_id""",
-    "q_array_kit" ->
+         FROM events ORDER BY event_id"""),
+    // L2 — IVF cell-balance audit (Ivf.cellBalance): per-cell population
+    // and mean assignment distance — the report run before deploying an
+    // ANN index at scale (a hot cell makes every probe touching it pay
+    // that cell's scan; the vector twin of q_skew_report). Fixed first-16
+    // quantizer so assignment AND the micro-unit decimal distance sums
+    // are bit-portable — the whole report oracle-checks.
+    QueryDef("q_ivf_balance", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val centroids = ivfSeeds(emb)
+      graft.operators.Ivf.cellBalance(emb, "emb", centroids)
+        .orderBy("cell")
+    },
+    // Same fixed-quantizer assignment CTE as q_sim_ivf_fixed; the TRUE
+    // squared distance |a|² + (−2a·c + |c|²) — |a|² added back outside
+    // the shifted rank key, the engine's exact operation order — rounds
+    // to micro-units and sums as decimal, mirroring the engine.
+      s"""WITH $IvfSeedCte,
+         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         assign AS (
+           SELECT vec_id, cell, d FROM (
+             SELECT e.vec_id, c.cid AS cell,
+               list_dot_product(e.v, e.v)
+                 + (-2 * list_dot_product(e.v, c.cv) + c.cnorm2) AS d,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY -2 * list_dot_product(e.v, c.cv) + c.cnorm2, c.cid)
+                 AS rn
+             FROM e CROSS JOIN c) WHERE rn = 1)
+         SELECT cell::bigint AS cell, count(*)::bigint AS n_vecs,
+           round(sum(round(d * 1000000, 0)::decimal(38,0))::double
+             / 1000000 / count(*), 6) AS mean_dist
+         FROM assign GROUP BY cell ORDER BY cell"""),
+    // L2 — distributed PCA projection (Pca.projectPc1): each vector's
+    // coordinate along the corpus's first principal direction — the linear
+    // pre-transform FAISS runs before PQ, and curation's cheap dominant-
+    // direction outlier score. Vectors micro-quantize once, then ONE
+    // exploded-moments pass (striped long sums, no per-row BigDecimal) →
+    // micro-unit integer covariance frame → two exact integer power steps
+    // as metadata-scale joins (no driver matrix anywhere) → broadcast-
+    // direction exact-long projection. The single IEEE decision per value
+    // is the quantization round, so the whole pipeline oracle-checks.
+    QueryDef("q_embed_pca", (s, dir) => {
+      val emb = embFrame(s, dir)
+      graft.operators.Pca.projectPc1(emb, "vec_id", "emb", dim = 64)
+        .orderBy("vec_id")
+    },
+    // PCA family: one shared relational re-run (see PcaSql) — the oracle
+    // executes the engine's exact pipeline, deflation included, so all
+    // three queries hash-match bit-for-bit.
+      PcaSql(
+      """SELECT p.vec_id,
+           CASE WHEN n2.n2 = 0 THEN 0.0
+                ELSE round(cast(p.s AS double) / 1000000
+                  / sqrt(cast(n2.n2 AS double)), 6)
+           END AS pc1
+         FROM proj p CROSS JOIN n2 ORDER BY p.vec_id""")),
+    // L2 — top-2 PCA scatter (Pca.projectTop2): one Hotelling deflation
+    // + a second power run; both component dots come out of ONE corpus
+    // scan. pc1 is bit-identical to q_embed_pca's (same direction math).
+    QueryDef("q_pca_top2", (s, dir) => {
+      val emb = embFrame(s, dir)
+      graft.operators.Pca.projectTop2(emb, "vec_id", "emb", dim = 64)
+        .orderBy("vec_id")
+    },
+      PcaSql(
+      """SELECT p.vec_id,
+           CASE WHEN n2.n2 = 0 THEN 0.0
+                ELSE round(cast(p.s AS double) / 1000000
+                  / sqrt(cast(n2.n2 AS double)), 6)
+           END AS pc1,
+           CASE WHEN n2b.n2b = 0 THEN 0.0
+                ELSE round(cast(p2.s2 AS double) / 1000000
+                  / sqrt(cast(n2b.n2b AS double)), 6)
+           END AS pc2
+         FROM proj p JOIN proj2 p2 ON p2.vec_id = p.vec_id
+         CROSS JOIN n2 CROSS JOIN n2b ORDER BY p.vec_id""")),
+    // L2 — SEMANTIC consumption ordering (Curation.semanticOrder): the
+    // "in-context pretraining" layout (Shi et al. 2023) — documents
+    // placed so packed long-context windows carry RELATED material:
+    // coarse locality from the fixed-quantizer IVF cell, fine locality
+    // from the pc1 sweep within it (Z-ordering's locality-by-sort-key
+    // idea with the embedding replacing scalar columns). Cell and pc1
+    // compute in ONE scan; ranks are per-cell windows; global positions
+    // come from the k-row census offsets. Fully oracle-checked: fixed
+    // quantizer + exact-integer PCA make every step bit-portable.
+    QueryDef("q_semantic_order", (s, dir) => {
+      Curation.semanticOrder(t(s, dir, "embeddings")
+          .select(col("vec_id"),
+            VectorOps.asDouble(col("embedding")).as("emb")),
+        "vec_id", "emb", dim = 64, k = 16)
+    },
+    // Semantic consumption order: fixed-quantizer assignment over the
+    // DOUBLE frame (the q_sim_ivf_fixed argmin convention), pc1 from
+    // the shared PCA chain, per-cell ranks, census prefix-sum offsets.
+      PcaSql(
+      s""",
+         $SemanticOrderCtes
+         SELECT vec_id, cell, pc1, pos FROM sord ORDER BY pos""")),
+    // L2/L5d — the semantic order FEEDING long-context window
+    // construction (the composition that is the point of in-context
+    // pretraining): the q_token_windows slicing keyed on the SEMANTIC
+    // stream offset instead of per-source doc_id order, so each
+    // 128-token window carries adjacent-by-meaning documents. The
+    // global token offset is built WITHOUT a global window: within-cell
+    // token prefix (one cell-partitioned window over unique positions)
+    // + per-cell token-total prefix sums (k-row census collected and
+    // broadcast back — the semanticOrder offset pattern). vec_id ≡
+    // doc_id in the harness (TESTDATA), so the embedding order maps
+    // 1:1 onto the documents it packs.
+    QueryDef("q_semantic_windows", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val order = Curation.semanticOrder(t(s, dir, "embeddings")
+          .select(col("vec_id"),
+            VectorOps.asDouble(col("embedding")).as("emb")),
+        "vec_id", "emb", dim = 64, k = 16)
+      val toks = t(s, dir, "documents").filter(col("text").isNotNull)
+        .select(col("doc_id"), TA.tokenCountWs(col("text")).as("n_tok"))
+      val j = order.join(toks, col("vec_id") === col("doc_id"))
+        .filter(col("n_tok") > 0)
+        .select(col("doc_id"), col("cell"), col("pos"), col("n_tok"))
+      val w = Window.partitionBy("cell").orderBy("pos")
+      val withIn = j
+        .withColumn("__cst", sum(col("n_tok")).over(w) - col("n_tok"))
+      val census = j.groupBy("cell").agg(sum(col("n_tok")).as("t"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      val offs = census.map(_._2).scanLeft(0L)(_ + _).dropRight(1)
+      val offMap = map(census.map(_._1).zip(offs).flatMap { case (c, o) =>
+        Seq(lit(c), lit(o)) }.toSeq: _*)
+      withIn
+        .withColumn("st", col("__cst") + element_at(offMap, col("cell")))
+        .withColumn("window_id", explode(sequence(
+          expr("st div 128"), expr("(st + n_tok - 1) div 128"))))
+        .select(col("window_id"), col("doc_id"),
+          (greatest(col("st"), col("window_id") * 128)
+            - col("window_id") * 128).as("w_start"),
+          (least(col("st") + col("n_tok"), (col("window_id") + 1) * 128)
+            - greatest(col("st"), col("window_id") * 128))
+            .as("n_in_window"))
+        .orderBy("window_id", "doc_id")
+    },
+    // The composition: the semantic stream sliced into 128-token
+    // windows — q_token_windows' arithmetic keyed on the semantic
+    // offset (one global cumulative sum; the engine builds it
+    // distributed via the cell-prefix trick, values identical).
+      PcaSql(
+      s""",
+         $SemanticOrderCtes,
+         tk AS (SELECT doc_id,
+                  len(string_split_regex(text, '\\s+')) AS n_tok
+                FROM documents WHERE text IS NOT NULL),
+         sj AS MATERIALIZED (
+           SELECT s.vec_id AS doc_id, s.pos, tk.n_tok
+           FROM sord s JOIN tk ON tk.doc_id = s.vec_id
+           WHERE tk.n_tok > 0),
+         stc AS (SELECT doc_id, n_tok,
+                   (sum(n_tok) OVER (ORDER BY pos) - n_tok)::bigint AS st
+                 FROM sj),
+         ee AS (SELECT doc_id, n_tok, st,
+                  unnest(generate_series(st // 128, (st + n_tok - 1) // 128))
+                    AS window_id
+                FROM stc)
+         SELECT window_id::bigint AS window_id, doc_id,
+           (greatest(st, window_id * 128) - window_id * 128)::bigint
+             AS w_start,
+           (least(st + n_tok, (window_id + 1) * 128)
+             - greatest(st, window_id * 128))::bigint AS n_in_window
+         FROM ee ORDER BY window_id, doc_id""")),
+    // L2 — PCA spectrum report (Pca.varianceExplained): Rayleigh estimate
+    // of the top eigenvalue, total variance, and the explained fraction —
+    // the one-row audit that decides whether a PCA/whitening pre-transform
+    // is worth running before PQ (a near-isotropic spectrum says no).
+    QueryDef("q_pca_variance", (s, dir) => {
+      val emb = embFrame(s, dir)
+      graft.operators.Pca.varianceExplained(emb, "emb", dim = 64)
+    },
+      PcaSql(
+      """SELECT
+           CASE WHEN den.den = 0 THEN 0.0
+                ELSE round(cast(num.num AS double) / cast(den.den AS double)
+                  / 1000000, 6) END AS lambda1,
+           round(cast(tr.tr AS double) / 1000000, 6) AS trace,
+           CASE WHEN den.den = 0 OR tr.tr = 0 THEN 0.0
+                ELSE round(cast(num.num AS double) / cast(den.den AS double)
+                  / cast(tr.tr AS double), 6) END AS frac
+         FROM num CROSS JOIN den CROSS JOIN tr ORDER BY lambda1""")),
+    // L2 — IVF approximate top-k: coarse-quantizer cells, nprobe=4 of k=16.
+    // Fully oracle-checked since Ivf.train's Lloyd means became exact
+    // decimal sums: the oracle SQL re-runs the whole 2-iteration training
+    // (IvfSpec additionally asserts recall and probe-all ≡ exact).
+    QueryDef("q_sim_ivf", (s, dir) => {
+      // persisted: Lloyd's 2 iterations + the probe path re-scan the
+      // decoded frame ~5×; caching the float→double decode once is the
+      // same releaseAfterUse convention as ivfPqRecallOver
+      val emb = embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qs = queriesOf(emb)
+      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb", k = 16, iters = 2)
+      graft.operators.Ivf.topK(emb, qs, centroids, k = 10, nprobe = 4)
+        .select(col("q_id"), col("vec_id"), col("rn"), round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
+    },
+    // The TRAINED-quantizer IVF: Ivf.train's Lloyd means sum every
+    // component as an exact decimal(28,10) before one double division, so
+    // the trained centroids are a pure function of the data — and this SQL
+    // re-runs the training verbatim: seed = first 16 vectors, assignment
+    // by the same -2·dot+|c|² key (seed-id tiebreak; |c|² is a sequential
+    // self-dot both sides), per-cell exact-decimal component means with
+    // empty cells keeping their centroid, two iterations — then the
+    // identical probe pipeline as q_sim_ivf_fixed over the result.
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
+         ${ivfLloydStepCtes(1, LloydPosNote)},
+         ${ivfLloydStepCtes(2, LloydPosNote)},
+         c AS (SELECT cid, cv, list_dot_product(cv, cv) AS cnorm2 FROM c2),
+         ${ivfAssignCte("e")},
+         $IvfProbeTopSelect"""),
+    // L2 — the same IVF probe path with a FIXED coarse quantizer (iters=0
+    // ⇒ centroids are literally the first 16 vectors): unlike the trained
+    // variant (whose Lloyd means are engine-specific float reductions),
+    // every step here — the -2·dot+|c|² assignment key, the nprobe cell
+    // ranking, the in-cell cosine top-k — reproduces bit-for-bit in SQL,
+    // so the probe machinery itself is oracle-checked, not just row-counted.
+    QueryDef("q_sim_ivf_fixed", (s, dir) => {
+      val emb = embFrame(s, dir)
+      val qs = queriesOf(emb)
+      val centroids = ivfSeeds(emb)
+      graft.operators.Ivf.topK(emb, qs, centroids, k = 10, nprobe = 4)
+        .select(col("q_id"), col("vec_id"), col("rn"), round(col("cos"), 6).as("cosine"))
+        .orderBy("q_id", "rn")
+    },
+    // The fixed-quantizer IVF: centroids are the first 16 vectors, the
+    // assignment key is -2·dot+|c|² with index tiebreak, probes take the 4
+    // nearest cells, and the in-cell cosine top-10 ranks (cos desc, id) —
+    // each step the exact arithmetic the Spark operator runs.
+      s"""WITH $IvfSeedCte,
+         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         ${ivfAssignCte("e")},
+         $IvfProbeTopSelect"""),
+    // L3 — array function kit over token arrays: sort/contains/position/
+    // distinct-count/slice-join.
+    QueryDef("q_array_kit", (s, dir) => {
+      val toks = split(col("text"), " ")
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          array_contains(toks, "the").as("has_the"),
+          array_position(toks, "data").cast("long").as("first_data_pos"),
+          size(array_distinct(toks)).cast("long").as("n_unique_tokens"),
+          concat_ws("|", slice(sort_array(toks), 1, 3)).as("first3_sorted"))
+        .orderBy("doc_id")
+    },
       """SELECT doc_id,
          list_contains(string_split(text, ' '), 'the') AS has_the,
          cast(coalesce(list_position(string_split(text, ' '), 'data'), 0) AS bigint) AS first_data_pos,
          cast(len(list_distinct(string_split(text, ' '))) AS bigint) AS n_unique_tokens,
          array_to_string(list_sort(string_split(text, ' '))[1:3], '|') AS first3_sorted
-         FROM documents ORDER BY doc_id""",
-    "q_array_ops" ->
+         FROM documents ORDER BY doc_id"""),
+    // L3 — array<float> passthrough + element/norm access.
+    QueryDef("q_array_ops", (s, dir) => {
+      val emb = col("embedding")
+      t(s, dir, "embeddings")
+        .select(col("vec_id"), size(emb).cast("long").as("dim"),
+          element_at(emb, 1).cast("double").as("first_val"),
+          VectorOps.l2Norm(VectorOps.asDouble(emb)).as("l2_norm"),
+          col("label"))
+        .orderBy("vec_id")
+    },
       """SELECT vec_id, len(embedding) AS dim,
          cast(embedding[1] AS double) AS first_val,
          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS l2_norm,
          label
-         FROM embeddings ORDER BY vec_id""",
-    "q_multimodal_frames" ->
+         FROM embeddings ORDER BY vec_id"""),
+    // Multimodal frame decode: the typed mapPartitions stub (see
+    // operators.Multimodal.decodeStub) over documents-as-blobs, cross-
+    // checked against pure SQL byte arithmetic — verifying the Dataset
+    // codepath agrees with the declarative one on the same fake features.
+    QueryDef("q_multimodal_frames", (s, dir) => {
+      import graft.operators.Multimodal
+      val media = t(s, dir, "documents")
+        .select(col("doc_id").as("media_id"),
+          encode(col("text"), "UTF-8").as("payload"))
+      Multimodal.decodeStub(media, framesPerItem = 2)
+        .toDF("media_id", "frame_no", "feature")
+        .orderBy("media_id", "frame_no")
+    },
       """WITH d AS (SELECT doc_id AS media_id, text,
                     octet_length(encode(text)) AS L FROM documents)
          SELECT media_id, frame_no,
@@ -7878,68 +6771,26 @@ object Pipeline {
                ELSE substring(text, L // 2 + 1, L - L // 2) END, ''),
              c -> ascii(c))), 0) AS double) AS feature
          FROM d, (VALUES (0), (1)) AS f(frame_no)
-         ORDER BY media_id, frame_no""",
-    "q_multimodal_meta" ->
-      """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-         md5(text) AS content_md5
-         FROM documents ORDER BY doc_id""",
-    // Container-parse round trip: the synth parameters are a pure
-    // function of the id, so the oracle recomputes what the REAL binary
-    // parse must report.
-    "q_media_info" ->
-      """SELECT doc_id AS media_id,
-           CASE doc_id % 3 WHEN 0 THEN 'flac' WHEN 1 THEN 'mp4'
-             ELSE 'mp3' END AS container,
-           CASE WHEN doc_id % 3 = 0 THEN
-             CAST(CASE (doc_id // 3) % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                  WHEN 2 THEN 22050 ELSE 44100 END AS BIGINT)
-           WHEN doc_id % 3 = 2 THEN CAST(44100 AS BIGINT)
-           ELSE CAST(NULL AS BIGINT) END AS sample_rate_hz,
-           CASE WHEN doc_id % 3 = 0
-             THEN CAST(1 + (doc_id // 3) % 2 AS BIGINT)
-           WHEN doc_id % 3 = 2 THEN CAST(2 AS BIGINT)
-           ELSE CAST(NULL AS BIGINT) END AS channels,
-           CASE WHEN doc_id % 3 = 0
-             THEN CAST((1 + (doc_id // 3) % 5) * 1000 AS BIGINT)
-           WHEN doc_id % 3 = 2
-             THEN CAST((20 + 10 * ((doc_id // 3) % 5)) * 1152 * 1000 // 44100
-               AS BIGINT)
-           ELSE CAST((2 + (doc_id // 3) % 4) * 1000 AS BIGINT)
-           END AS duration_ms
-         FROM documents ORDER BY media_id""",
-    // The audit aggregate over the same id-derived expectation: the
-    // q_media_info body reduced to the (container, rate, duration-second)
-    // histogram with per-cell extremes.
-    "q_media_stats" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CASE doc_id % 3 WHEN 0 THEN 'flac' WHEN 1 THEN 'mp4'
-               ELSE 'mp3' END AS container,
-             CASE WHEN doc_id % 3 = 0 THEN
-               CAST(CASE (doc_id // 3) % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                    WHEN 2 THEN 22050 ELSE 44100 END AS BIGINT)
-             WHEN doc_id % 3 = 2 THEN CAST(44100 AS BIGINT)
-             ELSE CAST(NULL AS BIGINT) END AS sample_rate_hz,
-             CASE WHEN doc_id % 3 = 0
-               THEN CAST((1 + (doc_id // 3) % 5) * 1000 AS BIGINT)
-             WHEN doc_id % 3 = 2
-               THEN CAST((20 + 10 * ((doc_id // 3) % 5)) * 1152 * 1000 // 44100
-                 AS BIGINT)
-             ELSE CAST((2 + (doc_id // 3) % 4) * 1000 AS BIGINT)
-             END AS duration_ms
-           FROM documents)
-         SELECT container, coalesce(sample_rate_hz, 0) AS rate_hz,
-           duration_ms // 1000 AS dur_s,
-           count(*) AS n, min(duration_ms) AS min_ms,
-           max(duration_ms) AS max_ms
-         FROM m GROUP BY container, coalesce(sample_rate_hz, 0),
-           duration_ms // 1000
-         ORDER BY container, rate_hz, dur_s""",
+         ORDER BY media_id, frame_no"""),
+    // L3 — image near-duplicate detection, END TO END through the real
+    // codec: deterministic md5-pixel BMPs (every 10th doc also emits a
+    // +8-on-one-byte twin) are ENCODED (writeBmp24), DECODED back
+    // (parseBmp24), perceptually hashed (8×8 luma grid → 56-bit dHash)
+    // and banded-Hamming joined — pairs meet only inside a shared 14-bit
+    // band bucket, which is EXACT for dist ≤ 3 (pigeonhole). The oracle
+    // reproduces the pixel bytes, luma doubles, hash, and pair set
+    // arithmetically (the BMP round-trip is pixel-identity), so the
+    // whole multimodal path oracle-checks bit-for-bit.
+    QueryDef("q_image_neardup", (s, dir) => {
+      import graft.operators.Multimodal
+      val media = Multimodal.synthBmp8x8(
+        t(s, dir, "documents").select(col("doc_id")), "doc_id")
+      Multimodal.imageNearDups(media, maxDist = 3).orderBy("a", "b")
+    },
     // The BMP encode→decode round-trip is pixel-identity, so the oracle
     // computes straight from the md5 pixel bytes: same luma expression
     // (double literals, left-to-right), same bit layout, then all-pairs
     // Hamming — banding at dist ≤ 3 is exact, so the sets must agree.
-    "q_image_neardup" ->
       """WITH ids AS (
            SELECT doc_id AS media_id, doc_id AS base, false AS pert
            FROM documents
@@ -7976,12 +6827,126 @@ object Pipeline {
            bit_count(xor(x.dh, y.dh))::bigint AS dist
          FROM h x JOIN h y ON x.media_id < y.media_id
          WHERE bit_count(xor(x.dh, y.dh)) <= 3
-         ORDER BY a, b""",
+         ORDER BY a, b"""),
+    // Multimodal metadata over an opaque byte payload (documents.text bytes
+    // stand in for image/audio blobs; see operators.Multimodal).
+    QueryDef("q_multimodal_meta", (s, dir) => {
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          octet_length(encode(col("text"), "UTF-8")).cast("long").as("n_bytes"),
+          md5(col("text")).as("content_md5"))
+        .orderBy("doc_id")
+    },
+      """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
+         md5(text) AS content_md5
+         FROM documents ORDER BY doc_id"""),
+    // L3 — REAL compressed-A/V CONTAINER metadata (Multimodal.mediaInfo):
+    // FLAC STREAMINFO and MP4 mvhd parsed with plain byte-buffer
+    // arithmetic — the duration/rate/channels filter a 100 TB curation
+    // pass runs BEFORE paying for any frame decode (the one step of
+    // "compressed audio/video" that needs no codec). Round-trip oracle:
+    // synthMedia writes real container bytes with id-derived parameters,
+    // mediaInfo parses them back, and the SQL recomputes the expected
+    // fields from the id arithmetic — a parser/synth bug on either side
+    // breaks the hash. Spec-side, the parsers are additionally pinned
+    // against hand-built canonical headers (44.1 kHz stereo FLAC,
+    // timescale-600 QuickTime mvhd, a canonical 0xFFFB9000 CBR MP3
+    // frame) so the pair can't be self-consistently wrong.
+    QueryDef("q_media_info", (s, dir) => {
+      graft.operators.Multimodal.mediaInfo(
+          graft.operators.Multimodal.synthMedia(
+            t(s, dir, "documents").select(col("doc_id")), "doc_id"))
+        .toDF()
+        .orderBy("media_id")
+    },
+    // Container-parse round trip: the synth parameters are a pure
+    // function of the id, so the oracle recomputes what the REAL binary
+    // parse must report.
+      """SELECT doc_id AS media_id,
+           CASE doc_id % 3 WHEN 0 THEN 'flac' WHEN 1 THEN 'mp4'
+             ELSE 'mp3' END AS container,
+           CASE WHEN doc_id % 3 = 0 THEN
+             CAST(CASE (doc_id // 3) % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+                  WHEN 2 THEN 22050 ELSE 44100 END AS BIGINT)
+           WHEN doc_id % 3 = 2 THEN CAST(44100 AS BIGINT)
+           ELSE CAST(NULL AS BIGINT) END AS sample_rate_hz,
+           CASE WHEN doc_id % 3 = 0
+             THEN CAST(1 + (doc_id // 3) % 2 AS BIGINT)
+           WHEN doc_id % 3 = 2 THEN CAST(2 AS BIGINT)
+           ELSE CAST(NULL AS BIGINT) END AS channels,
+           CASE WHEN doc_id % 3 = 0
+             THEN CAST((1 + (doc_id // 3) % 5) * 1000 AS BIGINT)
+           WHEN doc_id % 3 = 2
+             THEN CAST((20 + 10 * ((doc_id // 3) % 5)) * 1152 * 1000 // 44100
+               AS BIGINT)
+           ELSE CAST((2 + (doc_id // 3) % 4) * 1000 AS BIGINT)
+           END AS duration_ms
+         FROM documents ORDER BY media_id"""),
+    // L3 — the per-container AUDIT over q_media_info's parse (the
+    // q_url_stats convention): joint (container, rate, duration-second)
+    // histogram with per-cell duration extremes — the table a media
+    // gate's [minMs, maxMs] thresholds are DERIVED from instead of
+    // guessed (MultimodalSpec pins that derivation: gate thresholds read
+    // off this table admit exactly the expected corpus slice). One scan
+    // + one hash aggregate over metadata-width rows; the histogram is
+    // k-cells-scale however big the corpus.
+    QueryDef("q_media_stats", (s, dir) => {
+      graft.operators.Multimodal.mediaInfo(
+          graft.operators.Multimodal.synthMedia(
+            t(s, dir, "documents").select(col("doc_id")), "doc_id"))
+        .toDF()
+        .groupBy(col("container"),
+          coalesce(col("sample_rate_hz"), lit(0L)).as("rate_hz"),
+          // exact integer floor-div, matching the oracle's duration_ms
+          // // 1000 — double division then cast would diverge once
+          // duration_ms exceeds 2^53 (the repo's exact-integer discipline)
+          expr("duration_ms div 1000").as("dur_s"))
+        .agg(count(lit(1)).as("n"),
+          min("duration_ms").as("min_ms"),
+          max("duration_ms").as("max_ms"))
+        .orderBy("container", "rate_hz", "dur_s")
+    },
+    // The audit aggregate over the same id-derived expectation: the
+    // q_media_info body reduced to the (container, rate, duration-second)
+    // histogram with per-cell extremes.
+      """WITH m AS (
+           SELECT doc_id AS media_id,
+             CASE doc_id % 3 WHEN 0 THEN 'flac' WHEN 1 THEN 'mp4'
+               ELSE 'mp3' END AS container,
+             CASE WHEN doc_id % 3 = 0 THEN
+               CAST(CASE (doc_id // 3) % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+                    WHEN 2 THEN 22050 ELSE 44100 END AS BIGINT)
+             WHEN doc_id % 3 = 2 THEN CAST(44100 AS BIGINT)
+             ELSE CAST(NULL AS BIGINT) END AS sample_rate_hz,
+             CASE WHEN doc_id % 3 = 0
+               THEN CAST((1 + (doc_id // 3) % 5) * 1000 AS BIGINT)
+             WHEN doc_id % 3 = 2
+               THEN CAST((20 + 10 * ((doc_id // 3) % 5)) * 1152 * 1000 // 44100
+                 AS BIGINT)
+             ELSE CAST((2 + (doc_id // 3) % 4) * 1000 AS BIGINT)
+             END AS duration_ms
+           FROM documents)
+         SELECT container, coalesce(sample_rate_hz, 0) AS rate_hz,
+           duration_ms // 1000 AS dur_s,
+           count(*) AS n, min(duration_ms) AS min_ms,
+           max(duration_ms) AS max_ms
+         FROM m GROUP BY container, coalesce(sample_rate_hz, 0),
+           duration_ms // 1000
+         ORDER BY container, rate_hz, dur_s"""),
+    // L1 — BM25 retrieval: top-10 documents for a fixed 3-term query, the
+    // relevance-ranking primitive for pulling topic subsets out of a
+    // corpus. One scan + ONE one-row global aggregate broadcast; the
+    // per-term score sum is a fixed-order expression tree, so no float
+    // result depends on shuffle order (see TextAnalysis.bm25TopK).
+    QueryDef("q_bm25", (s, dir) => {
+      TA.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
+        Bm25Terms, topK = 10, k1 = Bm25K1, b = Bm25B)
+    },
     // Generated from Bm25Terms so engine and oracle can never drift. The
     // score replicates bm25TopK's expression tree operation-for-operation
     // (same association order), so every double matches bit-for-bit
     // before the final round(…, 6).
-    "q_bm25" -> {
+      {
       val tfs = Bm25Terms.zipWithIndex.map { case (term, i) =>
         s"cast(len(list_filter($WsSplitSql, " +
           s"x -> x = '$term')) AS double) AS tf$i"
@@ -8012,50 +6977,31 @@ object Pipeline {
            FROM d, s)
          WHERE bm25 > 0
          ORDER BY bm25 DESC, doc_id LIMIT 10"""
+    }),
+    // L1 — TABLE-driven BM25 (TextAnalysis.bm25BatchTopK): a query TABLE
+    // scored against the corpus through the inverted-index core — each
+    // query's candidates are exactly the docs sharing ≥1 term (broadcast
+    // term semi-join, never corpus × queries), term scores sum as exact
+    // decimals, and the per-query top-k is TopKAgg (map-side capped at k,
+    // so the final shuffle is O(k·queries·partitions)). Query 0 is
+    // q_bm25's term set, so its top-10 cross-checks that query.
+    QueryDef("q_bm25_batch", (s, dir) => {
+      import s.implicits._
+      val qs = Bm25BatchQueries.toDF("q_id", "qtext")
+      TA.bm25BatchTopK(t(s, dir, "documents"), "doc_id", "text",
+        qs, "q_id", "qtext", topK = 10, k1 = Bm25K1, b = Bm25B)
+        .orderBy("q_id", "rnk")
     },
     // Table-driven BM25: the (term, doc, tf, dl) aggregate, corpus stats
     // off its per-doc collapse, df over candidate postings only, the
     // same k1/b float formula as q_bm25 per (query, doc, term) summed as
     // decimal(28,10), ranked (double(sc) desc, doc_id desc) — TopKAgg's
     // tiebreak. Query table rendered from the shared constant.
-    "q_bm25_batch" -> {
+      {
       val vals = Bm25BatchQueries
         .map { case (i, txt) => s"($i, '$txt')" }.mkString(", ")
-      val score = s"ln(1.0 + (s.n - f.df + 0.5) / (f.df + 0.5))" +
-        s" * (t.tf * ${Bm25K1 + 1.0})" +
-        s" / (t.tf + $Bm25K1 * (${1.0 - Bm25B}" +
-        s" + $Bm25B * t.dl / (s.sumdl / s.n)))"
       s"""WITH q(q_id, qtext) AS (VALUES $vals),
-         tf AS (
-           SELECT term, doc_id, cast(count(*) AS double) AS tf,
-             max(dl) AS dl
-           FROM (
-             SELECT doc_id, cast(len($WsSplitSql) AS double) AS dl,
-               unnest($WsSplitSql) AS term
-             FROM documents WHERE text IS NOT NULL)
-           WHERE len(term) > 0 GROUP BY term, doc_id),
-         ds AS (SELECT doc_id, max(dl) AS dl FROM tf GROUP BY doc_id),
-         s AS (
-           SELECT cast(count(*) AS double) AS n,
-             cast(sum(cast(dl AS decimal(38,0))) AS double) AS sumdl
-           FROM ds),
-         qt AS (
-           SELECT q_id, term FROM (
-             SELECT q_id, unnest(list_distinct(
-               string_split_regex(qtext, '\\s+'))) AS term
-             FROM q)
-           WHERE len(term) > 0),
-         f AS (
-           SELECT t.term, cast(count(*) AS double) AS df
-           FROM tf t JOIN (SELECT DISTINCT term FROM qt) x USING (term)
-           GROUP BY t.term),
-         scored AS (
-           SELECT qt.q_id, t.doc_id,
-             sum(cast($score AS decimal(28,10))) AS sc
-           FROM tf t
-           JOIN qt ON qt.term = t.term
-           JOIN f ON f.term = t.term, s
-           GROUP BY qt.q_id, t.doc_id)
+         $Bm25ScoredCtes
          SELECT cast(q_id AS bigint) AS q_id, rnk, doc_id,
            round(scd, 6) AS bm25
          FROM (
@@ -8064,26 +7010,60 @@ object Pipeline {
                ORDER BY cast(sc AS double) DESC, doc_id DESC) AS rnk
            FROM scored)
          WHERE rnk <= 10 ORDER BY q_id, rnk"""
+    }),
+    // L1/L2 — two-stage retrieval (TextAnalysis.retrieveRerank): BM25
+    // recall capped at candK per query, exact embedding-cosine rerank of
+    // ONLY those candidates — the production RAG shape. Queries are the
+    // first three documents (their own text as the query, their vec_id
+    // embedding as the rerank anchor); self-retrieval masked after the
+    // cap. Corpus touched twice (term aggregate + one embeddings probe);
+    // everything between is candidate-scale broadcasts.
+    QueryDef("q_retrieve_rerank", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val qs = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
+        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
+      val emb = embFrame(s, dir)
+      TA.retrieveRerank(docs, "doc_id", "text", qs, "q_id", "qtext",
+        emb, "vec_id", "emb", candK = RerankCandK, topK = RerankTopK,
+        k1 = Bm25K1, b = Bm25B)
+        .orderBy("q_id", "rnk")
+    },
+    // Two-stage retrieval: the shared rerank CTE chain cut at RerankTopK.
+      s"""$RerankPipelineCtes
+         SELECT q_id, rnk, doc_id, bm25, round(cos, 6) AS cosine
+         FROM rrk WHERE rnk <= $RerankTopK ORDER BY q_id, rnk"""),
+    // L1/L2 — reciprocal-rank fusion (TextAnalysis.rrfFuse): the HYBRID
+    // alternative to q_retrieve_rerank's cascade over the SAME two
+    // rankers — BM25 top-candK (self-masked after the cap, rank gaps
+    // preserved, the cand convention) and exact-cosine top-candK
+    // (Similarity.exactTopK), fused by Σ 1/(60+rank) per doc. Each term
+    // is one IEEE division, the fuse one two-term left-to-right sum —
+    // oracle-reproducible bit-for-bit; fuse cost is candidate-scale
+    // (the corpus is touched only by the two upstream rankers).
+    QueryDef("q_rrf", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val qs = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
+        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
+      val emb = embFrame(s, dir)
+      val sparse = TA.bm25BatchTopK(docs, "doc_id", "text", qs, "q_id",
+          "qtext", topK = RerankCandK, k1 = Bm25K1, b = Bm25B)
+        .filter(col("doc_id") =!= col("q_id"))
+        .select(col("q_id"), col("doc_id"), col("rnk"))
+      val dense = Similarity.exactTopK(emb,
+          emb.filter(col("vec_id") < 3)
+            .select(col("vec_id").as("q_id"), col("emb").as("q_emb")),
+          RerankCandK)
+        .select(col("q_id"), col("vec_id").as("doc_id"), col("rn").as("rnk"))
+      TA.rrfFuse(sparse, dense, "q_id", "doc_id", "rnk",
+          topK = RerankTopK)
+        .orderBy("q_id", "rnk")
     },
     // Reciprocal-rank fusion over the shared CTE pool: the cand stage's
     // crnk (BM25 rank, self-masked after the cap) full-outer-joined to
     // the exact-cosine top-candK rank, scored 1/(60+r) + 1/(60+r) — a
     // two-term double sum both engines evaluate identically.
-    "q_rrf" ->
       s"""$RerankPipelineCtes,
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         dense AS (
-           SELECT q_id, vec_id, drnk FROM (
-             SELECT q_id, vec_id, row_number() OVER (
-               PARTITION BY q_id ORDER BY cos DESC, vec_id) AS drnk
-             FROM (
-               SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
-                 list_dot_product(x.v, q.v) /
-                   (sqrt(list_dot_product(x.v, x.v))
-                    * sqrt(list_dot_product(q.v, q.v))) AS cos
-               FROM e q JOIN e x
-                 ON q.vec_id < 3 AND x.vec_id <> q.vec_id))
-           WHERE drnk <= $RerankCandK),
+         $RrfDenseCtes,
          fused AS (
            SELECT coalesce(s.q_id, d.q_id) AS q_id,
              coalesce(s.doc_id, d.vec_id) AS doc_id,
@@ -8098,24 +7078,41 @@ object Pipeline {
            SELECT *, row_number() OVER (PARTITION BY q_id
              ORDER BY sc DESC, doc_id) AS rnk
            FROM fused)
-         WHERE rnk <= $RerankTopK ORDER BY q_id, rnk""",
+         WHERE rnk <= $RerankTopK ORDER BY q_id, rnk"""),
+    // L1/L2 — recall@RerankTopK of the RRF fusion vs the exact cosine
+    // truth — q_rerank_recall's twin for the HYBRID retriever: read the
+    // two rows together to compare the cascade (dense re-orders sparse
+    // survivors) against the fusion (both rankings vote) at identical
+    // candidate budgets. On this fixture text and embeddings are
+    // independent, so the fused recall is bounded by how many dense
+    // top-candK docs survive the sparse noise votes — the row measures
+    // exactly that trade; on a real corpus it is the fusion-vs-cascade
+    // sizing number.
+    QueryDef("q_rrf_recall", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val qs = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
+        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
+      val emb = embFrame(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qsE = emb.filter(col("vec_id") < 3)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+      val sparse = TA.bm25BatchTopK(docs, "doc_id", "text", qs, "q_id",
+          "qtext", topK = RerankCandK, k1 = Bm25K1, b = Bm25B)
+        .filter(col("doc_id") =!= col("q_id"))
+        .select(col("q_id"), col("doc_id"), col("rnk"))
+      val dense = Similarity.exactTopK(emb, qsE, RerankCandK)
+        .select(col("q_id"), col("vec_id").as("doc_id"), col("rn").as("rnk"))
+      val picked = TA.rrfFuse(sparse, dense, "q_id", "doc_id", "rnk",
+          topK = RerankTopK)
+        .select(col("q_id"), col("doc_id").as("vec_id"))
+      val exact = Similarity.exactTopK(emb, qsE, RerankTopK)
+        .select(col("q_id"), col("vec_id"))
+      Similarity.recallAtK(exact, picked, RerankTopK)
+    },
     // RRF recall: the fused top-K from the q_rrf CTEs, scored against
     // the exact-cosine truth by the shared recall tail.
-    "q_rrf_recall" ->
       s"""$RerankPipelineCtes,
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         dense AS (
-           SELECT q_id, vec_id, drnk FROM (
-             SELECT q_id, vec_id, row_number() OVER (
-               PARTITION BY q_id ORDER BY cos DESC, vec_id) AS drnk
-             FROM (
-               SELECT q.vec_id AS q_id, x.vec_id AS vec_id,
-                 list_dot_product(x.v, q.v) /
-                   (sqrt(list_dot_product(x.v, x.v))
-                    * sqrt(list_dot_product(q.v, q.v))) AS cos
-               FROM e q JOIN e x
-                 ON q.vec_id < 3 AND x.vec_id <> q.vec_id))
-           WHERE drnk <= $RerankCandK),
+         $RrfDenseCtes,
          fused AS (
            SELECT coalesce(s.q_id, d.q_id) AS q_id,
              coalesce(s.doc_id, d.vec_id) AS doc_id,
@@ -8130,28 +7127,95 @@ object Pipeline {
              FROM fused)
            WHERE rnk <= $RerankTopK),
          ${embExactCte(3, RerankTopK)}
-         ${recallTailSql("picked", RerankTopK)}""",
-    // Two-stage retrieval: the shared rerank CTE chain cut at RerankTopK.
-    "q_retrieve_rerank" ->
-      s"""$RerankPipelineCtes
-         SELECT q_id, rnk, doc_id, bm25, round(cos, 6) AS cosine
-         FROM rrk WHERE rnk <= $RerankTopK ORDER BY q_id, rnk""",
+         ${recallTailSql("picked", RerankTopK)}"""),
+    // L1/L2 — recall@RerankTopK of the two-stage retriever vs the exact
+    // cosine top-RerankTopK per query — the quality row every other
+    // approximate stage already has (q_pq_recall, q_minhash_recall,
+    // q_ivf_recall_curve): the number that sizes candK. The rerank
+    // cosine is exact, so any miss is BM25 candidate generation failing
+    // to surface a true semantic neighbour within candK; raise candK
+    // until this plateaus. Truth and pipeline share the embedding id
+    // space (queries are docs 0..2 anchored at their vec_id). On THIS
+    // fixture text and embeddings are independently synthesized, so the
+    // expected value is the chance-overlap floor ≈ topK·candK/N ≈ 0 —
+    // the row measures exactly that (and the oracle agrees); on a real
+    // corpus, where lexical and semantic neighbours correlate, the same
+    // row is the candK-sizing curve.
+    QueryDef("q_rerank_recall", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val qsD = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
+        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
+      val emb = embFrame(s, dir)
+      val picked = TA.retrieveRerank(docs, "doc_id", "text", qsD, "q_id",
+          "qtext", emb, "vec_id", "emb", candK = RerankCandK,
+          topK = RerankTopK, k1 = Bm25K1, b = Bm25B)
+        .select(col("q_id"), col("doc_id").as("vec_id"))
+      val qsE = emb.filter(col("vec_id") < 3)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+      val exact = Similarity.exactTopK(emb, qsE, RerankTopK)
+        .select(col("q_id"), col("vec_id"))
+      Similarity.recallAtK(exact, picked, RerankTopK)
+    },
     // recall@RerankTopK of the two-stage retriever vs the exact cosine
     // top-RerankTopK (truth anchored at the query docs' vec_ids) — the
     // number that sizes candK: the rerank cosine is exact, so any miss
     // is BM25 candidate generation failing to surface a true semantic
     // neighbour within candK.
-    "q_rerank_recall" ->
       s"""$RerankPipelineCtes,
          picked AS (
            SELECT q_id, doc_id AS vec_id FROM rrk
            WHERE rnk <= $RerankTopK),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          ${embExactCte(3, RerankTopK)}
-         ${recallTailSql("picked", RerankTopK)}""",
+         ${recallTailSql("picked", RerankTopK)}"""),
+    // L1/L2 — nDCG@10 of BM25 candidate ordering, graded by the exact
+    // cosine to the query's embedding (gain = (cos+1)/2): the GRADED
+    // retrieval-quality row beside q_rerank_recall's binary one — how
+    // close stage-1 ordering already is to the semantic ideal over the
+    // same candidate pool. Discounts are 1/log2(pos+1) with each ln
+    // once-rounded to decimal(17,10) (the engine-portability recipe);
+    // per-position terms sum as decimal(28,10), order-independent.
+    QueryDef("q_retrieval_ndcg", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents")
+      val qsD = docs.filter(col("doc_id") < 3 && col("text").isNotNull)
+        .select(col("doc_id").as("q_id"), col("text").as("qtext"))
+      val emb = embFrame(s, dir)
+      val cands = TA.bm25BatchTopK(docs, "doc_id", "text", qsD, "q_id",
+          "qtext", RerankCandK, Bm25K1, Bm25B)
+        .filter(col("doc_id") =!= col("q_id"))
+      val pos = cands.withColumn("pos",
+          row_number().over(Window.partitionBy("q_id").orderBy("rnk")))
+        .filter(col("pos") <= 10)
+        .select(col("q_id"), col("doc_id"), col("pos"))
+      val candE = emb.join(broadcast(pos), col("vec_id") === col("doc_id"))
+        .drop("vec_id")
+      val qe = emb.filter(col("vec_id") < 3)
+        .select(col("vec_id").as("__qe"), col("emb").as("__qemb"))
+      def lnDec10(c: org.apache.spark.sql.Column) =
+        log(c.cast("double")).cast("decimal(17,10)").cast("double")
+      val scored = candE.join(broadcast(qe), col("q_id") === col("__qe"))
+        .withColumn("cos", graft.functions.VectorOps.cosine(col("emb"),
+          col("__qemb")))
+        .withColumn("gain", (col("cos") + lit(1.0)) / lit(2.0))
+        .withColumn("ipos", row_number().over(Window.partitionBy("q_id")
+          .orderBy(col("cos").desc, col("doc_id"))))
+      def term(p: org.apache.spark.sql.Column) =
+        (col("gain") / (lnDec10(p + lit(1)) / lnDec10(lit(2))))
+          .cast("decimal(28,10)")
+      scored
+        .groupBy("q_id")
+        .agg(sum(term(col("pos"))).as("__dcg"),
+          sum(term(col("ipos"))).as("__idcg"))
+        .select(col("q_id"),
+          round(col("__dcg").cast("double"), 6).as("dcg"),
+          round(col("__idcg").cast("double"), 6).as("idcg"),
+          round(col("__dcg").cast("double") /
+            col("__idcg").cast("double"), 6).as("ndcg"))
+        .orderBy("q_id")
+    },
     // nDCG@10 over the same rerank CTE chain: positions by stage-1 crnk
     // (self-masked re-rank), gains (cos+1)/2, decimal-rounded lns.
-    "q_retrieval_ndcg" ->
       s"""$RerankPipelineCtes,
          pos AS (
            SELECT q_id, doc_id, cos,
@@ -8177,8 +7241,34 @@ object Pipeline {
            round(cast(sum(it) AS double), 6) AS idcg,
            round(cast(sum(t) AS double) / cast(sum(it) AS double), 6)
              AS ndcg
-         FROM terms GROUP BY q_id ORDER BY q_id""",
-    "q_embed_norm" ->
+         FROM terms GROUP BY q_id ORDER BY q_id"""),
+    // L2 — per-dimension embedding statistics (the normalization /
+    // feature-scaling pass before clustering or PQ training): mean and
+    // std of every coordinate. posexplode → ONE hash aggregate on the
+    // dimension index; sums run in exact integer/decimal space —
+    // round(v·10⁶) per value (float→double widening is exact, so both
+    // engines round the same double) summed as long / decimal(38,0) for
+    // the squares — making the aggregate order-independent; the final
+    // mean/variance division happens once per dimension in double.
+    QueryDef("q_embed_norm", (s, dir) => {
+      val scaled = t(s, dir, "embeddings")
+        .select(posexplode(col("embedding")).as(Seq("dim", "__v")))
+        .select(col("dim"),
+          round(col("__v").cast("double") * 1e6, 0).cast("long").as("__s"))
+      val sumv = col("__ss").cast("double") / 1e6
+      // __s sums as decimal(38,0) too (not plain long): DuckDB's
+      // sum(bigint) promotes to hugeint, and a long sum here would wrap
+      // ~20x before the oracle does at full scale.
+      scaled.groupBy("dim")
+        .agg(count(lit(1)).as("n"),
+          sum(col("__s").cast("decimal(38,0)")).as("__ss"),
+          sum(col("__s").cast("decimal(38,0)") * col("__s")).as("__ss2"))
+        .select(col("dim"), col("n"),
+          round(sumv / col("n"), 6).as("mean"),
+          round(sqrt((col("__ss2").cast("double") / 1e12 -
+            sumv * sumv / col("n")) / col("n")), 6).as("stddev"))
+        .orderBy("dim")
+    },
       """WITH v AS (
            SELECT i - 1 AS dim,
              cast(round(cast(embedding[i] AS double) * 1e6, 0) AS bigint) AS s
@@ -8194,5 +7284,5 @@ object Pipeline {
            round(sqrt((cast(ss2 AS double) / 1e12 -
              cast(ss AS double) / 1e6 * (cast(ss AS double) / 1e6) / n) / n),
              6) AS stddev
-         FROM a ORDER BY dim""")
+         FROM a ORDER BY dim"""))
 }

@@ -23,6 +23,16 @@ class ContractSpec extends SparkSpec {
       .exists(_ >= 0.0))
   }
 
+  test("query names are unique across the five families") {
+    // a clash would make the name-keyed maps keep one entry silently
+    val dups = SparkEntry.defs.groupBy(_.name).collect {
+      case (name, ds) if ds.size > 1 => name
+    }
+    assert(dups.isEmpty, s"query names registered more than once: $dups")
+    assert(SparkEntry.queries.size == SparkEntry.defs.size)
+    assert(SparkEntry.oracleSql.size == SparkEntry.defs.size)
+  }
+
   test("every oracle key names a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")

@@ -18,13 +18,23 @@ groups sorted by column name, their `gid` numbers renumbered to match,
 and the same reordering applied to the lists after the Expand), so only
 a real plan change shows.
 
+With --oracles it compares two graft.Verify `oracle_sql.json` dumps
+instead: oracles pair by query key, and each SQL text is compared after
+every whitespace run that contains a line break becomes one space (so a
+re-indented or re-wrapped fragment is no difference, while a change
+inside a one-line literal such as `' '`, or a `null` spliced in by an
+uninitialized value, is).
+
 Usage:
   tools/plandiff.py <dirA> <dirB>                 pair files by name
   tools/plandiff.py <dirA> <dirB> --suffix a,b    pair <q>_a.txt with <q>_b.txt
                                                   (dirA may equal dirB)
-  tools/plandiff.py --selftest                    check itself on plans/r17, r18
+  tools/plandiff.py --oracles <a.json> <b.json>   compare two oracle dumps
+  tools/plandiff.py --selftest                    check itself on plans/r17,
+                                                  r18 and on oracle cases
 """
 import difflib
+import json
 import os
 import re
 import sys
@@ -176,6 +186,60 @@ def compare(dir_a, dir_b, suffixes=(None, None), out=print):
     return counts, bool(n_diff or only_a or only_b)
 
 
+LINE_BREAK_RUN = re.compile(r"\s*\n\s*")
+
+
+def oracle_text(sql):
+    """An oracle's SQL with every whitespace run holding a line break made
+    one space; whitespace within a line is kept."""
+    return LINE_BREAK_RUN.sub(" ", sql)
+
+
+def compare_oracles(a, b, out=print):
+    """Prints each differing key (with the first point of difference) and
+    each one-sided key; returns (differing count, any difference)."""
+    n_diff = 0
+    for k in sorted(a.keys() & b.keys()):
+        x, y = oracle_text(a[k]), oracle_text(b[k])
+        if x != y:
+            n_diff += 1
+            i = next((i for i, (p, q) in enumerate(zip(x, y)) if p != q),
+                     min(len(x), len(y)))
+            out(f"DIFF {k} at char {i}:")
+            out(f"  - {x[max(0, i - 40):i + 40]!r}")
+            out(f"  + {y[max(0, i - 40):i + 40]!r}")
+    only_a, only_b = sorted(a.keys() - b.keys()), sorted(b.keys() - a.keys())
+    for k in only_a:
+        out(f"ONLY A: {k}")
+    for k in only_b:
+        out(f"ONLY B: {k}")
+    out(f"plandiff --oracles: {n_diff} of {len(a.keys() & b.keys())} paired "
+        f"oracles differ, {len(only_a)} only in A, {len(only_b)} only in B")
+    return n_diff, bool(n_diff or only_a or only_b)
+
+
+def oracle_selftest():
+    """A re-indented, re-wrapped fragment is no difference; a `null`
+    splice, a changed one-line literal and a one-sided key are."""
+    base = {"q": "WITH c AS (\n    SELECT ' ' AS s, 1 AS k)\n"
+                 "  SELECT * FROM c ORDER BY k"}
+    cases = [
+        ("re-indented", {"q": "WITH c AS (\n SELECT ' ' AS s,\n"
+                              "        1 AS k)\nSELECT * FROM c ORDER BY k"},
+         (0, False)),
+        ("null splice", {"q": "WITH null,\n    SELECT ' ' AS s, 1 AS k)\n"
+                              "  SELECT * FROM c ORDER BY k"}, (1, True)),
+        ("literal", {"q": base["q"].replace("' '", "'  '")}, (1, True)),
+        ("one-sided", dict(base, q2="SELECT 1"), (0, True)),
+    ]
+    ok = True
+    for name, other, want in cases:
+        got = compare_oracles(base, other, out=lambda _: None)
+        print(f"selftest oracles {name}: {got}")
+        ok = ok and got == want
+    return ok
+
+
 def selftest():
     """The committed round-18 before/after pairs: two plans the round left
     unchanged (modulo ids) and two it changed, with known diff sizes. And
@@ -194,12 +258,17 @@ def selftest():
         got = {q: counts.get(q) for q in cases}
         print(f"selftest {rnd}: {got}")
         ok = ok and got == cases
+    ok = oracle_selftest() and ok
     return 0 if ok else 1
 
 
 def main(argv):
     if argv == ["--selftest"]:
         return selftest()
+    if argv[:1] == ["--oracles"] and len(argv) == 3:
+        with open(argv[1]) as fa, open(argv[2]) as fb:
+            _, differs = compare_oracles(json.load(fa), json.load(fb))
+        return 1 if differs else 0
     suffixes = (None, None)
     if "--suffix" in argv:
         i = argv.index("--suffix")
