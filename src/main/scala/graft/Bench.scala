@@ -6,7 +6,7 @@ object Bench {
     // Warm the JVM/codegen/parquet-reader paths once so the first measured
     // query doesn't absorb ~4s of one-time startup cost. Best-effort: a
     // broken sf dir should still fall through to the per-query try/catch.
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
+    try Read.parquet(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => () }
     // Min-of-2 by default: single-shot timings on a shared host swing 2-4x

@@ -52,7 +52,7 @@ object Tables {
     // Kept for TIMESTAMP(NANOS)-era data, where the only readable form is a
     // raw nanos-long; a no-op for µs-typed data (normalizeTs handles those).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = Read.parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeTs(raw) else raw
   }
 
@@ -111,7 +111,7 @@ object Tables {
       files.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         .map { f =>
           val name = f.getName.stripSuffix(".parquet")
-          val raw = spark.read.parquet(f.getPath)
+          val raw = Read.parquet(spark, f.getPath)
           name -> (if (name == "events") normalizeTs(raw) else raw)
         }
         .toSeq: _*)

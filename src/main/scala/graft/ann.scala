@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.VectorOps
 import graft.operators.{Ivf, Pq}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -307,22 +307,31 @@ object Ann {
       planes: Seq[Seq[Double]]): org.apache.spark.sql.Column =
     array(planes.map(p => VectorOps.dot(vec, typedlit(p))): _*)
 
-  /** Persist the seeded plane basis (axis-major — the [[RotationFile]]
-    * convention with double weights): pdim × dim rows, metadata scale. */
-  private def writeProjection(spark: SparkSession, dir: String,
-      planes: Seq[Seq[Double]]): Unit = {
+  /** The seeded plane basis as its artifact frame (axis-major — the
+    * [[RotationFile]] convention with double weights): pdim × dim rows,
+    * metadata scale. */
+  private def projectionFrame(spark: SparkSession,
+      planes: Seq[Seq[Double]]): DataFrame = {
     import spark.implicits._
     planes.zipWithIndex.flatMap { case (p, a) =>
       p.zipWithIndex.map { case (v, i) => (a, i, v) }
     }.toDF("axis", "pos", "u")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$ProjectionFile")
+  }
+
+  /** A metadata-scale artifact's rows in the order of its integral `keys`:
+    * collected, then sorted on the driver — one job where a Spark sort
+    * costs a sampling job, a map stage and a result job. */
+  private def collectSorted(df: DataFrame, keys: String*): Array[Row] = {
+    import scala.math.Ordering.Implicits._
+    val at = keys.map(df.schema.fieldIndex)
+    df.collect().sortBy(r => at.map(r.getAs[Number](_).longValue))
   }
 
   /** Read the persisted planes in axis-major order; pdim × dim rows. */
   private def readProjection(spark: SparkSession, dir: String,
       pdim: Int, dim: Int): Seq[Seq[Double]] = {
-    val rows = spark.read.parquet(s"$dir/$ProjectionFile")
-      .orderBy("axis", "pos").collect()
+    val rows = collectSorted(Read.parquet(spark, s"$dir/$ProjectionFile"),
+      "axis", "pos")
     require(rows.length == pdim * dim,
       s"$dir/$ProjectionFile has ${rows.length} rows, expected " +
         s"$pdim x $dim")
@@ -351,15 +360,14 @@ object Ann {
     case r => df.withColumn(embCol, toIndexSpace(col(embCol), dim, r))
   }
 
-  /** Persist the learned axes as (axis, pos, u) rows — `axis` orders the
-    * composition for rank ≥ 2 rotations. */
-  private def writeRotation(spark: SparkSession, dir: String,
-      us: Seq[Array[Long]]): Unit = {
+  /** The learned axes as their artifact frame of (axis, pos, u) rows —
+    * `axis` orders the composition for rank ≥ 2 rotations. */
+  private def rotationFrame(spark: SparkSession,
+      us: Seq[Array[Long]]): DataFrame = {
     import spark.implicits._
     us.zipWithIndex.flatMap { case (u, a) =>
       u.zipWithIndex.map { case (v, i) => (a, i, v) }
     }.toDF("axis", "pos", "u")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$RotationFile")
   }
 
   /** Read the persisted axes in application order. Pre-rank-2 artifacts
@@ -369,10 +377,10 @@ object Ann {
       rot: Int): Seq[Array[Long]] =
     if (rot != 2 && rot != 3) Nil
     else {
-      val df = spark.read.parquet(s"$dir/$RotationFile")
+      val df = Read.parquet(spark, s"$dir/$RotationFile")
       if (!df.columns.contains("axis"))
-        Seq(df.orderBy("pos").collect().map(_.getAs[Long]("u")))
-      else df.orderBy("axis", "pos").collect()
+        Seq(collectSorted(df, "pos").map(_.getAs[Long]("u")))
+      else collectSorted(df, "axis", "pos")
         .groupBy(_.getAs[Int]("axis")).toSeq.sortBy(_._1)
         .map(_._2.map(_.getAs[Long]("u")).toArray)
     }
@@ -546,7 +554,7 @@ object Ann {
         (!sq8 && !bq && !trained && projDim == 0 && !residual),
       "--flat stores the vectors themselves (no quantizer): it is " +
         "mutually exclusive with every quantizer flag")
-    val plain = spark.read.parquet(dataPath)
+    val plain = Read.parquet(spark, dataPath)
       .select(col(idCol), VectorOps.asDouble(col(vecCol)).as("emb"))
       .filter(col("emb").isNotNull && size(col("emb")) > 0)
       .withColumn("emb", requireDim(col("emb"), dim, "Ann --build"))
@@ -562,9 +570,11 @@ object Ann {
       // energy balance, residual PQ via the residual frame's balance,
       // trained codebooks adapt to whatever balance the rotation leaves
       // — the best mode can differ between all of them)
-      val (best, recalls) = probeRotation(plain, idCol, dim, k, m, codes,
-        sampleN = probeSampleN, sq8 = sq8, trained = trained, bq = bq,
-        trainedIters = iters, residual = residual)
+      val (best, recalls) = Jobs.named(spark, "Ann.build probe") {
+        probeRotation(plain, idCol, dim, k, m, codes,
+          sampleN = probeSampleN, sq8 = sq8, trained = trained, bq = bq,
+          trainedIters = iters, residual = residual)
+      }
       val measured = recalls
         .map { case (r, v) => s""""${RotNames(r)}":$v""" }.mkString(",")
       val qName = if (sq8) "sq8" else if (bq) "bq"
@@ -580,7 +590,9 @@ object Ann {
       (if (rotatePca2) 3 else if (rotatePca) 2 else if (rotate) 1 else 0,
         None)
     }
-    val us: Seq[Array[Long]] = rot match {
+    // every quantizer-training job below is named as one step
+    def train[T](body: => T): T = Jobs.named(spark, "Ann.build train")(body)
+    val us: Seq[Array[Long]] = train { rot match {
       case 2 => Seq(graft.operators.Opq.householderFromPca(
         graft.operators.Pca.topDirection(plain, "emb", dim)))
       case 3 =>
@@ -588,11 +600,12 @@ object Ann {
         val u1 = graft.operators.Opq.householderFromPca(d1)
         Seq(u1, graft.operators.Opq.householder2FromPca(d2, u1))
       case _ => Nil
-    }
-    // rotation is persisted LATE (staged + promoted before writeMeta):
-    // the build itself consumes the in-memory `us` axes, and writing the
-    // final file here would let a midway-failing rot=2 rebuild overwrite
-    // the 2-axis rotation a still-current rot=3 meta points at
+    } }
+    // rotation is persisted LATE (staged with the other artifacts and
+    // promoted before writeMeta): the build itself consumes the in-memory
+    // `us` axes, and writing the final file here would let a
+    // midway-failing rot=2 rebuild overwrite the 2-axis rotation a
+    // still-current rot=3 meta points at
     // rotated builds persist the frame: Ivf.train and the encode below
     // both scan it, and without the persist the corpus-scale rotation
     // re-runs per consumer (the q_opq_pca_recall r12 finding)
@@ -616,9 +629,10 @@ object Ann {
     // k-independent, the form a 10⁹-vector / k ~ 10⁴ IVF needs.
     val kjoin = k > largeKFrom
     val centFrame: Option[DataFrame] =
-      if (kjoin) Some(Ivf.trainJoin(emb, idCol, "emb", k, iters)) else None
+      if (kjoin) Some(train(Ivf.trainJoin(emb, idCol, "emb", k, iters)))
+      else None
     val centroids: Seq[Seq[Double]] = if (kjoin) Nil
-      else Ivf.train(emb, idCol, "emb", k, iters)
+      else train(Ivf.train(emb, idCol, "emb", k, iters))
     // the ONE assignment every quantizer path below encodes beside:
     // (idCol, emb, cell)
     val assigned = centFrame match {
@@ -639,6 +653,7 @@ object Ann {
     // the broadcast k-row frame above it; persisted because the fixed
     // codebook filter and the encode join both scan it
     var resFrame: Option[DataFrame] = None
+    var scalesOpt: Option[DataFrame] = None
     val (codesDf, cbOpt) = if (flat) {
       // qt=5 (IndexIVFFlat): the stored "code" IS the vector, beside
       // its cell — no quantizer state at all; serving probes cells and
@@ -668,8 +683,8 @@ object Ann {
       // IndexIVFPQ default); serving and append are unchanged — they
       // read whatever codebook.parquet holds.
       if (trained) {
-        val books = Pq.trainCodebooks(ar, idCol, "__res", m, codes, dim,
-          iters)
+        val books = train(Pq.trainCodebooks(ar, idCol, "__res", m, codes,
+          dim, iters))
         val cbDf = books.zipWithIndex.flatMap { case (cbJ, j) =>
           cbJ.zipWithIndex.map { case (w, c) =>
             (j, c, w, w.foldLeft(0.0)((s, x) => s + x * x))
@@ -696,10 +711,9 @@ object Ann {
       // SQ8 artifact: per-dim scales (dim rows) + one code ARRAY per
       // vector beside its cell — no codebook file; meta qt = 1 routes
       // search/append to the Sq serving path
-      val (mnA, dA) = graft.operators.Sq.trainScales(emb, "emb", dim)
-      (0 until dim).map(i => (i, mnA(i), dA(i))).toDF("pos", "mn", "d")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$stageDir/scales.parquet")
+      val (mnA, dA) = train(graft.operators.Sq.trainScales(emb, "emb", dim))
+      scalesOpt = Some((0 until dim).map(i => (i, mnA(i), dA(i)))
+        .toDF("pos", "mn", "d"))
       (assigned.select(col(idCol), col("cell"),
         graft.operators.Sq.codes(col("emb"), mnA, dA).as("scode")), None)
     } else if (bq) {
@@ -720,8 +734,8 @@ object Ann {
         (cd.select(col(idCol), col("__cell").as("cell"),
           col("j").cast("long").as("j"), col("code")), Some(cbDf))
       } else {
-        val books = Pq.trainCodebooks(emb, idCol, "emb", m, codes, dim,
-          iters)
+        val books = train(Pq.trainCodebooks(emb, idCol, "emb", m, codes,
+          dim, iters))
         // driver-side |cw|² uses the same left-to-right sum the codegen'd
         // dot expression computes, so serve-time ADC sees exact values
         val cbDf = books.zipWithIndex.flatMap { case (cbJ, j) =>
@@ -737,20 +751,40 @@ object Ann {
           .select(col(idCol), col("cell"), col("j"), col("code"))
         (cd, Some(cbDf))
       }
-    (centFrame match {
-      // join-trained centroids never visit the driver — the k-row frame
-      // (localCheckpoint-backed, metadata scale) writes directly
-      case Some(cf) => cf.select(col("cell"), col("vec"))
-      case None => centroids.zipWithIndex.map { case (v, i) => (i, v) }
-        .toDF("cell", "vec")
-    }).coalesce(1).write.mode("overwrite")
-      .parquet(s"$stageDir/centroids.parquet")
-    cbOpt.foreach(_
-      .select(col("j"), col("__c").as("c"), col("__cw").as("cw"),
-        col("__cwn2").as("cwn2"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$stageDir/codebook.parquet"))
-    codesDf.write.mode("overwrite").parquet(s"$stageDir/codes.parquet")
+    // fixed and residual PQ encode one row per (id, j) (`Pq.encodeSubs`
+    // groups by both), so their j = 0 rows are exactly the distinct ids:
+    // counted on the codes write itself. Observed metrics reject
+    // DISTINCT, so the layouts writing one row per input row (flat, SQ8,
+    // BQ, JL, trained) count the written codes back after the promote.
+    val idsOnWrite =
+      if (!trained && !flat && !sq8 && !bq && projDim == 0) Some(Observation())
+      else None
+    // the small artifacts are single files; codes keeps its width
+    val small: Seq[(String, DataFrame)] =
+      Seq("centroids.parquet" -> (centFrame match {
+        // join-trained centroids never visit the driver — the k-row frame
+        // (localCheckpoint-backed, metadata scale) writes directly
+        case Some(cf) => cf.select(col("cell"), col("vec"))
+        case None => centroids.zipWithIndex.map { case (v, i) => (i, v) }
+          .toDF("cell", "vec")
+      })) ++
+      cbOpt.map(cb => "codebook.parquet" -> cb.select(col("j"),
+        col("__c").as("c"), col("__cw").as("cw"), col("__cwn2").as("cwn2"))) ++
+      scalesOpt.map("scales.parquet" -> _) ++
+      (if (rot >= 2) Seq(RotationFile -> rotationFrame(spark, us)) else Nil) ++
+      (if (projDim > 0) Seq(ProjectionFile -> projectionFrame(spark, planes))
+       else Nil)
+    val writes = small.map { case (name, df) => name -> df.coalesce(1) } :+
+      ("codes.parquet" -> idsOnWrite.fold(codesDf)(ids =>
+        codesDf.observe(ids, count(when(col("j") === 0, lit(1))).as("n"))))
+    // the staged writes run together, as Engine.apply's per-table writes
+    // do; inParallel returns only once every write has finished, so a
+    // failed write still leaves nothing half-written behind the promote
+    Jobs.inParallel(writes) { case (name, df) =>
+      Jobs.named(spark, s"Ann.build write $name") {
+        df.write.mode("overwrite").parquet(s"$stageDir/$name")
+      }
+    }
     // all consumers of the rotated frame (Ivf.train + all encode paths)
     // have materialized to disk by here — release the corpus-scale cache
     // so repeated programmatic builds in one session don't accumulate
@@ -760,8 +794,6 @@ object Ann {
     // the join-trained centroid frame's checkpoint blocks are done once
     // codes.parquet has materialized (its last consumer)
     centFrame.foreach(org.apache.spark.sql.GraftBridge.freeCheckpoint)
-    if (rot >= 2) writeRotation(spark, stageDir, us)
-    if (projDim > 0) writeProjection(spark, stageDir, planes)
     // ---- promote. All corpus-scale work above landed in the staging
     // dir; what remains is a handful of driver-local renames + the meta
     // flip, so a build failure ANYWHERE above leaves the prior index
@@ -820,8 +852,13 @@ object Ann {
         qt = if (sq8) 1 else if (bq) 2 else if (projDim > 0) 3
           else if (residual) 4 else if (flat) 5 else 0,
         kjoin = kjoin, pdim = projDim))
-    spark.read.parquet(s"$outDir/codes.parquet")
-      .select(col(idCol)).distinct().count()
+    idsOnWrite match {
+      case Some(ids) => ids.get("n").asInstanceOf[Long]
+      case None => Jobs.named(spark, "Ann.build count") {
+        Read.parquet(spark, s"$outDir/codes.parquet")
+          .select(col(idCol)).distinct().count()
+      }
+    }
   }
 
   /** Fold new vectors into an existing index against its FROZEN
@@ -833,7 +870,7 @@ object Ann {
       dataPath: String, vecCol: String): Long = {
     val meta = readMeta(indexDir)
     val fresh0 = toIndexSpaceFrame(
-      spark.read.parquet(dataPath)
+      Read.parquet(spark, dataPath)
         .select(col(meta.idCol), VectorOps.asDouble(col(vecCol)).as("__e"))
         .filter(col("__e").isNotNull && size(col("__e")) > 0)
         .withColumn("__e",
@@ -852,12 +889,11 @@ object Ann {
     // broadcast centroid frame, never a k×dim-literal plan
     val fresh = if (meta.kjoin)
       Ivf.assignJoin(fresh0, meta.idCol, "__e",
-          spark.read.parquet(s"$indexDir/centroids.parquet"))
+          Read.parquet(spark, s"$indexDir/centroids.parquet"))
         .withColumnRenamed("ivf_cell", "cell")
     else fresh0.withColumn("cell", Ivf.nearestCentroid(col("__e"),
-      spark.read.parquet(s"$indexDir/centroids.parquet")
-        .orderBy("cell").collect()
-        .map(_.getSeq[Double](1).toSeq).toSeq))
+      collectSorted(Read.parquet(spark, s"$indexDir/centroids.parquet"),
+        "cell").map(_.getSeq[Double](1).toSeq).toSeq))
     val codes = (if (meta.qt == 1) {
       // SQ8 index: encode against the FROZEN persisted scales — exact
       // for any new vector inside the trained per-dim ranges; codes for
@@ -887,17 +923,17 @@ object Ann {
       // residual index: encode __e − c(cell) against the FROZEN
       // persisted codebook (the same frozen-quantizer contract as PQ;
       // the centroid value arrives via the kjoin-or-literal dual path)
-      val cb = spark.read.parquet(s"$indexDir/codebook.parquet")
+      val cb = Read.parquet(spark, s"$indexDir/codebook.parquet")
         .select(col("j"), col("c").as("__c"), col("cw").as("__cw"),
           col("cwn2").as("__cwn2"))
       val withCv = if (meta.kjoin)
         fresh.join(broadcast(
-          spark.read.parquet(s"$indexDir/centroids.parquet")
+          Read.parquet(spark, s"$indexDir/centroids.parquet")
             .select(col("cell"), col("vec").as("__cv"))), Seq("cell"))
       else fresh.withColumn("__cv", element_at(
-        typedlit(spark.read.parquet(s"$indexDir/centroids.parquet")
-          .orderBy("cell").collect()
-          .map(_.getSeq[Double](1).toArray).toSeq.toArray),
+        typedlit(collectSorted(
+            Read.parquet(spark, s"$indexDir/centroids.parquet"), "cell")
+          .map(_.getSeq[Double](1).toArray)),
         col("cell") + 1))
       graft.operators.Pq.encodeAgainstAssigned(
           withCv.withColumn("__res",
@@ -906,7 +942,7 @@ object Ann {
         .select(col(meta.idCol), col("__cell").as("cell"),
           col("j").cast("long").as("j"), col("code"))
     } else {
-      val cbRows = spark.read.parquet(s"$indexDir/codebook.parquet")
+      val cbRows = Read.parquet(spark, s"$indexDir/codebook.parquet")
         .select(col("j"), col("c"), col("cw")).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
       val books: Seq[Seq[Seq[Double]]] = (0 until meta.m).map(j =>
@@ -923,8 +959,8 @@ object Ann {
   /** Read the persisted per-dim SQ8 scales in position order. */
   private def readScales(spark: SparkSession, dir: String,
       dim: Int): (Array[Long], Array[Long]) = {
-    val rows = spark.read.parquet(s"$dir/scales.parquet")
-      .orderBy("pos").collect()
+    val rows = collectSorted(Read.parquet(spark, s"$dir/scales.parquet"),
+      "pos")
     require(rows.length == dim,
       s"$dir/scales.parquet has ${rows.length} rows, expected $dim")
     (rows.map(_.getAs[Long]("mn")), rows.map(_.getAs[Long]("d")))
@@ -948,7 +984,7 @@ object Ann {
       selfFilter: Boolean): DataFrame = {
     import graft.operators.Sq
     val (mnA, dA) = readScales(spark, indexDir, meta.dim)
-    val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+    val codes = Read.parquet(spark, s"$indexDir/codes.parquet")
       .select(col(meta.idCol), col("cell").as("__cell"),
         Sq.reconstruct(col("scode"), mnA, dA).as("__r"))
     val probes = probeCells(qs, "q_emb", centroids, centFrame, nprobe)
@@ -1029,7 +1065,7 @@ object Ann {
       meta: Meta, qs: DataFrame, qVec: String, storedCol: String,
       centroids: Seq[Seq[Double]], centFrame: Option[DataFrame],
       nprobe: Int, topK: Int, selfFilter: Boolean): DataFrame = {
-    val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+    val codes = Read.parquet(spark, s"$indexDir/codes.parquet")
       .select(col(meta.idCol), col("cell").as("__cell"), col(storedCol))
     val probes = probeCells(qs, qVec, centroids, centFrame, nprobe)
       .select(col("q_id"), col("__cell"), col(qVec))
@@ -1063,7 +1099,7 @@ object Ann {
       centFrame: Option[DataFrame], nprobe: Int, topK: Int,
       selfFilter: Boolean, asym: Boolean = false): DataFrame = {
     import graft.operators.Bq
-    val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+    val codes = Read.parquet(spark, s"$indexDir/codes.parquet")
       .select(col(meta.idCol), col("cell").as("__cell"), col("bcode"))
     // only the representation the chosen mode scores with is computed
     // and broadcast (packed words for Hamming, micro-ints for asym)
@@ -1104,14 +1140,16 @@ object Ann {
     // kjoin indexes never materialize the k×dim literal at serve time
     // either: the centroid FRAME flows into the broadcast probe ranking
     // ([[probeCells]]); small-k indexes keep the codegen'd literal list
-    val centDf = spark.read.parquet(s"$indexDir/centroids.parquet")
+    val centDf = Read.parquet(spark, s"$indexDir/centroids.parquet")
     val centFrame = if (meta.kjoin) Some(centDf) else None
-    val centroids: Seq[Seq[Double]] = if (meta.kjoin) Nil
-      else centDf.orderBy("cell").collect()
-        .map(_.getSeq[Double](1).toSeq).toSeq
-    val rotU = readRotation(spark, indexDir, meta.rot)
+    val (centroids, rotU) = Jobs.named(spark, "Ann.search centroids") {
+      val cs: Seq[Seq[Double]] = if (meta.kjoin) Nil
+        else collectSorted(centDf, "cell")
+          .map(_.getSeq[Double](1).toSeq).toSeq
+      (cs, readRotation(spark, indexDir, meta.rot))
+    }
     val qs = toIndexSpaceFrame(
-      spark.read.parquet(queriesPath)
+      Read.parquet(spark, queriesPath)
         .select(col(qIdCol).as("q_id"),
           VectorOps.asDouble(col(qVecCol)).as("q_emb"))
         .filter(col("q_emb").isNotNull && size(col("q_emb")) > 0)
@@ -1121,28 +1159,30 @@ object Ann {
     val adcK = refine.map(_._1).getOrElse(topK)
     require(adcK >= topK,
       s"--refine candidate depth $adcK must be >= --topk $topK")
-    val adc = if (meta.qt == 1) sq8Serve(spark, indexDir, meta, qs,
-      centroids, centFrame, nprobe, adcK, selfFilter)
-    else if (meta.qt == 2) bqServe(spark, indexDir, meta, qs,
-      centroids, centFrame, nprobe, adcK, selfFilter, asym = asym)
-    else if (meta.qt == 3) jlServe(spark, indexDir, meta, qs,
-      centroids, centFrame, nprobe, adcK, selfFilter)
-    else if (meta.qt == 5) flatServe(spark, indexDir, meta, qs,
-      centroids, centFrame, nprobe, adcK, selfFilter)
-    else {
-      val cb = spark.read.parquet(s"$indexDir/codebook.parquet")
-        .select(col("j"), col("c").as("__c"), col("cw").as("__cw"),
-          col("cwn2").as("__cwn2"))
-      val codes = spark.read.parquet(s"$indexDir/codes.parquet")
-        .select(col(meta.idCol), col("cell").as("__cell"), col("j"),
-          col("code"))
-      if (meta.qt == 4)
-        Pq.searchIndexResidual(codes, cb, qs, centroids, nprobe, adcK,
+    val adc = Jobs.named(spark, "Ann.search adc") {
+      if (meta.qt == 1) sq8Serve(spark, indexDir, meta, qs,
+        centroids, centFrame, nprobe, adcK, selfFilter)
+      else if (meta.qt == 2) bqServe(spark, indexDir, meta, qs,
+        centroids, centFrame, nprobe, adcK, selfFilter, asym = asym)
+      else if (meta.qt == 3) jlServe(spark, indexDir, meta, qs,
+        centroids, centFrame, nprobe, adcK, selfFilter)
+      else if (meta.qt == 5) flatServe(spark, indexDir, meta, qs,
+        centroids, centFrame, nprobe, adcK, selfFilter)
+      else {
+        val cb = Read.parquet(spark, s"$indexDir/codebook.parquet")
+          .select(col("j"), col("c").as("__c"), col("cw").as("__cw"),
+            col("cwn2").as("__cwn2"))
+        val codes = Read.parquet(spark, s"$indexDir/codes.parquet")
+          .select(col(meta.idCol), col("cell").as("__cell"), col("j"),
+            col("code"))
+        if (meta.qt == 4)
+          Pq.searchIndexResidual(codes, cb, qs, centroids, nprobe, adcK,
+            meta.m, meta.dim, meta.idCol, selfFilter = selfFilter,
+            centFrame = centFrame)
+        else Pq.searchIndex(codes, cb, qs, centroids, nprobe, adcK,
           meta.m, meta.dim, meta.idCol, selfFilter = selfFilter,
           centFrame = centFrame)
-      else Pq.searchIndex(codes, cb, qs, centroids, nprobe, adcK,
-        meta.m, meta.dim, meta.idCol, selfFilter = selfFilter,
-        centFrame = centFrame)
+      }
     }
     val out = refine match {
       case None => adc
@@ -1156,7 +1196,7 @@ object Ann {
         // exact-cosine refine (DotProduct folds over min length) or
         // fail obscurely mid-rotation on a rotated index
         val raw = toIndexSpaceFrame(
-          spark.read.parquet(rawPath)
+          Read.parquet(spark, rawPath)
             .select(col(meta.idCol),
               VectorOps.asDouble(col(qVecCol)).as("__remb"))
             .filter(col("__remb").isNotNull && size(col("__remb")) > 0)
@@ -1171,8 +1211,9 @@ object Ann {
           .select(col("q_id"), col(meta.idCol), col("rn"), col("adist"),
             round(col("cos"), 6).as("cosine"))
     }
-    outDir.foreach(d =>
-      out.write.mode("overwrite").parquet(s"$d/ann_results.parquet"))
+    outDir.foreach(d => Jobs.named(spark, "Ann.search write") {
+      out.write.mode("overwrite").parquet(s"$d/ann_results.parquet")
+    })
     out
   }
 

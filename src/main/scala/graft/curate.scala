@@ -638,13 +638,13 @@ object Curate {
     * stream-legal (the registry's semanticGate twin). */
   private def decontStage(docs: DataFrame, c: CurateConfig): DataFrame = {
     val spark = docs.sparkSession
-    val bench = spark.read.parquet(c.decontBenchPath)
+    val bench = Read.parquet(spark, c.decontBenchPath)
     val hits = Curation.contaminatedBloom(docs, bench, "doc_id", "text",
       c.decontNgram)
     val exactClean = docs.join(hits, Seq("doc_id"), "left_anti")
     if (c.decontEmbPath.isEmpty || c.decontSemanticBar <= 0.0) exactClean
     else {
-      val embT = spark.read.parquet(c.decontEmbPath)
+      val embT = Read.parquet(spark, c.decontEmbPath)
         .select(col("vec_id"),
           graft.functions.VectorOps.asDouble(col("embedding")).as("__emb"))
       val trainEmb = exactClean.select(col("doc_id"))
@@ -917,8 +917,8 @@ object Curate {
       // names the gate that let duplicates straddle the split.
       case "--audit" =>
         val threshold = opt("--jaccard").map(_.toDouble).getOrElse(0.5)
-        val train = spark.read.parquet(s"$dataDir/train")
-        val valDf = spark.read.parquet(s"$dataDir/val")
+        val train = Read.parquet(spark, s"$dataDir/train")
+        val valDf = Read.parquet(spark, s"$dataDir/val")
         val leaks = Dedup.nearDuplicatesDeltaPortable(train, valDf,
           "doc_id", "text", threshold = threshold)
           .select(col("delta_id")).distinct().count()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{col, count, lit, when}
 
 import graft.operators.Scale
 
@@ -14,8 +14,8 @@ import graft.operators.Scale
  *  - one `select` per table fuses every column transform into a single
  *    whole-stage-codegen pass (the reference's one-UPDATE-per-table fusion,
  *    `query-builder.ts:14-61`);
- *  - nothing is collected to the driver; dry-run is a distributed `count()`,
- *    apply observes its counts on the write, validation is one job;
+ *  - nothing is collected to the driver; dry-run and apply observe their
+ *    counts on one pass over the data, validation is one job;
  *  - a table whose plan leaves every column untouched is skipped entirely and
  *    reported with count 0 (`executor.ts:120-124`) — at 100 TB that skip is
  *    the difference between a metadata no-op and a full rewrite.
@@ -96,16 +96,36 @@ object Engine {
    * rowCount per UPDATE inside a rolled-back transaction,
    * `executor.ts:100-137`). The count equals full table cardinality because
    * the reference's UPDATEs carry no WHERE; no-op tables are skipped and
-   * reported as 0 (`executor.ts:120-124`).
+   * reported as 0 (`executor.ts:120-124`). Every table is compiled first
+   * (a compile error surfaces before any job), then one shuffle-free job
+   * counts them all: the union of the tables, each tagged by its plan
+   * index, runs into the `noop` sink with one observed count per tag —
+   * where a `count()` per table costs an aggregate's map stage and result
+   * job each.
    */
-  def dryRun(plan: Plan, catalog: Map[String, DataFrame]): Map[String, Long] =
-    Jobs.inParallel(plan.tables) { pt =>
+  def dryRun(plan: Plan, catalog: Map[String, DataFrame]): Map[String, Long] = {
+    val tagged = plan.tables.zipWithIndex.flatMap { case (pt, i) =>
       val df = dfFor(catalog, pt)
-      if (isNoop(df, pt.columns)) pt.table -> 0L
-      else Jobs.named(df.sparkSession, s"Engine.dryRun ${pt.table}") {
-        pt.table -> df.select(compileTable(df, pt.columns): _*).count()
+      if (isNoop(df, pt.columns)) None
+      else Some(i -> df.select(compileTable(df, pt.columns): _*)
+        .select(lit(i).as("t")))
+    }
+    val counts: Map[Int, Long] = if (tagged.isEmpty) Map.empty else {
+      val spark = tagged.head._2.sparkSession
+      val rows = Observation()
+      val perTable = tagged.map { case (i, _) =>
+        count(when(col("t") === i, lit(1))).as(s"n$i") }
+      Jobs.named(spark, "Engine.dryRun") {
+        tagged.map(_._2).reduce(_ union _)
+          .observe(rows, perTable.head, perTable.tail: _*)
+          .write.format("noop").mode("overwrite").save()
       }
-    }.toMap
+      tagged.map { case (i, _) =>
+        i -> rows.get(s"n$i").asInstanceOf[Long] }.toMap
+    }
+    plan.tables.zipWithIndex.map { case (pt, i) =>
+      pt.table -> counts.getOrElse(i, 0L) }.toMap
+  }
 
   /**
    * Apply: write each transformed table as parquet under `outDir/<name>`.
@@ -181,9 +201,9 @@ object Engine {
    * output, each tagged `(table, side)`, are row-hashed in one union and
    * reduced by one grouped sum (the checksum is additively mergeable), so
    * nothing but two digests per table reach the driver — validating a
-   * 100 TB apply costs bandwidth, not memory. The outputs are read with
-   * schema inference (their footer jobs run concurrently): a dropped
-   * untouched column must fail to resolve, not read back as nulls.
+   * 100 TB apply costs bandwidth, not memory. Each output is read with its
+   * own footer's schema ([[Read.parquet]], no job): a dropped untouched
+   * column must fail to resolve, not read back as nulls.
    */
   def validateApply(plan: Plan, catalog: Map[String, DataFrame],
       outDir: String): Map[String, String] = {
@@ -191,11 +211,8 @@ object Engine {
       .filter { case (pt, src) => !isNoop(src, pt.columns) }
     if (tables.isEmpty) return Map.empty
     val spark = tables.head._2.sparkSession
-    val outs = Jobs.inParallel(tables) { case (pt, _) =>
-      Jobs.named(spark, s"Engine.validateApply ${pt.table}") {
-        spark.read.parquet(outPath(outDir, pt))
-      }
-    }
+    val outs = tables.map { case (pt, _) =>
+      Read.parquet(spark, outPath(outDir, pt)) }
     val untouched = tables.map { case (pt, src) => untouchedColumns(src, pt.columns) }
     val hashed = tables.zip(outs).zip(untouched).flatMap { case (((pt, src), out), cols) =>
       Seq("source" -> src, "output" -> out).map { case (side, df) =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Read
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -73,7 +74,7 @@ object Layout {
     require(inQ != outQ, "compact cannot overwrite its input in place")
     val totalBytes = inFs.getContentSummary(inQ).getLength
     val files = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inPath).repartition(files)
+    Read.parquet(spark, inPath).repartition(files)
       .write.mode("overwrite").parquet(outPath)
     // report what actually landed (empty partitions write no file)
     outFs.listStatus(outQ)

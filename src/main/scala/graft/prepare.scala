@@ -61,7 +61,7 @@ object Prepare {
       dim: Int = 64, orderK: Int = 16): Report = {
     require(Set("id", "semantic")(order),
       s"--order must be id | semantic, got $order")
-    val docs = spark.read.parquet(s"$dataDir/documents.parquet")
+    val docs = Read.parquet(spark, s"$dataDir/documents.parquet")
     val nDocs = docs.count()
     val gated = docs.filter(col("text").isNotNull &&
       size(split(col("text"), "\\s+")) >= minTokens)
@@ -96,7 +96,7 @@ object Prepare {
         // semantic layout: positions from the embedding-space sweep,
         // persisted — max(pos) and the packing join both consume it
         val sord = Curation.semanticOrder(
-            spark.read.parquet(s"$dataDir/embeddings.parquet")
+            Read.parquet(spark, s"$dataDir/embeddings.parquet")
               .select(col("vec_id"),
                 graft.functions.VectorOps.asDouble(col("embedding"))
                   .as("emb")),
@@ -121,7 +121,7 @@ object Prepare {
           Seq(sord))
       }
     packed.write.mode("overwrite").parquet(s"$outDir/assignments.parquet")
-    val asg = spark.read.parquet(s"$outDir/assignments.parquet")
+    val asg = Read.parquet(spark, s"$outDir/assignments.parquet")
     val nPacked = asg.count()
     val nOversize = counts.filter(col("n_tokens") > capacity).count()
     val seqs = asg.groupBy("shard", "bucket", "seq_id")
@@ -137,7 +137,7 @@ object Prepare {
       .select("pos", "shard", "bucket", "seq_id", "n_docs",
         "used_tokens", "padding")
     ordered.write.mode("overwrite").parquet(s"$outDir/sequences.parquet")
-    val sq = spark.read.parquet(s"$outDir/sequences.parquet")
+    val sq = Read.parquet(spark, s"$outDir/sequences.parquet")
     val (nSeq, pad) = {
       val r = sq.agg(count(lit(1)), sum(col("padding"))).collect()(0)
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))

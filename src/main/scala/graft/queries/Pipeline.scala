@@ -80,14 +80,6 @@ object Pipeline {
     * definition, shared with its oracle SQL). */
   private val WinnowDeltaSplit = 400
 
-  /** Shared PCA oracle prelude (dim pinned at 64, the q_embed_pca family):
-    * micro-quantized vectors, exact integer moments, micro-unit covariance,
-    * argmax-diagonal-seeded power iteration, the Rayleigh pieces, ONE
-    * Hotelling deflation with the second power run, and both projections —
-    * Pca re-run relationally so the three queries cannot desync. DuckDB
-    * sums the long products in HUGEINT: exact integer totals are
-    * summation-order independent, so the engine's salted two-level
-    * reduction needs no mirroring. Unreferenced CTEs cost nothing. */
   /** Semantic-ordering CTE chain over PcaSql's `proj`/`n2` (the
     * q_semantic_order replay, ending in `sord` (vec_id, cell, pc1,
     * pos)): fixed-quantizer assignment over the DOUBLE frame (the
@@ -192,6 +184,14 @@ object Pipeline {
            FROM x2 JOIN uub ON uub.i = x2.pos
            JOIN hd2 ON hd2.vec_id = x2.vec_id CROSS JOIN uub2)"""
 
+  /** Shared PCA oracle prelude (dim pinned at 64, the q_embed_pca family):
+    * micro-quantized vectors, exact integer moments, micro-unit covariance,
+    * argmax-diagonal-seeded power iteration, the Rayleigh pieces, ONE
+    * Hotelling deflation with the second power run, and both projections —
+    * Pca re-run relationally so the three queries cannot desync. DuckDB
+    * sums the long products in HUGEINT: exact integer totals are
+    * summation-order independent, so the engine's salted two-level
+    * reduction needs no mirroring. Unreferenced CTEs cost nothing. */
   private def PcaSql(select: String): String =
     s"""WITH e AS MATERIALIZED (SELECT vec_id,
              list_transform(embedding::DOUBLE[],
@@ -332,11 +332,6 @@ object Pipeline {
     }
   }
 
-  /** One rotation mode's exact-integer PQ-error block for the
-    * q_opq_balance2 oracle: over a source table t<tag>(vec_id, j, sp, x)
-    * of eighth-micro integer coordinates, the fixed-first-8-codebook
-    * argmin and per-subspace err totals — Pq.encodeFixedLong's algebra
-    * position-level in SQL (the q_opq_balance recipe, parameterized). */
   /** Shared SQ8 oracle chain (q_sq8_search / q_sq8_recall): the exact
     * replay of operators/Sq.scala — micro-int frame, per-dim scales,
     * half-up integer-division codes, 255-scaled reconstruction, long-dot
@@ -387,6 +382,11 @@ object Pipeline {
              PARTITION BY q_id ORDER BY ham, vec_id) AS BIGINT) AS rn, ham
          FROM bham)"""
 
+  /** One rotation mode's exact-integer PQ-error block for the
+    * q_opq_balance2 oracle: over a source table t<tag>(vec_id, j, sp, x)
+    * of eighth-micro integer coordinates, the fixed-first-8-codebook
+    * argmin and per-subspace err totals — Pq.encodeFixedLong's algebra
+    * position-level in SQL (the q_opq_balance recipe, parameterized). */
   private def pqErrByJCtes(tag: String, mode: String): String =
     s"""n$tag AS (SELECT vec_id, j, CAST(sum(x * x) AS BIGINT) AS n2
          FROM t$tag GROUP BY vec_id, j),
@@ -928,14 +928,6 @@ object Pipeline {
            JOIN sz sc ON sc.doc_id = inter.c_id
            WHERE cast(n_int AS double) / (sq.sz + sc.sz - n_int) >= 0.5)"""
 
-  /**
-   * DuckDB expression for the sign-LSH bucket id: the seeded hyperplane
-   * basis unrolled to double literals (shortest-roundtrip `Double.toString`,
-   * so DuckDB parses back the exact same bits), one CASE term per plane —
-   * the SQL twin of [[Similarity.withLshBucket]]. `list_dot_product` over
-   * DOUBLE[] sums sequentially like our codegen'd loop (proven bit-stable
-   * by q_sim_exact), so the >= 0 sign test agrees exactly.
-   */
   /** The JL projection as a DuckDB list literal expression: one
     * list_dot_product per plane, plane literals rendered with the same
     * Double.toString the engine's typedlit carries (the lshBucketSql
@@ -946,6 +938,14 @@ object Pipeline {
       s"list_dot_product($embExpr::DOUBLE[], $lits::DOUBLE[])"
     }.mkString("list_value(", ", ", ")")
 
+  /**
+   * DuckDB expression for the sign-LSH bucket id: the seeded hyperplane
+   * basis unrolled to double literals (shortest-roundtrip `Double.toString`,
+   * so DuckDB parses back the exact same bits), one CASE term per plane —
+   * the SQL twin of [[Similarity.withLshBucket]]. `list_dot_product` over
+   * DOUBLE[] sums sequentially like our codegen'd loop (proven bit-stable
+   * by q_sim_exact), so the >= 0 sign test agrees exactly.
+   */
   private def lshBucketSql(planes: Seq[Seq[Double]], embExpr: String): String =
     "cast(" + planes.zipWithIndex.map { case (p, i) =>
       val lits = p.map(java.lang.Double.toString).mkString("[", ", ", "]")

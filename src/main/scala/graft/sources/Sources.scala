@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Read
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -29,7 +30,7 @@ object Sources {
     * the harness `events` table. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path)
+    Read.parquet(spark, path)
   }
 
   /**

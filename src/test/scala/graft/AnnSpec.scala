@@ -724,6 +724,63 @@ class AnnSpec extends SparkSpec {
       "the failed plain rebuild must not have deleted the rotation")
     assert(serve() == before,
       "the prior index must serve identically after a failed rebuild")
+    // a failure inside the concurrent artifact writes: the codes write's
+    // jobs are cancelled as they start, while the centroid and codebook
+    // writes run beside them
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val cancelled = new java.util.concurrent.atomic.AtomicInteger()
+    val cancelCodes = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.name == "Ann.build write codes.parquet")) {
+          cancelled.incrementAndGet()
+          sc.cancelJob(e.jobId)
+        }
+    }
+    sc.addSparkListener(cancelCodes)
+    try intercept[Throwable] {
+      Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
+        dim = 64, idCol = "vec_id", vecCol = "embedding")
+    } finally sc.removeSparkListener(cancelCodes)
+    assert(cancelled.get() > 0, "the codes write must have been cancelled")
+    // the sibling write ran to completion before the failure surfaced
+    assert(new java.io.File(s"$idx/.staging/centroids.parquet/_SUCCESS")
+      .exists(), "every concurrent write finishes before the rethrow")
+    assert(new java.io.File(s"$idx/${Ann.RotationFile}").exists(),
+      "a failed artifact write must not promote anything")
+    assert(serve() == before,
+      "the prior index must serve identically after a failed write")
+  }
+
+  test("Ann.build returns the distinct-id count with a duplicated id, for " +
+      "the default PQ, --residual, --trained and --flat layouts, and " +
+      "names its steps") {
+    val src = "/root/testdata/sf0.001/embeddings.parquet"
+    val data = tmp("dupdata") + "/emb.parquet"
+    val raw = spark.read.parquet(src)
+    raw.union(raw.filter(col("vec_id") === 5L)).write.parquet(data)
+    val ids = raw.select("vec_id").distinct().count()
+    assert(spark.read.parquet(data).count() == ids + 1)
+    def build(idx: String, trained: Boolean = false,
+        residual: Boolean = false, flat: Boolean = false) =
+      jobsOf(Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
+        codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
+        trained = trained, residual = residual, flat = flat))
+    for ((layout, (n, sites)) <- Seq(
+        "pq" -> build(tmp("dup_pq")),
+        "residual" -> build(tmp("dup_res"), residual = true),
+        "trained" -> build(tmp("dup_tr"), trained = true),
+        "flat" -> build(tmp("dup_flat"), flat = true))) {
+      assert(n == ids, s"$layout: built $n, want $ids distinct ids")
+      assert(sites.contains("Ann.build train") &&
+        sites.contains("Ann.build write codes.parquet") &&
+        sites.contains("Ann.build write centroids.parquet"),
+        s"$layout: $sites")
+      // fixed and residual PQ count the ids on the codes write itself
+      val readBack = layout == "trained" || layout == "flat"
+      assert(sites.contains("Ann.build count") == readBack,
+        s"$layout: $sites")
+    }
   }
 
   test("a real large-k build (k = 512 at sf0.1) auto-routes to the join " +

@@ -64,6 +64,24 @@ class EngineSpec extends SparkSpec {
       .keySet == Set("public.c"))
   }
 
+  test("dryRun counts every table in one Spark job; an empty and a no-op " +
+      "table count 0") {
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      customers.schema)
+    val plan = Plan("t", Seq(
+      PlannedTable("public.c", "public", "c",
+        Seq(PlannedColumn("name", Strategy.Redact))),
+      PlannedTable("public.e", "public", "e",
+        Seq(PlannedColumn("name", Strategy.HashSha256))),
+      PlannedTable("public.noop", "public", "noop",
+        Seq(PlannedColumn("name", Strategy.Keep)))))
+    val catalog = Map("c" -> customers, "e" -> empty, "noop" -> customers)
+    val (counts, jobs) = jobsOf(Engine.dryRun(plan, catalog))
+    assert(counts ==
+      Map("public.c" -> 2L, "public.e" -> 0L, "public.noop" -> 0L))
+    assert(jobs == Seq("Engine.dryRun"), jobs)
+  }
+
   test("a planned table absent from the catalog throws (no silent drop)") {
     val plan = Plan("t", Seq(PlannedTable("public.ghost", "public", "ghost",
       Seq(PlannedColumn("name", Strategy.Redact)))))
@@ -199,6 +217,7 @@ class EngineSpec extends SparkSpec {
     customers.limit(0).write.mode("overwrite").parquet(s"$out/src_empty")
     for (empty <- Seq(local, spark.read.parquet(s"$out/src_empty"))) {
       val catalog = Map("c" -> empty)
+      assert(Engine.dryRun(plan, catalog) == Map("public.c" -> 0L))
       assert(Engine.apply(plan, catalog, out) == Map("public.c" -> 0L))
       val r = graft.operators.Scale.tableChecksum(empty, Seq("id", "bal")).head()
       assert(Engine.validateApply(plan, catalog, out) ==

@@ -22,4 +22,24 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def collectStrings(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(r => Option(r.get(0)).map(_.toString).orNull)
+
+  /** `body`'s result and the call site of every Spark job it submitted
+    * (the name of each job's final stage), in submission order. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.GraftListenerBridge.waitForListeners
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name).getOrElse("?"))
+    }
+    waitForListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      waitForListeners(spark.sparkContext)
+      (out, sites.toArray.toSeq.map(_.toString))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
