@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.ExactDecimalSum
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
@@ -125,7 +126,10 @@ object Ivf {
   /**
    * Train k centroids: deterministic seeds (first k vectors by id), then
    * `iters` Lloyd rounds with distributed mean computation. Only the k×dim
-   * centroid matrix ever reaches the driver.
+   * centroid matrix ever reaches the driver. Each mean component is the
+   * exact decimal(28,10) sum of [[graft.functions.ExactDecimalSum]] —
+   * bit for bit `sum(cast(v AS decimal(28,10)))`, the form q_sim_ivf's
+   * oracle replays — divided once in double.
    *
    * Scale bound on k: this signature returns the centroids as a driver
    * Seq and [[nearestCentroid]] binds them as PLAN LITERALS — at k ≤
@@ -180,7 +184,7 @@ object Ivf {
         val means = assigned
           .select(col("__c"), posexplode(col(embCol)).as(Seq("__pos", "__v")))
           .groupBy("__c", "__pos")
-          .agg((sum(col("__v").cast("decimal(28,10)")).cast("double") /
+          .agg((ExactDecimalSum.of(col("__v")).cast("double") /
             count(lit(1))).as("__m"))
           .collect() // k × dim rows — centroid-matrix scale, not data scale
         val byCluster = means.groupBy(_.getAs[Int]("__c"))
@@ -244,7 +248,8 @@ object Ivf {
 
   /**
    * [[train]]'s large-k twin: the SAME deterministic Lloyd (first-k-by-id
-   * seeds, exact decimal(28,10) component sums, empty cells keep their
+   * seeds, exact decimal(28,10) component sums through
+   * [[graft.functions.ExactDecimalSum]], empty cells keep their
    * centroid) with the centroids as a k-row FRAME end to end — no k×dim
    * driver collect per round, no k-literal plan. Assignment per round is
    * [[assignJoin]]; the means pivot back to arrays DISTRIBUTED
@@ -288,7 +293,7 @@ object Ivf {
           .select(col("ivf_cell").as("cell"),
             posexplode(col(embCol)).as(Seq("__pos", "__v")))
           .groupBy("cell", "__pos")
-          .agg((sum(col("__v").cast("decimal(28,10)")).cast("double") /
+          .agg((ExactDecimalSum.of(col("__v")).cast("double") /
             count(lit(1))).as("__m"))
           .groupBy("cell")
           .agg(transform(

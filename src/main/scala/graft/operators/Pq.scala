@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.ExactDecimalSum
 import graft.functions.VectorOps._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -145,8 +146,10 @@ object Pq {
    * multiplier with zero arithmetic benefit. BIT-IDENTICAL to the
    * per-subspace form (PqSpec law): same first-k-by-id seeds (a slice of
    * the same vectors), same literal argmin with the same (distance,
-   * index) tie-break, same order-independent decimal(28,10) means with
-   * empty codewords keeping their previous value.
+   * index) tie-break, same order-independent decimal(28,10) means (the
+   * [[graft.functions.ExactDecimalSum]] kernel, bit for bit the
+   * cast-then-sum an oracle replays) with empty codewords keeping their
+   * previous value.
    *
    * Seeded from the k lowest ids present; when ids are dense from 0 (the
    * [[encodeFixed]] contract) that seed IS the fixed codebook, and Lloyd
@@ -184,7 +187,7 @@ object Pq {
           .select(col("__e.j").as("__j"), col("__e.c").as("__c"),
             posexplode(col("__e.s")).as(Seq("__pos", "__v")))
           .groupBy("__j", "__c", "__pos")
-          .agg((sum(col("__v").cast("decimal(28,10)")).cast("double") /
+          .agg((ExactDecimalSum.of(col("__v")).cast("double") /
             count(lit(1))).as("__m"))
           .collect() // m·k·d rows — codebook scale, not data scale
         val byKey = means
@@ -495,7 +498,9 @@ object Pq {
 
   /** The ADC tail of every search over `joined` (codes ⋈ distance table,
     * one __dq per matched subspace): the optional self-filter, the
-    * decimal(28,10) ADC sum, the per-query (distance, id) rank cut at
+    * decimal(28,10) ADC sum ([[graft.functions.ExactDecimalSum]]: exactly
+    * the oracles' `sum(cast(dq AS decimal(28,10)))`, without a per-value
+    * string cast), the per-query (distance, id) rank cut at
     * topK; returns (qIdCol, idCol, rn, adist). */
   private def adcRank(joined: DataFrame, topK: Int, idCol: String,
       qIdCol: String, selfFilter: Boolean): DataFrame = {
@@ -504,7 +509,7 @@ object Pq {
     joined
       .filter(if (selfFilter) col(idCol) =!= col(qIdCol) else lit(true))
       .groupBy(col(qIdCol), col(idCol))
-      .agg(sum(col("__dq").cast("decimal(28,10)")).as("__ad"))
+      .agg(ExactDecimalSum.of(col("__dq")).as("__ad"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= topK)
       .select(col(qIdCol), col(idCol), col("rn"),

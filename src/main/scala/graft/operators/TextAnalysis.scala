@@ -571,9 +571,9 @@ object TextAnalysis {
         .join(broadcast(qt), "__t")
         .crossJoin(broadcast(stats))
         .select(col(qIdCol), col(idCol),
-          termScore.cast("decimal(28,10)").as("__ts"))
+          termScore.as("__ts"))
         .groupBy(col(qIdCol), col(idCol))
-        .agg(sum(col("__ts")).as("__sc"))
+        .agg(graft.functions.ExactDecimalSum.of(col("__ts")).as("__sc"))
         .groupBy(col(qIdCol))
         .agg(topk(col("__sc").cast("double"), col(idCol).cast("long"))
           .as("__top"))

@@ -19,6 +19,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * [[GraftBridge]]), so SQL calls produce the identical codegen'd Catalyst
  * tree the DataFrame API produces — same plans, same oracle-checked
  * semantics, no interpretation penalty.
+ *
+ * It also names [[graft.NioLocalFileSystem]] as the context's `file://`
+ * filesystem (unless the session set `fs.file.impl` itself): local writes
+ * then set permissions in-process instead of forking `chmod` per file.
+ * Extensions are applied right after the SparkContext starts, before the
+ * session's shared state first opens a filesystem, so every engine
+ * session — whoever builds it — writes through it.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -34,6 +41,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration
+      .setIfUnset("fs.file.impl", classOf[graft.NioLocalFileSystem].getName)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.operators.{CountMin, Curation, Dedup, Quality, Sampling, Scale, Similarity, TextAnalysis => TA}
-import graft.functions.VectorOps
+import graft.functions.{ExactDecimalSum, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1016,8 +1016,11 @@ object Pipeline {
     * against c{i-1} by the -2·dot+|c|² key (cid tiebreak; |c|² is a
     * sequential self-dot both sides), per-cell exact decimal(28,10)
     * component means with ONE double division, empty cells keeping their
-    * centroid → c{i} (cid, cv). `note` heads the means CTE. */
-  private def ivfLloydStepCtes(i: Int, note: String = ""): String = {
+    * centroid → c{i} (cid, cv). The parallel unnests in the means CTE
+    * zip positionally; deriving pos from len(e.v) keeps the oracle
+    * tracking the fixture dimension (a hardcoded dim would silently
+    * train over wrong positions after a drift). */
+  private def ivfLloydStepCtes(i: Int): String = {
     val prev = s"c${i - 1}"
     s"""a$i AS (
            SELECT vec_id, cell FROM (
@@ -1027,7 +1030,6 @@ object Pipeline {
                    + list_dot_product(c.cv, c.cv), c.cid) AS rn
              FROM e, $prev c) WHERE rn = 1),
          m$i AS (
-           $note
            SELECT cell, pos,
              cast(sum(cast(comp AS decimal(28,10))) AS double)
                / count(*) AS m
@@ -1041,12 +1043,6 @@ object Pipeline {
            LEFT JOIN (SELECT cell, list(m ORDER BY pos) AS cv
                       FROM m$i GROUP BY cell) mv ON mv.cell = p.cid)"""
   }
-
-  /** q_sim_ivf's SQL note on its means CTE. */
-  private def LloydPosNote: String =
-    """-- parallel unnests zip positionally; deriving pos from len(e.v)
-           -- keeps the oracle tracking the fixture dimension (a hardcoded
-           -- dim would silently train over wrong positions after a drift)"""
 
   /** The IVF probe path's answer over `e`, `assign` and the centroids
     * `c`: the vec_id < 5 queries' nprobe = 4 cells, the in-cell cosine
@@ -5807,8 +5803,8 @@ object Pipeline {
         .groupBy("doc_id", "token").agg(count(lit(1)).as("c"))
       tf.groupBy("doc_id").agg(
           sum(col("c")).as("n_tokens"),
-          sum((col("c").cast("double") * log(col("c").cast("double")))
-            .cast("decimal(28,10)")).as("sclc"))
+          ExactDecimalSum.of(col("c").cast("double") *
+            log(col("c").cast("double"))).as("sclc"))
         .select(col("doc_id"), col("n_tokens"),
           round(log(col("n_tokens").cast("double")) -
             col("sclc").cast("double") / col("n_tokens"), 6).as("entropy"))
@@ -6689,8 +6685,8 @@ object Pipeline {
     // identical probe pipeline as q_sim_ivf_fixed over the result.
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         ${ivfLloydStepCtes(1, LloydPosNote)},
-         ${ivfLloydStepCtes(2, LloydPosNote)},
+         ${ivfLloydStepCtes(1)},
+         ${ivfLloydStepCtes(2)},
          c AS (SELECT cid, cv, list_dot_product(cv, cv) AS cnorm2 FROM c2),
          ${ivfAssignCte("e")},
          $IvfProbeTopSelect"""),
@@ -7201,12 +7197,11 @@ object Pipeline {
         .withColumn("ipos", row_number().over(Window.partitionBy("q_id")
           .orderBy(col("cos").desc, col("doc_id"))))
       def term(p: org.apache.spark.sql.Column) =
-        (col("gain") / (lnDec10(p + lit(1)) / lnDec10(lit(2))))
-          .cast("decimal(28,10)")
+        col("gain") / (lnDec10(p + lit(1)) / lnDec10(lit(2)))
       scored
         .groupBy("q_id")
-        .agg(sum(term(col("pos"))).as("__dcg"),
-          sum(term(col("ipos"))).as("__idcg"))
+        .agg(ExactDecimalSum.of(term(col("pos"))).as("__dcg"),
+          ExactDecimalSum.of(term(col("ipos"))).as("__idcg"))
         .select(col("q_id"),
           round(col("__dcg").cast("double"), 6).as("dcg"),
           round(col("__idcg").cast("double"), 6).as("idcg"),

@@ -804,4 +804,66 @@ class AnnSpec extends SparkSpec {
       .filter(col("q_id") < 3)
     assert(served.count() > 0, "a kjoin index must serve")
   }
+
+  /** md5 of a frame's rows, each rendered with doubles as their bits and
+    * the lines sorted, so the digest pins every value and no order. */
+  private def digest(df: org.apache.spark.sql.DataFrame): String = {
+    def render(v: Any): String = v match {
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))
+      case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+      case null => "null"
+      case o => o.toString
+    }
+    val lines = df.collect().map(_.toSeq.map(render).mkString("|")).sorted
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("golden: a seeded 3,000x64 IVF-PQ build and search (k 16, iters 2, " +
+      "m 4, codes 8, nprobe 4) reproduces its centroids, codebook, codes " +
+      "and ranked ADC distances bit for bit, fixed and trained") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dim = 64
+    val r = new scala.util.Random(4)
+    val centres = Array.fill(3000 / 16, dim)(r.nextGaussian())
+    def vecs(from: Long, n: Int) = (0 until n).map { i =>
+      val c = centres(r.nextInt(centres.length))
+      Row(from + i, c.map(x => (x + 0.35 * r.nextGaussian()).toFloat).toSeq)
+    }
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    def write(rows: Seq[Row], tag: String) = {
+      val p = s"${tmp(tag)}/data.parquet"
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .coalesce(1).write.parquet(p)
+      p
+    }
+    val base = write(vecs(0L, 3000), "golden_base")
+    val queries = write(vecs(3000L, 50), "golden_q")
+    val golden = Map(
+      false -> Seq(
+        "centroids" -> "a11919907f295781985c18f90224dbb2",
+        "codebook" -> "3608bef67ee02a6f45d5a8b28386d84c",
+        "codes" -> "c45b9d31ba6abd04d8a18c365674b297",
+        "search" -> "4f34d1181c146dfd61c74fa1f6af0dd0"),
+      true -> Seq(
+        "centroids" -> "a11919907f295781985c18f90224dbb2",
+        "codebook" -> "aacfefdfa297c2012cca275dc9af814a",
+        "codes" -> "1553d0aeac3de9d060aa9174d3670482",
+        "search" -> "f9d9c304e75579093d848ff233eb7dd4"))
+    for (trained <- Seq(false, true)) {
+      val idx = tmp(s"golden_idx_$trained")
+      assert(Ann.build(spark, base, idx, k = 16, iters = 2, m = 4, codes = 8,
+        dim = dim, idCol = "vec_id", vecCol = "embedding",
+        trained = trained) == 3000L)
+      val got = Seq("centroids", "codebook", "codes").map(a =>
+          a -> digest(spark.read.parquet(s"$idx/$a.parquet"))) :+
+        ("search" -> digest(Ann.search(spark, idx, queries, None, topK = 10,
+          nprobe = 4, qIdCol = "vec_id", qVecCol = "embedding")
+          .select("q_id", "vec_id", "rn", "adist")))
+      assert(got == golden(trained), s"trained=$trained")
+    }
+  }
 }

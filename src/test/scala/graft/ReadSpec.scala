@@ -98,4 +98,30 @@ class ReadSpec extends SparkSpec {
     val (_, plain) = jobsOf(spark.read.parquet(dir).schema)
     assert(plain.nonEmpty, "the listener must see an inference job")
   }
+
+  test("local writes go through NioLocalFileSystem, and a written parquet " +
+      "directory and its files get the stock filesystem's POSIX modes") {
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[NioLocalFileSystem], fs.getClass.getName)
+    /** relative path (part-file uuids masked) → mode, over the whole tree */
+    def modes(dir: String): Map[String, String] = {
+      val root = Paths.get(dir)
+      val s = Files.walk(root)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).map(p =>
+        root.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U") ->
+          java.nio.file.attribute.PosixFilePermissions.toString(
+            Files.getPosixFilePermissions(p))).toMap
+      finally s.close()
+    }
+    val df = spark.range(100).repartition(2).toDF("x")
+    val nio = s"${tmp("nio_modes")}/t.parquet"
+    val stock = s"${tmp("stock_modes")}/t.parquet"
+    df.write.parquet(nio)
+    df.write.option("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+      .option("fs.file.impl.disable.cache", "true").parquet(stock)
+    val (got, want) = (modes(nio), modes(stock))
+    assert(got.keySet.exists(_.endsWith(".crc")) && got.size >= 6, got)
+    assert(got == want)
+  }
 }

@@ -15,6 +15,11 @@ whether the gain rule holds: the change wins at least nine tenths of the
 pairs and the medians differ by more than the parent's interquartile
 range. A run that fails is reported and its pair is left out of the metric
 rows.
+
+With --trace 1 every run is traced instead, and the tool prints each
+side's median and quartiles of four per-layer metrics (task CPU, jobs,
+idle time and the traced op median), without wins or a gain rule: a
+traced run is slower, so it explains a gain but does not claim one.
 """
 import argparse
 import json
@@ -33,9 +38,13 @@ def parse_seeds(text):
     return list(range(lo, hi + 1))
 
 
-def run(checkout, workload, seed, seconds):
+TRACED = ["spark.task_cpu_s", "spark.jobs", "spark.idle_s", "trace.op_p50_s"]
+
+
+def run(checkout, workload, seed, seconds, trace):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     try:
@@ -60,6 +69,7 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=parse_seeds)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -71,15 +81,30 @@ def main():
         got = {}
         for side in order:
             got[side], err = run(sides[side], a.workload, seed,
-                                 bench["run_seconds"])
+                                 bench["run_seconds"], a.trace)
             if err:
                 print(f"seed {seed} {side}: run failed: {err}", flush=True)
+        op = "trace.op_p50_s" if a.trace else "op_p50_s"
         print(f"seed {seed} ({order[0]} first): " + "  ".join(
-            f"{side} op_p50_s={got[side].get('op_p50_s', float('nan')):.3f}"
+            f"{side} {op}={got[side].get(op, float('nan')):.3f}"
             if got[side] else f"{side} failed" for side in sides), flush=True)
         if got["parent"] and got["change"]:
             pairs.append((got["parent"], got["change"]))
     print(f"\n{a.workload}: {len(pairs)} of {len(a.seeds)} pairs complete")
+    if a.trace:
+        print(f"{'metric':<18}{'parent median [Q1, Q3]':<34}"
+              "change median [Q1, Q3]")
+        for name in TRACED:
+            both = [(p[name], c[name]) for p, c in pairs
+                    if name in p and name in c]
+            if not both:
+                continue
+            cells = []
+            for xs in ([x for x, _ in both], [y for _, y in both]):
+                q1, q3 = quartiles(xs)
+                cells.append(f"{statistics.median(xs):.4g} [{q1:.4g}, {q3:.4g}]")
+            print(f"{name:<18}{cells[0]:<34}{cells[1]}")
+        return
     print(f"{'metric':<14}{'parent median [Q1, Q3]':<34}"
           f"{'change median [Q1, Q3]':<34}{'wins':<8}rule")
     for name, direction in better.items():
