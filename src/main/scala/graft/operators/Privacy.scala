@@ -194,11 +194,6 @@ object Privacy {
     concat(lo.cast("string"), lit("-"), (lo + width).cast("string"))
   }
 
-  /** Temporal generalization: truncate a timestamp to month precision,
-    * rendered as 'yyyy-MM' (string output keeps the oracle comparison
-    * engine-neutral). */
-  def monthLabel(ts: Column): Column = date_format(ts, "yyyy-MM")
-
   /**
    * Deterministic per-key day shift in [-maxDays, +maxDays]: the first 4
    * md5 hex digits of (salt|key) parsed as an int, mod (2·maxDays+1),

@@ -731,219 +731,49 @@ object Streams {
   }
 
   /**
-   * Streaming ANN ingest — the vector-index twin of [[indexMaintain]]:
-   * each micro-batch of an APPEND-ONLY embedding stream is assigned its
-   * IVF cell and PQ codes against FROZEN centroids + codebooks (the
-   * `graft.Ann` build artifacts) and folded into the maintained codes
-   * frame, so a new vector becomes searchable without ever re-encoding
-   * the corpus. Encoding is [[graft.operators.Pq.encodeWith]] — the
-   * codebooks are plan literals, so the per-batch cost is one scan-local
-   * projection plus a batch-scale cell join; nothing corpus-scale runs
-   * per batch.
+   * Streaming ANN ingest — the vector-index twin of [[indexMaintain]] and
+   * the `graft.Ann --append` shape over a stream, for every codec: each
+   * micro-batch of an APPEND-ONLY embedding stream is dimension-checked
+   * against `frozen.dim`, moved into code space (`frozen.space` — a JL
+   * index projects, every other codec keeps the vector), assigned its IVF
+   * cell against the FROZEN `centroids`, and encoded by the frozen codec
+   * state ([[graft.IndexCodec.Frozen.encode]], the encode `Ann.append`
+   * runs: PQ codebooks and SQ8 scales as plan literals), then folded into
+   * the maintained codes frame. A new vector becomes searchable without
+   * re-encoding the corpus; nothing corpus-scale runs per batch.
    *
    * Exactness contract (the [[indexMaintain]] convention): with the
    * quantizers frozen, encoding is per-row pure, so the maintained frame
-   * is bit-identical to `Pq.buildIndex` re-run over everything seen —
-   * PROVIDED buildIndex's fixed-codebook seed rows (ids 0..k−1) live in
-   * the `initial` corpus, i.e. streamed ids are appended after the build
-   * (the monotone-id convention). The spec pins maintained ≡ rebuild
-   * after every epoch.
+   * is bit-identical to encoding everything seen in one batch. For the
+   * fixed PQ codebook that means `Pq.buildIndex` re-run over the union,
+   * PROVIDED its seed rows (ids 0..k−1) live in the `initial` corpus,
+   * i.e. streamed ids are appended after the build (the monotone-id
+   * convention). StreamsSpec pins streamed ≡ one-shot after every epoch,
+   * per codec.
    *
-   * `initial` is the codes frame of an existing index ((idCol, cell, j,
-   * code), e.g. `graft.Ann`'s codes.parquet); between batches the state
-   * is the codes frame itself, localCheckpointed one delta deep. After
-   * every batch `onUpdate` receives (codes, epoch) — write it under the
-   * index directory, swap the serving pointer.
+   * `initial` is the codes frame of an existing index ((idCol, cell,
+   * `frozen.codeCols`…), e.g. `graft.Ann`'s codes.parquet); between
+   * batches the state is the codes frame itself, localCheckpointed one
+   * delta deep. A wrong-dimension vector fails its batch before the
+   * state moves. After every batch `onUpdate` receives (codes, epoch) —
+   * write it under the index directory, swap the serving pointer.
    */
-  def annAppend(vectors: DataFrame, idCol: String, embCol: String,
-      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
+  def indexAppend(vectors: DataFrame, idCol: String, embCol: String,
+      centroids: Seq[Seq[Double]], frozen: graft.IndexCodec.Frozen,
       initial: DataFrame)(onUpdate: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var codes = initial
-      .select(col(idCol), col("cell"), col("j"), col("code"))
+    val coarse = graft.IndexCodec.Coarse(centroids)
+    var codes = initial.select((idCol +: "cell" +: frozen.codeCols).map(col): _*)
     vectors.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           epoch: Long) =>
-        val dim = codebooks.length * codebooks.head.head.length
         val clean = batch.select(col(idCol), col(embCol))
           .filter(col(embCol).isNotNull && size(col(embCol)) > 0)
-          .withColumn(embCol,
-            requireDim(col(embCol), dim, "Streams.annAppend"))
-        val withCell = clean.withColumn("cell",
-          graft.operators.Ivf.nearestCentroid(col(embCol), centroids))
-        val fresh = graft.operators.Pq
-          .encodeWith(withCell, idCol, embCol, codebooks,
-            carry = Seq("cell"))
-          .select(col(idCol), col("cell"), col("j"), col("code"))
+          .withColumn(embCol, frozen.space(
+            requireDim(col(embCol), frozen.dim, "Streams.indexAppend")))
+        val fresh = frozen.encode(coarse.assign(clean, idCol, embCol),
+          idCol, embCol, coarse)
         codes = codes.unionByName(fresh).localCheckpoint()
-        onUpdate(codes, epoch)
-    }
-  }
-
-  /**
-   * Streaming SQ8 index ingest — [[annAppend]]'s scalar-quantizer twin
-   * (the `graft.Ann --sq8 --append` shape over a stream): each
-   * micro-batch of new vectors encodes against the FROZEN per-dim scales
-   * and centroids ([[graft.operators.Sq.codes]] — scan-local transforms,
-   * no shuffle beyond the cell assignment expression) and folds into the
-   * maintained (id, cell, scode) codes frame. Frozen quantizers make the
-   * grown index bit-identical to `Ann --sq8` encoding the union in one
-   * batch (out-of-range values saturate identically) — StreamsSpec pins
-   * streamed ≡ batch. `localCheckpoint` keeps lineage one delta deep.
-   */
-  def sqAppend(vectors: DataFrame, idCol: String, embCol: String,
-      centroids: Seq[Seq[Double]], mn: Array[Long], d: Array[Long],
-      initial: DataFrame)(onUpdate: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var codes = initial.select(col(idCol), col("cell"), col("scode"))
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          epoch: Long) =>
-        val fresh = batch.select(col(idCol), col(embCol))
-          .filter(col(embCol).isNotNull && size(col(embCol)) > 0)
-          .withColumn(embCol,
-            requireDim(col(embCol), mn.length, "Streams.sqAppend"))
-          .select(col(idCol),
-            graft.operators.Ivf.nearestCentroid(col(embCol), centroids)
-              .as("cell"),
-            graft.operators.Sq.codes(col(embCol), mn, d).as("scode"))
-        codes = codes.unionByName(fresh).localCheckpoint()
-        onUpdate(codes, epoch)
-    }
-  }
-
-  /**
-   * Streaming BINARY index ingest — [[annAppend]]'s 1-bit twin (the
-   * `graft.Ann --bq --append` shape over a stream): each micro-batch
-   * packs its sign words against the FROZEN centroids
-   * ([[graft.operators.Bq.signWords]] — scan-local integer fold, no
-   * shuffle beyond the cell expression) and folds into the maintained
-   * (id, cell, bcode) frame. Sign packing is STATELESS given the
-   * space, so the streamed index is bit-identical to `Ann --bq`
-   * encoding the union in one batch for ANY vectors — no range or
-   * codebook staleness class at all, the strongest exactness contract
-   * in the maintenance family. StreamsSpec pins streamed ≡ batch.
-   */
-  def bqAppend(vectors: DataFrame, idCol: String, embCol: String,
-      centroids: Seq[Seq[Double]], dim: Int,
-      initial: DataFrame)(onUpdate: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var codes = initial.select(col(idCol), col("cell"), col("bcode"))
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          epoch: Long) =>
-        val fresh = batch.select(col(idCol), col(embCol))
-          .filter(col(embCol).isNotNull && size(col(embCol)) > 0)
-          .withColumn(embCol,
-            requireDim(col(embCol), dim, "Streams.bqAppend"))
-          .select(col(idCol),
-            graft.operators.Ivf.nearestCentroid(col(embCol), centroids)
-              .as("cell"),
-            graft.operators.Bq.signWords(col(embCol), dim).as("bcode"))
-        codes = codes.unionByName(fresh).localCheckpoint()
-        onUpdate(codes, epoch)
-    }
-  }
-
-  /**
-   * Streaming JL-PROJECTED index ingest — [[annAppend]]'s
-   * dimensionality-axis twin (the `graft.Ann --proj-dim --append` shape
-   * over a stream, qt=3): each micro-batch projects through the FROZEN
-   * plane basis (scan-local codegen'd dots, no shuffle beyond the cell
-   * expression), assigns its projected-space cell, and folds the
-   * (id, cell, pvec) rows into the maintained frame. Projection is
-   * STATELESS given the basis — the BQ exactness contract: the streamed
-   * index is bit-identical to a one-shot union encode for ANY vectors,
-   * no range/codebook staleness class. Dimension-guarded per batch like
-   * every ingest twin (r15 convention). StreamsSpec pins streamed ≡
-   * batch.
-   */
-  def jlAppend(vectors: DataFrame, idCol: String, embCol: String,
-      planes: Seq[Seq[Double]], centroids: Seq[Seq[Double]], dim: Int,
-      initial: DataFrame)(onUpdate: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var codes = initial.select(col(idCol), col("cell"), col("pvec"))
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          epoch: Long) =>
-        val fresh = batch.select(col(idCol), col(embCol))
-          .filter(col(embCol).isNotNull && size(col(embCol)) > 0)
-          .withColumn(embCol,
-            requireDim(col(embCol), dim, "Streams.jlAppend"))
-          .withColumn("pvec", array(planes.map(p =>
-            graft.functions.VectorOps.dot(col(embCol), typedlit(p))): _*))
-          .select(col(idCol),
-            graft.operators.Ivf.nearestCentroid(col("pvec"), centroids)
-              .as("cell"),
-            col("pvec"))
-        codes = codes.unionByName(fresh).localCheckpoint()
-        onUpdate(codes, epoch)
-    }
-  }
-
-  /**
-   * Streaming FLAT index ingest — [[annAppend]]'s uncompressed twin
-   * (the `graft.Ann --flat --append` shape over a stream, qt=5): each
-   * micro-batch assigns its cell against the FROZEN centroids and folds
-   * (id, cell, fvec) rows — the vector itself is the code, so the
-   * streamed index is trivially bit-identical to a one-shot union
-   * encode for ANY vectors (no quantizer state at all). StreamsSpec
-   * pins streamed ≡ batch.
-   */
-  def flatAppend(vectors: DataFrame, idCol: String, embCol: String,
-      centroids: Seq[Seq[Double]], dim: Int,
-      initial: DataFrame)(onUpdate: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var codes = initial.select(col(idCol), col("cell"), col("fvec"))
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          epoch: Long) =>
-        val fresh = batch.select(col(idCol), col(embCol))
-          .filter(col(embCol).isNotNull && size(col(embCol)) > 0)
-          .withColumn(embCol,
-            requireDim(col(embCol), dim, "Streams.flatAppend"))
-          .select(col(idCol),
-            graft.operators.Ivf.nearestCentroid(col(embCol), centroids)
-              .as("cell"),
-            col(embCol).as("fvec"))
-        codes = codes.unionByName(fresh).localCheckpoint()
-        onUpdate(codes, epoch)
-    }
-  }
-
-  /**
-   * Streaming RESIDUAL-PQ index ingest — [[annAppend]]'s by_residual
-   * twin (the `graft.Ann --residual --append` shape over a stream,
-   * qt=4): each micro-batch assigns its cell, subtracts that cell's
-   * centroid (scan-local zip_with against the centroid-matrix literal)
-   * and PQ-encodes the residual against the FROZEN codebooks
-   * ([[graft.operators.Pq.encodeWith]] — plan literals, scan-local).
-   * With quantizers frozen the encode is per-row pure, so the streamed
-   * index ≡ a one-shot union encode for ANY vectors. StreamsSpec pins
-   * streamed ≡ batch.
-   */
-  def residualAppend(vectors: DataFrame, idCol: String, embCol: String,
-      centroids: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
-      dim: Int, initial: DataFrame)(onUpdate: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var codes = initial.select(col(idCol), col("cell"), col("j"),
-      col("code"))
-    val cvs = typedLit(centroids.map(_.toArray).toArray)
-    vectors.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          epoch: Long) =>
-        val fresh = batch.select(col(idCol), col(embCol))
-          .filter(col(embCol).isNotNull && size(col(embCol)) > 0)
-          .withColumn(embCol,
-            requireDim(col(embCol), dim, "Streams.residualAppend"))
-          .withColumn("cell",
-            graft.operators.Ivf.nearestCentroid(col(embCol), centroids))
-          .withColumn("__res", zip_with(col(embCol),
-            element_at(cvs, col("cell") + 1), (a, b) => a - b))
-        val enc = graft.operators.Pq.encodeWith(fresh, idCol, "__res",
-            books, carry = Seq("cell"))
-          .select(col(idCol), col("cell"), col("j"), col("code"))
-        codes = codes.unionByName(enc).localCheckpoint()
         onUpdate(codes, epoch)
     }
   }

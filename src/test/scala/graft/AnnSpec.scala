@@ -21,6 +21,48 @@ class AnnSpec extends SparkSpec {
     assert(msg("--search", "--data", "d") == "--index <indexDir> required")
     assert(msg("--append", "--index", "i") == "--data <parquetDir> required")
     Ann.checkArgs(Array("--search", "--index", "i", "--data", "d"))
+    // build flags that pick two codecs or two rotations
+    def build(flags: String*) =
+      msg(Seq("--build", "--data", "d", "--out", "o") ++ flags: _*)
+    assert(build("--rotate", "--rotate-pca") == "--rotate, --rotate-pca, " +
+      "--rotate-pca2 and --rotate-auto are mutually exclusive")
+    assert(build("--sq8", "--trained") ==
+      "--sq8 and --trained are mutually exclusive (SQ8 has no codebook)")
+    assert(build("--bq", "--sq8").startsWith("--bq is mutually exclusive"))
+    assert(build("--bq", "--trained").startsWith("--bq is mutually exclusive"))
+    assert(build("--proj-dim", "16", "--trained")
+      .startsWith("--proj-dim is mutually exclusive"))
+    assert(build("--proj-dim", "16", "--rotate-auto")
+      .startsWith("--proj-dim does not compose with rotation flags"))
+    assert(build("--residual", "--sq8")
+      .startsWith("--residual is the PQ-on-residuals index"))
+    assert(build("--flat", "--bq")
+      .startsWith("--flat stores the vectors themselves"))
+    assert(msg("--search", "--index", "i", "--data", "d", "--refine", "20") ==
+      "--refine requires --raw <path>")
+    Ann.checkArgs(Array("--build", "--data", "d", "--out", "o",
+      "--residual", "--trained", "--rotate-pca"))
+  }
+
+  test("a meta naming an unknown quantizer (qt) or rotation (rot) code " +
+      "fails the search, naming the file and the value") {
+    val data = "/root/testdata/sf0.001/embeddings.parquet"
+    val idx = tmp("badmeta")
+    Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
+      dim = 64, idCol = "vec_id", vecCol = "embedding")
+    val path = java.nio.file.Paths.get(idx, Ann.MetaFile)
+    val good = java.nio.file.Files.readString(path)
+    for ((key, bad) <- Seq("qt" -> 6, "rot" -> 4)) {
+      assert(good.contains(s""""$key":0"""), good)
+      java.nio.file.Files.writeString(path,
+        good.replace(s""""$key":0""", s""""$key":$bad"""))
+      val e = intercept[IllegalArgumentException] {
+        Ann.search(spark, idx, data, None, topK = 5, nprobe = 3,
+          qIdCol = "vec_id", qVecCol = "embedding")
+      }
+      assert(e.getMessage.contains(s"$idx/${Ann.MetaFile}") &&
+        e.getMessage.contains(s"$key=$bad"), e.getMessage)
+    }
   }
 
   test("served results from the persisted index are bit-identical to the " +
@@ -63,7 +105,7 @@ class AnnSpec extends SparkSpec {
     val data = "/root/testdata/sf0.001/embeddings.parquet"
     val idx = tmp("rot")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", rotate = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding", rotation = "wht")
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -95,7 +137,7 @@ class AnnSpec extends SparkSpec {
     val data = "/root/testdata/sf0.001/embeddings.parquet"
     val idx = tmp("rotpca")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", rotatePca = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding", rotation = "pca1")
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -129,7 +171,7 @@ class AnnSpec extends SparkSpec {
     val data = "/root/testdata/sf0.001/embeddings.parquet"
     val idx = tmp("rotpca2")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", rotatePca2 = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding", rotation = "pca2")
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -301,12 +343,57 @@ class AnnSpec extends SparkSpec {
       "appended vectors must be retrievable from the grown index")
   }
 
+  test("--append on a --trained and a --residual --trained index: the " +
+      "appended codes equal Pq.encodeWith against the persisted codebook " +
+      "(residual: over emb − c(cell))") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val splitA = tmp("trA") + "/a.parquet"
+    val splitB = tmp("trB") + "/b.parquet"
+    emb.filter(col("vec_id") < 30).write.parquet(splitA)
+    emb.filter(col("vec_id") >= 30 && col("vec_id") < 60).write.parquet(splitB)
+    val fresh = spark.read.parquet(splitB)
+      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("emb"))
+    def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.get(1).asInstanceOf[Number].longValue(),
+        r.get(2).asInstanceOf[Number].longValue(),
+        r.get(3).asInstanceOf[Number].longValue())).toSet
+    for (codec <- Seq(IndexCodec.Pq(trained = true),
+        IndexCodec.Pq(trained = true, residual = true))) {
+      val idx = tmp("trapp")
+      Ann.build(spark, splitA, idx, k = 8, iters = 1, m = 4, codes = 8,
+        dim = 64, idCol = "vec_id", vecCol = "embedding", codec = codec)
+      assert(Ann.append(spark, idx, splitB, "embedding") == 30, s"$codec")
+      val cents = spark.read.parquet(s"$idx/centroids.parquet")
+        .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq
+      val cb = spark.read.parquet(s"$idx/codebook.parquet").collect()
+        .map(r => (r.getAs[Int]("j"), r.getAs[Int]("c"),
+          r.getSeq[Double](r.fieldIndex("cw")).toSeq))
+      val books = (0 until 4).map(j =>
+        cb.filter(_._1 == j).sortBy(_._2).map(_._3).toSeq)
+      val withCell = fresh.withColumn("cell",
+        graft.operators.Ivf.nearestCentroid(col("emb"), cents))
+      val encoded = if (codec.residual) withCell.withColumn("emb",
+        zip_with(col("emb"), element_at(
+          typedlit(cents.map(_.toArray).toArray), col("cell") + 1),
+          (a, b) => a - b))
+      else withCell
+      val want = snap(graft.operators.Pq.encodeWith(encoded, "vec_id", "emb",
+          books, carry = Seq("cell"))
+        .select(col("vec_id"), col("cell"), col("j"), col("code")))
+      val got = snap(spark.read.parquet(s"$idx/codes.parquet")
+        .filter(col("vec_id") >= 30)
+        .select(col("vec_id"), col("cell"), col("j"), col("code")))
+      assert(got.size == 30 * 4 && got == want, s"$codec")
+    }
+  }
+
   test("trained build: codebooks from per-subspace Lloyd, served ranks " +
       "are contiguous and ADC distances non-decreasing per query") {
     val data = "/root/testdata/sf0.001/embeddings.parquet"
     val idx = tmp("trained")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", trained = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Pq(trained = true))
     assert(n > 0)
     val res = Ann.search(spark, idx, data, None, topK = 5, nprobe = 3,
         qIdCol = "vec_id", qVecCol = "embedding")
@@ -338,7 +425,7 @@ class AnnSpec extends SparkSpec {
     // the build path re-runs the same deterministic probe and agrees
     val idx = tmp("auto")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", rotateAuto = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding", rotation = "auto")
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -359,7 +446,8 @@ class AnnSpec extends SparkSpec {
     val data = "/root/testdata/sf0.001/embeddings.parquet"
     val idx = tmp("sq8")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", sq8 = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Sq8)
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -413,8 +501,8 @@ class AnnSpec extends SparkSpec {
     val data = "/root/testdata/sf0.001/embeddings.parquet"
     val idx = tmp("sq8rot")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", sq8 = true,
-      rotate = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Sq8, rotation = "wht")
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -492,7 +580,7 @@ class AnnSpec extends SparkSpec {
     val idx = tmp("jl")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
       codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
-      projDim = 16)
+      codec = IndexCodec.Jl(16))
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -551,7 +639,7 @@ class AnnSpec extends SparkSpec {
     val idx = tmp("resid")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
       codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
-      residual = true)
+      codec = IndexCodec.Pq(residual = true))
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -579,8 +667,8 @@ class AnnSpec extends SparkSpec {
     // serves identically — the kjoin x residual composition
     val jn = tmp("residjn")
     Ann.build(spark, data, jn, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", residual = true,
-      largeKFrom = 0)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Pq(residual = true), largeKFrom = 0)
     assert(codesOf(jn) == codesOf(idx),
       "join-path residual codes must equal literal-path codes")
     val servedJn = Ann.search(spark, jn, data, None, topK = 5,
@@ -607,7 +695,7 @@ class AnnSpec extends SparkSpec {
     val tr = tmp("residtr")
     Ann.build(spark, data, tr, k = 8, iters = 1, m = 4, codes = 8,
       dim = 64, idCol = "vec_id", vecCol = "embedding",
-      residual = true, trained = true)
+      codec = IndexCodec.Pq(trained = true, residual = true))
     val metaTr = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(tr, Ann.MetaFile)), "UTF-8")
     assert(metaTr.contains("\"qt\":4"), metaTr)
@@ -653,7 +741,7 @@ class AnnSpec extends SparkSpec {
     val idx = tmp("flat")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
       codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
-      flat = true)
+      codec = IndexCodec.Flat)
     assert(n > 0)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, Ann.MetaFile)), "UTF-8")
@@ -705,7 +793,7 @@ class AnnSpec extends SparkSpec {
     // regression case (pre-r16 code deleted it before doing any work)
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
       codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
-      rotatePca = true)
+      rotation = "pca1")
     assert(n > 0)
     def serve() = Ann.search(spark, idx, data, None, topK = 5,
         nprobe = 3, qIdCol = "vec_id", qVecCol = "embedding")
@@ -761,16 +849,15 @@ class AnnSpec extends SparkSpec {
     raw.union(raw.filter(col("vec_id") === 5L)).write.parquet(data)
     val ids = raw.select("vec_id").distinct().count()
     assert(spark.read.parquet(data).count() == ids + 1)
-    def build(idx: String, trained: Boolean = false,
-        residual: Boolean = false, flat: Boolean = false) =
+    def build(idx: String, codec: IndexCodec = IndexCodec.Pq()) =
       jobsOf(Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
         codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
-        trained = trained, residual = residual, flat = flat))
+        codec = codec))
     for ((layout, (n, sites)) <- Seq(
         "pq" -> build(tmp("dup_pq")),
-        "residual" -> build(tmp("dup_res"), residual = true),
-        "trained" -> build(tmp("dup_tr"), trained = true),
-        "flat" -> build(tmp("dup_flat"), flat = true))) {
+        "residual" -> build(tmp("dup_res"), IndexCodec.Pq(residual = true)),
+        "trained" -> build(tmp("dup_tr"), IndexCodec.Pq(trained = true)),
+        "flat" -> build(tmp("dup_flat"), IndexCodec.Flat))) {
       assert(n == ids, s"$layout: built $n, want $ids distinct ids")
       assert(sites.contains("Ann.build train") &&
         sites.contains("Ann.build write codes.parquet") &&
@@ -857,7 +944,7 @@ class AnnSpec extends SparkSpec {
       val idx = tmp(s"golden_idx_$trained")
       assert(Ann.build(spark, base, idx, k = 16, iters = 2, m = 4, codes = 8,
         dim = dim, idCol = "vec_id", vecCol = "embedding",
-        trained = trained) == 3000L)
+        codec = IndexCodec.Pq(trained = trained)) == 3000L)
       val got = Seq("centroids", "codebook", "codes").map(a =>
           a -> digest(spark.read.parquet(s"$idx/$a.parquet"))) :+
         ("search" -> digest(Ann.search(spark, idx, queries, None, topK = 10,

@@ -132,7 +132,8 @@ class BqSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory(s"graft_bq_$tag").toString
     val idx = tmp("idx")
     val n = Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", bq = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Bq)
     assert(n > 0)
     val meta = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$idx/ann.meta.json"))
@@ -190,12 +191,14 @@ class BqSpec extends SparkSpec {
     full.filter(col("vec_id") > cut).write.parquet(splitB)
     val idxA = tmp("idxA")
     Ann.build(spark, splitA, idxA, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", bq = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Bq)
     val grown = Ann.append(spark, idxA, splitB, "embedding")
     assert(grown > 0)
     val idxFull = tmp("idxFull")
     Ann.build(spark, data, idxFull, k = 8, iters = 1, m = 4, codes = 8,
-      dim = 64, idCol = "vec_id", vecCol = "embedding", bq = true)
+      dim = 64, idCol = "vec_id", vecCol = "embedding",
+      codec = IndexCodec.Bq)
     def codeSet(d: String) = spark.read.parquet(s"$d/codes.parquet")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
       .toSet

@@ -592,9 +592,9 @@ class StreamsSpec extends SparkSpec {
         r.get(3).asInstanceOf[Number].longValue())).toSet
     val mem = MemoryStream[(Long, Seq[Double])]
     var latest = Set.empty[(Long, Long, Long, Long)]
-    val q = graft.streaming.Streams.annAppend(
+    val q = graft.streaming.Streams.indexAppend(
         mem.toDF().toDF("vec_id", "emb"), "vec_id", "emb",
-        centroids, books,
+        centroids, graft.IndexCodec.PqBooks(books),
         codes0.select(col("vec_id"), col("__cell").as("cell"),
           col("j"), col("code"))) { (c, _) => latest = snap(c) }
       .start()
@@ -642,10 +642,11 @@ class StreamsSpec extends SparkSpec {
         r.getSeq[Long](2).toList)).toSet
     val mem = MemoryStream[(Long, Seq[Double])]
     var latest = Set.empty[(Long, Long, List[Long])]
-    val q = graft.streaming.Streams.sqAppend(
+    val q = graft.streaming.Streams.indexAppend(
         mem.toDF().toDF("vec_id", "emb"), "vec_id", "emb",
-        centroids, mn, d, encode(initDf)) { (c, _) => latest = snap(c) }
-      .start()
+        centroids, graft.IndexCodec.Sq8Scales(mn, d), encode(initDf)) {
+      (c, _) => latest = snap(c)
+    }.start()
     try {
       val batches = Seq(streamed.take(7), streamed.drop(7))
       var seen = initial
@@ -682,10 +683,11 @@ class StreamsSpec extends SparkSpec {
         r.getSeq[Long](2).toList)).toSet
     val mem = MemoryStream[(Long, Seq[Double])]
     var latest = Set.empty[(Long, Long, List[Long])]
-    val q = graft.streaming.Streams.bqAppend(
+    val q = graft.streaming.Streams.indexAppend(
         mem.toDF().toDF("vec_id", "emb"), "vec_id", "emb",
-        centroids, dim = 64, encode(initDf)) { (c, _) => latest = snap(c) }
-      .start()
+        centroids, graft.IndexCodec.BqSigns(64), encode(initDf)) {
+      (c, _) => latest = snap(c)
+    }.start()
     try {
       val batches = Seq(streamed.take(7), streamed.drop(7))
       var seen = initial
@@ -730,9 +732,9 @@ class StreamsSpec extends SparkSpec {
         r.getSeq[Double](2).toList)).toSet
     val mem = MemoryStream[(Long, Seq[Double])]
     var latest = Set.empty[(Long, Long, List[Double])]
-    val q = graft.streaming.Streams.jlAppend(
+    val q = graft.streaming.Streams.indexAppend(
         mem.toDF().toDF("vec_id", "emb"), "vec_id", "emb",
-        planes, centroids, dim = 64, encode(initDf)) {
+        centroids, graft.IndexCodec.JlPlanes(planes), encode(initDf)) {
       (c, _) => latest = snap(c)
     }.start()
     try {
@@ -773,9 +775,9 @@ class StreamsSpec extends SparkSpec {
         r.getSeq[Double](2).toList)).toSet
     val memF = MemoryStream[(Long, Seq[Double])]
     var latestF = Set.empty[(Long, Long, List[Double])]
-    val qF = graft.streaming.Streams.flatAppend(
+    val qF = graft.streaming.Streams.indexAppend(
         memF.toDF().toDF("vec_id", "emb"), "vec_id", "emb",
-        centroids, dim = 64, encodeFlat(initDf)) {
+        centroids, graft.IndexCodec.FlatVectors(64), encodeFlat(initDf)) {
       (c, _) => latestF = snapFlat(c)
     }.start()
     try {
@@ -786,6 +788,16 @@ class StreamsSpec extends SparkSpec {
         assert(latestF == snapFlat(encodeFlat(seen.toDF("vec_id", "emb"))),
           "flatAppend diverged from one-shot encode")
       }
+      // the per-batch dimension guard: a 32-dim vector fails its batch
+      // (and the query) before the maintained frame moves
+      val before = latestF
+      memF.addData((1000L, Seq.fill(32)(0.5)))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        qF.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(
+          "Streams.indexAppend")), e)
+      assert(latestF == before, "a failed batch must not reach onUpdate")
     } finally qF.stop()
     // ---- residual twin (fixed first-4 residual codebook, frozen)
     def withRes(df: org.apache.spark.sql.DataFrame) =
@@ -810,9 +822,10 @@ class StreamsSpec extends SparkSpec {
         r.get(3).asInstanceOf[Number].longValue())).toSet
     val memR = MemoryStream[(Long, Seq[Double])]
     var latestR = Set.empty[(Long, Long, Long, Long)]
-    val qR = graft.streaming.Streams.residualAppend(
+    val qR = graft.streaming.Streams.indexAppend(
         memR.toDF().toDF("vec_id", "emb"), "vec_id", "emb",
-        centroids, books, dim = 64, encodeRes(initDf)) {
+        centroids, graft.IndexCodec.PqBooks(books, residual = true),
+        encodeRes(initDf)) {
       (c, _) => latestR = snapRes(c)
     }.start()
     try {
