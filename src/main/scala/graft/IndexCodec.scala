@@ -2,9 +2,9 @@ package graft
 
 import graft.functions.VectorOps
 import graft.operators.{Ivf, Bq => BqOps, Pq => PqOps, Sq => SqOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types._
 
 /**
  * The quantizer of a [[graft.Ann]] index — one case per index kind, the
@@ -84,10 +84,38 @@ object IndexCodec {
   }
 
   /** What a build stages: the (idCol, cell, code columns…) frame, the
-    * codec's small artifacts, whether the codes write counts the distinct
-    * ids itself, and frames to release once the writes are done. */
-  final case class Built(codes: DataFrame, artifacts: Seq[(String, DataFrame)],
-      countsOnWrite: Boolean = false, release: Seq[DataFrame] = Nil)
+    * codec's small artifacts, and whether the codes hold one row per
+    * (id, j), so the codes write counts the distinct ids itself. */
+  final case class Built(codes: DataFrame, artifacts: Seq[Artifact],
+      countsOnWrite: Boolean = false)
+
+  /** A metadata-scale artifact: driver-held `rows` under `schema`, written
+    * and read on the driver ([[Write.small]], [[Read.small]]). */
+  final case class Artifact(name: String, schema: StructType, rows: Seq[Row])
+
+  /** The artifact schemas are those of the Scala-typed rows they hold
+    * (what `toDF` of tuples gives): numbers non-null, vectors nullable
+    * arrays of non-null doubles. */
+  private[graft] val VectorType = ArrayType(DoubleType, containsNull = false)
+
+  val CodebookSchema: StructType = new StructType()
+    .add("j", IntegerType, false).add("c", IntegerType, false)
+    .add("cw", VectorType).add("cwn2", DoubleType, false)
+
+  /** An (axis, pos, u) artifact of `axes`, `u` of type `uType`: the JL
+    * planes and the learned rotation axes. */
+  private[graft] def axesArtifact(name: String, uType: DataType,
+      axes: Seq[Seq[Any]]): Artifact =
+    Artifact(name, new StructType().add("axis", IntegerType, false)
+        .add("pos", IntegerType, false).add("u", uType, false),
+      for ((u, a) <- axes.zipWithIndex; (v, i) <- u.zipWithIndex)
+        yield Row(a, i, v))
+
+  /** `rows` in the order of their integral `keys`. */
+  private[graft] def sortedBy(rows: Array[Row], keys: String*): Array[Row] = {
+    import scala.math.Ordering.Implicits._
+    rows.sortBy(r => keys.map(r.getAs[Number](_).longValue))
+  }
 
   /**
    * The IVF coarse quantizer as a plan uses it: the centroids as a k×dim
@@ -144,17 +172,18 @@ object IndexCodec {
         coarse: Coarse): DataFrame
   }
 
-  /** PQ codebooks as plan literals ([[graft.operators.Pq.encodeWith]],
-    * scan-local); `residual` encodes x − c(cell) instead of x. */
+  /** Driver-held PQ codebooks ([[graft.operators.Pq.encodePerId]]: one
+    * row per (id, j)); `residual` encodes x − c(cell) instead of x. The
+    * build encodes its corpus with this same form. */
   final case class PqBooks(books: Seq[Seq[Seq[Double]]],
       residual: Boolean = false) extends Frozen {
     def dim: Int = books.length * books.head.head.length
     def codeCols: Seq[String] = Seq("j", "code")
     def encode(rows: DataFrame, idCol: String, embCol: String,
         coarse: Coarse): DataFrame =
-      if (residual)
-        encodeBooks(residualOf(rows, embCol, coarse), idCol, "__res", books)
-      else encodeBooks(rows, idCol, embCol, books)
+      if (residual) PqOps.encodePerId(residualOf(rows, embCol, coarse),
+        idCol, "__res", books, "cell")
+      else PqOps.encodePerId(rows, idCol, embCol, books, "cell")
   }
 
   /** SQ8 per-dimension scales: values outside the trained ranges
@@ -215,53 +244,37 @@ object IndexCodec {
     def name: String = "pq" + (if (residual) "-residual" else "") +
       (if (trained) "-trained" else "")
 
+    /** The codebook — the fixed first-`codes` rows collected to the
+      * driver, or trained — is held on the driver for the one encode
+      * ([[PqBooks]]) and written there as the artifact. */
     def build(in: BuildIn): Built = {
       import in._
-      def booksOn(df: DataFrame, embCol: String) =
-        train(PqOps.trainCodebooks(df, idCol, embCol, m, codes, dim, iters))
-      if (residual) {
-        // the encode frame emb − c(cell), persisted because training (or
-        // the fixed codebook filter) and the encode both scan it
-        val ar = residualOf(assigned, "emb", coarse)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (cd, cb) = if (trained) {
-          val books = booksOn(ar, "__res")
-          (encodeBooks(ar, idCol, "__res", books), codebookFrame(spark, books))
-        } else asArtifacts(PqOps.buildIndexAssigned(ar, m, codes, dim,
-          idCol, "__res", "cell"), idCol)
-        Built(cd, Seq(CodebookFile -> cb), countsOnWrite = !trained,
-          release = Seq(ar))
-      } else if (trained) {
-        // cell + encode in ONE scan: the carry rides the explode
-        val books = booksOn(emb, "emb")
-        Built(encodeBooks(assigned, idCol, "emb", books),
-          Seq(CodebookFile -> codebookFrame(spark, books)))
-      } else {
-        val (cd, cb) = asArtifacts(coarse.frame match {
-          case Some(_) => PqOps.buildIndexAssigned(assigned, m, codes, dim,
-            idCol, "emb", "cell")
-          case None => PqOps.buildIndex(emb, coarse.lits, m, codes, dim,
-            idCol, "emb")
-        }, idCol)
-        Built(cd, Seq(CodebookFile -> cb), countsOnWrite = true)
-      }
+      val (src, vec) =
+        if (residual) (residualOf(assigned, "emb", coarse), "__res")
+        else (emb, "emb")
+      val books = train(
+        if (trained) PqOps.trainCodebooks(src, idCol, vec, m, codes, dim, iters)
+        else PqOps.fixedBooks(src, idCol, vec, m, codes, dim))
+      Built(PqBooks(books, residual).encode(assigned, idCol, "emb", coarse),
+        Seq(Artifact(CodebookFile, CodebookSchema,
+          PqOps.Codeword.fromBooks(books).map(w =>
+            Row(w.j, w.c, w.cw, w.cwn2)))),
+        countsOnWrite = true)
     }
 
     def freeze(spark: SparkSession, dir: String, meta: Ann.Meta): Frozen = {
-      val rows = Read.parquet(spark, s"$dir/$CodebookFile")
-        .select(col("j"), col("c"), col("cw")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
+      val cws = PqOps.Codeword.of(
+        Read.small(spark, s"$dir/$CodebookFile").toSeq)
       PqBooks((0 until meta.m).map(j =>
-        rows.filter(_._1 == j).sortBy(_._2).map(_._3).toSeq), residual)
+        cws.filter(_.j == j).sortBy(_.c).map(_.cw)), residual)
     }
 
     def serve(dir: String, meta: Ann.Meta, qs: DataFrame, coarse: Coarse,
         nprobe: Int, topK: Int, selfFilter: Boolean,
         asym: Boolean): DataFrame = {
       val spark = qs.sparkSession
-      val cb = Read.parquet(spark, s"$dir/$CodebookFile")
-        .select(col("j"), col("c").as("__c"), col("cw").as("__cw"),
-          col("cwn2").as("__cwn2"))
+      val cb = PqOps.Codeword.of(
+        Read.small(spark, s"$dir/$CodebookFile").toSeq)
       val codes = Read.parquet(spark, s"$dir/codes.parquet")
         .select(col(meta.idCol), col("cell").as("__cell"), col("j"),
           col("code"))
@@ -306,16 +319,15 @@ object IndexCodec {
 
     def build(in: BuildIn): Built = {
       import in._
-      import spark.implicits._
       val (mn, d) = train(SqOps.trainScales(emb, "emb", dim))
       Built(Sq8Scales(mn, d).encode(assigned, idCol, "emb", coarse),
-        Seq(ScalesFile -> (0 until dim).map(i => (i, mn(i), d(i)))
-          .toDF("pos", "mn", "d")))
+        Seq(Artifact(ScalesFile, new StructType().add("pos", IntegerType, false)
+            .add("mn", LongType, false).add("d", LongType, false),
+          (0 until dim).map(i => Row(i, mn(i), d(i))))))
     }
 
     def freeze(spark: SparkSession, dir: String, meta: Ann.Meta): Sq8Scales = {
-      val rows = Ann.collectSorted(Read.parquet(spark, s"$dir/$ScalesFile"),
-        "pos")
+      val rows = sortedBy(Read.small(spark, s"$dir/$ScalesFile"), "pos")
       require(rows.length == meta.dim,
         s"$dir/$ScalesFile has ${rows.length} rows, expected ${meta.dim}")
       Sq8Scales(rows.map(_.getAs[Long]("mn")), rows.map(_.getAs[Long]("d")))
@@ -430,17 +442,14 @@ object IndexCodec {
       emb.withColumn("emb", jlProject(col("emb"), planes(dim)))
 
     def build(in: BuildIn): Built = {
-      import in.spark.implicits._
       val ps = planes(in.dim)
       Built(JlPlanes(ps).encode(in.assigned, in.idCol, "emb", in.coarse),
-        Seq(Ann.ProjectionFile -> ps.zipWithIndex.flatMap { case (p, a) =>
-          p.zipWithIndex.map { case (v, i) => (a, i, v) }
-        }.toDF("axis", "pos", "u")))
+        Seq(axesArtifact(Ann.ProjectionFile, DoubleType, ps)))
     }
 
     def freeze(spark: SparkSession, dir: String, meta: Ann.Meta): JlPlanes = {
-      val rows = Ann.collectSorted(
-        Read.parquet(spark, s"$dir/${Ann.ProjectionFile}"), "axis", "pos")
+      val rows = sortedBy(Read.small(spark, s"$dir/${Ann.ProjectionFile}"),
+        "axis", "pos")
       require(rows.length == projDim * meta.dim,
         s"$dir/${Ann.ProjectionFile} has ${rows.length} rows, expected " +
           s"$projDim x ${meta.dim}")
@@ -503,35 +512,6 @@ object IndexCodec {
     coarse.attach(rows, "__cv")
       .withColumn("__res", zip_with(col(embCol), col("__cv"), (a, b) => a - b))
       .drop("__cv")
-
-  private def encodeBooks(rows: DataFrame, idCol: String, embCol: String,
-      books: Seq[Seq[Seq[Double]]]): DataFrame =
-    PqOps.encodeWith(rows, idCol, embCol, books, carry = Seq("cell"))
-      .select(col(idCol), col("cell"), col("j"), col("code"))
-
-  /** Trained codebooks as the codebook artifact; |cw|² is summed left to
-    * right like the codegen'd dot, so serve-time ADC sees exact values. */
-  private def codebookFrame(spark: SparkSession,
-      books: Seq[Seq[Seq[Double]]]): DataFrame = {
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (cbJ, j) =>
-      cbJ.zipWithIndex.map { case (w, c) =>
-        (j, c, w, w.foldLeft(0.0)((s, x) => s + x * x))
-      }
-    }.toDF("j", "c", "cw", "cwn2")
-  }
-
-  /** The fixed-codebook build's (codes, codebook) in artifact schema:
-    * j is long, what encodeWith emits, or an append's long-j files would
-    * sit beside int-j files and the mixed parquet schema fail to read. */
-  private def asArtifacts(built: (DataFrame, DataFrame),
-      idCol: String): (DataFrame, DataFrame) = {
-    val (cd, cb) = built
-    (cd.select(col(idCol), col("__cell").as("cell"),
-      col("j").cast("long").as("j"), col("code")),
-      cb.select(col("j"), col("__c").as("c"), col("__cw").as("cw"),
-        col("__cwn2").as("cwn2")))
-  }
 
   /** The exact-cosine serving tail of the vector-storing codecs (JL's
     * projected `pvec`, flat's `fvec`): rank the probed cells' stored

@@ -8,7 +8,10 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -27,19 +30,50 @@ import org.apache.spark.sql.types.StructType
  * Spark's own behaviour and errors are unchanged: schema merging on, a
  * glob, a subdirectory (partition discovery), a `_metadata` /
  * `_common_metadata` summary, no data file, or a footer that fails to read.
+ *
+ * [[small]] goes one step further for metadata-scale directories (an ANN
+ * index's centroids, codebook, scales, rotation or projection): it reads
+ * the rows themselves on the driver, through the reader a scan task would
+ * use, so no job runs at all. [[Write.small]] is its writing twin.
  */
 object Read {
 
   def parquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
+    footerPlan(spark, path) match {
+      case Some((schema, _)) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
 
-  /** The schema Spark's inference would give `path`, or None where the
-    * plain read must decide. */
-  private def footerSchema(spark: SparkSession,
-      path: String): Option[StructType] = {
+  /**
+   * The rows `spark.read.parquet(dir).collect()` returns, with the same
+   * schema, read on the driver without a job: every data file, in path
+   * order, through `ParquetFileFormat.buildReaderWithPartitionValues` (row
+   * mode) against the schema [[parquet]] would plan. For directories of a
+   * few thousand rows at most; what [[parquet]]'s one-footer rule does not
+   * cover collects the plain way.
+   */
+  def small(spark: SparkSession, dir: String): Array[Row] =
+    footerPlan(spark, dir) match {
+      case None => spark.read.parquet(dir).collect()
+      case Some((fileSchema, files)) =>
+        val schema = GraftBridge.asNullable(fileSchema)
+        val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+          spark, schema, new StructType(), schema, Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf())
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        files.toArray.flatMap { f =>
+          read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f),
+              0L, f.getLen, Array.empty[String], f.getModificationTime,
+              f.getLen))
+            .map(r => toRow(r).asInstanceOf[Row])
+        }
+    }
+
+  /** The schema Spark's inference would give `path` and its data files in
+    * path order, or None where the plain read must decide. */
+  private def footerPlan(spark: SparkSession,
+      path: String): Option[(StructType, Seq[FileStatus])] = {
     val conf = spark.sessionState.conf
     if (conf.isParquetSchemaMergingEnabled ||
         path.exists("{}[]*?\\".contains(_))) return None
@@ -50,9 +84,10 @@ object Read {
       if (listed.exists(s => isSummary(s.getPath.getName))) return None
       val visible = listed.filterNot(s => hidden(s.getPath.getName))
       if (visible.exists(_.isDirectory)) return None
-      visible.sortBy(_.getPath.toString).headOption.map { first =>
-        ParquetFileFormat.readSchemaFromFooter(footer(first, hadoopConf),
-          new ParquetToSparkSchemaConverter(conf))
+      val files = visible.sortBy(_.getPath.toString)
+      files.headOption.map { first =>
+        (ParquetFileFormat.readSchemaFromFooter(footer(first, hadoopConf),
+          new ParquetToSparkSchemaConverter(conf)), files)
       }
     } catch { case NonFatal(_) => None }
   }

@@ -1,9 +1,10 @@
 package graft
 
 import graft.functions.VectorOps
-import graft.operators.Ivf
+import graft.operators.{Ivf, Scale}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /**
  * ANN index CLI — build an IVF-PQ index ONCE over an embeddings table,
@@ -127,13 +128,27 @@ import org.apache.spark.sql.functions._
  *   rotation.parquet   (axis, pos, u)                  — learned modes
  *   projection.parquet (axis, pos, u DOUBLE)           — JL plane basis
  *   rotation_probe.json / ann.meta.json    probe evidence + geometry
+ * Every artifact but codes.parquet is metadata-scale state the driver
+ * already holds (or, for --append and --search, needs): it is written
+ * and read on the driver with Spark's own parquet reader and writer
+ * ([[Write.small]], [[Read.small]]), one part file plus `_SUCCESS`, so
+ * no Spark job moves it. The large-k centroid frame is the exception: it
+ * never visits the driver and stays a Spark write and read.
  *
  * Build = [[Ivf.train]] (exact-decimal Lloyd) + the codec's build
- * (default: [[graft.operators.Pq.buildIndex]]); serve = the codec's
- * serve half (default: [[graft.operators.Pq.searchIndex]]) — the same
- * code paths the oracle-checked q_ivf_pq_search / q_ivf_recall_curve
+ * (default: the fixed codebook collected by
+ * [[graft.operators.Pq.fixedBooks]], encoded as a plan literal by
+ * [[graft.operators.Pq.encodePerId]], one row per (id, j)); serve = the
+ * codec's serve half (default: [[graft.operators.Pq.searchIndex]], whose
+ * query side is one scan of the queries and one broadcast) — the same
+ * arithmetic the oracle-checked q_ivf_pq_search / q_ivf_recall_curve
  * queries run, so the CLI adds orchestration, not new semantics
  * (AnnSpec pins served ≡ fused bit-for-bit, per codec).
+ *
+ * Spark jobs of a default build → search (k 16, iters 2, one query
+ * batch; AnnSpec pins the budget): the Lloyd rounds, one codebook
+ * collect and one codes write at build; at search, the query side's
+ * broadcast, the one exchange of the ADC sum and rank, and the result.
  *
  * LARGE k: `--k` above [[Ann.LargeKThreshold]] (256) automatically
  * routes training and cell assignment — at build AND at --append —
@@ -235,6 +250,7 @@ object Ann {
         intOpt("pdim").getOrElse(0), file), kjoin)
   }
 
+  val CentroidsFile = "centroids.parquet"
   val RotationFile = "rotation.parquet"
   val ProjectionFile = "projection.parquet"
 
@@ -243,25 +259,17 @@ object Ann {
     f.delete(); ()
   }
 
-  /** A metadata-scale artifact's rows in the order of its integral `keys`:
-    * collected, then sorted on the driver — one job where a Spark sort
-    * costs a sampling job, a map stage and a result job. */
-  private[graft] def collectSorted(df: DataFrame, keys: String*): Array[Row] = {
-    import scala.math.Ordering.Implicits._
-    val at = keys.map(df.schema.fieldIndex)
-    df.collect().sortBy(r => at.map(r.getAs[Number](_).longValue))
-  }
-
   /** The index's coarse quantizer in the plan form its build recorded:
     * a kjoin index (k above [[LargeKThreshold]]) keeps the centroid
-    * FRAME, so neither append nor search ever plans a k×dim literal. */
+    * FRAME, so neither append nor search ever plans a k×dim literal; a
+    * literal index reads its k rows on the driver, without a job. */
   private def readCoarse(spark: SparkSession, dir: String,
-      kjoin: Boolean): IndexCodec.Coarse = {
-    val cents = Read.parquet(spark, s"$dir/centroids.parquet")
-    if (kjoin) IndexCodec.Coarse(Nil, Some(cents))
-    else IndexCodec.Coarse(collectSorted(cents, "cell")
+      kjoin: Boolean): IndexCodec.Coarse =
+    if (kjoin) IndexCodec.Coarse(Nil,
+      Some(Read.parquet(spark, s"$dir/$CentroidsFile")))
+    else IndexCodec.Coarse(IndexCodec.sortedBy(
+        Read.small(spark, s"$dir/$CentroidsFile"), "cell")
       .map(_.getSeq[Double](1).toSeq).toSeq)
-  }
 
   /** Frame-level space application covering all four `rot` modes: the
     * identity, [[graft.operators.Opq.rotate]] for WHT, and for the
@@ -279,16 +287,6 @@ object Ann {
       if (r == 0) col(embCol) else graft.operators.Opq.rotate(col(embCol), dim))
   }
 
-  /** The learned axes as their artifact frame of (axis, pos, u) rows —
-    * `axis` orders the composition for rank ≥ 2 rotations. */
-  private def rotationFrame(spark: SparkSession,
-      us: Seq[Array[Long]]): DataFrame = {
-    import spark.implicits._
-    us.zipWithIndex.flatMap { case (u, a) =>
-      u.zipWithIndex.map { case (v, i) => (a, i, v) }
-    }.toDF("axis", "pos", "u")
-  }
-
   /** Read the persisted axes in application order. Pre-rank-2 artifacts
     * wrote a single axis WITHOUT the `axis` column — read as one axis,
     * so r12 --rotate-pca indexes keep serving unchanged. */
@@ -296,10 +294,11 @@ object Ann {
       rot: Int): Seq[Array[Long]] =
     if (rot != 2 && rot != 3) Nil
     else {
-      val df = Read.parquet(spark, s"$dir/$RotationFile")
-      if (!df.columns.contains("axis"))
-        Seq(collectSorted(df, "pos").map(_.getAs[Long]("u")))
-      else collectSorted(df, "axis", "pos")
+      val rows = Read.small(spark, s"$dir/$RotationFile")
+      if (rows.isEmpty) Nil
+      else if (!rows.head.schema.fieldNames.contains("axis"))
+        Seq(IndexCodec.sortedBy(rows, "pos").map(_.getAs[Long]("u")))
+      else IndexCodec.sortedBy(rows, "axis", "pos")
         .groupBy(_.getAs[Int]("axis")).toSeq.sortBy(_._1)
         .map(_._2.map(_.getAs[Long]("u")).toArray)
     }
@@ -450,14 +449,13 @@ object Ann {
     // midway-failing rot=2 rebuild overwrite the 2-axis rotation a
     // still-current rot=3 meta points at
     val emb0 = toIndexSpaceFrame(plain, "emb", dim, rot, us)
-    // rotated or projected (JL) frames persist: Ivf.train and the encode
-    // both scan them, and without the persist the corpus-scale transform
-    // re-runs per consumer (the q_opq_pca_recall r12 finding)
-    val embC = codec.codeSpace(emb0, dim)
-    val cached = rot != 0 || (embC ne emb0)
-    val emb = if (cached)
-      embC.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else embC
+    // the corpus in code space, spread by id and persisted ONCE: the
+    // coarse training, the codec's training and its encode all read it
+    // (Ivf.train and Pq.trainCodebooks use a persisted input as it is),
+    // and an encode keyed by id aggregates on the spread's partitioning
+    // without another exchange
+    val emb = Scale.spreadForCompute(codec.codeSpace(emb0, dim), col(idCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // LARGE-k routing (see [[LargeKThreshold]]): above the threshold the
     // k×dim-literal Lloyd/argmin plans give way to the broadcast
     // centroid-frame twins — bit-identical (IvfSpec pins trainJoin ≡
@@ -468,7 +466,6 @@ object Ann {
       if (kjoin) IndexCodec.Coarse(Nil,
         Some(train(Ivf.trainJoin(emb, idCol, "emb", k, iters))))
       else IndexCodec.Coarse(train(Ivf.train(emb, idCol, "emb", k, iters)))
-    import spark.implicits._
     // every artifact write below lands in a STAGING dir first; the
     // promote block at the end moves them into place just before the
     // meta flips — see the crash-safety contract there
@@ -482,33 +479,32 @@ object Ann {
     // DISTINCT, so the others count the written codes back after the
     // promote
     val idsOnWrite = if (built.countsOnWrite) Some(Observation()) else None
-    // the small artifacts are single files; codes keeps its width
-    val small: Seq[(String, DataFrame)] =
-      Seq("centroids.parquet" -> (coarse.frame match {
-        // join-trained centroids never visit the driver — the k-row frame
-        // (localCheckpoint-backed, metadata scale) writes directly
-        case Some(cf) => cf.select(col("cell"), col("vec"))
-        case None => coarse.lits.zipWithIndex.map { case (v, i) => (i, v) }
-          .toDF("cell", "vec")
-      })) ++ built.artifacts ++
-      (if (rot >= 2) Seq(RotationFile -> rotationFrame(spark, us)) else Nil)
-    val writes = small.map { case (name, df) => name -> df.coalesce(1) } :+
+    // metadata-scale artifacts are written on the driver; the frames —
+    // codes and, past the large-k threshold, the join-trained centroids
+    // (localCheckpoint-backed, never on the driver) — by Spark jobs
+    val small = coarse.frame.fold(Seq(IndexCodec.Artifact(CentroidsFile,
+        new StructType().add("cell", IntegerType, false)
+          .add("vec", IndexCodec.VectorType),
+        coarse.lits.zipWithIndex.map { case (v, i) => Row(i, v) })))(_ => Nil) ++
+      built.artifacts ++ (if (rot >= 2) Seq(IndexCodec.axesArtifact(
+        RotationFile, LongType, us.map(_.toSeq))) else Nil)
+    val frames = coarse.frame.map(cf => CentroidsFile ->
+        cf.select(col("cell"), col("vec")).coalesce(1)).toSeq :+
       ("codes.parquet" -> idsOnWrite.fold(built.codes)(ids =>
         built.codes.observe(ids, count(when(col("j") === 0, lit(1))).as("n"))))
     // the staged writes run together, as Engine.apply's per-table writes
     // do; inParallel returns only once every write has finished, so a
     // failed write still leaves nothing half-written behind the promote
-    Jobs.inParallel(writes) { case (name, df) =>
-      Jobs.named(spark, s"Ann.build write $name") {
+    Jobs.inParallel(small.map(Left(_)) ++ frames.map(Right(_))) {
+      case Left(a) => Write.small(spark, s"$stageDir/${a.name}", a.schema, a.rows)
+      case Right((name, df)) => Jobs.named(spark, s"Ann.build write $name") {
         df.write.mode("overwrite").parquet(s"$stageDir/$name")
       }
     }
-    // all consumers of the cached frames (Ivf.train + the encode) have
-    // materialized to disk by here — release them so repeated
-    // programmatic builds in one session don't accumulate blocks (the
-    // Scale.releaseAfterUse convention)
-    if (cached) emb.unpersist(blocking = false)
-    built.release.foreach(_.unpersist(blocking = false))
+    // all consumers of the persisted corpus have materialized to disk by
+    // here — release it so repeated programmatic builds in one session
+    // don't accumulate blocks (the Scale.releaseAfterUse convention)
+    emb.unpersist(blocking = false)
     // the join-trained centroid frame's checkpoint blocks are done once
     // codes.parquet has materialized (its last consumer)
     coarse.frame.foreach(org.apache.spark.sql.GraftBridge.freeCheckpoint)
@@ -529,7 +525,7 @@ object Ann {
     // remaining unsafe window is a crash between the last rename and
     // the drop, which leaves only ignorable `.<name>.prev` litter that
     // the next promote clears.
-    val artifactNames = Seq("centroids.parquet", "codes.parquet",
+    val artifactNames = Seq(CentroidsFile, "codes.parquet",
       IndexCodec.CodebookFile, IndexCodec.ScalesFile, RotationFile,
       ProjectionFile)
     def asideOf(name: String) = new java.io.File(outDir, s".$name.prev")
@@ -618,10 +614,8 @@ object Ann {
     val meta = readMeta(indexDir)
     require(!asym || meta.codec == IndexCodec.Bq,
       "--asym serves binary (qt=2) indexes only")
-    val (coarse, rotU) = Jobs.named(spark, "Ann.search centroids") {
-      (readCoarse(spark, indexDir, meta.kjoin),
-        readRotation(spark, indexDir, meta.rot))
-    }
+    val coarse = readCoarse(spark, indexDir, meta.kjoin)
+    val rotU = readRotation(spark, indexDir, meta.rot)
     val qs = toIndexSpaceFrame(
       Read.parquet(spark, queriesPath)
         .select(col(qIdCol).as("q_id"),

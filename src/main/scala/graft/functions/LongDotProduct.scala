@@ -41,6 +41,9 @@ case class LongDotProduct(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_dot_long"
+  // NULL on a length mismatch or a null element even for non-null
+  // arrays, so the generated code always declares the isNull it sets
+  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any =
     LongDotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

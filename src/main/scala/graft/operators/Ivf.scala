@@ -159,9 +159,7 @@ object Ivf {
     // first: a compact corpus arrives as ONE scan partition and every
     // round's assignment + posexplode partial aggregate would run in a
     // single task (same hazard as Dedup.containmentPairs).
-    val vecs = Scale.spreadForCompute(df.select(col(idCol), col(embCol)),
-        col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (vecs, release) = Scale.pinned(df, col(idCol), col(idCol), col(embCol))
     try {
       var centroids: Seq[Seq[Double]] = vecs.orderBy(col(idCol)).limit(k)
         .select(col(embCol)).collect().toSeq
@@ -199,7 +197,7 @@ object Ivf {
         }
       }
       centroids
-    } finally vecs.unpersist(blocking = false)
+    } finally release()
   }
 
   /** Corpus with its IVF cell assignment (one scan-only pass). */
@@ -274,9 +272,7 @@ object Ivf {
           Window.orderBy(col(idCol))).cast("int") - 1)
         .select(col("cell"), col(embCol).as("vec"))
         .localCheckpoint()
-    val vecs = Scale.spreadForCompute(df.select(col(idCol), col(embCol)),
-        col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (vecs, release) = Scale.pinned(df, col(idCol), col(idCol), col(embCol))
     try {
       // seeds: first k by id, densely indexed in id order. The
       // row_number window is single-partition but bounded to k rows by
@@ -307,7 +303,7 @@ object Ivf {
         org.apache.spark.sql.GraftBridge.freeCheckpoint(prev)
       }
       cents
-    } finally vecs.unpersist(blocking = false)
+    } finally release()
   }
 
   /**

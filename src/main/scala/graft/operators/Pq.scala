@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.ExactDecimalSum
 import graft.functions.VectorOps._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -48,6 +48,42 @@ object Pq {
       .select(col(idCol).cast("int").as("__c"), col(embCol).as("__v"))
       .select(col("__c"), subvectors(col("__v"), m, d).as(Seq("j", "__cw")))
       .withColumn("__cwn2", dot(col("__cw"), col("__cw")))
+
+  /** One codebook entry: codeword `c` of subspace `j` and its |cw|². */
+  final case class Codeword(j: Int, c: Int, cw: Seq[Double], cwn2: Double)
+
+  object Codeword {
+    /** Rows of (j, c, cw, cwn2) in that column order: the codebook.parquet
+      * artifact, or a codebook frame ([[buildIndex]]'s) collected. */
+    def of(rows: Seq[Row]): Seq[Codeword] = rows.map(r => Codeword(
+      r.getAs[Number](0).intValue, r.getAs[Number](1).intValue,
+      r.getSeq[Double](2).toSeq, r.getDouble(3)))
+
+    /** Driver-held codebooks, codeword c of subspace j at `books(j)(c)`;
+      * |cw|² is summed left to right like the codegen'd dot, so ADC sees
+      * the values a codebook frame would carry. */
+    def fromBooks(books: Seq[Seq[Seq[Double]]]): Seq[Codeword] =
+      for ((cbJ, j) <- books.zipWithIndex; (w, c) <- cbJ.zipWithIndex)
+        yield Codeword(j, c, w, w.foldLeft(0.0)((s, x) => s + x * x))
+  }
+
+  /** [[fixedCodebook]] collected to the driver as [[encodeWith]]'s
+    * per-subspace books: codeword c is the slice of the c-th lowest id
+    * below k, which is id c itself under the dense-id contract. An id
+    * present twice keeps its lexicographically least vector, so each code
+    * names one codeword. One job over k rows, metadata scale. */
+  def fixedBooks(df: DataFrame, idCol: String, embCol: String,
+      m: Int, k: Int, dim: Int): Seq[Seq[Seq[Double]]] = {
+    require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
+    val d = dim / m
+    val lexicographic = Ordering.Implicits.seqOrdering[Seq, Double](
+      Ordering.Double.TotalOrdering)
+    val seeds = df.filter(col(idCol) < k)
+      .select(col(idCol).cast("long"), col(embCol)).collect()
+      .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      .map(_._2.map(_.getSeq[Double](1).toSeq).min(lexicographic))
+    (0 until m).map(j => seeds.map(_.slice(j * d, (j + 1) * d)))
+  }
 
   /**
    * Encode every row's embedding against the fixed codebook. Returns one
@@ -163,9 +199,7 @@ object Pq {
       m: Int, k: Int, dim: Int, iters: Int = 2): Seq[Seq[Seq[Double]]] = {
     require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val d = dim / m
-    val vecs = Scale.spreadForCompute(
-        df.select(col(idCol), col(embCol)), col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (vecs, release) = Scale.pinned(df, col(idCol), col(idCol), col(embCol))
     try {
       val seeds = vecs.orderBy(col(idCol)).limit(k)
         .select(col(embCol)).collect().toSeq
@@ -206,7 +240,7 @@ object Pq {
         }
       }
       books
-    } finally vecs.unpersist(blocking = false)
+    } finally release()
   }
 
   /**
@@ -240,6 +274,37 @@ object Pq {
       .select(col(idCol) +: carry.map(col) :+
         col("__e.j").as("j") :+ col("__e.code").as("code") :+
         col("__e.err").as("err"): _*)
+  }
+
+  /**
+   * The index encode against driver-held codebooks: per row and subspace
+   * the nearest codeword ([[graft.functions.NearestRow]] — the
+   * −2·s·cw + |cw|² key and (key, code) tie-break of [[encodeSubs]], as
+   * one codegen'd loop over the literal codebook, no join), then ONE row
+   * per (id, j) — the code of min(struct(key, code)) over every row
+   * sharing the id, the cell the max over them — so a duplicated id
+   * stores m codes, not m per copy (ADC sums one term per subspace). The
+   * per-id aggregate needs no exchange over a frame already hash-spread
+   * by id. Returns (idCol, cellCol, j long, code); empty codebooks (an
+   * empty corpus) encode nothing.
+   */
+  def encodePerId(df: DataFrame, idCol: String, embCol: String,
+      codebooks: Seq[Seq[Seq[Double]]], cellCol: String): DataFrame = {
+    if (codebooks.isEmpty || codebooks.exists(_.isEmpty))
+      return df.select(col(idCol), col(cellCol), lit(0L).as("j"),
+        lit(0).as("code")).where(lit(false))
+    val d = codebooks.head.head.length
+    // (key d, code i) structs order as min(struct(key, code)) does
+    val perSubspace = codebooks.zipWithIndex.map { case (cb, j) =>
+      struct(lit(j.toLong).as("j"), org.apache.spark.sql.GraftBridge.column(
+        graft.functions.NearestRow(org.apache.spark.sql.GraftBridge
+          .expression(slice(col(embCol), j * d + 1, d)), cb)).as("b"))
+    }
+    df.select(col(idCol), col(cellCol),
+        explode(array(perSubspace: _*)).as("__e"))
+      .groupBy(col(idCol), col("__e.j").as("j"))
+      .agg(min(col("__e.b")).as("__m"), max(col(cellCol)).as(cellCol))
+      .select(col(idCol), col(cellCol), col("j"), col("__m.i").as("code"))
   }
 
   /**
@@ -287,9 +352,13 @@ object Pq {
       idCol: String = "vec_id", embCol: String = "emb",
       qIdCol: String = "q_id", qEmbCol: String = "q_emb"): DataFrame = {
     val (codes, cb) = buildIndex(corpus, centroids, m, k, dim, idCol, embCol)
+    // the m·k codebook rows are collected once for the query side's
+    // literal distance table; the persist keeps the encode's broadcast of
+    // the same rows from scanning the corpus again
     val cbp = cb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Scale.releaseAfterUse(
-      searchIndex(codes, cbp, queries, centroids, nprobe, topK, m, dim,
+      searchIndex(codes, Codeword.of(cbp.select("j", "__c", "__cw", "__cwn2")
+          .collect().toSeq), queries, centroids, nprobe, topK, m, dim,
         idCol, qIdCol, qEmbCol),
       Seq(cbp))
   }
@@ -313,8 +382,6 @@ object Pq {
       m: Int, k: Int, dim: Int, iters: Int = 2,
       idCol: String = "vec_id", embCol: String = "emb",
       qIdCol: String = "q_id", qEmbCol: String = "q_emb"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val books = trainCodebooks(corpus, idCol, embCol, m, k, dim, iters)
     // empty corpus trains no codewords: an empty result with the
     // searchIndex schema, not an analysis error (the totality contract
@@ -324,13 +391,6 @@ object Pq {
         .crossJoin(queries.select(col(qIdCol)).limit(0))
         .select(col(qIdCol), col(idCol), lit(0L).as("rn"),
           lit(0.0).as("adist"))
-    // driver-side |cw|² uses the same left-to-right sum the codegen'd
-    // dot expression computes, so serve-time ADC sees exact values
-    val cbDf = books.zipWithIndex.flatMap { case (cbJ, j) =>
-      cbJ.zipWithIndex.map { case (w, c) =>
-        (j, c, w, w.foldLeft(0.0)((s, x) => s + x * x))
-      }
-    }.toDF("j", "__c", "__cw", "__cwn2")
     // ONE corpus scan: the cell expression and the m-subspace encode
     // evaluate together, the cell riding through the encode explode as a
     // carry column — no corpus-scale self-join to re-attach it
@@ -339,8 +399,8 @@ object Pq {
     val cd = encodeWith(withCell, idCol, embCol, books,
         carry = Seq("__cell"))
       .select(col(idCol), col("__cell"), col("j"), col("code"))
-    searchIndex(cd, cbDf, queries, centroids, nprobe, topK, m, dim,
-      idCol, qIdCol, qEmbCol)
+    searchIndex(cd, Codeword.fromBooks(books), queries, centroids, nprobe,
+      topK, m, dim, idCol, qIdCol, qEmbCol)
   }
 
   /**
@@ -399,22 +459,12 @@ object Pq {
     val subs = assigned.select(col(idCol), col("__cell"),
       subvectors(col("__res"), m, d).as(Seq("j", "__s")))
     val codes = encodeSubs(subs, cb, idCol)
-    // query side: the residual is PER PROBED CELL, so the distance
-    // table carries the cell key
-    val probes = queries.select(col(qIdCol), col(qEmbCol).as("__qv"))
-      .withColumn("__cell",
-        explode(Ivf.probeList(col("__qv"), centroids, nprobe)))
-      .withColumn("__qr", residual(col("__qv"), col("__cell")))
-    val qsubs = probes.select(col(qIdCol), col("__cell"),
-        subvectors(col("__qr"), m, d).as(Seq("j", "__qs")))
-      .withColumn("__qn2", dot(col("__qs"), col("__qs")))
-    val dtab = qsubs.join(broadcast(cb), "j")
-      .select(col(qIdCol), col("__cell"), col("j"), col("__c").as("code"),
-        (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
-          col("__cwn2")).as("__dq"))
+    // the query side is the serve half's: per-cell residual distance
+    // tables against the codebook, collected once
     Scale.releaseAfterUse(
-      adcRank(codes.join(broadcast(dtab), Seq("__cell", "j", "code")),
-        topK, idCol, qIdCol, selfFilter),
+      searchIndexResidual(codes, Codeword.of(cb.select("j", "__c", "__cw",
+          "__cwn2").collect().toSeq), queries,
+        centroids, nprobe, topK, m, dim, idCol, qIdCol, qEmbCol, selfFilter),
       Seq(assigned))
   }
 
@@ -441,48 +491,9 @@ object Pq {
     (codes, cb)
   }
 
-  /**
-   * [[buildIndex]] with the IVF cell ALREADY on the frame (`cellCol`) —
-   * the LARGE-k form: upstream [[Ivf.assignJoin]] computed the cell via
-   * a broadcast k-row centroid FRAME, so no k×dim literal ever enters a
-   * plan (the [[Ivf.train]] scaladoc's k ~ 10⁴ bound). Same fixed
-   * codebook, same broadcast encode join, same min(struct) tie-break,
-   * same output schema — bit-identical to [[buildIndex]] given the same
-   * assignment (which IvfSpec pins for assignJoin ≡ nearestCentroid).
-   */
-  def buildIndexAssigned(corpus: DataFrame, m: Int, k: Int, dim: Int,
-      idCol: String, embCol: String,
-      cellCol: String): (DataFrame, DataFrame) = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val d = dim / m
-    val cb = fixedCodebook(corpus, idCol, embCol, m, k, d)
-    val subs = Scale.spreadForCompute(
-        corpus.select(col(idCol), col(embCol),
-          col(cellCol).as("__cell")), col(idCol))
-      .select(col(idCol), col("__cell"),
-        subvectors(col(embCol), m, d).as(Seq("j", "__s")))
-    val codes = encodeSubs(subs, cb, idCol)
-    (codes, cb)
-  }
-
-  /**
-   * Encode an ALREADY-cell-assigned frame against a GIVEN codebook
-   * frame — [[buildIndexAssigned]]'s encode stage factored out so
-   * `graft.Ann --residual --append` can fold new vectors against the
-   * persisted codebook (the frozen-quantizer append contract). Same
-   * broadcast join, argmin key and (key, code) tie-break; returns
-   * (idCol, __cell, j, code).
-   */
-  def encodeAgainstAssigned(corpus: DataFrame, cb: DataFrame,
-      m: Int, dim: Int, idCol: String, embCol: String,
-      cellCol: String): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val d = dim / m
-    encodeSubs(corpus.select(col(idCol), col(cellCol).as("__cell"),
-      subvectors(col(embCol), m, d).as(Seq("j", "__s"))), cb, idCol)
-  }
-
-  /** The encode step of every cell-carrying PQ index: subvectors `subs`
+  /** The encode step of the fused cell-carrying PQ paths ([[buildIndex]],
+    * [[ivfAdcResidualTopK]]; `graft.Ann` encodes with [[encodePerId]],
+    * the same key and tie-break against a literal codebook): subvectors `subs`
     * (idCol, __cell, j, __s) against the broadcast codebook (j, __c,
     * __cw, __cwn2), nearest codeword by the -2·dot + |cw|² key with the
     * (key, code) tie-break; returns (idCol, __cell, j, code). */
@@ -501,13 +512,16 @@ object Pq {
     * decimal(28,10) ADC sum ([[graft.functions.ExactDecimalSum]]: exactly
     * the oracles' `sum(cast(dq AS decimal(28,10)))`, without a per-value
     * string cast), the per-query (distance, id) rank cut at
-    * topK; returns (qIdCol, idCol, rn, adist). */
+    * topK; returns (qIdCol, idCol, rn, adist). One exchange, hashed by
+    * query: the (query, id) sum and the per-query rank both run where the
+    * rows land, one shuffle stage fewer than an exchange each. */
   private def adcRank(joined: DataFrame, topK: Int, idCol: String,
       qIdCol: String, selfFilter: Boolean): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(qIdCol).orderBy(col("__ad"), col(idCol))
     joined
       .filter(if (selfFilter) col(idCol) =!= col(qIdCol) else lit(true))
+      .repartition(col(qIdCol))
       .groupBy(col(qIdCol), col(idCol))
       .agg(ExactDecimalSum.of(col("__dq")).as("__ad"))
       .withColumn("rn", row_number().over(w).cast("long"))
@@ -519,22 +533,20 @@ object Pq {
   /**
    * The RESIDUAL serve half (`graft.Ann --residual`, meta qt = 4):
    * [[searchIndex]] with the distance table computed over each query's
-   * PER-CELL residual q − c(cell) — [[ivfAdcResidualTopK]]'s query side
-   * over persisted artifacts (same codes/codebook file formats as the
+   * PER-CELL residual q − c(cell) (same codes/codebook file formats as the
    * plain PQ index; only the meta's qt routes here). The residual needs
    * the centroid VALUE per probed cell: below the large-k threshold it
    * reads from the k×dim literal (`element_at`, scan-local); above it
    * (`centFrame`) the probe rows join the broadcast k-row frame — the
    * kjoin serving contract, no k-literal plan either way at large k.
    */
-  def searchIndexResidual(codes: DataFrame, codebook: DataFrame,
+  def searchIndexResidual(codes: DataFrame, codebook: Seq[Codeword],
       queries: DataFrame, centroids: Seq[Seq[Double]], nprobe: Int,
       topK: Int, m: Int, dim: Int, idCol: String = "vec_id",
       qIdCol: String = "q_id", qEmbCol: String = "q_emb",
       selfFilter: Boolean = true,
       centFrame: Option[DataFrame] = None): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val d = dim / m
     val q = queries.select(col(qIdCol), col(qEmbCol).as("__qv"))
     val probes = centFrame match {
       case Some(cf) => Ivf.probeJoin(q, qIdCol, "__qv", cf, nprobe)
@@ -545,15 +557,9 @@ object Pq {
         .withColumn("__cv", element_at(
           typedLit(centroids.map(_.toArray).toArray), col("__cell") + 1))
     }
-    val qsubs = probes
-      .withColumn("__qr", zip_with(col("__qv"), col("__cv"), (a, b) => a - b))
-      .select(col(qIdCol), col("__cell"),
-        subvectors(col("__qr"), m, d).as(Seq("j", "__qs")))
-      .withColumn("__qn2", dot(col("__qs"), col("__qs")))
-    val dtab = qsubs.join(broadcast(codebook), "j")
-      .select(col(qIdCol), col("__cell"), col("j"), col("__c").as("code"),
-        (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
-          col("__cwn2")).as("__dq"))
+    val dtab = distanceTable(probes.withColumn("__qr",
+        zip_with(col("__qv"), col("__cv"), (a, b) => a - b)),
+      "__qr", codebook, m, dim / m, qIdCol)
     adcRank(codes.join(broadcast(dtab), Seq("__cell", "j", "code")),
       topK, idCol, qIdCol, selfFilter)
   }
@@ -564,7 +570,12 @@ object Pq {
    * without re-encoding or re-scanning the corpus (the production
    * property: index a 100 TB corpus once, serve queries from codes-only
    * artifacts). Bit-identical to the fused path: same probe list, same
-   * broadcast distance table, same decimal ADC sum and id tie-break.
+   * distance table, same decimal ADC sum and id tie-break.
+   *
+   * The query side is ONE pipeline over one scan of `queries` — probed
+   * cells, subvectors, the codebook's codewords as a plan literal, __dq
+   * ([[distanceTable]]) — broadcast once into the (cell, j, code) join
+   * against the codes.
    *
    * `selfFilter` (default true) drops corpus rows whose id equals the
    * query id — right when queries ARE corpus rows (the recall-eval
@@ -572,33 +583,45 @@ object Pq {
    * id space is unrelated to the corpus ids, or an external query that
    * happens to collide numerically would silently lose a neighbor.
    */
-  def searchIndex(codes: DataFrame, codebook: DataFrame,
+  def searchIndex(codes: DataFrame, codebook: Seq[Codeword],
       queries: DataFrame, centroids: Seq[Seq[Double]], nprobe: Int,
       topK: Int, m: Int, dim: Int, idCol: String = "vec_id",
       qIdCol: String = "q_id", qEmbCol: String = "q_emb",
       selfFilter: Boolean = true,
       centFrame: Option[DataFrame] = None): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val d = dim / m
     val q = queries.select(col(qIdCol), col(qEmbCol).as("__qv"))
     // probe cells via the k×dim-literal list, or — when the caller hands
     // the k-row centroid FRAME (a kjoin index, Ann.LargeKThreshold) —
     // via the broadcast-frame ranking (Ivf.probeJoin, bit-identical)
-    val probes = (centFrame match {
+    val probes = centFrame match {
       case Some(cf) => Ivf.probeJoin(q, qIdCol, "__qv", cf, nprobe)
       case None => q.withColumn("__cell",
         explode(Ivf.probeList(col("__qv"), centroids, nprobe)))
-    }).select(col(qIdCol), col("__cell"))
-    val qsubs = q
-      .select(col(qIdCol), subvectors(col("__qv"), m, d).as(Seq("j", "__qs")))
-      .withColumn("__qn2", dot(col("__qs"), col("__qs")))
-    val dtab = qsubs.join(broadcast(codebook), "j")
-      .select(col(qIdCol), col("j"), col("__c").as("code"),
-        (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__cw")) +
-          col("__cwn2")).as("__dq"))
-    val probeTab = probes.join(dtab, qIdCol)
-    adcRank(codes.join(broadcast(probeTab), Seq("__cell", "j", "code")),
+    }
+    val dtab = distanceTable(probes, "__qv", codebook, m, dim / m, qIdCol)
+    adcRank(codes.join(broadcast(dtab), Seq("__cell", "j", "code")),
       topK, idCol, qIdCol, selfFilter)
+  }
+
+  /** The ADC distance table of `probes` (qIdCol, __cell, `vecCol`, …):
+    * per probed cell, the m d-wide subvectors of `vecCol`, each against
+    * its subspace's codewords as a literal — one row per (query, cell, j,
+    * code) with __dq = (|qs|² − 2·qs·cw) + the stored |cw|², the arithmetic
+    * a join against the codebook frame computes. Scan-local: no join, no
+    * job beyond the caller's. */
+  private def distanceTable(probes: DataFrame, vecCol: String,
+      codebook: Seq[Codeword], m: Int, d: Int, qIdCol: String): DataFrame = {
+    val byJ = typedLit((0 until m).map(j =>
+      codebook.filter(_.j == j).map(w => (w.c, w.cw, w.cwn2))))
+    probes.select(col(qIdCol), col("__cell"),
+        subvectors(col(vecCol), m, d).as(Seq("j", "__qs")))
+      .withColumn("__qn2", dot(col("__qs"), col("__qs")))
+      .select(col(qIdCol), col("__cell"), col("j"), col("__qs"), col("__qn2"),
+        explode(element_at(byJ, col("j") + 1)).as("__w"))
+      .select(col(qIdCol), col("__cell"), col("j"), col("__w._1").as("code"),
+        (col("__qn2") - lit(2.0) * dot(col("__qs"), col("__w._2")) +
+          col("__w._3")).as("__dq"))
   }
 
   def adcTopK(corpus: DataFrame, queries: DataFrame, topK: Int,

@@ -155,6 +155,24 @@ object Scale {
     else df
 
   /**
+   * The working set of an iterative operator: `df`'s `cols` spread by
+   * `key` ([[spreadForCompute]]) and persisted for the operator's repeated
+   * passes, with the release to run once it is done. A `df` persisted
+   * already is its owner's working set — spread, and released, by the
+   * owner (`graft.Ann.build`'s corpus, which coarse training, codebook
+   * training and the encode all read) — so it is used as it is rather
+   * than cached a second time, and the release does nothing.
+   */
+  def pinned(df: DataFrame, key: Column, cols: Column*): (DataFrame, () => Unit) =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      (df.select(cols: _*), () => ())
+    else {
+      val p = spreadForCompute(df.select(cols: _*), key)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (p, () => { p.unpersist(blocking = false); () })
+    }
+
+  /**
    * Round-robin variant of [[spreadForCompute]] for stages whose result is
    * placement-independent (exact-decimal finishes, commutative merges):
    * widens a narrow scan WITHOUT hashing a key column. Use it when the

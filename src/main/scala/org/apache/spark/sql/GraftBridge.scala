@@ -13,6 +13,10 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `t` with every field, array element and map value nullable: the
+    * schema a parquet write stores and a parquet read returns. */
+  def asNullable(t: types.StructType): types.StructType = t.asNullable
+
   /**
    * Eager Column → Expression conversion. `expression` wraps the column's
    * node in a LAZY `ColumnNodeExpression` that only unwraps on the normal

@@ -9,6 +9,13 @@ class AnnSpec extends SparkSpec {
   private def tmp(tag: String) =
     java.nio.file.Files.createTempDirectory(s"graft_ann_$tag").toString
 
+  /** The sf0.001 fixture embeddings the tests below build from. */
+  private val SfEmbeddings = "/root/testdata/sf0.001/embeddings.parquet"
+
+  /** Spark jobs of a default k = 16, iters = 2 build at sf0.001: the
+    * Lloyd rounds, the codebook collect and the codes write. */
+  private val BuildJobs = 9
+
   test("Ann CLI: unknown flags, a missing mode and a missing path flag " +
       "fail before any session is built, naming the flag") {
     def msg(args: String*) =
@@ -726,7 +733,8 @@ class AnnSpec extends SparkSpec {
         books, carry = Seq("cell"))
       .select(col("vec_id"), col("cell").as("__cell"), col("j"),
         col("code"))
-    val fusedTr = graft.operators.Pq.searchIndexResidual(codesTr, cbDf,
+    val fusedTr = graft.operators.Pq.searchIndexResidual(codesTr,
+        graft.operators.Pq.Codeword.of(cbDf.collect().toSeq),
         qs, centroidsTr, nprobe = 3, topK = 5, m = 4, dim = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -853,20 +861,129 @@ class AnnSpec extends SparkSpec {
       jobsOf(Ann.build(spark, data, idx, k = 8, iters = 1, m = 4,
         codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding",
         codec = codec))
-    for ((layout, (n, sites)) <- Seq(
-        "pq" -> build(tmp("dup_pq")),
-        "residual" -> build(tmp("dup_res"), IndexCodec.Pq(residual = true)),
-        "trained" -> build(tmp("dup_tr"), IndexCodec.Pq(trained = true)),
-        "flat" -> build(tmp("dup_flat"), IndexCodec.Flat))) {
+    for ((layout, idx, codec) <- Seq(
+        ("pq", tmp("dup_pq"), IndexCodec.Pq()),
+        ("residual", tmp("dup_res"), IndexCodec.Pq(residual = true)),
+        ("trained", tmp("dup_tr"), IndexCodec.Pq(trained = true)),
+        ("flat", tmp("dup_flat"), IndexCodec.Flat))) {
+      val (n, sites) = build(idx, codec)
       assert(n == ids, s"$layout: built $n, want $ids distinct ids")
+      // the centroids are written on the driver, not by a job
       assert(sites.contains("Ann.build train") &&
         sites.contains("Ann.build write codes.parquet") &&
-        sites.contains("Ann.build write centroids.parquet"),
+        !sites.contains("Ann.build write centroids.parquet"),
         s"$layout: $sites")
-      // fixed and residual PQ count the ids on the codes write itself
-      val readBack = layout == "trained" || layout == "flat"
+      // every PQ encode keeps one row per (id, j), so the codes write
+      // counts the ids itself; flat stores a row per input row
+      val readBack = layout == "flat"
       assert(sites.contains("Ann.build count") == readBack,
         s"$layout: $sites")
+      if (layout != "flat") {
+        val perId = spark.read.parquet(s"$idx/codes.parquet")
+          .groupBy("vec_id").agg(count(lit(1)).as("n"),
+            countDistinct(col("j")).as("js"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        assert(perId.length == ids && perId.forall(r => r._2 == 4 && r._3 == 4),
+          s"$layout: ${perId.filter(_._2 != 4).toSeq}")
+      }
+    }
+  }
+
+  test("job budget: a default PQ build writes its centroids and codebook " +
+      "on the driver, and its search reads them without a job and runs " +
+      "at most 4 jobs") {
+    val data = SfEmbeddings
+    val idx = tmp("budget")
+    val (_, build) = jobsOf(Ann.build(spark, data, idx, k = 16, iters = 2,
+      m = 4, codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding"))
+    val (_, search) = jobsOf(Ann.search(spark, idx, data, None, topK = 10,
+        nprobe = 4, qIdCol = "vec_id", qVecCol = "embedding").collect())
+    Seq("centroids.parquet", "codebook.parquet").foreach { a =>
+      assert(!build.contains(s"Ann.build write $a"), build)
+      assert(new java.io.File(s"$idx/$a/_SUCCESS").exists(), a)
+    }
+    assert(build.count(_ == "Ann.build write codes.parquet") == 1, build)
+    assert(!build.contains("Ann.build count"), build)
+    assert(build.size <= BuildJobs, build)
+    assert(!search.contains("Ann.search centroids"), search)
+    assert(search.size <= 4, search)
+  }
+
+  test("an index whose small artifacts Spark wrote as several part files " +
+      "serves and appends exactly as the driver-written one") {
+    val data = SfEmbeddings
+    val fresh = tmp("parts_fresh") + "/f.parquet"
+    spark.read.parquet(data).filter(col("vec_id") < 3)
+      .withColumn("vec_id", col("vec_id") + 100000L).write.parquet(fresh)
+    def serve(idx: String) = Ann.search(spark, idx, data, None, topK = 5,
+        nprobe = 3, qIdCol = "vec_id", qVecCol = "embedding")
+      .filter(col("q_id") < 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    def codes(idx: String) = spark.read.parquet(s"$idx/codes.parquet")
+      .collect().map(_.toString).toSet
+    for ((codec, rotation, small) <- Seq(
+        (IndexCodec.Pq(), "pca2",
+          Seq("centroids.parquet", "codebook.parquet", Ann.RotationFile)),
+        (IndexCodec.Sq8, "plain", Seq("centroids.parquet", "scales.parquet")),
+        (IndexCodec.Jl(16), "plain",
+          Seq("centroids.parquet", Ann.ProjectionFile)))) {
+      val idx = tmp("parts_idx")
+      Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
+        dim = 64, idCol = "vec_id", vecCol = "embedding", codec = codec,
+        rotation = rotation)
+      val copy = tmp("parts_copy")
+      val copied = new java.io.File(idx).list().toSeq
+      copied.foreach(name => java.nio.file.Files.walk(
+          java.nio.file.Paths.get(idx, name)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path]).foreach { p =>
+          java.nio.file.Files.copy(p, java.nio.file.Paths.get(copy,
+            java.nio.file.Paths.get(idx).relativize(p).toString))
+        })
+      small.foreach { a =>
+        val rows = spark.read.parquet(s"$idx/$a")
+        assert(rows.count() > 0, a)
+        rows.repartition(3).write.mode("overwrite").parquet(s"$copy/$a")
+        val parts = new java.io.File(s"$copy/$a").list()
+          .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        assert(parts > 1, s"$codec $a: $parts part files")
+      }
+      assert(serve(copy) == serve(idx), s"$codec")
+      Ann.append(spark, idx, fresh, "embedding")
+      Ann.append(spark, copy, fresh, "embedding")
+      assert(codes(copy) == codes(idx), s"$codec")
+    }
+  }
+
+  test("the --sq8 --rotate fused pipeline (graft_wht feeding " +
+      "graft_dot_long) and an Ann --rotate build and search compile their " +
+      "generated code: they run with the interpreted fallback off") {
+    val data = SfEmbeddings
+    val keys = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val emb = spark.read.parquet(data)
+        .select(col("vec_id"), graft.operators.Opq.rotate(
+          VectorOps.asDouble(col("embedding")), 64).as("emb"))
+      val qs = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+      val centroids = graft.operators.Ivf.train(emb, "vec_id", "emb", 8,
+        iters = 1)
+      val fused = graft.operators.Sq.sq8IvfTopK(emb, qs, centroids,
+        topK = 5, nprobe = 3, dim = 64).collect()
+      assert(fused.length == 4 * 5)
+      val idx = tmp("whtcg")
+      assert(Ann.build(spark, data, idx, k = 8, iters = 1, m = 4, codes = 8,
+        dim = 64, idCol = "vec_id", vecCol = "embedding",
+        rotation = "wht") > 0)
+      assert(Ann.search(spark, idx, data, None, topK = 5, nprobe = 3,
+          qIdCol = "vec_id", qVecCol = "embedding")
+        .filter(col("q_id") < 4).count() == 4 * 5)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** graft.Read.parquet: the schema Spark's inference gives, read from one
-  * footer on the driver, so building the frame runs no Spark job. */
+  * footer on the driver, so building the frame runs no Spark job; and
+  * Read.small / Write.small, metadata-scale rows moved on the driver. */
 class ReadSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -99,21 +100,96 @@ class ReadSpec extends SparkSpec {
     assert(plain.nonEmpty, "the listener must see an inference job")
   }
 
+  /** relative path (part-file uuids masked) → mode, over the whole tree */
+  private def modes(dir: String): Map[String, String] = {
+    val root = Paths.get(dir)
+    val s = Files.walk(root)
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).map(p =>
+      root.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U") ->
+        java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p))).toMap
+    finally s.close()
+  }
+
+  /** The parquet schema and Spark row metadata of a directory's one part
+    * file. */
+  private def footerOf(dir: String): (String, String) = {
+    val Seq(part) = partFiles(dir)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.toString),
+        spark.sessionState.newHadoopConf()))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      (meta.getSchema.toString,
+        meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    } finally reader.close()
+  }
+
+  test("Write.small writes the files a one-task Spark write of the same " +
+      "rows writes, and Read.small reads them (and Spark's) back as " +
+      "spark.read.parquet does, neither running a job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val vec = ArrayType(DoubleType, containsNull = false)
+    // each index artifact's schema, with the non-nullable fields a
+    // toDF of Scala tuples gives, and an empty artifact of each kind
+    val cases = Seq(
+      "centroids" -> (new StructType().add("cell", IntegerType, false)
+        .add("vec", vec), Seq(Row(0, Seq(0.5, -1.0)), Row(1, Seq(2.0, 1e-300)))),
+      "codebook" -> (new StructType().add("j", IntegerType, false)
+        .add("c", IntegerType, false).add("cw", vec)
+        .add("cwn2", DoubleType, false),
+        Seq(Row(0, 0, Seq(1.0, 2.0), 5.0), Row(1, 0, Seq(-0.0, 3.0), 9.0))),
+      "scales" -> (new StructType().add("pos", IntegerType, false)
+        .add("mn", LongType, false).add("d", LongType, false),
+        Seq(Row(0, -5L, 7L), Row(1, Long.MinValue, Long.MaxValue))),
+      "rotation" -> (new StructType().add("axis", IntegerType, false)
+        .add("pos", IntegerType, false).add("u", LongType, false),
+        Seq(Row(0, 0, 3L), Row(0, 1, -4L))),
+      "projection" -> (new StructType().add("axis", IntegerType, false)
+        .add("pos", IntegerType, false).add("u", DoubleType, false),
+        Seq(Row(0, 0, 0.25), Row(1, 0, Double.NaN))))
+    for ((name, (schema, rows)) <- cases; n <- Seq(rows.length, 0)) {
+      val tag = s"$name with $n rows"
+      val mine = s"${tmp("small_mine")}/$name.parquet"
+      val theirs = s"${tmp("small_spark")}/$name.parquet"
+      val (_, writeJobs) = jobsOf(Write.small(spark, mine, schema, rows.take(n)))
+      assert(writeJobs.isEmpty, s"$tag: $writeJobs")
+      spark.createDataFrame(java.util.Arrays.asList(rows.take(n): _*), schema)
+        .coalesce(1).write.parquet(theirs)
+      assert(footerOf(mine) == footerOf(theirs), tag)
+      assert(modes(mine) == modes(theirs), tag)
+      val want = outcome(spark.read.parquet(theirs))
+      assert(outcome(spark.read.parquet(mine)) == want, tag)
+      for (dir <- Seq(mine, theirs)) {
+        val (got, readJobs) = jobsOf(Read.small(spark, dir))
+        assert(readJobs.isEmpty, s"$tag: $readJobs")
+        assert(got.map(_.toString).toSeq.sorted == want.toOption.get._2, tag)
+        got.foreach(r => assert(r.schema.json == want.toOption.get._1, tag))
+      }
+    }
+    // several part files, and what the one-footer rule leaves to Spark
+    val parts = tmp("small_parts") + "/t"
+    spark.range(0, 30).select(col("id"), (col("id") * 0.5).as("x"))
+      .repartition(3).write.parquet(parts)
+    assert(partFiles(parts).size == 3)
+    val parted = tmp("small_parted") + "/t"
+    spark.range(0, 12).select(col("id"), (col("id") % 3).as("p"))
+      .write.partitionBy("p").parquet(parted)
+    for (dir <- Seq(parts, parted)) {
+      val want = outcome(spark.read.parquet(dir)).toOption.get
+      val got = Read.small(spark, dir)
+      assert(got.map(_.toString).toSeq.sorted == want._2, dir)
+      assert(got.head.schema.json == want._1, dir)
+    }
+  }
+
   test("local writes go through NioLocalFileSystem, and a written parquet " +
       "directory and its files get the stock filesystem's POSIX modes") {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"),
       spark.sparkContext.hadoopConfiguration)
     assert(fs.isInstanceOf[NioLocalFileSystem], fs.getClass.getName)
-    /** relative path (part-file uuids masked) → mode, over the whole tree */
-    def modes(dir: String): Map[String, String] = {
-      val root = Paths.get(dir)
-      val s = Files.walk(root)
-      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).map(p =>
-        root.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U") ->
-          java.nio.file.attribute.PosixFilePermissions.toString(
-            Files.getPosixFilePermissions(p))).toMap
-      finally s.close()
-    }
     val df = spark.range(100).repartition(2).toDF("x")
     val nio = s"${tmp("nio_modes")}/t.parquet"
     val stock = s"${tmp("stock_modes")}/t.parquet"
