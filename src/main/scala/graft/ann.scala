@@ -197,15 +197,16 @@ object Ann {
    * Above this k, build/append switch the train+assign plans from the
    * k×dim-LITERAL form ([[graft.operators.Ivf.train]] +
    * [[graft.operators.Ivf.nearestCentroid]], whose plan embeds every
-   * centroid component as a literal — fine at k ≤ a few hundred, a
-   * multi-MB non-codegen plan at the k ~ 10⁴ a 10⁹-vector IVF needs
-   * under FAISS's nlist ≈ √n guidance, Ivf.scala) to the broadcast
-   * centroid-FRAME twins ([[graft.operators.Ivf.trainJoin]] +
+   * centroid component as one matrix literal — fine at k ≤ a few
+   * hundred, a multi-MB literal in the plan and in every stage's task
+   * binary at the k ~ 10⁴ a 10⁹-vector IVF needs under FAISS's
+   * nlist ≈ √n guidance, Ivf.scala) to the broadcast centroid-FRAME
+   * twins ([[graft.operators.Ivf.trainJoin]] +
    * [[graft.operators.Ivf.assignJoin]]), which IvfSpec pins
    * bit-identical. The chosen path is recorded in the index meta
    * (`kjoin`) so --append assigns cells with the same plan form the
-   * build used. 256 ≈ the largest k whose literal argmin still
-   * whole-stage-codegens comfortably (64 KB JVM method bound).
+   * build used. 256 keeps the literal at 256·dim doubles (128 KB at
+   * dim 64).
    */
   val LargeKThreshold = 256
 

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
  */
 object VectorOps {
 
-  /** `array<float>` → `array<double>` (exact widening). */
-  def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
+  /** `array<float>` → `array<double>` (exact widening, a codegen'd cast). */
+  def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Fail fast (scan-local `raise_error`, no extra job) on any vector
     * whose length ≠ `dim`: [[dot]]/zip_with truncate or null-pad to
@@ -38,6 +38,13 @@ object VectorOps {
     org.apache.spark.sql.GraftBridge.column(DotProduct(
       org.apache.spark.sql.GraftBridge.expression(a),
       org.apache.spark.sql.GraftBridge.expression(b)))
+
+  /** [[NearestRow]] of `v` against the driver-held `rows`: the nearest
+    * (d, i), or with `top` = Some(n) the n nearest row indices. */
+  def nearestRow(v: Column, rows: Seq[Seq[Double]],
+      top: Option[Int] = None): Column =
+    org.apache.spark.sql.GraftBridge.column(NearestRow(
+      org.apache.spark.sql.GraftBridge.expression(v), rows, top))
 
   /** The pure-built-in fold formulation, kept as the portability fallback. */
   def dotHof(a: Column, b: Column): Column =

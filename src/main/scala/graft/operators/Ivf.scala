@@ -22,55 +22,10 @@ import org.apache.spark.sql.functions._
 object Ivf {
 
   /**
-   * Ranking key for centroid distance: |a-c|² = |a|² - 2a·c + |c|², and
-   * |a|² is the same for every centroid, so argmin/argsort only need
-   * -2a·c + |c|². |c|² is a driver-side constant per centroid — one dot
-   * product per centroid per row instead of three, and a 3× smaller
-   * codegen'd expression.
-   */
-  private def rankKey(a: org.apache.spark.sql.Column, c: Seq[Double]) =
-    lit(-2.0) * dot(a, typedLit(c)) + lit(c.map(x => x * x).sum)
-
-  /**
-   * Largest k whose (key, index) structs are UNROLLED into k inline
-   * expressions (whole-stage-codegen'd tight loops — fastest for the
-   * small coarse quantizers the probe path uses). Beyond it, the scored
-   * array is built by a `transform` loop over ONE k×dim matrix literal:
-   * the expression tree stays O(1) in k, where the unrolled form is
-   * O(k·dim) nodes — at k=64 that janino-compiles multi-thousand-term
-   * methods (measured 7.4 s on q_semdedup_trained, 4× the whole query's
-   * work) and past the JVM's 64KB method limit it silently falls out of
-   * codegen anyway. The loop form evaluates the same graft_dot per
-   * element (interpreted ArrayTransform, codegen'd children), so the
-   * ARITHMETIC — and therefore every assignment and the DuckDB oracle —
-   * is bit-identical between the two forms; IvfSpec pins that.
-   */
-  private val UnrollMaxK = 24
-
-  /** (distance-key, index) struct per centroid, formulation chosen by k
-    * (see [[UnrollMaxK]]). Lexicographic struct ordering gives
-    * deterministic argmin/argsort with index tiebreak. Shared with the
-    * PQ encoder, whose per-subspace codeword argmin is the same shape. */
-  private[operators] def scoredStructs(emb: org.apache.spark.sql.Column,
-      centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column =
-    if (centroids.size <= UnrollMaxK)
-      array(centroids.zipWithIndex.map { case (c, i) =>
-        struct(rankKey(emb, c).as("d"), lit(i).as("i"))
-      }: _*)
-    else {
-      val cvs = typedLit(centroids.map(_.toArray).toArray)
-      val norms = typedLit(centroids.map(_.map(x => x * x).sum).toArray)
-      transform(
-        sequence(lit(0), lit(centroids.size - 1)),
-        i => struct(
-          (lit(-2.0) * dot(emb, element_at(cvs, i + 1))
-            + element_at(norms, i + 1)).as("d"),
-          i.as("i")))
-    }
-
-  /**
-   * Assignment expression: index of the nearest centroid, as
-   * array_min over the (distance-key, index) structs.
+   * Assignment expression: index of the nearest centroid by the
+   * −2·a·c + |c|² key with the lower index on ties ([[nearestRow]]; |a|²
+   * is the same for every centroid, so it drops out of the argmin). A
+   * NULL vector gets a NULL cell.
    */
   def nearestCentroid(emb: org.apache.spark.sql.Column,
       centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column = {
@@ -78,15 +33,15 @@ object Ivf {
     // joins/filters then produce empty results instead of failing analysis
     // on an untyped empty array
     if (centroids.isEmpty) return lit(null).cast("int")
-    array_min(scoredStructs(emb, centroids)).getField("i")
+    nearestRow(emb, centroids).getField("i")
   }
 
-  /** `nprobe` nearest centroid ids for a query vector, as an array column. */
+  /** `nprobe` nearest centroid ids for a query vector in [[nearestCentroid]]'s
+    * (key, index) order, as an array column; NULL for a NULL vector. */
   def probeList(emb: org.apache.spark.sql.Column,
       centroids: Seq[Seq[Double]], nprobe: Int): org.apache.spark.sql.Column = {
     if (centroids.isEmpty) return typedLit(Seq.empty[Int])
-    slice(transform(array_sort(scoredStructs(emb, centroids)),
-      s => s.getField("i")), 1, nprobe)
+    nearestRow(emb, centroids, Some(nprobe))
   }
 
   /**
@@ -97,7 +52,7 @@ object Ivf {
    * per-query window rank instead of a k×dim-literal expression. The
    * ranking key is the same −2·q·c + |c|² with |c|² as the sequential
    * dot, and the (key, cell) window tie-break matches [[probeList]]'s
-   * (d, i) struct sort — bit-identical probe sets (IvfSpec pins it).
+   * (key, index) order — bit-identical probe sets (IvfSpec pins it).
    * The query side is small by the serving contract (it broadcasts),
    * so the window partitions over |queries|·k rows, never corpus scale.
    * Queries must carry non-NULL, non-empty vectors AND UNIQUE `qIdCol`
@@ -132,14 +87,15 @@ object Ivf {
    * oracle replays — divided once in double.
    *
    * Scale bound on k: this signature returns the centroids as a driver
-   * Seq and [[nearestCentroid]] binds them as PLAN LITERALS — at k ≤
+   * Seq and [[nearestCentroid]] binds them as a PLAN LITERAL — at k ≤
    * ~10² (every declared-quantizer query here) that is the fastest form
-   * (codegen'd, no join), but the literal argmin grows O(k·dim)
-   * expression nodes and the collect ships k·dim doubles through the
-   * driver per round, so a 100 TB IVF wanting k ~ 10⁴ cells (the ~√n
-   * guidance) should use [[trainJoin]]/[[assignJoin]] instead: same
-   * arithmetic bit-for-bit (IvfSpec pins join ≡ literal), but the
-   * centroids stay a k-row FRAME and assignment is one broadcast join.
+   * (one codegen'd loop, no join), but the k×dim matrix rides in the
+   * plan and in every stage's task binary, and the collect ships k·dim
+   * doubles through the driver per round, so a 100 TB IVF wanting
+   * k ~ 10⁴ cells (the ~√n guidance) should use
+   * [[trainJoin]]/[[assignJoin]] instead: same arithmetic bit-for-bit
+   * (IvfSpec pins join ≡ literal), but the centroids stay a k-row FRAME
+   * and assignment is one broadcast join.
    */
   def train(df: DataFrame, idCol: String, embCol: String, k: Int,
       iters: Int = 2): Seq[Seq[Double]] = {
@@ -328,7 +284,7 @@ object Ivf {
       // empty corpus/centroids: an empty report, not an analysis error
       return df.select(lit(0L).as("cell"), lit(0L).as("n_vecs"),
         lit(0.0).as("mean_dist")).limit(0)
-    val best = array_min(scoredStructs(col(embCol), centroids))
+    val best = nearestRow(col(embCol), centroids)
     df.select(best.getField("i").as("__cell"),
         round((dot(col(embCol), col(embCol)) + best.getField("d")) * 1e6, 0)
           .cast("long").as("__s"))
@@ -371,7 +327,7 @@ object Ivf {
       return df.select(col(idCol), lit(0L).as("ivf_cell"),
         lit(0L).as("dist_e6"), lit(true).as("kept")).limit(0)
     import org.apache.spark.sql.expressions.Window
-    val best = array_min(scoredStructs(col(embCol), centroids))
+    val best = nearestRow(col(embCol), centroids)
     val scored = Scale.spreadForCompute(df.select(col(idCol), col(embCol)),
         col(idCol))
       .select(col(idCol), best.getField("i").cast("long").as("ivf_cell"),

@@ -209,12 +209,10 @@ object Pq {
         (0 until m).map(j => seeds.map(_.slice(j * d, (j + 1) * d)))
       for (_ <- 0 until iters) {
         // one struct per subspace: (j, assigned codeword, the subvector)
-        // — the same argmin expression Ivf.nearestCentroid builds, per
-        // subspace, evaluated in ONE scan
+        // — Ivf.nearestCentroid's argmin, per subspace, in ONE scan
         val perJ = books.zipWithIndex.map { case (cb, j) =>
           val s = slice(col(embCol), j * d + 1, d)
-          struct(lit(j).as("j"),
-            array_min(Ivf.scoredStructs(s, cb)).getField("i").as("c"),
+          struct(lit(j).as("j"), nearestRow(s, cb).getField("i").as("c"),
             s.as("s"))
         }
         val means = vecs.select(explode(array(perJ: _*)).as("__e"))
@@ -255,17 +253,12 @@ object Pq {
       carry: Seq[String] = Nil): DataFrame = {
     require(codebooks.nonEmpty && codebooks.head.nonEmpty, "empty codebooks")
     val d = codebooks.head.head.length
-    // per-subspace argmin via Ivf.scoredStructs: unrolled below its
-    // k-threshold, a transform over one codebook-matrix literal beyond it
-    // — at production PQ sizes (m=8–16, k=256) an unrolled form would
-    // janino-compile m·k·d-term methods (the q_semdedup_trained blowup);
-    // the loop form keeps the expression tree O(m) whatever k is.
     // `carry` columns ride through the explode (row constants per input
     // row), so a caller that computed e.g. the IVF cell in the same scan
     // never pays a corpus-scale join to re-attach it.
     val perSubspace = codebooks.zipWithIndex.map { case (cb, j) =>
       val s = slice(col(embCol), j * d + 1, d)
-      val best = array_min(Ivf.scoredStructs(s, cb))
+      val best = nearestRow(s, cb)
       struct(lit(j.toLong).as("j"), best.getField("i").as("code"),
         round(dot(s, s) + best.getField("d"), 6).as("err"))
     }
@@ -296,9 +289,8 @@ object Pq {
     val d = codebooks.head.head.length
     // (key d, code i) structs order as min(struct(key, code)) does
     val perSubspace = codebooks.zipWithIndex.map { case (cb, j) =>
-      struct(lit(j.toLong).as("j"), org.apache.spark.sql.GraftBridge.column(
-        graft.functions.NearestRow(org.apache.spark.sql.GraftBridge
-          .expression(slice(col(embCol), j * d + 1, d)), cb)).as("b"))
+      struct(lit(j.toLong).as("j"),
+        nearestRow(slice(col(embCol), j * d + 1, d), cb).as("b"))
     }
     df.select(col(idCol), col(cellCol),
         explode(array(perSubspace: _*)).as("__e"))
@@ -369,13 +361,14 @@ object Pq {
    * retrained codebooks; here the rotation is the caller's frame — the
    * measured-best Householder mode — and this supplies the
    * codebook half): [[trainCodebooks]] (Lloyd, exact-decimal means) →
-   * [[encodeWith]] (scan-local literal encoder) → [[searchIndex]]'s ADC.
+   * [[encodePerId]] (literal encoder, one code row per id and subspace) →
+   * [[searchIndex]]'s ADC.
    * Same deterministic/oracle-checkable property as every trained
    * quantizer here — Lloyd means are order-independent exact decimals,
    * so the DuckDB oracle re-runs the training verbatim
-   * (q_opq_train_recall). The codebook-literal encode keeps the corpus
-   * side one scan; everything else is [[searchIndex]]'s bounded
-   * broadcast shape.
+   * (q_opq_train_recall). The codebook-literal encode reads the corpus
+   * in one scan and aggregates per (id, j); everything else is
+   * [[searchIndex]]'s bounded broadcast shape.
    */
   def ivfAdcTrainedTopK(corpus: DataFrame, queries: DataFrame,
       centroids: Seq[Seq[Double]], nprobe: Int, topK: Int,
@@ -392,13 +385,11 @@ object Pq {
         .select(col(qIdCol), col(idCol), lit(0L).as("rn"),
           lit(0.0).as("adist"))
     // ONE corpus scan: the cell expression and the m-subspace encode
-    // evaluate together, the cell riding through the encode explode as a
-    // carry column — no corpus-scale self-join to re-attach it
+    // evaluate together, then one code row per (id, j) as the served
+    // trained index stores them — a duplicated id sums m ADC terms, not 2m
     val withCell = corpus.withColumn("__cell",
       Ivf.nearestCentroid(col(embCol), centroids))
-    val cd = encodeWith(withCell, idCol, embCol, books,
-        carry = Seq("__cell"))
-      .select(col(idCol), col("__cell"), col("j"), col("code"))
+    val cd = encodePerId(withCell, idCol, embCol, books, "__cell")
     searchIndex(cd, Codeword.fromBooks(books), queries, centroids, nprobe,
       topK, m, dim, idCol, qIdCol, qEmbCol)
   }

@@ -987,6 +987,51 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("an Ann build widens its vectors with a plain cast inside " +
+      "whole-stage codegen: every executed Project and Filter reading the " +
+      "embedding as doubles sits in a codegen stage, and no lambda runs") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, LambdaFunction}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      Ann.build(spark, SfEmbeddings, tmp("ingestcg"), k = 8, iters = 1,
+        m = 4, codes = 8, dim = 64, idCol = "vec_id", vecCol = "embedding")
+      org.apache.spark.GraftListenerBridge.waitForListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    // every executed node, and whether it runs inside a codegen stage
+    def walk(p: SparkPlan, inStage: Boolean): Seq[(SparkPlan, Boolean)] =
+      (p, inStage) +: (p match {
+        case w: WholeStageCodegenExec => walk(w.child, inStage = true)
+        case i: InputAdapter => walk(i.child, inStage = false)
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, inStage = false)
+        case s: QueryStageExec => walk(s.plan, inStage = false)
+        case m: InMemoryTableScanExec =>
+          walk(m.relation.cachedPlan, inStage = false)
+        case o => o.children.flatMap(walk(_, inStage))
+      })
+    val nodes = plans.toArray.toSeq.flatMap(p => walk(p.asInstanceOf[SparkPlan], false))
+    assert(!nodes.exists(_._1.expressions.exists(
+      _.exists(_.isInstanceOf[LambdaFunction]))))
+    val ingest = nodes.filter { case (p, _) =>
+      (p.isInstanceOf[ProjectExec] || p.isInstanceOf[FilterExec]) &&
+        p.expressions.exists(_.exists {
+          case c: Cast => c.dataType.sql == "ARRAY<DOUBLE>"
+          case _ => false
+        })
+    }
+    assert(ingest.nonEmpty)
+    ingest.foreach { case (p, inStage) => assert(inStage, p.simpleString(200)) }
+  }
+
   test("a real large-k build (k = 512 at sf0.1) auto-routes to the join " +
       "path: meta records kjoin, centroids.parquet carries 512 rows, " +
       "and the index serves") {

@@ -352,4 +352,108 @@ class ExactExprSpec extends SparkSpec {
       spark.range(3).agg(ExactDecimalSum.of(col("id"))).collect())
     assert(bad.getMessage.contains("graft_exact_decimal_sum expects a double"))
   }
+
+  /** NearestRow's contract computed on the driver: row i's key
+    * −2·v·rows(i) + |rows(i)|² (NULL elements as 0, the common prefix),
+    * rows sorted by (key, i) with −0.0 = 0.0 and NaN last. */
+  private def rankedRows(v: Seq[java.lang.Double],
+      rows: Seq[Seq[Double]]): Seq[(Double, Int)] =
+    rows.zipWithIndex.map { case (c, i) =>
+      val s = v.zip(c).foldLeft(0.0) { case (acc, (x, y)) =>
+        if (x == null) acc else acc + x * y }
+      (-2.0 * s + c.foldLeft(0.0)((a, x) => a + x * x), i)
+    }.sortBy { case (d, i) => (if (d == 0.0) 0.0 else d, i) }(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+
+  /** Every vector's argmin (d, i) and top-n for each n, engine vs driver. */
+  private def checkNearestRow(vecs: Seq[Seq[java.lang.Double]],
+      rows: Seq[Seq[Double]], ns: Seq[Int], what: String): Unit = {
+    import graft.functions.VectorOps.nearestRow
+    val df = spark.createDataFrame(
+        java.util.Arrays.asList(vecs.zipWithIndex.map { case (v, i) =>
+          Row(i, if (v == null) null else v) }: _*),
+        StructType(Seq(StructField("id", IntegerType, nullable = false),
+          StructField("emb", ArrayType(DoubleType, containsNull = true),
+            nullable = true))))
+      .repartition(2) // an exchange, so the projection is not folded away
+    val out = df.select(col("id") +: nearestRow(col("emb"), rows).as("b") +:
+        ns.map(n => nearestRow(col("emb"), rows, Some(n))): _*)
+    val got = out.collect().sortBy(_.getInt(0))
+    assert(got.length == vecs.length)
+    got.foreach { r =>
+      val v = vecs(r.getInt(0))
+      if (v == null) (1 to ns.length + 1).foreach(c =>
+        assert(r.isNullAt(c), s"$what: a NULL vector ranks to NULL"))
+      else {
+        val ref = rankedRows(v, rows)
+        val b = r.getStruct(1)
+        assert(b.getInt(1) == ref.head._2 && bits(b.getDouble(0)) == bits(ref.head._1),
+          s"$what: argmin ${b} vs ${ref.head} for $v")
+        ns.zipWithIndex.foreach { case (n, c) =>
+          assert(r.getSeq[Int](c + 2) == ref.take(n).map(_._2),
+            s"$what: top-$n of $v")
+        }
+      }
+    }
+  }
+
+  private def withCodegen(codegen: Boolean)(body: => Unit): Unit = {
+    val settings =
+      if (codegen) Seq("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+      else Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  for (codegen <- Seq(true, false))
+    test(s"NearestRow argmin and top-n ≡ a driver sort by (key, index) " +
+        s"(${if (codegen) "codegen only" else "interpreted"}): random " +
+        "matrices at k = 1, 5, 30, 300, ties, ±0.0, NaN, empty and NULL " +
+        "vectors, NULL elements, n = 0 and n ≥ k") {
+      withCodegen(codegen) {
+        val r = new scala.util.Random(41)
+        for (k <- Seq(1, 5, 30, 300)) {
+          val dim = 8
+          val base = Seq.fill(k)(Seq.fill(dim)(
+            math.rint(r.nextGaussian() * 4) / 4)) // coarse values tie often
+          // a duplicated row ties its original on every vector
+          val rows = if (k > 3) base.updated(3, base(1)) else base
+          val vecs = randomVecs(40, dim, seed = k) ++ Seq(
+            null, Seq.empty[java.lang.Double],
+            Seq[java.lang.Double](null, 1.0, null, -2.0, 0.5, null, 0.0, 3.0),
+            Seq.fill[java.lang.Double](dim)(-0.0),
+            Seq[java.lang.Double](1.0, 2.0)) // shorter than a row
+          checkNearestRow(vecs, rows, Seq(0, 1, 3, k, k + 5), s"k=$k")
+        }
+        // −0.0 components tie 0.0; a NaN component puts its row last;
+        // an infinite norm ranks below every finite key
+        val edge = Seq(Seq(0.0, 0.0), Seq(-0.0, 0.0), Seq(Double.NaN, 1.0),
+          Seq(1e200, 0.0), Seq(0.0, -0.0))
+        val vs = Seq(Seq[java.lang.Double](0.0, 0.0),
+          Seq[java.lang.Double](-0.0, -0.0), Seq[java.lang.Double](1.0, 1.0),
+          Seq[java.lang.Double](Double.NaN, 0.0), null,
+          Seq.empty[java.lang.Double])
+        checkNearestRow(vs, edge, Seq(0, 2, 5, 9), "edges")
+        val b = vecDf(Seq(Seq[java.lang.Double](Double.NaN, 0.0)))
+          .select(graft.functions.VectorOps.nearestRow(col("emb"), edge))
+          .head().getStruct(0)
+        assert(b.getDouble(0).isNaN && b.getInt(1) == 0,
+          "every key NaN: the lowest index")
+        if (codegen) {
+          val df = vecDf(randomVecs(10, 2, seed = 3)).repartition(2)
+            .select(graft.functions.VectorOps.nearestRow(col("emb"), edge,
+              Some(2)))
+          df.collect(): Unit
+          assert(org.apache.spark.sql.execution.debug.codegenString(
+            df.queryExecution.executedPlan).contains("NearestRow.nearestN"),
+            "kernel not in codegen")
+        }
+      }
+    }
 }

@@ -48,11 +48,10 @@ class IvfSpec extends SparkSpec {
       r.getAs[Int]("ivf_cell") < 8))
   }
 
-  test("loop-form assignment (k > UnrollMaxK) is bit-identical to the " +
-      "unrolled form's arithmetic: both match a driver-side argmin") {
-    // k=30 exercises the transform-over-matrix-literal formulation; k=8
-    // (the shared fixture) exercises the unrolled one. Both must equal a
-    // plain Scala argmin over the same -2·dot+|c|² key with index
+  test("literal assignment at k = 8 and k = 30 matches a driver-side " +
+      "argmin over the same key with the index tie-break") {
+    // every k ranks through the one NearestRow loop; the assignment must
+    // equal a plain Scala argmin over the same -2·dot+|c|² key with index
     // tiebreak — the arithmetic contract the DuckDB oracle re-runs.
     def argmin(v: Seq[Double], cs: Seq[Seq[Double]]): Int =
       cs.zipWithIndex.map { case (c, i) =>
@@ -109,7 +108,7 @@ class IvfSpec extends SparkSpec {
       assert(viaLit == viaJoin, s"k=$k assignments differ")
       // the SERVE-side member of the family: probeJoin's per-query
       // probed-cell set (frame ranking, the same (key, cell) tie-break)
-      // ≡ probeList's (literal struct sort) — the set is the law that
+      // ≡ probeList's (literal (key, index) order) — the set is the law that
       // matters: serving joins on __cell and re-ranks by distance, so
       // probe-row order is never observable downstream
       for (nprobe <- Seq(3, k)) {
@@ -125,6 +124,29 @@ class IvfSpec extends SparkSpec {
           s"k=$k nprobe=$nprobe probe sets differ")
       }
     }
+  }
+
+  test("a NULL vector gets a NULL cell from assign and cellBalance and no " +
+      "probe rows from probeList") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, Seq(0.0, 0.0)), Row(2L, null), Row(3L, Seq(9.0, 9.0))),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("emb", ArrayType(DoubleType)))))
+    val cents = Seq(Seq(10.0, 10.0), Seq(0.0, 0.0))
+    val cells = Ivf.assign(df, "emb", cents).collect()
+      .map(r => r.getLong(0) -> Option(r.get(2))).toMap
+    assert(cells == Map(1L -> Some(1), 2L -> None, 3L -> Some(0)))
+    val probes = df.select(col("vec_id"),
+        explode(Ivf.probeList(col("emb"), cents, 2)).as("c"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(probes == Seq((1L, 1), (1L, 0), (3L, 0), (3L, 1)))
+    val report = Ivf.cellBalance(df, "emb", cents).collect()
+      .map(r => Option(r.get(0)) -> (r.getLong(1), Option(r.get(2)))).toMap
+    assert(report == Map(Some(0L) -> (1L, Some(2.0)),
+      Some(1L) -> (1L, Some(0.0)), None -> (1L, None)),
+      "the NULL vector's row is the NULL cell, as in assign's census")
   }
 
   test("cellBalance: populations agree with assign's census, sum to the " +
@@ -314,6 +336,23 @@ class IvfSpec extends SparkSpec {
     }
     assert(Pq.ivfAdcTopK(emb, qs, Seq.empty, nprobe = 4, topK = 10,
       m = 4, k = 8, dim = 64).count() == 0)
+  }
+
+  test("ivfAdcTrainedTopK: a corpus with one id duplicated ranks and " +
+      "scores exactly like the corpus without the duplicate") {
+    import graft.operators.Pq
+    val cs = Ivf.train(emb, "vec_id", "emb", k = 8, iters = 0)
+    // iters = 0: the codebooks are the 8 lowest ids either way (a Lloyd
+    // round would weight the copy twice), so only the encode can differ
+    def run(corpus: org.apache.spark.sql.DataFrame) =
+      Pq.ivfAdcTrainedTopK(corpus, qs, cs, nprobe = 3, topK = 10, m = 4,
+          k = 8, dim = 64, iters = 0)
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val plain = run(emb)
+    val id = plain.map(_._2).filter(_ >= 8).min
+    assert(run(emb.union(emb.filter(col("vec_id") === id))) == plain,
+      s"duplicated id $id")
   }
 
   test("trained PQ codebooks never reconstruct worse than the fixed ones " +

@@ -40,7 +40,8 @@ import re
 import sys
 
 VOLATILE = [(re.compile(p), r) for p, r in (
-    (r"#\d+", "#N"), (r"x_\d+", "x_N"), (r"plan_id=\d+", "plan_id=N"),
+    (r"#\d+", "#N"), (r"x_\d+", "x_N"), (r"(lambda [A-Za-z]+)_\d+", r"\1_N"),
+    (r"plan_id=\d+", "plan_id=N"),
     (r"RDD\[\d+\]", "RDD[N]"), (r"\$\$Lambda\$\d+/0x[0-9a-f]+", "$$Lambda"),
     (r"@[0-9a-f]{4,}\b", "@H"), (r"local-\d+", "local-N"))]
 
@@ -249,7 +250,7 @@ def selftest():
     plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "..", "plans")
     want = {"r18": {"q_pq_search": 0, "q_ivf_pq_search": 0,
-                    "q_sq8_search": 4, "q_opq_balance": 16},
+                    "q_sq8_search": 2, "q_opq_balance": 16},
             "r17": {"q_profile": 0, "q_golden_record": 2}}
     ok = True
     for rnd, cases in want.items():
